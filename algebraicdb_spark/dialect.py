@@ -82,6 +82,8 @@ _CTAS_RE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?P<name>\w+)\s+AS\s+(?P<query>SELECT\b.+)$",
     re.IGNORECASE | re.DOTALL,
 )
+# `txnlog` (the retired private log format) still parses here and in
+# _ATTACH_TABLE_RE, so the engine can refuse it with a pointer to delta
 _CTAS_LAKEHOUSE_RE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?P<name>\w+)\s+FROM\s+"
     r"(?P<fmt>txnlog|delta|iceberg)\s+LOCATION\s+'(?P<path>[^']+)'"

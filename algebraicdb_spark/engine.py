@@ -113,7 +113,7 @@ _TIME_TRAVEL_RE = re.compile(
 )
 
 # `FROM CHANGES(t, <since> [, <to>])` — the SQL surface for the
-# three-format row-level change feed (rounds 11-12 built
+# row-level change feed (rounds 11-12 built
 # `changes_cdf`; round 13 puts it where dialect/server clients can
 # reach it). Bounds are versions / snapshot ids, or quoted timestamps
 # resolved through the SAME helper the time-travel sugar uses; matched
@@ -125,6 +125,43 @@ _CHANGES_RE = re.compile(
     r"(?:,\s*(?:(?P<to>\d+)|\x00(?P<toref>\d+)\x00)\s*)?\)",
     re.IGNORECASE,
 )
+
+
+def _lakehouse_format(fmt: str, verb: str) -> str:
+    """The normalized format name of an ATTACH / CREATE TABLE … FROM
+    clause. ``txnlog`` — the engine's former private log format — is
+    retired: its tables commit through the standard Delta protocol
+    now, and the Delta reader cannot read a ``_log`` directory, so an
+    alias would only fail later with a less useful message."""
+    fmt = fmt.lower()
+    if fmt == "txnlog":
+        raise AdtError(
+            f"{verb}: the txnlog format is retired — use FROM delta "
+            "(standard Delta tables support the same commits, time "
+            "travel, CHANGES and maintenance)"
+        )
+    return fmt
+
+
+def _reader(fmt: str, path: str):
+    """The read-side table object behind an attached format."""
+    from algebraicdb_spark.operators.iceberg import IcebergTable
+    from algebraicdb_spark.operators.txnlog import DeltaLogTable
+
+    return {"delta": DeltaLogTable, "iceberg": IcebergTable}[fmt](path)
+
+
+def _writer(fmt: str, path: str):
+    """The writer behind an attached format: commits, mutations,
+    maintenance and properties."""
+    from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
+    from algebraicdb_spark.operators.iceberg_writer import (
+        IcebergTableWriter,
+    )
+
+    return {"delta": DeltaTableWriter, "iceberg": IcebergTableWriter}[fmt](
+        path
+    )
 
 
 class Engine:
@@ -177,45 +214,24 @@ class Engine:
     def _attach_table_stmt(
         self, name: str, fmt: str, path: str, version: str | None
     ) -> DataFrame:
-        """ATTACH TABLE n FROM txnlog|delta|iceberg LOCATION '<path>'
+        """ATTACH TABLE n FROM delta|iceberg LOCATION '<path>'
         [VERSION v] — register a transactional lakehouse table (ours,
         or one Delta/Iceberg systems maintain) as a queryable SQL
         table. The snapshot's FILE LIST is resolved at ATTACH time
         (the log/metadata fold is driver-side KBs); the data itself
         stays a lazy pruned parquet scan. Re-ATTACH to advance to new
-        commits, or pin VERSION (txnlog/delta: version; iceberg:
-        snapshot id) for a reproducible historical read — time travel
-        from the REPL."""
-        from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
-
-        readers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaLogTable,
-            "iceberg": IcebergTable,
-        }
-        if fmt.lower() == "txnlog" and not os.path.isdir(
-            os.path.join(path, "_log")
-        ):
-            # the writer class mkdirs its log on construction; ATTACH
-            # is a READ and must not leave an empty-but-valid-looking
-            # table skeleton behind a typo'd LOCATION
-            raise AdtError(
-                f"ATTACH TABLE: no txnlog table at {path!r} (missing _log)"
-            )
+        commits, or pin VERSION (delta: version; iceberg: snapshot
+        id) for a reproducible historical read — time travel from the
+        REPL."""
+        fmt = _lakehouse_format(fmt, "ATTACH TABLE")
         v = int(version) if version is not None else None
-        df = readers[fmt.lower()](path).snapshot(self.spark, v)
+        df = _reader(fmt, path).snapshot(self.spark, v)
         self.create_table(name, df)
-        self._attached[name] = {
-            "fmt": fmt.lower(), "path": path, "version": v,
-        }
+        self._attached[name] = {"fmt": fmt, "path": path, "version": v}
         return df
 
     def _ctas_lakehouse_stmt(self, m) -> DataFrame:
-        """``CREATE TABLE n FROM txnlog|delta|iceberg LOCATION 'p'
+        """``CREATE TABLE n FROM delta|iceberg LOCATION 'p'
         [PARTITION BY (c,…)] AS SELECT …`` — CTAS straight into a REAL
         lakehouse table: the query result commits through the format's
         writer (version 0 / first snapshot) and the name attaches,
@@ -224,15 +240,10 @@ class Engine:
         other engines all work from commit zero. The location must be
         empty of commits (CREATE creates; append to an existing table
         with COPY/INSERT after ATTACH)."""
-        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
-        from algebraicdb_spark.operators.iceberg_writer import (
-            IcebergTableWriter,
-        )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
-
         from algebraicdb_spark.dialect import _split_top_level
 
-        name, fmt, path = m.group("name"), m.group("fmt").lower(), m.group("path")
+        name, path = m.group("name"), m.group("path")
+        fmt = _lakehouse_format(m.group("fmt"), f"CREATE TABLE {name}")
         # top-level split: iceberg transform calls carry commas of
         # their own (bucket(4, k))
         parts = [
@@ -247,50 +258,34 @@ class Engine:
                 "column values"
             )
         df = self.spark.sql(self._rewrite(m.group("query")))
-        if fmt == "iceberg":
-            w = IcebergTableWriter(path)
-            if w._current()[1] is not None:
-                raise AdtError(
-                    f"CREATE TABLE {name}: {path!r} already holds an "
-                    "iceberg table — ATTACH it and append instead"
-                )
-            try:
-                w.append(df, partition_by=parts or None)
-            except (ValueError, NotImplementedError) as exc:
-                raise AdtError(f"CREATE TABLE {name}: {exc}") from exc
-        else:
-            w = (
-                DeltaTableWriter(path) if fmt == "delta"
-                else TxnLogTable(path)
+        w = _writer(fmt, path)
+        exists = (
+            w._current()[1] is not None if fmt == "iceberg"
+            else w.latest_version() >= 0
+        )
+        if exists:
+            raise AdtError(
+                f"CREATE TABLE {name}: {path!r} already holds a {fmt} "
+                "table — ATTACH it and append instead"
             )
-            if w.latest_version() >= 0:
-                raise AdtError(
-                    f"CREATE TABLE {name}: {path!r} already holds a "
-                    f"{fmt} table at version {w.latest_version()} — "
-                    "ATTACH it and append instead"
-                )
-            try:
-                w.append(df, partition_by=parts or None)
-            except (ValueError, NotImplementedError) as exc:
-                raise AdtError(f"CREATE TABLE {name}: {exc}") from exc
+        try:
+            w.append(df, partition_by=parts or None)
+        except (ValueError, NotImplementedError) as exc:
+            raise AdtError(f"CREATE TABLE {name}: {exc}") from exc
         return self._attach_table_stmt(name, fmt, path, None)
 
     def _maintain_attached(self, name: str, op: str, **kw) -> DataFrame | None:
         """OPTIMIZE TABLE / VACUUM / REFRESH TABLE over an ATTACHed
-        table. Maintenance WRITES, so it runs on the formats this
-        engine can write — all three since late round 11: txnlog
-        (`TxnLogTable`), standard Delta (`DeltaTableWriter` —
-        compaction AND `ZORDER BY` re-clustering commit `dataChange:
-        false` removes+adds other Delta engines understand and
-        skip-scan), and standard Iceberg (`IcebergTableWriter` —
-        OPTIMIZE compacts via a `replace` snapshot, VACUUM expires
-        snapshots; ZORDER refuses). After a mutating op the view
-        re-registers on the fresh snapshot (the file list changed even
-        though content didn't). REFRESH just re-resolves the snapshot
-        to pick up new commits."""
-        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
-
+        table, through the format's writer: standard Delta
+        (`DeltaTableWriter` — compaction AND `ZORDER BY` re-clustering
+        commit `dataChange: false` removes+adds other Delta engines
+        understand and skip-scan) and standard Iceberg
+        (`IcebergTableWriter` — OPTIMIZE compacts via a `replace`
+        snapshot, `ZORDER BY` re-clusters with manifest bounds, VACUUM
+        expires snapshots). After a mutating op the view re-registers
+        on the fresh snapshot (the file list changed even though
+        content didn't). REFRESH just re-resolves the snapshot to pick
+        up new commits."""
         if name not in self._attached:
             raise AdtError(
                 f"{op.upper()}: {name!r} is not an ATTACHed table"
@@ -300,33 +295,17 @@ class Engine:
         if op == "refresh":
             # a refresh IS a re-ATTACH at latest (pin cleared)
             return self._attach_table_stmt(name, fmt, path, None)
+        t = _writer(fmt, path)
         if fmt == "iceberg":
-            # graduated late in round 11: OPTIMIZE = rewrite_data_files
-            # (a `replace` snapshot the change feed skips), VACUUM =
-            # expire_snapshots (metadata drop + physical reclaim of
-            # files reachable only from expired snapshots)
-            from algebraicdb_spark.operators.iceberg_writer import (
-                IcebergTableWriter,
-            )
-
-            it = IcebergTableWriter(path)
+            # OPTIMIZE = rewrite_data_files (a `replace` snapshot the
+            # change feed skips); VACUUM = expire_snapshots (metadata
+            # drop + physical reclaim of files reachable only from
+            # expired snapshots)
             if op == "optimize":
-                # ZORDER graduated with writer-side manifest bounds:
-                # the Morton re-clustering's narrow per-file spans
-                # land as lower/upper bounds every planner skips on
-                it.optimize(self.spark, zorder_by=kw.get("zorder_by"))
+                t.optimize(self.spark, zorder_by=kw.get("zorder_by"))
             else:
-                it.expire_snapshots(
-                    retain_last=kw.get("retain_versions", 2)
-                )
-            df = it.snapshot(self.spark)
-            self.create_table(name, df)
-            self._attached[name] = {
-                "fmt": fmt, "path": path, "version": None,
-            }
-            return df
-        t = DeltaTableWriter(path) if fmt == "delta" else TxnLogTable(path)
-        if op == "optimize":
+                t.expire_snapshots(retain_last=kw.get("retain_versions", 2))
+        elif op == "optimize":
             t.optimize(self.spark, **kw)
         else:
             t.vacuum(**kw)
@@ -752,22 +731,14 @@ class Engine:
         """RESTORE TABLE n TO VERSION AS OF v / TO TIMESTAMP AS OF 'ts'
         — rollback an ATTACHed table to an earlier state as ONE new
         commit, history preserved (the write-side twin of the AS-OF
-        read sugar): txnlog/delta restore by re-adding the target
+        read sugar): delta restores by re-adding the target
         version's live set (zero bytes copied — see
-        `TxnLogTable.restore` / `DeltaTableWriter.restore`), iceberg
+        `DeltaTableWriter.restore`), iceberg
         rolls the current-snapshot pointer back (metadata-only,
         `IcebergTableWriter.rollback`). Past-retention targets refuse
         through the writers' own loud errors; a VERSION-pinned
         attachment refuses (mutating a historical pin); the view
         re-registers on the restored snapshot."""
-        from algebraicdb_spark.operators.delta_writer import (
-            DeltaTableWriter,
-        )
-        from algebraicdb_spark.operators.iceberg_writer import (
-            IcebergTableWriter,
-        )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
-
         self._refuse_view_mutation("RESTORE", name)
         if name not in self._attached:
             raise AdtError(
@@ -784,13 +755,8 @@ class Engine:
         v = int(ver) if ver is not None else self._version_at_timestamp(
             att, ts
         )
-        fmt, path = att["fmt"], att["path"]
-        writers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaTableWriter,
-            "iceberg": IcebergTableWriter,
-        }
-        t = writers[fmt](path)
+        fmt = att["fmt"]
+        t = _writer(fmt, att["path"])
         try:
             if fmt == "iceberg":
                 t.rollback(v)
@@ -807,26 +773,14 @@ class Engine:
     def _show_tblprops_stmt(self, name: str) -> DataFrame:
         """SHOW TBLPROPERTIES n — the properties/configuration map of
         an ATTACHed lakehouse table (iceberg properties, delta
-        configuration; txnlog has none), one (key, value) row each."""
-        from algebraicdb_spark.operators.delta_writer import (
-            DeltaTableWriter,
-        )
-        from algebraicdb_spark.operators.iceberg_writer import (
-            IcebergTableWriter,
-        )
-
+        configuration), one (key, value) row each."""
         if name not in self._attached:
             raise AdtError(
                 f"SHOW TBLPROPERTIES: {name!r} is not an ATTACHed "
                 "table (dialect tables carry no properties)"
             )
         att = self._attached[name]
-        if att["fmt"] == "iceberg":
-            props = IcebergTableWriter(att["path"]).properties()
-        elif att["fmt"] == "delta":
-            props = DeltaTableWriter(att["path"]).properties()
-        else:
-            props = {}
+        props = _writer(att["fmt"], att["path"]).properties()
         rows = sorted((str(k), str(v)) for k, v in props.items())
         return self.spark.createDataFrame(
             rows or [], "key string, value string"
@@ -834,46 +788,25 @@ class Engine:
 
     def _describe_history_stmt(self, name: str) -> DataFrame:
         """DESCRIBE HISTORY n — the commit/snapshot audit trail of an
-        ATTACHed lakehouse table, across all three formats: txnlog
-        (action-shape-classified operations), delta (commitInfo
-        operations), iceberg (snapshot summaries). One row per
-        surviving commit/snapshot, newest last."""
-        from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
-
+        ATTACHed lakehouse table: delta (commitInfo operations),
+        iceberg (snapshot summaries). One row per surviving
+        commit/snapshot, newest last."""
         if name not in self._attached:
             raise AdtError(
                 f"DESCRIBE HISTORY: {name!r} is not an ATTACHed table "
                 "(dialect tables are views — they have no commit log)"
             )
         att = self._attached[name]
-        fmt, path = att["fmt"], att["path"]
-        if fmt == "txnlog":
-            rows = [
-                (h["version"], h["operation"], h["n_adds"],
-                 h["n_removes"], h["data_change"])
-                for h in TxnLogTable(path).history()
-            ]
-            return self.spark.createDataFrame(
-                rows or [],
-                "version long, operation string, n_adds int, "
-                "n_removes int, data_change boolean",
-            )
-        if fmt == "delta":
-            rows = [
-                (h["version"], h["operation"])
-                for h in DeltaLogTable(path).history()
-            ]
+        rdr = _reader(att["fmt"], att["path"])
+        if att["fmt"] == "delta":
+            rows = [(h["version"], h["operation"]) for h in rdr.history()]
             return self.spark.createDataFrame(
                 rows or [], "version long, operation string"
             )
         rows = [
             (s["snapshot-id"], s.get("parent-snapshot-id"),
              (s.get("summary") or {}).get("operation"))
-            for s in IcebergTable(path).snapshots()
+            for s in rdr.snapshots()
         ]
         return self.spark.createDataFrame(
             rows or [],
@@ -1003,9 +936,6 @@ class Engine:
         require column mapping, and a faithful rewrite is an
         overwrite-shaped operation; DEFAULT backfill refuses too (it
         rewrites every row — ADD without DEFAULT, then UPDATE)."""
-        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
-
         att = self._attached[name]
         sp = re.fullmatch(
             r"SET\s+PROPERTIES\s*\((?P<kvs>.+)\)",
@@ -1036,25 +966,14 @@ class Engine:
                        else "")
                 )
             props = dict(pairs)
-            if att["fmt"] == "txnlog":
-                raise AdtError(
-                    f"ALTER TABLE {name}: txnlog tables have no "
-                    "properties surface — the knobs are writer "
-                    "arguments (stats_cols, zorder_by, retention)"
-                )
+            w = _writer(att["fmt"], att["path"])
             try:
                 if att["fmt"] == "iceberg":
-                    from algebraicdb_spark.operators.iceberg_writer import (
-                        IcebergTableWriter,
-                    )
-
-                    IcebergTableWriter(att["path"]).set_properties(props)
+                    w.set_properties(props)
                 else:
                     # spark rides along so ALTER ADD CONSTRAINT can
                     # validate the table's existing rows
-                    DeltaTableWriter(att["path"]).set_properties(
-                        props, spark=self.spark
-                    )
+                    w.set_properties(props, spark=self.spark)
             except (ValueError, NotImplementedError) as exc:
                 raise AdtError(f"ALTER TABLE {name}: {exc}") from exc
             return None
@@ -1070,16 +989,11 @@ class Engine:
                 f"ALTER TABLE: {name!r} is pinned at VERSION "
                 f"{att['version']} — re-ATTACH at latest before evolving"
             )
+        t = _writer(att["fmt"], att["path"])
         if re.fullmatch(
             r"ENABLE\s+DELETION\s+VECTORS", action, re.IGNORECASE
         ):
-            if att["fmt"] != "delta":
-                raise AdtError(
-                    f"ALTER TABLE {name}: deletion vectors are a Delta "
-                    f"protocol feature — {att['fmt']} tables delete "
-                    "copy-on-write"
-                )
-            DeltaTableWriter(att["path"]).enable_deletion_vectors()
+            t.enable_deletion_vectors()
             return None
         am = _ALTER_ADD_RE.match(action)
         if am is None:
@@ -1102,11 +1016,6 @@ class Engine:
                 f"the {tname} declaration; add a struct column via the "
                 "owning writer instead"
             )
-        t = (
-            DeltaTableWriter(att["path"])
-            if att["fmt"] == "delta"
-            else TxnLogTable(att["path"])
-        )
         try:
             t.evolve_add_column(col, spark_type(tname))
         except ValueError as exc:
@@ -1166,8 +1075,8 @@ class Engine:
         next REFRESH would discard the appended rows.
 
         On an ATTACHed lakehouse table the batch becomes a REAL append
-        commit (txnlog via ``TxnLogTable.append``, standard Delta via
-        ``DeltaTableWriter.append``, Iceberg via
+        commit (standard Delta via ``DeltaTableWriter.append``, Iceberg
+        via
         ``IcebergTableWriter.append`` — all behind their schema
         gates), never a view union that ``REFRESH TABLE`` would
         silently revert (the round-10 verdict's found defect).
@@ -1191,27 +1100,14 @@ class Engine:
             reader = reader.option("header", True)
         batch = reader.format(fmt).load(path)
         if name in self._attached:
-            from algebraicdb_spark.operators.delta_writer import (
-                DeltaTableWriter,
-            )
-            from algebraicdb_spark.operators.iceberg_writer import (
-                IcebergTableWriter,
-            )
-            from algebraicdb_spark.operators.txnlog import TxnLogTable
-
             att = self._attached[name]
             if att["version"] is not None:
                 raise AdtError(
                     f"COPY: {name!r} is pinned at VERSION {att['version']} "
                     "— re-ATTACH at latest before appending"
                 )
-            writers = {
-                "delta": DeltaTableWriter,
-                "iceberg": IcebergTableWriter,
-                "txnlog": TxnLogTable,
-            }
             try:
-                writers[att["fmt"]](att["path"]).append(batch)
+                _writer(att["fmt"], att["path"]).append(batch)
             except (ValueError, NotImplementedError) as exc:
                 raise AdtError(f"COPY {name}: {exc}") from exc
             # re-resolve the view on the post-append snapshot
@@ -1236,14 +1132,6 @@ class Engine:
         _, rows = parse_insert_rows(stmt, td, self._types)
         batch = self.spark.sql(" UNION ALL ".join(f"SELECT {r}" for r in rows))
         if name in self._attached:
-            from algebraicdb_spark.operators.delta_writer import (
-                DeltaTableWriter,
-            )
-            from algebraicdb_spark.operators.iceberg_writer import (
-                IcebergTableWriter,
-            )
-            from algebraicdb_spark.operators.txnlog import TxnLogTable
-
             att = self._attached[name]
             if att["version"] is not None:
                 raise AdtError(
@@ -1258,13 +1146,8 @@ class Engine:
                     for bc, f in zip(batch.columns, live.fields)
                 ]
             )
-            writers = {
-                "delta": DeltaTableWriter,
-                "iceberg": IcebergTableWriter,
-                "txnlog": TxnLogTable,
-            }
             try:
-                writers[att["fmt"]](att["path"]).append(typed)
+                _writer(att["fmt"], att["path"]).append(typed)
             except (ValueError, NotImplementedError) as exc:
                 raise AdtError(f"INSERT {name}: {exc}") from exc
             self._attach_table_stmt(name, att["fmt"], att["path"], None)
@@ -1293,14 +1176,13 @@ class Engine:
         every join match instead — deduplicate the source on the
         merge key first.
 
-        On an ATTACHed txnlog table the statement routes to
-        ``TxnLogTable.merge`` — ONE transactional copy-on-write commit
-        (remove affected files + add rewrites/inserts, atomic,
+        On an ATTACHed lakehouse table the statement routes to the
+        format writer's ``merge`` — ONE transactional copy-on-write
+        commit (remove affected files + add rewrites/inserts, atomic,
         time-travelable) instead of a view swap that ``REFRESH TABLE``
         would silently revert (the round-10 verdict's found defect);
-        there multi-matching source rows ARE an error. Delta/iceberg
-        interop and VERSION-pinned attachments refuse loudly, exactly
-        like DELETE/UPDATE."""
+        there multi-matching source rows ARE an error. VERSION-pinned
+        attachments refuse loudly, exactly like DELETE/UPDATE."""
         m = _MERGE_RE.match(stmt)
         target, source = m.group("target"), m.group("source")
         self._refuse_view_mutation("MERGE INTO", target)
@@ -1417,7 +1299,7 @@ class Engine:
         statement with the same (app, version) no-ops. The same
         refusal matrix as the Python path applies — duplicate keys in
         the source, partitioned/format-v1 targets, schema drift all
-        refuse loudly. Iceberg attachments only: txnlog/delta express
+        refuse loudly. Iceberg attachments only: delta expresses
         keyed upserts through MERGE INTO (which probes), and dialect
         temp views have no delete files to ride."""
         m = _UPSERT_RE.match(stmt)
@@ -1465,19 +1347,10 @@ class Engine:
 
     def _mutable_attachment(self, verb: str, name: str):
         """The writable table object behind an ATTACHed name, for
-        row-level mutation: txnlog → ``TxnLogTable``, standard Delta →
-        ``DeltaTableWriter``, standard Iceberg → ``IcebergTableWriter``
-        (delta graduated from mutation-refusing in round 11; iceberg's
-        COW delete/update/merge landed later the same round,
-        completing the three-format mutation matrix). A
-        VERSION-pinned attachment refuses (mutating a historical
-        snapshot is a contradiction: rebase on latest)."""
-        from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
-        from algebraicdb_spark.operators.iceberg_writer import (
-            IcebergTableWriter,
-        )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
-
+        row-level mutation: standard Delta → ``DeltaTableWriter``,
+        standard Iceberg → ``IcebergTableWriter``. A VERSION-pinned
+        attachment refuses (mutating a historical snapshot is a
+        contradiction: rebase on latest)."""
         att = self._attached[name]
         if att["fmt"] == "iceberg" and verb not in (
             "DELETE", "UPDATE", "MERGE INTO", "UPSERT INTO"
@@ -1493,26 +1366,16 @@ class Engine:
                 f"{verb}: {name!r} is pinned at VERSION {att['version']} "
                 "— re-ATTACH at latest before mutating"
             )
-        if att["fmt"] == "iceberg":
-            return IcebergTableWriter(att["path"])
-        if att["fmt"] == "delta":
-            return DeltaTableWriter(att["path"])
-        return TxnLogTable(att["path"])
+        return _writer(att["fmt"], att["path"])
 
     def _reattach_after_mutation(self, name: str, t) -> None:
         """Re-register the view on the post-mutation snapshot. A table
         whose every row was deleted has NO live files — legal state:
         register an empty frame under the pinned table schema (or,
-        for a pre-schema-tracking log, under the shape the view had
+        when the log records none, under the shape the view had
         before the mutation — the best remaining authority)."""
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
         att = self._attached[name]
         schema = t.table_schema()
-        if isinstance(schema, str):  # txnlog serializes; delta returns
-            schema = StructType.fromJson(_json.loads(schema))
         try:
             non_empty = bool(t.live_paths())
         except (NotImplementedError, ValueError):
@@ -1535,7 +1398,7 @@ class Engine:
         self._invalidate_stats(name)
 
     def _delete_stmt(self, stmt: str) -> None:
-        """DELETE FROM t [WHERE pred] — on an ATTACHed txnlog table this
+        """DELETE FROM t [WHERE pred] — on an ATTACHed lakehouse table this
         is COPY-ON-WRITE row deletion (only files containing matching
         rows are rewritten; the commit is remove+add, atomic,
         time-travelable); on a dialect table it lowers to a filtered
@@ -1569,7 +1432,7 @@ class Engine:
         self._invalidate_stats(name)
 
     def _update_stmt(self, stmt: str) -> None:
-        """UPDATE t SET c = e, … [WHERE pred] — on an ATTACHed txnlog
+        """UPDATE t SET c = e, … [WHERE pred] — on an ATTACHed lakehouse
         table this is COPY-ON-WRITE row update (matched files rewritten
         with CASE per assigned column, atomic remove+add commit); on a
         dialect table it lowers to a projected view replacement."""
@@ -1705,7 +1568,7 @@ class Engine:
     def _version_at_timestamp(self, att: dict, ts: str) -> int:
         """Resolve `FOR TIMESTAMP AS OF '<ts>'` to a version/snapshot
         id: the LATEST commit at or before the instant, per format —
-        txnlog uses commit-file mtimes, delta the commitInfo timestamp
+        delta uses the commitInfo timestamp
         (file mtime when a foreign commit omits it), iceberg the
         snapshot's timestamp-ms. Naive literals are read as UTC (commit
         clocks are epoch-based). Below the surviving log (cleaned
@@ -1713,12 +1576,6 @@ class Engine:
         — resolving to 'nearest available' would silently answer a
         different question."""
         from datetime import datetime, timezone
-
-        from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
 
         try:
             dt = datetime.fromisoformat(ts)
@@ -1730,21 +1587,12 @@ class Engine:
         if dt.tzinfo is None:
             dt = dt.replace(tzinfo=timezone.utc)
         ts_ms = int(dt.timestamp() * 1000)
-        fmt, path = att["fmt"], att["path"]
+        fmt = att["fmt"]
+        rdr = _reader(fmt, att["path"])
         cands: list[tuple[int, int]] = []  # (commit ts ms, version)
-        if fmt == "txnlog":
-            t = TxnLogTable(path)
-            for commit in t._commits():
-                cf = os.path.join(
-                    t.log_dir, f"v{commit['version']:08d}.json"
-                )
-                cands.append(
-                    (int(os.path.getmtime(cf) * 1000), commit["version"])
-                )
-        elif fmt == "delta":
-            d = DeltaLogTable(path)
-            for v, actions in d._json_commit_actions(
-                (d._json_versions() or [0])[0], None
+        if fmt == "delta":
+            for v, actions in rdr._json_commit_actions(
+                (rdr._json_versions() or [0])[0], None
             ):
                 info = next(
                     (a["commitInfo"] for a in actions if "commitInfo" in a),
@@ -1752,7 +1600,7 @@ class Engine:
                 )
                 when = info.get("timestamp") or int(
                     os.path.getmtime(
-                        os.path.join(d.log_dir, f"{v:020d}.json")
+                        os.path.join(rdr.log_dir, f"{v:020d}.json")
                     ) * 1000
                 )
                 cands.append((int(when), v))
@@ -1765,15 +1613,14 @@ class Engine:
             # snapshot expired out of the metadata are skipped; tables
             # with no snapshot-log at all (minimal foreign metadata)
             # fall back to the snapshots list's own order.
-            tbl = IcebergTable(path)
-            known = {s["snapshot-id"] for s in tbl.snapshots()}
+            known = {s["snapshot-id"] for s in rdr.snapshots()}
             log = [
-                e for e in (tbl.meta.get("snapshot-log") or [])
+                e for e in (rdr.meta.get("snapshot-log") or [])
                 if e.get("snapshot-id") in known
             ] or [
                 {"timestamp-ms": s.get("timestamp-ms"),
                  "snapshot-id": s["snapshot-id"]}
-                for s in tbl.snapshots()
+                for s in rdr.snapshots()
             ]
             ordered = [
                 (int(e.get("timestamp-ms") or 0), i, e["snapshot-id"])
@@ -1809,21 +1656,10 @@ class Engine:
             _mask_strings,
             _unmask_strings,
         )
-        from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
 
         masked, saved = _mask_strings(stmt)
         if not _TIME_TRAVEL_RE.search(masked):
             return stmt
-
-        readers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaLogTable,
-            "iceberg": IcebergTable,
-        }
 
         def repl(m: re.Match) -> str:
             name = m.group("name")
@@ -1844,7 +1680,7 @@ class Engine:
             from pyspark.errors import AnalysisException
 
             try:
-                df = readers[att["fmt"]](att["path"]).snapshot(self.spark, v)
+                df = _reader(att["fmt"], att["path"]).snapshot(self.spark, v)
             except (ValueError, AnalysisException) as exc:
                 # cleaned checkpoint / expired snapshot / vacuumed data:
                 # the reader (or the scan resolution) refuses — surface
@@ -1860,7 +1696,7 @@ class Engine:
     def _rewrite_changes(self, stmt: str) -> str:
         """Lower ``CHANGES(t, <since> [, <to>])`` in FROM position on
         an ATTACHed table to the format's row-level change feed
-        (``changes_cdf`` — txnlog/delta by version, iceberg by
+        (``changes_cdf`` — delta by version, iceberg by
         snapshot id), registered as a temp view and substituted in
         place, so the feed composes with the whole read grammar
         (joins, aggregation, CTAS, EXPLAIN). Bounds are integers or
@@ -1874,21 +1710,10 @@ class Engine:
             _mask_strings,
             _unmask_strings,
         )
-        from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
 
         masked, saved = _mask_strings(stmt)
         if not _CHANGES_RE.search(masked):
             return stmt
-
-        readers = {
-            "txnlog": TxnLogTable,
-            "delta": DeltaLogTable,
-            "iceberg": IcebergTable,
-        }
 
         def bound(num: str | None, ref: str | None, att: dict):
             if num is not None:
@@ -1910,7 +1735,7 @@ class Engine:
             att = self._attached[name]
             since = bound(m.group("since"), m.group("sinceref"), att)
             to = bound(m.group("to"), m.group("toref"), att)
-            rdr = readers[att["fmt"]](att["path"])
+            rdr = _reader(att["fmt"], att["path"])
             try:
                 cdf = rdr.changes_cdf(self.spark, since, to)
             except (ValueError, NotImplementedError) as exc:

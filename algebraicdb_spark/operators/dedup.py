@@ -485,7 +485,10 @@ def minhash_pairs(docs: DataFrame, tau: float = JACCARD_TAU) -> DataFrame:
     toks.createOrReplaceTempView(view)
     spark = toks.sparkSession
     try:
-        return spark.sql(_MH_PAIRS_TEMPLATE.format(toks=view, tau=repr(tau)))
+        # float() first: only a numeric literal may reach the SQL text
+        return spark.sql(
+            _MH_PAIRS_TEMPLATE.format(toks=view, tau=float(tau))
+        )
     finally:
         spark.catalog.dropTempView(view)
 

@@ -1,10 +1,9 @@
 """Standard-format Delta Lake WRITER — the interop twin of
-``DeltaLogTable`` (txnlog.py), which round 9 proved can *read* tables
-other systems maintain. This module closes the opposite gap the
-round-9 verdict ranked first: a table built by THIS engine was, until
-now, recorded in ``TxnLogTable``'s simplified private log, so no other
-engine could consume it. ``DeltaTableWriter`` emits a real
-``_delta_log`` per the public protocol spec
+``DeltaLogTable`` (txnlog.py), which can *read* tables other systems
+maintain. Every transactional table this engine writes in the Delta
+dialect commits here, so any other Delta engine can consume it.
+``DeltaTableWriter`` emits a real ``_delta_log`` per the public
+protocol spec
 (https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
 
 - one NDJSON commit file per version, 20-digit zero-padded names, one
@@ -22,8 +21,8 @@ engine could consume it. ``DeltaTableWriter`` emits a real
 - OVERWRITE emits data-changing ``remove`` tombstones for the replaced
   live set plus the new adds, atomically in one commit;
 - additive schema evolution re-emits ``metaData`` in the same commit,
-  behind the same loud gate as ``TxnLogTable`` (drift without
-  ``evolve_schema=True``, column removal, or retyping refuses);
+  behind a loud gate (drift without ``evolve_schema=True``, column
+  removal, or retyping refuses);
 - ``write_checkpoint`` materializes the folded state as a classic
   single-file ``<v>.checkpoint.parquet`` (one action per row, struct
   columns) plus the ``_last_checkpoint`` pointer, optionally cleaning
@@ -35,7 +34,7 @@ Concurrency is Delta's own: the commit publish is a create-exclusive
 write of the next version file; a racing writer loses with
 ``ConcurrentWriteError`` and rebases (on S3-class stores real
 deployments route this through a commit service / conditional put —
-the same deployment seam as ``TxnLogTable._publish``).
+a deployment seam behind ``_publish``).
 
 Proof of interop is structural: every round-trip test reads the
 written table back through ``DeltaLogTable`` — the reader built and
@@ -157,9 +156,11 @@ class DeltaTableWriter:
     # -- commit primitives ------------------------------------------------
 
     def _publish(self, version: int, actions: list[dict]) -> None:
-        """Create-exclusive publish — the same atomicity primitive as
-        ``TxnLogTable._publish``, in Delta's on-disk dialect: NDJSON,
-        one action per line, 20-digit version names."""
+        """Create-exclusive publish of one commit file: two racers
+        targeting the same version get exactly one winner
+        (FileExistsError -> ConcurrentWriteError). Delta's on-disk
+        dialect: NDJSON, one action per line, 20-digit version
+        names."""
         target = os.path.join(self.log_dir, f"{version:020d}.json")
         doc = "\n".join(json.dumps(a) for a in actions) + "\n"
         try:
@@ -586,7 +587,7 @@ class DeltaTableWriter:
                     rel = fn
                 else:
                     # hive layout decoded by the SAME helper as the
-                    # txnlog staging path (txnlog._hive_partition_values)
+                    # iceberg staging path (txnlog._hive_partition_values)
                     pv = _hive_partition_values(rel_dir)
                     rel = os.path.join(rel_dir, fn)
                 if subdir:
@@ -644,8 +645,8 @@ class DeltaTableWriter:
         cur_meta: dict | None = None,
         fetched: bool = False,
     ) -> list[dict]:
-        """The ``metaData`` action this batch needs, behind the same
-        gate as ``TxnLogTable._schema_actions``: first write records,
+        """The ``metaData`` action this batch needs, behind the schema
+        gate: first write records,
         identical schema records nothing, drift refuses unless opted
         into AND purely additive. The partition spec is pinned for the
         table's lifetime on the append path (changing it scrambles
@@ -1295,9 +1296,8 @@ class DeltaTableWriter:
         options. A redelivered (app_id, txn_version) no-ops (returns
         None, unstaging anything it wrote). Makes the exactly-once
         streaming sink (streaming/sink.py) able to target a table every
-        other Delta engine can then consume; like
-        ``TxnLogTable.append_txn`` it INHERITS the table's partition
-        spec by default (the sink never states one).
+        other Delta engine can then consume; it INHERITS the table's
+        partition spec by default (the sink never states one).
 
         The idempotence mark and the schema gate are both validated
         against the log head read AFTER the slot resolves, and
@@ -1333,8 +1333,7 @@ class DeltaTableWriter:
             df, parts, mapping=self._cm_of(cur_meta)
         )
         tail = self._add_actions(staged) + [
-            {"txn": {"appId": app_id, "version": txn_version,
-                     "lastUpdated": int(time.time() * 1000)}}
+            self._txn_action(app_id, txn_version)
         ]
         try:
             for _ in range(max_retries):
@@ -1394,6 +1393,58 @@ class DeltaTableWriter:
         current spec, an explicit list — including ``[]`` —
         re-partitions), recorded via a fresh-shape ``metaData`` under
         the stable table id."""
+        return self._overwrite(df, expected_version, partition_by, [])
+
+    def overwrite_txn(
+        self,
+        df: DataFrame,
+        app_id: str,
+        txn_version: int,
+        expected_version: int,
+    ) -> int | None:
+        """Idempotent OVERWRITE — ``append_txn``'s REPLACE twin: the
+        new content, the tombstones for the old, and the ``txn``
+        idempotence marker ride in ONE atomic commit. A redelivered
+        (app_id, txn_version) no-ops (None); a stale base loses to
+        ``ConcurrentWriteError`` like any overwrite. This is the
+        primitive a state-replacing consumer needs — e.g. a
+        materialized view whose refresh watermark must commit
+        atomically WITH the refreshed state, so a crash between the
+        two can never desync them."""
+        if txn_version <= self.reader().last_txn_version(app_id):
+            return None
+        return self._overwrite(
+            df, expected_version, None, [self._txn_action(app_id, txn_version)]
+        )
+
+    def mark_txn(self, app_id: str, txn_version: int) -> int:
+        """Marker-only commit: advance ``app_id``'s ``txn`` mark with
+        no data change (a consumer whose input window held only
+        metadata/compaction traffic moves its watermark without
+        rewriting state). Returns the committed version; a lost
+        publish race raises ``ConcurrentWriteError``."""
+        version = self.latest_version() + 1
+        head = [self._protocol_action()] if version == 0 else []
+        self._publish(
+            version,
+            head
+            + [self._commit_info("SET TRANSACTION")]
+            + [self._txn_action(app_id, txn_version)],
+        )
+        return version
+
+    @staticmethod
+    def _txn_action(app_id: str, txn_version: int) -> dict:
+        return {"txn": {"appId": app_id, "version": txn_version,
+                        "lastUpdated": int(time.time() * 1000)}}
+
+    def _overwrite(
+        self,
+        df: DataFrame,
+        expected_version: int,
+        partition_by: list[str] | None,
+        tail: list[dict],
+    ) -> int:
         current = self.latest_version()
         if expected_version != current + 1:
             raise ConcurrentWriteError(
@@ -1498,7 +1549,8 @@ class DeltaTableWriter:
                 head + meta
                 + [self._commit_info("WRITE", mode="Overwrite")]
                 + removes
-                + self._add_actions(staged),
+                + self._add_actions(staged)
+                + tail,
             )
         except ConcurrentWriteError:
             # the error tells the caller to rebase and retry — the
@@ -1928,8 +1980,8 @@ class DeltaTableWriter:
         """Row-level ``DELETE FROM … WHERE predicate`` on the STANDARD
         format, two physical strategies behind one semantic:
 
-        - ``cow`` (copy-on-write): the same three file classes as
-          ``TxnLogTable.delete`` from one probe + footer counts:
+        - ``cow`` (copy-on-write): three file classes from one probe
+          + footer counts:
           untouched files keep their add entries, fully-matching files
           drop with zero rewrite I/O, partial files rewrite minus the
           matches (NULL keeps the row — SQL DELETE semantics). The
@@ -2569,7 +2621,7 @@ class DeltaTableWriter:
         dv_inline_threshold: int = 512,
     ) -> dict:
         """``MERGE INTO`` as ONE copy-on-write commit on the standard
-        format — the same plan as ``TxnLogTable.merge`` (probe
+        format (probe
         semi-join → rewrite only reached files → anti-join inserts →
         atomic remove+add), with the same free multi-match refusal
         (a matched rewrite preserves row count; staged footers
@@ -3055,15 +3107,15 @@ class DeltaTableWriter:
         below ``min_inputs``.
 
         ``zorder_by`` re-CLUSTERS instead of just re-packing — the
-        same Morton-key range clustering as ``TxnLogTable.optimize``
-        (txnlog._zorder_clustered), landing in a STANDARD table other
-        Delta engines then skip-scan: each output file covers a narrow
+        Morton-key range clustering of ``txnlog._zorder_clustered``
+        (shared with the Iceberg writer), landing in a STANDARD table
+        other Delta engines then skip-scan: each output file covers a narrow
         span of every clustering column, and since delta adds are
         file-grain with footer stats by construction, the narrow spans
         reach the log for free. Legitimate on a single input
         (clustering changes layout value even at one file);
-        hive-partitioned tables refuse, as in txnlog — the partition
-        layout already provides the coarse tier."""
+        hive-partitioned tables refuse — the partition layout already
+        provides the coarse tier."""
         from algebraicdb_spark.operators.txnlog import _zorder_clustered
 
         rdr = self.reader()
@@ -3172,7 +3224,7 @@ class DeltaTableWriter:
         """Physically delete data files the LOG references but no
         snapshot in the last ``retain_versions`` versions reaches —
         retention stated in versions (the fixture has no wall-clock),
-        like ``TxnLogTable.vacuum``; real Delta states it in hours off
+        where real Delta states it in hours off
         the remove tombstones' deletionTimestamp, same contract. The
         log is never deleted (history structure stays auditable); AS
         OF reads older than retention fail on the missing files, which

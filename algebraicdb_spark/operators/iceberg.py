@@ -1136,8 +1136,8 @@ class IcebergTable:
         to_snapshot_id: int | None = None,
     ) -> DataFrame | None:
         """Incremental APPEND scan between snapshots — Iceberg's
-        incremental read, the interop triplet-completing twin of
-        ``TxnLogTable.changes`` / ``DeltaLogTable.changes``: the data
+        incremental read, the twin of ``DeltaLogTable.changes``: the
+        data
         files ADDED by each snapshot in the parent chain
         (``since``, ``to``], one multi-path parquet read. Per the same
         adds-only contract: snapshots whose summary operation is
@@ -1348,7 +1348,7 @@ class IcebergTable:
         to_snapshot_id: int | None = None,
     ) -> DataFrame | None:
         """ROW-LEVEL change feed for snapshots (``since``, ``to``] —
-        the iceberg leg of the txnlog/delta ``changes_cdf`` triplet,
+        the iceberg twin of ``DeltaLogTable.changes_cdf``,
         Delta CDF's shape: the table columns plus ``_change_type``
         (insert / delete / update_preimage / update_postimage) and
         ``_commit_version`` (the snapshot id). Where ``changes`` (the
@@ -1788,7 +1788,7 @@ class IcebergViewBase:
     ``rebuild``):
 
     - ``latest_version()`` — the current snapshot's sequence number
-      (-1 on an empty table, matching a TxnLogTable base);
+      (-1 on an empty table, matching a ``DeltaLogTable`` base);
     - ``_window_has_dc_removes(lo, hi)`` — True when any snapshot in
       the window declares a non-append, non-replace operation (the
       spec REQUIRES ``summary.operation``), routing the refresh to

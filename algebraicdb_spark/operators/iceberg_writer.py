@@ -1,7 +1,7 @@
-"""Append-only Apache Iceberg v2 WRITER — the interop triplet's last
-leg (txnlog: write+read, Delta: write+read, Iceberg: read-only until
-now). ``IcebergTableWriter`` emits real table metadata per the public
-spec (https://iceberg.apache.org/spec/):
+"""Apache Iceberg v2 WRITER — the Iceberg twin of the Delta writer
+(``DeltaTableWriter``), so both standard formats this engine reads it
+can also write. ``IcebergTableWriter`` emits real table metadata per
+the public spec (https://iceberg.apache.org/spec/):
 
 - parquet data files under ``<table>/data/``;
 - one manifest Avro per commit (entry status ADDED, explicit data
@@ -16,8 +16,8 @@ spec (https://iceberg.apache.org/spec/):
   snapshot chain with parent ids, snapshot-log/metadata-log) published
   CREATE-EXCLUSIVELY — two racers targeting the same metadata version
   get exactly one winner (the same optimistic primitive as
-  ``TxnLogTable._publish``; real catalogs arbitrate this swap, the
-  same deployment seam);
+  ``DeltaTableWriter._publish``; real catalogs arbitrate this swap,
+  the same deployment seam);
 - ``version-hint.text`` swung atomically for hint-based readers.
 
 ``AvroFileWriter`` is the write twin of ``AvroFileReader`` — a
@@ -1372,7 +1372,7 @@ class IcebergTableWriter:
         base_v, cur = self._current()
         spec_parts = self._cur_spec(cur)  # the sink never states a
         # spec — inherit the table's (transforms included), exactly
-        # like the delta/txnlog committers
+        # like the delta committer
         if cur is not None:
             self._gate_schema(cur, fields)
         staged = self._stage(
@@ -4042,7 +4042,7 @@ class IcebergTableWriter:
         content-preserving, so the incremental feed (``changes``)
         SKIPS it by the summary operation, exactly like Delta's
         dataChange:false. ``zorder_by`` re-CLUSTERS instead of just
-        re-packing (txnlog's Morton-key range repartition,
+        re-packing (the Delta writer's Morton-key range repartition,
         `_zorder_clustered`) — and since every staged file's manifest
         entry now carries footer-derived lower/upper bounds, the
         narrow per-file spans land where every Iceberg planner
@@ -4211,7 +4211,7 @@ class IcebergTableWriter:
         always survives. Candidates come from the expired snapshots'
         own manifest trees, never a directory walk (a walk would reap
         files a concurrent writer has staged but not yet committed —
-        the same invariant as the delta/txnlog vacuum). Returns the
+        the same invariant as the delta vacuum). Returns the
         deleted paths."""
         for _ in range(max_retries):
             base_v, cur = self._current()

@@ -616,13 +616,18 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{_CANON_SQL} AS ctext FROM documents) GROUP BY ctext"
     ).localCheckpoint(eager=False)
     keep_v = f"__funnel_keep_{next(_FUNNEL_VIEW_SEQ)}"
-    exact_keep.createOrReplaceTempView(keep_v)
-    # feed the canonical text as `text`: minhash_pairs re-canonicalizes
-    # idempotently, and the oracle's exact_docs CTE does the same
-    exact_docs = exact_keep.select("doc_id", F.col("ctext").alias("text"))
     pairs_v = f"__funnel_pairs_{next(_FUNNEL_VIEW_SEQ)}"
-    minhash_pairs(exact_docs).createOrReplaceTempView(pairs_v)
+    # both views register inside the try: a failing minhash_pairs()
+    # must not leave keep_v behind in the session catalog
     try:
+        exact_keep.createOrReplaceTempView(keep_v)
+        # feed the canonical text as `text`: minhash_pairs
+        # re-canonicalizes idempotently, and the oracle's exact_docs
+        # CTE does the same
+        exact_docs = exact_keep.select(
+            "doc_id", F.col("ctext").alias("text")
+        )
+        minhash_pairs(exact_docs).createOrReplaceTempView(pairs_v)
         return spark.sql(
             _FUNNEL_SQL_TEMPLATE.format(keep=keep_v, pairs=pairs_v)
         )

@@ -1,45 +1,38 @@
-"""Transactional table-format WRITER (the twin of log replay reads).
+"""Transactional tables: the Delta log reader and what builds on it.
 
 ``source_txnlog_snapshot`` (scans.py) proved the READ side of a
 Delta/Iceberg-style table: the live file set is decided by replaying
-an ordered commit log, never by listing a directory. This module adds
-the write side the round-5 verdict listed as the last residual gap: a
-``TxnLogTable`` writer with versioned APPEND / OVERWRITE commits,
-optimistic concurrency, and time travel — the minimal ACID surface a
-lakehouse table needs (real deployments would adopt Delta/Iceberg
-libraries; this pins the semantics with the same relational tools).
+an ordered commit log, never by listing a directory. This module holds
+the standard-format half of that idea:
 
-Protocol (the Delta core, radically simplified):
+- ``DeltaLogTable`` — a read-only reader for standard Delta Lake
+  tables (ours via ``DeltaTableWriter``, or another engine's):
+  checkpoint-aware log replay, partition/stats skipping, column
+  mapping, deletion vectors, time travel, ``changes`` /
+  ``changes_cdf`` feeds and ``txn`` idempotence marks;
+- the column-mapping, partition and scan-assembly helpers the Delta
+  and Iceberg readers and writers share (``_cm_*``,
+  ``_assemble_groups``, ``_zorder_clustered``, the pruning tests);
+- ``IncrementalAggView`` — an O(delta) materialized aggregate whose
+  state is itself a Delta table;
+- the lakehouse registry keys (``sink_txnlog_append``,
+  ``source_txnlog_time_travel``, ``dialect_changes_feed``,
+  ``view_*``, ``sink_delta_*``, ``sink_iceberg_*``), every one of them
+  committing through a standard format.
 
-    <path>/data/<commit-uuid>/part-*.parquet   immutable data files
-    <path>/_log/v00000000.json ... v{n}.json   one JSON doc per commit
-
-Each commit file holds the full action list of that version:
-``{"version": n, "actions": [{"action": "add"|"remove", "path": p}]}``.
-A reader resolves a snapshot AT version v by folding actions of
-versions 0..v in order — a path is live iff its latest action ≤ v is
-``add``. APPEND emits only adds; OVERWRITE emits removes for every
-currently-live file plus adds for the new data. Commit n is admitted
-only if n == latest+1 at publish time (optimistic concurrency — a
-racing writer loses with ``ConcurrentWriteError`` and must rebase,
-exactly Delta's protocol). The commit publish is a create-exclusive
-of the version file: on a POSIX/HDFS-like store that is atomic; on
-S3-class stores real formats route this through a commit service or
-conditional-put, which is a deployment detail behind ``_publish``.
-
-Scale shape: the log is METADATA — O(commits) KB-sized JSON docs read
-driver-side (what every table-format client does); data files never
-move on commit, appends never rewrite history, and snapshot reads are
-ordinary pruned parquet scans over the live path list. OVERWRITE is
-O(1) in data size: it tombstones paths, it does not delete bytes
-(vacuum is a separate concern, as in every real format).
+Every transactional write goes through one commit protocol: a
+create-exclusive publish of the next version file (``_publish`` in
+``DeltaTableWriter`` / the metadata swap in ``IcebergTableWriter``),
+with a racing writer losing with ``ConcurrentWriteError``. The log is
+METADATA — O(commits) KB-sized documents read driver-side; data files
+never move on commit, and snapshot reads are ordinary pruned parquet
+scans over the live path list.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,7 +107,7 @@ def _hive_partition_values(rel_dir: str) -> dict:
     """Decode a hive-layout relative directory (``col=val[/col2=val2]``,
     values percent-escaped by the Spark writer, nulls as the hive
     default marker) into a {column: string-or-None} dict — shared by
-    the txnlog and Delta staging paths so the two decoders can never
+    the Delta and Iceberg staging paths so the two decoders can never
     drift."""
     from urllib.parse import unquote
 
@@ -193,52 +186,6 @@ def _zorder_clustered(df: DataFrame, cols: list[str], target_files: int) -> Data
         .sortWithinPartitions("__zkey")
         .drop("__zkey", *znames)
     )
-
-
-def _footer_stats(data_dir: str, cols: list[str]) -> dict:
-    """Per-column [min, max] for every parquet file under ``data_dir``,
-    read from ROW-GROUP FOOTERS via pyarrow — O(KB of metadata), zero
-    data scanned; this is how every real writer collects skipping
-    stats (Delta's add.stats, Iceberg's manifest bounds). A column
-    with any missing/statless row group is dropped from the result —
-    absent stats mean "cannot prune", never "prune wrongly"."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    dead: set[str] = set()
-    want = set(cols)
-    for f in sorted(_glob.glob(os.path.join(data_dir, "*.parquet"))):
-        md = pq.ParquetFile(f).metadata
-        seen_here: set[str] = set()
-        for rg in range(md.num_row_groups):
-            for i in range(md.num_columns):
-                c = md.row_group(rg).column(i)
-                name = c.path_in_schema
-                if name not in want or name in dead:
-                    continue
-                st = c.statistics
-                if (
-                    st is None
-                    or not st.has_min_max
-                    # stats ride the JSON log: only JSON-native,
-                    # totally-ordered types prune
-                    or not isinstance(st.min, (int, float, str))
-                    or isinstance(st.min, bool)
-                ):
-                    dead.add(name)
-                    continue
-                seen_here.add(name)
-                if name not in mins or st.min < mins[name]:
-                    mins[name] = st.min
-                if name not in maxs or st.max > maxs[name]:
-                    maxs[name] = st.max
-        dead |= want - seen_here - dead  # column absent from this file
-    return {
-        c: [mins[c], maxs[c]] for c in cols if c in mins and c not in dead
-    }
 
 
 class _NameMapping(dict):
@@ -517,10 +464,10 @@ def _assemble_groups(
     mapping: dict[str, str] | None = None,
 ) -> DataFrame:
     """Build a scan DataFrame from (path, partitionValues) pairs — the
-    shared core of ``TxnLogTable`` and ``DeltaLogTable`` partitioned
-    reads. Unpartitioned: one pinned multi-path parquet read.
-    Partitioned: the partition columns' values exist ONLY in the log
-    (neither format writes them into the parquet files), so files
+    core of ``DeltaLogTable``'s partitioned reads. Unpartitioned: one
+    pinned multi-path parquet read. Partitioned: the partition
+    columns' values exist ONLY in the log (Delta never writes them
+    into the parquet files), so files
     group by their partition tuple, each group reads under the DATA
     schema (table schema minus partition columns) and gets its values
     attached as typed literals, then the groups union.
@@ -666,1737 +613,10 @@ def _bounds_prune(b: list, lo_v, hi_v) -> bool:
         return False
 
 
-def _ckpt_live_items(ckpt: dict):
-    """Checkpoint live-set items as (path, stats, partition_values) —
-    tolerating both earlier artifact shapes (list of paths; dict of
-    path → stats) alongside the current path → [stats, pv]."""
-    live = ckpt["live"]
-    if isinstance(live, list):
-        return [(p, None, None) for p in live]
-    out = []
-    for p, v in live.items():
-        if isinstance(v, list):
-            out.append((p, v[0], v[1]))
-        else:
-            out.append((p, v, None))
-    return out
-
-
-class TxnLogTable:
-    def __init__(self, path: str):
-        self.path = path
-        self.log_dir = os.path.join(path, "_log")
-        os.makedirs(self.log_dir, exist_ok=True)
-
-    # -- log primitives ------------------------------------------------
-
-    def latest_version(self) -> int:
-        """-1 when the table has no commits yet."""
-        versions = [
-            int(f[1:9])
-            for f in os.listdir(self.log_dir)
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(versions, default=-1)
-
-    def _commits(self, as_of: int | None = None, lo: int = 0) -> list[dict]:
-        out = []
-        for v in range(lo, self.latest_version() + 1):
-            if as_of is not None and v > as_of:
-                break
-            with open(os.path.join(self.log_dir, f"v{v:08d}.json")) as f:
-                out.append(json.load(f))
-        return out
-
-    # -- log checkpoints -------------------------------------------------
-
-    def _ckpt_path(self, version: int) -> str:
-        return os.path.join(self.log_dir, f"ckpt-v{version:08d}.json")
-
-    def _last_ckpt(self) -> dict | None:
-        ptr = os.path.join(self.log_dir, "_last_checkpoint")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            v = json.load(f)["version"]
-        with open(self._ckpt_path(v)) as f:
-            return json.load(f)
-
-    def write_checkpoint(self) -> int | None:
-        """Checkpoint the log: persist the FOLDED state (live path set
-        + per-app txn high-water marks) at the current latest version,
-        so readers replay O(commits since checkpoint) instead of
-        O(all commits) — the same reason Delta checkpoints every ~10
-        commits, and the piece that keeps the streaming sink's
-        per-micro-batch ``last_txn_version`` probe O(tail) over a
-        months-long ingest. Unlike Delta, the JSON log is NEVER
-        cleaned here, so time travel below the checkpoint still works
-        by full replay; the checkpoint is purely a read accelerator
-        and is itself built incrementally from the previous one.
-
-        Concurrency: the checkpoint at version v is a pure function of
-        commits 0..v, so two racers derive identical bytes — the
-        create-exclusive write lets the first win and the second
-        no-op; the pointer advances via atomic rename and only ever
-        forward. Returns the checkpointed version, or None when there
-        is nothing new to checkpoint."""
-        import glob as _glob
-        import time as _time
-
-        latest = self.latest_version()
-        if latest < 0:
-            return None
-        # reap tmp files a crashed checkpointer left mid-write — they
-        # are invisible to readers but accrete over a months-long
-        # ingest; >1h old means no live racer still holds them
-        for stale in _glob.glob(os.path.join(self.log_dir, "*.tmp.*")):
-            try:
-                if _time.time() - os.path.getmtime(stale) > 3600:
-                    os.unlink(stale)
-            except OSError:
-                pass  # racer reaped it first
-        prev = self._last_ckpt()
-        if prev is not None and prev["version"] >= latest:
-            return None
-        state: dict[str, tuple[str, dict | None, dict | None]] = {}
-        txn: dict[str, int] = {}
-        schema = None
-        parts: list[str] = []
-        lo = 0
-        if prev is not None:
-            for p, st, pv in _ckpt_live_items(prev):
-                state[p] = ("add", st, pv)
-            txn = dict(prev["txn"])
-            schema = prev.get("schema")
-            parts = prev.get("parts") or []
-            lo = prev["version"] + 1
-        for commit in self._commits(as_of=latest, lo=lo):
-            for a in commit["actions"]:
-                if a["action"] in ("add", "remove"):
-                    state[a["path"]] = (
-                        a["action"], a.get("stats"), a.get("partition_values"),
-                    )
-                elif a["action"] == "txn":
-                    k = a["app_id"]
-                    txn[k] = max(txn.get(k, -1), int(a["txn_version"]))
-                elif a["action"] == "metaData":
-                    schema = a["schema"]
-                    parts = a.get("partition_columns") or []
-        doc = {
-            "version": latest,
-            "schema": schema,
-            "parts": parts,
-            # stats and partition values ride the checkpoint too, so
-            # skipping/pruning survive the fold starting from it
-            "live": {
-                p: [st, pv]
-                for p, (act, st, pv) in sorted(state.items())
-                if act == "add"
-            },
-            "txn": txn,
-        }
-        # tmp + atomic rename, NOT create-exclusive: a racer crashed
-        # (or still streaming) mid-write must never leave a torn file
-        # that the pointer then blesses — replace is atomic and both
-        # racers derive identical bytes from the same log prefix
-        target_path = self._ckpt_path(latest)
-        tmp_ck = target_path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp_ck, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp_ck, target_path)
-        ptr = os.path.join(self.log_dir, "_last_checkpoint")
-        cur = self._last_ckpt()
-        if cur is None or cur["version"] < latest:
-            tmp = ptr + f".tmp.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump({"version": latest}, f)
-            os.replace(tmp, ptr)  # atomic pointer swing, forward only
-        return latest
-
-    def _live_state(
-        self, as_of: int | None = None
-    ) -> dict[str, tuple[dict | None, dict | None]]:
-        """The live fold, carrying each live path's skipping stats and
-        partition values (from the add action that made it live; None
-        = unprunable / unpartitioned). With a log checkpoint at or
-        below ``as_of``, starts from its folded state and replays only
-        the tail; below the checkpoint the full retained log replays
-        (time travel never breaks on checkpointing alone — only VACUUM
-        retires versions)."""
-        ckpt = self._last_ckpt()
-        state: dict[str, tuple[str, dict | None, dict | None]] = {}
-        lo = 0
-        if ckpt is not None and (as_of is None or as_of >= ckpt["version"]):
-            for p, st, pv in _ckpt_live_items(ckpt):
-                state[p] = ("add", st, pv)
-            lo = ckpt["version"] + 1
-        for commit in self._commits(as_of, lo=lo):
-            for a in commit["actions"]:
-                if a["action"] in ("add", "remove"):
-                    state[a["path"]] = (
-                        a["action"], a.get("stats"), a.get("partition_values"),
-                    )
-        return {
-            p: (st, pv)
-            for p, (act, st, pv) in sorted(state.items())
-            if act == "add"
-        }
-
-    def _live_pruned(
-        self,
-        as_of: int | None = None,
-        skip: list[tuple] | None = None,
-    ) -> dict[str, tuple[dict | None, dict | None]]:
-        """``_live_state`` with the two log-level pruning tiers
-        applied (see ``_prune_state``)."""
-        return self._prune_state(self._live_state(as_of), skip)
-
-    @staticmethod
-    def _prune_state(
-        state: dict[str, tuple[dict | None, dict | None]],
-        skip: list[tuple] | None,
-    ) -> dict[str, tuple[dict | None, dict | None]]:
-        """The two log-level pruning tiers over an ALREADY-FOLDED live
-        state (so callers holding one never refold the log), coarse
-        first: a directory drops when its PARTITION VALUE for a skip
-        column proves the range misses (hive-style partition pruning —
-        O(1) per directory, no stats needed), else when its recorded
-        per-column [min, max] misses. Directories without either for a
-        column are kept — absent metadata means "cannot prune", never
-        "prune wrongly"."""
-        if not skip:
-            return state
-        out: dict[str, tuple[dict | None, dict | None]] = {}
-        for p, (st, pv) in state.items():
-            keep = True
-            for col, lo_v, hi_v in skip:
-                if _pv_prunes(pv, col, lo_v, hi_v):
-                    keep = False
-                    break
-                bounds = (st or {}).get(col)
-                if bounds is not None and _bounds_prune(
-                    bounds, lo_v, hi_v
-                ):
-                    keep = False
-                    break
-            if keep:
-                out[p] = (st, pv)
-        return out
-
-    def live_paths(
-        self,
-        as_of: int | None = None,
-        skip: list[tuple] | None = None,
-    ) -> list[str]:
-        """Fold the action log: a path is live iff its latest action
-        at or before ``as_of`` is an add. Non-file actions (``txn``
-        markers from idempotent streaming commits) are metadata and
-        don't participate in the fold — same as Delta's reader.
-
-        ``skip`` = [(col, lo, hi), …] applies log-level pruning in two
-        tiers: PARTITION VALUES first (Delta's partitionValues —
-        hive-style directory pruning, the coarsest and cheapest), then
-        DATA SKIPPING on recorded [min, max] stats (Delta's add.stats /
-        Iceberg's manifest bounds). Directories without metadata for a
-        column are kept — absent stats mean "cannot prune", never
-        "prune wrongly". Pruning is pure driver-side metadata; combined
-        with a Z-ordered OPTIMIZE (whose per-file directories carry
-        footer stats on the clustering columns) a point-range filter
-        opens a small fraction of the files before Spark reads a byte."""
-        return sorted(self._live_pruned(as_of, skip))
-
-    def last_txn_version(self, app_id: str) -> int:
-        """Highest ``txn_version`` any commit recorded for ``app_id``
-        (-1 when none) — the idempotence high-water mark of Delta's
-        transaction-identifier protocol. Read once per streaming
-        micro-batch, so with a log checkpoint it folds the checkpoint's
-        high-water mark + the tail only (O(commits since checkpoint),
-        not O(all commits))."""
-        ckpt = self._last_ckpt()
-        latest = -1
-        lo = 0
-        if ckpt is not None:
-            latest = int(ckpt["txn"].get(app_id, -1))
-            lo = ckpt["version"] + 1
-        for commit in self._commits(lo=lo):
-            for a in commit["actions"]:
-                if a.get("action") == "txn" and a.get("app_id") == app_id:
-                    latest = max(latest, int(a["txn_version"]))
-        return latest
-
-    def _publish(self, version: int, actions: list[dict]) -> None:
-        """Create-exclusive publish of one commit file. 'x' mode is the
-        atomicity primitive: two racers targeting the same version get
-        exactly one winner (FileExistsError -> ConcurrentWriteError)."""
-        doc = json.dumps({"version": version, "actions": actions})
-        target = os.path.join(self.log_dir, f"v{version:08d}.json")
-        try:
-            with open(target, "x") as f:
-                f.write(doc)
-        except FileExistsError as exc:
-            raise ConcurrentWriteError(
-                f"version {version} already committed by another writer — "
-                "rebase on the new snapshot and retry"
-            ) from exc
-
-    # -- transactions --------------------------------------------------
-
-    def _stage(self, df: DataFrame) -> list[str]:
-        """Write the batch as an immutable data directory; returns the
-        staged paths. Staging is outside the commit: uncommitted data
-        is invisible to every reader by construction."""
-        dest = os.path.join(self.path, "data", uuid.uuid4().hex)
-        df.write.mode("errorifexists").parquet(dest)
-        return [dest]
-
-    def _stage_split(self, df: DataFrame) -> list[str]:
-        """Stage with ONE directory per output parquet file, so each
-        add action (and its skipping stats) is file-grain — the shape
-        a clustered OPTIMIZE needs: per-file stats are what make a
-        Z-ordered layout prunable; directory-grain stats over all the
-        files would span the whole key range again."""
-        import shutil
-
-        tmp = os.path.join(self.path, "data", "_stage_" + uuid.uuid4().hex)
-        df.write.mode("errorifexists").parquet(tmp)
-        dirs = []
-        for f in sorted(os.listdir(tmp)):
-            if not f.endswith(".parquet"):
-                continue
-            d = os.path.join(self.path, "data", uuid.uuid4().hex)
-            os.makedirs(d)
-            os.replace(os.path.join(tmp, f), os.path.join(d, f))
-            dirs.append(d)
-        shutil.rmtree(tmp)
-        return dirs
-
-    def _stage_hive(
-        self, df: DataFrame, part_cols: list[str]
-    ) -> list[tuple[str, dict]]:
-        """Stage a PARTITIONED batch: hive-layout write (`partitionBy`
-        drops the partition columns from the files — their values
-        live in the returned pv dicts, which the add actions record;
-        the log is authoritative, so the final directory names don't
-        need to stay hive-style), one immutable data directory per
-        leaf partition. Returns [(directory, {col: string-value})] —
-        None for the hive null marker."""
-        import shutil
-
-        tmp = os.path.join(self.path, "data", "_stage_" + uuid.uuid4().hex)
-        df.write.mode("errorifexists").partitionBy(*part_cols).parquet(tmp)
-        staged: list[tuple[str, dict]] = []
-        for dirpath, _dirs, files in os.walk(tmp):
-            if not any(f.endswith(".parquet") for f in files):
-                continue
-            pv = _hive_partition_values(os.path.relpath(dirpath, tmp))
-            d = os.path.join(self.path, "data", uuid.uuid4().hex)
-            os.makedirs(d)
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    os.replace(os.path.join(dirpath, f), os.path.join(d, f))
-            staged.append((d, pv))
-        shutil.rmtree(tmp)
-        return staged
-
-    def _stage_any(
-        self, df: DataFrame, part_cols: list[str]
-    ) -> list[tuple[str, dict]]:
-        """(directory, partition_values) staging — hive-split when the
-        table is partitioned, one flat directory otherwise."""
-        if part_cols:
-            return self._stage_hive(df, part_cols)
-        return [(p, {}) for p in self._stage(df)]
-
-    @staticmethod
-    def _unstage(staged: list[tuple[str, dict]]) -> None:
-        """Remove staged-but-never-published data directories (a gate
-        refusal after staging, or an idempotent no-op discovered late):
-        the log never references them, and VACUUM's log-candidates rule
-        would otherwise leak them forever."""
-        import shutil
-
-        for d, _pv in staged:
-            shutil.rmtree(d, ignore_errors=True)
-
-    @staticmethod
-    def _add_action(
-        path: str,
-        stats_cols: list[str] | None,
-        pv: dict | None = None,
-        **extra,
-    ) -> dict:
-        a = {"action": "add", "path": path, **extra}
-        if pv:
-            a["partition_values"] = pv
-        if stats_cols:
-            stats = _footer_stats(path, list(stats_cols))
-            if stats:
-                a["stats"] = stats
-        return a
-
-    def _meta_at(
-        self, as_of: int | None = None
-    ) -> tuple[str | None, list[str]]:
-        """(table schema JSON, partition columns) at ``as_of`` — the
-        latest ``metaData`` action at or before it, checkpoint-aware,
-        memoized (the log is append-only and never cleaned, so
-        (head, as_of) fully determines the answer)."""
-        key = (self.latest_version(), as_of)
-        cache = getattr(self, "_schema_memo", None)
-        if cache is None:
-            cache = self._schema_memo = {}
-        if key in cache:
-            return cache[key]
-        ckpt = self._last_ckpt()
-        schema = None
-        parts: list[str] = []
-        lo = 0
-        if (
-            ckpt is not None
-            and (as_of is None or as_of >= ckpt["version"])
-        ):
-            schema = ckpt.get("schema")
-            parts = ckpt.get("parts") or []
-            lo = ckpt["version"] + 1
-        for commit in self._commits(as_of, lo=lo):
-            for a in commit["actions"]:
-                if a["action"] == "metaData":
-                    schema = a["schema"]
-                    parts = a.get("partition_columns") or []
-        cache[key] = (schema, parts)
-        return schema, parts
-
-    def table_schema(self, as_of: int | None = None) -> str | None:
-        """The TABLE schema (StructType.json()) at ``as_of``. None on
-        pre-schema-tracking tables (reads fall back to whatever
-        parquet footer Spark samples — the legacy behavior)."""
-        return self._meta_at(as_of)[0]
-
-    def partition_columns(self, as_of: int | None = None) -> list[str]:
-        """The table's partition columns at ``as_of`` — hive-style:
-        their VALUES live in add actions' ``partition_values``, never
-        in the parquet files; reads synthesize them back."""
-        return self._meta_at(as_of)[1]
-
-    def _schema_actions(
-        self,
-        df: DataFrame,
-        evolve_schema: bool,
-        partition_by: list[str] | tuple = (),
-    ) -> list[dict]:
-        """The ``metaData`` action (if any) an incoming batch needs —
-        and the gate: Delta's writer contract. A first write records
-        the schema; an identical schema records nothing; a DRIFTED
-        schema refuses unless ``evolve_schema=True`` AND the change is
-        purely additive (every existing column present, same type) —
-        reads then surface nulls for the new columns in old files.
-        Without this gate, multi-schema parquet reads resolve to
-        whichever file's footer Spark samples — nondeterministic.
-
-        The PARTITION SPEC is pinned alongside: an append whose
-        ``partition_by`` differs from the table's refuses (changing it
-        scrambles which values live in the log vs the files — only a
-        full OVERWRITE may re-partition, as in Delta)."""
-        new = df.schema.json()
-        new_parts = list(partition_by)
-        cur, cur_parts = self._meta_at()
-        meta = {"action": "metaData", "schema": new}
-        if new_parts:
-            meta["partition_columns"] = new_parts
-        if cur is None:
-            return [meta]
-        if cur_parts != new_parts:
-            raise SchemaEvolutionError(
-                f"append partition spec {new_parts} differs from the "
-                f"table's {cur_parts} — the partition layout is pinned; "
-                "use overwrite() to re-partition the table"
-            )
-        old_f, new_f = _schema_fields(cur), _schema_fields(new)
-        if old_f == new_f and list(old_f) == list(new_f):
-            # identical names+types (possibly differing only in
-            # nullability / StructField metadata): not drift, and no
-            # new metaData — the first recording's flags keep governing
-            return []
-        missing = [c for c in old_f if c not in new_f]
-        retyped = [
-            c for c in old_f if c in new_f and new_f[c] != old_f[c]
-        ]
-        if missing or retyped or not evolve_schema:
-            raise SchemaEvolutionError(
-                f"batch schema drifted from the table's (missing="
-                f"{missing}, retyped={retyped}, added="
-                f"{[c for c in new_f if c not in old_f]}); only "
-                "ADDITIVE evolution is supported, and it must be "
-                "opted into with evolve_schema=True"
-            )
-        return [meta]
-
-    def append(
-        self,
-        df: DataFrame,
-        expected_version: int | None = None,
-        stats_cols: list[str] | None = None,
-        evolve_schema: bool = False,
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """APPEND commit: stage files, publish adds. Returns the new
-        version. ``expected_version`` pins the optimistic check (the
-        read-snapshot the writer based itself on); default = whatever
-        is latest at publish time + 1 (blind append — always safe for
-        adds-only commits). ``stats_cols`` records per-column
-        [min, max] skipping stats in the add action, read from the
-        staged parquet FOOTERS — O(KB of metadata), no data scanned.
-        ``evolve_schema`` admits an ADDITIVE schema change, recorded
-        as a ``metaData`` action in the same commit (see
-        ``_schema_actions``); drift without it refuses.
-
-        ``partition_by`` makes the table HIVE-PARTITIONED: one data
-        directory per partition value, the value recorded in the add
-        action's ``partition_values`` (never in the parquet files —
-        reads synthesize the column back), prunable via ``skip`` with
-        zero stats. Default None INHERITS the table's recorded spec,
-        so appends to a partitioned table stay partitioned without
-        restating it; a differing explicit spec refuses."""
-        parts = (
-            list(partition_by)
-            if partition_by is not None
-            else self.partition_columns()
-        )
-        self._schema_actions(df, evolve_schema, parts)  # pre-stage gate:
-        # a refused batch must not leave orphaned data dirs behind
-        staged = self._stage_any(df, parts)
-        adds = [self._add_action(p, stats_cols, pv) for p, pv in staged]
-        try:
-            if expected_version is not None:
-                # pinned: the caller read a snapshot, demands this slot
-                meta = self._schema_actions(df, evolve_schema, parts)
-                self._publish(expected_version, meta + adds)
-                return expected_version
-            # blind append: adds-only commits never logically conflict,
-            # so retry one version up on a lost race — the docstring's
-            # "always safe" promise. ORDERING is the correctness core:
-            # the slot resolves FIRST, the gate runs at-or-after it, so
-            # any racer landing after the slot read collides at publish
-            # and forces a retry with a fresh gate. Gating before the
-            # slot read would let a racer who took a DIFFERENT slot (no
-            # collision) have its evolution silently reverted by our
-            # stale metaData.
-            for _ in range(8):
-                version = self.latest_version() + 1
-                meta = self._schema_actions(df, evolve_schema, parts)
-                try:
-                    self._publish(version, meta + adds)
-                    return version
-                except ConcurrentWriteError:
-                    continue
-            raise ConcurrentWriteError(
-                "append lost 8 publish races — table is under "
-                "pathological write contention"
-            )
-        except (SchemaEvolutionError, ConcurrentWriteError):
-            # either way the staged files were never referenced by a
-            # published commit — leaving them would leak forever under
-            # vacuum's log-candidates rule
-            self._unstage(staged)
-            raise
-
-    def append_txn(
-        self,
-        df: DataFrame,
-        app_id: str,
-        txn_version: int,
-        max_retries: int = 8,
-        evolve_schema: bool = False,
-    ) -> int | None:
-        """Idempotent APPEND — Delta's transaction-identifier protocol
-        (a ``txn`` action carrying (appId, version) rides in the same
-        commit as the adds, so data and the idempotence marker are
-        admitted ATOMICALLY or not at all). This is what makes a
-        Structured Streaming ``foreachBatch`` sink exactly-once: the
-        engine guarantees at-least-once batch delivery with a stable
-        ``batch_id``; passing that id as ``txn_version`` makes the
-        redelivered batch a no-op (returns None), because the log
-        already carries a txn marker at or past it.
-
-        Concurrency: adds-only commits never conflict logically, so a
-        lost publish race (another writer took our version slot) is
-        resolved by re-checking the idempotence mark and retrying one
-        version up — no restaging, the data files are already
-        immutable. ``max_retries`` bounds pathological contention
-        loudly instead of spinning.
-        """
-        base = self.latest_version()
-        if txn_version <= self.last_txn_version(app_id):
-            return None
-        parts = self.partition_columns()  # sink inherits the table spec
-        # the streaming sink is exactly where schema drift arrives over
-        # months — it must pass the SAME gate as append, or a drifted
-        # micro-batch would commit ungoverned into a pinned table and
-        # the next OPTIMIZE would rewrite it under the stale schema.
-        # Gate BEFORE staging: a refused batch should not pay (or leak)
-        # a distributed parquet write.
-        meta = self._schema_actions(df, evolve_schema, parts)
-        staged = self._stage_any(df, parts)
-        tail = [self._add_action(p, None, pv) for p, pv in staged] + [
-            {"action": "txn", "app_id": app_id, "txn_version": txn_version}
-        ]
-        try:
-            for _ in range(max_retries):
-                version = self.latest_version() + 1
-                if version != base + 1:
-                    # the log advanced past the validated state WITHOUT
-                    # a slot collision (the racer took its own slot):
-                    # it may have been OUR zombie twin — re-checking
-                    # the mark only after a LOST race would commit the
-                    # batch twice — or an evolver whose metaData our
-                    # stale gate result would silently revert
-                    if txn_version <= self.last_txn_version(app_id):
-                        self._unstage(staged)
-                        return None
-                    meta = self._schema_actions(df, evolve_schema, parts)
-                    base = version - 1
-                try:
-                    self._publish(version, meta + tail)
-                    return version
-                except ConcurrentWriteError:
-                    # a racer took the slot — the next loop iteration
-                    # sees the advanced head and re-checks mark + gate
-                    continue
-            # exhausted: the FINAL slot's winner may have been our
-            # own redelivered twin, which makes this a committed no-op,
-            # not a failure — re-check the mark before raising (the
-            # in-loop check runs at iteration top, so the last lost
-            # race would otherwise exit unchecked and kill a streaming
-            # query whose batch is durably committed)
-            if txn_version <= self.last_txn_version(app_id):
-                self._unstage(staged)
-                return None
-            raise ConcurrentWriteError(
-                f"append_txn({app_id}, {txn_version}) lost {max_retries} "
-                "publish races — table is under pathological write "
-                "contention"
-            )
-        except (SchemaEvolutionError, ConcurrentWriteError):
-            self._unstage(staged)
-            raise
-
-    def overwrite(
-        self,
-        df: DataFrame,
-        expected_version: int,
-        extra_actions: list[dict] | tuple = (),
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """OVERWRITE commit: tombstone every live file of the snapshot
-        this writer read, add the replacement. ``expected_version`` is
-        REQUIRED — an overwrite that raced an append would silently
-        drop the append's rows, so the version check is the
-        correctness gate, not a nicety. ``extra_actions`` ride in the
-        same atomic commit (how ``overwrite_txn`` attaches its
-        idempotence marker). OVERWRITE replaces content wholesale, so
-        both the schema AND the partition spec may change here (and
-        only here); ``partition_by=None`` inherits the current spec."""
-        current = self.latest_version()
-        if expected_version != current + 1:
-            raise ConcurrentWriteError(
-                f"overwrite based on version {expected_version - 1} but "
-                f"table is at {current} — rebase and retry"
-            )
-        parts = (
-            list(partition_by)
-            if partition_by is not None
-            else self.partition_columns()
-        )
-        removes = [
-            {"action": "remove", "path": p} for p in self.live_paths()
-        ]
-        new_schema = df.schema.json()
-        cur_schema, cur_parts = self._meta_at()
-        meta: list[dict] = []
-        if cur_schema != new_schema or cur_parts != parts:
-            m = {"action": "metaData", "schema": new_schema}
-            if parts:
-                m["partition_columns"] = parts
-            meta = [m]
-        staged = self._stage_any(df, parts)
-        try:
-            self._publish(
-                expected_version,
-                meta
-                + removes
-                + [self._add_action(p, None, pv) for p, pv in staged]
-                + list(extra_actions),
-            )
-        except ConcurrentWriteError:
-            # the error tells the caller to rebase and retry — the
-            # staged files must not leak while they do (vacuum's
-            # log-candidates rule never reclaims unreferenced files)
-            self._unstage(staged)
-            raise
-        return expected_version
-
-    def overwrite_txn(
-        self,
-        df: DataFrame,
-        app_id: str,
-        txn_version: int,
-        expected_version: int,
-    ) -> int | None:
-        """Idempotent OVERWRITE — ``append_txn``'s REPLACE twin: the
-        new content, the tombstones for the old, and the ``txn``
-        idempotence marker ride in ONE atomic commit. A redelivered
-        (app_id, txn_version) no-ops; a stale base loses to
-        ``ConcurrentWriteError`` like any overwrite. This is the
-        primitive a complete-mode / state-replacing consumer needs
-        (e.g. a materialized view whose refresh watermark must commit
-        atomically WITH the refreshed state — crash between the two
-        can then never desync them)."""
-        if txn_version <= self.last_txn_version(app_id):
-            return None
-        return self.overwrite(
-            df,
-            expected_version,
-            extra_actions=[
-                {"action": "txn", "app_id": app_id, "txn_version": txn_version}
-            ],
-        )
-
-    def evolve_add_column(
-        self, name: str, ddl_type: str, max_retries: int = 8
-    ) -> int:
-        """ADDITIVE schema evolution as a METADATA-ONLY commit — the
-        transactional `ALTER TABLE … ADD COLUMN` (no data rewrite:
-        every read pins the table schema, so existing files surface
-        NULL for the new column). The same additive-only rule as the
-        append gate; a racer's commit forces a re-read + retry."""
-        from pyspark.sql.types import StructType
-
-        for _ in range(max_retries):
-            # pin the head FIRST, derive the schema AT that version,
-            # and publish at head+1 — reading the schema and then
-            # re-reading the head separately opens a lost-update
-            # window where a racer's commit lands between the two
-            # reads and its metadata silently vanishes under ours
-            # (our publish slot would be free, so no retry fires)
-            head = self.latest_version()
-            cur, parts = self._meta_at(head if head >= 0 else None)
-            if cur is None:
-                raise ValueError(
-                    "ALTER on a pre-schema-tracking table — record a "
-                    "schema first (any append does)"
-                )
-            st = StructType.fromJson(json.loads(cur))
-            if name in [f.name for f in st.fields]:
-                raise ValueError(
-                    f"ALTER TABLE: column {name!r} already exists"
-                )
-            widened = StructType(
-                st.fields + list(StructType.fromDDL(f"{name} {ddl_type}"))
-            )
-            meta = {"action": "metaData", "schema": widened.json()}
-            if parts:
-                meta["partition_columns"] = parts
-            version = head + 1
-            try:
-                self._publish(version, [meta])
-                return version
-            except ConcurrentWriteError:
-                continue  # racer took the slot: re-derive off its head
-        raise ConcurrentWriteError(
-            f"evolve_add_column lost {max_retries} publish races — "
-            "table is under pathological write contention"
-        )
-
-    # -- copy-on-write row mutation ---------------------------------------
-
-    @staticmethod
-    def _local_path(uri: str) -> str:
-        """``input_file_name()`` returns a file URI with URL-encoded
-        specials; commits record plain local paths — normalize."""
-        from urllib.parse import unquote, urlparse
-
-        if "://" in uri or uri.startswith("file:"):
-            return unquote(urlparse(uri).path)
-        return unquote(uri)
-
-    def _probe_affected(
-        self,
-        spark: SparkSession,
-        state: dict[str, tuple[dict | None, dict | None]],
-        predicate: str,
-        skip: list[tuple] | None,
-    ) -> tuple[dict[str, int], int]:
-        """Which live directories contain rows matching ``predicate``,
-        and how many — ONE distributed scan with the predicate pushed
-        into the parquet reader (row groups whose footer stats miss
-        the range are skipped before a byte of data decodes — the
-        executor-side twin of the log-level ``skip`` pruning, which
-        the caller may ALSO pass to bound the probe's file list
-        driver-side, partition values included). Partition columns
-        synthesize into the probe, so predicates over them work.
-        Returns ({directory: match count}, total)."""
-        probed = self._prune_state(state, skip)
-        if not probed:
-            return {}, 0  # skip pruned every directory: nothing matches
-        df = self._scan_adds(
-            spark, [(p, pv) for p, (_st, pv) in probed.items()]
-        )
-        rows = (
-            df.where(F.expr(predicate))
-            .groupBy(F.input_file_name().alias("__file"))
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        by_dir: dict[str, int] = {}
-        for r in rows:
-            fp = self._local_path(r["__file"])
-            d = next(
-                (p for p in state if fp.startswith(p + os.sep)), None
-            )
-            if d is None:
-                raise RuntimeError(
-                    f"probe returned file {fp} outside every live "
-                    "directory — concurrent vacuum mid-probe?"
-                )
-            by_dir[d] = by_dir.get(d, 0) + int(r["__n"])
-        return by_dir, sum(by_dir.values())
-
-    @staticmethod
-    def _dir_row_count(d: str) -> int:
-        """Total rows under a data directory, from parquet footers —
-        O(KB of metadata), distinguishes fully-matching directories
-        (droppable without a rewrite) from partial ones."""
-        import glob as _glob
-
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in _glob.glob(os.path.join(d, "*.parquet"))
-        )
-
-    def _commit_cow(
-        self,
-        removed: list[str],
-        staged: list[tuple[str, dict]],
-        stats_cols: list[str] | None,
-        max_retries: int,
-        op: str,
-    ) -> int:
-        """Publish a copy-on-write rewrite: remove(affected) +
-        add(rewritten), all data-changing, under OPTIMIZE's conflict
-        matrix — a concurrent APPEND commutes (it added directories
-        this rewrite never read; retry one slot up), a concurrent
-        removal of one of our inputs aborts (publishing would
-        resurrect rows the racer replaced, or double-delete).
-
-        The commit records its OPERATION in an ``info`` action — every
-        fold ignores unknown action kinds, but the row-level change
-        feed (``changes_cdf``) uses it to label an update's diff rows
-        update_preimage/update_postimage instead of delete/insert."""
-        actions = [{"action": "info", "op": op}] + [
-            {"action": "remove", "path": p} for p in removed
-        ] + [self._add_action(p, stats_cols, pv) for p, pv in staged]
-        for _ in range(max_retries):
-            # pin the head FIRST and validate liveness AT it, so any
-            # racer landing after the check collides on head+1 and
-            # forces this re-validation — checking at one head and
-            # deriving the slot from a LATER latest_version() read
-            # lets a remove slip between the two and publish cleanly
-            head = self.latest_version()
-            live_now = set(self.live_paths(as_of=head))
-            gone = [p for p in removed if p not in live_now]
-            if gone:
-                # abort path: the staged rewrites were never referenced
-                # by a published commit — leaving them would leak
-                # forever under vacuum's log-candidates rule (the same
-                # unstage-on-refusal rule append already follows)
-                self._unstage(staged)
-                raise ConcurrentWriteError(
-                    f"{op} inputs {gone} were removed by a concurrent "
-                    "writer — committing would resurrect or double-"
-                    f"mutate replaced data; rerun {op} on the new snapshot"
-                )
-            version = head + 1
-            try:
-                self._publish(version, actions)
-                return version
-            except ConcurrentWriteError:
-                continue
-        self._unstage(staged)
-        raise ConcurrentWriteError(
-            f"{op} lost {max_retries} publish races — table is under "
-            "pathological write contention"
-        )
-
-    def delete(
-        self,
-        spark: SparkSession,
-        predicate: str,
-        skip: list[tuple] | None = None,
-        stats_cols: list[str] | None = None,
-        max_retries: int = 8,
-    ) -> dict:
-        """Row-level ``DELETE FROM … WHERE predicate`` as COPY-ON-WRITE
-        — Delta's model: identify the files that contain matching rows,
-        rewrite ONLY those minus the matches, and commit remove+add
-        atomically (data-changing, so incremental consumers get the
-        loud rebuild signal instead of silently missing the deletion).
-        Untouched files keep their original add entries — on a 100 TB
-        table a selective delete rewrites the few files the predicate
-        reaches, never the table.
-
-        Three file classes fall out of one probe scan + footer counts:
-        no match → untouched; ALL rows match → pure remove (no rewrite
-        I/O at all); partial → rewritten keeping rows where the
-        predicate is not TRUE (NULL keeps the row — SQL DELETE
-        semantics). Returns {"version", "rows_deleted",
-        "files_removed", "files_rewritten"}; a predicate matching
-        nothing commits nothing (version None).
-        """
-        if self.latest_version() < 0:
-            raise ValueError(
-                f"txnlog table {self.path} has no commits to delete from"
-            )
-        state = self._live_state()
-        by_dir, matched = (
-            self._probe_affected(spark, state, predicate, skip)
-            if state
-            else ({}, 0)  # legal-empty table: DELETE is a no-op, as in SQL
-        )
-        if not matched:
-            return {"version": None, "rows_deleted": 0,
-                    "files_removed": 0, "files_rewritten": 0}
-        full = [d for d, n in by_dir.items() if n == self._dir_row_count(d)]
-        partial = sorted(set(by_dir) - set(full))
-        staged: list[tuple[str, dict]] = []
-        if partial:
-            keep = self._scan_adds(
-                spark, [(p, state[p][1]) for p in partial]
-            ).where(
-                ~F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-            )
-            staged = self._stage_any(keep, self.partition_columns())
-        version = self._commit_cow(
-            sorted(by_dir), staged, stats_cols, max_retries, "delete"
-        )
-        return {
-            "version": version,
-            "rows_deleted": matched,
-            "files_removed": len(by_dir),
-            "files_rewritten": len(partial),
-        }
-
-    def update(
-        self,
-        spark: SparkSession,
-        assignments: dict[str, str],
-        predicate: str | None = None,
-        skip: list[tuple] | None = None,
-        stats_cols: list[str] | None = None,
-        max_retries: int = 8,
-    ) -> dict:
-        """Row-level ``UPDATE … SET col = expr WHERE predicate`` as
-        COPY-ON-WRITE: the same affected-file identification as
-        ``delete``, rewriting each matched file with a CASE per
-        assigned column (rows the predicate misses are carried through
-        BYTE-IDENTICAL in content); assigned expressions are cast back
-        to the column's declared type — an UPDATE never drifts the
-        table schema. Unmatched files keep their add entries."""
-        if self.latest_version() < 0:
-            raise ValueError(
-                f"txnlog table {self.path} has no commits to update"
-            )
-        state = self._live_state()
-        if not state:
-            # legal-empty table (everything deleted): no-op, as in SQL
-            return {"version": None, "rows_updated": 0,
-                    "files_rewritten": 0}
-        pred = predicate if predicate is not None else "TRUE"
-        schema_json, parts = self._meta_at()
-        if schema_json is not None:
-            known = set(_schema_fields(schema_json))
-            unknown = [c for c in assignments if c not in known]
-            if unknown:
-                raise ValueError(
-                    f"UPDATE assigns unknown column(s) {unknown} — the "
-                    "table schema is pinned; evolve it through append"
-                )
-        bad = [c for c in assignments if c in parts]
-        if bad:
-            raise ValueError(
-                f"UPDATE assigns partition column(s) {bad} — moving rows "
-                "across partitions is an overwrite-shaped operation; "
-                "DELETE + append instead"
-            )
-        by_dir, matched = self._probe_affected(spark, state, pred, skip)
-        if not matched:
-            return {"version": None, "rows_updated": 0,
-                    "files_rewritten": 0}
-        affected = sorted(by_dir)
-        df = self._scan_adds(spark, [(p, state[p][1]) for p in affected])
-        cond = F.coalesce(F.expr(pred).cast("boolean"), F.lit(False))
-        out = df.select(
-            *[
-                F.when(cond, F.expr(assignments[c]))
-                .otherwise(F.col(c))
-                .cast(df.schema[c].dataType)
-                .alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-        staged = self._stage_any(out, parts)
-        version = self._commit_cow(
-            affected, staged, stats_cols, max_retries, "update"
-        )
-        return {
-            "version": version,
-            "rows_updated": matched,
-            "files_rewritten": len(affected),
-        }
-
-    def merge(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        cond: str,
-        assignments: dict[str, str] | None,
-        insert_exprs: list[str] | None,
-        target_alias: str = "t",
-        source_alias: str = "s",
-        skip: list[tuple] | None = None,
-        stats_cols: list[str] | None = None,
-        max_retries: int = 8,
-        delete_matched: bool = False,
-    ) -> dict:
-        """``MERGE INTO target USING source ON cond`` as ONE atomic
-        copy-on-write commit — the round-10 verdict's found defect was
-        MERGE on an ATTACHed table silently view-swapping; this is the
-        transactional fix. ``cond`` / SET expressions / INSERT
-        expressions are SQL text referencing ``target_alias`` /
-        ``source_alias`` qualified columns.
-
-        Shape (Delta's own MERGE plan, expressed on the file grain):
-
-        - WHEN MATCHED (``assignments``): ONE probe scan semi-joined
-          with the source identifies the files containing matched rows
-          (untouched files keep their add entries — at 100 TB a keyed
-          upsert rewrites the few files the keys reach, never the
-          table); those files rewrite through a left-outer join +
-          per-column CASE, cast back to the column's declared type.
-        - WHEN NOT MATCHED (``insert_exprs``): source LEFT ANTI join
-          the FULL live set (a source row matching any target row,
-          affected file or not, must not insert) projected into the
-          table schema.
-        - Both land in one remove(affected) + add(rewrites ∪ inserts)
-          commit under the COW conflict matrix (concurrent appends
-          commute; removal of an input aborts). Insert-only merges
-          commit adds-only — no probe, no rewrite I/O at all.
-
-        A target row matching MULTIPLE source rows is an ERROR (the
-        standard's and Delta's rule — duplicating rows inside a
-        transactional table is silent corruption). Detection is free:
-        a matched rewrite preserves row count by construction, so the
-        staged footers disagreeing with the input footers IS the
-        multi-match signal — checked before publish, unstaged on
-        refusal, zero extra Spark jobs.
-
-        ``delete_matched`` is the WHEN MATCHED THEN DELETE clause
-        (mutually exclusive with ``assignments``): matched rows DROP —
-        fully-matching files become pure removes (zero rewrite I/O,
-        like ``delete``), partial files rewrite through a LEFT ANTI
-        join, and multi-matching sources are harmless by construction
-        (dropping a row once or thrice is the same drop).
-
-        Returns {"version", "rows_matched", "rows_inserted",
-        "files_rewritten"}; a merge that matches nothing and inserts
-        nothing commits nothing (version None)."""
-        if self.latest_version() < 0:
-            raise ValueError(
-                f"txnlog table {self.path} has no commits to merge into"
-            )
-        if delete_matched and assignments:
-            raise ValueError(
-                "MERGE: WHEN MATCHED THEN DELETE and THEN UPDATE are "
-                "mutually exclusive in this dialect"
-            )
-        if not assignments and not delete_matched and insert_exprs is None:
-            raise ValueError(
-                "MERGE needs WHEN MATCHED THEN UPDATE assignments, "
-                "WHEN MATCHED THEN DELETE, and/or WHEN NOT MATCHED "
-                "THEN INSERT expressions"
-            )
-        state = self._live_state()
-        schema_json, parts = self._meta_at()
-        if assignments:
-            if schema_json is not None:
-                known = set(_schema_fields(schema_json))
-                unknown = [c for c in assignments if c not in known]
-                if unknown:
-                    raise ValueError(
-                        f"MERGE assigns unknown column(s) {unknown} — "
-                        "the table schema is pinned"
-                    )
-            bad = [c for c in assignments if c in parts]
-            if bad:
-                raise ValueError(
-                    f"MERGE assigns partition column(s) {bad} — moving "
-                    "rows across partitions is an overwrite-shaped "
-                    "operation; DELETE + append instead"
-                )
-        live = [(p, state[p][1]) for p in sorted(state)]
-        cond_col = F.expr(cond)
-        by_dir: dict[str, int] = {}
-        matched = 0
-        if (assignments or delete_matched) and state:
-            # ONE distributed probe: which files hold rows with ≥1
-            # source match, and how many such rows — the merge twin of
-            # _probe_affected (the predicate is join-existence, so the
-            # file id must ride WITH the scan through the semi join)
-            probed = self._prune_state(state, skip)
-            if probed:
-                tgt = self._scan_adds(
-                    spark, [(p, pv) for p, (_st, pv) in probed.items()]
-                ).withColumn("__file", F.input_file_name())
-                rows = (
-                    tgt.alias(target_alias)
-                    .join(source.alias(source_alias), cond_col, "left_semi")
-                    .groupBy("__file")
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .collect()
-                )
-                for r in rows:
-                    fp = self._local_path(r["__file"])
-                    d = next(
-                        (p for p in state if fp.startswith(p + os.sep)),
-                        None,
-                    )
-                    if d is None:
-                        raise RuntimeError(
-                            f"probe returned file {fp} outside every "
-                            "live directory — concurrent vacuum "
-                            "mid-probe?"
-                        )
-                    by_dir[d] = by_dir.get(d, 0) + int(r["__n"])
-                matched = sum(by_dir.values())
-        affected = sorted(by_dir)
-        staged: list[tuple[str, dict]] = []
-        rewritten = len(affected)
-        if affected and delete_matched:
-            # WHEN MATCHED THEN DELETE: same file classes as delete() —
-            # fully-matching dirs drop with zero rewrite I/O, partial
-            # dirs rewrite keeping only the UNMATCHED rows (left anti)
-            partial = [
-                d for d in affected
-                if by_dir[d] != self._dir_row_count(d)
-            ]
-            rewritten = len(partial)
-            if partial:
-                keep = (
-                    self._scan_adds(
-                        spark, [(p, state[p][1]) for p in partial]
-                    )
-                    .alias(target_alias)
-                    .join(source.alias(source_alias), cond_col, "left_anti")
-                )
-                staged = self._stage_any(keep, parts)
-        elif affected:
-            aff = self._scan_adds(
-                spark, [(p, state[p][1]) for p in affected]
-            )
-            rewrite_input_rows = sum(
-                self._dir_row_count(d) for d in affected
-            )
-            mark = "__merge_matched"
-            joined = aff.alias(target_alias).join(
-                source.withColumn(mark, F.lit(True)).alias(source_alias),
-                cond_col,
-                "left_outer",
-            )
-            hit = F.col(f"{source_alias}.{mark}").isNotNull()
-            out = joined.select(
-                *[
-                    F.when(hit, F.expr(assignments[c]))
-                    .otherwise(F.col(f"{target_alias}.{c}"))
-                    .cast(aff.schema[c].dataType)
-                    .alias(c)
-                    if c in assignments
-                    else F.col(f"{target_alias}.{c}").alias(c)
-                    for c in aff.columns
-                ]
-            )
-            staged = self._stage_any(out, parts)
-            staged_rows = sum(self._dir_row_count(d) for d, _pv in staged)
-            if staged_rows != rewrite_input_rows:
-                self._unstage(staged)
-                raise ValueError(
-                    f"MERGE: {staged_rows - rewrite_input_rows} target "
-                    "row(s) matched multiple source rows — the rewrite "
-                    "would duplicate them; deduplicate the source on "
-                    "the merge key first"
-                )
-        rows_inserted = 0
-        if insert_exprs is not None:
-            if state:
-                full = self._scan_adds(spark, live)
-                ins_src = source.alias(source_alias).join(
-                    full.alias(target_alias), cond_col, "left_anti"
-                )
-            else:
-                ins_src = source.alias(source_alias)
-            # insert rows take the TABLE's pinned shape: the recorded
-            # metaData schema when present (works on a legal-empty
-            # table too), else the live scan's resolved schema
-            if schema_json is not None:
-                from pyspark.sql.types import StructType
-
-                tbl_schema = StructType.fromJson(json.loads(schema_json))
-            elif state:
-                tbl_schema = self._scan_adds(spark, live).schema
-            else:
-                raise ValueError(
-                    "MERGE into an empty pre-schema table has no column "
-                    "shape to insert into — append a first batch instead"
-                )
-            cols = [(f.name, f.dataType) for f in tbl_schema.fields]
-            if len(insert_exprs) != len(cols):
-                # zip() would silently truncate: committing a narrower
-                # shape than the pinned schema surfaces NULLs for the
-                # dropped columns later — the same gate the delta and
-                # iceberg merge twins enforce. Unstage the matched
-                # rewrites first (never referenced by a commit — they
-                # would leak under vacuum's log-candidates rule).
-                self._unstage(staged)
-                raise ValueError(
-                    f"MERGE: INSERT VALUES has {len(insert_exprs)} "
-                    f"expressions for {len(cols)} target columns"
-                )
-            ins = ins_src.select(
-                *[
-                    F.expr(e).cast(t_).alias(c)
-                    for e, (c, t_) in zip(insert_exprs, cols)
-                ]
-            )
-            ins_staged = self._stage_any(ins, parts)
-            rows_inserted = sum(
-                self._dir_row_count(d) for d, _pv in ins_staged
-            )
-            if rows_inserted == 0:
-                # every source row matched: nothing to insert — drop
-                # the empty staging rather than commit empty files
-                self._unstage(ins_staged)
-            else:
-                staged = staged + ins_staged
-        if not affected and not staged:
-            return {"version": None, "rows_matched": 0,
-                    "rows_inserted": 0, "files_rewritten": 0}
-        version = self._commit_cow(
-            affected, staged, stats_cols, max_retries, "merge"
-        )
-        return {
-            "version": version,
-            "rows_matched": matched,
-            "rows_inserted": rows_inserted,
-            "files_rewritten": rewritten,
-        }
-
-    def changes(
-        self, spark: SparkSession, since: int, to: int | None = None
-    ) -> DataFrame | None:
-        """Rows ADDED to the table in versions (``since``, ``to``] —
-        the change feed an incremental consumer folds instead of
-        rescanning the table (Delta CDF's append-only core). Commits
-        flagged ``data_change: False`` (OPTIMIZE rewrites) are
-        SKIPPED: they rearrange bytes, not content. A data-changing
-        REMOVE in the window (an OVERWRITE) raises — this feed is
-        adds-only by contract, and the consumer must rebuild from the
-        snapshot. Returns None when the window adds nothing.
-
-        Scale shape: O(window commits) driver-side metadata + ONE
-        multi-path parquet read of just the new files — refresh cost
-        follows the delta, never the table."""
-        latest = self.latest_version()
-        hi = latest if to is None else to
-        if hi > latest:
-            raise ValueError(
-                f"change window ({since}, {hi}] extends past the log head "
-                f"{latest} — recording it as a watermark would silently "
-                "skip the commits that land there later"
-            )
-        adds: list[tuple[str, dict | None]] = []
-        for commit in self._commits(as_of=hi, lo=since + 1):
-            for a in commit["actions"]:
-                if not a.get("data_change", True):
-                    continue  # compaction traffic, content unchanged
-                if a["action"] == "remove":
-                    raise ValueError(
-                        f"version {commit['version']} removed data inside "
-                        f"the change window ({since}, {hi}] — the feed is "
-                        "adds-only; rebuild the consumer from the snapshot"
-                    )
-                if a["action"] == "add":
-                    adds.append((a["path"], a.get("partition_values")))
-        if not adds:
-            return None
-        gone = [p for p, _pv in adds if not os.path.isdir(p)]
-        if gone:
-            raise ValueError(
-                f"change window ({since}, {hi}] references data VACUUM "
-                f"already reclaimed ({gone[:3]}…) — consume within the "
-                "retention window, or rebuild from the snapshot"
-            )
-        return self._scan_adds(spark, adds, hi)
-
-    def changes_cdf(
-        self, spark: SparkSession, since: int, to: int | None = None
-    ) -> DataFrame | None:
-        """ROW-LEVEL change feed for versions (``since``, ``to``] —
-        Delta CDF's shape: the table columns plus ``_change_type``
-        (insert / delete / update_preimage / update_postimage) and
-        ``_commit_version``. Where ``changes`` (the adds-only fast
-        path) refuses any window containing a data-changing remove,
-        this feed RESOLVES it by diffing the removed files' content
-        against their rewrites — both immutable on disk until VACUUM:
-
-        - an adds-only commit emits its rows as ``insert`` (no diff,
-          no extra I/O — the fast path's plan);
-        - a copy-on-write commit emits removed∖added as deletes and
-          added∖removed as inserts (multiset EXCEPT ALL — carried-
-          through rows cancel, so the feed is O(CHANGED rows), not
-          O(rewritten rows)); commits recorded as UPDATEs label the
-          two sides update_preimage/update_postimage instead.
-
-        Scale shape: the diff reads exactly the files the COW commit
-        rewrote — cost bounded by I/O the commit already paid once —
-        and one hash-aggregate shuffle per mutating commit for the
-        EXCEPT ALL. Past VACUUM retention the removed bytes are gone
-        and the feed refuses loudly (Delta CDF's own contract);
-        rebuild the consumer from the snapshot instead. Returns None
-        when the window changes nothing."""
-        latest = self.latest_version()
-        hi = latest if to is None else to
-        if hi > latest:
-            raise ValueError(
-                f"change window ({since}, {hi}] extends past the log head "
-                f"{latest} — recording it as a watermark would silently "
-                "skip the commits that land there later"
-            )
-        # partition values of REMOVED dirs live on their original add
-        # actions — one driver-side walk of the retained prefix
-        pv_by_path: dict[str, dict | None] = {}
-        window: list[tuple[int, str | None, list, list]] = []
-        for commit in self._commits(as_of=hi):
-            adds, removes = [], []
-            op = next(
-                (a.get("op") for a in commit["actions"]
-                 if a["action"] == "info"),
-                None,
-            )
-            for a in commit["actions"]:
-                if a["action"] == "add":
-                    pv_by_path[a["path"]] = a.get("partition_values")
-                    if a.get("data_change", True):
-                        adds.append(a["path"])
-                elif a["action"] == "remove" and a.get("data_change", True):
-                    removes.append(a["path"])
-            if commit["version"] > since and (adds or removes):
-                window.append((commit["version"], op, adds, removes))
-        if not window:
-            return None
-        gone = sorted({
-            p
-            for _v, _op, adds, removes in window
-            for p in adds + removes
-            if not os.path.isdir(p)
-        })
-        if gone:
-            raise ValueError(
-                f"change window ({since}, {hi}] references data VACUUM "
-                f"already reclaimed ({gone[:3]}…) — row-level changes "
-                "need the removed bytes; consume within the retention "
-                "window, or rebuild the consumer from the snapshot"
-            )
-        F_ = F
-        frames: list[DataFrame] = []
-        for v, op, adds, removes in window:
-            add_pairs = [(p, pv_by_path.get(p)) for p in adds]
-            if not removes:
-                frames.append(
-                    self._scan_adds(spark, add_pairs, hi)
-                    .withColumn("_change_type", F_.lit("insert"))
-                    .withColumn("_commit_version", F_.lit(v).cast("long"))
-                )
-                continue
-            rem_pairs = [(p, pv_by_path.get(p)) for p in removes]
-            r_df = self._scan_adds(spark, rem_pairs, hi)
-            a_df = (
-                self._scan_adds(spark, add_pairs, hi)
-                if add_pairs
-                else r_df.limit(0)
-            )
-            pre, post = (
-                ("update_preimage", "update_postimage")
-                if op == "update"
-                else ("delete", "insert")
-            )
-            frames.append(
-                r_df.exceptAll(a_df)
-                .withColumn("_change_type", F_.lit(pre))
-                .withColumn("_commit_version", F_.lit(v).cast("long"))
-            )
-            frames.append(
-                a_df.exceptAll(r_df)
-                .withColumn("_change_type", F_.lit(post))
-                .withColumn("_commit_version", F_.lit(v).cast("long"))
-            )
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
-
-    def _window_has_dc_removes(self, since: int, to: int) -> bool:
-        """Driver-side probe: does (``since``, ``to``] contain a
-        data-changing remove? O(window commits) of KB metadata — lets
-        consumers pick the adds-only fast path vs the row-level feed
-        without running a Spark job."""
-        for commit in self._commits(as_of=to, lo=since + 1):
-            for a in commit["actions"]:
-                if a["action"] == "remove" and a.get("data_change", True):
-                    return True
-        return False
-
-    def optimize(
-        self,
-        spark: SparkSession,
-        target_files: int = 1,
-        min_inputs: int = 2,
-        max_retries: int = 8,
-        zorder_by: list[str] | None = None,
-        stats_cols: list[str] | None = None,
-    ) -> int | None:
-        """OPTIMIZE — transactional small-file compaction, the
-        maintenance pass every streaming-ingested table needs: the
-        exactly-once sink commits one data directory PER MICRO-BATCH,
-        so a long-running ingest accretes thousands of small files and
-        every snapshot scan pays per-file open cost. Compaction
-        rewrites the current live set into ``target_files`` coalesced
-        directories and commits remove(inputs) + add(compacted)
-        ATOMICALLY — content-preserving by construction (one
-        ``coalesce`` read-through, no shuffle, no row changes), and
-        time travel to pre-compaction versions still sees the old
-        layout until VACUUM reclaims it.
-
-        Concurrency follows Delta's OPTIMIZE conflict matrix:
-        - a concurrent APPEND never conflicts — it adds directories we
-          didn't read, compaction doesn't touch them; on a lost publish
-          race we re-check our inputs and retry one version up;
-        - a concurrent OVERWRITE (or anything that REMOVED one of our
-          inputs) aborts with ConcurrentWriteError — publishing would
-          resurrect replaced data under the new snapshot.
-
-        Returns the new version, or None when fewer than ``min_inputs``
-        live directories exist (nothing worth compacting — also what
-        makes back-to-back OPTIMIZE calls idempotent). Scale shape:
-        ONE distributed read→write of the live bytes (the unavoidable
-        cost of compaction) + O(commits) KB of driver-side metadata;
-        at cluster scale the same protocol runs per partition with a
-        size-based file picker instead of whole-snapshot coalesce.
-        """
-        state = self._live_state()
-        inputs = sorted(state)
-        if not inputs or (len(inputs) < min_inputs and not zorder_by):
-            return None
-        parts = self.partition_columns()
-        if parts and zorder_by:
-            raise NotImplementedError(
-                "OPTIMIZE ZORDER on a hive-partitioned table is not "
-                "supported — the partition layout already provides the "
-                "coarse clustering tier; re-cluster within a partition "
-                "by overwriting it"
-            )
-        # the rewrite MUST read with the table schema: a raw read
-        # samples one footer, and under additive evolution sampling an
-        # OLD file would silently drop the newer columns from the
-        # compacted files — data loss through maintenance. Partition
-        # columns synthesize back so the hive re-stage can re-split.
-        df = self._scan_adds(
-            spark, [(p, pv) for p, (_st, pv) in state.items()]
-        )
-        if zorder_by:
-            # OPTIMIZE ZORDER BY: re-CLUSTER, not just re-pack — also
-            # legitimate on a single input (min_inputs gates only the
-            # small-file path; clustering changes layout value even at
-            # one directory). Stats default to the clustering columns:
-            # that's the whole point of the layout.
-            if stats_cols is None:
-                stats_cols = zorder_by
-            df = _zorder_clustered(df, zorder_by, target_files)
-        elif parts:
-            # partitioned compaction: one shuffle keyed by the
-            # partition columns lands each partition value in exactly
-            # one task, so the hive re-stage emits ONE file per live
-            # partition (target_files is per-partition-moot here)
-            df = df.repartition(*[F.col(c) for c in parts])
-        else:
-            df = df.coalesce(max(target_files, 1))
-        # clustered rewrites stage FILE-grain directories so the stats
-        # (and therefore skipping) follow the narrow per-file spans
-        if parts:
-            staged = self._stage_hive(df, parts)
-        elif zorder_by and stats_cols:
-            staged = [(p, {}) for p in self._stage_split(df)]
-        else:
-            staged = [(p, {}) for p in self._stage(df)]
-        # data_change: False — compaction rearranges bytes, it never
-        # changes table CONTENT, so incremental consumers (``changes``,
-        # IncrementalAggView) can skip these commits entirely. Same
-        # flag, same reason as Delta's dataChange=false.
-        actions = [
-            {"action": "remove", "path": p, "data_change": False}
-            for p in inputs
-        ] + [
-            self._add_action(p, stats_cols, pv, data_change=False)
-            for p, pv in staged
-        ]
-        for _ in range(max_retries):
-            # pinned head: liveness validated AT the publish slot's
-            # parent — see _commit_cow for the two-read race this closes
-            head = self.latest_version()
-            live_now = set(self.live_paths(as_of=head))
-            gone = [p for p in inputs if p not in live_now]
-            if gone:
-                # the compacted staging is unreferenced on every abort
-                # path — unstage or it leaks under vacuum's
-                # log-candidates rule
-                self._unstage(staged)
-                raise ConcurrentWriteError(
-                    f"optimize inputs {gone} were removed by a concurrent "
-                    "writer — committing the rewrite would resurrect "
-                    "replaced data; rerun optimize on the new snapshot"
-                )
-            version = head + 1
-            try:
-                self._publish(version, actions)
-                return version
-            except ConcurrentWriteError:
-                # a racer took the slot; if it only APPENDED our inputs
-                # are still live and the next loop retries one slot up
-                continue
-        self._unstage(staged)
-        raise ConcurrentWriteError(
-            f"optimize lost {max_retries} publish races — table is under "
-            "pathological write contention"
-        )
-
-    def restore(self, version: int, max_retries: int = 8) -> dict:
-        """RESTORE the table to its state at ``version`` as ONE NEW
-        commit — rollback with history preserved (time travel above
-        the restore still reads the undone commits, exactly Delta's
-        RESTORE semantics). Pure metadata: remove(live_now − live_at_v)
-        + re-add(live_at_v − live_now) reusing the ORIGINAL directories
-        with their original stats/partition values (directories are
-        immutable until VACUUM — zero bytes copied or rewritten), plus
-        the target version's metaData when the schema changed in
-        between (the restored table IS the old state, shape included).
-        Restoring past VACUUM retention refuses loudly — the bytes are
-        gone. Returns {"version", "files_removed", "files_readded"};
-        a no-op restore (content already identical) commits nothing."""
-        latest = self.latest_version()
-        if version < 0 or version > latest:
-            raise ValueError(
-                f"RESTORE to version {version}: table has versions "
-                f"0..{latest}"
-            )
-        target = self._live_state(version)
-        gone = sorted(p for p in target if not os.path.isdir(p))
-        if gone:
-            raise ValueError(
-                f"RESTORE to version {version} needs directories VACUUM "
-                f"already reclaimed ({gone[:3]}…) — restore within the "
-                "retention window"
-            )
-        t_meta = self._meta_at(version)
-        for _ in range(max_retries):
-            head = self.latest_version()
-            cur = self._live_state(head)
-            removes = sorted(p for p in cur if p not in target)
-            adds = sorted(p for p in target if p not in cur)
-            meta_actions = []
-            if self._meta_at(head) != t_meta and t_meta[0] is not None:
-                m = {"action": "metaData", "schema": t_meta[0]}
-                if t_meta[1]:
-                    m["partition_columns"] = t_meta[1]
-                meta_actions.append(m)
-            if not removes and not adds and not meta_actions:
-                return {"version": None, "files_removed": 0,
-                        "files_readded": 0}
-            actions = (
-                [{"action": "info", "op": "restore"}]
-                + meta_actions
-                + [{"action": "remove", "path": p} for p in removes]
-            )
-            for p in adds:
-                st, pv = target[p]
-                a = {"action": "add", "path": p}
-                if pv:
-                    a["partition_values"] = pv
-                if st:
-                    a["stats"] = st
-                actions.append(a)
-            try:
-                self._publish(head + 1, actions)
-                return {"version": head + 1,
-                        "files_removed": len(removes),
-                        "files_readded": len(adds)}
-            except ConcurrentWriteError:
-                continue  # racer took the slot: re-derive off its head
-        raise ConcurrentWriteError(
-            f"restore lost {max_retries} publish races — table is "
-            "under pathological write contention"
-        )
-
-    def vacuum(self, retain_versions: int = 2) -> list[str]:
-        """Delete data directories referenced by NO snapshot within the
-        last ``retain_versions`` versions — the physical-delete pass
-        every table format separates from the logical OVERWRITE
-        tombstones. Returns the deleted paths.
-
-        Retention is the time-travel contract: vacuuming to
-        ``retain_versions=n`` keeps every snapshot in
-        [latest-n+1, latest] readable and breaks older AS OF reads —
-        exactly Delta's ``VACUUM ... RETAIN`` semantics, stated in
-        versions instead of hours (the fixture has no wall-clock).
-        The log itself is never deleted: history STRUCTURE stays
-        auditable even after its bytes are reclaimed.
-
-        Scale shape: pure metadata — fold the log once, diff two path
-        sets, delete directories; no data is read or moved.
-        """
-        import shutil
-
-        latest = self.latest_version()
-        if latest < 0:
-            return []
-        keep_from = max(0, latest - max(retain_versions, 1) + 1)
-        keep: set[str] = set()
-        for v in range(keep_from, latest + 1):
-            keep.update(self.live_paths(as_of=v))
-        all_paths: set[str] = set()
-        for commit in self._commits():
-            for a in commit["actions"]:
-                if a["action"] in ("add", "remove"):
-                    all_paths.add(a["path"])
-        doomed = sorted(all_paths - keep)
-        for p in doomed:
-            shutil.rmtree(p, ignore_errors=True)
-        return doomed
-
-    def history(self) -> list[dict]:
-        """(version, operation, n_adds, n_removes, data_change) per
-        commit — DESCRIBE HISTORY's core, the audit view every table
-        format exposes. Copy-on-write commits RECORD their operation
-        in an ``info`` action (round 11) and report it verbatim
-        (DELETE vs UPDATE vs MERGE — shape inference cannot tell a
-        partial delete from an update, both are remove+add); older
-        commits fall back to action-shape classification: adds only →
-        APPEND; data-changing removes + adds → REPLACE (overwrite /
-        COW rewrite); removes only → DELETE; non-data-changing
-        remove+add → OPTIMIZE; schema-only → METADATA;
-        txn-marker-only → TXN. O(commits) driver-side metadata, full
-        retained log (history is exactly the thing a checkpoint must
-        NOT hide)."""
-        out = []
-        for commit in self._commits():
-            acts = commit["actions"]
-            adds = [a for a in acts if a["action"] == "add"]
-            removes = [a for a in acts if a["action"] == "remove"]
-            dc = any(
-                a.get("data_change", True) for a in adds + removes
-            )
-            recorded = next(
-                (a.get("op") for a in acts if a["action"] == "info"),
-                None,
-            )
-            if recorded is not None:
-                op = recorded.upper()
-            elif removes and not dc:
-                op = "OPTIMIZE"
-            elif removes and adds:
-                op = "REPLACE"
-            elif removes:
-                op = "DELETE"
-            elif adds:
-                op = "APPEND"
-            elif any(a["action"] == "metaData" for a in acts):
-                op = "METADATA"
-            else:
-                op = "TXN"
-            out.append({
-                "version": commit["version"],
-                "operation": op,
-                "n_adds": len(adds),
-                "n_removes": len(removes),
-                "data_change": dc,
-            })
-        return out
-
-    # -- reads ---------------------------------------------------------
-
-    def snapshot(
-        self,
-        spark: SparkSession,
-        as_of: int | None = None,
-        skip: list[tuple] | None = None,
-    ) -> DataFrame:
-        """Scan the snapshot at ``as_of`` (default: latest). An empty
-        live set raises — a table with zero commits is an error, not
-        an empty frame (matching every format's behavior). ``skip``
-        prunes directories by their logged [min, max] stats BEFORE the
-        scan (see ``live_paths``); the caller still applies the actual
-        row filter — skipping bounds the file list, it never filters
-        rows. A filter that prunes everything raises the same
-        no-live-files error: distinguish it from an empty table by the
-        version in the message."""
-        state = self._live_pruned(as_of, skip)
-        if not state:
-            raise ValueError(
-                f"txnlog table {self.path} has no live files at "
-                f"version {as_of if as_of is not None else 'latest'}"
-                + (" matching the skip ranges" if skip else "")
-            )
-        # the TABLE schema (latest metaData ≤ as_of) governs the read:
-        # files written before an additive evolution surface NULL for
-        # the newer columns, never footer-sampling roulette; partition
-        # columns synthesize back from the logged partition_values
-        return self._scan_adds(
-            spark, [(p, pv) for p, (_st, pv) in state.items()], as_of
-        )
-
-    def _scan_adds(
-        self,
-        spark: SparkSession,
-        adds: list[tuple[str, dict | None]],
-        as_of: int | None = None,
-    ) -> DataFrame:
-        """Pinned, partition-synthesizing scan over (path,
-        partition_values) pairs — the one read path every consumer
-        (snapshot, feed, compaction, copy-on-write rewrites) shares."""
-        from pyspark.sql.types import StructType
-
-        schema_json, parts = self._meta_at(as_of)
-        st = (
-            StructType.fromJson(json.loads(schema_json))
-            if schema_json
-            else None
-        )
-        return _assemble_groups(spark, adds, st, parts)
-
-
 class IncrementalAggView:
-    """Incrementally-maintained materialized aggregate over a
-    ``TxnLogTable`` — the O(delta) REFRESH that full-recompute
+    """Incrementally-maintained materialized aggregate over a Delta
+    (``DeltaLogTable``) or Iceberg (``IcebergViewBase``) base — the
+    O(delta) REFRESH that full-recompute
     matviews (`Engine`'s REFRESH MATERIALIZED VIEW) lack, and the
     batch-orchestration twin of the streaming aggregation tier.
 
@@ -2405,8 +625,8 @@ class IncrementalAggView:
     maintainable aggregates; avg = sum/count downstream). Each
     ``refresh``:
 
-    - folds ONLY the base versions past the last watermark, via
-      ``TxnLogTable.changes`` — compaction commits (data_change:
+    - folds ONLY the base versions past the last watermark, via the
+      base's adds-only ``changes`` feed — compaction commits (data_change:
       False) are skipped outright, so OPTIMIZE never triggers view
       work;
     - merges delta partials into the state (union + re-aggregate:
@@ -2435,23 +655,28 @@ class IncrementalAggView:
     Consume within the base's VACUUM retention (a vacuumed window
     fails loudly on the parquet read), exactly Delta CDF's contract.
 
-    State lives in its own ``TxnLogTable``, so the view itself is
-    versioned and time-travelable for free.
+    State lives in its own standard Delta table
+    (``DeltaTableWriter``), so the view itself is versioned,
+    time-travelable, and readable by any Delta engine for free.
     """
 
     WATERMARK_APP = "__view_base_version"
 
     def __init__(
         self,
-        base: TxnLogTable,
+        base,
         state_path: str,
         group_cols: list[str],
         sum_cols: list[str] | tuple = (),
         min_cols: list[str] | tuple = (),
         max_cols: list[str] | tuple = (),
     ):
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
+
         self.base = base
-        self.state = TxnLogTable(state_path)
+        self.state = DeltaTableWriter(state_path)
         self.group_cols = list(group_cols)
         self.sum_cols = list(sum_cols)
         self.min_cols = list(min_cols)
@@ -2522,7 +747,7 @@ class IncrementalAggView:
     def watermark(self) -> int:
         """Base version the state reflects (-1 before the first
         refresh) — read from the state table's txn marker."""
-        return self.state.last_txn_version(self.WATERMARK_APP)
+        return self.state.reader().last_txn_version(self.WATERMARK_APP)
 
     def refresh(self, spark: SparkSession) -> int | None:
         """Fold base commits past the watermark into the state —
@@ -2535,10 +760,10 @@ class IncrementalAggView:
         target = self.base.latest_version()
         if target <= hw:
             return None
-        # both bases (TxnLogTable AND external DeltaLogTable) expose
-        # the probe + row-level feed since round 11; getattr keeps any
-        # other duck-typed base on the old contract (changes() raises
-        # on a data-changing remove and the caller rebuilds)
+        # both bases (DeltaLogTable AND IcebergViewBase) expose the
+        # probe + row-level feed; getattr keeps any other duck-typed
+        # base on the adds-only contract (changes() raises on a
+        # data-changing remove and the caller rebuilds)
         probe = getattr(self.base, "_window_has_dc_removes", None)
         if probe is not None and probe(hw, target):
             if self.min_cols or self.max_cols:
@@ -2566,11 +791,7 @@ class IncrementalAggView:
         if part is None:
             # nothing but metadata/compaction traffic: advance the
             # watermark alone — a marker-only commit, no state rewrite
-            self.state._publish(
-                self.state.latest_version() + 1,
-                [{"action": "txn", "app_id": self.WATERMARK_APP,
-                  "txn_version": target}],
-            )
+            self.state.mark_txn(self.WATERMARK_APP, target)
             return target
         if self.state.live_paths():
             merged = self._merge(self.state.snapshot(spark), part)
@@ -2623,8 +844,8 @@ class DeltaLogTable:
     - versions must be contiguous from 0 — a gap means a corrupted or
       vacuumed-past log and raises instead of silently dropping
       commits;
-    - snapshot resolution is the SAME fold as ``TxnLogTable`` —
-      replaying actions in version order (latest action per path wins,
+    - snapshot resolution is a log fold — replaying actions in
+      version order (latest action per path wins,
       live iff add) beats any directory listing, which is the whole
       point of log-structured formats.
 
@@ -2663,7 +884,7 @@ class DeltaLogTable:
     three-method surface (latest_version / live_paths / snapshot);
     the scan itself is already just a pruned parquet read either way.
 
-    Scale shape: identical to TxnLogTable — the log is O(commits) of
+    Scale shape: the log is O(commits) of
     KB-sized driver-side metadata plus O(live files) checkpoint rows
     (every Delta client reads both this way); data files are scanned
     distributed via one multi-path parquet read.
@@ -3287,11 +1508,11 @@ class DeltaLogTable:
     ) -> list[str]:
         """Resolved live paths, optionally pruned by ``skip`` =
         [(col, lo, hi), …] through the two log-level tiers (partition
-        values, then the add actions' recorded min/max stats) — the
-        same two-tier skipping TxnLogTable has, over a table some
-        OTHER Delta engine wrote. Refuses on DV'd tables as always —
-        BEFORE the skip filter (a pruned-away DV'd file is still a
-        file this caller would mishandle if the skip range moved)."""
+        values, then the add actions' recorded min/max stats) — over
+        a table this engine or some OTHER Delta engine wrote. Refuses
+        on DV'd tables as always — BEFORE the skip filter (a
+        pruned-away DV'd file is still a file this caller would
+        mishandle if the skip range moved)."""
         fold = self._live_fold(as_of)
         kept = self._prune_fold(fold, skip)
         out = []
@@ -3349,9 +1570,8 @@ class DeltaLogTable:
         malformed schemaString raises rather than silently falling
         back to footer sampling (a checkpoint whose parquet simply has
         no metaData column is fine; a corrupt checkpoint raises).
-        Pinning the read matters for the same reason as in
-        ``TxnLogTable``: an externally-evolved table read raw resolves
-        to whichever file's footer Spark samples."""
+        Pinning the read matters: an externally-evolved table read
+        raw resolves to whichever file's footer Spark samples."""
         doc = None
         cp = self._cp
         lo = 0
@@ -3376,8 +1596,8 @@ class DeltaLogTable:
         mapping: dict[str, str] | None = None,
     ) -> DataFrame:
         """Partition-aware scan assembly — see ``_assemble_groups``
-        (shared with TxnLogTable: both formats keep partition values
-        in the log, never in the parquet files). ``mapping`` (from
+        (Delta keeps partition values in the log, never in the
+        parquet files). ``mapping`` (from
         ``_mapping_for``) makes the scan read PHYSICAL names and
         rename — column-mapped 'name'-mode tables."""
         return _assemble_groups(
@@ -3410,8 +1630,7 @@ class DeltaLogTable:
     ) -> DataFrame | None:
         """Rows ADDED to someone else's Delta table in versions
         (``since``, ``to``] — incremental consumption of an external
-        table without a Delta library, the interop twin of
-        ``TxnLogTable.changes`` with the same adds-only contract:
+        table without a Delta library, with an adds-only contract:
         actions with ``dataChange: false`` (OPTIMIZE / clustering
         traffic) are skipped, a data-changing remove raises (rebuild
         from the snapshot), None when the window adds nothing. The
@@ -3476,8 +1695,7 @@ class DeltaLogTable:
     def changes_cdf(
         self, spark: SparkSession, since: int, to: int | None = None
     ) -> DataFrame | None:
-        """ROW-LEVEL change feed over an EXTERNAL Delta table — the
-        interop twin of ``TxnLogTable.changes_cdf``: windows containing
+        """ROW-LEVEL change feed over a Delta table: windows containing
         data-changing removes (another engine's COW DELETE / UPDATE /
         MERGE / overwrite) resolve by diffing the removed files'
         content against their rewrites (multiset EXCEPT ALL; both sides
@@ -3689,12 +1907,11 @@ class DeltaLogTable:
         return out
 
     def _window_has_dc_removes(self, since: int, to: int) -> bool:
-        """Driver-side probe (see TxnLogTable._window_has_dc_removes):
-        does (``since``, ``to``] contain a data-changing remove? Lets
-        IncrementalAggView pick adds-only vs row-level folding over an
-        EXTERNAL table without a Spark job. Windows below a cleaned
-        checkpoint raise via the contiguity check — there is no change
-        information there either way."""
+        """Driver-side probe: does (``since``, ``to``] contain a
+        data-changing remove? Lets IncrementalAggView pick adds-only vs
+        row-level folding over a Delta table without a Spark job.
+        Windows below a cleaned checkpoint raise via the contiguity
+        check — there is no change information there either way."""
         for _v, actions in self._json_commit_actions(since + 1, to):
             for a in actions:
                 if "remove" in a and a["remove"].get("dataChange", True):
@@ -3825,13 +2042,17 @@ class DeltaLogTable:
         return df.select(*cols)
 
 
-def _fresh_table(spark: SparkSession, sf_dir: str, name: str) -> TxnLogTable:
+def _fresh_table(spark: SparkSession, sf_dir: str, name: str):
+    """An empty standard Delta table (``DeltaTableWriter``) under the
+    key's scratch directory."""
     import shutil
+
+    from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 
     base = _scratch(name, sf_dir)
     if os.path.isdir(base):
         shutil.rmtree(base)
-    return TxnLogTable(base)
+    return DeltaTableWriter(base)
 
 
 @register(
@@ -3850,13 +2071,13 @@ def _fresh_table(spark: SparkSession, sf_dir: str, name: str) -> TxnLogTable:
     """,
 )
 def sink_txnlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transactional writer lifecycle: two APPEND commits build the
-    table, an OVERWRITE commit (curation pass keeping only status-'F'
-    rows) replaces the snapshot, and a stale overwrite is REFUSED by
-    the optimistic version check — then the final snapshot is read
-    back through log replay. The aggregate over the result proves the
-    committed content is exactly append₀ ∪ append₁ curated, no
-    uncommitted or tombstoned file leaking in."""
+    """Transactional writer lifecycle on a standard Delta table: two
+    APPEND commits build the table, an OVERWRITE commit (curation pass
+    keeping only status-'F' rows) replaces the snapshot, and a stale
+    overwrite is REFUSED by the optimistic version check — then the
+    final snapshot is read back through log replay. The aggregate
+    over the result proves the committed content is exactly append₀ ∪
+    append₁ curated, no uncommitted or tombstoned file leaking in."""
     o = load_tables(spark, sf_dir)["orders"]
     t = _fresh_table(spark, sf_dir, "txnlog_w")
     v0 = t.append(o.where(F.col("o_orderkey") % 3 == 0))
@@ -3988,7 +2209,7 @@ def sink_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dialect_changes_feed",
-    # the SQL CHANGES(t, since) surface over a mutated txnlog table:
+    # the SQL CHANGES(t, since) surface over a mutated Delta table:
     # delete (l_quantity < 5) + update (l_quantity > 45, price*2) on
     # the l_orderkey%7=0 base; disjoint preds, so the oracle recomputes
     # each labeled set from the fixture directly.
@@ -4012,23 +2233,18 @@ def sink_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dialect_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL surface for the row-level change feed (round 13):
-    ``SELECT … FROM CHANGES(t, <since>)`` on an ATTACHed table lowers
-    to the format's ``changes_cdf`` and composes with the read grammar
-    — here a GROUP BY over the feed, exactly the shape a CDC consumer
-    polls. Mutations go through the writer API; the read goes through
-    the ENGINE end-to-end (ATTACH + CHANGES), so the whole
+    ``SELECT … FROM CHANGES(t, <since>)`` on an ATTACHed Delta table
+    lowers to ``DeltaLogTable.changes_cdf`` and composes with the read
+    grammar — here a GROUP BY over the feed, exactly the shape a CDC
+    consumer polls. Mutations go through the writer API; the read goes
+    through the ENGINE end-to-end (ATTACH + CHANGES), so the whole
     dialect-to-feed path is under the oracle."""
-    import shutil
-
     from algebraicdb_spark.engine import Engine
 
     li = load_tables(spark, sf_dir)["lineitem"].select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
-    base = _scratch("changes_sql", sf_dir)
-    if os.path.isdir(base):
-        shutil.rmtree(base)
-    t = TxnLogTable(base)
+    t = _fresh_table(spark, sf_dir, "changes_sql")
     t.append(li.where(F.col("l_orderkey") % 7 == 0))
     t.delete(spark, "l_quantity < 5")
     t.update(spark, {"l_extendedprice": "l_extendedprice * 2"},
@@ -4036,7 +2252,7 @@ def dialect_changes_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from algebraicdb_spark.functions.rounding import pround_sql
 
     eng = Engine(spark)
-    eng.sql(f"ATTACH TABLE chfeed FROM txnlog LOCATION '{base}'")
+    eng.sql(f"ATTACH TABLE chfeed FROM delta LOCATION '{t.path}'")
     total = pround_sql(
         "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)"
     )
@@ -4125,7 +2341,7 @@ def _view_state_out(view, spark: SparkSession) -> DataFrame:
 
 @register(
     "view_incremental_refresh",
-    # Incrementally-maintained matview over a txnlog base: two append
+    # Incrementally-maintained matview over a Delta base: two append
     # windows fold adds-only partials, then a COW DELETE window folds
     # SIGNED retractions through the row-level feed. The oracle
     # recomputes the final groupBy from the fixture — the incremental
@@ -4160,7 +2376,7 @@ def view_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     if os.path.isdir(state_dir):
         shutil.rmtree(state_dir)
     view = IncrementalAggView(
-        t, state_dir, group_cols=["o_orderpriority"],
+        t.reader(), state_dir, group_cols=["o_orderpriority"],
         sum_cols=["o_totalprice"],
     )
     t.append(o.where(F.col("o_orderkey") % 4 == 0))

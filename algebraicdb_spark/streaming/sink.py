@@ -6,13 +6,12 @@ committed" and "checkpoint advanced", the SAME batch (same id, same
 content — the checkpoint pins source offsets per batch) is delivered
 again. Exactly-once therefore lives in the sink: the commit must be
 idempotent in ``batch_id``. This module wires that contract into
-``TxnLogTable.append_txn`` — Delta's transaction-identifier protocol,
-where a ``txn (appId, version)`` marker rides atomically in the same
-commit as the data files, so replayed batches see the marker and
-become no-ops. This is precisely how production Delta sinks achieve
-exactly-once (``txnAppId``/``txnVersion`` write options); here the
-mechanics are pinned with the bespoke log so the semantics are
-testable without a Delta library.
+``DeltaTableWriter.append_txn`` — Delta's transaction-identifier
+protocol, where a ``txn (appId, version)`` marker rides atomically in
+the same commit as the data files, so replayed batches see the marker
+and become no-ops. This is precisely how production Delta sinks
+achieve exactly-once (``txnAppId``/``txnVersion`` write options), in a
+table every other Delta engine can consume.
 
 Scale shape: per micro-batch, ONE distributed parquet write of the
 batch (executor-side, never through the driver) + O(commits) KB of
@@ -28,11 +27,10 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 # Any transactional table exposing the idempotent-append pair
-# (append_txn / write_checkpoint) can be a sink target: the bespoke
-# ``TxnLogTable`` (operators/txnlog.py) or the standard-format
-# ``DeltaTableWriter`` (operators/delta_writer.py) — the latter makes
-# the exactly-once ingest land in a table every other Delta engine can
-# consume.
+# (append_txn / write_checkpoint) can be a sink target: the
+# standard-format ``DeltaTableWriter`` (operators/delta_writer.py), or
+# ``IcebergTableWriter`` (operators/iceberg_writer.py) for the keyed
+# upsert mode.
 
 
 def txn_committer(
@@ -44,7 +42,7 @@ def txn_committer(
     window that is hard to trigger deterministically in-process.
 
     ``log_checkpoint_every`` folds a table-log checkpoint every N
-    commits (`TxnLogTable.write_checkpoint`) — without it, the
+    commits (`DeltaTableWriter.write_checkpoint`) — without it, the
     per-batch idempotence probe (``last_txn_version``) replays the
     WHOLE log, turning a months-long one-batch-per-minute ingest
     quadratic in total commits; with it the probe is O(N tail
@@ -130,7 +128,7 @@ def upsert_committer(
 
 def txnlog_sink(
     stream_df: DataFrame,
-    table,  # TxnLogTable or DeltaTableWriter (duck-typed, see above)
+    table,  # DeltaTableWriter or IcebergTableWriter (duck-typed, see above)
     app_id: str,
     checkpoint_dir: str,
     timeout: int = 120,

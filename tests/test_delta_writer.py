@@ -443,6 +443,33 @@ class TestDeltaWriterRoundTrip:
         assert w.append_txn(r.limit(1), "app", 2) == 2
         assert DeltaLogTable(root).snapshot(spark).count() == 6
 
+    def test_overwrite_txn_and_mark_txn(self, spark, tables, tmp_path):
+        """overwrite_txn rides the txn mark in the overwrite's own
+        commit (a redelivered mark no-ops, a stale base refuses);
+        mark_txn advances the mark with no data change — the two
+        commits an IncrementalAggView's state table is made of."""
+        root = str(tmp_path / "t")
+        w = DeltaTableWriter(root)
+        r = tables["region"]
+        assert w.mark_txn("view", 0) == 0  # marker-only first commit
+        assert w.overwrite_txn(r.limit(2), "view", 1, expected_version=1) == 1
+        assert w.overwrite_txn(
+            r.limit(3), "view", 1, expected_version=2
+        ) is None
+        with pytest.raises(ConcurrentWriteError):
+            w.overwrite_txn(r.limit(3), "view", 2, expected_version=1)
+        assert w.mark_txn("view", 5) == 2
+        t = DeltaLogTable(root)
+        assert t.last_txn_version("view") == 5
+        assert t.snapshot(spark).count() == 2
+        with open(os.path.join(root, "_delta_log", f"{1:020d}.json")) as f:
+            acts = [json.loads(line) for line in f if line.strip()]
+        assert [a["txn"]["version"] for a in acts if "txn" in a] == [1]
+        assert any("add" in a for a in acts)
+        assert [h["operation"] for h in t.history()] == [
+            "SET TRANSACTION", "WRITE", "SET TRANSACTION",
+        ]
+
     def test_streaming_sink_into_standard_delta(self, spark, tables, tmp_path):
         """The exactly-once foreachBatch committer targets the
         standard-format writer unchanged (duck-typed append_txn), so a
@@ -546,9 +573,9 @@ class TestDeltaWriterRoundTrip:
     ):
         """OPTIMIZE ZORDER on a written-then-read STANDARD Delta table:
         each compacted file covers a narrow min/max span of BOTH
-        clustering columns (the span-cut pin from the txnlog twin —
-        <0.45× the global span proves genuine 2-D clustering; the
-        unclustered inputs each span ~1.0×), content is untouched, the
+        clustering columns (<0.45× the global span proves genuine 2-D
+        clustering; the unclustered inputs each span ~1.0×), content
+        is untouched, the
         commit is dataChange:false, and the per-file add stats in the
         log carry the narrow spans for any Delta engine to skip on."""
         import glob
@@ -628,9 +655,9 @@ class TestDeltaWriterRoundTrip:
 
     def test_cow_delete_update_on_standard_delta(self, spark, tmp_path):
         """Round 11: row-level DELETE/UPDATE on the standard format —
-        the same three file classes as txnlog's COW (untouched / pure
-        remove / rewrite) from one probe + footer counts, committed as
-        data-changing remove+add with verbatim raw tombstone paths."""
+        three file classes (untouched / pure remove / rewrite) from one
+        probe + footer counts, committed as data-changing remove+add
+        with verbatim raw tombstone paths."""
         root = str(tmp_path / "t")
         w = DeltaTableWriter(root)
         # coalesce(1): one parquet FILE per append, so the three file
@@ -719,30 +746,27 @@ class TestDeltaWriterRoundTrip:
 
     def test_describe_history_across_formats(self, spark, tables, tmp_path):
         """DESCRIBE HISTORY n from the dialect: the audit trail of an
-        attached table — txnlog operations classified from action
-        shape, delta from commitInfo; non-attached names refuse."""
+        attached table from its commitInfo operations — maintenance
+        and COW mutations record their own; non-attached names
+        refuse."""
         import pytest as _pytest
 
         from algebraicdb_spark.engine import AdtError, Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         eng = Engine(spark)
-        # txnlog: append → append → optimize → delete
-        t = TxnLogTable(str(tmp_path / "tl"))
+        # append → append → optimize → delete
+        t = DeltaTableWriter(str(tmp_path / "tl"))
         t.append(spark.createDataFrame([(1, "a"), (2, "b")],
                                        "id long, tag string"))
         t.append(spark.createDataFrame([(3, "a")], "id long, tag string"))
         t.optimize(spark)
         t.delete(spark, "tag = 'a'")
-        eng.sql(f"ATTACH TABLE tl FROM txnlog LOCATION '{t.path}'")
+        eng.sql(f"ATTACH TABLE tl FROM delta LOCATION '{t.path}'")
         hist = eng.sql("DESCRIBE HISTORY tl").collect()
         assert [(h["version"], h["operation"]) for h in hist] == [
-            # the COW delete RECORDS its operation since round 11 —
-            # shape inference alone would have said REPLACE
-            (0, "APPEND"), (1, "APPEND"), (2, "OPTIMIZE"), (3, "DELETE"),
+            (0, "WRITE"), (1, "WRITE"), (2, "OPTIMIZE"), (3, "DELETE"),
         ]
-        assert hist[2]["data_change"] is False
-        # delta: the writer's commitInfo operations surface
+        # an overwrite is a WRITE too
         droot = str(tmp_path / "d")
         w = DeltaTableWriter(droot)
         w.append(tables["region"].limit(2))
@@ -1050,8 +1074,7 @@ class TestDeletionVectorWrites:
     def test_sql_enable_and_mor_delete_on_attachment(
         self, spark, tmp_path
     ):
-        from algebraicdb_spark.engine import AdtError, Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.engine import Engine
 
         w = self._table(spark, tmp_path)
         eng = Engine(spark)
@@ -1065,12 +1088,6 @@ class TestDeletionVectorWrites:
         assert sorted(
             res for _raw, res, _pv, _dv in t._live_entries_full()
         ) == sorted(t.live_paths(as_of=2))
-        # txnlog attachments have no DV protocol — refuse
-        tl = TxnLogTable(str(tmp_path / "tl"))
-        tl.append(spark.createDataFrame([(1,)], "k long"))
-        eng.sql(f"ATTACH TABLE tl FROM txnlog LOCATION '{tl.path}'")
-        with pytest.raises(AdtError, match="Delta protocol feature"):
-            eng.sql("ALTER TABLE tl ENABLE DELETION VECTORS")
 
 
 class TestRowLevelCdfAcrossDvFlips:
@@ -1438,9 +1455,8 @@ class TestDeltaRestore:
 class TestDeltaDataSkipping:
     """Two-tier log-level pruning over a STANDARD Delta table —
     partition values first, then the add actions' recorded min/max
-    stats: the same skipping TxnLogTable has, now on tables any Delta
-    engine wrote (our writer records spec-shaped stats, so its own
-    output skips too)."""
+    stats, on tables any Delta engine wrote (our writer records
+    spec-shaped stats, so its own output skips too)."""
 
     def test_skip_prunes_files_and_rows_match(self, spark, tmp_path):
         root = str(tmp_path / "t")

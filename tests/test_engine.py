@@ -136,7 +136,7 @@ class TestSqlScript:
 
 
 class TestAttachTable:
-    """ATTACH TABLE … FROM txnlog|delta|iceberg LOCATION '…': the
+    """ATTACH TABLE … FROM delta|iceberg LOCATION '…': the
     lakehouse layer becomes a queryable SQL table, with VERSION as
     REPL-level time travel; the file list resolves at ATTACH time and
     the data stays a lazy pruned parquet scan."""
@@ -151,22 +151,33 @@ class TestAttachTable:
 
         import pytest as _pytest
 
+        import json as _json
+
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         r = tables["region"]
         t.append(r.limit(2))
         t.append(r.limit(5))
         t.append(r.limit(1))
-        # pin deterministic commit clocks for the timestamp resolution
+        # pin deterministic commit clocks (the commitInfo timestamps)
+        # for the timestamp resolution
         base = 1_600_000_000  # epoch seconds
         for v in range(3):
-            cf = _os.path.join(t.log_dir, f"v{v:08d}.json")
-            _os.utime(cf, (base + 100 * v, base + 100 * v))
+            cf = _os.path.join(t.log_dir, f"{v:020d}.json")
+            with open(cf) as f:
+                actions = [_json.loads(line) for line in f if line.strip()]
+            for a in actions:
+                if "commitInfo" in a:
+                    a["commitInfo"]["timestamp"] = (base + 100 * v) * 1000
+            with open(cf, "w") as f:
+                f.write("\n".join(_json.dumps(a) for a in actions) + "\n")
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'")
+        eng.sql(f"ATTACH TABLE reg FROM delta LOCATION '{t.path}'")
         assert eng.sql(
             "SELECT COUNT(*) AS n FROM reg VERSION AS OF 0"
         ).collect()[0]["n"] == 2
@@ -213,13 +224,15 @@ class TestAttachTable:
 
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         t.append(tables["region"].limit(2))
         t.append(tables["region"].limit(5))
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'")
+        eng.sql(f"ATTACH TABLE reg FROM delta LOCATION '{t.path}'")
         assert eng.sql("SELECT COUNT(*) AS n FROM reg").collect()[0]["n"] == 7
         eng.sql("RESTORE TABLE reg TO VERSION AS OF 0")
         assert eng.sql("SELECT COUNT(*) AS n FROM reg").collect()[0]["n"] == 2
@@ -233,7 +246,7 @@ class TestAttachTable:
             eng.sql("RESTORE TABLE nation TO VERSION AS OF 0")
         # a VERSION-pinned attachment is an immutable snapshot
         eng.sql(
-            f"ATTACH TABLE reg0 FROM txnlog LOCATION '{t.path}' VERSION 0"
+            f"ATTACH TABLE reg0 FROM delta LOCATION '{t.path}' VERSION 0"
         )
         with _pytest.raises(AdtError, match="pinned"):
             eng.sql("RESTORE TABLE reg0 TO VERSION AS OF 0")
@@ -243,8 +256,7 @@ class TestAttachTable:
         formats' own knob surface from SQL: flipping iceberg's
         write.delete.mode makes the next DELETE merge-on-read, delta's
         enableDeletionVectors routes through the protocol upgrade,
-        capability keys this writer cannot uphold refuse, and txnlog
-        (no properties surface) refuses SET but answers SHOW empty."""
+        and capability keys this writer cannot uphold refuse."""
         import pytest as _pytest
 
         from algebraicdb_spark.engine import Engine
@@ -256,7 +268,6 @@ class TestAttachTable:
         from algebraicdb_spark.operators.iceberg_writer import (
             IcebergTableWriter,
         )
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
         eng = Engine(spark)
         iw = IcebergTableWriter(str(tmp_path / "i"))
@@ -334,13 +345,6 @@ class TestAttachTable:
         )
         with _pytest.raises(AdtError, match="append-only"):
             eng.sql("DELETE FROM dl WHERE r_regionkey = 0")
-        # txnlog: no properties surface
-        t = TxnLogTable(str(tmp_path / "t"))
-        t.append(tables["region"].limit(2))
-        eng.sql(f"ATTACH TABLE tl FROM txnlog LOCATION '{t.path}'")
-        with _pytest.raises(AdtError, match="no.*properties"):
-            eng.sql("ALTER TABLE tl SET PROPERTIES ('x' = 'y')")
-        assert eng.sql("SHOW TBLPROPERTIES tl").count() == 0
 
     def test_restore_to_an_empty_version(self, spark, tables, tmp_path):
         """RESTORE to a version whose live set is EMPTY (everything
@@ -348,14 +352,16 @@ class TestAttachTable:
         empty frame under the pinned schema — not a post-commit crash
         leaving a stale view."""
         from algebraicdb_spark.engine import Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         t.append(tables["region"].limit(2))     # v0
         t.delete(spark, "TRUE")                 # v1: empty live set
         t.append(tables["region"].limit(5))     # v2
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'")
+        eng.sql(f"ATTACH TABLE reg FROM delta LOCATION '{t.path}'")
         eng.sql("RESTORE TABLE reg TO VERSION AS OF 1")
         assert eng.sql(
             "SELECT COUNT(*) AS n FROM reg"
@@ -404,7 +410,9 @@ class TestAttachTable:
         table) nor be rewritten — while a REAL travel clause in the
         same statement still lowers (string-masked matching)."""
         from algebraicdb_spark.engine import Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
 
         eng = Engine(spark)
         # no attachment at all: the literal alone must pass through
@@ -416,10 +424,10 @@ class TestAttachTable:
             "SELECT 'x FOR TIMESTAMP AS OF ''2024-01-01''' AS note"
         ).collect()
         # literal + real clause in ONE statement: only the clause lowers
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         t.append(tables["region"].limit(2))
         t.append(tables["region"].limit(5))
-        eng.sql(f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'")
+        eng.sql(f"ATTACH TABLE reg FROM delta LOCATION '{t.path}'")
         got = eng.sql(
             "SELECT 'reg VERSION AS OF 1' AS note, COUNT(*) AS n "
             "FROM reg VERSION AS OF 0 GROUP BY note"
@@ -459,24 +467,26 @@ class TestAttachTable:
             f"'{at0.isoformat()}'"
         ).collect()[0]["n"] == 2
 
-    def test_attach_txnlog_with_version_time_travel(
+    def test_attach_with_version_time_travel(
         self, spark, tables, tmp_path
     ):
         from algebraicdb_spark.engine import Engine
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
 
-        t = TxnLogTable(str(tmp_path / "t"))
+        t = DeltaTableWriter(str(tmp_path / "t"))
         r = tables["region"]
         t.append(r.limit(2))
         t.append(r.limit(5))
         eng = Engine(spark)
         n = eng.sql(
-            f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'"
+            f"ATTACH TABLE reg FROM delta LOCATION '{t.path}'"
         ).count()
         assert eng.sql("SELECT COUNT(*) AS n FROM reg").collect()[0]["n"] == 7
         assert n == 7
         eng.sql(
-            f"ATTACH TABLE reg0 FROM txnlog LOCATION '{t.path}' VERSION 0"
+            f"ATTACH TABLE reg0 FROM delta LOCATION '{t.path}' VERSION 0"
         )
         assert (
             eng.sql("SELECT COUNT(*) AS n FROM reg0").collect()[0]["n"] == 2
@@ -521,28 +531,56 @@ class TestAttachTable:
         eng.sql(f"ATTACH TABLE dt FROM delta LOCATION '{root}'")
         assert eng.sql("SELECT COUNT(*) AS n FROM dt").collect()[0]["n"] == 3
 
-    def test_maintenance_statements_on_attached_txnlog(
-        self, spark, tables, tmp_path
-    ):
-        """OPTIMIZE TABLE / VACUUM / REFRESH TABLE from the dialect:
-        the full maintenance loop without leaving SQL. Read-only
-        interop attachments refuse maintenance loudly."""
+    def test_txnlog_format_is_retired(self, spark, tables, tmp_path):
+        """ATTACH / CREATE TABLE … FROM txnlog refuse with an AdtError
+        pointing at delta: the private log format is retired, and the
+        Delta reader cannot read a ``_log`` directory. CTAS refuses
+        before running its query or touching the location."""
+        import os as _os
+
         import pytest as _pytest
 
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
 
-        t = TxnLogTable(str(tmp_path / "m"))
+        eng = Engine(spark)
+        eng.create_table("reg_src", tables["region"])
+        with _pytest.raises(AdtError, match="FROM delta"):
+            eng.sql(
+                f"ATTACH TABLE tl FROM txnlog LOCATION '{tmp_path / 'a'}'"
+            )
+        with _pytest.raises(AdtError, match="FROM delta"):
+            eng.sql(
+                f"CREATE TABLE ctl FROM txnlog LOCATION '{tmp_path / 'c'}' "
+                "AS SELECT r_regionkey, r_name FROM reg_src"
+            )
+        assert not _os.path.exists(tmp_path / "c")
+        assert "tl" not in eng._attached and "ctl" not in eng._attached
+
+    def test_maintenance_statements_on_attached_delta(
+        self, spark, tables, tmp_path
+    ):
+        """OPTIMIZE TABLE / VACUUM / REFRESH TABLE from the dialect:
+        the full maintenance loop without leaving SQL; maintenance of
+        a name that was never attached refuses loudly."""
+        import pytest as _pytest
+
+        from algebraicdb_spark.engine import Engine
+        from algebraicdb_spark.functions.adt import AdtError
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
+
+        t = DeltaTableWriter(str(tmp_path / "m"))
         r = tables["region"]
         for _ in range(3):
-            t.append(r)
+            t.append(r.coalesce(1))
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE reg FROM txnlog LOCATION '{t.path}'")
+        eng.sql(f"ATTACH TABLE reg FROM delta LOCATION '{t.path}'")
         n = 3 * r.count()
         assert eng.sql("SELECT COUNT(*) AS n FROM reg").collect()[0]["n"] == n
         eng.sql("OPTIMIZE TABLE reg ZORDER BY (r_regionkey)")
-        assert len(t.live_paths()) < 3  # compacted (file-grain dirs ≤ target)
+        assert len(t.live_paths()) < 3  # compacted into the target file
         assert eng.sql("SELECT COUNT(*) AS n FROM reg").collect()[0]["n"] == n
         # new commits appear after REFRESH, not before
         t.append(r.limit(1))
@@ -576,14 +614,16 @@ class TestAttachTable:
 
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.functions.adt import AdtError
-        from algebraicdb_spark.operators.txnlog import TxnLogTable
+        from algebraicdb_spark.operators.delta_writer import (
+            DeltaTableWriter,
+        )
 
-        t = TxnLogTable(str(tmp_path / "ct"))
+        t = DeltaTableWriter(str(tmp_path / "ct"))
         r = tables["region"]
         t.append(r.limit(2))
         t.append(r.limit(5))
         a = Engine(spark)
-        a.sql(f"ATTACH TABLE creg FROM txnlog LOCATION '{t.path}' VERSION 0")
+        a.sql(f"ATTACH TABLE creg FROM delta LOCATION '{t.path}' VERSION 0")
         p = str(tmp_path / "catalog.json")
         a.save_catalog(p)
         spark.catalog.dropTempView("creg")
@@ -603,7 +643,7 @@ class TestAttachTable:
         # DROP TABLE forgets the attachment: it must NOT resurrect
         # through a later save/load
         c = Engine(spark)
-        c.sql(f"ATTACH TABLE creg2 FROM txnlog LOCATION '{t.path}'")
+        c.sql(f"ATTACH TABLE creg2 FROM delta LOCATION '{t.path}'")
         c.sql("DROP TABLE creg2")
         p2 = str(tmp_path / "catalog2.json")
         c.save_catalog(p2)
@@ -621,10 +661,7 @@ class TestCtasLakehouse:
     def test_ctas_all_three_formats(self, spark, tables, tmp_path):
         from algebraicdb_spark.engine import Engine
         from algebraicdb_spark.operators.iceberg import IcebergTable
-        from algebraicdb_spark.operators.txnlog import (
-            DeltaLogTable,
-            TxnLogTable,
-        )
+        from algebraicdb_spark.operators.txnlog import DeltaLogTable
 
         eng = Engine(spark)
         eng.create_table("reg_src", tables["region"])
@@ -650,19 +687,19 @@ class TestCtasLakehouse:
                 f"CREATE TABLE cd2 FROM delta LOCATION '{droot}' AS "
                 "SELECT * FROM reg_src"
             )
-        # txnlog, hive-partitioned from the start
+        # delta, hive-partitioned from the start
         troot = str(tmp_path / "t")
         eng.sql(
-            f"CREATE TABLE ctl FROM txnlog LOCATION '{troot}' "
+            f"CREATE TABLE ctl FROM delta LOCATION '{troot}' "
             "PARTITION BY (r_regionkey) AS "
             "SELECT r_regionkey, r_name FROM reg_src"
         )
-        tl = TxnLogTable(troot)
+        tl = DeltaLogTable(troot)
         assert tl.snapshot(spark).count() == 5
         # the partition SPEC committed with the CTAS — values live in
         # the log's add actions, pruning works from commit zero
-        _schema, tparts = tl._meta_at()
-        assert tparts == ["r_regionkey"]
+        _proto, tmeta = tl._protocol_meta()
+        assert tmeta["partitionColumns"] == ["r_regionkey"]
         assert len(tl.live_paths(skip=[("r_regionkey", 2, 2)])) < len(
             tl.live_paths()
         )

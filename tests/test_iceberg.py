@@ -508,8 +508,8 @@ class TestIcebergTable:
 
 class TestIcebergChanges:
     """Incremental append scan between snapshots — the adds-only
-    change feed over an EXTERNAL Iceberg table, completing the
-    TxnLog/Delta/Iceberg interop triplet."""
+    change feed over an EXTERNAL Iceberg table, the twin of the
+    Delta reader's."""
 
     def _extend_chain(self, spark, sf_dir, root: str, ctx: dict) -> dict:
         """Grow the 2-snapshot `_build` table into a 4-snapshot parent
@@ -2178,8 +2178,7 @@ class TestIcebergExactlyOnce:
 
 class TestIcebergMaintenance:
     """rewrite_data_files (OPTIMIZE) + expire_snapshots (VACUUM) —
-    the maintenance loop on the third format, closing parity with
-    txnlog/delta."""
+    the maintenance loop on Iceberg, closing parity with delta."""
 
     def test_optimize_compacts_as_replace_snapshot(self, spark, tmp_path):
         w = TestIcebergCowMutation._table(spark, tmp_path, "opt")

@@ -821,7 +821,7 @@ class TestUpsertStatement:
 
 class TestIcebergChangesCdf:
     """Row-level change feed on iceberg (round 12) — the leg that
-    completes the txnlog/delta ``changes_cdf`` triplet. Every write
+    twins the delta ``changes_cdf``. Every write
     shape this repo's writer commits resolves: append inserts, COW
     diffs (EXCEPT ALL cancellation), replace skipped, MoR position
     deletes (exact preimages from the delete files' row identity),

@@ -1,7 +1,7 @@
-"""Round 13: SQL surface for the three-format row-level change feed.
+"""Round 13: SQL surface for the row-level change feed.
 
-Rounds 11-12 built ``changes_cdf`` over txnlog, standard Delta, and
-Iceberg; dialect/server clients could UPSERT and time-travel but not
+Rounds 11-12 built ``changes_cdf`` over standard Delta and Iceberg;
+dialect/server clients could UPSERT and time-travel but not
 consume the feed (round-12 verdict, missing item 3). Round 13 adds
 ``CHANGES(t, <since> [, <to>])`` in FROM position — lowered in
 ``Engine._rewrite`` to the attached table's ``changes_cdf`` and
@@ -17,7 +17,6 @@ from algebraicdb_spark.engine import Engine
 from algebraicdb_spark.functions.adt import AdtError
 from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 from algebraicdb_spark.operators.iceberg_writer import IcebergTableWriter
-from algebraicdb_spark.operators.txnlog import TxnLogTable
 
 
 def _rows(df, *cols):
@@ -25,14 +24,16 @@ def _rows(df, *cols):
 
 
 class TestChangesSql:
-    def test_txnlog_changes_through_sql(self, spark, tmp_path):
+    def test_delta_cow_changes_through_sql(self, spark, tmp_path):
+        """Without the change-data-feed property the feed is derived
+        from the copy-on-write commit's remove/add diff."""
         root = str(tmp_path / "t")
-        t = TxnLogTable(root)
+        t = DeltaTableWriter(root)
         t.append(spark.createDataFrame(
             [(i, float(i)) for i in range(6)], "k long, v double"))
         t.delete(spark, "k = 2")
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE t FROM txnlog LOCATION '{root}'")
+        eng.sql(f"ATTACH TABLE t FROM delta LOCATION '{root}'")
         out = eng.sql("SELECT k, _change_type, _commit_version "
                       "FROM CHANGES(t, 0)")
         assert _rows(out, "k", "_change_type", "_commit_version") == [
@@ -75,10 +76,10 @@ class TestChangesSql:
 
     def test_empty_window_is_zero_rows_not_an_error(self, spark, tmp_path):
         root = str(tmp_path / "e")
-        t = TxnLogTable(root)
+        t = DeltaTableWriter(root)
         t.append(spark.createDataFrame([(1, 1.0)], "k long, v double"))
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE e FROM txnlog LOCATION '{root}'")
+        eng.sql(f"ATTACH TABLE e FROM delta LOCATION '{root}'")
         head = t.latest_version()
         out = eng.sql(f"SELECT * FROM CHANGES(e, {head})")
         assert out.count() == 0
@@ -89,9 +90,9 @@ class TestChangesSql:
         self, spark, tmp_path
     ):
         root = str(tmp_path / "ts")
-        t = TxnLogTable(root)
+        t = DeltaTableWriter(root)
         t.append(spark.createDataFrame([(1, 1.0)], "k long, v double"))
-        time.sleep(1.1)  # commit-file mtimes are second-grained
+        time.sleep(1.1)  # the cut below is second-grained
         import datetime
 
         cut = datetime.datetime.now(
@@ -100,7 +101,7 @@ class TestChangesSql:
         time.sleep(1.1)
         t.append(spark.createDataFrame([(2, 2.0)], "k long, v double"))
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE ts FROM txnlog LOCATION '{root}'")
+        eng.sql(f"ATTACH TABLE ts FROM delta LOCATION '{root}'")
         out = eng.sql(f"SELECT k FROM CHANGES(ts, '{cut}')")
         assert _rows(out, "k") == [(2,)]
 
@@ -136,12 +137,12 @@ class TestChangesSql:
         """The feed is a relation: join it back to the current
         snapshot — the canonical CDC-consumer pattern."""
         root = str(tmp_path / "j")
-        t = TxnLogTable(root)
+        t = DeltaTableWriter(root)
         t.append(spark.createDataFrame(
             [(i, float(i)) for i in range(5)], "k long, v double"))
         t.update(spark, {"v": "v * 100"}, "k = 3")
         eng = Engine(spark)
-        eng.sql(f"ATTACH TABLE j FROM txnlog LOCATION '{root}'")
+        eng.sql(f"ATTACH TABLE j FROM delta LOCATION '{root}'")
         out = eng.sql(
             "SELECT c.k, c._change_type, j.v AS live_v "
             "FROM CHANGES(j, 0) c JOIN j ON c.k = j.k "

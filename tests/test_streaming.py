@@ -947,7 +947,8 @@ def test_stream_near_dup_horizon_dedup_matches_unbounded(spark, sf_dir):
 def test_stream_funnel_drains_exactly_once_into_txnlog(spark, sf_dir, tmp_path):
     """The full ingest story as ONE pipeline: staged docs → composed
     dedup funnel (exact gate → LSH bucket state → pair dedup →
-    stream-static rerank) → EXACTLY-ONCE txn sink. Three guarantees,
+    stream-static rerank) → EXACTLY-ONCE txn sink into a standard
+    Delta table. Three guarantees,
     each checked from the TABLE (not a memory sink):
 
     1. one atomic commit per micro-batch, and the event log in the
@@ -967,8 +968,8 @@ def test_stream_funnel_drains_exactly_once_into_txnlog(spark, sf_dir, tmp_path):
         minhash_pairs,
         minhash_token_arrays,
     )
+    from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
     from algebraicdb_spark.operators.pipeline import INCR_SPLIT
-    from algebraicdb_spark.operators.txnlog import TxnLogTable
     from algebraicdb_spark.sources.catalog import load_tables
     from algebraicdb_spark.streaming.sink import txn_committer, txnlog_sink
 
@@ -998,7 +999,7 @@ def test_stream_funnel_drains_exactly_once_into_txnlog(spark, sf_dir, tmp_path):
     src = engine.stage_document_files(
         spark, sf_dir, INCR_SPLIT, out_dir=str(tmp_path / "src")
     )
-    t = TxnLogTable(str(tmp_path / "funnel_log"))
+    t = DeltaTableWriter(str(tmp_path / "funnel_log"))
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
@@ -1015,7 +1016,7 @@ def test_stream_funnel_drains_exactly_once_into_txnlog(spark, sf_dir, tmp_path):
     # 2 staged files → 2 micro-batches → 2 atomic commits (0, 1),
     # txn markers at the engine-assigned batch ids
     assert t.latest_version() == 1
-    assert t.last_txn_version("funnel") == 1
+    assert t.reader().last_txn_version("funnel") == 1
 
     # batch twins over the initial corpus
     want_fresh = rows_set(exact_keep, ["doc_id"])
@@ -1053,7 +1054,7 @@ def test_stream_funnel_drains_exactly_once_into_txnlog(spark, sf_dir, tmp_path):
     os.rename(os.path.join(stage, part), dst)
     os.utime(dst, (time.time() + 60, time.time() + 60))
     drain()
-    assert t.last_txn_version("funnel") == 2
+    assert t.reader().last_txn_version("funnel") == 2
 
     # final parity over the grown corpus, read from the table snapshot
     exact_keep_u = (
