@@ -31,10 +31,10 @@ protocol spec
   tests prove ``DeltaLogTable`` does.
 
 Concurrency is Delta's own: the commit publish is a create-exclusive
-write of the next version file; a racing writer loses with
-``ConcurrentWriteError`` and rebases (on S3-class stores real
-deployments route this through a commit service / conditional put —
-a deployment seam behind ``_publish``).
+write of the next version file (``txnlog.publish_exclusive``, shared
+with the Iceberg writer); a racing writer loses with
+``ConcurrentWriteError`` and ``txnlog.retry_commit`` rebases it onto
+the new head.
 
 Proof of interop is structural: every round-trip test reads the
 written table back through ``DeltaLogTable`` — the reader built and
@@ -71,6 +71,8 @@ from algebraicdb_spark.operators.txnlog import (
     _hive_partition_values,
     _schema_fields,
     parse_schema_string,
+    publish_exclusive,
+    retry_commit,
 )
 
 _EMPTY_ST = StructType([])
@@ -156,21 +158,14 @@ class DeltaTableWriter:
     # -- commit primitives ------------------------------------------------
 
     def _publish(self, version: int, actions: list[dict]) -> None:
-        """Create-exclusive publish of one commit file: two racers
-        targeting the same version get exactly one winner
-        (FileExistsError -> ConcurrentWriteError). Delta's on-disk
+        """Publish one commit file through ``publish_exclusive`` (a
+        lost race raises ``ConcurrentWriteError``). Delta's on-disk
         dialect: NDJSON, one action per line, 20-digit version
         names."""
-        target = os.path.join(self.log_dir, f"{version:020d}.json")
-        doc = "\n".join(json.dumps(a) for a in actions) + "\n"
-        try:
-            with open(target, "x") as f:
-                f.write(doc)
-        except FileExistsError as exc:
-            raise ConcurrentWriteError(
-                f"delta version {version} already committed by another "
-                "writer — rebase on the new snapshot and retry"
-            ) from exc
+        publish_exclusive(
+            os.path.join(self.log_dir, f"{version:020d}.json"),
+            "\n".join(json.dumps(a) for a in actions) + "\n",
+        )
 
     def _cm_of(self, meta: dict | None) -> dict[str, str] | None:
         """logical → physical column mapping from a metaData's pinned
@@ -882,9 +877,7 @@ class DeltaTableWriter:
         # longer refuses
 
     def enable_deletion_vectors(
-        self,
-        max_retries: int = 8,
-        extra_props: dict[str, str] | None = None,
+        self, extra_props: dict[str, str] | None = None
     ) -> int | None:
         """Commit the protocol upgrade that lets DELETEs write
         merge-on-read deletion vectors instead of rewriting files:
@@ -900,7 +893,7 @@ class DeltaTableWriter:
         commits would leave the statement half-applied (with the
         irreversible protocol upgrade already committed) if a crash
         or retry exhaustion hit between them."""
-        for _ in range(max_retries):
+        def attempt() -> int | None:
             rdr = self.reader()
             # pin the head FIRST and derive protocol/metaData AT it —
             # reading them at an unpinned head and then re-reading
@@ -951,16 +944,10 @@ class DeltaTableWriter:
                 m = {k: v for k, v in meta.items() if v is not None}
                 m["configuration"] = conf
                 actions.append({"metaData": m})
-            version = head + 1
-            try:
-                self._publish(version, actions)
-                return version
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"enable_deletion_vectors lost {max_retries} publish races "
-            "— table is under pathological write contention"
-        )
+            self._publish(head + 1, actions)
+            return head + 1
+
+        return retry_commit("enable_deletion_vectors", attempt)
 
     @staticmethod
     def _cdf_protocol_ok(proto: dict) -> bool:
@@ -973,9 +960,7 @@ class DeltaTableWriter:
         return mwv >= 4
 
     def enable_change_data_feed(
-        self,
-        max_retries: int = 8,
-        extra_props: dict[str, str] | None = None,
+        self, extra_props: dict[str, str] | None = None
     ) -> int | None:
         """Commit ``delta.enableChangeDataFeed=true`` together with a
         protocol that actually licenses it (PROTOCOL.md: CDF needs
@@ -987,7 +972,7 @@ class DeltaTableWriter:
         actions (``_cdc_actions``). No-op (returns None) when already
         fully enabled. ``extra_props`` fold into the same commit, as
         in ``enable_deletion_vectors``."""
-        for _ in range(max_retries):
+        def attempt() -> int | None:
             rdr = self.reader()
             # pin the head FIRST — see enable_deletion_vectors for the
             # lost-update window two separate reads would open
@@ -1035,15 +1020,10 @@ class DeltaTableWriter:
             m = {k: v for k, v in meta.items() if v is not None}
             m["configuration"] = conf
             actions.append({"metaData": m})
-            try:
-                self._publish(head + 1, actions)
-                return head + 1
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"enable_change_data_feed lost {max_retries} publish races "
-            "— table is under pathological write contention"
-        )
+            self._publish(head + 1, actions)
+            return head + 1
+
+        return retry_commit("enable_change_data_feed", attempt)
 
     # delta.* configuration keys this minimal writer can honestly
     # commit: ones it HONORS itself (appendOnly gates mutations,
@@ -1059,8 +1039,7 @@ class DeltaTableWriter:
     }
 
     def set_properties(
-        self, props: dict[str, str], max_retries: int = 8,
-        spark: SparkSession | None = None,
+        self, props: dict[str, str], spark: SparkSession | None = None
     ) -> int | None:
         """``SET TBLPROPERTIES`` as one metaData commit: merge
         ``props`` into the table configuration (None/'' deletes a
@@ -1124,9 +1103,7 @@ class DeltaTableWriter:
             # upgrade — the whole statement lands in one version (a
             # crash between two commits would leave it half-applied
             # with the irreversible upgrade already in)
-            v = self.enable_deletion_vectors(
-                max_retries=max_retries, extra_props=rest or None
-            )
+            v = self.enable_deletion_vectors(extra_props=rest or None)
             if v is not None or not rest:
                 return v
             # already DV-enabled (the route no-opped): the remaining
@@ -1139,13 +1116,12 @@ class DeltaTableWriter:
             # announcement land atomically (same shape as the DV route)
             rest = {k: v for k, v in props.items()
                     if k != "delta.enableChangeDataFeed"}
-            v = self.enable_change_data_feed(
-                max_retries=max_retries, extra_props=rest or None
-            )
+            v = self.enable_change_data_feed(extra_props=rest or None)
             if v is not None or not rest:
                 return v
             props = rest
-        for _ in range(max_retries):
+
+        def attempt() -> int:
             rdr = self.reader()
             # pinned head — see enable_deletion_vectors for the
             # lost-update window two separate reads would open
@@ -1169,20 +1145,13 @@ class DeltaTableWriter:
                     conf[k] = str(v)
             m = {k: v for k, v in meta.items() if v is not None}
             m["configuration"] = conf
-            try:
-                self._publish(head + 1, [
-                    self._commit_info(
-                        "SET TBLPROPERTIES", properties=props
-                    ),
-                    {"metaData": m},
-                ])
-                return head + 1
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"set_properties lost {max_retries} publish races — table "
-            "is under pathological write contention"
-        )
+            self._publish(head + 1, [
+                self._commit_info("SET TBLPROPERTIES", properties=props),
+                {"metaData": m},
+            ])
+            return head + 1
+
+        return retry_commit("set_properties", attempt)
 
     def properties(self) -> dict[str, str]:
         """The current configuration map (empty when unset);
@@ -1209,7 +1178,6 @@ class DeltaTableWriter:
         df: DataFrame,
         partition_by: list[str] | None = None,
         evolve_schema: bool = False,
-        max_retries: int = 8,
     ) -> int:
         """APPEND commit. Blind (adds-only commits never logically
         conflict): the version slot resolves at publish time and a lost
@@ -1250,29 +1218,26 @@ class DeltaTableWriter:
             df, parts, mapping=self._cm_of(cur_meta)
         )
         adds = self._add_actions(staged)
-        try:
-            for _ in range(max_retries):
-                version = self.latest_version() + 1
-                if version != base + 1:
-                    # the log advanced past the gated state: re-gate
-                    # against the new head before taking the new slot
-                    meta = self._meta_action(df, parts, evolve_schema)
-                    base = version - 1
-                head = [self._protocol_action()] if version == 0 else []
-                try:
-                    self._publish(
-                        version,
-                        head + meta
-                        + [self._commit_info("WRITE", mode="Append")]
-                        + adds,
-                    )
-                    return version
-                except ConcurrentWriteError:
-                    continue
-            raise ConcurrentWriteError(
-                f"append lost {max_retries} publish races — table is "
-                "under pathological write contention"
+
+        def attempt() -> int:
+            nonlocal base, meta
+            version = self.latest_version() + 1
+            if version != base + 1:
+                # the log advanced past the gated state: re-gate
+                # against the new head before taking the new slot
+                meta = self._meta_action(df, parts, evolve_schema)
+                base = version - 1
+            head = [self._protocol_action()] if version == 0 else []
+            self._publish(
+                version,
+                head + meta
+                + [self._commit_info("WRITE", mode="Append")]
+                + adds,
             )
+            return version
+
+        try:
+            return retry_commit("append", attempt)
         except (SchemaEvolutionError, ConcurrentWriteError):
             # the staged files were never referenced by a published
             # commit — leaving them would leak forever under vacuum's
@@ -1287,7 +1252,6 @@ class DeltaTableWriter:
         txn_version: int,
         partition_by: list[str] | None = None,
         evolve_schema: bool = False,
-        max_retries: int = 8,
     ) -> int | None:
         """Idempotent APPEND — Delta's REAL transaction-identifier
         protocol (the spec's ``txn`` action: ``{"txn": {"appId",
@@ -1335,47 +1299,45 @@ class DeltaTableWriter:
         tail = self._add_actions(staged) + [
             self._txn_action(app_id, txn_version)
         ]
+
+        def attempt() -> int | None:
+            nonlocal base, meta
+            version = self.latest_version() + 1
+            if version != base + 1:
+                # the log advanced past the validated state: the
+                # racer may have been OUR zombie twin (mark) or an
+                # evolver (gate) — re-check both against the head
+                if txn_version <= self.reader().last_txn_version(app_id):
+                    self._unstage(staged)
+                    return None
+                meta = self._meta_action(df, parts, evolve_schema)
+                base = version - 1
+            head = [self._protocol_action()] if version == 0 else []
+            self._publish(
+                version,
+                head + meta
+                + [self._commit_info("STREAMING UPDATE",
+                                     outputMode="Append")]
+                + tail,
+            )
+            return version
+
         try:
-            for _ in range(max_retries):
-                version = self.latest_version() + 1
-                if version != base + 1:
-                    # the log advanced past the validated state: the
-                    # racer may have been OUR zombie twin (mark) or an
-                    # evolver (gate) — re-check both against the head
-                    if txn_version <= self.reader().last_txn_version(
-                        app_id
-                    ):
-                        self._unstage(staged)
-                        return None
-                    meta = self._meta_action(df, parts, evolve_schema)
-                    base = version - 1
-                head = [self._protocol_action()] if version == 0 else []
-                try:
-                    self._publish(
-                        version,
-                        head + meta
-                        + [self._commit_info("STREAMING UPDATE",
-                                             outputMode="Append")]
-                        + tail,
-                    )
-                    return version
-                except ConcurrentWriteError:
-                    continue
+            return retry_commit(
+                f"append_txn({app_id}, {txn_version})", attempt
+            )
+        except SchemaEvolutionError:
+            self._unstage(staged)
+            raise
+        except ConcurrentWriteError:
+            self._unstage(staged)
             # exhausted: the FINAL slot's winner may have been our
             # own redelivered twin — a committed no-op, not a failure;
-            # the in-loop check runs at iteration top, so the last lost
-            # race would otherwise exit unchecked and kill a streaming
-            # query whose batch is durably committed
+            # the in-attempt check runs before each publish, so the
+            # last lost race would otherwise end unchecked and kill a
+            # streaming query whose batch is durably committed
             if txn_version <= self.reader().last_txn_version(app_id):
-                self._unstage(staged)
                 return None
-            raise ConcurrentWriteError(
-                f"append_txn({app_id}, {txn_version}) lost {max_retries} "
-                "publish races — table is under pathological write "
-                "contention"
-            )
-        except (SchemaEvolutionError, ConcurrentWriteError):
-            self._unstage(staged)
             raise
 
     def overwrite(
@@ -1610,9 +1572,7 @@ class DeltaTableWriter:
         conf["delta.columnMapping.maxColumnId"] = str(next_id)
         return stamped, conf
 
-    def evolve_add_column(
-        self, name: str, ddl_type: str, max_retries: int = 8
-    ) -> int:
+    def evolve_add_column(self, name: str, ddl_type: str) -> int:
         """ADDITIVE schema evolution as a METADATA-ONLY commit on the
         standard format (`ALTER TABLE … ADD COLUMN` with no data
         rewrite — readers pin schemaString, old files surface NULL).
@@ -1620,7 +1580,7 @@ class DeltaTableWriter:
         racer's commit forces a re-read + retry."""
         from pyspark.sql.types import StructType
 
-        for _ in range(max_retries):
+        def attempt() -> int:
             rdr = self.reader()
             # pin the head, read the schema AT it, publish at head+1 —
             # see enable_deletion_vectors for the lost-update window
@@ -1664,21 +1624,13 @@ class DeltaTableWriter:
             )
             if conf_patch is not None:
                 meta["metaData"]["configuration"] = conf_patch
-            version = head + 1
-            try:
-                self._publish(version, [
-                    self._commit_info(
-                        "ADD COLUMNS", columns=[name]
-                    ),
-                    meta,
-                ])
-                return version
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"evolve_add_column lost {max_retries} publish races — "
-            "table is under pathological write contention"
-        )
+            self._publish(head + 1, [
+                self._commit_info("ADD COLUMNS", columns=[name]),
+                meta,
+            ])
+            return head + 1
+
+        return retry_commit("evolve_add_column", attempt)
 
     # -- copy-on-write row mutation ------------------------------------------
 
@@ -1897,7 +1849,6 @@ class DeltaTableWriter:
         staged: list[tuple[str, dict]],
         op: str,
         params: dict,
-        max_retries: int,
         extra_actions: list[dict] | None = None,
         cdc: tuple[list[dict], list[tuple[str, dict]]] | None = None,
     ) -> int:
@@ -1933,47 +1884,47 @@ class DeltaTableWriter:
         # table-root files the log never references until publish
         unstage_all = staged + (cdc[1] if cdc else [])
         want = {raw: self._dv_key(dv_of.get(raw)) for raw in removed_raw}
-        for _ in range(max_retries):
-            # pin the head FIRST and validate (path, dv) identity AT
-            # it, so a racer landing after the check collides on
-            # head+1 and forces re-validation — a later
-            # latest_version() read would let a remove/DV-flip slip
-            # between the two reads and publish cleanly
-            head = self.latest_version()
-            live_now = {
-                raw: self._dv_key(dv)
-                for raw, _r, _p, dv
-                in self.reader()._live_entries_full(head)
-            }
-            conflicted = sorted(
-                raw for raw, k in want.items()
-                if raw not in live_now or live_now[raw] != k
+        try:
+            return retry_commit(
+                op, lambda: self._publish_if_live(want, actions, op)
             )
-            if conflicted:
-                self._unstage(unstage_all)
-                raise ConcurrentWriteError(
-                    f"{op} inputs {conflicted[:3]} were removed or "
-                    "DV-mutated by a concurrent writer — committing "
-                    "would resurrect or double-mutate replaced data; "
-                    f"rerun {op} on the new snapshot"
-                )
-            version = head + 1
-            try:
-                self._publish(version, actions)
-                return version
-            except ConcurrentWriteError:
-                continue
-        self._unstage(unstage_all)
-        raise ConcurrentWriteError(
-            f"{op} lost {max_retries} publish races — table is under "
-            "pathological write contention"
+        except ConcurrentWriteError:
+            self._unstage(unstage_all)
+            raise
+
+    def _publish_if_live(
+        self, want: dict[str, tuple | None], actions: list[dict], op: str
+    ) -> int:
+        """One attempt of a commit that removes or re-vectors files:
+        pin the head FIRST and validate each input's (path, dv)
+        identity AT it, then publish at head+1 — so a racer landing
+        after the check collides on head+1 and forces re-validation (a
+        later latest_version() read would let a remove/DV-flip slip
+        between the two reads and publish cleanly). An input removed
+        or DV-mutated by a concurrent writer aborts the commit."""
+        head = self.latest_version()
+        live_now = {
+            raw: self._dv_key(dv)
+            for raw, _r, _p, dv in self.reader()._live_entries_full(head)
+        }
+        conflicted = sorted(
+            raw for raw, k in want.items()
+            if raw not in live_now or live_now[raw] != k
         )
+        if conflicted:
+            raise ConcurrentWriteError(
+                f"{op} inputs {conflicted[:3]} were removed or "
+                "DV-mutated by a concurrent writer — committing "
+                "would resurrect or double-mutate replaced data; "
+                f"rerun {op} on the new snapshot"
+            )
+        self._publish(head + 1, actions)
+        return head + 1
 
     def delete(
         self,
         spark: SparkSession,
         predicate: str,
-        max_retries: int = 8,
         mode: str = "auto",
         dv_inline_threshold: int = 512,
     ) -> dict:
@@ -2032,7 +1983,7 @@ class DeltaTableWriter:
             # ordinals, which no mapping touches
             return self._delete_mor(
                 spark, rdr, entries, st, part_cols, by_local,
-                predicate, max_retries, dv_inline_threshold, meta,
+                predicate, dv_inline_threshold, meta,
                 mapping=mapping,
             )
         by_raw, matched = self._probe_affected(
@@ -2081,7 +2032,7 @@ class DeltaTableWriter:
             )
         version = self._commit_cow(
             sorted(by_raw), pv_of, dv_of, staged, "DELETE",
-            {"predicate": predicate}, max_retries, cdc=cdc,
+            {"predicate": predicate}, cdc=cdc,
         )
         return {
             "version": version,
@@ -2311,7 +2262,7 @@ class DeltaTableWriter:
 
     def _delete_mor(
         self, spark, rdr, entries, st, part_cols, by_local,
-        predicate: str, max_retries: int, inline_threshold: int,
+        predicate: str, inline_threshold: int,
         meta: dict | None = None,
         mapping: dict[str, str] | None = None,
     ) -> dict:
@@ -2361,7 +2312,7 @@ class DeltaTableWriter:
         try:
             version = self._commit_cow(
                 sorted(new_pos), pv_of, dv_of, [], "DELETE",
-                {"predicate": predicate}, max_retries,
+                {"predicate": predicate},
                 extra_actions=adds + extra, cdc=cdc,
             )
         except ConcurrentWriteError:
@@ -2379,7 +2330,6 @@ class DeltaTableWriter:
         spark: SparkSession,
         assignments: dict[str, str],
         predicate: str | None = None,
-        max_retries: int = 8,
         mode: str = "auto",
         dv_inline_threshold: int = 512,
     ) -> dict:
@@ -2442,7 +2392,7 @@ class DeltaTableWriter:
             # mapped tables compose since round 14 (see _delete_mor)
             return self._update_mor(
                 spark, rdr, entries, st, part_cols, by_local,
-                assignments, pred, max_retries, dv_inline_threshold,
+                assignments, pred, dv_inline_threshold,
                 meta, mapping=mapping,
             )
         by_raw, matched = self._probe_affected(
@@ -2515,7 +2465,7 @@ class DeltaTableWriter:
             )
         version = self._commit_cow(
             affected, pv_of, dv_of, staged, "UPDATE",
-            {"predicate": pred}, max_retries, cdc=cdc,
+            {"predicate": pred}, cdc=cdc,
         )
         return {
             "version": version,
@@ -2525,7 +2475,7 @@ class DeltaTableWriter:
 
     def _update_mor(
         self, spark, rdr, entries, st, part_cols, by_local,
-        assignments: dict[str, str], pred: str, max_retries: int,
+        assignments: dict[str, str], pred: str,
         inline_threshold: int, meta: dict | None = None,
         mapping: dict[str, str] | None = None,
     ) -> dict:
@@ -2594,7 +2544,7 @@ class DeltaTableWriter:
         try:
             version = self._commit_cow(
                 affected, pv_of, dv_of, staged, "UPDATE",
-                {"predicate": pred}, max_retries,
+                {"predicate": pred},
                 extra_actions=adds + extra, cdc=cdc,
             )
         except ConcurrentWriteError:
@@ -2615,7 +2565,6 @@ class DeltaTableWriter:
         insert_exprs: list[str] | None,
         target_alias: str = "t",
         source_alias: str = "s",
-        max_retries: int = 8,
         delete_matched: bool = False,
         mode: str = "auto",
         dv_inline_threshold: int = 512,
@@ -2678,7 +2627,7 @@ class DeltaTableWriter:
             return self._merge_mor(
                 spark, rdr, entries, st, part_cols, by_local, source,
                 cond, assignments, insert_exprs, target_alias,
-                source_alias, max_retries, delete_matched,
+                source_alias, delete_matched,
                 dv_inline_threshold, meta, mapping=mapping,
             )
         res_of = {raw: res for raw, res, _pv, _dv in entries}
@@ -2826,7 +2775,7 @@ class DeltaTableWriter:
             )
         version = self._commit_cow(
             affected, pv_of, dv_of, staged, "MERGE",
-            {"predicate": cond}, max_retries, cdc=cdc,
+            {"predicate": cond}, cdc=cdc,
         )
         return {
             "version": version,
@@ -2838,7 +2787,7 @@ class DeltaTableWriter:
     def _merge_mor(
         self, spark, rdr, entries, st, part_cols, by_local, source,
         cond: str, assignments, insert_exprs, target_alias,
-        source_alias, max_retries: int, delete_matched: bool,
+        source_alias, delete_matched: bool,
         inline_threshold: int, meta: dict | None = None,
         mapping: dict[str, str] | None = None,
     ) -> dict:
@@ -2958,7 +2907,7 @@ class DeltaTableWriter:
         try:
             version = self._commit_cow(
                 sorted(new_pos), pv_of, dv_of, staged, "MERGE",
-                {"predicate": cond}, max_retries,
+                {"predicate": cond},
                 extra_actions=adds + extra, cdc=cdc,
             )
         except (ConcurrentWriteError, ValueError):
@@ -2973,7 +2922,7 @@ class DeltaTableWriter:
 
     # -- maintenance -------------------------------------------------------
 
-    def restore(self, version: int, max_retries: int = 8) -> dict:
+    def restore(self, version: int) -> dict:
         """RESTORE the table to its state at ``version`` as ONE NEW
         data-changing commit on the standard format — Delta's own
         RESTORE semantics: rollback with history preserved (time
@@ -3011,7 +2960,8 @@ class DeltaTableWriter:
                 "retention window"
             )
         now_ms = int(time.time() * 1000)
-        for _ in range(max_retries):
+
+        def attempt() -> dict:
             head = rdr.latest_version()
             proto, meta = rdr._protocol_meta(head)
             self._check_writable(proto, meta, "RESTORE")
@@ -3073,24 +3023,18 @@ class DeltaTableWriter:
                 if dv is not None:
                     a["deletionVector"] = dv
                 actions.append({"add": a})
-            try:
-                self._publish(head + 1, actions)
-                return {"version": head + 1,
-                        "files_removed": len(removes),
-                        "files_readded": len(readds)}
-            except ConcurrentWriteError:
-                continue  # racer took the slot: re-derive off its head
-        raise ConcurrentWriteError(
-            f"restore lost {max_retries} publish races — table is "
-            "under pathological write contention"
-        )
+            self._publish(head + 1, actions)
+            return {"version": head + 1,
+                    "files_removed": len(removes),
+                    "files_readded": len(readds)}
+
+        return retry_commit("restore", attempt)
 
     def optimize(
         self,
         spark: SparkSession,
         target_files: int = 1,
         min_inputs: int = 2,
-        max_retries: int = 8,
         zorder_by: list[str] | None = None,
     ) -> int | None:
         """OPTIMIZE — transactional small-file compaction on the
@@ -3180,45 +3124,21 @@ class DeltaTableWriter:
         inputs = {
             raw: self._dv_key(dv) for raw, _res, _pv, dv in entries
         }
-        for _ in range(max_retries):
-            # pinned head: identity validated AT the publish slot's
-            # parent — see the COW commit loop for the two-read race
-            head = self.latest_version()
-            live_now = {
-                raw: self._dv_key(dv)
-                for raw, _r, _p, dv
-                in self.reader()._live_entries_full(head)
-            }
-            gone = sorted(
-                raw for raw, k in inputs.items()
-                if raw not in live_now or live_now[raw] != k
+        actions = [
+            self._commit_info("OPTIMIZE", zOrderBy=zorder_by)
+            if zorder_by
+            else self._commit_info("OPTIMIZE")
+        ] + removes + adds
+        try:
+            return retry_commit(
+                "optimize",
+                lambda: self._publish_if_live(inputs, actions, "optimize"),
             )
-            if gone:
-                # abort path: the compacted staging is unreferenced —
-                # unstage or it leaks under vacuum's log-candidates rule
-                self._unstage(staged)
-                raise ConcurrentWriteError(
-                    f"optimize inputs {gone[:3]} were removed or "
-                    "DV-mutated by a concurrent writer — committing "
-                    "would resurrect replaced data; rerun optimize on "
-                    "the new snapshot"
-                )
-            version = head + 1
-            info = (
-                self._commit_info("OPTIMIZE", zOrderBy=zorder_by)
-                if zorder_by
-                else self._commit_info("OPTIMIZE")
-            )
-            try:
-                self._publish(version, [info] + removes + adds)
-                return version
-            except ConcurrentWriteError:
-                continue
-        self._unstage(staged)
-        raise ConcurrentWriteError(
-            f"optimize lost {max_retries} publish races — table is "
-            "under pathological write contention"
-        )
+        except ConcurrentWriteError:
+            # abort paths: the compacted staging is unreferenced —
+            # unstage or it leaks under vacuum's log-candidates rule
+            self._unstage(staged)
+            raise
 
     def vacuum(self, retain_versions: int = 2) -> list[str]:
         """Physically delete data files the LOG references but no

@@ -15,9 +15,10 @@ the public spec (https://iceberg.apache.org/spec/):
   with field ids, partition-specs, sort-orders, last-sequence-number,
   snapshot chain with parent ids, snapshot-log/metadata-log) published
   CREATE-EXCLUSIVELY — two racers targeting the same metadata version
-  get exactly one winner (the same optimistic primitive as
-  ``DeltaTableWriter._publish``; real catalogs arbitrate this swap,
-  the same deployment seam);
+  get exactly one winner. This is the commit primitive both writers
+  share, ``txnlog.publish_exclusive``, and a lost race reruns the
+  commit through the shared ``txnlog.retry_commit`` (real catalogs
+  arbitrate this swap, the same deployment seam);
 - ``version-hint.text`` swung atomically for hint-based readers.
 
 ``AvroFileWriter`` is the write twin of ``AvroFileReader`` — a
@@ -51,12 +52,17 @@ import re
 import struct
 import time
 import uuid
-from typing import Any
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from algebraicdb_spark.operators.iceberg import AvroFileReader, IcebergTable
-from algebraicdb_spark.operators.txnlog import ConcurrentWriteError
+from algebraicdb_spark.operators.txnlog import (
+    ConcurrentWriteError,
+    publish_exclusive,
+    retry_commit,
+)
 
 _MAGIC = b"Obj\x01"
 _SYNC = b"algebraicdbspark"  # any 16 bytes; stable aids diffing
@@ -918,6 +924,51 @@ _MANIFEST_LIST_SCHEMA = {
 }
 
 
+@dataclass
+class _Draft:
+    """The snapshot a commit is building: its sequence number and id,
+    the v3 row-id cursor (None below v3; each ADDED data file takes
+    its range from here) and every file the attempt wrote — unlinked
+    when the publish loses."""
+
+    seq: int
+    id: int
+    next_row: int | None
+    written: list[str] = field(default_factory=list)
+
+
+def _ml_row(
+    mpath: str,
+    draft: _Draft,
+    spec_id: int,
+    content: int = 0,
+    added: tuple[int, int] = (0, 0),
+    existing: tuple[int, int] = (0, 0),
+    deleted: tuple[int, int] = (0, 0),
+    min_seq: int | None = None,
+    first_row_id: int | None = None,
+) -> dict:
+    """The manifest-list row for a manifest ``draft`` wrote: content
+    0 for data manifests, 1 for any deletes; each count pair is
+    (files, rows)."""
+    return {
+        "manifest_path": mpath,
+        "manifest_length": os.path.getsize(mpath),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": draft.seq,
+        "min_sequence_number": draft.seq if min_seq is None else min_seq,
+        "added_snapshot_id": draft.id,
+        "added_files_count": added[0],
+        "existing_files_count": existing[0],
+        "deleted_files_count": deleted[0],
+        "added_rows_count": added[1],
+        "existing_rows_count": existing[1],
+        "deleted_rows_count": deleted[1],
+        "first_row_id": first_row_id,
+    }
+
+
 class IcebergTableWriter:
     """Append parquet batches as real Iceberg v2 snapshots other
     engines consume; reads of our own output go back through
@@ -1249,10 +1300,7 @@ class IcebergTableWriter:
         return [(f["transform"], f["source"]) for f in spec_parts]
 
     def append(
-        self,
-        df: DataFrame,
-        max_retries: int = 8,
-        partition_by: list[str] | None = None,
+        self, df: DataFrame, partition_by: list[str] | None = None
     ) -> int:
         """One APPEND snapshot: stage data files, write manifest +
         manifest list (prior manifests carried forward verbatim),
@@ -1303,29 +1351,24 @@ class IcebergTableWriter:
                 self._cur_fields(cur) if cur is not None else fields
             ),
         )
-        try:
-            for _ in range(max_retries):
-                base_v, cur = self._current()
-                if cur is not None:
-                    self._gate_schema(cur, fields)
-                    if self._canon_spec(
-                        self._cur_spec(cur)
-                    ) != self._canon_spec(spec_parts):
-                        raise ValueError(
-                            "iceberg append: a concurrent writer "
-                            "changed the partition spec — rebase"
-                        )
-                try:
-                    return self._publish(
-                        base_v, cur, fields, staged,
-                        spec_parts=spec_parts,
+
+        def attempt() -> int:
+            base_v, cur = self._current()
+            if cur is not None:
+                self._gate_schema(cur, fields)
+                if self._canon_spec(
+                    self._cur_spec(cur)
+                ) != self._canon_spec(spec_parts):
+                    raise ValueError(
+                        "iceberg append: a concurrent writer "
+                        "changed the partition spec — rebase"
                     )
-                except ConcurrentWriteError:
-                    continue
-            raise ConcurrentWriteError(
-                f"iceberg append lost {max_retries} metadata publish "
-                "races — table is under pathological write contention"
+            return self._publish(
+                base_v, cur, fields, staged, spec_parts=spec_parts
             )
+
+        try:
+            return retry_commit("iceberg append", attempt)
         except (ValueError, NotImplementedError, ConcurrentWriteError):
             self._unstage(staged)
             raise
@@ -1339,7 +1382,11 @@ class IcebergTableWriter:
         SUMMARY properties, which the spec allows to carry arbitrary
         engine entries — marks survive as long as their snapshots,
         so expire snapshots older than the sink's replay horizon only."""
-        _v, cur = self._current()
+        return self._txn_mark(self._current()[1], app_id)
+
+    @staticmethod
+    def _txn_mark(cur: dict | None, app_id: str) -> int:
+        """``last_txn_version`` read from metadata the caller holds."""
         mark = -1
         for s in (cur or {}).get("snapshots") or []:
             summ = s.get("summary") or {}
@@ -1355,7 +1402,6 @@ class IcebergTableWriter:
         df: DataFrame,
         app_id: str,
         txn_version: int,
-        max_retries: int = 8,
     ) -> int | None:
         """Idempotent APPEND — the iceberg twin of
         ``DeltaTableWriter.append_txn``: the (app_id, txn_version)
@@ -1381,47 +1427,36 @@ class IcebergTableWriter:
                 self._cur_fields(cur) if cur is not None else fields
             ),
         )
+
+        def attempt() -> int | None:
+            base_v, cur = self._current()
+            if txn_version <= self._txn_mark(cur, app_id):
+                self._unstage(staged)
+                return None
+            if cur is not None:
+                self._gate_schema(cur, fields)
+            return self._publish(
+                base_v, cur, fields, staged,
+                extra_summary={
+                    "txn-app-id": app_id,
+                    "txn-version": str(txn_version),
+                },
+                spec_parts=spec_parts,
+            )
+
         try:
-            for _ in range(max_retries):
-                base_v, cur = self._current()
-                mark = -1
-                for s in (cur or {}).get("snapshots") or []:
-                    summ = s.get("summary") or {}
-                    if summ.get("txn-app-id") == app_id:
-                        try:
-                            mark = max(
-                                mark, int(summ.get("txn-version", -1))
-                            )
-                        except (TypeError, ValueError):
-                            continue
-                if txn_version <= mark:
-                    self._unstage(staged)
-                    return None
-                if cur is not None:
-                    self._gate_schema(cur, fields)
-                try:
-                    return self._publish(
-                        base_v, cur, fields, staged,
-                        extra_summary={
-                            "txn-app-id": app_id,
-                            "txn-version": str(txn_version),
-                        },
-                        spec_parts=spec_parts,
-                    )
-                except ConcurrentWriteError:
-                    continue
+            return retry_commit(
+                f"iceberg append_txn({app_id}, {txn_version})", attempt
+            )
+        except (ValueError, NotImplementedError):
+            self._unstage(staged)
+            raise
+        except ConcurrentWriteError:
+            self._unstage(staged)
             # exhausted: the final slot's winner may have been our own
             # redelivered twin — a committed no-op, not a failure
             if txn_version <= self.last_txn_version(app_id):
-                self._unstage(staged)
                 return None
-            raise ConcurrentWriteError(
-                f"iceberg append_txn({app_id}, {txn_version}) lost "
-                f"{max_retries} metadata publish races — table is "
-                "under pathological write contention"
-            )
-        except (ValueError, NotImplementedError, ConcurrentWriteError):
-            self._unstage(staged)
             raise
 
     def _check_fv_writable(
@@ -1472,7 +1507,6 @@ class IcebergTableWriter:
         spec_parts: list[dict] | None = None,
     ) -> int:
         self._check_fv_writable(cur)
-        now_ms = int(time.time() * 1000)
         spec_parts = spec_parts or []
         by_name = {f["name"]: f for f in fields}
         part_fields = [
@@ -1488,16 +1522,6 @@ class IcebergTableWriter:
              "field-id": 1000 + i}
             for i, sf in enumerate(spec_parts)
         ]
-        seq = int((cur or {}).get("last-sequence-number", 0)) + 1
-        snaps = list((cur or {}).get("snapshots") or [])
-        snap_id = max(
-            (s["snapshot-id"] for s in snaps), default=1000
-        ) + 1
-        parent = (cur or {}).get("current-snapshot-id")
-        # the new manifest: ADDED entries with EXPLICIT sequence numbers
-        mpath = os.path.join(
-            self.meta_dir, f"m-{snap_id}-{uuid.uuid4().hex}.avro"
-        )
         # bounds key on the TABLE's field ids, not the batch's
         # positional ones: _gate_schema admits any (name, type)-equal
         # batch, so a foreign table whose current-schema ids are not
@@ -1507,163 +1531,212 @@ class IcebergTableWriter:
         # min/max, silently dropping matching files. Only the
         # table-creating first commit takes the batch's own ids.
         bound_fields = self._cur_fields(cur) if cur is not None else fields
-        # format-version 3 row lineage (round 14): this snapshot
-        # reserves the id range [next-row-id, next-row-id + added
-        # rows); each ADDED data file records its first_row_id
-        # EXPLICITLY (readers may also inherit from the manifest-list
-        # row, but explicit ids survive manifest rewrites), the
-        # manifest-list row and snapshot record the range start, and
-        # the table's next-row-id advances past the range.
         fv = self._fv_of(cur)
-        first_row = (
-            int((cur or {}).get("next-row-id", 0) or 0)
-            if fv >= 3 else None
+        cur = cur or {}
+        md = {
+            "format-version": fv,
+            "table-uuid": cur.get("table-uuid") or str(uuid.uuid4()),
+            "location": self.path,
+            # nested ids count too — the deepest id anywhere in the
+            # tree, or the table's own recorded watermark if higher
+            "last-column-id": max(
+                _max_field_id(fields),
+                int(cur.get("last-column-id", 0) or 0),
+            ),
+            "schemas": cur.get("schemas")
+            or [{"schema-id": 0, "type": "struct", "fields": fields}],
+            "current-schema-id": cur.get("current-schema-id", 0),
+            "partition-specs": cur.get("partition-specs")
+            or [{"spec-id": 0, "fields": spec_fields}],
+            "default-spec-id": cur.get("default-spec-id", 0),
+            "last-partition-id": cur.get(
+                "last-partition-id", 999 + len(spec_fields)),
+            "sort-orders": cur.get("sort-orders")
+            or [{"order-id": 0, "fields": []}],
+            "default-sort-order-id": cur.get("default-sort-order-id", 0),
+            "properties": cur.get("properties") or {},
+            "metadata-log": list(cur.get("metadata-log") or []),
+        }
+        # additive v3 metadata this writer doesn't interpret (e.g. the
+        # upgrade-era row-lineage flag) carries through
+        if fv >= 3 and "row-lineage" in cur:
+            md["row-lineage"] = cur["row-lineage"]
+        parent = cur.get("current-snapshot-id")
+
+        def manifests(draft: _Draft) -> list[dict]:
+            carried: list[dict] = []
+            if parent is not None:
+                prev = next(
+                    s for s in cur["snapshots"]
+                    if s["snapshot-id"] == parent
+                )
+                # resolve like every READ path does — foreign metadata
+                # records the manifest-list as an absolute URI
+                # (file://…) and moved/copied tables need re-rooting; a
+                # raw open() would break appends onto any table we
+                # didn't write
+                carried = [
+                    self._carry_row(r)
+                    for r in AvroFileReader(
+                        self.reader()._resolve(prev["manifest-list"])
+                    ).records
+                ]
+            return carried + [self._write_manifest(
+                draft, staged, _manifest_schema(part_fields, fv=fv),
+                md["default-spec-id"], bound_fields,
+            )]
+
+        return self._commit_snapshot(
+            base_v, cur, md,
+            {"operation": "append",
+             "added-data-files": str(len(staged)),
+             "added-records": str(sum(r for _p, r, _b, _pv in staged)),
+             **(extra_summary or {})},
+            manifests,
         )
-        row_cursor = first_row
+
+    def _write_manifest(
+        self,
+        draft: _Draft,
+        staged: list[tuple[str, int, int, dict]],
+        mschema: dict,
+        spec_id: int,
+        bound_fields: list[dict],
+        content: int = 0,
+        eq_ids: list[int] | None = None,
+    ) -> dict:
+        """Write one manifest of ADDED entries (explicit sequence
+        numbers) for the ``staged`` files and return its manifest-list
+        row. ``content``: 0 = data, 1 = position deletes, 2 = equality
+        deletes carrying ``eq_ids``. Data files record per-column
+        [min, max] bounds from their footers over ``bound_fields`` (the
+        stats every Iceberg planner data-skips on) and, on format
+        version 3, their row lineage: each file reserves the id range
+        [cursor, cursor + rows) EXPLICITLY (readers may also inherit
+        from the manifest-list row, but explicit ids survive manifest
+        rewrites), and the manifest-list row records the range start."""
+        mpath = os.path.join(
+            self.meta_dir, f"m-{draft.id}-{uuid.uuid4().hex}.avro"
+        )
+        first_row = draft.next_row if content == 0 else None
         entries = []
         for p, rows, size, pv in staged:
-            lo_b, hi_b = _footer_bounds(p, bound_fields)
+            lo_b, hi_b = (
+                _footer_bounds(p, bound_fields)
+                if content == 0 else (None, None)
+            )
             dfile = {
-                "content": 0,
+                "content": content,
                 "file_path": p,
                 "file_format": "PARQUET",
                 "partition": pv,
                 "record_count": rows,
                 "file_size_in_bytes": size,
-                # per-column [min, max] from the footers — the
-                # stats every Iceberg planner data-skips on
                 "lower_bounds": lo_b,
                 "upper_bounds": hi_b,
+                "equality_ids": eq_ids,
             }
-            if fv >= 3:
-                dfile["first_row_id"] = row_cursor
-                row_cursor += rows
+            if first_row is not None:
+                dfile["first_row_id"] = draft.next_row
+                draft.next_row += rows
             entries.append({
                 "status": 1,
-                "snapshot_id": snap_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
+                "snapshot_id": draft.id,
+                "sequence_number": draft.seq,
+                "file_sequence_number": draft.seq,
                 "data_file": dfile,
             })
-        AvroFileWriter.write(
-            mpath, _manifest_schema(part_fields, fv=fv), entries
+        AvroFileWriter.write(mpath, mschema, entries)
+        draft.written.append(mpath)
+        return _ml_row(
+            mpath, draft, spec_id, content=min(content, 1),
+            added=(len(staged), sum(r for _p, r, _b, _pv in staged)),
+            first_row_id=first_row,
         )
-        n_rows = sum(r for _p, r, _b, _pv in staged)
-        new_entry = {
-            "manifest_path": mpath,
-            "manifest_length": os.path.getsize(mpath),
-            "partition_spec_id": (cur or {}).get(
-                "default-spec-id", 0),
-            "content": 0,
-            "sequence_number": seq,
-            "min_sequence_number": seq,
-            "added_snapshot_id": snap_id,
-            "added_files_count": len(staged),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_rows,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
-        if fv >= 3:
-            new_entry["first_row_id"] = first_row
-        carried: list[dict] = []
-        if parent is not None:
-            prev = next(
-                s for s in snaps if s["snapshot-id"] == parent
+
+    def _head_snapshot(self, cur: dict) -> dict:
+        """The current snapshot a mutation builds on — a
+        created-but-never-appended table (snapshots=[]) has no manifest
+        list to carry, and a bare StopIteration would both confuse the
+        caller and leak its staging."""
+        parent = cur.get("current-snapshot-id")
+        prev = next(
+            (s for s in cur.get("snapshots") or []
+             if s["snapshot-id"] == parent),
+            None,
+        )
+        if prev is None:
+            raise ValueError(
+                f"iceberg table {self.path} has no current snapshot "
+                "to mutate — append a first batch"
             )
-            # resolve like every READ path does — foreign metadata
-            # records the manifest-list as an absolute URI (file://…)
-            # and moved/copied tables need re-rooting; a raw open()
-            # would break appends onto any table we didn't write
-            carried = [
-                self._carry_row(r)
-                for r in AvroFileReader(
-                    self.reader()._resolve(prev["manifest-list"])
-                ).records
-            ]
-        ml_path = os.path.join(
-            self.meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
+        return prev
+
+    def _commit_snapshot(
+        self,
+        base_v: int,
+        cur: dict,
+        md: dict,
+        summary: dict[str, str],
+        write_manifests: Callable[[_Draft], list[dict]],
+    ) -> int:
+        """The tail every snapshot-producing commit shares. Drafts the
+        next snapshot — sequence number, id, parent = the current
+        snapshot, v3 ``first-row-id`` = the table's ``next-row-id`` —
+        lets ``write_manifests(draft)`` write its manifests and return
+        the manifest-list rows, writes the manifest list, records the
+        snapshot in ``md`` (the caller's new metadata) and publishes
+        it. Returns the new snapshot id. Loses the race → unlinks every
+        file the attempt wrote and raises ``ConcurrentWriteError`` (the
+        caller unstages and re-derives from the new head)."""
+        fv = self._fv_of(md)
+        snaps = list(cur.get("snapshots") or [])
+        parent = cur.get("current-snapshot-id")
+        first_row = (
+            int(cur.get("next-row-id", 0) or 0) if fv >= 3 else None
         )
-        AvroFileWriter.write(
-            ml_path, _ml_schema(fv), carried + [new_entry]
-        )
-        new_snap = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": ml_path,
-            "summary": {"operation": "append",
-                        "added-data-files": str(len(staged)),
-                        "added-records": str(n_rows),
-                        **(extra_summary or {})},
-            "schema-id": 0,
-        }
-        if fv >= 3:
-            new_snap["first-row-id"] = first_row
-        if parent is not None:
-            new_snap["parent-snapshot-id"] = parent
-        md = {
-            "format-version": fv,
-            "table-uuid": (cur or {}).get("table-uuid")
-            or str(uuid.uuid4()),
-            "location": self.path,
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
-            # nested ids count too — the deepest id anywhere in the
-            # tree, or the table's own recorded watermark if higher
-            "last-column-id": max(
-                _max_field_id(fields),
-                int((cur or {}).get("last-column-id", 0) or 0),
-            ),
-            "schemas": (cur or {}).get("schemas")
-            or [{"schema-id": 0, "type": "struct", "fields": fields}],
-            "current-schema-id": (cur or {}).get("current-schema-id", 0),
-            "partition-specs": (cur or {}).get("partition-specs")
-            or [{"spec-id": 0, "fields": spec_fields}],
-            "default-spec-id": (cur or {}).get("default-spec-id", 0),
-            "last-partition-id": (cur or {}).get(
-                "last-partition-id", 999 + len(spec_fields)),
-            "sort-orders": (cur or {}).get("sort-orders")
-            or [{"order-id": 0, "fields": []}],
-            "default-sort-order-id": (cur or {}).get(
-                "default-sort-order-id", 0),
-            "properties": (cur or {}).get("properties") or {},
-            "current-snapshot-id": snap_id,
-            "snapshots": snaps + [new_snap],
-            "snapshot-log": list((cur or {}).get("snapshot-log") or [])
-            + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}],
-            "metadata-log": list((cur or {}).get("metadata-log") or []),
-        }
-        if fv >= 3:
-            md["next-row-id"] = first_row + n_rows
-            # additive v3 metadata this writer doesn't interpret
-            # (e.g. the upgrade-era row-lineage flag) carries through
-            for k in ("row-lineage",):
-                if cur is not None and k in cur:
-                    md[k] = cur[k]
-        target = os.path.join(
-            self.meta_dir, f"v{base_v + 1}.metadata.json"
+        draft = _Draft(
+            seq=int(cur.get("last-sequence-number", 0)) + 1,
+            id=max((s["snapshot-id"] for s in snaps), default=1000) + 1,
+            next_row=first_row,
         )
         try:
-            with open(target, "x") as f:
-                json.dump(md, f)
-        except FileExistsError as exc:
-            # a racer published this metadata version first — the
-            # manifest/list files above are uniquely named and now
-            # unreferenced; remove them before the retry re-emits
-            os.unlink(mpath)
-            os.unlink(ml_path)
-            raise ConcurrentWriteError(
-                f"iceberg metadata v{base_v + 1} already committed by "
-                "another writer — rebase and retry"
-            ) from exc
-        hint = os.path.join(self.meta_dir, "version-hint.text")
-        tmp = hint + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(base_v + 1))
-        os.replace(tmp, hint)  # atomic pointer swing
-        return snap_id
+            rows = write_manifests(draft)
+            ml_path = os.path.join(
+                self.meta_dir, f"snap-{draft.id}-{uuid.uuid4().hex}.avro"
+            )
+            AvroFileWriter.write(ml_path, _ml_schema(fv), rows)
+            draft.written.append(ml_path)
+            now_ms = int(time.time() * 1000)
+            new_snap = {
+                "snapshot-id": draft.id,
+                "sequence-number": draft.seq,
+                "timestamp-ms": now_ms,
+                "manifest-list": ml_path,
+                "summary": summary,
+                "schema-id": md.get("current-schema-id", 0),
+            }
+            if parent is not None:
+                new_snap["parent-snapshot-id"] = parent
+            if fv >= 3:
+                # the snapshot records its reserved range and the
+                # table's high-water mark advances past it
+                new_snap["first-row-id"] = first_row
+                md["next-row-id"] = draft.next_row
+            md["last-sequence-number"] = draft.seq
+            md["last-updated-ms"] = now_ms
+            md["current-snapshot-id"] = draft.id
+            md["snapshots"] = snaps + [new_snap]
+            md["snapshot-log"] = list(cur.get("snapshot-log") or []) + [
+                {"timestamp-ms": now_ms, "snapshot-id": draft.id}
+            ]
+            self._publish_metadata(md, base_v)
+        except ConcurrentWriteError:
+            for p in draft.written:
+                if os.path.exists(p):
+                    os.unlink(p)
+            raise
+        return draft.id
 
     # -- copy-on-write row mutation (round 11, second half) ----------------
     #
@@ -2011,165 +2084,44 @@ class IcebergTableWriter:
         partition record shape — each staged tuple's pv then lands in
         its manifest entry, making the delete/data files
         PARTITION-SCOPED the way every conformant planner expects
-        (round 12: what partitioned keyed upserts ride on). Loses the
-        race → unlinks its avros and raises (the caller unstages +
-        re-probes on the new head)."""
+        (round 12: what partitioned keyed upserts ride on). On v3 the
+        data batch reserves fresh row ids; the delete side names
+        existing rows and gets none. Loses the race → unlinks its
+        avros and raises (the caller unstages + re-probes on the new
+        head)."""
         self._check_fv_writable(cur)
-        now_ms = int(time.time() * 1000)
-        fv = self._fv_of(cur)
-        first_row = (
-            int(cur.get("next-row-id", 0) or 0) if fv >= 3 else None
-        )
-        row_cursor = first_row
-        seq = int(cur.get("last-sequence-number", 0)) + 1
-        snaps = list(cur.get("snapshots") or [])
-        snap_id = max((s["snapshot-id"] for s in snaps), default=1000) + 1
-        parent = cur.get("current-snapshot-id")
-        prev = next(
-            (s for s in snaps if s["snapshot-id"] == parent), None
-        )
-        if prev is None:
-            # a created-but-never-appended table (snapshots=[]) has no
-            # manifest list to carry — a bare StopIteration here would
-            # both confuse the caller and leak its staging
-            raise ValueError(
-                f"iceberg table {self.path} has no current snapshot "
-                "to mutate — append a first batch"
-            )
-        mschema = _manifest_schema(part_fields or [], fv=fv)
+        prev = self._head_snapshot(cur)
+        mschema = _manifest_schema(part_fields or [], fv=self._fv_of(cur))
+        spec_id = cur.get("default-spec-id", 0)
         cur_fields = self._cur_fields(cur)
-        written: list[str] = []
-        try:
-            new_rows = [
+
+        def manifests(draft: _Draft) -> list[dict]:
+            rows = [
                 self._carry_row(r)
                 for r in AvroFileReader(
                     rdr._resolve(prev["manifest-list"])
                 ).records
             ]
-
-            def manifest(
-                staged, file_content: int,
-                eq_ids: list[int] | None = None,
-            ) -> None:
-                # file_content: 0 = data, 1 = position deletes,
-                # 2 = equality deletes; the manifest-LIST row is
-                # binary — 0 for data manifests, 1 for any deletes
-                mp = os.path.join(
-                    self.meta_dir, f"m-{snap_id}-{uuid.uuid4().hex}.avro"
-                )
-                nonlocal row_cursor
-                m_first_row = row_cursor if file_content == 0 else None
-                entries = []
-                for p, rows, size, pv in staged:
-                    lo_b, hi_b = (
-                        _footer_bounds(p, cur_fields)
-                        if file_content == 0 else (None, None)
-                    )
-                    dfile = {
-                        "content": file_content,
-                        "file_path": p,
-                        "file_format": "PARQUET",
-                        "partition": pv if part_fields else {},
-                        "record_count": rows,
-                        "file_size_in_bytes": size,
-                        "lower_bounds": lo_b,
-                        "upper_bounds": hi_b,
-                        "equality_ids": eq_ids,
-                    }
-                    if fv >= 3 and file_content == 0:
-                        # v3 row lineage: the upsert's data batch
-                        # reserves fresh row ids (the delete side
-                        # names existing rows and gets none)
-                        dfile["first_row_id"] = row_cursor
-                        row_cursor += rows
-                    entries.append({
-                        "status": 1,
-                        "snapshot_id": snap_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": dfile,
-                    })
-                AvroFileWriter.write(mp, mschema, entries)
-                written.append(mp)
-                n = sum(r for _p, r, _b, _pv in staged)
-                new_rows.append({
-                    "manifest_path": mp,
-                    "manifest_length": os.path.getsize(mp),
-                    "partition_spec_id": cur.get(
-                        "default-spec-id", 0),
-                    "content": 0 if file_content == 0 else 1,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": len(staged),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "first_row_id": (
-                        m_first_row if fv >= 3 else None
-                    ),
-                })
-
             if data_staged:
-                manifest(data_staged, 0)
+                rows.append(self._write_manifest(
+                    draft, data_staged, mschema, spec_id, cur_fields
+                ))
             if del_staged:
-                manifest(del_staged, del_content, eq_ids=del_eq_ids)
-            ml_path = os.path.join(
-                self.meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-            )
-            AvroFileWriter.write(ml_path, _ml_schema(fv), new_rows)
-            written.append(ml_path)
-            new_snap = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": ml_path,
-                "summary": {"operation": operation, **extra_summary},
-                "schema-id": cur.get("current-schema-id", 0),
-                "parent-snapshot-id": parent,
-            }
-            if fv >= 3:
-                new_snap["first-row-id"] = first_row
-            md = dict(cur)
-            if fv >= 3:
-                md["next-row-id"] = row_cursor
-            md["last-sequence-number"] = seq
-            md["last-updated-ms"] = now_ms
-            md["current-snapshot-id"] = snap_id
-            md["snapshots"] = snaps + [new_snap]
-            md["snapshot-log"] = list(
-                cur.get("snapshot-log") or []
-            ) + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}]
-            target = os.path.join(
-                self.meta_dir, f"v{base_v + 1}.metadata.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(md, f)
-            except FileExistsError as exc:
-                raise ConcurrentWriteError(
-                    f"iceberg metadata v{base_v + 1} already committed "
-                    "by another writer — rebase and retry"
-                ) from exc
-        except ConcurrentWriteError:
-            for p in written:
-                if os.path.exists(p):
-                    os.unlink(p)
-            raise
-        hint = os.path.join(self.meta_dir, "version-hint.text")
-        tmp = hint + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(base_v + 1))
-        os.replace(tmp, hint)
-        return snap_id
+                rows.append(self._write_manifest(
+                    draft, del_staged, mschema, spec_id, cur_fields,
+                    content=del_content, eq_ids=del_eq_ids,
+                ))
+            return rows
+
+        return self._commit_snapshot(
+            base_v, cur, dict(cur),
+            {"operation": operation, **extra_summary}, manifests,
+        )
 
     def _delete_mor_dv(
         self,
         spark: SparkSession,
         predicate: str,
-        max_retries: int,
         primed: tuple[int, dict] | None = None,
     ) -> dict:
         """The format-version 3 DELETE body (round 14): matched row
@@ -2184,7 +2136,8 @@ class IcebergTableWriter:
         because no surviving row moves."""
         from pyspark.sql import functions as F
 
-        for _ in range(max_retries):
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None
             if cur is None:
@@ -2223,21 +2176,16 @@ class IcebergTableWriter:
                 u: sorted(set(old_map.get(u, [])) | ps)
                 for u, ps in touched.items()
             }
-            try:
-                snap_id = self._publish_mor_dv(
-                    base_v, cur, rdr, dvs, new_dvs, old_map,
-                    {"deleted-records": str(len(matched)),
-                     "added-delete-files": "1"},
-                )
-                return {"version": snap_id,
-                        "rows_deleted": len(matched),
-                        "delete_files": 1}
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"iceberg v3 dv delete lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+            snap_id = self._publish_mor_dv(
+                base_v, cur, rdr, dvs, new_dvs, old_map,
+                {"deleted-records": str(len(matched)),
+                 "added-delete-files": "1"},
+            )
+            return {"version": snap_id,
+                    "rows_deleted": len(matched),
+                    "delete_files": 1}
+
+        return retry_commit("iceberg v3 dv delete", attempt)
 
     def _publish_mor_dv(
         self,
@@ -2258,26 +2206,19 @@ class IcebergTableWriter:
         carried verbatim, prior all-DV delete manifests dropped
         (replaced). Mixed delete manifests (DV + parquet entries in
         one file) refuse — rewriting a foreign manifest's non-DV
-        entries is a full client's job."""
+        entries is a full client's job. Staged data files (a v3
+        UPDATE's postimages) ride the SAME snapshot: lineage-
+        materialized parquet whose entries take a fresh row-id range —
+        materialized _row_id wins for preserved rows, null slots
+        inherit."""
         from algebraicdb_spark.operators.deletion_vectors import (
             puffin_footer,
             write_puffin_dv_file,
         )
 
-        now_ms = int(time.time() * 1000)
         fv = self._fv_of(cur)
-        seq = int(cur.get("last-sequence-number", 0)) + 1
-        snaps = list(cur.get("snapshots") or [])
-        snap_id = max((s["snapshot-id"] for s in snaps), default=1000) + 1
-        parent = cur.get("current-snapshot-id")
-        prev = next(
-            (s for s in snaps if s["snapshot-id"] == parent), None
-        )
-        if prev is None:
-            raise ValueError(
-                f"iceberg table {self.path} has no current snapshot "
-                "to mutate — append a first batch"
-            )
+        prev = self._head_snapshot(cur)
+        spec_id = cur.get("default-spec-id", 0)
         # untouched vectors: (ref uri -> original blob address)
         untouched: dict[str, tuple[str, int, int]] = {}
         for fpath, ref, off, sz in live_dvs:
@@ -2296,26 +2237,26 @@ class IcebergTableWriter:
                             fpath, int(blob["offset"]),
                             int(blob.get("length") or 0),
                         )
-        written: list[str] = []
-        try:
+
+        def manifests(draft: _Draft) -> list[dict]:
             locs = {}
             if new_dvs:
                 puffin = os.path.join(
                     self.data_dir,
-                    f"dv-{snap_id}-{uuid.uuid4().hex}.puffin",
+                    f"dv-{draft.id}-{uuid.uuid4().hex}.puffin",
                 )
                 locs = write_puffin_dv_file(
-                    puffin, new_dvs, snapshot_id=snap_id,
-                    sequence_number=seq,
+                    puffin, new_dvs, snapshot_id=draft.id,
+                    sequence_number=draft.seq,
                 )
-                written.append(puffin)
+                draft.written.append(puffin)
             entries = []
 
             def dv_entry(ref, fpath, off, ln, card):
                 entries.append({
-                    "status": 1, "snapshot_id": snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
+                    "status": 1, "snapshot_id": draft.id,
+                    "sequence_number": draft.seq,
+                    "file_sequence_number": draft.seq,
                     "data_file": {
                         "content": 1, "file_path": fpath,
                         "file_format": "PUFFIN", "partition": {},
@@ -2335,21 +2276,12 @@ class IcebergTableWriter:
                 fpath, off, ln = untouched[ref]
                 dv_entry(ref, fpath, off, ln,
                          len(old_map.get(ref, [])))
-            dv_m = None
-            if entries:
-                dv_m = os.path.join(
-                    self.meta_dir, f"m-{snap_id}-{uuid.uuid4().hex}.avro"
-                )
-                AvroFileWriter.write(
-                    dv_m, _manifest_schema([], fv=fv), entries
-                )
-                written.append(dv_m)
-            new_rows = []
+            rows = []
             for r in AvroFileReader(
                 rdr._resolve(prev["manifest-list"])
             ).records:
                 if r.get("content", 0) == 0:
-                    new_rows.append(self._carry_row(r))
+                    rows.append(self._carry_row(r))
                     continue
                 # delete manifest: drop if all-DV (replaced), carry
                 # if no-DV, refuse if mixed
@@ -2369,138 +2301,39 @@ class IcebergTableWriter:
                         "with parquet delete files — rewriting its "
                         "non-DV entries is a full Iceberg client's job"
                     )
-                new_rows.append(self._carry_row(r))
-            n_dv_rows = sum(len(v) for v in new_dvs.values()) + sum(
-                len(old_map.get(r, [])) for r in untouched
-            )
-            if dv_m is not None:
-                new_rows.append({
-                    "manifest_path": dv_m,
-                    "manifest_length": os.path.getsize(dv_m),
-                    "partition_spec_id": cur.get("default-spec-id", 0),
-                    "content": 1,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": len(entries),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n_dv_rows,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                })
-            # staged data files (a v3 UPDATE's postimages) ride the
-            # SAME snapshot: lineage-materialized parquet whose
-            # entries take a fresh first_row_id range — materialized
-            # _row_id wins for preserved rows, null slots inherit
-            first_row = int(cur.get("next-row-id", 0) or 0)
-            row_cursor = first_row
-            if staged:
-                cur_fields = self._cur_fields(cur)
-                add_entries = []
-                for p, rows, size, pv in staged:
-                    lo_b, hi_b = _footer_bounds(p, cur_fields)
-                    add_entries.append({
-                        "status": 1,
-                        "snapshot_id": snap_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": {
-                            "content": 0,
-                            "file_path": p,
-                            "file_format": "PARQUET",
-                            "partition": pv,
-                            "record_count": rows,
-                            "file_size_in_bytes": size,
-                            "lower_bounds": lo_b,
-                            "upper_bounds": hi_b,
-                            "first_row_id": row_cursor,
-                        },
-                    })
-                    row_cursor += rows
-                add_m = os.path.join(
-                    self.meta_dir,
-                    f"m-{snap_id}-{uuid.uuid4().hex}.avro",
+                rows.append(self._carry_row(r))
+            if entries:
+                dv_m = os.path.join(
+                    self.meta_dir, f"m-{draft.id}-{uuid.uuid4().hex}.avro"
                 )
                 AvroFileWriter.write(
-                    add_m, _manifest_schema([], fv=fv), add_entries
+                    dv_m, _manifest_schema([], fv=fv), entries
                 )
-                written.append(add_m)
-                new_rows.append({
-                    "manifest_path": add_m,
-                    "manifest_length": os.path.getsize(add_m),
-                    "partition_spec_id": cur.get("default-spec-id", 0),
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": len(staged),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        r for _p, r, _b, _pv in staged),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "first_row_id": first_row,
-                })
-            ml_path = os.path.join(
-                self.meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-            )
-            AvroFileWriter.write(ml_path, _ml_schema(fv), new_rows)
-            written.append(ml_path)
-            new_snap = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": ml_path,
-                "summary": {"operation": operation, **extra_summary},
-                "schema-id": cur.get("current-schema-id", 0),
-                "parent-snapshot-id": parent,
-            }
-            if fv >= 3:
-                # the snapshot records its reserved range (empty for
-                # a pure delete) and the high-water mark advances
-                # past any staged postimages
-                new_snap["first-row-id"] = first_row
-            md = dict(cur)
-            if fv >= 3:
-                md["next-row-id"] = row_cursor
-            md["last-sequence-number"] = seq
-            md["last-updated-ms"] = now_ms
-            md["current-snapshot-id"] = snap_id
-            md["snapshots"] = snaps + [new_snap]
-            md["snapshot-log"] = list(
-                cur.get("snapshot-log") or []
-            ) + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}]
-            target = os.path.join(
-                self.meta_dir, f"v{base_v + 1}.metadata.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(md, f)
-            except FileExistsError as exc:
-                raise ConcurrentWriteError(
-                    f"iceberg metadata v{base_v + 1} already committed "
-                    "by another writer — rebase and retry"
-                ) from exc
-        except ConcurrentWriteError:
-            for p in written:
-                if os.path.exists(p):
-                    os.unlink(p)
-            raise
-        hint = os.path.join(self.meta_dir, "version-hint.text")
-        tmp = hint + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(base_v + 1))
-        os.replace(tmp, hint)
-        return snap_id
+                draft.written.append(dv_m)
+                n_dv_rows = sum(len(v) for v in new_dvs.values()) + sum(
+                    len(old_map.get(r, [])) for r in untouched
+                )
+                rows.append(_ml_row(
+                    dv_m, draft, spec_id, content=1,
+                    added=(len(entries), n_dv_rows),
+                ))
+            if staged:
+                rows.append(self._write_manifest(
+                    draft, staged, _manifest_schema([], fv=fv), spec_id,
+                    self._cur_fields(cur),
+                ))
+            return rows
+
+        return self._commit_snapshot(
+            base_v, cur, dict(cur),
+            {"operation": operation, **extra_summary}, manifests,
+        )
 
     def _update_mor_dv(
         self,
         spark: SparkSession,
         assignments: dict[str, str],
         pred: str,
-        max_retries: int,
         primed: tuple[int, dict] | None = None,
     ) -> dict:
         """The format-version 3 UPDATE body (round 14): preimage rows
@@ -2518,7 +2351,8 @@ class IcebergTableWriter:
         rewrite of untouched rows."""
         from pyspark.sql import functions as F
 
-        for _ in range(max_retries):
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None
             if cur is None:
@@ -2601,16 +2435,11 @@ class IcebergTableWriter:
                 return {"version": snap_id,
                         "rows_updated": len(pairs),
                         "delete_files": 1}
-            except ConcurrentWriteError:
-                self._unstage(data_staged)
-                continue
             except BaseException:
                 self._unstage(data_staged)
                 raise
-        raise ConcurrentWriteError(
-            f"iceberg v3 dv update lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+
+        return retry_commit("iceberg v3 dv update", attempt)
 
     def _merge_mor_dv(
         self,
@@ -2621,7 +2450,6 @@ class IcebergTableWriter:
         insert_exprs: list[str] | None,
         target_alias: str,
         source_alias: str,
-        max_retries: int,
         delete_matched: bool,
         primed: tuple[int, dict] | None = None,
     ) -> dict:
@@ -2636,7 +2464,9 @@ class IcebergTableWriter:
         from pyspark.sql import functions as F
 
         cond_col = F.expr(cond)
-        for _ in range(max_retries):
+
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None
             if cur is None:
@@ -2784,22 +2614,16 @@ class IcebergTableWriter:
                 return {"version": snap_id, "rows_matched": matched,
                         "rows_inserted": rows_inserted,
                         "delete_files": 1 if new_dvs else 0}
-            except ConcurrentWriteError:
-                self._unstage(data_staged)
-                continue
             except BaseException:
                 self._unstage(data_staged)
                 raise
-        raise ConcurrentWriteError(
-            f"iceberg v3 dv merge lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+
+        return retry_commit("iceberg v3 dv merge", attempt)
 
     def _delete_mor(
         self,
         spark: SparkSession,
         predicate: str,
-        max_retries: int,
         primed: tuple[int, dict] | None = None,
     ) -> dict:
         """The merge-on-read DELETE body: matched (uri, pos) pairs land
@@ -2811,7 +2635,8 @@ class IcebergTableWriter:
         proof)."""
         from pyspark.sql import functions as F
 
-        for _ in range(max_retries):
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None  # retries re-read the advanced head
             if cur is None:
@@ -2848,18 +2673,15 @@ class IcebergTableWriter:
                         "delete_files": len(del_staged)}
             except ConcurrentWriteError:
                 self._unstage(del_staged)
-                continue  # racer advanced the metadata: re-probe
-        raise ConcurrentWriteError(
-            f"iceberg mor delete lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+                raise
+
+        return retry_commit("iceberg mor delete", attempt)
 
     def upsert_by_key(
         self,
         spark: SparkSession,
         source: DataFrame,
         key_cols: list[str],
-        max_retries: int = 8,
         app_id: str | None = None,
         txn_version: int | None = None,
     ) -> dict:
@@ -2892,7 +2714,8 @@ class IcebergTableWriter:
         if not key_cols:
             raise ValueError("upsert_by_key needs at least one key column")
         fields = _iceberg_fields(source)
-        for _ in range(max_retries):
+
+        def attempt() -> dict:
             base_v, cur = self._current()
             if cur is None or cur.get("current-snapshot-id") in (
                 None, -1
@@ -2964,20 +2787,12 @@ class IcebergTableWriter:
                     "over them cannot be ordered; use a full Iceberg "
                     "client"
                 )
-            if app_id is not None:
-                mark = -1
-                for s in (cur or {}).get("snapshots") or []:
-                    summ = s.get("summary") or {}
-                    if summ.get("txn-app-id") == app_id:
-                        try:
-                            mark = max(
-                                mark, int(summ.get("txn-version", -1))
-                            )
-                        except (TypeError, ValueError):
-                            continue
-                if txn_version is not None and txn_version <= mark:
-                    return {"version": None, "rows_upserted": 0,
-                            "keys_deleted": 0}
+            if (
+                app_id is not None and txn_version is not None
+                and txn_version <= self._txn_mark(cur, app_id)
+            ):
+                return {"version": None, "rows_upserted": 0,
+                        "keys_deleted": 0}
             by_name = {f["name"]: f for f in self._cur_fields(cur)}
             missing = [c for c in key_cols if c not in by_name]
             if missing:
@@ -3059,19 +2874,12 @@ class IcebergTableWriter:
                 return {"version": snap_id, "rows_upserted": n_rows,
                         "keys_deleted": n_keys,
                         "delete_files": len(del_staged)}
-            except ConcurrentWriteError:
-                self._unstage(del_staged)
-                self._unstage(data_staged)
-                continue  # racer advanced the metadata: re-derive
             except BaseException:
                 self._unstage(del_staged)
                 self._unstage(data_staged)
                 raise
-        raise ConcurrentWriteError(
-            f"iceberg upsert_by_key lost {max_retries} metadata "
-            "publish races — table is under pathological write "
-            "contention"
-        )
+
+        return retry_commit("iceberg upsert_by_key", attempt)
 
     def _resolved_mode(self, cur: dict, mode: str, op: str) -> str:
         """'auto' honors the table's own write.<op>.mode property
@@ -3086,7 +2894,6 @@ class IcebergTableWriter:
         self,
         spark: SparkSession,
         predicate: str,
-        max_retries: int = 8,
         mode: str = "auto",
     ) -> dict:
         """Row-level ``DELETE FROM … WHERE predicate``, two physical
@@ -3114,16 +2921,14 @@ class IcebergTableWriter:
             # native shape — regardless of the mode knob (COW would
             # rewrite rows and lose lineage; an explicit mode='cow'
             # surfaces that gate's own refusal)
-            return self._delete_mor_dv(
-                spark, predicate, max_retries, primed=primed
-            )
+            return self._delete_mor_dv(spark, predicate, primed=primed)
         if primed[1] is not None and self._resolved_mode(
             primed[1], mode, "delete"
         ) == "mor":
-            return self._delete_mor(
-                spark, predicate, max_retries, primed=primed
-            )
-        for _ in range(max_retries):
+            return self._delete_mor(spark, predicate, primed=primed)
+
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None  # retries re-read the advanced head
             if cur is None:
@@ -3172,18 +2977,15 @@ class IcebergTableWriter:
                 }
             except ConcurrentWriteError:
                 self._unstage(staged)
-                continue  # racer advanced the metadata: re-derive ALL
-        raise ConcurrentWriteError(
-            f"iceberg delete lost {max_retries} metadata publish races "
-            "— table is under pathological write contention"
-        )
+                raise
+
+        return retry_commit("iceberg delete", attempt)
 
     def _update_mor(
         self,
         spark: SparkSession,
         assignments: dict[str, str],
         pred: str,
-        max_retries: int,
         primed: tuple[int, dict] | None = None,
     ) -> dict:
         """Merge-on-read UPDATE: preimage positions land in a standard
@@ -3192,7 +2994,8 @@ class IcebergTableWriter:
         snapshot (the iceberg twin of the Delta DV update)."""
         from pyspark.sql import functions as F
 
-        for _ in range(max_retries):
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None  # retries re-read the advanced head
             if cur is None:
@@ -3258,25 +3061,18 @@ class IcebergTableWriter:
                 )
                 return {"version": snap_id, "rows_updated": n,
                         "delete_files": len(del_staged)}
-            except ConcurrentWriteError:
-                self._unstage(del_staged)
-                self._unstage(data_staged)
-                continue
             except BaseException:
                 self._unstage(del_staged)
                 self._unstage(data_staged)
                 raise
-        raise ConcurrentWriteError(
-            f"iceberg mor update lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+
+        return retry_commit("iceberg mor update", attempt)
 
     def update(
         self,
         spark: SparkSession,
         assignments: dict[str, str],
         predicate: str | None = None,
-        max_retries: int = 8,
         mode: str = "auto",
     ) -> dict:
         """Row-level ``UPDATE … SET col = expr [WHERE predicate]`` as
@@ -3298,16 +3094,14 @@ class IcebergTableWriter:
             # postimages restage with PRESERVED _row_id — the
             # lineage-correct v3 update regardless of the mode knob
             # (an explicit mode='cow' surfaces the COW gate's refusal)
-            return self._update_mor_dv(
-                spark, assignments, pred, max_retries, primed=primed
-            )
+            return self._update_mor_dv(spark, assignments, pred, primed=primed)
         if primed[1] is not None and self._resolved_mode(
             primed[1], mode, "update"
         ) == "mor":
-            return self._update_mor(
-                spark, assignments, pred, max_retries, primed=primed
-            )
-        for _ in range(max_retries):
+            return self._update_mor(spark, assignments, pred, primed=primed)
+
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None  # retries re-read the advanced head
             if cur is None:
@@ -3365,11 +3159,9 @@ class IcebergTableWriter:
                 }
             except ConcurrentWriteError:
                 self._unstage(staged)
-                continue
-        raise ConcurrentWriteError(
-            f"iceberg update lost {max_retries} metadata publish races "
-            "— table is under pathological write contention"
-        )
+                raise
+
+        return retry_commit("iceberg update", attempt)
 
     def _merge_mor(
         self,
@@ -3380,7 +3172,6 @@ class IcebergTableWriter:
         insert_exprs: list[str] | None,
         target_alias: str,
         source_alias: str,
-        max_retries: int,
         delete_matched: bool,
         primed: tuple[int, dict] | None = None,
     ) -> dict:
@@ -3395,7 +3186,9 @@ class IcebergTableWriter:
         from pyspark.sql import functions as F
 
         cond_col = F.expr(cond)
-        for _ in range(max_retries):
+
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None  # retries re-read the advanced head
             if cur is None:
@@ -3520,18 +3313,12 @@ class IcebergTableWriter:
                 return {"version": snap_id, "rows_matched": matched,
                         "rows_inserted": rows_inserted,
                         "delete_files": len(del_staged)}
-            except ConcurrentWriteError:
-                self._unstage(del_staged)
-                self._unstage(data_staged)
-                continue
             except BaseException:
                 self._unstage(del_staged)
                 self._unstage(data_staged)
                 raise
-        raise ConcurrentWriteError(
-            f"iceberg mor merge lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+
+        return retry_commit("iceberg mor merge", attempt)
 
     def merge(
         self,
@@ -3542,7 +3329,6 @@ class IcebergTableWriter:
         insert_exprs: list[str] | None,
         target_alias: str = "t",
         source_alias: str = "s",
-        max_retries: int = 8,
         delete_matched: bool = False,
         mode: str = "auto",
     ) -> dict:
@@ -3579,7 +3365,7 @@ class IcebergTableWriter:
             # explicit mode='cow' surfaces the COW gate's refusal)
             return self._merge_mor_dv(
                 spark, source, cond, assignments, insert_exprs,
-                target_alias, source_alias, max_retries, delete_matched,
+                target_alias, source_alias, delete_matched,
                 primed=primed,
             )
         if primed[1] is not None and self._resolved_mode(
@@ -3587,11 +3373,13 @@ class IcebergTableWriter:
         ) == "mor":
             return self._merge_mor(
                 spark, source, cond, assignments, insert_exprs,
-                target_alias, source_alias, max_retries, delete_matched,
+                target_alias, source_alias, delete_matched,
                 primed=primed,
             )
         cond_col = F.expr(cond)
-        for _ in range(max_retries):
+
+        def attempt() -> dict:
+            nonlocal primed
             base_v, cur = primed or self._current()
             primed = None  # retries re-read the advanced head
             if cur is None:
@@ -3733,11 +3521,9 @@ class IcebergTableWriter:
                 }
             except ConcurrentWriteError:
                 self._unstage(staged)
-                continue
-        raise ConcurrentWriteError(
-            f"iceberg merge lost {max_retries} metadata publish races "
-            "— table is under pathological write contention"
-        )
+                raise
+
+        return retry_commit("iceberg merge", attempt)
 
     def _publish_mutation(
         self,
@@ -3772,7 +3558,10 @@ class IcebergTableWriter:
         that produced them (re-labeling them under the default spec is
         exactly the corruption the round-12 gate refused). Only the
         ADDED manifest (the restaged rewrites) uses the default
-        spec."""
+        spec. On v3 the restaged files reserve fresh row-id ranges:
+        rows with a MATERIALIZED _row_id keep it (the column wins over
+        inheritance), lineage-less rows inherit fresh ids — the spec's
+        answer for both."""
         fv = self._fv_of(cur)
         if lineage_done:
             # the caller materialized _row_id/_last_updated_sequence_
@@ -3781,7 +3570,6 @@ class IcebergTableWriter:
             self._check_fv_writable(cur)
         else:
             self._check_fv_writable(cur, rewrites_rows=True)
-        now_ms = int(time.time() * 1000)
         part_fields = [
             {"name": sf["name"], "type": sf["vtype"]}
             for sf in (spec_parts or [])
@@ -3797,16 +3585,12 @@ class IcebergTableWriter:
                     for sf in self._spec_parts_of(cur, spec_id)
                 ], fv=fv)
             return spec_schemas[spec_id]
-        seq = int(cur.get("last-sequence-number", 0)) + 1
-        snaps = list(cur.get("snapshots") or [])
-        snap_id = max((s["snapshot-id"] for s in snaps), default=1000) + 1
-        parent = cur.get("current-snapshot-id")
-        prev = next(s for s in snaps if s["snapshot-id"] == parent)
-        written: list[str] = []
-        new_rows: list[dict] = []
-        removed_files = 0
-        removed_rows = 0
-        try:
+        prev = self._head_snapshot(cur)
+        summary = {"operation": operation}
+
+        def manifests(draft: _Draft) -> list[dict]:
+            rows: list[dict] = []
+            removed_files = 0
             for r in AvroFileReader(
                 rdr._resolve(prev["manifest-list"])
             ).records:
@@ -3824,7 +3608,7 @@ class IcebergTableWriter:
                     for e in live
                 )
                 if not touched:
-                    new_rows.append(self._carry_row(r))
+                    rows.append(self._carry_row(r))
                     continue
                 out_entries = []
                 kept_f = kept_r = del_f = del_r = 0
@@ -3869,7 +3653,7 @@ class IcebergTableWriter:
                         del_r += rows_n
                         out_entries.append({
                             "status": 2,  # DELETED by THIS snapshot
-                            "snapshot_id": snap_id,
+                            "snapshot_id": draft.id,
                             "sequence_number": eseq,
                             "file_sequence_number": eseq,
                             "data_file": rec,
@@ -3885,147 +3669,36 @@ class IcebergTableWriter:
                             "data_file": rec,
                         })
                 new_m = os.path.join(
-                    self.meta_dir, f"m-{snap_id}-{uuid.uuid4().hex}.avro"
+                    self.meta_dir, f"m-{draft.id}-{uuid.uuid4().hex}.avro"
                 )
                 r_spec = int(r.get("partition_spec_id", 0) or 0)
                 AvroFileWriter.write(
                     new_m, mschema_of(r_spec), out_entries
                 )
-                written.append(new_m)
+                draft.written.append(new_m)
                 removed_files += del_f
-                removed_rows += del_r
-                new_rows.append({
-                    "manifest_path": new_m,
-                    "manifest_length": os.path.getsize(new_m),
-                    # the SOURCE manifest's spec carries through — its
-                    # entries' partition records belong to that spec
-                    "partition_spec_id": r_spec,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": min(seqs) if seqs else seq,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": 0,
-                    "existing_files_count": kept_f,
-                    "deleted_files_count": del_f,
-                    "added_rows_count": 0,
-                    "existing_rows_count": kept_r,
-                    "deleted_rows_count": del_r,
-                })
-            first_row = (
-                int(cur.get("next-row-id", 0) or 0) if fv >= 3 else None
-            )
-            row_cursor = first_row
+                # the SOURCE manifest's spec carries through — its
+                # entries' partition records belong to that spec
+                rows.append(_ml_row(
+                    new_m, draft, r_spec,
+                    existing=(kept_f, kept_r), deleted=(del_f, del_r),
+                    min_seq=min(seqs) if seqs else None,
+                ))
             if staged:
-                add_m = os.path.join(
-                    self.meta_dir, f"m-{snap_id}-{uuid.uuid4().hex}.avro"
-                )
-                cur_fields = self._cur_fields(cur)
-                add_entries = []
-                for p, rows, size, pv in staged:
-                    lo_b, hi_b = _footer_bounds(p, cur_fields)
-                    dfile = {
-                        "content": 0,
-                        "file_path": p,
-                        "file_format": "PARQUET",
-                        "partition": pv,
-                        "record_count": rows,
-                        "file_size_in_bytes": size,
-                        "lower_bounds": lo_b,
-                        "upper_bounds": hi_b,
-                    }
-                    if fv >= 3:
-                        # the new file's reserved range: rows with a
-                        # MATERIALIZED _row_id keep it (the column
-                        # wins over inheritance); lineage-less rows
-                        # inherit fresh ids from here — the spec's
-                        # answer for both. The range is sized by
-                        # record_count regardless (spec rule), so the
-                        # table's id high-water mark stays safe.
-                        dfile["first_row_id"] = row_cursor
-                        row_cursor += rows
-                    add_entries.append({
-                        "status": 1,
-                        "snapshot_id": snap_id,
-                        "sequence_number": seq,
-                        "file_sequence_number": seq,
-                        "data_file": dfile,
-                    })
-                AvroFileWriter.write(add_m, mschema, add_entries)
-                written.append(add_m)
-                add_row = {
-                    "manifest_path": add_m,
-                    "manifest_length": os.path.getsize(add_m),
-                    "partition_spec_id": cur.get(
-                        "default-spec-id", 0),
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": len(staged),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": sum(
-                        r for _p, r, _b, _pv in staged),
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
-                if fv >= 3:
-                    add_row["first_row_id"] = first_row
-                new_rows.append(add_row)
-            ml_path = os.path.join(
-                self.meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-            )
-            AvroFileWriter.write(ml_path, _ml_schema(fv), new_rows)
-            written.append(ml_path)
-            summary = {
-                "operation": operation,
+                rows.append(self._write_manifest(
+                    draft, staged, mschema, cur.get("default-spec-id", 0),
+                    self._cur_fields(cur),
+                ))
+            summary.update({
                 "deleted-data-files": str(removed_files),
                 "added-data-files": str(len(staged)),
                 **extra_summary,
-            }
-            new_snap = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": ml_path,
-                "summary": summary,
-                "schema-id": cur.get("current-schema-id", 0),
-                "parent-snapshot-id": parent,
-            }
-            if fv >= 3:
-                new_snap["first-row-id"] = first_row
-            md = dict(cur)
-            if fv >= 3:
-                md["next-row-id"] = row_cursor
-            md["last-sequence-number"] = seq
-            md["last-updated-ms"] = now_ms
-            md["current-snapshot-id"] = snap_id
-            md["snapshots"] = snaps + [new_snap]
-            md["snapshot-log"] = list(cur.get("snapshot-log") or []) + [
-                {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-            ]
-            target = os.path.join(
-                self.meta_dir, f"v{base_v + 1}.metadata.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(md, f)
-            except FileExistsError as exc:
-                raise ConcurrentWriteError(
-                    f"iceberg metadata v{base_v + 1} already committed "
-                    "by another writer — rebase and retry"
-                ) from exc
-        except ConcurrentWriteError:
-            for p in written:
-                if os.path.exists(p):
-                    os.unlink(p)
-            raise
-        hint = os.path.join(self.meta_dir, "version-hint.text")
-        tmp = hint + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(base_v + 1))
-        os.replace(tmp, hint)  # atomic pointer swing
-        return snap_id
+            })
+            return rows
+
+        return self._commit_snapshot(
+            base_v, cur, dict(cur), summary, manifests
+        )
 
     # -- maintenance ---------------------------------------------------------
 
@@ -4034,7 +3707,6 @@ class IcebergTableWriter:
         spark: SparkSession,
         target_files: int = 1,
         min_inputs: int = 2,
-        max_retries: int = 8,
         zorder_by: list[str] | None = None,
     ) -> int | None:
         """Iceberg's rewrite_data_files: compact the live set into
@@ -4050,7 +3722,7 @@ class IcebergTableWriter:
         ``min_inputs``. Live delete files route to the PURGE pass —
         on partitioned tables too (round 12: a partitioned CDC table's
         accumulated equality-delete strata need exactly this lever)."""
-        for _ in range(max_retries):
+        def attempt() -> int | None:
             base_v, cur = self._current()
             if cur is None:
                 return None
@@ -4066,8 +3738,7 @@ class IcebergTableWriter:
                 # purging DVs. On v3 this is THE lever that keeps
                 # accumulated deletion vectors from living forever.
                 return self._optimize_purge(
-                    spark, base_v, cur, rdr, target_files,
-                    zorder_by, max_retries,
+                    spark, base_v, cur, rdr, target_files, zorder_by
                 )
             lineage = fv >= 3
             data, spec_parts = self._cow_scope(rdr, lineage_done=lineage)
@@ -4111,21 +3782,18 @@ class IcebergTableWriter:
                 )
             except ConcurrentWriteError:
                 self._unstage(staged)
-                continue
-        raise ConcurrentWriteError(
-            f"iceberg optimize lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+                raise
+
+        return retry_commit("iceberg optimize", attempt)
 
     def _optimize_purge(
         self,
         spark: SparkSession,
-        base_v: int | None,
-        cur: dict | None,
-        rdr: IcebergTable | None,
+        base_v: int,
+        cur: dict,
+        rdr: IcebergTable,
         target_files: int,
         zorder_by: list[str] | None,
-        max_retries: int,
     ) -> int:
         """rewrite_data_files over a MoR table: scan with the position
         deletes APPLIED, restage, and publish a ``replace`` snapshot
@@ -4139,71 +3807,57 @@ class IcebergTableWriter:
         table's spec — transforms included — and the rewritten
         manifest entries carry fresh partition records), which is the
         compaction lever a partitioned CDC table's accumulated
-        equality-delete strata need."""
-        for _ in range(max_retries):
-            if cur is None:
-                base_v, cur = self._current()
-                rdr = self.reader()
-            # partition evolution composes (round 13): every old file
-            # tombstones under ITS manifest's spec inside
-            # _publish_mutation; the purged content restages under the
-            # default spec — after the purge the table is single-spec
-            # in practice (all live files belong to the default)
-            fv = self._fv_of(cur)
-            lineage = fv >= 3
-            if lineage:
-                self._check_fv_writable(cur)  # fv>3 backstop only
-            else:
-                self._check_fv_writable(cur, rewrites_rows=True)
-            spec_parts = self._cur_spec(cur)
-            data, pos_d, eq_d, dvs = rdr._files(None)
-            ice_fields = self._cur_fields(cur)
-            if lineage:
-                # v3: live rows (DVs applied) with MATERIALIZED
-                # lineage — the compaction that finally retires the
-                # table's deletion vectors without re-identifying a
-                # single surviving row
-                src, _d2, _nd = self._lineage_rewrite_src(spark, rdr)
-                ice_fields = ice_fields + _LINEAGE_FIELDS
-            else:
-                src = rdr.snapshot(spark)  # MoR-applied content
-            if zorder_by:
-                from algebraicdb_spark.operators.txnlog import (
-                    _zorder_clustered,
-                )
-
-                df = _zorder_clustered(
-                    src, zorder_by, max(target_files, 1)
-                )
-            else:
-                df = src.coalesce(max(target_files, 1))
-            staged = self._stage(
-                df, spec_parts=spec_parts or None,
-                ice_fields=ice_fields,
+        equality-delete strata need. One attempt of ``optimize``: a
+        lost race unstages and raises, and optimize re-derives."""
+        # partition evolution composes (round 13): every old file
+        # tombstones under ITS manifest's spec inside
+        # _publish_mutation; the purged content restages under the
+        # default spec — after the purge the table is single-spec
+        # in practice (all live files belong to the default)
+        lineage = self._fv_of(cur) >= 3
+        if lineage:
+            self._check_fv_writable(cur)  # fv>3 backstop only
+        else:
+            self._check_fv_writable(cur, rewrites_rows=True)
+        spec_parts = self._cur_spec(cur)
+        data, pos_d, eq_d, dvs = rdr._files(None)
+        ice_fields = self._cur_fields(cur)
+        if lineage:
+            # v3: live rows (DVs applied) with MATERIALIZED
+            # lineage — the compaction that finally retires the
+            # table's deletion vectors without re-identifying a
+            # single surviving row
+            src, _d2, _nd = self._lineage_rewrite_src(spark, rdr)
+            ice_fields = ice_fields + _LINEAGE_FIELDS
+        else:
+            src = rdr.snapshot(spark)  # MoR-applied content
+        if zorder_by:
+            from algebraicdb_spark.operators.txnlog import (
+                _zorder_clustered,
             )
-            extra = {"purged-position-deletes": str(len(pos_d)),
-                     "purged-equality-deletes": str(len(eq_d)),
-                     "purged-deletion-vectors": str(len(dvs))}
-            if zorder_by:
-                extra["zorder-by"] = ",".join(zorder_by)
-            try:
-                return self._publish_mutation(
-                    base_v, cur, rdr, {p for p, _u, _s in data},
-                    staged, "replace", extra, drop_deletes=True,
-                    spec_parts=spec_parts, lineage_done=lineage,
-                )
-            except ConcurrentWriteError:
-                self._unstage(staged)
-                cur = None  # racer advanced the metadata: re-derive
-                continue
-        raise ConcurrentWriteError(
-            f"iceberg optimize lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
 
-    def expire_snapshots(
-        self, retain_last: int = 2, max_retries: int = 8
-    ) -> list[str]:
+            df = _zorder_clustered(src, zorder_by, max(target_files, 1))
+        else:
+            df = src.coalesce(max(target_files, 1))
+        staged = self._stage(
+            df, spec_parts=spec_parts or None, ice_fields=ice_fields
+        )
+        extra = {"purged-position-deletes": str(len(pos_d)),
+                 "purged-equality-deletes": str(len(eq_d)),
+                 "purged-deletion-vectors": str(len(dvs))}
+        if zorder_by:
+            extra["zorder-by"] = ",".join(zorder_by)
+        try:
+            return self._publish_mutation(
+                base_v, cur, rdr, {p for p, _u, _s in data},
+                staged, "replace", extra, drop_deletes=True,
+                spec_parts=spec_parts, lineage_done=lineage,
+            )
+        except ConcurrentWriteError:
+            self._unstage(staged)
+            raise
+
+    def expire_snapshots(self, retain_last: int = 2) -> list[str]:
         """Iceberg's expire_snapshots — the VACUUM twin: drop all but
         the newest ``retain_last`` snapshots from the metadata and
         physically delete every manifest / manifest list / data file
@@ -4213,7 +3867,7 @@ class IcebergTableWriter:
         files a concurrent writer has staged but not yet committed —
         the same invariant as the delta vacuum). Returns the
         deleted paths."""
-        for _ in range(max_retries):
+        def attempt() -> list[str]:
             base_v, cur = self._current()
             if cur is None:
                 return []
@@ -4258,52 +3912,41 @@ class IcebergTableWriter:
                 if e.get("snapshot-id") in kept_ids
             ]
             md["last-updated-ms"] = int(time.time() * 1000)
-            if not self._publish_metadata(md, base_v):
-                continue  # racer advanced the metadata: re-derive
+            self._publish_metadata(md, base_v)
             gone = []
             for p in doomed:
                 if os.path.exists(p):
                     gone.append(p)
                     os.unlink(p)
             return gone
-        raise ConcurrentWriteError(
-            f"iceberg expire_snapshots lost {max_retries} metadata "
-            "publish races — table is under pathological write "
-            "contention"
-        )
 
-    def _publish_metadata(self, md: dict, base_v: int) -> bool:
-        """CAS-publish ``md`` as ``v<base_v+1>.metadata.json``
-        (create-exclusive — False means a racer took the slot and the
-        caller re-derives) and swing ``version-hint.text`` forward
-        atomically. The ONE publish tail every metadata-only change
-        (set_properties / rollback / expire_snapshots) shares."""
+        return retry_commit("iceberg expire_snapshots", attempt)
+
+    def _publish_metadata(self, md: dict, base_v: int) -> None:
+        """Publish ``md`` as ``v<base_v+1>.metadata.json`` through
+        ``publish_exclusive`` — a racer that took the slot makes it
+        raise ``ConcurrentWriteError`` and the caller re-derives — and
+        swing ``version-hint.text`` forward atomically. The ONE publish
+        tail every Iceberg commit shares."""
         self._check_fv_writable(md)
-        target = os.path.join(
-            self.meta_dir, f"v{base_v + 1}.metadata.json"
+        publish_exclusive(
+            os.path.join(self.meta_dir, f"v{base_v + 1}.metadata.json"),
+            json.dumps(md),
         )
-        try:
-            with open(target, "x") as f:
-                json.dump(md, f)
-        except FileExistsError:
-            return False
         hint = os.path.join(self.meta_dir, "version-hint.text")
         tmp = hint + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             f.write(str(base_v + 1))
-        os.replace(tmp, hint)
-        return True
+        os.replace(tmp, hint)  # atomic pointer swing
 
-    def set_properties(
-        self, props: dict[str, str], max_retries: int = 8
-    ) -> int:
+    def set_properties(self, props: dict[str, str]) -> int:
         """Merge ``props`` into the table's freeform properties map in
         a new metadata version (the same CAS publish as every metadata
         change) — Iceberg's own knob surface: `write.delete.mode =
         merge-on-read` here is what flips this writer's (and every
         engine's) mutations to MoR. A value of None/'' DELETES the
         key. Returns the new metadata version."""
-        for _ in range(max_retries):
+        def attempt() -> int:
             base_v, cur = self._current()
             if cur is None:
                 raise ValueError(
@@ -4319,21 +3962,17 @@ class IcebergTableWriter:
             md = dict(cur)
             md["properties"] = merged
             md["last-updated-ms"] = now
-            if self._publish_metadata(md, base_v):
-                return base_v + 1
-            continue  # racer advanced the metadata: re-derive
-        raise ConcurrentWriteError(
-            f"iceberg set_properties lost {max_retries} metadata "
-            "publish races — table is under pathological write "
-            "contention"
-        )
+            self._publish_metadata(md, base_v)
+            return base_v + 1
+
+        return retry_commit("iceberg set_properties", attempt)
 
     def properties(self) -> dict[str, str]:
         """The current freeform properties map (empty when unset)."""
         _v, cur = self._current()
         return dict((cur or {}).get("properties") or {})
 
-    def upgrade_format_version(self, to: int, max_retries: int = 8) -> int:
+    def upgrade_format_version(self, to: int) -> int:
         """The metadata-only format upgrade a real client runs as
         ``ALTER TABLE … SET TBLPROPERTIES ('format-version'='3')``.
         v2 → 3 stamps ``format-version: 3`` and initializes
@@ -4344,7 +3983,7 @@ class IcebergTableWriter:
         refuse (v1 predates sequence numbers — the upgrade would have
         to invent a history); downgrades and unknown targets refuse.
         Already-there is a no-op returning the current version."""
-        for _ in range(max_retries):
+        def attempt() -> int:
             base_v, cur = self._current()
             if cur is None:
                 raise ValueError(
@@ -4364,16 +4003,12 @@ class IcebergTableWriter:
             md["format-version"] = 3
             md.setdefault("next-row-id", 0)
             md["last-updated-ms"] = int(time.time() * 1000)
-            if self._publish_metadata(md, base_v):
-                return base_v + 1
-            continue  # racer advanced the metadata: re-derive
-        raise ConcurrentWriteError(
-            f"iceberg upgrade_format_version lost {max_retries} "
-            "metadata publish races — table is under pathological "
-            "write contention"
-        )
+            self._publish_metadata(md, base_v)
+            return base_v + 1
 
-    def rollback(self, snapshot_id: int, max_retries: int = 8) -> int:
+        return retry_commit("iceberg upgrade_format_version", attempt)
+
+    def rollback(self, snapshot_id: int) -> int:
         """Iceberg's rollback_to_snapshot — RESTORE's metadata-only
         twin on this format: point ``current-snapshot-id`` back at an
         EXISTING snapshot in a new metadata version (the CAS
@@ -4383,7 +4018,7 @@ class IcebergTableWriter:
         ``expire_snapshots`` reclaims them. A snapshot already expired
         out of the metadata refuses loudly. Returns the new metadata
         version (or the current one when already there — no-op)."""
-        for _ in range(max_retries):
+        def attempt() -> int:
             base_v, cur = self._current()
             if cur is None:
                 raise ValueError(
@@ -4404,13 +4039,10 @@ class IcebergTableWriter:
             md["snapshot-log"] = list(
                 cur.get("snapshot-log") or []
             ) + [{"timestamp-ms": now, "snapshot-id": snapshot_id}]
-            if self._publish_metadata(md, base_v):
-                return base_v + 1
-            continue  # racer advanced the metadata: re-derive
-        raise ConcurrentWriteError(
-            f"iceberg rollback lost {max_retries} metadata publish "
-            "races — table is under pathological write contention"
-        )
+            self._publish_metadata(md, base_v)
+            return base_v + 1
+
+        return retry_commit("iceberg rollback", attempt)
 
     # -- engine integration delegates ---------------------------------------
 

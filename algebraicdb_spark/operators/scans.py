@@ -978,9 +978,7 @@ def scan_iceberg_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the snapshot read spans both partition layouts transparently.
     Scale shape: evolution is O(metadata); the delete stays the usual
     probe + partial-rewrite COW plan."""
-    import json as _json
     import shutil
-    import uuid as _uuid
 
     from algebraicdb_spark.operators.iceberg import AvroFileReader
     from algebraicdb_spark.operators.iceberg_writer import (
@@ -1025,13 +1023,7 @@ def scan_iceberg_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     }]
     md["default-spec-id"] = 1
     md["last-partition-id"] = 1001
-    with open(
-        os.path.join(w.meta_dir, f"v{base_v + 1}.metadata.json"), "w"
-    ) as fh:
-        _json.dump(md, fh)
-    with open(os.path.join(w.meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(base_v + 1))
-    _ = _uuid  # (kept for fixture parity with the writer's naming)
+    w._publish_metadata(md, base_v)
     w.append(o.where(F.col("o_orderkey") % 4 == 1))
     w.delete(spark, "o_orderkey % 8 IN (0, 1)")
     rdr = w.reader()

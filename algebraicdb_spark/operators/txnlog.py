@@ -20,10 +20,12 @@ the standard-format half of that idea:
   ``view_*``, ``sink_delta_*``, ``sink_iceberg_*``), every one of them
   committing through a standard format.
 
-Every transactional write goes through one commit protocol: a
-create-exclusive publish of the next version file (``_publish`` in
-``DeltaTableWriter`` / the metadata swap in ``IcebergTableWriter``),
-with a racing writer losing with ``ConcurrentWriteError``. The log is
+Every transactional write goes through one commit protocol, kept
+here next to ``ConcurrentWriteError``: ``publish_exclusive`` writes
+the next version file create-exclusively (Delta's next ``_delta_log``
+commit, Iceberg's next ``metadata.json``), so a racing writer loses
+with ``ConcurrentWriteError``, and ``retry_commit`` reruns a lost
+attempt on the new head, at most ``COMMIT_RETRIES`` times. The log is
 METADATA — O(commits) KB-sized documents read driver-side; data files
 never move on commit, and snapshot reads are ordinary pruned parquet
 scans over the live path list.
@@ -33,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +48,49 @@ from algebraicdb_spark.sources.catalog import load_tables
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed the version this transaction targeted."""
+
+
+class _LostPublishRace(ConcurrentWriteError):
+    """``publish_exclusive`` found its target already written: the
+    attempt built its commit on a stale head, so ``retry_commit`` runs
+    it again. Every other ``ConcurrentWriteError`` — a conflict no
+    rebase can fix — ends the commit."""
+
+
+COMMIT_RETRIES = 8
+_T = TypeVar("_T")
+
+
+def publish_exclusive(target: str, text: str) -> None:
+    """Create-exclusive publish of one commit file: two racers
+    targeting the same file get exactly one winner, and the loser
+    raises ``ConcurrentWriteError``. The one atomicity primitive under
+    both writers (on S3-class stores real deployments route it through
+    a commit service or a conditional put)."""
+    try:
+        with open(target, "x") as f:
+            f.write(text)
+    except FileExistsError as exc:
+        raise _LostPublishRace(
+            f"{os.path.basename(target)} already committed by another "
+            "writer — rebase on the new head and retry"
+        ) from exc
+
+
+def retry_commit(op: str, attempt: Callable[[], _T]) -> _T:
+    """Run ``attempt()`` until its publish wins and return its result.
+    Each attempt re-reads the head, re-validates, builds its commit and
+    publishes it through ``publish_exclusive``; a lost race runs it
+    again on the new head, at most ``COMMIT_RETRIES`` times in all."""
+    for _ in range(COMMIT_RETRIES):
+        try:
+            return attempt()
+        except _LostPublishRace:
+            continue
+    raise ConcurrentWriteError(
+        f"{op} lost {COMMIT_RETRIES} publish races — table is under "
+        "pathological write contention"
+    )
 
 
 class SchemaEvolutionError(RuntimeError):

@@ -54,7 +54,7 @@ class TestBoundsUseTableFieldIds:
         sch["fields"][1]["id"] = 12
         md["schemas"] = [sch]
         md["last-column-id"] = 12
-        assert w._publish_metadata(md, base_v)
+        w._publish_metadata(md, base_v)
 
         sid = w.append(spark.createDataFrame(
             [(100, "z")], "k long, v string").coalesce(1))
@@ -500,7 +500,7 @@ class TestPartitionTransforms:
         md["partition-specs"] = [{"spec-id": 0, "fields": [
             {"name": "k_void", "transform": "void",
              "source-id": 1, "field-id": 1000}]}]
-        assert w._publish_metadata(md, base_v)
+        w._publish_metadata(md, base_v)
         w.append(spark.createDataFrame(
             [(3, "c")], "k long, v string").coalesce(1))
         t = IcebergTable(root)
@@ -1013,7 +1013,7 @@ class TestReviewFixes:
         }]
         md["default-spec-id"] = 1
         md["last-partition-id"] = 1001
-        assert w._publish_metadata(md, base_v)
+        w._publish_metadata(md, base_v)
         src = spark.createDataFrame(
             [(1, "r0", 9.0)], "k long, region string, v double"
         ).coalesce(1)
@@ -1046,7 +1046,7 @@ class TestReviewFixes:
         # renumber the ONE spec to id 3, as a foreign catalog might
         md["partition-specs"][0]["spec-id"] = 3
         md["default-spec-id"] = 3
-        assert w._publish_metadata(md, base_v)
+        w._publish_metadata(md, base_v)
         sid = w.append(spark.createDataFrame(
             [(2, "r1")], "k long, region string").coalesce(1))
         t = IcebergTable(w.path)

@@ -1991,6 +1991,7 @@ class TestWriterRaceFixes:
         the loop unchecked and raise 'pathological contention' for a
         batch that is durably committed — killing the streaming query
         spuriously. The exhaustion path must re-check and no-op."""
+        from algebraicdb_spark.operators import txnlog
         from algebraicdb_spark.operators.delta_writer import (
             DeltaTableWriter,
         )
@@ -2009,9 +2010,10 @@ class TestWriterRaceFixes:
             return orig(self_, version, actions)
 
         monkeypatch.setattr(DeltaTableWriter, "_publish", racy_publish)
-        # max_retries=1: the single attempt loses to the twin and the
+        # COMMIT_RETRIES=1: the single attempt loses to the twin and the
         # loop exhausts — the final check must return the no-op
-        assert t.append_txn(batch, "app", 3, max_retries=1) is None
+        monkeypatch.setattr(txnlog, "COMMIT_RETRIES", 1)
+        assert t.append_txn(batch, "app", 3) is None
         assert t.snapshot(spark).count() == 2  # committed exactly once
         assert _data_files(t) == set(t.live_paths())  # no orphans
 

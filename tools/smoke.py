@@ -5,7 +5,8 @@ module-level NameError in one operator file made ``registry.queries()``
 unrunnable, which zeroed the round's correctness sweep and crashed the
 bench. This script is the cheapest possible guard (<3 s, no Spark
 session): every package module imports, the registry loads, and the
-key count matches the SURVEY §2 inventory pin.
+key count matches SURVEY.md's "Inventory size" line — the one pin,
+which tests/test_registry.py also checks against the registry.
 
 Wired into ``.git/hooks/pre-commit`` (see tools/install_hooks.sh); also
 runnable by hand:
@@ -18,10 +19,21 @@ from __future__ import annotations
 import importlib
 import os
 import pkgutil
+import re
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-EXPECTED_KEYS = 329
+
+
+def expected_keys() -> int:
+    """The registered-key count SURVEY.md declares."""
+    with open(os.path.join(REPO_ROOT, "SURVEY.md")) as f:
+        m = re.search(
+            r"\*\*Inventory size: (\d+) registered query keys", f.read()
+        )
+    if m is None:
+        raise SystemExit("SMOKE FAIL: SURVEY.md inventory line not found")
+    return int(m.group(1))
 
 
 def main() -> int:
@@ -50,9 +62,9 @@ def main() -> int:
     from algebraicdb_spark.plans import registry
 
     registry.load_all()
-    n = len(registry.queries())
-    if n != EXPECTED_KEYS:
-        print(f"SMOKE FAIL: registry has {n} keys, expected {EXPECTED_KEYS}")
+    n, expected = len(registry.queries()), expected_keys()
+    if n != expected:
+        print(f"SMOKE FAIL: registry has {n} keys, expected {expected}")
         return 1
 
     # The driver contract module itself must parse and expose the API.
