@@ -30,6 +30,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,12 +93,13 @@ from algebraicdb_spark.dialect import (
     parse_update_sets,
     spark_type,
 )
+from algebraicdb_spark import fixpoint
 from algebraicdb_spark.fixpoint import _HEAD_RE as _FIXPOINT_RE
 from algebraicdb_spark.functions.adt import AdtError, AdtType, Variant
 from algebraicdb_spark.session import get_spark
 from algebraicdb_spark.sources.catalog import ensure_confs, load_tables
 
-__all__ = ["Engine", "parse_create_type"]
+__all__ = ["Engine", "mutates", "parse_create_type"]
 
 # `FROM t VERSION AS OF 3` / `FROM t FOR TIMESTAMP AS OF '…'` — the
 # time-travel read sugar every lakehouse SQL dialect exposes; lowered
@@ -178,6 +181,9 @@ class Engine:
         self._stats: dict[str, list[tuple]] = {}  # name -> ANALYZE rows
         # name -> {"fmt", "path", "version"} for ATTACHed lakehouse tables
         self._attached: dict[str, dict] = {}
+        # serializes the catalog-writing statements (the table's
+        # ``mutates`` entries); reads never take it
+        self._lock = threading.Lock()
         if sf_dir:
             self.attach(sf_dir)
 
@@ -315,6 +321,26 @@ class Engine:
         self._attached[name] = {"fmt": fmt, "path": path, "version": None}
         return df
 
+    def _optimize_stmt(self, m: re.Match) -> DataFrame:
+        cols = m.group("cols")
+        return self._maintain_attached(
+            m.group("name"), "optimize",
+            zorder_by=[c.strip() for c in cols.split(",")] if cols else None,
+        )
+
+    def _vacuum_stmt(self, m: re.Match) -> DataFrame:
+        r = m.group("retain")
+        return self._maintain_attached(
+            m.group("name"), "vacuum", retain_versions=int(r) if r else 2
+        )
+
+    def _refresh_table_stmt(self, m: re.Match) -> DataFrame:
+        name = m.group("name")
+        if name in self._attached:
+            return self._maintain_attached(name, "refresh")
+        # not ours: Spark's own REFRESH TABLE (metadata cache)
+        return self.spark.sql(m.string)
+
     # -- statements ----------------------------------------------------
 
     def sql_script(self, script: str) -> DataFrame | AdtType | None:
@@ -339,155 +365,37 @@ class Engine:
     ) -> DataFrame | AdtType | None:
         """Run one statement of the dialect.
 
-        CREATE TYPE / CREATE TABLE / INSERT / DROP TABLE are engine
-        statements (Spark lacks them); anything else is pattern-
-        rewritten and handed to Spark SQL. ``params`` binds named
+        A statement matching an entry of ``_STATEMENTS`` is an engine
+        statement (Spark lacks it) and runs its handler; catalog-writing
+        entries run under the engine's lock, so concurrent mutations on
+        one session never lose each other's view swaps. Anything else is
+        pattern-rewritten and handed to Spark SQL. ``params`` binds named
         (``:name`` + dict) or positional (``?`` + list) parameters on
-        the read path via Spark's parameterized SQL — values never
+        that read path via Spark's parameterized SQL — values never
         enter the statement text, so clients need no quoting/escaping
         (the server exposes this as the request's ``params`` field).
-        Engine statements (DDL/mutations) don't accept params.
+        Engine statements refuse params.
         """
-        if _CREATE_TYPE_RE.match(stmt):
-            adt = parse_create_type(stmt, self._types)
-            self._types[adt.name] = adt
-            return adt
-        if _CTAS_LAKEHOUSE_RE.match(stmt):
-            return self._ctas_lakehouse_stmt(_CTAS_LAKEHOUSE_RE.match(stmt))
-        if _CTAS_RE.match(stmt):
-            m = _CTAS_RE.match(stmt)
-            df = self.spark.sql(self._rewrite(m.group("query")))
-            self.create_table(m.group("name"), df)
-            return df
-        if _CREATE_TABLE_RE.match(stmt):
-            return self._create_table_stmt(stmt)
-        if _INSERT_RE.match(stmt):
-            return self._insert_stmt(stmt)
-        if _DELETE_RE.match(stmt):
-            return self._delete_stmt(stmt)
-        if _UPDATE_RE.match(stmt):
-            return self._update_stmt(stmt)
-        if _MERGE_RE.match(stmt):
-            return self._merge_stmt(stmt)
-        if _UPSERT_RE.match(stmt):
-            return self._upsert_stmt(stmt)
-        if _DROP_TABLE_RE.match(stmt):
-            name = _DROP_TABLE_RE.match(stmt).group("name")
-            if name in self._views:
-                raise AdtError(f"{name} is a view — use DROP VIEW")
-            self.spark.catalog.dropTempView(name)
-            self._tables.pop(name, None)
-            # a dropped ATTACHment must not resurrect through the
-            # catalog round-trip
-            self._attached.pop(name, None)
-            self._invalidate_stats(name)
-            return None
-        if _ALTER_TABLE_RE.match(stmt):
-            return self._alter_table_stmt(stmt)
-        if _COPY_TO_RE.match(stmt):
-            m = _COPY_TO_RE.match(stmt)
-            return self._copy_to(
-                m.group("name"), m.group("path"), m.group("opts"),
-                query=m.group("query"),
-            )
-        if _COPY_FROM_RE.match(stmt):
-            m = _COPY_FROM_RE.match(stmt)
-            return self._copy_from(m.group("name"), m.group("path"), m.group("fmt"))
-        if _CREATE_MATVIEW_RE.match(stmt):
-            m = _CREATE_MATVIEW_RE.match(stmt)
-            return self._create_matview(m.group("name"), m.group("query"))
-        if _REFRESH_MATVIEW_RE.match(stmt):
-            return self._refresh_matview(_REFRESH_MATVIEW_RE.match(stmt).group("name"))
-        if _DROP_MATVIEW_RE.match(stmt):
-            return self._drop_matview(_DROP_MATVIEW_RE.match(stmt).group("name"))
-        if _EXPLAIN_RE.match(stmt):
-            return self._explain_stmt(stmt)
-        if _SHOW_CREATE_RE.match(stmt):
-            return self._show_create_stmt(_SHOW_CREATE_RE.match(stmt).group("name"))
-        if _SHOW_TABLES_RE.match(stmt):
-            return self._show_tables_stmt()
-        if _ATTACH_TABLE_RE.match(stmt):
-            m = _ATTACH_TABLE_RE.match(stmt)
-            return self._attach_table_stmt(
-                m.group("name"), m.group("fmt"), m.group("path"),
-                m.group("version"),
-            )
-        if _OPTIMIZE_TABLE_RE.match(stmt):
-            m = _OPTIMIZE_TABLE_RE.match(stmt)
-            cols = m.group("cols")
-            return self._maintain_attached(
-                m.group("name"), "optimize",
-                zorder_by=[c.strip() for c in cols.split(",")] if cols else None,
-            )
-        if _VACUUM_TABLE_RE.match(stmt):
-            m = _VACUUM_TABLE_RE.match(stmt)
-            r = m.group("retain")
-            return self._maintain_attached(
-                m.group("name"), "vacuum",
-                retain_versions=int(r) if r else 2,
-            )
-        if _REFRESH_TABLE_RE.match(stmt):
-            name = _REFRESH_TABLE_RE.match(stmt).group("name")
-            if name in self._attached:
-                return self._maintain_attached(name, "refresh")
-            # not ours: Spark's own REFRESH TABLE (metadata cache)
-            return self.spark.sql(stmt)
-        if _SHOW_STATS_RE.match(stmt):
-            return self._show_stats_stmt(_SHOW_STATS_RE.match(stmt).group("name"))
-        if _ANALYZE_RE.match(stmt):
-            return self._analyze_stmt(_ANALYZE_RE.match(stmt).group("name"))
-        if _TRUNCATE_RE.match(stmt):
-            # TRUNCATE t == DELETE FROM t without a predicate: the view
-            # swaps to an empty limit(0) of itself, schema intact
-            return self._delete_stmt(
-                f"DELETE FROM {_TRUNCATE_RE.match(stmt).group('name')}"
-            )
-        if _DESCRIBE_HISTORY_RE.match(stmt):
-            return self._describe_history_stmt(
-                _DESCRIBE_HISTORY_RE.match(stmt).group("name")
-            )
-        if _RESTORE_TABLE_RE.match(stmt):
-            m = _RESTORE_TABLE_RE.match(stmt)
-            return self._restore_stmt(
-                m.group("name"), m.group("ver"), m.group("ts")
-            )
-        if _SHOW_TBLPROPS_RE.match(stmt):
-            return self._show_tblprops_stmt(
-                _SHOW_TBLPROPS_RE.match(stmt).group("name")
-            )
-        if _DESCRIBE_RE.match(stmt):
-            return self._describe_stmt(_DESCRIBE_RE.match(stmt).group("name"))
-        if _CREATE_VIEW_RE.match(stmt):
-            m = _CREATE_VIEW_RE.match(stmt)
-            return self._create_view(
-                m.group("name"), m.group("query"), bool(m.group("replace"))
-            )
-        if _DROP_VIEW_RE.match(stmt):
-            return self._drop_view(_DROP_VIEW_RE.match(stmt).group("name"), stmt)
-        if _CREATE_FUNCTION_RE.match(stmt):
-            return self._create_function_stmt(stmt)
-        if _DROP_FUNCTION_RE.match(stmt):
-            name = _DROP_FUNCTION_RE.match(stmt).group("name").lower()
-            if name not in self._functions:
-                raise AdtError(f"no such function: {name}")
-            del self._functions[name]
-            return None
-        if _SHOW_FUNCTIONS_RE.match(stmt):
-            return self._show_functions_stmt()
-        if _FIXPOINT_RE.match(stmt):
-            from algebraicdb_spark.fixpoint import run_fixpoint
-
-            if params is not None:
-                raise AdtError(
-                    "WITH RECURSIVE / WITH ITERATE statements do not "
-                    "accept bound parameters"
-                )
-            return run_fixpoint(self.spark, stmt, self._rewrite)
-        if params is not None:
+        route = _route(stmt)
+        if route is None:
             return self.spark.sql(self._rewrite(stmt), args=params)
-        return self.spark.sql(self._rewrite(stmt))
+        handler, m, writes = route
+        if params is not None:
+            head = " ".join(stmt.split()[:2]).upper()
+            raise AdtError(
+                f"{head}: engine statements do not accept bound "
+                "parameters — only plain reads bind them"
+            )
+        if not writes:
+            return handler(self, m)
+        with self._lock:
+            return handler(self, m)
 
-    def _explain_stmt(self, stmt: str) -> DataFrame:
+    def _fixpoint_stmt(self, m: re.Match) -> DataFrame:
+        # looked up per call: the module function is the public hook
+        return fixpoint.run_fixpoint(self.spark, m.string, self._rewrite)
+
+    def _explain_stmt(self, m: re.Match) -> DataFrame:
         """EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST|SCALE|ANALYZE] <read stmt>.
 
         The inner statement goes through the same pattern lowering as
@@ -502,10 +410,9 @@ class Engine:
         EXPLAIN ANALYZE EXECUTES the statement (JVM-side, no rows ever
         reach the driver) and returns the per-operator runtime metrics
         from the executed plan — actual row counts, spill, shuffle
-        bytes, scan/agg times. All modes are reads; the server runs
-        them lock-free (plain EXPLAIN never executes, ANALYZE executes
+        bytes, scan/agg times. All modes are reads and run without the
+        engine lock (plain EXPLAIN never executes, ANALYZE executes
         but mutates nothing)."""
-        m = _EXPLAIN_RE.match(stmt)
         mode = (m.group("mode") or "FORMATTED").upper()
         if _FIXPOINT_RE.match(m.group("query")):
             if mode == "SCALE":
@@ -553,10 +460,10 @@ class Engine:
         must run the plan. ``spark.sql`` executes commands EAGERLY at
         the call site, so ``EXPLAIN ANALYZE CREATE TABLE t AS …`` would
         create a real table — and, because EXPLAIN is classified as a
-        lock-free read, do so on a replica past the server's mutation
-        gate (round-4 ADVICE, medium). The check is parse-only (no
-        execution): the statement is rejected when Catalyst parses it
-        to a ``Command`` node or a DDL/DML ``*Statement`` node."""
+        lock-free read, do so past the engine's mutation lock (round-4
+        ADVICE, medium). The check is parse-only (no execution): the
+        statement is rejected when Catalyst parses it to a ``Command``
+        node or a DDL/DML ``*Statement`` node."""
         parser = self.spark._jsparkSession.sessionState().sqlParser()
         try:
             plan = parser.parsePlan(lowered_sql)
@@ -645,7 +552,7 @@ class Engine:
         self.spark.catalog.dropTempView(name)
         del self._matviews[name]
 
-    def _show_tables_stmt(self) -> DataFrame:
+    def _show_tables_stmt(self, m: re.Match) -> DataFrame:
         """SHOW TABLES — every temp view visible to this session."""
         names = [
             (t.name,) for t in self.spark.catalog.listTables() if t.isTemporary
@@ -656,7 +563,7 @@ class Engine:
         "column_name string, n_rows bigint, ndv_approx bigint, n_nulls bigint"
     )
 
-    def _analyze_stmt(self, name: str) -> DataFrame:
+    def _analyze_stmt(self, m: re.Match) -> DataFrame:
         """ANALYZE [TABLE] t — one scan computing per-column statistics
         (row count, HLL approx-NDV, null count), cached on the engine
         and returned as rows. SHOW STATS t reads the cache.
@@ -671,6 +578,7 @@ class Engine:
         partials per column in a single pass — never one scan per
         column.
         """
+        name = m.group("name")
         try:
             df = self.spark.table(name)
         except Exception as exc:  # unknown view/table
@@ -689,19 +597,21 @@ class Engine:
         self._stats[name] = stats
         return self.spark.createDataFrame(stats, self._STATS_SCHEMA)
 
-    def _show_stats_stmt(self, name: str) -> DataFrame:
+    def _show_stats_stmt(self, m: re.Match) -> DataFrame:
         """SHOW STATS [FOR] t — the cached ANALYZE rows (error if the
         table was never analyzed; re-ANALYZE after mutations, exactly
         as other warehouses require)."""
+        name = m.group("name")
         if name not in self._stats:
             raise AdtError(f"SHOW STATS: {name} has not been ANALYZEd")
         return self.spark.createDataFrame(self._stats[name], self._STATS_SCHEMA)
 
-    def _show_create_stmt(self, name: str) -> DataFrame:
+    def _show_create_stmt(self, m: re.Match) -> DataFrame:
         """SHOW CREATE TABLE t — a round-trippable dialect DDL string:
         dialect tables print their declared column types (ADT columns
         by type NAME), materialized views their defining query,
         attached fixture views their live Spark schema."""
+        name = m.group("name")
         if name in self._matviews:
             stmt = f"CREATE MATERIALIZED VIEW {name} AS {self._matviews[name]}"
             return self.spark.createDataFrame([(stmt,)], "create_stmt string")
@@ -725,9 +635,7 @@ class Engine:
         stmt = f"CREATE TABLE {name} ({cols})"
         return self.spark.createDataFrame([(stmt,)], "create_stmt string")
 
-    def _restore_stmt(
-        self, name: str, ver: str | None, ts: str | None
-    ) -> None:
+    def _restore_stmt(self, m: re.Match) -> None:
         """RESTORE TABLE n TO VERSION AS OF v / TO TIMESTAMP AS OF 'ts'
         — rollback an ATTACHed table to an earlier state as ONE new
         commit, history preserved (the write-side twin of the AS-OF
@@ -739,6 +647,7 @@ class Engine:
         through the writers' own loud errors; a VERSION-pinned
         attachment refuses (mutating a historical pin); the view
         re-registers on the restored snapshot."""
+        name, ver, ts = m.group("name", "ver", "ts")
         self._refuse_view_mutation("RESTORE", name)
         if name not in self._attached:
             raise AdtError(
@@ -770,10 +679,11 @@ class Engine:
         self._reattach_after_mutation(name, t)
         return None
 
-    def _show_tblprops_stmt(self, name: str) -> DataFrame:
+    def _show_tblprops_stmt(self, m: re.Match) -> DataFrame:
         """SHOW TBLPROPERTIES n — the properties/configuration map of
         an ATTACHed lakehouse table (iceberg properties, delta
         configuration), one (key, value) row each."""
+        name = m.group("name")
         if name not in self._attached:
             raise AdtError(
                 f"SHOW TBLPROPERTIES: {name!r} is not an ATTACHed "
@@ -786,11 +696,12 @@ class Engine:
             rows or [], "key string, value string"
         )
 
-    def _describe_history_stmt(self, name: str) -> DataFrame:
+    def _describe_history_stmt(self, m: re.Match) -> DataFrame:
         """DESCRIBE HISTORY n — the commit/snapshot audit trail of an
         ATTACHed lakehouse table: delta (commitInfo operations),
         iceberg (snapshot summaries). One row per surviving
         commit/snapshot, newest last."""
+        name = m.group("name")
         if name not in self._attached:
             raise AdtError(
                 f"DESCRIBE HISTORY: {name!r} is not an ATTACHed table "
@@ -813,10 +724,11 @@ class Engine:
             "snapshot_id long, parent_snapshot_id long, operation string",
         )
 
-    def _describe_stmt(self, name: str) -> DataFrame:
+    def _describe_stmt(self, m: re.Match) -> DataFrame:
         """DESCRIBE t — column names and types; ADT-typed columns
         declared through the dialect report their type NAME (the
         user-facing contract), not the struct encoding."""
+        name = m.group("name")
         td = self._tables.get(name)
         adt_cols = td.adt_columns if td else {}
         try:
@@ -834,14 +746,35 @@ class Engine:
         ]
         return self.spark.createDataFrame(rows, "column_name string, type string")
 
-    def _create_table_stmt(self, stmt: str) -> None:
-        td = parse_create_table(stmt, self._types)
+    def _create_type_stmt(self, m: re.Match) -> AdtType:
+        adt = parse_create_type(m.string, self._types)
+        self._types[adt.name] = adt
+        return adt
+
+    def _ctas_stmt(self, m: re.Match) -> DataFrame:
+        df = self.spark.sql(self._rewrite(m.group("query")))
+        self.create_table(m.group("name"), df)
+        return df
+
+    def _create_table_stmt(self, m: re.Match) -> None:
+        td = parse_create_table(m.string, self._types)
         empty = self.spark.createDataFrame([], td.schema_ddl())
         empty.createOrReplaceTempView(td.name)
         self._tables[td.name] = td
         self._invalidate_stats(td.name)
 
-    def _alter_table_stmt(self, stmt: str) -> None:
+    def _drop_table_stmt(self, m: re.Match) -> None:
+        name = m.group("name")
+        if name in self._views:
+            raise AdtError(f"{name} is a view — use DROP VIEW")
+        self.spark.catalog.dropTempView(name)
+        self._tables.pop(name, None)
+        # a dropped ATTACHment must not resurrect through the catalog
+        # round-trip
+        self._attached.pop(name, None)
+        self._invalidate_stats(name)
+
+    def _alter_table_stmt(self, m: re.Match) -> None:
         """ALTER TABLE t ADD COLUMN c: Type [DEFAULT expr] | DROP
         COLUMN c | RENAME COLUMN a TO b — lowered to a projected view
         replacement (the same mechanism as UPDATE/CTAS), with the
@@ -851,7 +784,6 @@ class Engine:
         Existing rows get the DEFAULT (or NULL) for an added column —
         pairing with evolution-on-read (`source_schema_evolution`),
         which handles the same widening at the parquet scan."""
-        m = _ALTER_TABLE_RE.match(stmt)
         name, action = m.group("name"), m.group("action").strip()
         if name in self._views:
             raise AdtError(
@@ -1033,10 +965,7 @@ class Engine:
             )
         return fmt
 
-    def _copy_to(
-        self, name: str | None, path: str, opts: str | None,
-        query: str | None = None,
-    ) -> None:
+    def _copy_to_stmt(self, m: re.Match) -> None:
         """COPY t TO 'path' / COPY (SELECT …) TO 'path' (FORMAT
         parquet|csv|json|orc[, OVERWRITE]) — export a table or query
         result as files. A distributed write (one file per partition),
@@ -1045,10 +974,11 @@ class Engine:
         same pattern lowering as any read. An existing target is an
         ERROR unless OVERWRITE is given — the prior silent overwrite
         let any export clobber an arbitrary writable path (round-4
-        ADVICE), and the OVERWRITE form is gated as a mutation by the
-        server."""
+        ADVICE), and the OVERWRITE form runs under the engine lock as a
+        mutation."""
+        name, path, query = m.group("name", "path", "query")
         try:
-            fmt, overwrite = parse_copy_to_options(opts)
+            fmt, overwrite = parse_copy_to_options(m.group("opts"))
         except ValueError as exc:
             raise AdtError(str(exc)) from exc
         fmt = self._copy_format(fmt)
@@ -1064,7 +994,7 @@ class Engine:
             writer = writer.option("header", True)
         writer.format(fmt).save(path)
 
-    def _copy_from(self, name: str, path: str, fmt: str | None) -> None:
+    def _copy_from_stmt(self, m: re.Match) -> None:
         """COPY t FROM 'path' (FORMAT …) — append files into an
         existing table. Files are read WITH the table's declared schema
         (no inference drift: a CSV integer column comes back as the
@@ -1081,6 +1011,7 @@ class Engine:
         gates), never a view union that ``REFRESH TABLE`` would
         silently revert (the round-10 verdict's found defect).
         VERSION-pinned attachments refuse loudly."""
+        name, path, fmt = m.group("name", "path", "fmt")
         if name in self._views:
             raise AdtError(
                 f"COPY: {name!r} is a view — COPY into its base table instead"
@@ -1116,7 +1047,7 @@ class Engine:
         existing.unionByName(batch).createOrReplaceTempView(name)
         self._invalidate_stats(name)
 
-    def _insert_stmt(self, stmt: str) -> None:
+    def _insert_stmt(self, m: re.Match) -> None:
         """INSERT INTO t VALUES … — a view-union swap on dialect
         tables; on an ATTACHed lakehouse table the batch becomes a
         REAL append commit through the format's writer (the same
@@ -1124,12 +1055,12 @@ class Engine:
         union would revert on REFRESH and desync later COW
         mutations). Values cast to the table's live schema so literal
         typing (int vs bigint) never trips the writers' schema gate."""
-        name = _INSERT_RE.match(stmt).group("name")
+        name = m.group("name")
         self._refuse_view_mutation("INSERT", name)
         td = self._tables.get(name)
         if td is None:
             raise AdtError(f"INSERT into unknown table {name!r}")
-        _, rows = parse_insert_rows(stmt, td, self._types)
+        _, rows = parse_insert_rows(m.string, td, self._types)
         batch = self.spark.sql(" UNION ALL ".join(f"SELECT {r}" for r in rows))
         if name in self._attached:
             att = self._attached[name]
@@ -1155,7 +1086,7 @@ class Engine:
         self.table(name).unionByName(batch).createOrReplaceTempView(name)
         self._invalidate_stats(name)
 
-    def _merge_stmt(self, stmt: str) -> None:
+    def _merge_stmt(self, m: re.Match) -> None:
         """MERGE INTO t USING s ON <cond>
         [WHEN MATCHED THEN UPDATE SET c = e, …]
         [WHEN NOT MATCHED THEN INSERT VALUES (e, …)]
@@ -1183,7 +1114,6 @@ class Engine:
         would silently revert (the round-10 verdict's found defect);
         there multi-matching source rows ARE an error. VERSION-pinned
         attachments refuse loudly, exactly like DELETE/UPDATE."""
-        m = _MERGE_RE.match(stmt)
         target, source = m.group("target"), m.group("source")
         self._refuse_view_mutation("MERGE INTO", target)
         cond = m.group("cond").strip()
@@ -1287,7 +1217,7 @@ class Engine:
         merged.createOrReplaceTempView(target)
         self._invalidate_stats(target)
 
-    def _upsert_stmt(self, stmt: str) -> None:
+    def _upsert_stmt(self, m: re.Match) -> None:
         """UPSERT INTO t BY KEY (k1, k2) [TXN ('app', v)] SELECT … —
         the SQL surface for ``IcebergTableWriter.upsert_by_key``: ONE
         snapshot lands an equality-delete file of the source's key
@@ -1302,7 +1232,6 @@ class Engine:
         refuse loudly. Iceberg attachments only: delta expresses
         keyed upserts through MERGE INTO (which probes), and dialect
         temp views have no delete files to ride."""
-        m = _UPSERT_RE.match(stmt)
         target = m.group("target")
         self._refuse_view_mutation("UPSERT INTO", target)
         keys = [k.strip() for k in m.group("keys").split(",") if k.strip()]
@@ -1397,14 +1326,16 @@ class Engine:
         self._attached[name] = {**att, "version": None}
         self._invalidate_stats(name)
 
-    def _delete_stmt(self, stmt: str) -> None:
+    def _delete_stmt(self, m: re.Match) -> None:
         """DELETE FROM t [WHERE pred] — on an ATTACHed lakehouse table this
         is COPY-ON-WRITE row deletion (only files containing matching
         rows are rewritten; the commit is remove+add, atomic,
         time-travelable); on a dialect table it lowers to a filtered
-        view replacement (patterns allowed in the predicate)."""
-        m = _DELETE_RE.match(stmt)
-        name, pred = m.group("name"), m.group("pred")
+        view replacement (patterns allowed in the predicate).
+        TRUNCATE [TABLE] t shares this handler: its match has no
+        ``pred`` group, so it is DELETE without a predicate — the view
+        swaps to an empty limit(0) of itself, schema intact."""
+        name, pred = m.group("name"), m.groupdict().get("pred")
         self._refuse_view_mutation("DELETE", name)
         if name in self._attached:
             t = self._mutable_attachment("DELETE", name)
@@ -1431,13 +1362,12 @@ class Engine:
         kept.createOrReplaceTempView(name)
         self._invalidate_stats(name)
 
-    def _update_stmt(self, stmt: str) -> None:
+    def _update_stmt(self, m: re.Match) -> None:
         """UPDATE t SET c = e, … [WHERE pred] — on an ATTACHed lakehouse
         table this is COPY-ON-WRITE row update (matched files rewritten
         with CASE per assigned column, atomic remove+add commit); on a
         dialect table it lowers to a projected view replacement."""
-        m = _UPDATE_RE.match(stmt)
-        name, sets, pred = m.group("name"), m.group("sets"), m.group("pred")
+        name, sets, pred = m.group("name", "sets", "pred")
         self._refuse_view_mutation("UPDATE", name)
         if name in self._attached:
             t = self._mutable_attachment("UPDATE", name)
@@ -1520,9 +1450,10 @@ class Engine:
         )
         return None
 
-    def _drop_view(self, name: str, stmt: str) -> None:
+    def _drop_view_stmt(self, m: re.Match) -> None:
+        name = m.group("name")
         if name not in self._views:
-            if "IF EXISTS" in stmt.upper():
+            if "IF EXISTS" in m.string.upper():
                 return None
             raise AdtError(f"no such view: {name}")
         self.spark.catalog.dropTempView(name)
@@ -1530,13 +1461,13 @@ class Engine:
         self._tables.pop(name, None)
         return None
 
-    def _create_function_stmt(self, stmt: str) -> None:
+    def _create_function_stmt(self, m: re.Match) -> None:
         """CREATE [OR REPLACE] FUNCTION f(a, b) AS <expr> — a scalar
         SQL macro, inlined textually at every call site before pattern
         lowering (so macro bodies may use ADT patterns and other
         macros). No runtime dispatch: Catalyst optimizes the expanded
         expression like hand-written SQL."""
-        name, fn_params, body, replace = parse_create_function(stmt)
+        name, fn_params, body, replace = parse_create_function(m.string)
         if name in self._functions and not replace:
             raise AdtError(
                 f"function {name} already exists (use CREATE OR REPLACE)"
@@ -1551,7 +1482,13 @@ class Engine:
         self._functions[name] = (fn_params, body)
         return None
 
-    def _show_functions_stmt(self) -> DataFrame:
+    def _drop_function_stmt(self, m: re.Match) -> None:
+        name = m.group("name").lower()
+        if name not in self._functions:
+            raise AdtError(f"no such function: {name}")
+        del self._functions[name]
+
+    def _show_functions_stmt(self, m: re.Match) -> DataFrame:
         def fmt(ps):
             return ", ".join(
                 pn if d is None else f"{pn} := {d}"
@@ -1927,3 +1864,84 @@ class Engine:
     @property
     def types(self) -> dict[str, AdtType]:
         return dict(self._types)
+
+
+def _copy_to_overwrites(m: re.Match) -> bool:
+    """COPY … TO is a read-side export unless it carries OVERWRITE,
+    which deletes the existing target directory. A malformed option
+    list counts as a read: the handler refuses it."""
+    try:
+        return parse_copy_to_options(m.group("opts"))[1]
+    except ValueError:
+        return False
+
+
+# Every engine statement, in match order: (pattern, handler, mutates).
+# ``Engine.sql`` runs the handler of the first matching pattern; a
+# statement that matches none is a Spark read. ``mutates`` — a bool, or
+# a predicate over the match — marks the statements that write the
+# catalog (temp-view swaps, the engine's dicts, lakehouse commits);
+# they run under the engine lock, reads never take it.
+_STATEMENTS: tuple[tuple[re.Pattern, Callable, bool | Callable], ...] = (
+    (_CREATE_TYPE_RE, Engine._create_type_stmt, True),
+    (_CTAS_LAKEHOUSE_RE, Engine._ctas_lakehouse_stmt, True),
+    (_CTAS_RE, Engine._ctas_stmt, True),
+    (_CREATE_TABLE_RE, Engine._create_table_stmt, True),
+    (_INSERT_RE, Engine._insert_stmt, True),
+    (_DELETE_RE, Engine._delete_stmt, True),
+    (_UPDATE_RE, Engine._update_stmt, True),
+    (_MERGE_RE, Engine._merge_stmt, True),
+    (_UPSERT_RE, Engine._upsert_stmt, True),
+    (_DROP_TABLE_RE, Engine._drop_table_stmt, True),
+    (_ALTER_TABLE_RE, Engine._alter_table_stmt, True),
+    (_COPY_TO_RE, Engine._copy_to_stmt, _copy_to_overwrites),
+    (_COPY_FROM_RE, Engine._copy_from_stmt, True),
+    (_CREATE_MATVIEW_RE,
+     lambda e, m: e._create_matview(m.group("name"), m.group("query")), True),
+    (_REFRESH_MATVIEW_RE,
+     lambda e, m: e._refresh_matview(m.group("name")), True),
+    (_DROP_MATVIEW_RE, lambda e, m: e._drop_matview(m.group("name")), True),
+    (_EXPLAIN_RE, Engine._explain_stmt, False),
+    (_SHOW_CREATE_RE, Engine._show_create_stmt, False),
+    (_SHOW_TABLES_RE, Engine._show_tables_stmt, False),
+    (_ATTACH_TABLE_RE,
+     lambda e, m: e._attach_table_stmt(*m.group("name", "fmt", "path", "version")),
+     True),
+    (_OPTIMIZE_TABLE_RE, Engine._optimize_stmt, True),
+    (_VACUUM_TABLE_RE, Engine._vacuum_stmt, True),
+    (_REFRESH_TABLE_RE, Engine._refresh_table_stmt, True),
+    (_SHOW_STATS_RE, Engine._show_stats_stmt, False),
+    (_ANALYZE_RE, Engine._analyze_stmt, True),
+    (_TRUNCATE_RE, Engine._delete_stmt, True),
+    (_DESCRIBE_HISTORY_RE, Engine._describe_history_stmt, False),
+    (_RESTORE_TABLE_RE, Engine._restore_stmt, True),
+    (_SHOW_TBLPROPS_RE, Engine._show_tblprops_stmt, False),
+    (_DESCRIBE_RE, Engine._describe_stmt, False),
+    (_CREATE_VIEW_RE,
+     lambda e, m: e._create_view(
+         m.group("name"), m.group("query"), bool(m.group("replace"))
+     ),
+     True),
+    (_DROP_VIEW_RE, Engine._drop_view_stmt, True),
+    (_CREATE_FUNCTION_RE, Engine._create_function_stmt, True),
+    (_DROP_FUNCTION_RE, Engine._drop_function_stmt, True),
+    (_SHOW_FUNCTIONS_RE, Engine._show_functions_stmt, False),
+    (_FIXPOINT_RE, Engine._fixpoint_stmt, False),
+)
+
+
+def _route(stmt: str) -> tuple[Callable, re.Match, bool] | None:
+    """The first ``_STATEMENTS`` entry matching ``stmt`` as (handler,
+    match, mutates), or None for a plain Spark read."""
+    for pattern, handler, writes in _STATEMENTS:
+        m = pattern.match(stmt)
+        if m is not None:
+            return handler, m, writes(m) if callable(writes) else writes
+    return None
+
+
+def mutates(stmt: str) -> bool:
+    """Whether ``Engine.sql(stmt)`` writes the catalog and therefore
+    runs under the engine lock — the one statement classifier."""
+    route = _route(stmt)
+    return route is not None and route[2]

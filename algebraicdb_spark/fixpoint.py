@@ -282,61 +282,62 @@ def _run_recursive(spark, stmt, ctes, final, saved, rewrite) -> DataFrame:
             sql = _substitute(sql, orig, v)
         return sql
 
-    for c in prefix:
-        pview = _fresh_view(c.name)
-        pdf = run(_rebind(c.body))
-        if c.cols:
-            pdf = pdf.toDF(*c.cols)
-        pdf.localCheckpoint(eager=True).createOrReplaceTempView(pview)
-        prefix_views.append((c.name, pview))
-    base_segs = [_rebind(s) for s in base_segs]
-    step_segs = [_rebind(s) for s in step_segs]
-    suffix = [_Cte(c.name, c.cols, _rebind(c.body)) for c in suffix]
-    final = _rebind(final)
-
-    acc = run(" UNION ".join(base_segs))
-    if cte.cols:
-        acc = acc.toDF(*cte.cols)
-    acc = acc.distinct().localCheckpoint(eager=True)
-    # semi-naive is sound only when each step references the name once:
-    # a self-join step needs delta×old pairs the delta view can't see
-    semi_naive = all(_refs(s, cte.name) == 1 for s in step_segs)
-    delta = acc
-    converged = False
-    for _ in range(limit):
-        (delta if semi_naive else acc).createOrReplaceTempView(view)
-        new = None
-        for seg in step_segs:
-            part = run(_substitute(seg, cte.name, view))
-            if cte.cols:
-                part = part.toDF(*cte.cols)
-            new = part if new is None else new.unionByName(part)
-        # EXCEPT DISTINCT (null-safe set difference): rows already in
-        # the accumulator die here, so acc grows strictly or we stop.
-        # Lazy checkpoint + count folds the former two jobs per round
-        # (eager materialize, then an isEmpty probe) into ONE: count()
-        # is the action that materializes the checkpoint AND answers
-        # the emptiness question (guide §2.4 — one pass, one job).
-        delta = _rebase(new.subtract(acc)).localCheckpoint(eager=False)
-        if delta.count() == 0:
-            converged = True
-            break
-        # the accumulator stays a flat union of checkpointed deltas —
-        # O(rounds) plan leaves, each an in-memory RDD scan
-        acc = _rebase(acc.unionByName(delta))
-    spark.catalog.dropTempView(view)
-    if not converged:
-        raise AdtError(
-            f"WITH RECURSIVE {cte.name}: no fixpoint within {limit} "
-            "iterations (spark.sql.cteRecursionLevelLimit) — raise the "
-            "limit or check the step for non-terminating generation"
-        )
-    # prefix CTE references in suffix/final are already rebound to the
-    # materialized views, so the final statement needs no WITH prefix
     try:
+        for c in prefix:
+            pview = _fresh_view(c.name)
+            pdf = run(_rebind(c.body))
+            if c.cols:
+                pdf = pdf.toDF(*c.cols)
+            pdf.localCheckpoint(eager=True).createOrReplaceTempView(pview)
+            prefix_views.append((c.name, pview))
+        base_segs = [_rebind(s) for s in base_segs]
+        step_segs = [_rebind(s) for s in step_segs]
+        suffix = [_Cte(c.name, c.cols, _rebind(c.body)) for c in suffix]
+        final = _rebind(final)
+
+        acc = run(" UNION ".join(base_segs))
+        if cte.cols:
+            acc = acc.toDF(*cte.cols)
+        acc = acc.distinct().localCheckpoint(eager=True)
+        # semi-naive is sound only when each step references the name once:
+        # a self-join step needs delta×old pairs the delta view can't see
+        semi_naive = all(_refs(s, cte.name) == 1 for s in step_segs)
+        delta = acc
+        converged = False
+        for _ in range(limit):
+            (delta if semi_naive else acc).createOrReplaceTempView(view)
+            new = None
+            for seg in step_segs:
+                part = run(_substitute(seg, cte.name, view))
+                if cte.cols:
+                    part = part.toDF(*cte.cols)
+                new = part if new is None else new.unionByName(part)
+            # EXCEPT DISTINCT (null-safe set difference): rows already in
+            # the accumulator die here, so acc grows strictly or we stop.
+            # Lazy checkpoint + count folds the former two jobs per round
+            # (eager materialize, then an isEmpty probe) into ONE: count()
+            # is the action that materializes the checkpoint AND answers
+            # the emptiness question (guide §2.4 — one pass, one job).
+            delta = _rebase(new.subtract(acc)).localCheckpoint(eager=False)
+            if delta.count() == 0:
+                converged = True
+                break
+            # the accumulator stays a flat union of checkpointed deltas —
+            # O(rounds) plan leaves, each an in-memory RDD scan
+            acc = _rebase(acc.unionByName(delta))
+        if not converged:
+            raise AdtError(
+                f"WITH RECURSIVE {cte.name}: no fixpoint within {limit} "
+                "iterations (spark.sql.cteRecursionLevelLimit) — raise the "
+                "limit or check the step for non-terminating generation"
+            )
+        # prefix CTE references in suffix/final are already rebound to the
+        # materialized views, so the final statement needs no WITH prefix
         return _bind_result(spark, acc, cte, [], suffix, final, saved, rewrite)
     finally:
-        for _, v in prefix_views:
+        # every exit path, a failing base or step included, drops the
+        # loop view and the materialized prefix CTEs
+        for v in [view, *(pv for _, pv in prefix_views)]:
             spark.catalog.dropTempView(v)
 
 
@@ -388,43 +389,45 @@ def _run_iterate(spark, ctes, final, saved, rewrite) -> DataFrame:
     view = _fresh_view(cte.name)
     run = lambda sql: spark.sql(rewrite(_unmask_strings(sql, saved)))  # noqa: E731
 
-    state = run(base_sql)
-    if cte.cols:
-        state = state.toDF(*cte.cols)
-    # lazy ckpt + count: one job materializes the base state AND
-    # seeds the count tier of the convergence probe (same fusion as
-    # the per-round probe below)
-    state = state.localCheckpoint(eager=False)
-    converged = False
-    prev_count = state.count()
-    for _ in range(limit):
-        state.createOrReplaceTempView(view)
-        nxt = run(_substitute(step_sql, cte.name, view))
+    try:
+        state = run(base_sql)
         if cte.cols:
-            nxt = nxt.toDF(*cte.cols)
-        # Lazy checkpoint + count: the count() action materializes the
-        # checkpoint AND yields the first convergence tier in ONE job
-        # (the former eager ckpt spent a separate job, then counted).
-        nxt = _rebase(nxt).localCheckpoint(eager=False)
-        # two-tier convergence probe: counts first (unequal counts
-        # prove inequality, which is the common case while a
-        # peel/propagation still moves), then the single-job null-safe
-        # set-equality probe only on count equality (state is a SET
-        # here; multiset-sensitive steps should key their state)
-        n = nxt.count()
-        if n == prev_count and _set_equal(nxt, state):
-            converged = True
-            break
-        prev_count = n
-        state = nxt
-    spark.catalog.dropTempView(view)
-    if not converged and not explicit_max:
-        raise AdtError(
-            f"WITH ITERATE {cte.name}: no fixpoint within {limit} "
-            "iterations — give an explicit MAX n for bounded-round "
-            "semantics or raise spark.sql.cteRecursionLevelLimit"
-        )
-    return _bind_result(spark, state, cte, [], suffix, final, saved, rewrite)
+            state = state.toDF(*cte.cols)
+        # lazy ckpt + count: one job materializes the base state AND
+        # seeds the count tier of the convergence probe (same fusion as
+        # the per-round probe below)
+        state = state.localCheckpoint(eager=False)
+        converged = False
+        prev_count = state.count()
+        for _ in range(limit):
+            state.createOrReplaceTempView(view)
+            nxt = run(_substitute(step_sql, cte.name, view))
+            if cte.cols:
+                nxt = nxt.toDF(*cte.cols)
+            # Lazy checkpoint + count: the count() action materializes the
+            # checkpoint AND yields the first convergence tier in ONE job
+            # (the former eager ckpt spent a separate job, then counted).
+            nxt = _rebase(nxt).localCheckpoint(eager=False)
+            # two-tier convergence probe: counts first (unequal counts
+            # prove inequality, which is the common case while a
+            # peel/propagation still moves), then the single-job null-safe
+            # set-equality probe only on count equality (state is a SET
+            # here; multiset-sensitive steps should key their state)
+            n = nxt.count()
+            if n == prev_count and _set_equal(nxt, state):
+                converged = True
+                break
+            prev_count = n
+            state = nxt
+        if not converged and not explicit_max:
+            raise AdtError(
+                f"WITH ITERATE {cte.name}: no fixpoint within {limit} "
+                "iterations — give an explicit MAX n for bounded-round "
+                "semantics or raise spark.sql.cteRecursionLevelLimit"
+            )
+        return _bind_result(spark, state, cte, [], suffix, final, saved, rewrite)
+    finally:
+        spark.catalog.dropTempView(view)
 
 
 def _bind_result(spark, df, cte, prefix, suffix, final, saved, rewrite) -> DataFrame:

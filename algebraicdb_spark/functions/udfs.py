@@ -192,13 +192,13 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("split_sentences", SplitSentences)
     d = load_tables(spark, sf_dir)["documents"]
-    d.filter(F.col("doc_id") % 50 == 0).createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         """
         SELECT s.doc_id, s.sent_idx, s.sentence_len
-        FROM _udtf_docs d,
+        FROM {docs} d,
              LATERAL split_sentences(d.doc_id, d.text) s
-        """
+        """,
+        docs=d.filter(F.col("doc_id") % 50 == 0),
     )
 
 

@@ -24,8 +24,6 @@ against its DuckDB oracle (md5-based hashing is engine-portable).
 
 from __future__ import annotations
 
-import itertools
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -442,7 +440,7 @@ def minhash_rerank(cands: DataFrame, toks: DataFrame) -> DataFrame:
 # job ran — cProfile on pipeline_dedup_funnel). Every expression is
 # byte-identical SQL text (REPARTITION hint == .repartition(cols),
 # SELECT DISTINCT == dropDuplicates, pround_sql == pround), so values
-# hash-match the former plan. Only the token view name and tau are
+# hash-match the former plan. Only the token table and tau are
 # substituted at call time.
 _MH_PAIRS_TEMPLATE = (
     "WITH hs AS (SELECT doc_id, " + _MH_HS_SQL + " FROM {toks}),\n"
@@ -466,31 +464,22 @@ _MH_PAIRS_TEMPLATE = (
     ") WHERE jaccard >= {tau}"
 )
 
-_MH_VIEW_SEQ = itertools.count()
-
-
 def minhash_pairs(docs: DataFrame, tau: float = JACCARD_TAU) -> DataFrame:
     """(doc_a, doc_b, jaccard) near-dup pairs at the MinHash tier:
     banded candidates → exact Jaccard rerank ≥ tau. `docs` is any
     (doc_id, text) DataFrame — the funnel feeds exact-dedup survivors.
 
-    The checkpointed token table goes in as a temp view and the rest
-    of the tier is one pre-rendered SQL statement (_MH_PAIRS_TEMPLATE);
-    spark.sql analyzes eagerly, so the view is dropped immediately —
-    the returned DataFrame holds the resolved relation (the
-    fixpoint-runner _bind_result precedent).
+    The checkpointed token table binds into one pre-rendered SQL
+    statement (_MH_PAIRS_TEMPLATE) as a ``spark.sql`` format argument:
+    Spark registers it under a uuid view name and drops that view once
+    the statement is analyzed — the returned DataFrame holds the
+    resolved relation.
     """
     toks = minhash_token_arrays(docs)
-    view = f"__mh_toks_{next(_MH_VIEW_SEQ)}"
-    toks.createOrReplaceTempView(view)
-    spark = toks.sparkSession
-    try:
-        # float() first: only a numeric literal may reach the SQL text
-        return spark.sql(
-            _MH_PAIRS_TEMPLATE.format(toks=view, tau=float(tau))
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    # float() first: only a numeric literal may reach the SQL text
+    return toks.sparkSession.sql(
+        _MH_PAIRS_TEMPLATE, toks=toks, tau=float(tau)
+    )
 
 
 def near_dup_pairs(

@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import itertools
-
 from algebraicdb_spark.functions.rounding import pround, pround_sql
 from algebraicdb_spark.operators.dedup import (
     JACCARD_TAU,
@@ -513,13 +511,11 @@ def pipeline_split_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # byte-identical regexp/ops, rendered once at import
 _CANON_SQL = r"regexp_replace(lower(trim(text)), '\\s+', ' ')"
 
-_FUNNEL_VIEW_SEQ = itertools.count()
-
 # The funnel's tier/token plumbing as ONE pre-rendered statement
 # (round 15): every expression is the same SQL text the Column form
 # generated (split/size token counts, literal tier tags, LEFT ANTI
 # near-drop cut, broadcast 1-row total, pround share), so values are
-# hash-identical; only the two view names are substituted per call.
+# hash-identical; only the two input tables are substituted per call.
 _FUNNEL_SQL_TEMPLATE = (
     "WITH toks AS (\n"
     "  SELECT doc_id,\n"
@@ -615,22 +611,11 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT ctext, MIN(doc_id) AS doc_id FROM (SELECT doc_id, "
         f"{_CANON_SQL} AS ctext FROM documents) GROUP BY ctext"
     ).localCheckpoint(eager=False)
-    keep_v = f"__funnel_keep_{next(_FUNNEL_VIEW_SEQ)}"
-    pairs_v = f"__funnel_pairs_{next(_FUNNEL_VIEW_SEQ)}"
-    # both views register inside the try: a failing minhash_pairs()
-    # must not leave keep_v behind in the session catalog
-    try:
-        exact_keep.createOrReplaceTempView(keep_v)
-        # feed the canonical text as `text`: minhash_pairs
-        # re-canonicalizes idempotently, and the oracle's exact_docs
-        # CTE does the same
-        exact_docs = exact_keep.select(
-            "doc_id", F.col("ctext").alias("text")
-        )
-        minhash_pairs(exact_docs).createOrReplaceTempView(pairs_v)
-        return spark.sql(
-            _FUNNEL_SQL_TEMPLATE.format(keep=keep_v, pairs=pairs_v)
-        )
-    finally:
-        spark.catalog.dropTempView(keep_v)
-        spark.catalog.dropTempView(pairs_v)
+    # feed the canonical text as `text`: minhash_pairs re-canonicalizes
+    # idempotently, and the oracle's exact_docs CTE does the same
+    exact_docs = exact_keep.select("doc_id", F.col("ctext").alias("text"))
+    # Spark binds both inputs under uuid views and drops them once the
+    # statement is analyzed
+    return spark.sql(
+        _FUNNEL_SQL_TEMPLATE, keep=exact_keep, pairs=minhash_pairs(exact_docs)
+    )

@@ -349,18 +349,18 @@ def win_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame itself is a sliding two-pointer inside the partition.
     """
     e = load_tables(spark, sf_dir)["events"]
-    e.createOrReplaceTempView("__wtrf_events")
     return spark.sql(
         """
         SELECT event_id,
                CAST(COUNT(*) OVER w AS BIGINT) AS n_trailing_hour,
                CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE)
                  AS sum_trailing_hour
-        FROM __wtrf_events
+        FROM {events}
         WINDOW w AS (PARTITION BY event_type ORDER BY ts
                      RANGE BETWEEN INTERVAL 1 HOUR PRECEDING
                      AND CURRENT ROW)
-        """
+        """,
+        events=e,
     )
 
 
@@ -395,13 +395,12 @@ def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-filter + re-join of the sparse rows.
     """
     e = load_tables(spark, sf_dir)["events"]
-    e.createOrReplaceTempView("__win_ig_events")
     return spark.sql(
         """
         WITH ev AS (
           SELECT user_id, event_id, unix_micros(ts) AS t_us,
                  CASE WHEN event_type = 'purchase' THEN value END AS pv
-          FROM __win_ig_events
+          FROM {events}
         )
         SELECT event_id,
                floor(CAST(lag(pv) IGNORE NULLS OVER w AS DOUBLE)
@@ -410,7 +409,8 @@ def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
                      * 10000 + 0.5) / 10000 AS next_purchase
         FROM ev
         WINDOW w AS (PARTITION BY user_id ORDER BY t_us, event_id)
-        """
+        """,
+        events=e,
     )
 
 

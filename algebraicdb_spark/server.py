@@ -21,11 +21,12 @@ result sets back. This module provides that workflow Spark-first:
     one Catalyst job producing ≤ max_rows+1 rows, not a driver OOM.
     ``truncated: true`` tells the client there was more.
 
-Concurrency: a threading TCP server. Read statements run lock-free in
-parallel (Spark actions are thread-safe on one session — the JVM
-scheduler interleaves jobs); only dialect DDL/mutations (which swap
-temp views) serialize under the server lock so catalog changes stay
-atomic per statement.
+Concurrency: a threading TCP server; each connection's statements go
+straight to the shared Engine. The engine, not the server, serializes
+catalog mutations (temp-view swaps, type and function declarations,
+lakehouse commits) under its own lock, so each stays atomic per
+statement; reads run lock-free in parallel (Spark actions are
+thread-safe on one session — the JVM scheduler interleaves jobs).
 
 Usage:
     python -m algebraicdb_spark.server --port 7433 --sf-dir /root/testdata/sf0.01
@@ -54,54 +55,11 @@ import threading
 import time
 from typing import Any
 
-from algebraicdb_spark import dialect
 from algebraicdb_spark.engine import Engine
 from algebraicdb_spark.functions.adt import AdtError, AdtType
 
 DEFAULT_PORT = 7433
 DEFAULT_MAX_ROWS = 1000
-
-# Statements that mutate the shared catalog (temp-view swaps / type
-# declarations). Only these need the server lock; plain reads are
-# thread-safe Spark actions and run concurrently.
-_MUTATION_RES = (
-    dialect._CREATE_TYPE_RE,
-    dialect._CTAS_RE,
-    dialect._CREATE_TABLE_RE,
-    dialect._INSERT_RE,
-    dialect._DELETE_RE,
-    dialect._UPDATE_RE,
-    dialect._DROP_TABLE_RE,
-    dialect._ALTER_TABLE_RE,
-    dialect._MERGE_RE,
-    dialect._UPSERT_RE,
-    dialect._TRUNCATE_RE,
-    dialect._COPY_FROM_RE,
-    dialect._CREATE_MATVIEW_RE,
-    dialect._REFRESH_MATVIEW_RE,
-    dialect._DROP_MATVIEW_RE,
-    dialect._CREATE_FUNCTION_RE,
-    dialect._DROP_FUNCTION_RE,
-    dialect._CREATE_VIEW_RE,
-    dialect._DROP_VIEW_RE,
-)
-
-
-def _is_mutation(sql: str) -> bool:
-    if any(r.match(sql) for r in _MUTATION_RES):
-        return True
-    # COPY … TO is a plain read-side export UNLESS it carries the
-    # OVERWRITE option, which deletes the existing target directory —
-    # that destructive form serializes under the primary lock like any
-    # other mutation (round-4 ADVICE).
-    m = dialect._COPY_TO_RE.match(sql)
-    if m:
-        try:
-            _, overwrite = dialect.parse_copy_to_options(m.group("opts"))
-        except ValueError:
-            return False  # engine will reject the malformed option list
-        return overwrite
-    return False
 
 
 def _json_safe(v: Any) -> Any:
@@ -189,15 +147,8 @@ class _Handler(socketserver.StreamRequestHandler):
             else:
                 if sql.strip().rstrip(";").lower() in (".quit", "quit", "exit"):
                     break
-                if _is_mutation(sql):
-                    # catalog mutations (temp-view swaps) are atomic
-                    # per statement; reads run lock-free concurrently
-                    with server.lock:
-                        resp = execute(server.engine, sql, server.max_rows,
-                                       params=params)
-                else:
-                    resp = execute(server.engine, sql, server.max_rows,
-                                   params=params)
+                resp = execute(server.engine, sql, server.max_rows,
+                               params=params)
             if isinstance(req, dict) and "id" in req:
                 resp["id"] = req["id"]
             self.wfile.write((json.dumps(resp, allow_nan=False) + "\n").encode("utf-8"))
@@ -215,7 +166,6 @@ class EngineServer(socketserver.ThreadingTCPServer):
         super().__init__((host, port), _Handler)
         self.engine = engine
         self.max_rows = max_rows
-        self.lock = threading.Lock()
         self._thread: threading.Thread | None = None
         if start:
             self._thread = threading.Thread(target=self.serve_forever, daemon=True)

@@ -11,21 +11,8 @@ table.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
-
-
-def foreach_batch_writer(
-    write_batch: Callable[[DataFrame, int], None],
-):
-    """Adapt a batch-writing function into a foreachBatch callback."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch(batch_df, batch_id)
-
-    return _sink
 
 
 def write_stream_parquet(
@@ -51,7 +38,7 @@ def write_stream_parquet(
         writer.parquet(path)
 
     w = (
-        stream_df.writeStream.foreachBatch(foreach_batch_writer(write_batch))
+        stream_df.writeStream.foreachBatch(write_batch)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
     )

@@ -825,9 +825,9 @@ class TestMerge:
         eng2.sql("DROP TABLE mg_e2")
 
     def test_merge_is_server_mutation(self):
-        from algebraicdb_spark.server import _is_mutation
+        from algebraicdb_spark.engine import mutates
 
-        assert _is_mutation(
+        assert mutates(
             "MERGE INTO t USING s ON t.k = s.k "
             "WHEN MATCHED THEN UPDATE SET v = s.v"
         )
@@ -957,11 +957,11 @@ class TestFunctions:
         eng.sql("DROP TABLE fn_shapes")
 
     def test_create_drop_function_are_server_mutations(self):
-        from algebraicdb_spark.server import _is_mutation
+        from algebraicdb_spark.engine import mutates
 
-        assert _is_mutation("CREATE FUNCTION f(x) AS x")
-        assert _is_mutation("DROP FUNCTION f")
-        assert not _is_mutation("SHOW FUNCTIONS")
+        assert mutates("CREATE FUNCTION f(x) AS x")
+        assert mutates("DROP FUNCTION f")
+        assert not mutates("SHOW FUNCTIONS")
 
 
 class TestViews:
@@ -1065,10 +1065,10 @@ class TestViews:
         eng.sql("DROP VIEW IF EXISTS vw_nope")
 
     def test_create_drop_view_are_server_mutations(self):
-        from algebraicdb_spark.server import _is_mutation
+        from algebraicdb_spark.engine import mutates
 
-        assert _is_mutation("CREATE VIEW v AS SELECT 1")
-        assert _is_mutation("DROP VIEW v")
+        assert mutates("CREATE VIEW v AS SELECT 1")
+        assert mutates("DROP VIEW v")
 
 
 class TestTableMacros:

@@ -91,7 +91,7 @@ def test_concurrent_clients_share_catalog(server):
 
 
 def test_alter_table_over_socket(server):
-    """ALTER is a catalog mutation: it must serialize under the server
+    """ALTER is a catalog mutation: it must serialize under the engine
     lock and its widened schema must be visible to other connections."""
     from algebraicdb_spark.server import Client
 
@@ -205,20 +205,36 @@ def test_explain_over_the_wire(client):
 def test_mutation_classifier_gates_overwrite_export():
     """COPY … TO is a lock-free read UNLESS it carries OVERWRITE, which
     deletes the existing target directory — that destructive form must
-    serialize under the primary lock like any other mutation."""
-    from algebraicdb_spark.server import _is_mutation
+    serialize under the engine lock like any other mutation."""
+    from algebraicdb_spark.engine import mutates
 
-    assert not _is_mutation("COPY t TO '/tmp/x'")
-    assert not _is_mutation("COPY t TO '/tmp/x' (FORMAT csv)")
-    assert _is_mutation("COPY t TO '/tmp/x' (OVERWRITE)")
-    assert _is_mutation("COPY t TO '/tmp/x' (FORMAT csv, OVERWRITE)")
-    assert _is_mutation("COPY t FROM '/tmp/x'")
+    assert not mutates("COPY t TO '/tmp/x'")
+    assert not mutates("COPY t TO '/tmp/x' (FORMAT csv)")
+    assert mutates("COPY t TO '/tmp/x' (OVERWRITE)")
+    assert mutates("COPY t TO '/tmp/x' (FORMAT csv, OVERWRITE)")
+    assert mutates("COPY t FROM '/tmp/x'")
     # the round-12 keyed-upsert statement serializes like MERGE
-    assert _is_mutation(
+    assert mutates(
         "UPSERT INTO t BY KEY (k) TXN ('cdc', 1) SELECT 1 AS k"
     )
     # EXPLAIN stays a read — the engine itself rejects command payloads
-    assert not _is_mutation("EXPLAIN ANALYZE SELECT 1")
+    assert not mutates("EXPLAIN ANALYZE SELECT 1")
+    # a malformed option list is refused by the handler, not locked
+    assert not mutates("COPY t TO '/tmp/x' (BOGUS)")
+    # lakehouse attach/CTAS and maintenance statements swap the table's
+    # view or write engine dicts, so they serialize too
+    for stmt in (
+        "ATTACH TABLE t FROM delta LOCATION '/tmp/x'",
+        "CREATE TABLE t FROM iceberg LOCATION '/tmp/x' AS SELECT 1 AS k",
+        "OPTIMIZE TABLE t ZORDER BY (k)",
+        "VACUUM t RETAIN 2",
+        "REFRESH TABLE t",
+        "RESTORE TABLE t TO VERSION AS OF 1",
+        "ANALYZE TABLE t",
+    ):
+        assert mutates(stmt), stmt
+    for stmt in ("SHOW STATS t", "DESCRIBE HISTORY t", "SHOW TBLPROPERTIES t"):
+        assert not mutates(stmt), stmt
 
 
 def test_fixpoint_over_the_wire(client):
