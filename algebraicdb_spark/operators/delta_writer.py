@@ -1,7 +1,6 @@
-"""Standard-format Delta Lake WRITER — the interop twin of
-``DeltaLogTable`` (txnlog.py), which can *read* tables other systems
-maintain. Every transactional table this engine writes in the Delta
-dialect commits here, so any other Delta engine can consume it.
+"""Standard-format Delta Lake WRITER. Every transactional table this
+engine writes in the Delta dialect commits here, so any other Delta
+engine can consume it; ``DeltaLogTable`` (txnlog.py) reads it back.
 ``DeltaTableWriter`` emits a real ``_delta_log`` per the public
 protocol spec
 (https://github.com/delta-io/delta/blob/master/PROTOCOL.md):
@@ -30,6 +29,15 @@ protocol spec
   start from the checkpoint, which is exactly what the round-trip
   tests prove ``DeltaLogTable`` does.
 
+Row-level DELETE / UPDATE / MERGE are planned by
+``operators.mutation``, the format-neutral planner the Iceberg writer
+shares, over this format's scan (``_Target.scan``: the pinned live
+entries with their deletion vectors applied). This module keeps what
+belongs to Delta: the two encoders (``_commit_rows`` — remove+add, or
+deletion vectors with the protocol upgrade), CHECK constraints and
+generated / identity columns, column mapping, change-data-feed files,
+and the commit's conflict check (``_publish_if_live``).
+
 Concurrency is Delta's own: the commit publish is a create-exclusive
 write of the next version file (``txnlog.publish_exclusive``, shared
 with the Iceberg writer); a racing writer loses with
@@ -49,7 +57,6 @@ rewritten by commit bookkeeping; the checkpoint is O(live files) rows
 written driver-side via pyarrow (real writers use a Spark job for
 million-file tables — the same rows, distributed).
 """
-
 from __future__ import annotations
 
 import json
@@ -57,11 +64,14 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass, field
 from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
+from algebraicdb_spark.operators import mutation
 from algebraicdb_spark.operators.txnlog import (
     ConcurrentWriteError,
     DeltaLogTable,
@@ -76,6 +86,96 @@ from algebraicdb_spark.operators.txnlog import (
 )
 
 _EMPTY_ST = StructType([])
+
+# the object each mutation's "no commits to …" refusal names
+_VERB_OBJECT = {"DELETE": "delete from", "UPDATE": "update",
+                "MERGE": "merge into"}
+
+
+@dataclass
+class _Target:
+    """One row-level mutation's pinned inputs, from ONE log fold: the
+    live entries (raw path verbatim — the fold key — with each file's
+    deletion-vector descriptor, which the mutation must APPLY when
+    scanning and carry when tombstoning), schema, partition columns,
+    the 'name'-mode column mapping (rewrites restage under PHYSICAL
+    names or every mapped reader resolves them to all-NULL) and the
+    resolved write mode, ``cow`` or ``mor``."""
+
+    rdr: DeltaLogTable
+    entries: list[tuple[str, str, dict, dict | None]]
+    st: StructType | None
+    part_cols: list[str]
+    mapping: dict[str, str] | None
+    meta: dict | None
+    mode: str
+    by_raw: dict = field(init=False)
+    raw_of: dict = field(init=False)
+    pv_of: dict = field(init=False)
+    dv_of: dict = field(init=False)
+
+    def __post_init__(self) -> None:
+        self.by_raw = {e[0]: e for e in self.entries}
+        # the scan's ``__lp`` (resolved local path) → fold key
+        self.raw_of = {res: raw for raw, res, _pv, _dv in self.entries}
+        self.pv_of = {raw: pv for raw, _res, pv, _dv in self.entries}
+        self.dv_of = {raw: dv for raw, _res, _pv, dv in self.entries}
+
+    def scan(self, spark: SparkSession, raws: list[str] | None = None,
+             pos: bool = False, entries: list | None = None) -> DataFrame:
+        """The live rows of ``raws`` (default: every live file), each
+        file's deletion vector applied; ``pos`` adds the planner's
+        ``__lp``/``__pos`` columns."""
+        if entries is None:
+            entries = (self.entries if raws is None
+                       else [self.by_raw[r] for r in raws])
+        return self.rdr._assemble_mor(
+            spark, entries, self.st, self.part_cols, keep_pos=pos,
+            mapping=self.mapping,
+        )
+
+    def counts(self, frame: DataFrame, predicate: str | None = None,
+               merge=None) -> dict[str, int]:
+        """The planner's per-file match counts, keyed by raw path."""
+        return {
+            self.raw_of[lp]: n
+            for lp, n in mutation.match_counts(
+                frame, self.raw_of, predicate, merge).items()
+        }
+
+    def live_rows(self, raw: str) -> int:
+        """Rows a snapshot reads from this file: physical footer count
+        minus the deletion vector's cardinality (the descriptor field —
+        validated against the decoded bitmap on every read path)."""
+        _raw, res, _pv, dv = self.by_raw[raw]
+        n = _file_rows(res)
+        return n - int(dv["cardinality"]) if dv else n
+
+
+def _file_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def _change_rows(pre: DataFrame, post: DataFrame, op: str) -> DataFrame:
+    """Change-feed rows between two states of the same rows: pre EXCEPT
+    ALL post are removed, post EXCEPT ALL pre introduced, labeled the
+    way the engine's ``changes_cdf`` labels that commit's operation."""
+    from pyspark.sql import functions as F
+
+    pre_l, post_l = (
+        ("update_preimage", "update_postimage")
+        if op.upper() == "UPDATE"
+        else ("delete", "insert")
+    )
+    return (
+        pre.exceptAll(post)
+        .withColumn("_change_type", F.lit(pre_l))
+        .unionByName(
+            post.exceptAll(pre).withColumn("_change_type", F.lit(post_l))
+        )
+    )
 
 
 def _file_stats_json(fpath: str) -> str:
@@ -1632,77 +1732,47 @@ class DeltaTableWriter:
 
         return retry_commit("evolve_add_column", attempt)
 
-    # -- copy-on-write row mutation ------------------------------------------
+    # -- row-level mutation ------------------------------------------------
+    #
+    # DELETE / UPDATE / MERGE plan through ``operators.mutation`` (the
+    # row-level decisions both lakehouse writers share) and encode
+    # here in one of two modes: copy-on-write (remove + add) or
+    # deletion vectors. ``mode='auto'`` picks vectors iff the protocol
+    # already announces deletionVectors in writerFeatures — the same
+    # config-driven dispatch real Delta writers use.
 
-    def _cow_context(self, spark: SparkSession, mutation: str):
-        """The pinned inputs every COW mutation needs, from ONE log
-        fold: live entries (raw path verbatim — the fold key —
-        including each file's deletion-vector descriptor, which the
-        mutation must APPLY when scanning and carry when tombstoning),
-        schema, partition columns, and a resolved-path → (raw, pv, dv)
-        map for attributing probe hits to files. The writability gate
-        runs here — before any staging."""
+    def _target(self, mutation_name: str, mode: str) -> _Target:
+        """Gate the mutation (before any staging) and pin its inputs
+        from ONE log fold."""
+        if mode not in ("auto", "cow", "mor"):
+            raise ValueError(
+                f"{mutation_name.lower()} mode {mode!r}: auto, cow, or mor"
+            )
+        if self.latest_version() < 0:
+            raise ValueError(
+                f"delta table {self.path} has no commits to "
+                f"{_VERB_OBJECT[mutation_name]}"
+            )
         rdr = self.reader()
         proto, meta = rdr._protocol_meta()
         rdr._check_readable(proto, meta)
-        self._check_writable(proto, meta, mutation)
-        entries = rdr._live_entries_full()
-        part_cols = list((meta or {}).get("partitionColumns") or [])
-        st = parse_schema_string(
-            (meta or {}).get("schemaString"), self.path
+        self._check_writable(proto, meta, mutation_name)
+        if mode == "auto":
+            mode = (
+                "mor"
+                if "deletionVectors" in (proto.get("writerFeatures") or [])
+                else "cow"
+            )
+        return _Target(
+            rdr=rdr,
+            entries=rdr._live_entries_full(),
+            st=parse_schema_string((meta or {}).get("schemaString"),
+                                   self.path),
+            part_cols=list((meta or {}).get("partitionColumns") or []),
+            mapping=self._cm_of(meta),
+            meta=meta,
+            mode=mode,
         )
-        by_local = {res: (raw, pv, dv) for raw, res, pv, dv in entries}
-        # the mutation's logical→physical mapping ('name'-mode column
-        # mapping; None otherwise) — rewrites must restage under
-        # PHYSICAL names or every mapped reader resolves the
-        # rewritten columns to all-NULL
-        mapping = self._cm_of(meta)
-        return rdr, entries, st, part_cols, by_local, mapping, meta
-
-    def _probe_affected(
-        self, spark: SparkSession, rdr, entries, st, part_cols,
-        by_local, predicate: str, mapping: dict | None = None,
-    ) -> tuple[dict[str, int], int]:
-        """{raw path: matching LIVE rows} — ONE distributed scan with
-        the predicate pushed into the parquet reader and each file's
-        deletion vector already applied (a DV'd row must not rematch:
-        it is deleted). Attribution keys on the scan's own ``__lp``
-        normalized path, exact by construction at file grain."""
-        from pyspark.sql import functions as F
-
-        df = rdr._assemble_mor(
-            spark, entries, st, part_cols, keep_pos=True,
-            mapping=mapping,
-        )
-        rows = (
-            df.where(F.expr(predicate))
-            .groupBy("__lp")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        by_raw: dict[str, int] = {}
-        for r in rows:
-            hit = by_local.get(r["__lp"])
-            if hit is None:
-                raise RuntimeError(
-                    f"probe returned file {r['__lp']} outside the live "
-                    "set — concurrent vacuum mid-probe?"
-                )
-            by_raw[hit[0]] = by_raw.get(hit[0], 0) + int(r["__n"])
-        return by_raw, sum(by_raw.values())
-
-    @staticmethod
-    def _file_rows(path: str) -> int:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(path).metadata.num_rows
-
-    def _live_rows(self, res: str, dv: dict | None) -> int:
-        """Rows a snapshot reads from this file: physical footer count
-        minus the deletion vector's cardinality (the descriptor field —
-        validated against the decoded bitmap on every read path)."""
-        n = self._file_rows(res)
-        return n - int(dv["cardinality"]) if dv else n
 
     @staticmethod
     def _dv_key(dv: dict | None) -> tuple | None:
@@ -1724,109 +1794,143 @@ class DeltaTableWriter:
         return str(conf.get("delta.enableChangeDataFeed", "")
                    ).lower() == "true"
 
+    def _matched(
+        self, spark: SparkSession, tgt: _Target, predicate: str
+    ) -> tuple[dict[str, int], dict[str, list[int]] | None]:
+        """The probe DELETE and UPDATE start from: ONE distributed scan
+        with the predicate pushed into the parquet reader and every
+        existing deletion vector applied (a deleted row never
+        rematches). Copy-on-write needs each file's match count;
+        deletion vectors need the matched positions, bitmapped
+        executor-side. Returns ({raw path: matched rows},
+        {raw path: positions} or None)."""
+        probe = tgt.scan(spark, pos=True)
+        if tgt.mode == "mor":
+            new_pos = self._collect_positions(
+                mutation.positions(mutation.matches(probe, predicate)),
+                tgt.raw_of,
+            )
+            return {raw: len(p) for raw, p in new_pos.items()}, new_pos
+        return tgt.counts(probe, predicate), None
+
+    def _collect_positions(
+        self, probe, raw_of: dict[str, str]
+    ) -> dict[str, list[int]]:
+        """{raw path: matched physical ordinals} for a (__lp, __pos)
+        frame. Bitmaps serialize EXECUTOR-side (``mapInPandas`` after a
+        repartition by file), so driver traffic is O(compressed
+        bitmap), never O(matched rows)."""
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        from algebraicdb_spark.operators.deletion_vectors import (
+            roaring64_positions,
+        )
+
+        def to_bitmaps(batches):
+            from algebraicdb_spark.operators.deletion_vectors import (
+                roaring64_serialize,
+            )
+
+            acc: dict[str, list[int]] = {}
+            for b in batches:
+                for lp, pos in zip(b["__lp"], b["__pos"]):
+                    acc.setdefault(lp, []).append(int(pos))
+            if acc:
+                yield pd.DataFrame({
+                    "__lp": list(acc),
+                    "bm": [roaring64_serialize(sorted(v))
+                           for v in acc.values()],
+                })
+
+        parts = (
+            probe.select("__lp", "__pos")
+            .repartition(F.col("__lp"))
+            .mapInPandas(to_bitmaps, "__lp string, bm binary")
+            .collect()
+        )
+        new_pos: dict[str, list[int]] = {}
+        for r in parts:
+            raw = raw_of.get(r["__lp"])
+            if raw is None:
+                raise RuntimeError(
+                    f"probe returned file {r['__lp']} outside the live "
+                    "set — concurrent vacuum mid-probe?"
+                )
+            # one partition per __lp after the repartition, so each
+            # file appears exactly once; decode is O(bitmap)
+            new_pos.setdefault(raw, []).extend(
+                roaring64_positions(bytes(r["bm"]))
+            )
+        return new_pos
+
     def _cdc_actions(
         self,
         spark: SparkSession,
-        rdr,
-        st,
-        part_cols: list[str],
-        mapping: dict[str, str] | None,
+        tgt: _Target,
         op: str,
-        pre_entries: list[tuple[str, str, dict, dict | None]],
-        post_entries: list[tuple[str, str, dict, dict | None]],
+        changes: DataFrame | None,
+        affected: list[str],
+        adds: list[dict],
         staged: list[tuple[str, dict]],
-        changes_df: DataFrame | None = None,
     ) -> tuple[list[dict], list[tuple[str, dict]]]:
         """Land a mutation commit's row-level changes in Delta's
         INTEROP change-data format: ``_change_data/`` parquet files
         (table columns + ``_change_type``) referenced by ``cdc``
         actions riding the SAME commit — PROTOCOL.md's "Change Data
         Files". Per the spec, a commit carrying ANY cdc action is
-        consumed by CDF readers from its change files ALONE (the
-        add/remove actions describe the same changes), so the diff
-        here covers the WHOLE commit:
+        consumed by CDF readers from its change files ALONE, so the
+        changes cover the WHOLE commit.
 
-        - ``pre_entries``: the affected files in their PRE-commit
-          state (old deletion vectors applied),
-        - ``post_entries``: the same files in their POST-commit state
-          (MoR re-adds with the new vectors; empty for COW, where the
-          old file leaves the table entirely),
-        - ``staged``: the commit's new files (COW rewrites, MoR
-          postimages, MERGE inserts).
+        ``changes`` is the labeled frame DELETE and UPDATE derive from
+        their matched rows (the deletes themselves; for UPDATE the
+        diff of preimages and postimages, which keeps the algebra's
+        cancellation of no-op assignments) — O(matched rows), and
+        multiset-equal to the generic diff because deterministic
+        predicates over immutable files select the same rows twice.
+        ``None`` (MERGE) takes the generic diff: the ``affected``
+        files in their PRE-commit state (old deletion vectors applied)
+        against their POST-commit state — the re-``adds`` with their
+        new vectors plus the ``staged`` files. pre EXCEPT ALL post are
+        the removed rows, post EXCEPT ALL pre the introduced ones — the
+        SAME multiset algebra the engine's own ``changes_cdf`` replays
+        from add/remove actions, labeled as that reader labels them
+        (a MERGE's updated rows surface as a delete+insert pair).
 
-        pre EXCEPT ALL post = rows the commit removes; post EXCEPT ALL
-        pre = rows it introduces — the SAME multiset algebra the
-        engine's own ``changes_cdf`` replays from add/remove actions,
-        now landed where other engines read it. Labels match that
-        reader: UPDATE → update_preimage/update_postimage, everything
-        else delete/insert (a MERGE's updated rows surface as a
-        delete+insert pair — semantically equivalent, and exactly what
-        the diff-based replay of the same commit yields).
+        Cost: one bounded scan of exactly the files the mutation
+        already rewrote or vectored, never O(table). Returns (cdc
+        actions, staged cdc files for abort-path unstaging)."""
+        if changes is None:
+            def side(entries, extra_staged):
+                ents = list(entries) + [
+                    (rel, os.path.join(self.path, rel), pv, None)
+                    for rel, pv in extra_staged
+                ]
+                return tgt.scan(spark, entries=ents) if ents else None
 
-        ``changes_df`` bypasses the generic whole-file diff with an
-        already-labeled change frame the CALLER derived — the
-        DELETE/UPDATE fast path, where the change set is directly
-        expressible as the matched rows (and for UPDATE a diff over
-        just those matches, preserving the algebra's cancellation of
-        no-op assignments): the cdc scan then costs O(matched rows)
-        instead of a shuffle over every affected file's content
-        (docs/PROBE_CDF_r13.json pins the tax). The caller's frame
-        must be MULTISET-EQUAL to the generic diff — deterministic
-        predicates over immutable files make the two derivations
-        provably identical, and the three-way equivalence tests
-        (cdc replay = changes_cdf = snapshot diff) pin it.
-
-        Cost: ONE extra bounded scan of exactly the files the mutation
-        already rewrote or vectored — the tax every CDF-emitting
-        writer pays, O(affected bytes), never O(table); DELETE and
-        UPDATE pass ``changes_df`` (below), shrinking it to O(matched
-        rows). Returns (cdc actions, staged cdc files for abort-path
-        unstaging); callers thread both through ``_commit_cow``."""
-        from pyspark.sql import functions as F
-
-        def side(entries, extra_staged):
-            ents = list(entries) + [
-                (rel, os.path.join(self.path, rel), pv, None)
-                for rel, pv in extra_staged
-            ]
-            if not ents:
-                return None
-            return rdr._assemble_mor(
-                spark, ents, st, part_cols, mapping=mapping
+            pre = side([tgt.by_raw[raw] for raw in affected], [])
+            post = side(
+                [(a["add"]["path"], tgt.by_raw[a["add"]["path"]][1],
+                  tgt.pv_of[a["add"]["path"]], a["add"]["deletionVector"])
+                 for a in adds],
+                staged,
             )
-
-        if changes_df is not None:
-            changes = changes_df
-        else:
-            pre = side(pre_entries, [])
-            post = side(post_entries, staged)
             if pre is None and post is None:
                 return [], []
-            if pre is None:
-                pre = post.limit(0)
-            if post is None:
-                post = pre.limit(0)
-            pre_l, post_l = (
-                ("update_preimage", "update_postimage")
-                if op.upper() == "UPDATE"
-                else ("delete", "insert")
-            )
-            changes = (
-                pre.exceptAll(post)
-                .withColumn("_change_type", F.lit(pre_l))
-                .unionByName(
-                    post.exceptAll(pre)
-                    .withColumn("_change_type", F.lit(post_l))
-                )
+            changes = _change_rows(
+                post.limit(0) if pre is None else pre,
+                pre.limit(0) if post is None else post,
+                op,
             )
         cdc_staged = self._stage(
-            changes, part_cols, mapping=mapping, subdir="_change_data"
+            changes, tgt.part_cols, mapping=tgt.mapping,
+            subdir="_change_data",
         )
         # an all-cancelled partition can stage an empty part file —
         # drop it rather than commit a rowless cdc action
         kept: list[tuple[str, dict]] = []
         for rel, pv in cdc_staged:
-            if self._file_rows(os.path.join(self.path, rel)) == 0:
+            if _file_rows(os.path.join(self.path, rel)) == 0:
                 self._unstage([(rel, pv)])
             else:
                 kept.append((rel, pv))
@@ -1841,6 +1945,59 @@ class DeltaTableWriter:
             }})
         return actions, kept
 
+    def _commit_rows(
+        self,
+        spark: SparkSession,
+        tgt: _Target,
+        op: str,
+        params: dict,
+        affected: list[str],
+        staged: list[tuple[str, dict]],
+        new_pos: dict[str, list[int]] | None,
+        inline_threshold: int,
+        changes: Callable[[], DataFrame] | None = None,
+    ) -> tuple[int, list[str], list[str]]:
+        """The per-mode encoder: ONE data-changing commit of what the
+        planner decided.
+
+        - copy-on-write (``new_pos`` None): every affected file leaves
+          as a remove and the staged rewrites/inserts land as adds.
+        - deletion vectors: each file in ``new_pos`` is re-added with
+          its old vector ∪ the new positions (``_build_dv_actions``; a
+          union covering the whole file leaves as a plain remove), the
+          staged postimages/inserts ride along, and the first vectored
+          commit carries the protocol upgrade atomically.
+
+        With the change data feed on, ``changes()`` (or the generic
+        diff when None) lands as ``_change_data`` in the same commit.
+        Any failure unstages the staged files and reclaims a written
+        ``.bin``. Returns (version, files removed outright, files
+        re-vectored)."""
+        adds: list[dict] = []
+        proto: list[dict] = []
+        removed, dv_files, written_bin = affected, [], None
+        try:
+            if new_pos is not None:
+                adds, removed, dv_files, written_bin = (
+                    self._build_dv_actions(tgt, new_pos, inline_threshold)
+                )
+                proto = self._dv_protocol_actions(tgt.rdr)
+            cdc = None
+            if self._cdf_enabled(tgt.meta):
+                cdc = self._cdc_actions(
+                    spark, tgt, op, changes() if changes else None,
+                    affected, adds, staged,
+                )
+            version = self._commit_cow(
+                affected, tgt.pv_of, tgt.dv_of, staged, op, params,
+                extra_actions=adds + proto, cdc=cdc,
+            )
+        except BaseException:
+            self._reclaim_bin(written_bin)
+            self._unstage(staged)
+            raise
+        return version, removed, dv_files
+
     def _commit_cow(
         self,
         removed_raw: list[str],
@@ -1851,22 +2008,25 @@ class DeltaTableWriter:
         params: dict,
         extra_actions: list[dict] | None = None,
         cdc: tuple[list[dict], list[tuple[str, dict]]] | None = None,
+        data_change: bool = True,
     ) -> int:
-        """remove(affected, dataChange) + add(rewrites) in one commit
-        under the COW conflict matrix (appends commute — retry one
-        slot up; removal OR deletion-vector flip of an input aborts: a
-        racer's MoR delete mutates a file in place, and committing a
-        rewrite scanned under the old vector would resurrect its
-        deletions). Tombstones reuse the committed raw path bytes AND
-        the old DV descriptor verbatim — (path, dv) is the file's
-        identity; every abort path unstages."""
+        """remove(affected) + add(rewrites) in one commit under the COW
+        conflict matrix (appends commute — retry one slot up; removal
+        OR deletion-vector flip of an input aborts: a racer's MoR
+        delete mutates a file in place, and committing a rewrite
+        scanned under the old vector would resurrect its deletions).
+        Tombstones reuse the committed raw path bytes AND the old DV
+        descriptor verbatim — (path, dv) is the file's identity; every
+        abort path unstages. ``data_change=False`` marks a
+        content-preserving rewrite (OPTIMIZE) that change-feed
+        consumers skip."""
         now_ms = int(time.time() * 1000)
 
         def tomb(raw: str) -> dict:
             r = {
                 "path": raw,
                 "deletionTimestamp": now_ms,
-                "dataChange": True,
+                "dataChange": data_change,
                 "partitionValues": removed_pv.get(raw) or {},
             }
             if dv_of.get(raw) is not None:
@@ -1876,7 +2036,7 @@ class DeltaTableWriter:
         actions = (
             [self._commit_info(op, **params)]
             + [tomb(raw) for raw in removed_raw]
-            + self._add_actions(staged)
+            + self._add_actions(staged, data_change=data_change)
             + list(extra_actions or [])
             + list(cdc[0] if cdc else [])
         )
@@ -1928,194 +2088,294 @@ class DeltaTableWriter:
         mode: str = "auto",
         dv_inline_threshold: int = 512,
     ) -> dict:
-        """Row-level ``DELETE FROM … WHERE predicate`` on the STANDARD
-        format, two physical strategies behind one semantic:
+        """Row-level ``DELETE FROM … WHERE predicate`` (NULL keeps the
+        row — SQL semantics), two physical strategies behind one
+        semantic:
 
-        - ``cow`` (copy-on-write): three file classes from one probe
-          + footer counts:
-          untouched files keep their add entries, fully-matching files
-          drop with zero rewrite I/O, partial files rewrite minus the
-          matches (NULL keeps the row — SQL DELETE semantics). The
-          commit is a data-changing remove+add any Delta engine folds.
-        - ``mor`` (merge-on-read): partial files get a DELETION VECTOR
+        - ``cow`` (copy-on-write): untouched files keep their add
+          entries, fully-matching files drop with zero rewrite I/O,
+          partial files rewrite minus the matches. The commit is a
+          data-changing remove+add any Delta engine folds.
+        - ``mor`` (merge-on-read): matched rows get a DELETION VECTOR
           instead of a rewrite — the commit is O(bitmap bytes), not
-          O(file bytes), which is the strategy that matters at scale
-          (a sparse delete across a 100 TB table rewrites nothing).
-          New vectors UNION any existing one (a DV'd row never
-          rematches: the probe scans merge-on-read), files whose
-          cumulative vector covers every physical row drop as plain
-          removes, and the re-added action keeps the file's verbatim
-          path/size with ``stats`` re-marked ``tightBounds: false``
-          per the spec. Vectors ≤ ``dv_inline_threshold`` bytes ride
-          the add action inline (storageType 'i'); larger ones share
-          one on-disk ``.bin`` (storageType 'u'). Requires the
-          deletionVectors table feature — committed atomically with
-          the first MoR delete when absent.
-        - ``auto``: ``mor`` iff the table's protocol already announces
-          deletionVectors in writerFeatures, else ``cow`` — the same
-          config-driven dispatch real Delta writers use.
+          O(file bytes), which is the strategy that matters at scale.
+          New vectors UNION any existing one, files whose cumulative
+          vector covers every physical row drop as plain removes, and
+          the re-added action keeps the file's verbatim path/size with
+          ``stats`` re-marked ``tightBounds: false`` per the spec.
+          Vectors ≤ ``dv_inline_threshold`` bytes ride the add action
+          inline (storageType 'i'); larger ones share one on-disk
+          ``.bin`` (storageType 'u'). Requires the deletionVectors
+          table feature — committed atomically with the first MoR
+          delete when absent.
+        - ``auto``: ``mor`` iff the protocol already announces
+          deletionVectors in writerFeatures, else ``cow``.
         """
         from pyspark.sql import functions as F
 
-        if mode not in ("auto", "cow", "mor"):
-            raise ValueError(f"delete mode {mode!r}: auto, cow, or mor")
-        if self.latest_version() < 0:
-            raise ValueError(
-                f"delta table {self.path} has no commits to delete from"
-            )
-        rdr, entries, st, part_cols, by_local, mapping, meta = (
-            self._cow_context(spark, "DELETE")
-        )
-        if mode == "auto":
-            proto, _m = rdr._protocol_meta()
-            mode = (
-                "mor"
-                if "deletionVectors" in (proto.get("writerFeatures") or [])
-                else "cow"
-            )
-        if not entries:
+        tgt = self._target("DELETE", mode)
+        if not tgt.entries:
             return {"version": None, "rows_deleted": 0,
                     "files_removed": 0, "files_rewritten": 0}
-        if mode == "mor":
-            # mapped tables compose since round 14: the probe and the
-            # CDC fast path assemble through the mapping (predicates
-            # stay in LOGICAL names); vectors address physical row
-            # ordinals, which no mapping touches
-            return self._delete_mor(
-                spark, rdr, entries, st, part_cols, by_local,
-                predicate, dv_inline_threshold, meta,
-                mapping=mapping,
-            )
-        by_raw, matched = self._probe_affected(
-            spark, rdr, entries, st, part_cols, by_local, predicate,
-            mapping=mapping,
-        )
-        if not matched:
+        counts, new_pos = self._matched(spark, tgt, predicate)
+        tail = "files_rewritten" if new_pos is None else "files_dv"
+        if not counts:
             return {"version": None, "rows_deleted": 0,
-                    "files_removed": 0, "files_rewritten": 0}
-        res_of = {raw: res for raw, res, _pv, _dv in entries}
-        pv_of = {raw: pv for raw, _res, pv, _dv in entries}
-        dv_of = {raw: dv for raw, _res, _pv, dv in entries}
-        full = [
-            raw for raw, n in by_raw.items()
-            if n == self._live_rows(res_of[raw], dv_of[raw])
-        ]
-        partial = sorted(set(by_raw) - set(full))
+                    "files_removed": 0, tail: 0}
+        affected = sorted(counts)
         staged: list[tuple[str, dict]] = []
-        if partial:
-            keep = rdr._assemble_mor(
-                spark,
-                [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-                 for raw in partial],
-                st, part_cols, mapping=mapping,
-            ).where(
-                ~F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-            )
-            staged = self._stage(keep, part_cols, mapping=mapping)
-        cdc = None
-        if self._cdf_enabled(meta):
-            # fast path: the deletes ARE the matched rows — the
-            # whole-file diff would shuffle the survivors just to
-            # cancel them
-            aff = rdr._assemble_mor(
-                spark,
-                [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-                 for raw in sorted(by_raw)],
-                st, part_cols, mapping=mapping,
-            )
-            deletes = aff.where(
-                F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-            ).withColumn("_change_type", F.lit("delete"))
-            cdc = self._cdc_actions(
-                spark, rdr, st, part_cols, mapping, "DELETE",
-                [], [], [], changes_df=deletes,
-            )
-        version = self._commit_cow(
-            sorted(by_raw), pv_of, dv_of, staged, "DELETE",
-            {"predicate": predicate}, cdc=cdc,
+        partial: list[str] = []
+        if new_pos is None:
+            _full, partial = mutation.split_files(counts, tgt.live_rows)
+            if partial:
+                staged = self._stage(
+                    mutation.survivors(tgt.scan(spark, partial), predicate),
+                    tgt.part_cols, mapping=tgt.mapping,
+                )
+        version, removed, dv_files = self._commit_rows(
+            spark, tgt, "DELETE", {"predicate": predicate}, affected,
+            staged, new_pos, dv_inline_threshold,
+            # the deletes ARE the matched rows of the affected files
+            changes=lambda: tgt.scan(spark, affected)
+            .where(mutation.hit(predicate))
+            .withColumn("_change_type", F.lit("delete")),
         )
         return {
             "version": version,
-            "rows_deleted": matched,
-            "files_removed": len(by_raw),
-            "files_rewritten": len(partial),
+            "rows_deleted": sum(counts.values()),
+            "files_removed": len(removed),
+            tail: len(partial) if new_pos is None else len(dv_files),
         }
 
-    def _probe_positions(
-        self, spark, rdr, entries, st, part_cols, by_local,
-        predicate: str, mapping: dict[str, str] | None = None,
-    ) -> tuple[dict[str, list[int]], int]:
-        """ONE probe scan (predicate pushed to parquet, existing DVs
-        applied — a deleted row never rematches) → each affected
-        file's newly-matched PHYSICAL row ordinals + the match count.
-        Bitmaps serialize EXECUTOR-side (``mapInPandas`` over the
-        probe output — driver traffic is O(compressed bitmap), never
-        O(matched rows))."""
-        from pyspark.sql import functions as F
-
-        probe = (
-            rdr._assemble_mor(spark, entries, st, part_cols,
-                              keep_pos=True, mapping=mapping)
-            .where(F.expr(predicate))
-            .select("__lp", "__pos")
-        )
-        return self._collect_positions(probe, by_local)
-
-    def _collect_positions(
-        self, probe, by_local
-    ) -> tuple[dict[str, list[int]], int]:
-        """Executor-side bitmap collection for a (__lp, __pos) probe
-        frame — shared by MoR DELETE/UPDATE (predicate probes) and
-        MoR MERGE (semi-join probes)."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from algebraicdb_spark.operators.deletion_vectors import (
-            roaring64_positions,
-        )
-
-        def to_bitmaps(batches):
-            from algebraicdb_spark.operators.deletion_vectors import (
-                roaring64_serialize,
+    def _refuse_partition_assignment(
+        self, assignments: dict | None, part_cols: list[str], op: str
+    ) -> None:
+        bad = [c for c in (assignments or {}) if c in part_cols]
+        if bad:
+            raise ValueError(
+                f"{op} assigns partition column(s) {bad} — moving rows "
+                "across partitions is an overwrite-shaped operation; "
+                "DELETE + append instead"
             )
 
-            acc: dict[str, list[int]] = {}
-            for b in batches:
-                for lp, pos in zip(b["__lp"], b["__pos"]):
-                    acc.setdefault(lp, []).append(int(pos))
-            if acc:
-                yield pd.DataFrame({
-                    "__lp": list(acc),
-                    "bm": [roaring64_serialize(sorted(v))
-                           for v in acc.values()],
-                    "n": [len(v) for v in acc.values()],
-                })
+    def update(
+        self,
+        spark: SparkSession,
+        assignments: dict[str, str],
+        predicate: str | None = None,
+        mode: str = "auto",
+        dv_inline_threshold: int = 512,
+    ) -> dict:
+        """Row-level ``UPDATE … SET col = expr WHERE predicate``, two
+        physical strategies behind one semantic (dispatch as in
+        ``delete``):
 
-        parts = (
-            probe.select("__lp", "__pos")
-            .repartition(F.col("__lp"))
-            .mapInPandas(to_bitmaps, "__lp string, bm binary, n long")
-            .collect()
-        )
-        new_pos: dict[str, list[int]] = {}
-        matched = 0
-        for r in parts:
-            hit = by_local.get(r["__lp"])
-            if hit is None:
-                raise RuntimeError(
-                    f"probe returned file {r['__lp']} outside the live "
-                    "set — concurrent vacuum mid-probe?"
-                )
-            # one partition per __lp after the repartition, so each
-            # file appears exactly once; decode is O(bitmap)
-            new_pos.setdefault(hit[0], []).extend(
-                roaring64_positions(bytes(r["bm"]))
+        - ``cow``: affected files rewrite through a CASE per assigned
+          column cast back to the declared type (the pinned schema
+          never drifts); unmatched files keep their add entries.
+        - ``mor``: matched rows get DELETION-VECTORED in place and
+          only their POSTIMAGES stage as new files — an update
+          touching 1% of a file's rows commits O(bitmap + changed
+          rows), not O(file bytes); production Delta's UPDATE under
+          deletionVectors does exactly this. Both halves ride ONE
+          commit, so a reader never sees the delete without the
+          re-insert.
+
+        Generated columns re-derive from the updated sources, and
+        every row about to land is checked against the table's
+        invariants. Partition-column assignment refuses — row movement
+        is an overwrite-shaped operation. Column-mapped tables scan
+        under LOGICAL names and restage under physical names."""
+        tgt = self._target("UPDATE", mode)
+        if not tgt.entries:
+            return {"version": None, "rows_updated": 0,
+                    "files_rewritten": 0}
+        if tgt.st is not None:
+            mutation.check_assigned(
+                assignments, [f.name for f in tgt.st.fields] + tgt.part_cols
             )
-            matched += int(r["n"])
-        return new_pos, matched
+        self._refuse_partition_assignment(assignments, tgt.part_cols,
+                                          "UPDATE")
+        self._gate_generated_assignments(assignments, tgt.meta, "UPDATE")
+        pred = predicate if predicate is not None else "TRUE"
+        counts, new_pos = self._matched(spark, tgt, pred)
+        tail = "files_rewritten" if new_pos is None else "files_dv"
+        if not counts:
+            return {"version": None, "rows_updated": 0, tail: 0}
+        affected = sorted(counts)
+        df = tgt.scan(spark, affected)
+
+        def pre_post():
+            pre = df.where(mutation.hit(pred))
+            return pre, self._recompute_generated(
+                mutation.postimages(pre, assignments), tgt.meta
+            )
+
+        if new_pos is None:
+            out = self._recompute_generated(
+                mutation.rewrite(df, assignments, pred), tgt.meta
+            )
+        else:
+            out = pre_post()[1]
+        # the whole rewrite frame probes (pre-existing rows satisfied
+        # their rules at their own write time, so they pass trivially;
+        # filtering by the predicate over POST-update values would
+        # mis-select when an assigned column appears in it)
+        self._enforce_invariants(out, tgt.meta, "UPDATE")
+        staged = self._stage(out, tgt.part_cols, mapping=tgt.mapping)
+        version, _removed, dv_files = self._commit_rows(
+            spark, tgt, "UPDATE", {"predicate": pred}, affected, staged,
+            new_pos, dv_inline_threshold,
+            changes=lambda: _change_rows(*pre_post(), "UPDATE"),
+        )
+        return {
+            "version": version,
+            "rows_updated": sum(counts.values()),
+            tail: len(affected) if new_pos is None else len(dv_files),
+        }
+
+    def merge(
+        self,
+        spark: SparkSession,
+        source,
+        cond: str,
+        assignments: dict[str, str] | None,
+        insert_exprs: list[str] | None,
+        target_alias: str = "t",
+        source_alias: str = "s",
+        delete_matched: bool = False,
+        mode: str = "auto",
+        dv_inline_threshold: int = 512,
+    ) -> dict:
+        """``MERGE INTO`` as ONE commit, dispatched as in ``delete``:
+
+        - ``cow``: a semi-join probe counts the matched rows per file;
+          only reached files rewrite (THEN UPDATE through a marked left
+          join; THEN DELETE drops fully-matching files without rewrite
+          I/O and rewrites partial ones via LEFT ANTI). A source that
+          matches a row twice is refused for free: the rewrite
+          preserves row count, so staged footers disagreeing with the
+          input footers IS the multi-match signal.
+        - ``mor``: one inner join of the live rows with the source
+          finds the matched positions, which get deletion vectors; THEN
+          UPDATE stages the postimages from the same join (a duplicated
+          match refuses before anything stages).
+
+        NOT MATCHED inserts anti-join the live set and ride the same
+        commit."""
+        mutation.check_merge_clauses(assignments, delete_matched,
+                                     insert_exprs)
+        tgt = self._target("MERGE", mode)
+        self._gate_generated_assignments(assignments, tgt.meta, "MERGE")
+        if insert_exprs is not None and self._identity_of(tgt.meta):
+            raise NotImplementedError(
+                f"MERGE INSERT on {self.path}: the table declares "
+                "identity column(s) whose high-water mark MERGE does "
+                "not maintain — append the not-matched rows instead"
+            )
+        self._refuse_partition_assignment(assignments, tgt.part_cols,
+                                          "MERGE")
+        m = mutation.Merge(source, cond, target_alias, source_alias)
+        mor = tgt.mode == "mor" and bool(tgt.entries)
+        counts: dict[str, int] = {}
+        new_pos: dict[str, list[int]] | None = {} if mor else None
+        staged: list[tuple[str, dict]] = []
+        rewritten = 0
+        try:
+            if (assignments or delete_matched) and tgt.entries:
+                probe = tgt.scan(spark, pos=True)
+                post = None
+                if mor:
+                    joined, _n = mutation.merge_matches(
+                        probe, m, refuse_multi=bool(assignments)
+                    )
+                    new_pos = self._collect_positions(
+                        mutation.positions(joined, distinct=True),
+                        tgt.raw_of,
+                    )
+                    counts = {raw: len(p) for raw, p in new_pos.items()}
+                    if assignments and counts:
+                        post = mutation.postimages(
+                            joined, assignments, target=probe, merge=m
+                        )
+                else:
+                    counts = tgt.counts(probe, merge=m)
+                    affected = sorted(counts)
+                    rewritten = len(affected)
+                    if affected and delete_matched:
+                        _full, partial = mutation.split_files(
+                            counts, tgt.live_rows
+                        )
+                        rewritten = len(partial)
+                        if partial:
+                            staged = self._stage(
+                                mutation.survivors(
+                                    tgt.scan(spark, partial), merge=m
+                                ),
+                                tgt.part_cols, mapping=tgt.mapping,
+                            )
+                    elif affected:
+                        post = mutation.rewrite(
+                            tgt.scan(spark, affected), assignments,
+                            merge=m,
+                        )
+                if post is not None:
+                    post = self._recompute_generated(post, tgt.meta)
+                    self._enforce_invariants(post, tgt.meta, "MERGE")
+                    staged = self._stage(post, tgt.part_cols,
+                                         mapping=tgt.mapping)
+                    if not mor:
+                        mutation.check_one_match(
+                            self._staged_rows(staged) - sum(
+                                tgt.live_rows(raw) for raw in counts
+                            )
+                        )
+            rows_inserted = 0
+            if insert_exprs is not None:
+                full_t = tgt.scan(spark) if tgt.entries else None
+                schema = full_t.schema if full_t is not None else tgt.st
+                if schema is None:
+                    raise ValueError(
+                        "MERGE into an empty schema-less delta table has "
+                        "no column shape to insert into — append a first "
+                        "batch"
+                    )
+                ins = mutation.merge_inserts(m, full_t, insert_exprs,
+                                             schema.fields)
+                self._enforce_invariants(ins, tgt.meta, "MERGE")
+                ins_staged = self._stage(ins, tgt.part_cols,
+                                         mapping=tgt.mapping)
+                rows_inserted = self._staged_rows(ins_staged)
+                if rows_inserted == 0:
+                    self._unstage(ins_staged)
+                else:
+                    staged = staged + ins_staged
+        except BaseException:
+            self._unstage(staged)
+            raise
+        tail = "files_dv" if mor else "files_rewritten"
+        if not counts and not staged:
+            return {"version": None, "rows_matched": 0,
+                    "rows_inserted": 0, tail: 0}
+        version, _removed, dv_files = self._commit_rows(
+            spark, tgt, "MERGE", {"predicate": cond}, sorted(counts),
+            staged, new_pos, dv_inline_threshold,
+        )
+        return {
+            "version": version,
+            "rows_matched": sum(counts.values()),
+            "rows_inserted": rows_inserted,
+            tail: len(dv_files) if mor else rewritten,
+        }
+
+    def _staged_rows(self, staged: list[tuple[str, dict]]) -> int:
+        return sum(
+            _file_rows(os.path.join(self.path, rel))
+            for rel, _pv in staged
+        )
 
     def _build_dv_actions(
-        self, entries, new_pos: dict[str, list[int]],
+        self, tgt: _Target, new_pos: dict[str, list[int]],
         inline_threshold: int,
     ) -> tuple[list[dict], list[str], list[str], str | None]:
         """Turn per-file matched ordinals into the commit pieces:
@@ -2129,9 +2389,7 @@ class DeltaTableWriter:
             dv_positions, inline_dv_descriptor, write_dv_file,
         )
 
-        res_of = {raw: res for raw, res, _pv, _dv in entries}
-        pv_of = {raw: pv for raw, _res, pv, _dv in entries}
-        dv_of = {raw: dv for raw, _res, _pv, dv in entries}
+        dv_of = tgt.dv_of
         full_removes: list[str] = []
         dv_files: list[str] = []       # file order for vector assembly
         vectors: list[list[int]] = []
@@ -2141,7 +2399,7 @@ class DeltaTableWriter:
                 pos = sorted(
                     set(pos) | set(dv_positions(self.path, dv_of[raw]))
                 )
-            if len(pos) >= self._file_rows(res_of[raw]):
+            if len(pos) >= _file_rows(tgt.by_raw[raw][1]):
                 full_removes.append(raw)   # vector covers the file
             else:
                 dv_files.append(raw)
@@ -2163,12 +2421,12 @@ class DeltaTableWriter:
                 descs[raw] = inline_dv_descriptor(pos)
         adds = []
         for raw in dv_files:
-            res = res_of[raw]
+            res = tgt.by_raw[raw][1]
             stats = json.loads(_file_stats_json(res))
             stats["tightBounds"] = False  # min/max may cover DV'd rows
             adds.append({"add": {
                 "path": raw,  # verbatim committed bytes — the fold key
-                "partitionValues": pv_of[raw] or {},
+                "partitionValues": tgt.pv_of[raw] or {},
                 "size": os.path.getsize(res),
                 "modificationTime": int(os.path.getmtime(res) * 1000),
                 "dataChange": True,
@@ -2259,666 +2517,6 @@ class DeltaTableWriter:
         p = dv_file_path(self.path, written_bin)
         if os.path.exists(p):
             os.unlink(p)
-
-    def _delete_mor(
-        self, spark, rdr, entries, st, part_cols, by_local,
-        predicate: str, inline_threshold: int,
-        meta: dict | None = None,
-        mapping: dict[str, str] | None = None,
-    ) -> dict:
-        """The merge-on-read DELETE body: matched ordinals become
-        deletion vectors — O(bitmap bytes) committed, zero rewrite.
-        Column-mapped tables compose (round 14): the probe assembles
-        through ``mapping`` so the predicate evaluates over LOGICAL
-        names, while the vectors themselves address physical row
-        ordinals and the re-added file actions keep their
-        physical-name stats verbatim — the mapping never touches
-        either."""
-        new_pos, matched = self._probe_positions(
-            spark, rdr, entries, st, part_cols, by_local, predicate,
-            mapping=mapping,
-        )
-        if not new_pos:
-            return {"version": None, "rows_deleted": 0,
-                    "files_removed": 0, "files_dv": 0}
-        pv_of = {raw: pv for raw, _res, pv, _dv in entries}
-        dv_of = {raw: dv for raw, _res, _pv, dv in entries}
-        res_of = {raw: res for raw, res, _pv, _dv in entries}
-        adds, full_removes, dv_files, written_bin = self._build_dv_actions(
-            entries, new_pos, inline_threshold
-        )
-        extra = self._dv_protocol_actions(rdr)
-        cdc = None
-        if self._cdf_enabled(meta):
-            # fast path: the newly-flipped rows are exactly the
-            # predicate's matches over the affected files under their
-            # OLD vectors (already-deleted rows never rematch) — same
-            # frame the old-vs-new-vector diff yields, no shuffle
-            from pyspark.sql import functions as F
-
-            aff = rdr._assemble_mor(
-                spark,
-                [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-                 for raw in sorted(new_pos)],
-                st, part_cols, mapping=mapping,
-            )
-            deletes = aff.where(
-                F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
-            ).withColumn("_change_type", F.lit("delete"))
-            cdc = self._cdc_actions(
-                spark, rdr, st, part_cols, mapping, "DELETE",
-                [], [], [], changes_df=deletes,
-            )
-        try:
-            version = self._commit_cow(
-                sorted(new_pos), pv_of, dv_of, [], "DELETE",
-                {"predicate": predicate},
-                extra_actions=adds + extra, cdc=cdc,
-            )
-        except ConcurrentWriteError:
-            self._reclaim_bin(written_bin)
-            raise
-        return {
-            "version": version,
-            "rows_deleted": matched,
-            "files_removed": len(full_removes),
-            "files_dv": len(dv_files),
-        }
-
-    def update(
-        self,
-        spark: SparkSession,
-        assignments: dict[str, str],
-        predicate: str | None = None,
-        mode: str = "auto",
-        dv_inline_threshold: int = 512,
-    ) -> dict:
-        """Row-level ``UPDATE … SET col = expr WHERE predicate``, two
-        physical strategies behind one semantic (dispatch as in
-        ``delete``):
-
-        - ``cow``: affected files rewrite through a CASE per assigned
-          column cast back to the declared type (the pinned schema
-          never drifts); unmatched files keep their add entries.
-        - ``mor``: matched rows get DELETION-VECTORED in place and
-          only their POSTIMAGES stage as new files — an update
-          touching 1% of a file's rows commits O(bitmap + changed
-          rows), not O(file bytes); production Delta's UPDATE under
-          deletionVectors does exactly this.
-        - ``auto`` (the default, and what SQL UPDATE uses): ``mor``
-          iff the protocol announces deletionVectors.
-
-        Partition-column assignment refuses — row movement is an
-        overwrite-shaped operation."""
-        from pyspark.sql import functions as F
-
-        if mode not in ("auto", "cow", "mor"):
-            raise ValueError(f"update mode {mode!r}: auto, cow, or mor")
-        if self.latest_version() < 0:
-            raise ValueError(
-                f"delta table {self.path} has no commits to update"
-            )
-        rdr, entries, st, part_cols, by_local, mapping, meta = (
-            self._cow_context(spark, "UPDATE")
-        )
-        if mode == "auto":
-            proto, _m = rdr._protocol_meta()
-            mode = (
-                "mor"
-                if "deletionVectors" in (proto.get("writerFeatures") or [])
-                else "cow"
-            )
-        if not entries:
-            return {"version": None, "rows_updated": 0,
-                    "files_rewritten": 0}
-        if st is not None:
-            known = {f.name for f in st.fields} | set(part_cols)
-            unknown = [c for c in assignments if c not in known]
-            if unknown:
-                raise ValueError(
-                    f"UPDATE assigns unknown column(s) {unknown} — the "
-                    "table schema is pinned"
-                )
-        bad = [c for c in assignments if c in part_cols]
-        if bad:
-            raise ValueError(
-                f"UPDATE assigns partition column(s) {bad} — moving rows "
-                "across partitions is an overwrite-shaped operation; "
-                "DELETE + append instead"
-            )
-        self._gate_generated_assignments(assignments, meta, "UPDATE")
-        pred = predicate if predicate is not None else "TRUE"
-        if mode == "mor":
-            # mapped tables compose since round 14 (see _delete_mor)
-            return self._update_mor(
-                spark, rdr, entries, st, part_cols, by_local,
-                assignments, pred, dv_inline_threshold,
-                meta, mapping=mapping,
-            )
-        by_raw, matched = self._probe_affected(
-            spark, rdr, entries, st, part_cols, by_local, pred,
-            mapping=mapping,
-        )
-        if not matched:
-            return {"version": None, "rows_updated": 0,
-                    "files_rewritten": 0}
-        res_of = {raw: res for raw, res, _pv, _dv in entries}
-        pv_of = {raw: pv for raw, _res, pv, _dv in entries}
-        dv_of = {raw: dv for raw, _res, _pv, dv in entries}
-        affected = sorted(by_raw)
-        df = rdr._assemble_mor(
-            spark,
-            [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-             for raw in affected],
-            st, part_cols, mapping=mapping,
-        )
-        cond = F.coalesce(F.expr(pred).cast("boolean"), F.lit(False))
-        out = df.select(
-            *[
-                F.when(cond, F.expr(assignments[c]))
-                .otherwise(F.col(c))
-                .cast(df.schema[c].dataType)
-                .alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-        out = self._recompute_generated(out, meta)
-        # the whole rewrite frame probes (pre-existing rows satisfied
-        # their rules at their own write time, so they pass trivially;
-        # filtering by the predicate over POST-update values would
-        # mis-select when an assigned column appears in it)
-        self._enforce_invariants(out, meta, "UPDATE")
-        staged = self._stage(out, part_cols, mapping=mapping)
-        cdc = None
-        if self._cdf_enabled(meta):
-            # fast path: diff over the MATCHED rows only (preimages vs
-            # the same rows with assignments applied — deterministic
-            # expressions over immutable files, the exact projection
-            # the rewrite staged), preserving the generic algebra's
-            # cancellation of no-op assignments at O(matched rows)
-            pre_m = df.where(cond)
-            post_m = self._recompute_generated(
-                pre_m.select(
-                    *[
-                        F.expr(assignments[c])
-                        .cast(df.schema[c].dataType).alias(c)
-                        if c in assignments
-                        else F.col(c)
-                        for c in df.columns
-                    ]
-                ),
-                meta,
-            )
-            changes = (
-                pre_m.exceptAll(post_m)
-                .withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    post_m.exceptAll(pre_m)
-                    .withColumn("_change_type", F.lit("update_postimage"))
-                )
-            )
-            cdc = self._cdc_actions(
-                spark, rdr, st, part_cols, mapping, "UPDATE",
-                [], [], [], changes_df=changes,
-            )
-        version = self._commit_cow(
-            affected, pv_of, dv_of, staged, "UPDATE",
-            {"predicate": pred}, cdc=cdc,
-        )
-        return {
-            "version": version,
-            "rows_updated": matched,
-            "files_rewritten": len(affected),
-        }
-
-    def _update_mor(
-        self, spark, rdr, entries, st, part_cols, by_local,
-        assignments: dict[str, str], pred: str,
-        inline_threshold: int, meta: dict | None = None,
-        mapping: dict[str, str] | None = None,
-    ) -> dict:
-        """The merge-on-read UPDATE body: the preimage rows get
-        deletion-vectored in place (same machinery as MoR DELETE) and
-        ONLY the postimages — the matched rows with assignments
-        applied, cast to declared types — stage as new files. Both
-        halves ride ONE data-changing commit, so a reader never sees
-        the delete without the re-insert. On mapped tables the probe
-        and postimage scan assemble through ``mapping`` (logical
-        names) and the postimages RESTAGE under physical names with
-        field ids — the same staging contract as mapped COW."""
-        from pyspark.sql import functions as F
-
-        new_pos, matched = self._probe_positions(
-            spark, rdr, entries, st, part_cols, by_local, pred,
-            mapping=mapping,
-        )
-        if not new_pos:
-            return {"version": None, "rows_updated": 0, "files_dv": 0}
-        pv_of = {raw: pv for raw, _res, pv, _dv in entries}
-        dv_of = {raw: dv for raw, _res, _pv, dv in entries}
-        res_of = {raw: res for raw, res, _pv, _dv in entries}
-        affected = sorted(new_pos)
-        post_src = rdr._assemble_mor(
-            spark,
-            [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-             for raw in affected],
-            st, part_cols, mapping=mapping,
-        ).where(F.coalesce(F.expr(pred).cast("boolean"), F.lit(False)))
-        post = post_src.select(
-            *[
-                F.expr(assignments[c])
-                .cast(post_src.schema[c].dataType)
-                .alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in post_src.columns
-            ]
-        )
-        post = self._recompute_generated(post, meta)
-        self._enforce_invariants(post, meta, "UPDATE")
-        staged = self._stage(post, part_cols, mapping=mapping)
-        adds, _full, dv_files, written_bin = self._build_dv_actions(
-            entries, new_pos, inline_threshold
-        )
-        extra = self._dv_protocol_actions(rdr)
-        cdc = None
-        if self._cdf_enabled(meta):
-            # fast path: the flipped rows are post_src (matched rows
-            # under OLD vectors) and their postimages are post — the
-            # frames this mutation already built; diffing just them
-            # preserves no-op-assignment cancellation at O(matched)
-            changes = (
-                post_src.exceptAll(post)
-                .withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    post.exceptAll(post_src)
-                    .withColumn("_change_type", F.lit("update_postimage"))
-                )
-            )
-            cdc = self._cdc_actions(
-                spark, rdr, st, part_cols, mapping, "UPDATE",
-                [], [], [], changes_df=changes,
-            )
-        try:
-            version = self._commit_cow(
-                affected, pv_of, dv_of, staged, "UPDATE",
-                {"predicate": pred},
-                extra_actions=adds + extra, cdc=cdc,
-            )
-        except ConcurrentWriteError:
-            self._reclaim_bin(written_bin)
-            raise
-        return {
-            "version": version,
-            "rows_updated": matched,
-            "files_dv": len(dv_files),
-        }
-
-    def merge(
-        self,
-        spark: SparkSession,
-        source,
-        cond: str,
-        assignments: dict[str, str] | None,
-        insert_exprs: list[str] | None,
-        target_alias: str = "t",
-        source_alias: str = "s",
-        delete_matched: bool = False,
-        mode: str = "auto",
-        dv_inline_threshold: int = 512,
-    ) -> dict:
-        """``MERGE INTO`` as ONE copy-on-write commit on the standard
-        format (probe
-        semi-join → rewrite only reached files → anti-join inserts →
-        atomic remove+add), with the same free multi-match refusal
-        (a matched rewrite preserves row count; staged footers
-        disagreeing with input footers IS the multi-match signal) and
-        the same ``delete_matched`` WHEN MATCHED THEN DELETE clause
-        (fully-matching files drop without rewrite I/O; partial files
-        rewrite via LEFT ANTI)."""
-        from pyspark.sql import functions as F
-
-        if self.latest_version() < 0:
-            raise ValueError(
-                f"delta table {self.path} has no commits to merge into"
-            )
-        if delete_matched and assignments:
-            raise ValueError(
-                "MERGE: WHEN MATCHED THEN DELETE and THEN UPDATE are "
-                "mutually exclusive in this dialect"
-            )
-        if not assignments and not delete_matched and insert_exprs is None:
-            raise ValueError(
-                "MERGE needs WHEN MATCHED THEN UPDATE assignments, "
-                "WHEN MATCHED THEN DELETE, and/or WHEN NOT MATCHED "
-                "THEN INSERT expressions"
-            )
-        if mode not in ("auto", "cow", "mor"):
-            raise ValueError(f"merge mode {mode!r}: auto, cow, or mor")
-        rdr, entries, st, part_cols, by_local, mapping, meta = (
-            self._cow_context(spark, "MERGE")
-        )
-        self._gate_generated_assignments(assignments, meta, "MERGE")
-        if insert_exprs is not None and self._identity_of(meta):
-            raise NotImplementedError(
-                f"MERGE INSERT on {self.path}: the table declares "
-                "identity column(s) whose high-water mark MERGE does "
-                "not maintain — append the not-matched rows instead"
-            )
-        if assignments:
-            bad = [c for c in assignments if c in part_cols]
-            if bad:
-                raise ValueError(
-                    f"MERGE assigns partition column(s) {bad} — moving "
-                    "rows across partitions is an overwrite-shaped "
-                    "operation; DELETE + append instead"
-                )
-        if mode == "auto":
-            proto, _m = rdr._protocol_meta()
-            mode = (
-                "mor"
-                if "deletionVectors" in (proto.get("writerFeatures") or [])
-                else "cow"
-            )
-        if mode == "mor" and entries:
-            # mapped tables compose since round 14 (see _delete_mor)
-            return self._merge_mor(
-                spark, rdr, entries, st, part_cols, by_local, source,
-                cond, assignments, insert_exprs, target_alias,
-                source_alias, delete_matched,
-                dv_inline_threshold, meta, mapping=mapping,
-            )
-        res_of = {raw: res for raw, res, _pv, _dv in entries}
-        pv_of = {raw: pv for raw, _res, pv, _dv in entries}
-        dv_of = {raw: dv for raw, _res, _pv, dv in entries}
-        cond_col = F.expr(cond)
-        by_raw: dict[str, int] = {}
-        matched = 0
-        if (assignments or delete_matched) and entries:
-            tgt = rdr._assemble_mor(
-                spark, entries, st, part_cols, keep_pos=True,
-                mapping=mapping,
-            )
-            rows = (
-                tgt.alias(target_alias)
-                .join(source.alias(source_alias), cond_col, "left_semi")
-                .groupBy("__lp")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .collect()
-            )
-            for r in rows:
-                hit = by_local.get(r["__lp"])
-                if hit is None:
-                    raise RuntimeError(
-                        f"probe returned file {r['__lp']} outside the "
-                        "live set — concurrent vacuum mid-probe?"
-                    )
-                by_raw[hit[0]] = by_raw.get(hit[0], 0) + int(r["__n"])
-            matched = sum(by_raw.values())
-        affected = sorted(by_raw)
-        staged: list[tuple[str, dict]] = []
-        rewritten = len(affected)
-        if affected and delete_matched:
-            partial = [
-                raw for raw in affected
-                if by_raw[raw] != self._live_rows(res_of[raw], dv_of[raw])
-            ]
-            rewritten = len(partial)
-            if partial:
-                keep = (
-                    rdr._assemble_mor(
-                        spark,
-                        [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-                         for raw in partial],
-                        st, part_cols, mapping=mapping,
-                    )
-                    .alias(target_alias)
-                    .join(source.alias(source_alias), cond_col, "left_anti")
-                )
-                staged = self._stage(keep, part_cols, mapping=mapping)
-        elif affected:
-            aff = rdr._assemble_mor(
-                spark,
-                [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-                 for raw in affected],
-                st, part_cols, mapping=mapping,
-            )
-            input_rows = sum(
-                self._live_rows(res_of[raw], dv_of[raw]) for raw in affected
-            )
-            mark = "__merge_matched"
-            joined = aff.alias(target_alias).join(
-                source.withColumn(mark, F.lit(True)).alias(source_alias),
-                cond_col,
-                "left_outer",
-            )
-            hit_c = F.col(f"{source_alias}.{mark}").isNotNull()
-            out = joined.select(
-                *[
-                    F.when(hit_c, F.expr(assignments[c]))
-                    .otherwise(F.col(f"{target_alias}.{c}"))
-                    .cast(aff.schema[c].dataType)
-                    .alias(c)
-                    if c in assignments
-                    else F.col(f"{target_alias}.{c}").alias(c)
-                    for c in aff.columns
-                ]
-            )
-            staged = self._stage(out, part_cols, mapping=mapping)
-            staged_rows = sum(
-                self._file_rows(os.path.join(self.path, rel))
-                for rel, _pv in staged
-            )
-            if staged_rows != input_rows:
-                self._unstage(staged)
-                raise ValueError(
-                    f"MERGE: {staged_rows - input_rows} target row(s) "
-                    "matched multiple source rows — the rewrite would "
-                    "duplicate them; deduplicate the source on the "
-                    "merge key first"
-                )
-        rows_inserted = 0
-        if insert_exprs is not None:
-            if entries:
-                full_t = rdr._assemble_mor(
-                    spark, entries, st, part_cols, mapping=mapping,
-                )
-                ins_src = source.alias(source_alias).join(
-                    full_t.alias(target_alias), cond_col, "left_anti"
-                )
-                tbl_schema = full_t.schema
-            else:
-                ins_src = source.alias(source_alias)
-                tbl_schema = st
-            if tbl_schema is None:
-                raise ValueError(
-                    "MERGE into an empty schema-less delta table has no "
-                    "column shape to insert into — append a first batch"
-                )
-            cols = [(f.name, f.dataType) for f in tbl_schema.fields]
-            if len(insert_exprs) != len(cols):
-                # the matched rewrite already staged — unstage it or
-                # the files leak under vacuum's log-candidates rule
-                self._unstage(staged)
-                raise ValueError(
-                    f"MERGE: INSERT VALUES has {len(insert_exprs)} "
-                    f"expressions for {len(cols)} target columns"
-                )
-            ins = ins_src.select(
-                *[
-                    F.expr(e).cast(t_).alias(c)
-                    for e, (c, t_) in zip(insert_exprs, cols)
-                ]
-            )
-            self._enforce_invariants(ins, meta, "MERGE")
-            ins_staged = self._stage(ins, part_cols, mapping=mapping)
-            rows_inserted = sum(
-                self._file_rows(os.path.join(self.path, rel))
-                for rel, _pv in ins_staged
-            )
-            if rows_inserted == 0:
-                self._unstage(ins_staged)
-            else:
-                staged = staged + ins_staged
-        if not affected and not staged:
-            return {"version": None, "rows_matched": 0,
-                    "rows_inserted": 0, "files_rewritten": 0}
-        cdc = None
-        if self._cdf_enabled(meta):
-            cdc = self._cdc_actions(
-                spark, rdr, st, part_cols, mapping, "MERGE",
-                [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-                 for raw in affected],
-                [], staged,
-            )
-        version = self._commit_cow(
-            affected, pv_of, dv_of, staged, "MERGE",
-            {"predicate": cond}, cdc=cdc,
-        )
-        return {
-            "version": version,
-            "rows_matched": matched,
-            "rows_inserted": rows_inserted,
-            "files_rewritten": rewritten,
-        }
-
-    def _merge_mor(
-        self, spark, rdr, entries, st, part_cols, by_local, source,
-        cond: str, assignments, insert_exprs, target_alias,
-        source_alias, delete_matched: bool,
-        inline_threshold: int, meta: dict | None = None,
-        mapping: dict[str, str] | None = None,
-    ) -> dict:
-        """The merge-on-read MERGE body: matched target rows
-        deletion-vector in place; THEN-UPDATE postimages come from an
-        inner join of the matched rows with the source (assignments
-        applied, declared-type casts); THEN-DELETE stages nothing;
-        NOT-MATCHED inserts anti-join the DV-applied live set. All
-        pieces ride ONE data-changing commit. Multi-match stays a
-        free refusal: postimage row count must equal the matched
-        count — an inner join against a duplicated source inflates it.
-        Mapped tables: scans assemble through ``mapping``, staged
-        postimages/inserts restage under physical names + field ids
-        (the mapped-COW staging contract)."""
-        from pyspark.sql import functions as F
-
-        cond_col = F.expr(cond)
-        pv_of = {raw: pv for raw, _res, pv, _dv in entries}
-        dv_of = {raw: dv for raw, _res, _pv, dv in entries}
-        new_pos: dict[str, list[int]] = {}
-        matched = 0
-        tgt = rdr._assemble_mor(spark, entries, st, part_cols,
-                                keep_pos=True, mapping=mapping)
-        if assignments or delete_matched:
-            probe = (
-                tgt.alias(target_alias)
-                .join(source.alias(source_alias), cond_col, "left_semi")
-            )
-            new_pos, matched = self._collect_positions(probe, by_local)
-        staged: list[tuple[str, dict]] = []
-        if matched and assignments:
-            joined = (
-                tgt.alias(target_alias)
-                .join(source.alias(source_alias), cond_col, "inner")
-            )
-            data_cols = [
-                c for c in tgt.columns if c not in ("__lp", "__pos")
-            ]
-            post = self._recompute_generated(
-                joined.select(
-                    *[
-                        F.expr(assignments[c])
-                        .cast(tgt.schema[c].dataType)
-                        .alias(c)
-                        if c in assignments
-                        else F.col(f"{target_alias}.{c}").alias(c)
-                        for c in data_cols
-                    ]
-                ),
-                meta,
-            )
-            self._enforce_invariants(post, meta, "MERGE")
-            staged = self._stage(post, part_cols, mapping=mapping)
-            staged_rows = sum(
-                self._file_rows(os.path.join(self.path, rel))
-                for rel, _pv in staged
-            )
-            if staged_rows != matched:
-                self._unstage(staged)
-                raise ValueError(
-                    f"MERGE: {staged_rows - matched} target row(s) "
-                    "matched multiple source rows — the rewrite would "
-                    "duplicate them; deduplicate the source on the "
-                    "merge key first"
-                )
-        rows_inserted = 0
-        if insert_exprs is not None:
-            full_t = rdr._assemble_mor(spark, entries, st, part_cols,
-                                       mapping=mapping)
-            ins_src = source.alias(source_alias).join(
-                full_t.alias(target_alias), cond_col, "left_anti"
-            )
-            cols = [(f.name, f.dataType) for f in full_t.schema.fields]
-            if len(insert_exprs) != len(cols):
-                # the postimage staging already landed — unstage it or
-                # the files leak under vacuum's log-candidates rule
-                self._unstage(staged)
-                raise ValueError(
-                    f"MERGE: INSERT VALUES has {len(insert_exprs)} "
-                    f"expressions for {len(cols)} target columns"
-                )
-            ins = ins_src.select(
-                *[
-                    F.expr(e).cast(t_).alias(c)
-                    for e, (c, t_) in zip(insert_exprs, cols)
-                ]
-            )
-            self._enforce_invariants(ins, meta, "MERGE")
-            ins_staged = self._stage(ins, part_cols, mapping=mapping)
-            rows_inserted = sum(
-                self._file_rows(os.path.join(self.path, rel))
-                for rel, _pv in ins_staged
-            )
-            if rows_inserted == 0:
-                self._unstage(ins_staged)
-            else:
-                staged = staged + ins_staged
-        if not new_pos and not staged:
-            return {"version": None, "rows_matched": 0,
-                    "rows_inserted": 0, "files_dv": 0}
-        adds, _full, dv_files, written_bin = self._build_dv_actions(
-            entries, new_pos, inline_threshold
-        )
-        extra = self._dv_protocol_actions(rdr)
-        cdc = None
-        if self._cdf_enabled(meta):
-            res_of = {raw: res for raw, res, _pv, _dv in entries}
-            cdc = self._cdc_actions(
-                spark, rdr, st, part_cols, mapping, "MERGE",
-                [(raw, res_of[raw], pv_of[raw], dv_of[raw])
-                 for raw in sorted(new_pos)],
-                [(a["add"]["path"], res_of[a["add"]["path"]],
-                  pv_of[a["add"]["path"]], a["add"]["deletionVector"])
-                 for a in adds],
-                staged,
-            )
-        try:
-            version = self._commit_cow(
-                sorted(new_pos), pv_of, dv_of, staged, "MERGE",
-                {"predicate": cond},
-                extra_actions=adds + extra, cdc=cdc,
-            )
-        except (ConcurrentWriteError, ValueError):
-            self._reclaim_bin(written_bin)
-            raise
-        return {
-            "version": version,
-            "rows_matched": matched,
-            "rows_inserted": rows_inserted,
-            "files_dv": len(dv_files),
-        }
 
     # -- maintenance -------------------------------------------------------
 
@@ -3112,33 +2710,14 @@ class DeltaTableWriter:
         staged = self._stage(
             df, part_cols, mapping=self._cm_of(meta)
         )
-        adds = self._add_actions(staged, data_change=False)
-        now_ms = int(time.time() * 1000)
-        removes = []
-        for raw, _res, pv, dv in entries:
-            r = {"path": raw, "deletionTimestamp": now_ms,
-                 "dataChange": False, "partitionValues": pv}
-            if dv is not None:
-                r["deletionVector"] = dv
-            removes.append({"remove": r})
-        inputs = {
-            raw: self._dv_key(dv) for raw, _res, _pv, dv in entries
-        }
-        actions = [
-            self._commit_info("OPTIMIZE", zOrderBy=zorder_by)
-            if zorder_by
-            else self._commit_info("OPTIMIZE")
-        ] + removes + adds
-        try:
-            return retry_commit(
-                "optimize",
-                lambda: self._publish_if_live(inputs, actions, "optimize"),
-            )
-        except ConcurrentWriteError:
-            # abort paths: the compacted staging is unreferenced —
-            # unstage or it leaks under vacuum's log-candidates rule
-            self._unstage(staged)
-            raise
+        return self._commit_cow(
+            [raw for raw, _res, _pv, _dv in entries],
+            {raw: pv for raw, _res, pv, _dv in entries},
+            {raw: dv for raw, _res, _pv, dv in entries},
+            staged, "OPTIMIZE",
+            {"zOrderBy": zorder_by} if zorder_by else {},
+            data_change=False,
+        )
 
     def vacuum(self, retain_versions: int = 2) -> list[str]:
         """Physically delete data files the LOG references but no

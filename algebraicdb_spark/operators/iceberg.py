@@ -75,76 +75,63 @@ from typing import Any, BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
 
+from algebraicdb_spark.operators.mutation import local_path
+
 _MAGIC = b"Obj\x01"
 
 
-def _snappy_decompress(buf: bytes) -> bytes:
-    """Decode one raw snappy block (the format spec:
-    https://github.com/google/snappy/blob/main/format_description.txt)
-    — a LEB128 uncompressed length, then a tag stream of literals and
-    back-references. No snappy library ships in this environment, and
-    snappy is Avro's DEFAULT codec in several Iceberg writers (Java's
-    manifest writer among them), so reading foreign metadata needs
-    this ~50-line pure-Python decoder. Copies may overlap their own
-    output (offset < length encodes a repeat) — the byte-at-a-time
-    extend handles that case; the fast slice path covers the rest."""
-    pos = 0
-    # LEB128 (plain varint, NOT zigzag): uncompressed byte length
-    shift, total = 0, 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("snappy: truncated length header")
-        b = buf[pos]
-        pos += 1
-        total |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 35:
-            raise ValueError("snappy: length varint too long")
-    out = bytearray()
-    while pos < len(buf):
-        tag = buf[pos]
-        pos += 1
-        kind = tag & 0x03
-        if kind == 0:  # literal
-            n = tag >> 2
-            if n >= 60:  # 60..63: length rides 1..4 extra LE bytes
-                extra = n - 59
-                n = int.from_bytes(buf[pos:pos + extra], "little")
-                pos += extra
-            n += 1
-            if pos + n > len(buf):
-                raise ValueError("snappy: truncated literal")
-            out += buf[pos:pos + n]
-            pos += n
-            continue
-        if kind == 1:  # copy, 3-bit length, 11-bit offset
-            n = ((tag >> 2) & 0x07) + 4
-            off = ((tag >> 5) << 8) | buf[pos]
+def _decode_block(codec: str, payload: bytes, path: str) -> bytes:
+    """One Avro block's payload decompressed per the container's codec
+    (spec §"Required Codecs"/"Optional Codecs"), through pyarrow's
+    bundled codecs. A block that does not decode raises ValueError
+    naming the file — a silent bitflip in metadata would corrupt every
+    downstream scan decision."""
+    import pyarrow as pa
+
+    if codec == "null":
+        return payload
+    if codec == "deflate":  # raw deflate, no zlib header
+        return zlib.decompress(payload, -15)
+    try:
+        if codec == "zstandard":
+            # a bare zstd frame per block (no extra CRC — a frame
+            # carries its own optional content checksum, which the
+            # decoder verifies); the stream reader also takes frames
+            # without a content size. Rust/Go Iceberg writers commonly
+            # emit manifests with this codec.
+            return pa.CompressedInputStream(
+                pa.BufferReader(payload), "zstd"
+            ).read()
+        # snappy: a raw snappy block (LEB128 uncompressed length, then
+        # the tag stream) + the 4-byte BIG-ENDIAN CRC32 of the
+        # uncompressed data. Snappy is the default codec of several
+        # Iceberg writers (Java's manifest writer among them).
+        if len(payload) < 4:
+            raise ValueError("too short for its crc32 trailer")
+        body, crc = payload[:-4], payload[-4:]
+        size = shift = pos = 0
+        while True:
+            if pos >= len(body) or shift > 35:
+                raise ValueError("has a bad length header")
+            size |= (body[pos] & 0x7F) << shift
             pos += 1
-        elif kind == 2:  # copy, 6-bit length, 2-byte LE offset
-            n = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos:pos + 2], "little")
-            pos += 2
-        else:  # copy, 6-bit length, 4-byte LE offset
-            n = (tag >> 2) + 1
-            off = int.from_bytes(buf[pos:pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy: copy offset out of range")
-        if off >= n:  # disjoint: one slice
-            start = len(out) - off
-            out += out[start:start + n]
-        else:  # overlapping: the repeat idiom, byte at a time
-            start = len(out) - off
-            for i in range(n):
-                out.append(out[start + i])
-    if len(out) != total:
-        raise ValueError(
-            f"snappy: decompressed {len(out)} bytes, header said {total}"
+            if not body[pos - 1] & 0x80:
+                break
+            shift += 7
+        out = pa.Codec("snappy").decompress(
+            body, decompressed_size=size, asbytes=True
         )
-    return bytes(out)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(
+            f"{path}: {codec} avro block does not decode ({e})"
+        ) from e
+    except ValueError as e:
+        raise ValueError(f"{path}: {codec} avro block {e}") from e
+    if zlib.crc32(out) & 0xFFFFFFFF != int.from_bytes(crc, "big"):
+        raise ValueError(
+            f"{path}: snappy avro block crc32 mismatch — corrupt metadata"
+        )
+    return out
 
 
 class _Bin:
@@ -308,38 +295,7 @@ class AvroFileReader:
             payload = f.read(n_bytes)
             if len(payload) != n_bytes:
                 raise ValueError(f"{self.path}: truncated avro block")
-            if self.codec == "deflate":  # raw deflate, no zlib header
-                payload = zlib.decompress(payload, -15)
-            elif self.codec == "snappy":
-                # Avro's snappy framing: raw snappy block + 4-byte
-                # BIG-ENDIAN CRC32 of the UNCOMPRESSED data (spec
-                # §"Required Codecs"); verify — a silent bitflip in
-                # metadata corrupts every downstream scan decision
-                if len(payload) < 4:
-                    raise ValueError(
-                        f"{self.path}: snappy avro block too short "
-                        "for its crc32 trailer"
-                    )
-                body, crc = payload[:-4], payload[-4:]
-                payload = _snappy_decompress(body)
-                if zlib.crc32(payload) & 0xFFFFFFFF != int.from_bytes(
-                    crc, "big"
-                ):
-                    raise ValueError(
-                        f"{self.path}: snappy avro block crc32 "
-                        "mismatch — corrupt metadata"
-                    )
-            elif self.codec == "zstandard":
-                # Avro's zstd framing is a bare zstd frame per block
-                # (no extra CRC — zstd frames carry their own optional
-                # xxhash64 content checksum, which the decoder
-                # verifies). Rust/Go Iceberg writers commonly emit
-                # manifests with this codec (round 13).
-                from algebraicdb_spark.operators.zstd import (
-                    zstd_decompress,
-                )
-
-                payload = zstd_decompress(payload)
+            payload = _decode_block(self.codec, payload, self.path)
             if f.read(16) != self.sync:
                 raise ValueError(f"{self.path}: avro sync marker mismatch")
             d = _Bin(payload)
@@ -1488,15 +1444,8 @@ class IcebergTable:
                             F.col("_metadata.file_path").alias("__fp"),
                             F.col("_metadata.row_index").alias("__pos"),
                         )
-                        stripped = F.regexp_replace(
-                            F.col("__fp"),
-                            r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?", "",
-                        )
                         src = src.withColumn(
-                            "__lp",
-                            F.url_decode(
-                                F.regexp_replace(stripped, r"\+", "%2B")
-                            ),
+                            "__lp", local_path(F.col("__fp"))
                         )
                         lp_map = spark.createDataFrame(
                             list(zip(resolved, uris)),
@@ -1534,16 +1483,7 @@ class IcebergTable:
                         F.col("_metadata.file_path").alias("__fp"),
                         F.col("_metadata.row_index").alias("__pos"),
                     )
-                    stripped = F.regexp_replace(
-                        F.col("__fp"),
-                        r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?", "",
-                    )
-                    src = src.withColumn(
-                        "__lp",
-                        F.url_decode(
-                            F.regexp_replace(stripped, r"\+", "%2B")
-                        ),
-                    )
+                    src = src.withColumn("__lp", local_path(F.col("__fp")))
                     mapping = spark.createDataFrame(
                         list(zip(resolved, uris)),
                         "__lp string, __uri string",
@@ -1718,22 +1658,10 @@ class IcebergTable:
             F.col("_metadata.file_path").alias("__fp"),
             F.col("_metadata.row_index").alias("__pos"),
         )
-        # _metadata.file_path is a Hadoop Path URI — scheme prefix AND
-        # percent-encoded specials (verified: a dir named "my tables+x"
-        # yields file:/tmp/my%20tables+x/…, '+' left literal). Strip
-        # the scheme/authority, then percent-decode WITHOUT the
-        # url_decode '+'→space rule (escape literal '+' first) so the
-        # join key equals the mapping's plain local path; skipping the
-        # decode would silently drop EVERY row of a file under an
-        # encodable path (inner join matches nothing — whole-file
-        # loss, not just unapplied deletes).
-        stripped = F.regexp_replace(
-            F.col("__fp"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?", ""
-        )
-        df = df.withColumn(
-            "__lp",
-            F.url_decode(F.regexp_replace(stripped, r"\+", "%2B")),
-        )
+        # the normalized path must equal the mapping's plain local
+        # path: a mismatch matches nothing in the inner join below —
+        # whole-file loss, not just unapplied deletes
+        df = df.withColumn("__lp", local_path(F.col("__fp")))
         mapping = spark.createDataFrame(
             [(p, u, s) for p, u, s in data],
             "__lp string, __uri string, __seq long",

@@ -1,7 +1,6 @@
-"""Apache Iceberg v2 WRITER — the Iceberg twin of the Delta writer
-(``DeltaTableWriter``), so both standard formats this engine reads it
-can also write. ``IcebergTableWriter`` emits real table metadata per
-the public spec (https://iceberg.apache.org/spec/):
+"""Apache Iceberg v2/v3 WRITER, so the engine can write the second
+standard format it reads. ``IcebergTableWriter`` emits real table
+metadata per the public spec (https://iceberg.apache.org/spec/):
 
 - parquet data files under ``<table>/data/``;
 - one manifest Avro per commit (entry status ADDED, explicit data
@@ -21,29 +20,31 @@ the public spec (https://iceberg.apache.org/spec/):
   arbitrate this swap, the same deployment seam);
 - ``version-hint.text`` swung atomically for hint-based readers.
 
-``AvroFileWriter`` is the write twin of ``AvroFileReader`` — a
+``AvroFileWriter`` is the write side of ``AvroFileReader`` — a
 schema-driven encoder over the same Avro 1.11 object-container spec
 (header magic, file-metadata map with embedded writer schema, sync
-markers, zigzag varints). The encoder was promoted from the test
-suite's hand-rolled fixture encoder, and proof of interop stays
-structural: round-trip tests read this writer's output back through
+markers, zigzag varints). Proof of interop stays structural:
+round-trip tests read this writer's output back through
 ``IcebergTable`` — the reader built and validated against hand-written
 fixtures, never against this writer — so agreement is evidence both
 speak the spec, not that they share bugs.
 
-Scope (round 12): full nested schemas — struct/list/map columns get
-spec field ids (element/key/value ids included), stamped into each
-parquet file's footer as real field_id metadata, so the engine's own
-``embeddings`` (array<float>) and ADT struct columns land in its
-lakehouse format and read back through any conformant client. Appends
-(identity-partitioned or not), COW and merge-on-read row mutations,
-keyed equality-delete upserts, compaction, and snapshot maintenance
-all publish real v2 snapshots; schema EVOLUTION stays the owning
-system's job. Scale shape: like every Iceberg client — data files
-land via one distributed Spark write, metadata is O(files in the
-commit) KB-sized driver-side Avro/JSON.
+Scope: full nested schemas — struct/list/map columns get spec field
+ids (element/key/value ids included), stamped into each parquet file's
+footer as real field_id metadata. Appends (identity-partitioned or
+transform-partitioned), row mutations, keyed equality-delete upserts,
+compaction, and snapshot maintenance all publish real snapshots;
+schema EVOLUTION stays the owning system's job. Row-level DELETE /
+UPDATE / MERGE are planned by ``operators.mutation``, the
+format-neutral planner the Delta writer shares; this module keeps the
+Iceberg encoders (a manifest rewrite, a position-delete file, or a v3
+deletion vector — ``_how`` picks one from the table's format version
+and ``write.<op>.mode``), the partition spec, v3 row lineage,
+equality deletes, and a retry loop that re-plans every attempt on the
+new head. Scale shape: like every Iceberg client — data files land via
+one distributed Spark write, metadata is O(files in the commit)
+KB-sized driver-side Avro/JSON.
 """
-
 from __future__ import annotations
 
 import json
@@ -57,6 +58,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from algebraicdb_spark.operators import mutation
 from algebraicdb_spark.operators.iceberg import AvroFileReader, IcebergTable
 from algebraicdb_spark.operators.txnlog import (
     ConcurrentWriteError,
@@ -284,39 +286,52 @@ def _max_field_id(fields: list[dict]) -> int:
 
 
 _REV_TYPE_MAP = {
-    "boolean": "boolean", "int": "int", "long": "bigint",
-    "float": "float", "double": "double", "string": "string",
-    "date": "date", "timestamptz": "timestamp",
-    "timestamp": "timestamp_ntz", "binary": "binary",
+    "boolean": "BooleanType", "int": "IntegerType", "long": "LongType",
+    "float": "FloatType", "double": "DoubleType", "string": "StringType",
+    "date": "DateType", "timestamptz": "TimestampType",
+    "timestamp": "TimestampNTZType", "binary": "BinaryType",
 }
+_DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
 
 
-def _spark_ddl(t) -> str | None:
-    """Iceberg JSON type → Spark DDL, recursing through
-    struct/list/map; None for primitives Spark has no twin for
+def _spark_type(t):
+    """Iceberg JSON type → Spark DataType, recursing through
+    struct/list/map (every level nullable, as Spark's DDL parser would
+    build it); None for primitives Spark has no twin for
     (uuid/fixed/time) — cannot map ≠ map wrongly."""
+    from pyspark.sql import types as T
+
     if isinstance(t, str):
-        tt = t.replace(" ", "")
-        if tt.startswith("decimal("):
-            return tt
-        return _REV_TYPE_MAP.get(t)
+        m = _DECIMAL_RE.match(t.replace(" ", ""))
+        if m:
+            return T.DecimalType(int(m.group(1)), int(m.group(2)))
+        name = _REV_TYPE_MAP.get(t)
+        return getattr(T, name)() if name else None
     k = t.get("type")
     if k == "struct":
-        inner = []
-        for f in t.get("fields", []):
-            d = _spark_ddl(f["type"])
-            if d is None:
-                return None
-            inner.append(f"`{f['name']}`: {d}")
-        return "struct<" + ", ".join(inner) + ">"
+        return _spark_schema(t.get("fields", []))
     if k == "list":
-        d = _spark_ddl(t.get("element"))
-        return None if d is None else f"array<{d}>"
+        el = _spark_type(t.get("element"))
+        return None if el is None else T.ArrayType(el, True)
     if k == "map":
-        kd = _spark_ddl(t.get("key"))
-        vd = _spark_ddl(t.get("value"))
-        return None if kd is None or vd is None else f"map<{kd}, {vd}>"
+        kt = _spark_type(t.get("key"))
+        vt = _spark_type(t.get("value"))
+        return None if kt is None or vt is None else T.MapType(kt, vt, True)
     return None
+
+
+def _spark_schema(fields: list[dict]):
+    """An Iceberg field list as a Spark StructType (None when any
+    field's type has no Spark twin)."""
+    from pyspark.sql import types as T
+
+    out = []
+    for f in fields:
+        dt = _spark_type(f["type"])
+        if dt is None:
+            return None
+        out.append(T.StructField(f["name"], dt, True))
+    return T.StructType(out)
 
 
 def _type_key(t):
@@ -677,6 +692,13 @@ def _with_id_type(at, ice_type):
             _with_id_field(at.item_field, ice.get("value"),
                            ice.get("value-id")),
         )
+    if pa.types.is_timestamp(at) and ice_type in ("timestamp", "timestamptz"):
+        # the spec stores timestamps as microseconds, UTC-adjusted for
+        # timestamptz; Spark's INT96 columns read back as naive
+        # timestamp[ns] and would otherwise be rewritten as INT64
+        # nanoseconds, which Spark's parquet reader refuses
+        return pa.timestamp("us", tz="UTC" if ice_type == "timestamptz"
+                            else None)
     return at
 
 
@@ -937,6 +959,63 @@ class _Draft:
     written: list[str] = field(default_factory=list)
 
 
+@dataclass
+class _Scope:
+    """The gated live sets one row-level mutation attempt plans over:
+    data entries (resolved path, recorded uri, data sequence number),
+    live position / equality delete files and deletion vectors, the
+    default partition spec (copy-on-write restaging) and the live
+    vectors' decoded positions by data-file uri (v3)."""
+
+    data: list[tuple[str, str, int | None]]
+    pos_d: list[str] = field(default_factory=list)
+    eq_d: list[tuple[str, int, tuple[int, ...]]] = field(
+        default_factory=list)
+    dvs: list[tuple[str, str | None, int | None, int | None]] = field(
+        default_factory=list)
+    spec_parts: list[dict] = field(default_factory=list)
+    old_dv: dict[str, list[int]] = field(default_factory=dict)
+
+    @property
+    def live(self) -> set[str]:
+        return {p for p, _u, _s in self.data}
+
+
+@dataclass
+class _Staged:
+    """What one mutation attempt staged — unstaged on any failure."""
+
+    data: list = field(default_factory=list)
+    deletes: list = field(default_factory=list)
+    new_dvs: dict[str, list[int]] = field(default_factory=dict)
+
+    @property
+    def delete_files(self) -> int:
+        if self.deletes:
+            return len(self.deletes)
+        return 1 if self.new_dvs else 0
+
+
+# the object each mutation's "no commits to …" refusal names, and the
+# retry-loop label per encoder
+_VERB_OBJECT = {"delete": "delete from", "update": "update",
+                "merge": "merge into"}
+_RETRY_NAME = {"cow": "iceberg", "mor": "iceberg mor", "dv": "iceberg v3 dv"}
+
+
+def _footer_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def _table_columns(frame) -> list[str]:
+    """A scan frame's table columns: the planner's and the v3 lineage
+    columns dropped."""
+    skip = {f["name"] for f in _LINEAGE_FIELDS}
+    return [c for c in mutation.data_columns(frame) if c not in skip]
+
+
 def _ml_row(
     mpath: str,
     draft: _Draft,
@@ -1167,21 +1246,13 @@ class IcebergTableWriter:
         )
         return list(sch.get("fields") or [])
 
-    @staticmethod
-    def _gate_schema(cur_meta: dict, fields: list[dict]) -> None:
+    @classmethod
+    def _gate_schema(cls, cur_meta: dict, fields: list[dict]) -> None:
         """Appends must match the table schema exactly — this writer
         has no evolution story (loud > silently diverging field ids)."""
-        schemas = cur_meta.get("schemas") or (
-            [cur_meta["schema"]] if cur_meta.get("schema") else []
-        )
-        sid = cur_meta.get("current-schema-id", 0)
-        cur = next(
-            (s for s in schemas if s.get("schema-id", 0) == sid),
-            schemas[-1] if schemas else None,
-        )
         have = [
             (f["name"], _type_key(f["type"]))
-            for f in (cur or {}).get("fields", [])
+            for f in cls._cur_fields(cur_meta)
         ]
         want = [(f["name"], _type_key(f["type"])) for f in fields]
         if have != want:
@@ -1403,12 +1474,12 @@ class IcebergTableWriter:
         app_id: str,
         txn_version: int,
     ) -> int | None:
-        """Idempotent APPEND — the iceberg twin of
-        ``DeltaTableWriter.append_txn``: the (app_id, txn_version)
-        mark rides ATOMICALLY in the new snapshot's summary, so
-        foreachBatch's at-least-once redelivery becomes exactly-once
-        (a replayed batch no-ops, returns None, unstages). The mark
-        and the schema gate re-validate against the head read after
+        """Idempotent APPEND, as ``DeltaTableWriter.append_txn``: the
+        (app_id, txn_version) mark rides ATOMICALLY in the new
+        snapshot's summary, so foreachBatch's at-least-once
+        redelivery becomes exactly-once (a replayed batch no-ops,
+        returns None, unstages). The mark and the schema gate
+        re-validate against the head read after
         every lost race — a zombie twin's commit lands at a DIFFERENT
         metadata version, which the create-exclusive publish turns
         into exactly the collision that forces the re-check."""
@@ -1738,21 +1809,23 @@ class IcebergTableWriter:
             raise
         return draft.id
 
-    # -- copy-on-write row mutation (round 11, second half) ----------------
+    # -- row-level mutation -------------------------------------------------
     #
-    # DELETE/UPDATE as real Iceberg v2 snapshots. The structural
-    # difference from Delta's fold shapes the whole implementation:
-    # every snapshot's manifest tree is a COMPLETE description, so
-    # removing a file means REWRITING the manifests that contain it
-    # (surviving entries → status EXISTING with their original data
-    # sequence numbers made EXPLICIT, affected entries → status DELETED
-    # recording this snapshot), while untouched manifests carry forward
-    # verbatim. Column-level stats on rewritten EXISTING entries are
-    # dropped (optional per spec — pruning degrades, correctness
-    # doesn't). Scope gates mirror the append path: flat schemas,
-    # unpartitioned specs, and NO live delete files (mutating under
-    # merge-on-read deletes needs their ordering — compact with the
-    # owning system first).
+    # DELETE / UPDATE / MERGE plan through ``operators.mutation`` (the
+    # row-level decisions both lakehouse writers share) and encode
+    # here in one of three shapes, chosen per table by ``_how``:
+    #
+    # - ``cow``: copy-on-write. Every snapshot's manifest tree is a
+    #   COMPLETE description, so removing a file means REWRITING the
+    #   manifests that contain it (survivors → status EXISTING with
+    #   their original data sequence numbers made explicit, removed
+    #   files → status DELETED recording this snapshot) while untouched
+    #   manifests carry forward verbatim (``_publish_mutation``).
+    # - ``mor``: matched rows land in a v2 POSITION-DELETE file under a
+    #   content=1 delete manifest (``_publish_mor``).
+    # - ``dv``: format version 3 — matched rows land in a Puffin
+    #   deletion vector (``_publish_mor_dv``), postimages keep their
+    #   row lineage.
 
     @staticmethod
     def _carry_row(r: dict) -> dict:
@@ -1821,58 +1894,21 @@ class IcebergTableWriter:
             )
         return data, spec_parts
 
-    @staticmethod
-    def _with_lp(df):
-        """Attach the normalized local path (same normalization as
-        ``IcebergTable.snapshot``'s MoR join — strip scheme, decode
-        percent-escapes without '+'→space)."""
-        from pyspark.sql import functions as F
-
-        stripped = F.regexp_replace(
-            F.col("_metadata.file_path"),
-            r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?", "",
-        )
-        return df.withColumn(
-            "__lp", F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
-        )
-
-    def _probe(
-        self, spark: SparkSession, paths: list[str], predicate: str
-    ) -> dict[str, int]:
-        """{resolved path: matching rows} — one distributed scan with
-        the predicate pushed into the parquet reader."""
-        from pyspark.sql import functions as F
-
-        df = self._with_lp(spark.read.parquet(*paths))
-        return {
-            r["__lp"]: int(r["__n"])
-            for r in df.where(F.expr(predicate))
-            .groupBy("__lp")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        }
-
-    def _mor_scope(
-        self, rdr, dv_writer: bool = False
-    ) -> tuple[
-        list[tuple[str, str, int | None]],
-        list[str],
-        list[tuple[str, int, tuple[int, ...]]],
-        list[tuple[str, str | None, int | None, int | None]],
-    ]:
-        """Gate + live sets for a MERGE-ON-READ mutation: (data
-        entries, live position-delete paths, live equality deletes,
-        live deletion vectors). Position-delete files are
-        partition-scoped under a partition spec, which this writer
-        does not emit — partitioned tables take the COW path. Live
-        equality deletes are APPLIED by the probe (``_live_identity``
-        mirrors the reader's stratum joins), so an upsert-then-mutate
-        history composes; data files with no resolvable sequence under
-        a live equality delete refuse through the reader's own rule at
-        scan time. ``dv_writer`` marks the one caller (the v3 DV
-        DELETE path) that replaces live DVs instead of splitting a
-        file's delete state across tiers — every other MoR mutation
-        refuses under live DVs."""
+    def _scope(self, rdr: IcebergTable, how: str) -> _Scope:
+        """Gate + the live sets one mutation attempt plans over.
+        Copy-on-write: ``_cow_scope``. The delete-file encoders:
+        position-delete files are partition-scoped under a partition
+        spec, which this writer does not emit — partitioned tables take
+        the COW path. Live equality deletes are APPLIED by the probe
+        (``_live_identity`` mirrors the reader's stratum joins), so an
+        upsert-then-mutate history composes; data files with no
+        resolvable sequence under a live equality delete refuse. Only
+        the v3 deletion-vector encoder runs under live DVs (it replaces
+        them); the position-delete encoder must not split a file's
+        delete state across tiers."""
+        if how == "cow":
+            data, spec_parts = self._cow_scope(rdr)
+            return _Scope(data, spec_parts=spec_parts)
         cur = rdr.meta
         self._check_fv_writable(cur)  # pre-staging, like _cow_scope
         if self._cur_spec(cur):
@@ -1881,8 +1917,7 @@ class IcebergTableWriter:
                 "table — position-delete files are partition-scoped "
                 "under a spec this writer does not emit; use mode='cow'"
             )
-        fv = self._fv_of(cur)
-        if fv >= 3 and not dv_writer:
+        if self._fv_of(cur) >= 3 and how != "dv":
             raise NotImplementedError(
                 f"{self.path}: format-version 3 merge-on-read "
                 "UPDATE/MERGE — v3 forbids new position-delete files "
@@ -1891,7 +1926,7 @@ class IcebergTableWriter:
                 "work; use a full Iceberg client"
             )
         data, pos_d, eq_d, dvs = rdr._files(None)
-        if dvs and not dv_writer:
+        if dvs and how != "dv":
             raise NotImplementedError(
                 f"{self.path}: merge-on-read mutation under live v3 "
                 "deletion vectors — this writer emits v2 position "
@@ -1907,68 +1942,57 @@ class IcebergTableWriter:
                     "number — ordering them is impossible; use a full "
                     "Iceberg client"
                 )
-        return data, pos_d, eq_d, dvs
+        return _Scope(data, pos_d, eq_d, dvs,
+                      old_dv=rdr._dv_positions_map(dvs) if dvs else {})
 
     def _live_identity(
         self,
         spark: SparkSession,
-        data: list[tuple[str, str, int | None]],
-        pos_d: list[str],
-        eq_d: list[tuple[str, int, tuple[int, ...]]] | None = None,
-        rdr: IcebergTable | None = None,
-        lineage: dict[str, int | None] | None = None,
+        rdr: IcebergTable,
+        sc: _Scope,
+        lineage: bool = False,
     ):
-        """The LIVE rows with their (recorded data file URI, physical
-        row ordinal) identity as ``__uri``/``__pos`` — existing
-        position AND equality deletes are APPLIED first (a deleted row
-        must never rematch, and an UPDATE postimage of an
-        equality-deleted row would RESURRECT it), exactly the reader's
-        MoR plan: positions anti-join on (uri, pos), equality strata
-        anti-join null-safe on their named columns with the spec's
+        """The LIVE rows with the planner's row identity: ``__lp`` = the
+        data file exactly as the manifest records it (the address a
+        position delete or deletion vector names), ``__pos`` = the
+        physical row ordinal. Existing position deletes, equality
+        deletes and deletion vectors are APPLIED first (a deleted row
+        must never rematch, and an UPDATE postimage of a deleted row
+        would RESURRECT it), exactly the reader's MoR plan: positions
+        anti-join on (uri, pos), equality strata anti-join null-safe
+        on their named columns with the spec's
         strictly-lower-sequence rule.
 
-        ``lineage`` ({uri: explicit first_row_id or None}, from
-        ``IcebergTable._first_row_ids``) additionally MATERIALIZES the
-        v3 row-lineage columns per the spec's inheritance rule:
-        an existing materialized ``_row_id`` /
-        ``_last_updated_sequence_number`` value wins; otherwise
-        first_row_id + physical ordinal / the file's data sequence
-        number; files with no lineage (pre-upgrade) stay null, so a
-        rewrite assigns them FRESH ids via inheritance from the new
-        file — exactly the spec's treatment of lineage-less rows. The
-        read merges schemas so already-materialized columns surface
-        across mixed file generations."""
+        ``lineage`` additionally MATERIALIZES the v3 row-lineage
+        columns per the spec's inheritance rule: an existing
+        materialized ``_row_id`` / ``_last_updated_sequence_number``
+        value wins; otherwise first_row_id + physical ordinal / the
+        file's data sequence number; files with no lineage
+        (pre-upgrade) stay null, so a rewrite assigns them FRESH ids
+        via inheritance from the new file — exactly the spec's
+        treatment of lineage-less rows. The read merges schemas so
+        already-materialized columns surface across mixed file
+        generations."""
         from pyspark.sql import functions as F
 
         reader = spark.read
-        if lineage is not None:
+        first_ids = rdr._first_row_ids(None) if lineage else {}
+        if lineage:
             reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[p for p, _u, _s in data]).select(
+        df = reader.parquet(*[p for p, _u, _s in sc.data]).select(
             "*",
             F.col("_metadata.file_path").alias("__fp"),
             F.col("_metadata.row_index").alias("__pos"),
         )
-        # same URI normalization as the reader's MoR join (strip
-        # scheme, percent-decode WITHOUT '+'→space) — _metadata is a
-        # scan-only hidden column, so normalize the projected alias
-        stripped = F.regexp_replace(
-            F.col("__fp"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?", ""
+        # _metadata is a scan-only hidden column, so normalize the
+        # projected alias
+        df = df.withColumn("__lp", mutation.local_path(F.col("__fp")))
+        mapping = spark.createDataFrame(
+            [(p, u, s, first_ids.get(u)) for p, u, s in sc.data],
+            "__lp string, __uri string, __seq long, __fid long",
         )
-        df = df.withColumn(
-            "__lp", F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
-        )
-        if lineage is not None:
-            mapping = spark.createDataFrame(
-                [(p, u, s, lineage.get(u)) for p, u, s in data],
-                "__lp string, __uri string, __seq long, __fid long",
-            )
-        else:
-            mapping = spark.createDataFrame(
-                [(p, u, s) for p, u, s in data],
-                "__lp string, __uri string, __seq long",
-            )
         df = df.join(F.broadcast(mapping), "__lp", "inner")
-        if lineage is not None:
+        if lineage:
             rid_src = (
                 F.col("_row_id") if "_row_id" in df.columns
                 else F.lit(None).cast("long")
@@ -1987,14 +2011,14 @@ class IcebergTableWriter:
                     lus_src,
                     F.when(F.col("__fid").isNotNull(), F.col("__seq")),
                 ),
-            ).drop("__fid")
-        if pos_d:
-            dels = spark.read.parquet(*pos_d).select(
+            )
+        if sc.pos_d:
+            dels = spark.read.parquet(*sc.pos_d).select(
                 F.col("file_path").alias("__uri"),
                 F.col("pos").cast("long").alias("__pos"),
             )
             df = df.join(dels, ["__uri", "__pos"], "left_anti")
-        if eq_d:
+        if sc.eq_d:
             from algebraicdb_spark.operators.iceberg import (
                 apply_equality_strata,
             )
@@ -2002,9 +2026,20 @@ class IcebergTableWriter:
             # the reader's OWN stratum application — one
             # implementation, so probe and scan can never disagree
             df = apply_equality_strata(
-                spark, df, eq_d, rdr._field_names_by_id(), self.path
+                spark, df, sc.eq_d, rdr._field_names_by_id(), self.path
             )
-        return df.drop("__fp", "__lp", "__seq")
+        if sc.old_dv:
+            dv_dels = spark.createDataFrame(
+                [(u, int(p)) for u, ps in sc.old_dv.items() for p in ps],
+                "__uri string, __pos long",
+                verifySchema=False,  # (str, int) tuples by construction
+            )
+            df = df.join(
+                F.broadcast(dv_dels), ["__uri", "__pos"], "left_anti"
+            )
+        return df.drop("__fp", "__lp", "__seq", "__fid").withColumnRenamed(
+            "__uri", mutation.FILE
+        )
 
     def _lineage_rewrite_src(
         self, spark: SparkSession, rdr: IcebergTable
@@ -2015,47 +2050,14 @@ class IcebergTableWriter:
         restages. Returns (frame with table columns + _row_id +
         _last_updated_sequence_number, data entries, live delete
         counts) so the caller can publish and summarize."""
-        from pyspark.sql import functions as F
-
         data, pos_d, eq_d, dvs = rdr._files(None)
-        df = self._live_identity(
-            spark, data, pos_d, eq_d, rdr,
-            lineage=rdr._first_row_ids(None),
-        )
-        if dvs:
-            rows = [
-                (u, int(p))
-                for u, ps in rdr._dv_positions_map(dvs).items()
-                for p in ps
-            ]
-            if rows:
-                dels = spark.createDataFrame(
-                    rows, "__uri string, __pos long",
-                    verifySchema=False,  # (str, int) tuples by construction
-                )
-                df = df.join(
-                    F.broadcast(dels), ["__uri", "__pos"], "left_anti"
-                )
+        sc = _Scope(data, pos_d, eq_d, dvs,
+                    old_dv=rdr._dv_positions_map(dvs) if dvs else {})
+        df = self._live_identity(spark, rdr, sc, lineage=True)
         return (
-            df.drop("__uri", "__pos"),
+            df.drop(mutation.FILE, mutation.POS),
             data,
             {"pos": len(pos_d), "eq": len(eq_d), "dv": len(dvs)},
-        )
-
-    def _probe_mor_matches(
-        self,
-        spark: SparkSession,
-        data: list[tuple[str, str, int | None]],
-        pos_d: list[str],
-        predicate: str,
-        eq_d=None,
-        rdr: IcebergTable | None = None,
-    ):
-        """``_live_identity`` filtered to the predicate's matches."""
-        from pyspark.sql import functions as F
-
-        return self._live_identity(spark, data, pos_d, eq_d, rdr).where(
-            F.expr(predicate)
         )
 
     def _publish_mor(
@@ -2117,75 +2119,6 @@ class IcebergTableWriter:
             base_v, cur, dict(cur),
             {"operation": operation, **extra_summary}, manifests,
         )
-
-    def _delete_mor_dv(
-        self,
-        spark: SparkSession,
-        predicate: str,
-        primed: tuple[int, dict] | None = None,
-    ) -> dict:
-        """The format-version 3 DELETE body (round 14): matched row
-        ordinals land in a PUFFIN deletion-vector file — v3's native
-        delete shape (v3 forbids new position-delete files). Per the
-        spec's one-DV-per-file rule, the commit REPLACES each touched
-        file's vector with the superset union and re-records untouched
-        files' vectors (their bytes stay where they are — only the
-        manifest entries move into the new DV manifest). O(deleted
-        rows) committed, zero data rewrite, zero row-id churn — the
-        one mutation shape whose v3 row lineage is trivially correct,
-        because no surviving row moves."""
-        from pyspark.sql import functions as F
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to "
-                    "delete from"
-                )
-            rdr = self.reader()
-            data, pos_d, eq_d, dvs = self._mor_scope(rdr, dv_writer=True)
-            if not data:
-                return {"version": None, "rows_deleted": 0,
-                        "delete_files": 0}
-            old_map = rdr._dv_positions_map(dvs)
-            live = self._live_identity(spark, data, pos_d, eq_d, rdr)
-            if old_map:
-                dv_dels = spark.createDataFrame(
-                    [(u, int(p)) for u, ps in old_map.items()
-                     for p in ps],
-                    "__uri string, __pos long",
-                    verifySchema=False,  # (str, int) by construction
-                )
-                live = live.join(
-                    F.broadcast(dv_dels), ["__uri", "__pos"], "left_anti"
-                )
-            matched = (
-                live.where(F.expr(predicate))
-                .select("__uri", "__pos").collect()
-            )
-            if not matched:
-                return {"version": None, "rows_deleted": 0,
-                        "delete_files": 0}
-            touched: dict[str, set[int]] = {}
-            for r in matched:
-                touched.setdefault(r["__uri"], set()).add(int(r["__pos"]))
-            new_dvs = {
-                u: sorted(set(old_map.get(u, [])) | ps)
-                for u, ps in touched.items()
-            }
-            snap_id = self._publish_mor_dv(
-                base_v, cur, rdr, dvs, new_dvs, old_map,
-                {"deleted-records": str(len(matched)),
-                 "added-delete-files": "1"},
-            )
-            return {"version": snap_id,
-                    "rows_deleted": len(matched),
-                    "delete_files": 1}
-
-        return retry_commit("iceberg v3 dv delete", attempt)
 
     def _publish_mor_dv(
         self,
@@ -2328,354 +2261,6 @@ class IcebergTableWriter:
             base_v, cur, dict(cur),
             {"operation": operation, **extra_summary}, manifests,
         )
-
-    def _update_mor_dv(
-        self,
-        spark: SparkSession,
-        assignments: dict[str, str],
-        pred: str,
-        primed: tuple[int, dict] | None = None,
-    ) -> dict:
-        """The format-version 3 UPDATE body (round 14): preimage rows
-        get DELETION-VECTORED in place (merged superset vectors, the
-        same machinery as the v3 DELETE) and ONLY the postimages stage
-        as new files — with row lineage PRESERVED: each postimage
-        carries its row's materialized ``_row_id`` (the spec: updated
-        rows keep their identity) and a NULL
-        ``_last_updated_sequence_number``, which inherits the new
-        file's data sequence number — i.e. "this row last changed in
-        this commit" — without knowing the publish-time sequence in
-        advance (race-proof by construction). Rows from lineage-less
-        pre-upgrade files stage with null ids and inherit fresh ones,
-        the spec's treatment. O(changed rows) committed, zero data
-        rewrite of untouched rows."""
-        from pyspark.sql import functions as F
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to update"
-                )
-            rdr = self.reader()
-            data, pos_d, eq_d, dvs = self._mor_scope(rdr, dv_writer=True)
-            if not data:
-                return {"version": None, "rows_updated": 0,
-                        "delete_files": 0}
-            old_map = rdr._dv_positions_map(dvs)
-            live = self._live_identity(
-                spark, data, pos_d, eq_d, rdr,
-                lineage=rdr._first_row_ids(None),
-            )
-            if old_map:
-                dv_dels = spark.createDataFrame(
-                    [(u, int(p)) for u, ps in old_map.items()
-                     for p in ps],
-                    "__uri string, __pos long",
-                    verifySchema=False,  # (str, int) by construction
-                )
-                live = live.join(
-                    F.broadcast(dv_dels), ["__uri", "__pos"], "left_anti"
-                )
-            table_cols = [
-                c for c in live.columns
-                if c not in ("__uri", "__pos", "_row_id",
-                             "_last_updated_sequence_number")
-            ]
-            unknown = [c for c in assignments if c not in table_cols]
-            if unknown:
-                raise ValueError(
-                    f"UPDATE assigns unknown column(s) {unknown} — the "
-                    "table schema is pinned"
-                )
-            # lazy ckpt + collect (round 15): the pairs collect is the
-            # action that materializes the matched-rows checkpoint, so
-            # the predicate scan + MoR anti-joins run ONCE instead of
-            # twice (eager ckpt job, then a separate collect job); the
-            # postimage staging below reads the checkpointed rows.
-            matched = live.where(F.expr(pred)).localCheckpoint(eager=False)
-            pairs = matched.select("__uri", "__pos").collect()
-            if not pairs:
-                return {"version": None, "rows_updated": 0,
-                        "delete_files": 0}
-            touched: dict[str, set[int]] = {}
-            for r in pairs:
-                touched.setdefault(r["__uri"], set()).add(int(r["__pos"]))
-            new_dvs = {
-                u: sorted(set(old_map.get(u, [])) | ps)
-                for u, ps in touched.items()
-            }
-            post = matched.select(
-                *[
-                    F.expr(assignments[c])
-                    .cast(matched.schema[c].dataType).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in table_cols
-                ],
-                F.col("_row_id"),
-                F.lit(None).cast("long").alias(
-                    "_last_updated_sequence_number"
-                ),
-            )
-            data_staged: list = []
-            try:
-                data_staged = self._stage(
-                    post,
-                    ice_fields=self._cur_fields(cur) + _LINEAGE_FIELDS,
-                )
-                snap_id = self._publish_mor_dv(
-                    base_v, cur, rdr, dvs, new_dvs, old_map,
-                    {"updated-records": str(len(pairs)),
-                     "added-delete-files": "1"},
-                    staged=data_staged, operation="overwrite",
-                )
-                return {"version": snap_id,
-                        "rows_updated": len(pairs),
-                        "delete_files": 1}
-            except BaseException:
-                self._unstage(data_staged)
-                raise
-
-        return retry_commit("iceberg v3 dv update", attempt)
-
-    def _merge_mor_dv(
-        self,
-        spark: SparkSession,
-        source,
-        cond: str,
-        assignments: dict[str, str] | None,
-        insert_exprs: list[str] | None,
-        target_alias: str,
-        source_alias: str,
-        delete_matched: bool,
-        primed: tuple[int, dict] | None = None,
-    ) -> dict:
-        """The format-version 3 MERGE body (round 14): matched target
-        rows deletion-vector in place (merged superset vectors),
-        THEN-UPDATE postimages stage with their PRESERVED ``_row_id``
-        and a null last-updated slot (inherits the commit's sequence
-        number), THEN-DELETE stages nothing, NOT-MATCHED inserts stage
-        without lineage columns — new rows inherit fresh ids from the
-        staged file's reserved range. One atomic snapshot; the same
-        multi-match refusal as every other MERGE path."""
-        from pyspark.sql import functions as F
-
-        cond_col = F.expr(cond)
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to "
-                    "merge into"
-                )
-            rdr = self.reader()
-            data, pos_d, eq_d, dvs = self._mor_scope(rdr, dv_writer=True)
-            old_map = rdr._dv_positions_map(dvs)
-            tgt = None
-            if data:
-                tgt = self._live_identity(
-                    spark, data, pos_d, eq_d, rdr,
-                    lineage=rdr._first_row_ids(None),
-                )
-                if old_map:
-                    dv_dels = spark.createDataFrame(
-                        [(u, int(p)) for u, ps in old_map.items()
-                         for p in ps],
-                        "__uri string, __pos long",
-                        verifySchema=False,  # (str, int) by construction
-                    )
-                    tgt = tgt.join(
-                        F.broadcast(dv_dels), ["__uri", "__pos"],
-                        "left_anti",
-                    )
-                # lazy: the first consumer (the matched-join stats
-                # collect or the unmatched-insert staging) materializes
-                tgt = tgt.localCheckpoint(eager=False)
-            table_cols = [
-                c for c in (tgt.columns if tgt is not None else [])
-                if c not in ("__uri", "__pos", "_row_id",
-                             "_last_updated_sequence_number")
-            ]
-            new_dvs: dict[str, list[int]] = {}
-            matched = 0
-            data_staged: list = []
-            try:
-                if (assignments or delete_matched) and tgt is not None:
-                    joined = tgt.alias(target_alias).join(
-                        source.alias(source_alias), cond_col, "inner"
-                    ).localCheckpoint(eager=False)  # stats collect materializes
-                    st_row = joined.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_distinct(
-                            F.col("__uri"), F.col("__pos")
-                        ).alias("d"),
-                    ).collect()[0]
-                    n_join, matched = int(st_row["n"]), int(st_row["d"])
-                    if n_join > matched and assignments:
-                        raise ValueError(
-                            f"MERGE: {n_join - matched} target row(s) "
-                            "matched multiple source rows — the "
-                            "rewrite would duplicate them; deduplicate "
-                            "the source on the merge key first"
-                        )
-                    if matched:
-                        touched: dict[str, set[int]] = {}
-                        for r in joined.select(
-                            "__uri", "__pos"
-                        ).dropDuplicates().collect():
-                            touched.setdefault(
-                                r["__uri"], set()
-                            ).add(int(r["__pos"]))
-                        new_dvs = {
-                            u: sorted(set(old_map.get(u, [])) | ps)
-                            for u, ps in touched.items()
-                        }
-                        if assignments:
-                            post = joined.select(
-                                *[
-                                    F.expr(assignments[c])
-                                    .cast(tgt.schema[c].dataType)
-                                    .alias(c)
-                                    if c in assignments
-                                    else F.col(f"{target_alias}.{c}")
-                                    for c in table_cols
-                                ],
-                                F.col(f"{target_alias}._row_id"),
-                                F.lit(None).cast("long").alias(
-                                    "_last_updated_sequence_number"
-                                ),
-                            )
-                            data_staged += self._stage_nonempty(
-                                post,
-                                ice_fields=self._cur_fields(cur)
-                                + _LINEAGE_FIELDS,
-                            )
-                rows_inserted = 0
-                if insert_exprs is not None:
-                    tbl_schema = self.table_schema()
-                    if tbl_schema is None:
-                        raise ValueError(
-                            "MERGE: the table schema cannot be mapped "
-                            "to Spark types, so INSERT VALUES has no "
-                            "column shape to project into — use a "
-                            "full Iceberg client"
-                        )
-                    cols = [
-                        (f.name, f.dataType) for f in tbl_schema.fields
-                    ]
-                    if len(insert_exprs) != len(cols):
-                        raise ValueError(
-                            f"MERGE: INSERT VALUES has "
-                            f"{len(insert_exprs)} expressions for "
-                            f"{len(cols)} target columns"
-                        )
-                    ins_src = (
-                        source.alias(source_alias).join(
-                            tgt.alias(target_alias), cond_col,
-                            "left_anti"
-                        )
-                        if tgt is not None
-                        else source.alias(source_alias)
-                    )
-                    ins = ins_src.select(
-                        *[
-                            F.expr(e).cast(t_).alias(c)
-                            for e, (c, t_) in zip(insert_exprs, cols)
-                        ]
-                    )
-                    ins_staged = self._stage_nonempty(
-                        ins, ice_fields=self._cur_fields(cur)
-                    )
-                    rows_inserted = sum(
-                        r for _p, r, _b, _pv in ins_staged
-                    )
-                    if rows_inserted == 0:
-                        self._unstage(ins_staged)
-                    else:
-                        data_staged += ins_staged
-                if not new_dvs and not data_staged:
-                    return {"version": None, "rows_matched": 0,
-                            "rows_inserted": 0, "delete_files": 0}
-                snap_id = self._publish_mor_dv(
-                    base_v, cur, rdr, dvs, new_dvs, old_map,
-                    {"updated-records": str(
-                        matched if assignments else 0),
-                     "deleted-records": str(
-                         matched if delete_matched else 0),
-                     "added-records": str(rows_inserted)},
-                    staged=data_staged, operation="overwrite",
-                )
-                return {"version": snap_id, "rows_matched": matched,
-                        "rows_inserted": rows_inserted,
-                        "delete_files": 1 if new_dvs else 0}
-            except BaseException:
-                self._unstage(data_staged)
-                raise
-
-        return retry_commit("iceberg v3 dv merge", attempt)
-
-    def _delete_mor(
-        self,
-        spark: SparkSession,
-        predicate: str,
-        primed: tuple[int, dict] | None = None,
-    ) -> dict:
-        """The merge-on-read DELETE body: matched (uri, pos) pairs land
-        in a standard POSITION-DELETE parquet file (the spec's
-        file_path/pos columns, sorted) under a content=1 delete
-        manifest — O(deleted rows) committed, zero rewrite, readable
-        by any v2 client (and by this repo's reader, which was
-        validated on hand-written position-delete fixtures — two-path
-        proof)."""
-        from pyspark.sql import functions as F
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None  # retries re-read the advanced head
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to "
-                    "delete from"
-                )
-            rdr = self.reader()
-            data, pos_d, eq_d, _dvs = self._mor_scope(rdr)
-            if not data:
-                return {"version": None, "rows_deleted": 0,
-                        "delete_files": 0}
-            matched = self._probe_mor_matches(
-                spark, data, pos_d, predicate, eq_d, rdr
-            ).select(
-                F.col("__uri").alias("file_path"),
-                F.col("__pos").cast("long").alias("pos"),
-            ).sort("file_path", "pos").coalesce(1)
-            del_staged = self._stage_nonempty(
-                matched, ice_fields=_POS_DELETE_FIELDS
-            )
-            n = sum(r for _p, r, _b, _pv in del_staged)
-            if n == 0:
-                self._unstage(del_staged)
-                return {"version": None, "rows_deleted": 0,
-                        "delete_files": 0}
-            try:
-                snap_id = self._publish_mor(
-                    base_v, cur, rdr, del_staged, [], "delete",
-                    {"deleted-records": str(n),
-                     "added-delete-files": str(len(del_staged))},
-                )
-                return {"version": snap_id, "rows_deleted": n,
-                        "delete_files": len(del_staged)}
-            except ConcurrentWriteError:
-                self._unstage(del_staged)
-                raise
-
-        return retry_commit("iceberg mor delete", attempt)
 
     def upsert_by_key(
         self,
@@ -2881,14 +2466,125 @@ class IcebergTableWriter:
 
         return retry_commit("iceberg upsert_by_key", attempt)
 
-    def _resolved_mode(self, cur: dict, mode: str, op: str) -> str:
-        """'auto' honors the table's own write.<op>.mode property
-        (Iceberg's knob for choosing merge-on-read), defaulting to
-        copy-on-write — the spec's default."""
-        if mode != "auto":
-            return mode
-        prop = (cur.get("properties") or {}).get(f"write.{op}.mode", "")
-        return "mor" if str(prop) == "merge-on-read" else "cow"
+    def _how(self, cur: dict | None, mode: str, op: str) -> str:
+        """The encoder a row-level ``op`` takes on this table:
+        format-version 3 writes deletion vectors (``dv``) — v3's native
+        shape, whatever the mode knob says (copy-on-write would rewrite
+        rows and lose their lineage; an explicit ``mode='cow'`` reaches
+        that gate's own refusal); otherwise ``mode``, where ``auto``
+        honors the table's ``write.<op>.mode`` property."""
+        if cur is None:
+            return "cow"  # the attempt refuses: nothing to mutate
+        if self._fv_of(cur) >= 3 and mode != "cow":
+            return "dv"
+        if mode == "auto":
+            # Iceberg's knob for choosing merge-on-read; copy-on-write
+            # is the spec's default
+            prop = (cur.get("properties") or {}).get(f"write.{op}.mode")
+            mode = "mor" if str(prop) == "merge-on-read" else "cow"
+        return "mor" if mode == "mor" else "cow"
+
+    def _mutate(self, op: str, how: str, primed: tuple[int, dict | None],
+                body: Callable[..., dict]) -> dict:
+        """Run one row-level mutation under ``retry_commit``: each
+        attempt pins a head (the first one the head ``how`` was chosen
+        on), gates it for its encoder and re-plans from scratch on a
+        lost race. ``body(base_v, cur, rdr, scope, staged)`` records
+        every file it stages in ``staged``; ANY exception unstages
+        them — nothing reclaims a data/ file no manifest references."""
+        heads = [primed]
+
+        def attempt() -> dict:
+            base_v, cur = heads.pop() if heads else self._current()
+            if cur is None:
+                raise ValueError(
+                    f"iceberg table {self.path} has no commits to "
+                    f"{_VERB_OBJECT[op]}"
+                )
+            rdr = self.reader()
+            staged = _Staged()
+            try:
+                return body(base_v, cur, rdr, self._scope(rdr, how), staged)
+            except BaseException:
+                self._unstage(staged.data)
+                self._unstage(staged.deletes)
+                raise
+
+        return retry_commit(f"{_RETRY_NAME[how]} {op}", attempt)
+
+    def _stage_rows(self, how: str, sc: _Scope, cur: dict, df,
+                    lineage: bool = False):
+        """Stage new data rows for ``how``: copy-on-write restages
+        under the default partition spec; the delete-file encoders
+        stage non-empty files only (v3 postimages carry their
+        lineage columns under the reserved field ids)."""
+        fields = self._cur_fields(cur)
+        if how == "cow":
+            return self._stage(df, spec_parts=sc.spec_parts or None,
+                               ice_fields=fields)
+        return self._stage_nonempty(
+            df, ice_fields=fields + (_LINEAGE_FIELDS if lineage else [])
+        )
+
+    def _stage_deletes(self, how: str, sc: _Scope, positions,
+                       staged: _Staged) -> int:
+        """Encode matched rows' (``__lp``, ``__pos``) addresses:
+        ``mor`` stages one sorted standard POSITION-DELETE parquet
+        file (the spec's file_path/pos columns and reserved field
+        ids); ``dv`` collects the positions and unions each touched
+        file's live vector with them (the spec's one-DV-per-file
+        rule). Returns the rows deleted."""
+        from pyspark.sql import functions as F
+
+        if how == "mor":
+            staged.deletes = self._stage_nonempty(
+                positions.select(
+                    F.col(mutation.FILE).alias("file_path"),
+                    F.col(mutation.POS).cast("long").alias("pos"),
+                ).sort("file_path", "pos").coalesce(1),
+                ice_fields=_POS_DELETE_FIELDS,
+            )
+            return sum(r for _p, r, _b, _pv in staged.deletes)
+        touched: dict[str, set[int]] = {}
+        for r in positions.collect():
+            touched.setdefault(r[mutation.FILE], set()).add(
+                int(r[mutation.POS]))
+        staged.new_dvs = {
+            u: sorted(set(sc.old_dv.get(u, [])) | ps)
+            for u, ps in touched.items()
+        }
+        return sum(len(ps) for ps in touched.values())
+
+    def _publish_rows(self, how: str, base_v: int, cur: dict,
+                      rdr: IcebergTable, sc: _Scope, staged: _Staged,
+                      operation: str, summary: dict[str, str]) -> int:
+        """Publish a delete-file snapshot: position deletes + data
+        (``_publish_mor``) or deletion vectors + data
+        (``_publish_mor_dv``)."""
+        if how == "mor":
+            return self._publish_mor(base_v, cur, rdr, staged.deletes,
+                                     staged.data, operation, summary)
+        return self._publish_mor_dv(
+            base_v, cur, rdr, sc.dvs, staged.new_dvs, sc.old_dv, summary,
+            staged=staged.data, operation=operation,
+        )
+
+    @staticmethod
+    def _lineage_carry(prefix: str | None = None) -> list:
+        """The columns a v3 postimage carries: its row's ``_row_id``
+        (the spec: updated rows keep their identity) and a NULL
+        ``_last_updated_sequence_number``, which inherits the new
+        file's data sequence number — "this row last changed in this
+        commit" — without knowing the publish-time sequence in advance
+        (race-proof by construction). Rows from lineage-less
+        pre-upgrade files stage with null ids and inherit fresh ones."""
+        from pyspark.sql import functions as F
+
+        rid = f"{prefix}._row_id" if prefix else "_row_id"
+        return [
+            F.col(rid),
+            F.lit(None).cast("long").alias("_last_updated_sequence_number"),
+        ]
 
     def delete(
         self,
@@ -2896,177 +2592,71 @@ class IcebergTableWriter:
         predicate: str,
         mode: str = "auto",
     ) -> dict:
-        """Row-level ``DELETE FROM … WHERE predicate``, two physical
-        strategies behind one semantic (mirroring the Delta twin's
-        cow/mor split):
+        """Row-level ``DELETE FROM … WHERE predicate`` (NULL keeps the
+        row — SQL semantics):
 
-        - ``cow``: probe → footer-count classification (fully-matching
+        - ``cow``: a probe counts matches per file; fully-matching
           files become DELETED entries with zero rewrite I/O, partial
-          files rewrite minus matches — NULL keeps the row) → manifest
-          surgery → create-exclusive metadata publish.
-        - ``mor``: matched row ordinals land in a standard v2
-          POSITION-DELETE file — O(deleted rows), zero rewrite; see
-          ``_delete_mor``. ``mode='auto'`` honors the table property
-          ``write.delete.mode=merge-on-read``.
+          files rewrite minus the matches → manifest surgery →
+          create-exclusive metadata publish.
+        - ``mor`` (``mode='mor'``, or ``auto`` under the table property
+          ``write.delete.mode=merge-on-read``): matched row ordinals
+          land in a standard v2 POSITION-DELETE file — O(deleted rows)
+          committed, zero rewrite, readable by any v2 client.
+        - format version 3: matched ordinals land in a Puffin DELETION
+          VECTOR (v3 forbids new position-delete files); the commit
+          replaces each touched file's vector with the superset union
+          and re-records untouched vectors — zero data rewrite, zero
+          row-id churn.
 
         Time travel to prior snapshots still reads the pre-delete
         content (their manifest trees are untouched)."""
-        import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
+        primed = self._current()
+        how = self._how(primed[1], mode, "delete")
+        none = {"version": None, "rows_deleted": 0, **(
+            {"files_removed": 0, "files_rewritten": 0}
+            if how == "cow" else {"delete_files": 0}
+        )}
 
-        primed: tuple[int, dict] | None = self._current()
-        if primed[1] is not None and self._fv_of(primed[1]) >= 3 \
-                and mode != "cow":
-            # format-version 3: deletes write deletion vectors — v3's
-            # native shape — regardless of the mode knob (COW would
-            # rewrite rows and lose lineage; an explicit mode='cow'
-            # surfaces that gate's own refusal)
-            return self._delete_mor_dv(spark, predicate, primed=primed)
-        if primed[1] is not None and self._resolved_mode(
-            primed[1], mode, "delete"
-        ) == "mor":
-            return self._delete_mor(spark, predicate, primed=primed)
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None  # retries re-read the advanced head
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to "
-                    "delete from"
+        def body(base_v, cur, rdr, sc, staged):
+            if not sc.data:
+                return none
+            if how == "cow":
+                counts = mutation.match_counts(
+                    self._scan(spark, rdr, sc, how, lp=True), sc.live,
+                    predicate,
                 )
-            rdr = self.reader()
-            data, spec_parts = self._cow_scope(rdr)
-            if not data:
-                return {"version": None, "rows_deleted": 0,
-                        "files_removed": 0, "files_rewritten": 0}
-            by_raw = self._probe(
-                spark, [p for p, _u, _s in data], predicate
-            )
-            if not by_raw:
-                return {"version": None, "rows_deleted": 0,
-                        "files_removed": 0, "files_rewritten": 0}
-            matched = sum(by_raw.values())
-            partial = sorted(
-                p for p, n in by_raw.items()
-                if n != pq.ParquetFile(p).metadata.num_rows
-            )
-            staged: list[tuple[str, int, int, dict]] = []
-            if partial:
-                keep = spark.read.parquet(*partial).where(
-                    ~F.coalesce(
-                        F.expr(predicate).cast("boolean"), F.lit(False)
-                    )
-                )
-                staged = self._stage(
-                    keep, spec_parts=spec_parts or None,
-                    ice_fields=self._cur_fields(cur),
-                )
-            try:
+                if not counts:
+                    return none
+                _full, partial = mutation.split_files(counts, _footer_rows)
+                if partial:
+                    staged.data = self._stage_rows(
+                        how, sc, cur, mutation.survivors(
+                            self._scan(spark, rdr, sc, how, partial),
+                            predicate,
+                        ))
+                n = sum(counts.values())
                 snap_id = self._publish_mutation(
-                    base_v, cur, rdr, set(by_raw), staged, "delete",
-                    {"deleted-records": str(matched)},
-                    spec_parts=spec_parts,
+                    base_v, cur, rdr, set(counts), staged.data, "delete",
+                    {"deleted-records": str(n)}, spec_parts=sc.spec_parts,
                 )
-                return {
-                    "version": snap_id,
-                    "rows_deleted": matched,
-                    "files_removed": len(by_raw),
-                    "files_rewritten": len(partial),
-                }
-            except ConcurrentWriteError:
-                self._unstage(staged)
-                raise
-
-        return retry_commit("iceberg delete", attempt)
-
-    def _update_mor(
-        self,
-        spark: SparkSession,
-        assignments: dict[str, str],
-        pred: str,
-        primed: tuple[int, dict] | None = None,
-    ) -> dict:
-        """Merge-on-read UPDATE: preimage positions land in a standard
-        POSITION-DELETE file and ONLY the postimages stage as new data
-        files — O(changed rows) per commit, both halves atomic in one
-        snapshot (the iceberg twin of the Delta DV update)."""
-        from pyspark.sql import functions as F
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None  # retries re-read the advanced head
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to update"
-                )
-            rdr = self.reader()
-            data, pos_d, eq_d, _dvs = self._mor_scope(rdr)
-            if not data:
-                return {"version": None, "rows_updated": 0,
-                        "delete_files": 0}
-            sample = spark.read.parquet(*[p for p, _u, _s in data])
-            known = set(sample.columns)
-            unknown = [c for c in assignments if c not in known]
-            if unknown:
-                raise ValueError(
-                    f"UPDATE assigns unknown column(s) {unknown} — the "
-                    "table schema is pinned"
-                )
-            hit = self._probe_mor_matches(
-                spark, data, pos_d, pred, eq_d, rdr
+                return {"version": snap_id, "rows_deleted": n,
+                        "files_removed": len(counts),
+                        "files_rewritten": len(partial)}
+            n = self._stage_deletes(how, sc, mutation.positions(
+                mutation.matches(self._scan(spark, rdr, sc, how), predicate)
+            ), staged)
+            if not n:
+                return none
+            snap_id = self._publish_rows(
+                how, base_v, cur, rdr, sc, staged, "delete",
+                {"deleted-records": str(n),
+                 "added-delete-files": str(staged.delete_files)},
             )
-            # probe once, use twice; lazy — the delete-file staging
-            # write is the materializing action
-            matched = hit.localCheckpoint(eager=False)
-            dels = matched.select(
-                F.col("__uri").alias("file_path"),
-                F.col("__pos").cast("long").alias("pos"),
-            ).sort("file_path", "pos").coalesce(1)
-            post = matched.select(
-                *[
-                    F.expr(assignments[c])
-                    .cast(sample.schema[c].dataType).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in sample.columns
-                ]
-            )
-            del_staged = self._stage_nonempty(
-                dels, ice_fields=_POS_DELETE_FIELDS
-            )
-            n = sum(r for _p, r, _b, _pv in del_staged)
-            if n == 0:
-                self._unstage(del_staged)
-                return {"version": None, "rows_updated": 0,
-                        "delete_files": 0}
-            data_staged: list = []
-            try:
-                # staging the postimages can itself raise (a runtime
-                # error evaluating an assignment expression at write
-                # time) — the position-delete file is ALREADY staged
-                # by then, so any exception past this point must
-                # unstage both lists or the files leak forever
-                # (nothing reclaims data/ files no manifest references)
-                data_staged = self._stage_nonempty(
-                    post, ice_fields=self._cur_fields(cur)
-                )
-                snap_id = self._publish_mor(
-                    base_v, cur, rdr, del_staged, data_staged,
-                    "overwrite",
-                    {"updated-records": str(n),
-                     "added-delete-files": str(len(del_staged))},
-                )
-                return {"version": snap_id, "rows_updated": n,
-                        "delete_files": len(del_staged)}
-            except BaseException:
-                self._unstage(del_staged)
-                self._unstage(data_staged)
-                raise
+            return {"version": snap_id, "rows_deleted": n,
+                    "delete_files": staged.delete_files}
 
-        return retry_commit("iceberg mor update", attempt)
+        return self._mutate("delete", how, primed, body)
 
     def update(
         self,
@@ -3075,250 +2665,76 @@ class IcebergTableWriter:
         predicate: str | None = None,
         mode: str = "auto",
     ) -> dict:
-        """Row-level ``UPDATE … SET col = expr [WHERE predicate]`` as
-        one copy-on-write snapshot: affected files rewrite through a
-        CASE per assigned column cast back to the declared type;
-        untouched files' manifest entries survive verbatim.
-        ``mode='mor'`` (or ``auto`` under the table property
-        ``write.update.mode=merge-on-read``) position-deletes the
-        preimages and stages only the postimages — see
-        ``_update_mor``."""
-        import pyarrow.parquet as pq  # noqa: F401 — symmetry w/ delete
-        from pyspark.sql import functions as F
+        """Row-level ``UPDATE … SET col = expr [WHERE predicate]``;
+        assigned values cast back to the declared type:
 
+        - ``cow``: affected files rewrite through a CASE per assigned
+          column; untouched files' manifest entries survive verbatim.
+        - ``mor`` (``mode='mor'``, or ``auto`` under
+          ``write.update.mode=merge-on-read``): preimage positions land
+          in a POSITION-DELETE file and ONLY the postimages stage as
+          new data files — O(changed rows), both halves atomic in one
+          snapshot.
+        - format version 3: preimages get DELETION-VECTORED and the
+          postimages stage with their row lineage PRESERVED
+          (``_lineage_carry``).
+
+        Assigned columns must exist in the pinned table schema."""
         pred = predicate if predicate is not None else "TRUE"
-        primed: tuple[int, dict] | None = self._current()
-        if primed[1] is not None and self._fv_of(primed[1]) >= 3 \
-                and mode != "cow":
-            # format-version 3 (round 14): preimages deletion-vector,
-            # postimages restage with PRESERVED _row_id — the
-            # lineage-correct v3 update regardless of the mode knob
-            # (an explicit mode='cow' surfaces the COW gate's refusal)
-            return self._update_mor_dv(spark, assignments, pred, primed=primed)
-        if primed[1] is not None and self._resolved_mode(
-            primed[1], mode, "update"
-        ) == "mor":
-            return self._update_mor(spark, assignments, pred, primed=primed)
+        primed = self._current()
+        how = self._how(primed[1], mode, "update")
+        none = {"version": None, "rows_updated": 0,
+                ("files_rewritten" if how == "cow" else "delete_files"): 0}
 
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None  # retries re-read the advanced head
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to update"
+        def body(base_v, cur, rdr, sc, staged):
+            if not sc.data:
+                return none
+            mutation.check_assigned(
+                assignments, [f["name"] for f in self._cur_fields(cur)]
+            )
+            if how == "cow":
+                counts = mutation.match_counts(
+                    self._scan(spark, rdr, sc, how, lp=True), sc.live, pred
                 )
-            rdr = self.reader()
-            data, spec_parts = self._cow_scope(rdr)
-            if not data:
-                return {"version": None, "rows_updated": 0,
-                        "files_rewritten": 0}
-            sample = spark.read.parquet(*[p for p, _u, _s in data])
-            known = set(sample.columns)
-            unknown = [c for c in assignments if c not in known]
-            if unknown:
-                raise ValueError(
-                    f"UPDATE assigns unknown column(s) {unknown} — the "
-                    "table schema is pinned"
-                )
-            by_raw = self._probe(
-                spark, [p for p, _u, _s in data], pred
-            )
-            if not by_raw:
-                return {"version": None, "rows_updated": 0,
-                        "files_rewritten": 0}
-            matched = sum(by_raw.values())
-            affected = sorted(by_raw)
-            df = spark.read.parquet(*affected)
-            cond = F.coalesce(F.expr(pred).cast("boolean"), F.lit(False))
-            out = df.select(
-                *[
-                    F.when(cond, F.expr(assignments[c]))
-                    .otherwise(F.col(c))
-                    .cast(df.schema[c].dataType)
-                    .alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in df.columns
-                ]
-            )
-            staged = self._stage(
-                out, spec_parts=spec_parts or None,
-                ice_fields=self._cur_fields(cur),
-            )
-            try:
+                if not counts:
+                    return none
+                affected = sorted(counts)
+                staged.data = self._stage_rows(how, sc, cur, mutation.rewrite(
+                    self._scan(spark, rdr, sc, how, affected),
+                    assignments, pred,
+                ))
+                n = sum(counts.values())
                 snap_id = self._publish_mutation(
-                    base_v, cur, rdr, set(affected), staged, "overwrite",
-                    {"updated-records": str(matched)},
-                    spec_parts=spec_parts,
+                    base_v, cur, rdr, set(affected), staged.data,
+                    "overwrite", {"updated-records": str(n)},
+                    spec_parts=sc.spec_parts,
                 )
-                return {
-                    "version": snap_id,
-                    "rows_updated": matched,
-                    "files_rewritten": len(affected),
-                }
-            except ConcurrentWriteError:
-                self._unstage(staged)
-                raise
-
-        return retry_commit("iceberg update", attempt)
-
-    def _merge_mor(
-        self,
-        spark: SparkSession,
-        source,
-        cond: str,
-        assignments: dict[str, str] | None,
-        insert_exprs: list[str] | None,
-        target_alias: str,
-        source_alias: str,
-        delete_matched: bool,
-        primed: tuple[int, dict] | None = None,
-    ) -> dict:
-        """Merge-on-read MERGE: matched target positions land in one
-        POSITION-DELETE file, and only the POSTIMAGES (plus the
-        not-matched inserts) stage as new data files — O(changed rows)
-        per commit, one atomic snapshot. Multi-matching sources refuse
-        for UPDATE merges (duplicating rows is silent corruption;
-        counted in the same agg that counts matches) and are harmless
-        for DELETE merges (dropping a row once or thrice is the same
-        drop — the delete set deduplicates)."""
-        from pyspark.sql import functions as F
-
-        cond_col = F.expr(cond)
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None  # retries re-read the advanced head
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to "
-                    "merge into"
-                )
-            rdr = self.reader()
-            data, pos_d, eq_d, _dvs = self._mor_scope(rdr)
-            tgt = (
-                self._live_identity(
-                    spark, data, pos_d, eq_d, rdr
-                ).localCheckpoint()
-                if data else None
+                return {"version": snap_id, "rows_updated": n,
+                        "files_rewritten": len(affected)}
+            lineage = how == "dv"
+            # probe once, use twice; lazy — the position staging or
+            # collect below is the materializing action
+            matched = mutation.matches(
+                self._scan(spark, rdr, sc, how, lineage=lineage), pred
+            ).localCheckpoint(eager=False)
+            n = self._stage_deletes(how, sc, mutation.positions(matched),
+                                    staged)
+            if not n:
+                return none
+            staged.data = self._stage_rows(how, sc, cur, mutation.postimages(
+                matched, assignments,
+                columns=_table_columns(matched),
+                carry=self._lineage_carry() if lineage else (),
+            ), lineage=lineage)
+            snap_id = self._publish_rows(
+                how, base_v, cur, rdr, sc, staged, "overwrite",
+                {"updated-records": str(n),
+                 "added-delete-files": str(staged.delete_files)},
             )
-            sample = (
-                spark.read.parquet(*[p for p, _u, _s in data])
-                if data else None
-            )
-            del_staged: list = []
-            data_staged: list = []
-            matched = 0
-            # ANY exception past the first staging call must unstage
-            # everything staged so far (an AnalysisException staging
-            # postimages/inserts lands AFTER the delete file is in
-            # data/) — the same never-leak rule as every other path
-            try:
-                if (assignments or delete_matched) and tgt is not None:
-                    joined = tgt.alias(target_alias).join(
-                        source.alias(source_alias), cond_col, "inner"
-                    ).localCheckpoint(eager=False)  # stats collect materializes
-                    st_row = joined.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_distinct(
-                            F.col("__uri"), F.col("__pos")
-                        ).alias("d"),
-                    ).collect()[0]
-                    n_join, matched = int(st_row["n"]), int(st_row["d"])
-                    if n_join > matched and assignments:
-                        raise ValueError(
-                            f"MERGE: {n_join - matched} target row(s) "
-                            "matched multiple source rows — the rewrite "
-                            "would duplicate them; deduplicate the "
-                            "source on the merge key first"
-                        )
-                    if matched:
-                        dels = joined.select(
-                            F.col("__uri").alias("file_path"),
-                            F.col("__pos").cast("long").alias("pos"),
-                        ).dropDuplicates().sort(
-                            "file_path", "pos"
-                        ).coalesce(1)
-                        del_staged = self._stage_nonempty(
-                            dels, ice_fields=_POS_DELETE_FIELDS
-                        )
-                        if assignments:
-                            post = joined.select(
-                                *[
-                                    F.expr(assignments[c])
-                                    .cast(sample.schema[c].dataType)
-                                    .alias(c)
-                                    if c in assignments
-                                    else F.col(f"{target_alias}.{c}")
-                                    for c in sample.columns
-                                ]
-                            )
-                            data_staged += self._stage_nonempty(
-                                post, ice_fields=self._cur_fields(cur)
-                            )
-                rows_inserted = 0
-                if insert_exprs is not None:
-                    tbl_schema = self.table_schema()
-                    if tbl_schema is None:
-                        raise ValueError(
-                            "MERGE: the table schema cannot be mapped "
-                            "to Spark types, so INSERT VALUES has no "
-                            "column shape to project into — use a full "
-                            "Iceberg client"
-                        )
-                    cols = [
-                        (f.name, f.dataType) for f in tbl_schema.fields
-                    ]
-                    if len(insert_exprs) != len(cols):
-                        raise ValueError(
-                            f"MERGE: INSERT VALUES has "
-                            f"{len(insert_exprs)} expressions for "
-                            f"{len(cols)} target columns"
-                        )
-                    ins_src = (
-                        source.alias(source_alias).join(
-                            tgt.alias(target_alias), cond_col,
-                            "left_anti"
-                        )
-                        if tgt is not None
-                        else source.alias(source_alias)
-                    )
-                    ins = ins_src.select(
-                        *[
-                            F.expr(e).cast(t_).alias(c)
-                            for e, (c, t_) in zip(insert_exprs, cols)
-                        ]
-                    )
-                    ins_staged = self._stage_nonempty(
-                        ins, ice_fields=self._cur_fields(cur)
-                    )
-                    rows_inserted = sum(
-                        r for _p, r, _b, _pv in ins_staged
-                    )
-                    if rows_inserted == 0:
-                        self._unstage(ins_staged)
-                    else:
-                        data_staged += ins_staged
-                if not del_staged and not data_staged:
-                    return {"version": None, "rows_matched": 0,
-                            "rows_inserted": 0, "delete_files": 0}
-                snap_id = self._publish_mor(
-                    base_v, cur, rdr, del_staged, data_staged,
-                    "overwrite",
-                    {"merged-records": str(matched),
-                     "added-delete-files": str(len(del_staged))},
-                )
-                return {"version": snap_id, "rows_matched": matched,
-                        "rows_inserted": rows_inserted,
-                        "delete_files": len(del_staged)}
-            except BaseException:
-                self._unstage(del_staged)
-                self._unstage(data_staged)
-                raise
+            return {"version": snap_id, "rows_updated": n,
+                    "delete_files": staged.delete_files}
 
-        return retry_commit("iceberg mor merge", attempt)
+        return self._mutate("update", how, primed, body)
 
     def merge(
         self,
@@ -3332,198 +2748,155 @@ class IcebergTableWriter:
         delete_matched: bool = False,
         mode: str = "auto",
     ) -> dict:
-        """``MERGE INTO`` as ONE copy-on-write snapshot — the iceberg
-        twin of ``DeltaTableWriter.merge`` (probe semi-join → rewrite
-        only reached files → anti-join inserts → one mutation
-        snapshot), with the same free multi-match refusal (a matched
-        rewrite preserves row count; staged footers disagreeing with
-        input footers IS the multi-match signal) and the same
-        ``delete_matched`` WHEN MATCHED THEN DELETE clause.
-        ``mode='mor'`` (or ``auto`` under the table property
-        ``write.merge.mode=merge-on-read``) position-deletes the
-        matched preimages instead — see ``_merge_mor``."""
-        import pyarrow.parquet as pq
+        """``MERGE INTO`` as ONE snapshot:
+
+        - ``cow``: a semi-join probe counts matched rows per file; only
+          reached files rewrite (THEN UPDATE through a marked left
+          join, with the free multi-match refusal: a matched rewrite
+          preserves row count, so staged footers disagreeing with the
+          input footers IS the signal; THEN DELETE drops fully-matching
+          files without rewrite I/O and rewrites partial ones via LEFT
+          ANTI).
+        - ``mor`` (``mode='mor'``, or ``auto`` under
+          ``write.merge.mode=merge-on-read``) and format version 3: one
+          inner join of the live rows with the source finds the
+          matched positions, which land in a position-delete file or a
+          deletion vector; THEN UPDATE postimages (v3: lineage kept)
+          stage from the same join. A source reaching a row twice
+          refuses for THEN UPDATE (counted in the same aggregate that
+          counts matches) and is harmless for THEN DELETE.
+
+        NOT MATCHED inserts anti-join the live rows and stage in the
+        same snapshot."""
+        mutation.check_merge_clauses(assignments, delete_matched,
+                                     insert_exprs)
+        primed = self._current()
+        how = self._how(primed[1], mode, "merge")
+        m = mutation.Merge(source, cond, target_alias, source_alias)
+        lineage = how == "dv"
+
+        def body(base_v, cur, rdr, sc, staged):
+            matched = rows_inserted = rewritten = 0
+            counts: dict[str, int] = {}
+            tgt = None
+            if sc.data:
+                tgt = self._scan(spark, rdr, sc, how, lp=True,
+                                 lineage=lineage)
+            if (assignments or delete_matched) and tgt is not None:
+                if how == "cow":
+                    counts = mutation.match_counts(tgt, sc.live, merge=m)
+                    matched = sum(counts.values())
+                    affected = sorted(counts)
+                    rewritten = len(affected)
+                    if affected and delete_matched:
+                        _full, partial = mutation.split_files(
+                            counts, _footer_rows)
+                        rewritten = len(partial)
+                        if partial:
+                            staged.data = self._stage_rows(
+                                how, sc, cur, mutation.survivors(
+                                    self._scan(spark, rdr, sc, how, partial),
+                                    merge=m,
+                                ))
+                    elif affected:
+                        staged.data = self._stage_rows(
+                            how, sc, cur, mutation.rewrite(
+                                self._scan(spark, rdr, sc, how, affected),
+                                assignments, merge=m,
+                            ))
+                        mutation.check_one_match(
+                            sum(r for _p, r, _b, _pv in staged.data)
+                            - sum(_footer_rows(p) for p in affected)
+                        )
+                else:
+                    # lazy: the match count below materializes it
+                    tgt = tgt.localCheckpoint(eager=False)
+                    joined, matched = mutation.merge_matches(
+                        tgt, m, refuse_multi=bool(assignments)
+                    )
+                    if matched:
+                        self._stage_deletes(
+                            how, sc, mutation.positions(joined, distinct=True),
+                            staged,
+                        )
+                        if assignments:
+                            staged.data = self._stage_rows(
+                                how, sc, cur, mutation.postimages(
+                                    joined, assignments, target=tgt,
+                                    columns=_table_columns(tgt), merge=m,
+                                    carry=self._lineage_carry(target_alias)
+                                    if lineage else (),
+                                ), lineage=lineage)
+            if insert_exprs is not None:
+                schema = _spark_schema(self._cur_fields(cur))
+                if schema is None:
+                    raise ValueError(
+                        "MERGE: the table schema cannot be mapped to "
+                        "Spark types, so the INSERT VALUES expressions "
+                        "have no column shape to project into — use a "
+                        "full Iceberg client"
+                    )
+                ins = self._stage_rows(how, sc, cur, mutation.merge_inserts(
+                    m, tgt, insert_exprs, schema.fields
+                ))
+                rows_inserted = sum(r for _p, r, _b, _pv in ins)
+                if rows_inserted == 0:
+                    self._unstage(ins)
+                else:
+                    staged.data = staged.data + ins
+            if how == "cow":
+                if not counts and not staged.data:
+                    return {"version": None, "rows_matched": 0,
+                            "rows_inserted": 0, "files_rewritten": 0}
+                snap_id = self._publish_mutation(
+                    base_v, cur, rdr, set(counts), staged.data,
+                    "overwrite", {"merged-records": str(matched)},
+                    spec_parts=sc.spec_parts,
+                )
+                return {"version": snap_id, "rows_matched": matched,
+                        "rows_inserted": rows_inserted,
+                        "files_rewritten": rewritten}
+            if not staged.deletes and not staged.new_dvs \
+                    and not staged.data:
+                return {"version": None, "rows_matched": 0,
+                        "rows_inserted": 0, "delete_files": 0}
+            summary = (
+                {"updated-records": str(matched if assignments else 0),
+                 "deleted-records": str(matched if delete_matched else 0),
+                 "added-records": str(rows_inserted)}
+                if lineage else
+                {"merged-records": str(matched),
+                 "added-delete-files": str(staged.delete_files)}
+            )
+            snap_id = self._publish_rows(how, base_v, cur, rdr, sc, staged,
+                                         "overwrite", summary)
+            return {"version": snap_id, "rows_matched": matched,
+                    "rows_inserted": rows_inserted,
+                    "delete_files": staged.delete_files}
+
+        return self._mutate("merge", how, primed, body)
+
+    def _scan(self, spark: SparkSession, rdr: IcebergTable, sc: _Scope,
+              how: str, files: list[str] | None = None, lp: bool = False,
+              lineage: bool = False):
+        """The live rows a mutation plans over. Copy-on-write tables
+        carry no delete files (``_cow_scope`` gates that), so their
+        ``files`` (default: every live one) read as plain parquet,
+        ``lp`` adding the planner's ``__lp`` (resolved path). The
+        delete-file encoders scan through ``_live_identity``."""
         from pyspark.sql import functions as F
 
-        if delete_matched and assignments:
-            raise ValueError(
-                "MERGE: WHEN MATCHED THEN DELETE and THEN UPDATE are "
-                "mutually exclusive in this dialect"
+        if how == "cow":
+            if files is None:
+                files = [p for p, _u, _s in sc.data]
+            df = spark.read.parquet(*files)
+            if not lp:
+                return df
+            return df.withColumn(
+                mutation.FILE,
+                mutation.local_path(F.col("_metadata.file_path")),
             )
-        if not assignments and not delete_matched and insert_exprs is None:
-            raise ValueError(
-                "MERGE needs WHEN MATCHED THEN UPDATE assignments, "
-                "WHEN MATCHED THEN DELETE, and/or WHEN NOT MATCHED "
-                "THEN INSERT expressions"
-            )
-        primed: tuple[int, dict] | None = self._current()
-        if primed[1] is not None and self._fv_of(primed[1]) >= 3 \
-                and mode != "cow":
-            # format-version 3 (round 14): matched rows deletion-
-            # vector, postimages keep their _row_id — the lineage-
-            # correct v3 merge regardless of the mode knob (an
-            # explicit mode='cow' surfaces the COW gate's refusal)
-            return self._merge_mor_dv(
-                spark, source, cond, assignments, insert_exprs,
-                target_alias, source_alias, delete_matched,
-                primed=primed,
-            )
-        if primed[1] is not None and self._resolved_mode(
-            primed[1], mode, "merge"
-        ) == "mor":
-            return self._merge_mor(
-                spark, source, cond, assignments, insert_exprs,
-                target_alias, source_alias, delete_matched,
-                primed=primed,
-            )
-        cond_col = F.expr(cond)
-
-        def attempt() -> dict:
-            nonlocal primed
-            base_v, cur = primed or self._current()
-            primed = None  # retries re-read the advanced head
-            if cur is None:
-                raise ValueError(
-                    f"iceberg table {self.path} has no commits to "
-                    "merge into"
-                )
-            rdr = self.reader()
-            data, spec_parts = self._cow_scope(rdr)
-            paths = [p for p, _u, _s in data]
-            by_raw: dict[str, int] = {}
-            matched = 0
-            if (assignments or delete_matched) and paths:
-                tgt = self._with_lp(spark.read.parquet(*paths))
-                rows = (
-                    tgt.alias(target_alias)
-                    .join(source.alias(source_alias), cond_col,
-                          "left_semi")
-                    .groupBy("__lp")
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .collect()
-                )
-                by_raw = {r["__lp"]: int(r["__n"]) for r in rows}
-                matched = sum(by_raw.values())
-            affected = sorted(by_raw)
-            staged: list[tuple[str, int, int, dict]] = []
-            rewritten = len(affected)
-            if affected and delete_matched:
-                partial = [
-                    p for p in affected
-                    if by_raw[p] != pq.ParquetFile(p).metadata.num_rows
-                ]
-                rewritten = len(partial)
-                if partial:
-                    keep = (
-                        spark.read.parquet(*partial)
-                        .alias(target_alias)
-                        .join(source.alias(source_alias), cond_col,
-                              "left_anti")
-                    )
-                    staged = self._stage(
-                        keep, spec_parts=spec_parts or None,
-                        ice_fields=self._cur_fields(cur),
-                    )
-            elif affected:
-                aff = spark.read.parquet(*affected)
-                input_rows = sum(
-                    pq.ParquetFile(p).metadata.num_rows for p in affected
-                )
-                mark = "__merge_matched"
-                joined = aff.alias(target_alias).join(
-                    source.withColumn(mark, F.lit(True))
-                    .alias(source_alias),
-                    cond_col,
-                    "left_outer",
-                )
-                hit_c = F.col(f"{source_alias}.{mark}").isNotNull()
-                out = joined.select(
-                    *[
-                        F.when(hit_c, F.expr(assignments[c]))
-                        .otherwise(F.col(f"{target_alias}.{c}"))
-                        .cast(aff.schema[c].dataType)
-                        .alias(c)
-                        if c in assignments
-                        else F.col(f"{target_alias}.{c}").alias(c)
-                        for c in aff.columns
-                    ]
-                )
-                staged = self._stage(
-                    out, spec_parts=spec_parts or None,
-                    ice_fields=self._cur_fields(cur),
-                )
-                staged_rows = sum(r for _p, r, _b, _pv in staged)
-                if staged_rows != input_rows:
-                    self._unstage(staged)
-                    raise ValueError(
-                        f"MERGE: {staged_rows - input_rows} target "
-                        "row(s) matched multiple source rows — the "
-                        "rewrite would duplicate them; deduplicate the "
-                        "source on the merge key first"
-                    )
-            rows_inserted = 0
-            if insert_exprs is not None:
-                if paths:
-                    full_t = spark.read.parquet(*paths)
-                    ins_src = source.alias(source_alias).join(
-                        full_t.alias(target_alias), cond_col, "left_anti"
-                    )
-                    tbl_schema = full_t.schema
-                else:
-                    ins_src = source.alias(source_alias)
-                    tbl_schema = self.table_schema()
-                if tbl_schema is None:
-                    raise ValueError(
-                        "MERGE into an empty iceberg table with an "
-                        "unmappable schema — append a first batch"
-                    )
-                cols = [(f.name, f.dataType) for f in tbl_schema.fields]
-                if len(insert_exprs) != len(cols):
-                    # the matched rewrite already staged — unstage it
-                    # or the files leak (nothing reclaims unreferenced
-                    # data files; candidates come from manifests)
-                    self._unstage(staged)
-                    raise ValueError(
-                        f"MERGE: INSERT VALUES has {len(insert_exprs)} "
-                        f"expressions for {len(cols)} target columns"
-                    )
-                ins = ins_src.select(
-                    *[
-                        F.expr(e).cast(t_).alias(c)
-                        for e, (c, t_) in zip(insert_exprs, cols)
-                    ]
-                )
-                ins_staged = self._stage(
-                    ins, spec_parts=spec_parts or None,
-                    ice_fields=self._cur_fields(cur),
-                )
-                rows_inserted = sum(
-                    r for _p, r, _b, _pv in ins_staged
-                )
-                if rows_inserted == 0:
-                    self._unstage(ins_staged)
-                else:
-                    staged = staged + ins_staged
-            if not affected and not staged:
-                return {"version": None, "rows_matched": 0,
-                        "rows_inserted": 0, "files_rewritten": 0}
-            try:
-                snap_id = self._publish_mutation(
-                    base_v, cur, rdr, set(affected), staged, "overwrite",
-                    {"merged-records": str(matched)},
-                    spec_parts=spec_parts,
-                )
-                return {
-                    "version": snap_id,
-                    "rows_matched": matched,
-                    "rows_inserted": rows_inserted,
-                    "files_rewritten": rewritten,
-                }
-            except ConcurrentWriteError:
-                self._unstage(staged)
-                raise
-
-        return retry_commit("iceberg merge", attempt)
+        return self._live_identity(spark, rdr, sc, lineage=lineage)
 
     def _publish_mutation(
         self,
@@ -3719,42 +3092,53 @@ class IcebergTableWriter:
         entry now carries footer-derived lower/upper bounds, the
         narrow per-file spans land where every Iceberg planner
         data-skips on them. Returns the new snapshot id, or None below
-        ``min_inputs``. Live delete files route to the PURGE pass —
-        on partitioned tables too (round 12: a partitioned CDC table's
-        accumulated equality-delete strata need exactly this lever)."""
+        ``min_inputs``. Live delete files route to the PURGE pass."""
         def attempt() -> int | None:
             base_v, cur = self._current()
             if cur is None:
                 return None
             rdr = self.reader()
-            fv = self._fv_of(cur)
-            _d, live_pos, live_eq, live_dvs = rdr._files(None)
-            if live_pos or live_eq or live_dvs:
-                # PURGE pass: rewrite the MoR-applied content
-                # (snapshot() applies position AND equality
-                # deletes) and drop the delete manifests —
-                # iceberg's rewrite_data_files repaying the
-                # read-side debt, exactly like Delta OPTIMIZE
-                # purging DVs. On v3 this is THE lever that keeps
-                # accumulated deletion vectors from living forever.
-                return self._optimize_purge(
-                    spark, base_v, cur, rdr, target_files, zorder_by
-                )
-            lineage = fv >= 3
-            data, spec_parts = self._cow_scope(rdr, lineage_done=lineage)
-            if not data or (len(data) < min_inputs and not zorder_by):
-                # nothing to rewrite (zorder included: an empty live
-                # set has nothing to cluster — read.parquet() of zero
-                # paths would crash out of a SQL statement)
-                return None
+            lineage = self._fv_of(cur) >= 3
+            data, pos_d, eq_d, dvs = rdr._files(None)
+            # PURGE pass when delete files are live: rewrite the
+            # MoR-applied content and DROP the delete manifests (their
+            # targets no longer exist — carrying them would leave the
+            # table permanently 'has deletes' and waste every reader a
+            # delete-file read); the old delete files become
+            # expire_snapshots candidates. Iceberg's rewrite_data_files
+            # repaying the read-side debt, exactly like Delta OPTIMIZE
+            # purging DVs; on v3 THE lever that keeps accumulated
+            # deletion vectors from living forever. Runs on
+            # PARTITIONED tables too (the restage splits by the spec,
+            # transforms included — what a partitioned CDC table's
+            # equality-delete strata need); partition evolution
+            # composes: every old file tombstones under ITS manifest's
+            # spec inside _publish_mutation, the content restages
+            # under the default spec.
+            purge = bool(pos_d or eq_d or dvs)
+            if purge:
+                # v3 compaction materializes lineage (below), so only
+                # the fv>3 refusal applies to it
+                self._check_fv_writable(cur, rewrites_rows=not lineage)
+                spec_parts = self._cur_spec(cur)
+            else:
+                data, spec_parts = self._cow_scope(
+                    rdr, lineage_done=lineage)
+                if not data or (len(data) < min_inputs and not zorder_by):
+                    # nothing to rewrite (zorder included: an empty
+                    # live set has nothing to cluster — read.parquet()
+                    # of zero paths would crash out of a SQL statement)
+                    return None
             ice_fields = self._cur_fields(cur)
             if lineage:
                 # v3 compaction materializes each surviving row's
                 # lineage into the rewritten files (spec: rewritten
                 # rows KEEP their _row_id) — stamped with the
-                # reserved field ids
+                # reserved field ids; deletes of every tier applied
                 src, _data2, _nd = self._lineage_rewrite_src(spark, rdr)
                 ice_fields = ice_fields + _LINEAGE_FIELDS
+            elif purge:
+                src = rdr.snapshot(spark)  # MoR-applied content
             else:
                 src = spark.read.parquet(*[p for p, _u, _s in data])
             if zorder_by:
@@ -3771,13 +3155,18 @@ class IcebergTableWriter:
                 df, spec_parts=spec_parts or None,
                 ice_fields=ice_fields,
             )
-            extra = {"rewritten-data-files": str(len(data))}
+            extra = (
+                {"purged-position-deletes": str(len(pos_d)),
+                 "purged-equality-deletes": str(len(eq_d)),
+                 "purged-deletion-vectors": str(len(dvs))}
+                if purge else {"rewritten-data-files": str(len(data))}
+            )
             if zorder_by:
                 extra["zorder-by"] = ",".join(zorder_by)
             try:
                 return self._publish_mutation(
                     base_v, cur, rdr, {p for p, _u, _s in data}, staged,
-                    "replace", extra,
+                    "replace", extra, drop_deletes=purge,
                     spec_parts=spec_parts, lineage_done=lineage,
                 )
             except ConcurrentWriteError:
@@ -3786,79 +3175,8 @@ class IcebergTableWriter:
 
         return retry_commit("iceberg optimize", attempt)
 
-    def _optimize_purge(
-        self,
-        spark: SparkSession,
-        base_v: int,
-        cur: dict,
-        rdr: IcebergTable,
-        target_files: int,
-        zorder_by: list[str] | None,
-    ) -> int:
-        """rewrite_data_files over a MoR table: scan with the position
-        deletes APPLIED, restage, and publish a ``replace`` snapshot
-        that rewrites every data manifest and DROPS the delete
-        manifests (their targets no longer exist — carrying them would
-        leave the table permanently 'has deletes' and waste every
-        reader a delete-file read). The read-side debt MoR deferred is
-        repaid here, exactly like Delta OPTIMIZE purging DVs; the old
-        delete files become expire_snapshots candidates. Round 12:
-        runs on PARTITIONED tables too (the restage splits by the
-        table's spec — transforms included — and the rewritten
-        manifest entries carry fresh partition records), which is the
-        compaction lever a partitioned CDC table's accumulated
-        equality-delete strata need. One attempt of ``optimize``: a
-        lost race unstages and raises, and optimize re-derives."""
-        # partition evolution composes (round 13): every old file
-        # tombstones under ITS manifest's spec inside
-        # _publish_mutation; the purged content restages under the
-        # default spec — after the purge the table is single-spec
-        # in practice (all live files belong to the default)
-        lineage = self._fv_of(cur) >= 3
-        if lineage:
-            self._check_fv_writable(cur)  # fv>3 backstop only
-        else:
-            self._check_fv_writable(cur, rewrites_rows=True)
-        spec_parts = self._cur_spec(cur)
-        data, pos_d, eq_d, dvs = rdr._files(None)
-        ice_fields = self._cur_fields(cur)
-        if lineage:
-            # v3: live rows (DVs applied) with MATERIALIZED
-            # lineage — the compaction that finally retires the
-            # table's deletion vectors without re-identifying a
-            # single surviving row
-            src, _d2, _nd = self._lineage_rewrite_src(spark, rdr)
-            ice_fields = ice_fields + _LINEAGE_FIELDS
-        else:
-            src = rdr.snapshot(spark)  # MoR-applied content
-        if zorder_by:
-            from algebraicdb_spark.operators.txnlog import (
-                _zorder_clustered,
-            )
-
-            df = _zorder_clustered(src, zorder_by, max(target_files, 1))
-        else:
-            df = src.coalesce(max(target_files, 1))
-        staged = self._stage(
-            df, spec_parts=spec_parts or None, ice_fields=ice_fields
-        )
-        extra = {"purged-position-deletes": str(len(pos_d)),
-                 "purged-equality-deletes": str(len(eq_d)),
-                 "purged-deletion-vectors": str(len(dvs))}
-        if zorder_by:
-            extra["zorder-by"] = ",".join(zorder_by)
-        try:
-            return self._publish_mutation(
-                base_v, cur, rdr, {p for p, _u, _s in data},
-                staged, "replace", extra, drop_deletes=True,
-                spec_parts=spec_parts, lineage_done=lineage,
-            )
-        except ConcurrentWriteError:
-            self._unstage(staged)
-            raise
-
     def expire_snapshots(self, retain_last: int = 2) -> list[str]:
-        """Iceberg's expire_snapshots — the VACUUM twin: drop all but
+        """Iceberg's expire_snapshots (Delta's VACUUM): drop all but
         the newest ``retain_last`` snapshots from the metadata and
         physically delete every manifest / manifest list / data file
         reachable ONLY from the expired ones. The current snapshot
@@ -4009,8 +3327,8 @@ class IcebergTableWriter:
         return retry_commit("iceberg upgrade_format_version", attempt)
 
     def rollback(self, snapshot_id: int) -> int:
-        """Iceberg's rollback_to_snapshot — RESTORE's metadata-only
-        twin on this format: point ``current-snapshot-id`` back at an
+        """Iceberg's rollback_to_snapshot — a metadata-only RESTORE:
+        point ``current-snapshot-id`` back at an
         EXISTING snapshot in a new metadata version (the CAS
         create-exclusive publish every metadata change here uses).
         The snapshot chain is untouched — time travel above the
@@ -4056,23 +3374,5 @@ class IcebergTableWriter:
         map recursively (round 12, with the nested-write support);
         only genuinely unmappable primitives (uuid/fixed/time) fall
         back to None."""
-        from pyspark.sql.types import StructType
-
-        cur = self.reader().meta
-        schemas = cur.get("schemas") or (
-            [cur["schema"]] if cur.get("schema") else []
-        )
-        sid = cur.get("current-schema-id", 0)
-        sch = next(
-            (s for s in schemas if s.get("schema-id", 0) == sid),
-            schemas[-1] if schemas else None,
-        )
-        if not sch:
-            return None
-        parts = []
-        for f in sch.get("fields", []):
-            ddl = _spark_ddl(f["type"])
-            if ddl is None:
-                return None  # unknown primitive: caller falls back
-            parts.append(f"`{f['name']}` {ddl}")
-        return StructType.fromDDL(", ".join(parts)) if parts else None
+        fields = self._cur_fields(self.reader().meta)
+        return _spark_schema(fields) if fields else None

@@ -2060,6 +2060,7 @@ class DeltaLogTable:
         from algebraicdb_spark.operators.deletion_vectors import (
             dv_positions,
         )
+        from algebraicdb_spark.operators.mutation import local_path
 
         del_rows = [
             (res, int(pos))
@@ -2071,15 +2072,7 @@ class DeltaLogTable:
             with_metadata=True, mapping=mapping,
         )
         cols = [c for c in df.columns if c not in ("__fp", "__pos")]
-        # _metadata.file_path is a URI with percent-encoded specials —
-        # the same normalization as the Iceberg MoR join (strip scheme,
-        # decode WITHOUT '+'→space)
-        stripped = F.regexp_replace(
-            F.col("__fp"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(//[^/]*)?", ""
-        )
-        df = df.withColumn(
-            "__lp", F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
-        )
+        df = df.withColumn("__lp", local_path(F.col("__fp")))
         if del_rows:
             dels = spark.createDataFrame(del_rows, "__lp string, __pos long")
             df = df.join(F.broadcast(dels), ["__lp", "__pos"], "left_anti")

@@ -264,9 +264,9 @@ class TestAvroDecoder:
         (tmp_path / "sync.avro").write_bytes(bytes(buf))
         with pytest.raises(ValueError, match="sync marker"):
             AvroFileReader(str(tmp_path / "sync.avro"))
-        # zstandard graduated to supported in r13 (operators/zstd.py);
-        # the hand-swapped codec header with a REAL zstd frame as the
-        # block payload reads back — while an unknown codec refuses
+        # zstandard is supported (pyarrow's codec): the hand-swapped
+        # codec header with a REAL zstd frame as the block payload
+        # reads back — while an unknown codec refuses
         import pyarrow as pa
 
         block = zz(5)
@@ -317,40 +317,47 @@ class TestAvroDecoder:
     def test_snappy_block_decoder_handles_copies(self):
         """Back-references, including the OVERLAPPING repeat idiom
         (offset < length), against hand-assembled tag streams with
-        independently known expansions."""
-        from algebraicdb_spark.operators.iceberg import (
-            _snappy_decompress,
-        )
+        independently known expansions, framed as Avro snappy blocks
+        (raw block + big-endian crc32 of the expansion)."""
+        import zlib
+
+        from algebraicdb_spark.operators.iceberg import _decode_block
+
+        def block(s: bytes, expanded: bytes) -> bytes:
+            return s + (zlib.crc32(expanded) & 0xFFFFFFFF).to_bytes(4, "big")
+
+        def decode(s: bytes, expanded: bytes) -> bytes:
+            return _decode_block("snappy", block(s, expanded), "m.avro")
 
         # literal "abc" + copy(offset=3, len=6) → "abc" * 3
         s = leb128(9) + bytes([(3 - 1) << 2]) + b"abc" + bytes(
             [((6 - 4) << 2) | 0x01, 3]
         )
-        assert _snappy_decompress(s) == b"abcabcabc"
+        assert decode(s, b"abcabcabc") == b"abcabcabc"
         # 2-byte-offset copy: 8 literals then re-emit the first 5
         s2 = (
             leb128(13)
             + bytes([(8 - 1) << 2]) + b"ABCDEFGH"
             + bytes([((5 - 1) << 2) | 0x02]) + (8).to_bytes(2, "little")
         )
-        assert _snappy_decompress(s2) == b"ABCDEFGHABCDE"
+        assert decode(s2, b"ABCDEFGHABCDE") == b"ABCDEFGHABCDE"
         # corrupt offset refuses
         bad = leb128(4) + bytes([(1 - 1) << 2]) + b"a" + bytes(
             [((4 - 4) << 2) | 0x01, 9]
         )
-        with pytest.raises(ValueError, match="offset"):
-            _snappy_decompress(bad)
+        with pytest.raises(ValueError, match="snappy avro block"):
+            decode(bad, b"aaaa")
         # length-header disagreement refuses
         short = leb128(99) + bytes([(3 - 1) << 2]) + b"abc"
-        with pytest.raises(ValueError, match="header said 99"):
-            _snappy_decompress(short)
+        with pytest.raises(ValueError, match="snappy avro block"):
+            decode(short, b"abc")
         # a LONG literal exercises the 61-tag two-byte-length form
         blob = bytes(range(256)) * 2
         s3 = (
             leb128(len(blob)) + bytes([61 << 2])
             + (len(blob) - 1).to_bytes(2, "little") + blob
         )
-        assert _snappy_decompress(s3) == blob
+        assert decode(s3, blob) == blob
 
 
 class TestIcebergTable:

@@ -7,7 +7,7 @@
    the test hand-crafts a spec-valid frame with exactly 0x8000
    sequences (RLE sequence tables, zero extra bits) and validates it
    TWO-PATH: the real zstd CLI must accept it and agree byte-for-byte
-   with our decoder.
+   with the manifest reader's block decoder.
 
 2. Session-config hygiene: the Delta column-mapping id-mode read/write
    paths flip ``spark.sql.parquet.fieldId.{read,write}.enabled`` — they
@@ -21,7 +21,7 @@ import subprocess
 
 import pytest
 
-from algebraicdb_spark.operators.zstd import zstd_decompress
+from algebraicdb_spark.operators.iceberg import _decode_block
 
 
 def _craft_longform_frame() -> tuple[bytes, bytes]:
@@ -67,14 +67,14 @@ class TestZstdLongFormSequenceCount:
             capture_output=True, check=True,
         )
         assert cli.stdout == exp          # the CLI validates the frame
-        assert zstd_decompress(frame) == exp
+        assert _decode_block("zstandard", frame, "f.avro") == exp
 
     def test_count_is_addition_not_or(self):
         # 0x8000 = (0x00 | 0x01<<8) + 0x7F00; the OR form yields 0x7F00
         # and the decoder would abort on a not-fully-consumed bitstream.
         frame, exp = _craft_longform_frame()
         assert len(exp) == 4 * 0x8000
-        assert zstd_decompress(frame) == exp
+        assert _decode_block("zstandard", frame, "f.avro") == exp
 
 
 _KEYS = (
