@@ -1698,15 +1698,18 @@ class Engine:
         return _unmask_strings(_CHANGES_RE.sub(repl, masked), saved)
 
     def _rewrite(self, stmt: str) -> str:
+        # reads run without the engine lock, so a concurrent CREATE can
+        # rebind the catalog dicts: iterate snapshots, never the live
+        # dicts ("dictionary changed size during iteration")
         stmt = self._rewrite_changes(stmt)
         stmt = self._rewrite_time_travel(stmt)
         if self._functions:
-            stmt = expand_macros(stmt, self._functions)
+            stmt = expand_macros(stmt, dict(self._functions))
         stmt = rewrite_distinct_on(stmt)
         stmt = rewrite_qualify(stmt)
         adt_cols: dict[str, AdtType] = {}
         known: set[str] = set()
-        for td in self._tables.values():
+        for td in tuple(self._tables.values()):
             adt_cols.update(td.adt_columns)
             known.update(td.columns)
         if not adt_cols:

@@ -24,6 +24,9 @@ against its DuckDB oracle (md5-based hashing is engine-portable).
 
 from __future__ import annotations
 
+import functools
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +40,11 @@ from algebraicdb_spark.sources.catalog import load_tables, spread
 def canonical_text(col):
     """lower + collapse whitespace — the normalization all tiers share."""
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+
+
+# SQL twin of canonical_text over a `text` column — byte-identical
+# regexp/ops, for pre-rendered statements
+CANON_SQL = r"regexp_replace(lower(trim(text)), '\\s+', ' ')"
 
 
 def shingles(col, n: int = 3):
@@ -320,8 +328,10 @@ def minhash_token_arrays(docs: DataFrame) -> DataFrame:
     Every batch caller reads this ≥3 times (signature build + both
     rerank sides); uncached, the regex+shingle transform re-ran per
     consumer. Tokenize ONCE — the materialized shingle table is what a
-    production dedup pipeline persists anyway. Lazy: plan-only callers
-    pay nothing. (Streams can't checkpoint — they use shingle_tokens.)
+    production dedup pipeline persists anyway. The checkpoint is NOT
+    lazy under AQE: its toRdd runs the exchanges below it at build
+    time (dedup_minhash_lsh builds with 1 job, 0 with AQE off).
+    (Streams can't checkpoint — they use shingle_tokens.)
 
     ``spread`` first (guide §2.5): the canonicalize + shingle + every
     downstream signature hash otherwise runs inside the single-task
@@ -693,6 +703,101 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 COSINE_TAU = 0.40
 
 
+@functools.cache
+def _emb_cosine_sql() -> tuple[str, str]:
+    """dedup_embedding_cosine's candidate generation as two
+    pre-rendered statements (the pipeline_dedup_funnel device): the
+    Column form issued ~1,400 py4j round-trips per build, most of them
+    the two ``dot()`` lambdas. Every expression is the Column form's
+    SQL text, so values are hash-identical. Rendered on first use,
+    because similarity imports this module.
+
+    The first statement assigns each vector of ``{e}`` to its cluster;
+    the second takes that table as ``{assigned}`` and returns the
+    (vec_a, vec_b, emb_a, emb_b) candidate pairs, salted ``{S}`` ways.
+    """
+    from algebraicdb_spark.operators.similarity import dot_sql
+
+    def dist(cos: str) -> str:
+        return f"sqrt(greatest(CAST(0 AS DOUBLE), 2.0D - 2.0D * {cos}))"
+
+    theta = math.sqrt(2.0 - 2.0 * COSINE_TAU)
+    # same deterministic seed-id scheme as sim_knn_ivf: ≡7 (mod 31),
+    # below 496 → 16 ids present at every SF, no count/limit job
+    seeds = (
+        "WITH seeds AS (\n"
+        "  SELECT vec_id AS c_id, embedding AS c_emb FROM {e}\n"
+        "  WHERE vec_id % 31 = 7 AND vec_id < 496\n"
+        ")\n"
+    )
+    # (1) nearest seed centroid per vector: broadcast argmax — the only
+    # nested-loop join is against the 16-row centroid table
+    assign = (
+        seeds
+        + "SELECT vec_id, embedding, c_id, " + dist("c_sim") + " AS c_dist FROM (\n"
+        "  SELECT *, row_number() OVER (PARTITION BY vec_id\n"
+        "                               ORDER BY c_sim DESC, c_id) AS rn\n"
+        "  FROM (\n"
+        "    SELECT /*+ BROADCAST(seeds) */ e.vec_id, e.embedding, seeds.c_id,\n"
+        "           " + dot_sql("e.embedding", "seeds.c_emb") + " AS c_sim\n"
+        "    FROM {e} e CROSS JOIN seeds\n"
+        "  )\n"
+        ") WHERE rn = 1"
+    )
+    pairs = (
+        seeds
+        # (2) cluster radii; (3) the directed 16×16 centroid-pair table
+        # (tiny), ball-cover pruned; the 1e-9 slack absorbs float error
+        # in the distance arithmetic
+        + ", radius AS (SELECT c_id, max(c_dist) AS r FROM {assigned} GROUP BY c_id),\n"
+        "cpairs AS (\n"
+        "  SELECT src, dst FROM (\n"
+        "    SELECT ca.c_id AS src, cb.c_id AS dst,\n"
+        "           " + dist(dot_sql("ca.c_emb", "cb.c_emb")) + " AS d_cc\n"
+        "    FROM seeds ca CROSS JOIN seeds cb\n"
+        "  ) p\n"
+        "  JOIN radius rs ON rs.c_id = p.src\n"
+        "  JOIN radius rd ON rd.c_id = p.dst\n"
+        f"  WHERE d_cc <= CAST('{theta!r}' AS DOUBLE) + rs.r + rd.r"
+        " + CAST('1e-09' AS DOUBLE)\n"
+        "),\n"
+        # (4) SALTED equi-join on the cluster pair (guide §2.5, round
+        # 14): the bare dst join has only |clusters| distinct keys, and
+        # because the pre-expansion shuffle is a few MB, AQE coalesced
+        # it to ONE task — the entire pair fan-out AND the Arrow
+        # scoring ran single-threaded (measured: one task, 2M rows).
+        # Salting vec_a S ways and replicating the dst side per salt
+        # spreads the fan-out over S co-partitioned tasks; the explicit
+        # REPARTITION(S, keys) on BOTH sides is reused by the join
+        # (co-partitioned, no extra exchange) and — being a
+        # user-specified width — is exempt from AQE coalescing. The S×
+        # replication of the dst members is strictly smaller than the
+        # candidate-pair output it parallelizes; production centroid
+        # counts (~√n) make the un-salted key cardinality sufficient,
+        # so S stays a constant, not a scale dependence.
+        "lhs AS (\n"
+        "  SELECT /*+ REPARTITION({S}, dst, salt) */ * FROM (\n"
+        "    SELECT /*+ BROADCAST(cpairs) */ a.vec_id AS vec_a, a.embedding AS emb_a,\n"
+        "           cpairs.dst, pmod(xxhash64(a.vec_id), {S}) AS salt\n"
+        "    FROM {assigned} a JOIN cpairs ON cpairs.src = a.c_id\n"
+        "  )\n"
+        "),\n"
+        "rhs AS (\n"
+        "  SELECT /*+ REPARTITION({S}, dst, salt) */ * FROM (\n"
+        "    SELECT /*+ BROADCAST(salts) */ b.vec_id AS vec_b, b.embedding AS emb_b,\n"
+        "           b.c_id AS dst, salts.id AS salt\n"
+        "    FROM {assigned} b CROSS JOIN range({S}) salts\n"
+        "  )\n"
+        ")\n"
+        # each unordered pair scored exactly once: its directed cluster
+        # pair (cluster(a) → cluster(b)) appears once, and vec_a <
+        # vec_b kills the mirror — no dropDuplicates pass needed
+        "SELECT vec_a, vec_b, emb_a, emb_b\n"
+        "FROM lhs JOIN rhs USING (dst, salt) WHERE vec_a < vec_b"
+    )
+    return assign, pairs
+
+
 @register(
     "dedup_embedding_cosine",
     oracle=f"""
@@ -728,101 +833,28 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, but through a distributed shuffle join keyed on cluster
     ids, never a broadcast nested loop over the corpus.
     """
-    import math
+    from algebraicdb_spark.operators.similarity import bulk_cosine_tau_pairs
 
-    from pyspark.sql.window import Window
-
-    from algebraicdb_spark.operators.similarity import dot
-
+    assign_sql, pairs_sql = _emb_cosine_sql()
     e = load_tables(spark, sf_dir)["embeddings"]
-    # same deterministic seed-id scheme as sim_knn_ivf: ≡7 (mod 31),
-    # below 496 → 16 ids present at every SF, no count/limit job
-    seeds = e.filter(
-        (F.col("vec_id") % 31 == 7) & (F.col("vec_id") < 496)
-    ).select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-    dist = lambda cos_col: F.sqrt(F.greatest(F.lit(0.0), 2.0 - 2.0 * cos_col))  # noqa: E731
-    scored = e.crossJoin(F.broadcast(seeds)).select(
-        "vec_id",
-        "embedding",
-        "c_id",
-        dot(F.col("embedding"), F.col("c_emb")).alias("c_sim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("c_sim").desc(), F.col("c_id"))
-    assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "c_id", dist(F.col("c_sim")).alias("c_dist"))
-        # assigned feeds radius + both join sides; uncached, the
-        # corpus argmax (16-way broadcast + window) ran three times —
-        # 10 embeddings scans in the plan, 15.8 s at sf0.1. The
-        # assignment table is THE ball-cover index every consumer
-        # needs; materialize it once (lazy: no job until the query
-        # actually executes).
-        .localCheckpoint(eager=False)
-    )
-    radius = assigned.groupBy("c_id").agg(F.max("c_dist").alias("r"))
-    theta = math.sqrt(2.0 - 2.0 * COSINE_TAU)
-    ca = seeds.select(F.col("c_id").alias("src"), F.col("c_emb").alias("emb_src"))
-    cb = seeds.select(F.col("c_id").alias("dst"), F.col("c_emb").alias("emb_dst"))
-    # directed 16×16 pair table (tiny), ball-cover pruned; the 1e-9
-    # slack absorbs float error in the distance arithmetic
-    cpairs = (
-        ca.crossJoin(cb)
-        .select(
-            "src",
-            "dst",
-            dist(dot(F.col("emb_src"), F.col("emb_dst"))).alias("d_cc"),
-        )
-        .join(radius.select(F.col("c_id").alias("src"), F.col("r").alias("r_src")), "src")
-        .join(radius.select(F.col("c_id").alias("dst"), F.col("r").alias("r_dst")), "dst")
-        .filter(F.col("d_cc") <= theta + F.col("r_src") + F.col("r_dst") + 1e-9)
-        .select("src", "dst")
-    )
-    lhs = assigned.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("emb_a"),
-        F.col("c_id").alias("src"),
-    )
-    rhs = assigned.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("c_id").alias("dst"),
-    )
-    # each unordered pair scored exactly once: its directed cluster
-    # pair (cluster(a) → cluster(b)) appears once, and vec_a < vec_b
-    # kills the mirror — no dropDuplicates pass needed.
-    #
-    # SALTED equi-join (guide §2.5, round 14): the bare dst join has
-    # only |clusters| distinct keys, and because the pre-expansion
-    # shuffle is a few MB, AQE coalesced it to ONE task — the entire
-    # pair fan-out AND the Arrow scoring ran single-threaded (measured:
-    # one task, 2M rows). Salting vec_a S ways and replicating the
-    # dst side per salt spreads the fan-out over S co-partitioned
-    # tasks; the explicit repartition(S, keys) on BOTH sides is reused
-    # by the join (co-partitioned, no extra exchange) and — being a
-    # user-specified width — is exempt from AQE coalescing. The S×
-    # replication of the dst members is strictly smaller than the
-    # candidate-pair output it parallelizes; production centroid
-    # counts (~√n) make the un-salted key cardinality sufficient, so
-    # S stays a constant knob, not a scale dependence.
-    S = spark.sparkContext.defaultParallelism
-    salts = spark.range(S).select(F.col("id").alias("salt"))
-    lhs_salted = (
-        lhs.join(F.broadcast(cpairs), "src")
-        .withColumn("salt", F.pmod(F.xxhash64("vec_a"), F.lit(S)))
-        .repartition(S, "dst", "salt")
-    )
-    rhs_salted = rhs.crossJoin(F.broadcast(salts)).repartition(S, "dst", "salt")
-    cand = lhs_salted.join(rhs_salted, ["dst", "salt"]).filter(
-        F.col("vec_a") < F.col("vec_b")
-    )
+    # the assignment table is THE ball-cover index every consumer
+    # needs (radius and both join sides); unmaterialized, the corpus
+    # argmax (16-way broadcast + window) runs once per consumer. The
+    # checkpoint is NOT lazy under AQE: its toRdd runs the window
+    # exchange and the seed broadcast below it, 2 jobs at build time.
+    # Kept by measured op time (build + noop write, 4 cores, medians of
+    # 10 interleaved runs, benchmark fixture / sf0.1): 1.32 / 4.21 s
+    # with it against 1.49 / 4.49 s for one statement without it
+    # (0 build jobs).
+    assigned = spark.sql(assign_sql, e=e).localCheckpoint(eager=False)
+    S = spark.sparkContext.defaultParallelism  # salt width
     # bulk rescoring tier (round 14): millions of candidate pairs ×
     # interpreted HOF fold dominated this key (20.8 s); the zero-copy
     # Arrow batch scorer folds in the SAME IEEE op order per pair and
     # applies the τ-filter + pround in-batch (see bulk_cosine_tau_pairs)
-    from algebraicdb_spark.operators.similarity import bulk_cosine_tau_pairs
-
-    return bulk_cosine_tau_pairs(cand, COSINE_TAU)
+    return bulk_cosine_tau_pairs(
+        spark.sql(pairs_sql, e=e, assigned=assigned, S=S), COSINE_TAU
+    )
 
 
 MAX_CC_ITERS = 20  # >= near-dup cluster diameter; fixture clusters are tiny

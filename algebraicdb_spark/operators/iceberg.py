@@ -1372,9 +1372,12 @@ class IcebergTable:
                     " — row-level changes need the bytes; consume "
                     "within retention or rebuild from snapshot()"
                 )
+            # a present key with a zero count is no update: the v3
+            # deletion-vector MERGE records "updated-records": "0"
+            # for a MERGE … THEN DELETE
             is_update = any(
-                k in summ for k in ("updated-records",
-                                    "upserted-records")
+                int(summ.get(k, 0)) > 0
+                for k in ("updated-records", "upserted-records")
             )
             pre_l, post_l = (
                 ("update_preimage", "update_postimage")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from algebraicdb_spark.functions.rounding import pround, pround_sql
 from algebraicdb_spark.operators.dedup import (
+    CANON_SQL,
     JACCARD_TAU,
     canonical_text,
     minhash_ctes,
@@ -507,10 +508,6 @@ def pipeline_split_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SQL twin of dedup.canonical_text (lower + collapse whitespace) —
-# byte-identical regexp/ops, rendered once at import
-_CANON_SQL = r"regexp_replace(lower(trim(text)), '\\s+', ' ')"
-
 # The funnel's tier/token plumbing as ONE pre-rendered statement
 # (round 15): every expression is the same SQL text the Column form
 # generated (split/size token counts, literal tier tags, LEFT ANTI
@@ -519,7 +516,7 @@ _CANON_SQL = r"regexp_replace(lower(trim(text)), '\\s+', ' ')"
 _FUNNEL_SQL_TEMPLATE = (
     "WITH toks AS (\n"
     "  SELECT doc_id,\n"
-    "         CAST(size(split(" + _CANON_SQL + ", ' ')) AS BIGINT) AS n_toks\n"
+    "         CAST(size(split(" + CANON_SQL + ", ' ')) AS BIGINT) AS n_toks\n"
     "  FROM documents\n"
     "),\n"
     "tiers AS (\n"
@@ -604,12 +601,14 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)  # registers the `documents` view
     # exact_keep feeds tier1, tier2's anti-join AND the near-dup tier;
     # materialize the doc-grain table once instead of re-running the
-    # canonicalize+groupBy per consumer. The rest of the funnel is
+    # canonicalize+groupBy per consumer. Under AQE the checkpoint runs
+    # its GROUP BY exchange at build time: with minhash_pairs' token
+    # checkpoint, the build runs 2 jobs (0 with AQE off). The rest of the funnel is
     # pre-rendered SQL (round 15, the _MH_PAIRS_TEMPLATE device): the
     # Column-object plumbing issued ~300 py4j round-trips per build.
     exact_keep = spark.sql(
         "SELECT ctext, MIN(doc_id) AS doc_id FROM (SELECT doc_id, "
-        f"{_CANON_SQL} AS ctext FROM documents) GROUP BY ctext"
+        f"{CANON_SQL} AS ctext FROM documents) GROUP BY ctext"
     ).localCheckpoint(eager=False)
     # feed the canonical text as `text`: minhash_pairs re-canonicalizes
     # idempotently, and the oracle's exact_docs CTE does the same

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from algebraicdb_spark.functions.rounding import pround
+from algebraicdb_spark.operators.dedup import CANON_SQL
 from algebraicdb_spark.plans.registry import register
 from algebraicdb_spark.sources.catalog import load_tables, spread
 
@@ -48,6 +49,16 @@ def dot(a, b):
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
+    )
+
+
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of :func:`dot` over array columns ``a`` and ``b`` —
+    the same zip/cast/fold tree, for pre-rendered statements."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
     )
 
 
@@ -1056,6 +1067,66 @@ def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_search(q, e, build_pq_codebook(spark, sf_dir))
 
 
+# The retrieval as three pre-rendered statements (the
+# pipeline_dedup_funnel device): the Column-object form issued ~900
+# py4j round-trips per build. Expressions are the Column form's SQL
+# text, so values are hash-identical. No spread: A/B at sf0.1 measured
+# the 1-task tokenize fused into the scan at parity with a widened one
+# (the tf GROUP BY exchange right below already spreads the heavy
+# side).
+#
+# The (doc, token, tf) postings feed df, the doc count and the weight
+# join; the weights feed norms, queries and dots. Each is bound as a
+# localCheckpoint(eager=False), which is NOT lazy under AQE: its toRdd
+# runs every exchange and broadcast below it at build time — the
+# build runs 6 jobs (2 with AQE off). Kept by measured op time
+# (build + noop write, 4 cores, medians of 12 interleaved pairs,
+# benchmark fixture / sf0.1): both checkpoints 0.80 / 1.26 s against
+# none (one statement, 0 build jobs) 0.95 / 1.70 s; both 0.70 /
+# 1.37 s against the postings only (1 build job) 0.79 / 1.39 s; both
+# 0.76 / 1.16 s against the weights only (7 build jobs) 0.72 / 1.16 s.
+_TFIDF_TF_SQL = (
+    "SELECT doc_id, token, count(1) AS c FROM (\n"
+    "  SELECT doc_id, explode(split(" + CANON_SQL + ", ' ')) AS token FROM {docs}\n"
+    ") GROUP BY doc_id, token"
+)
+_TFIDF_W_SQL = (
+    "WITH dfs AS (SELECT token, count(1) AS dfc FROM {tf} GROUP BY token),\n"
+    "nn AS (SELECT count(DISTINCT doc_id) AS n FROM {tf})\n"
+    "SELECT /*+ BROADCAST(d, nn) */ tf.doc_id, tf.token,\n"
+    "       tf.c * floor(ln(CAST(nn.n AS DOUBLE) / d.dfc) * 10000) AS w\n"
+    "FROM {tf} tf JOIN dfs d ON tf.token = d.token CROSS JOIN nn"
+)
+_TFIDF_SQL = (
+    "WITH norm2 AS (SELECT doc_id, sum(w * w) AS n2 FROM {w} GROUP BY doc_id),\n"
+    # FIXED query set (not a modulus): retrieval cost is |Q| x
+    # postings, so |Q| must stay constant as the corpus grows
+    "q AS (\n"
+    "  SELECT doc_id AS q_doc, token, w AS wq FROM {w}\n"
+    "  WHERE doc_id IN (0, 50, 100, 150, 200, 250, 300, 350, 400, 450)\n"
+    "),\n"
+    "dots AS (\n"
+    "  SELECT /*+ BROADCAST(q) */ q.q_doc, w.doc_id, sum(q.wq * w.w) AS dot\n"
+    "  FROM q JOIN {w} w ON q.token = w.token WHERE w.doc_id != q.q_doc\n"
+    "  GROUP BY q.q_doc, w.doc_id\n"
+    "),\n"
+    "scored AS (\n"
+    "  SELECT /*+ BROADCAST(nq, nd) */ dots.q_doc, dots.doc_id,\n"
+    "         floor(CAST(dots.dot AS DOUBLE)\n"
+    "               / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nd.n2 AS DOUBLE)))\n"
+    "               * 1000000 + 0.5D) AS cos_grid\n"
+    "  FROM dots\n"
+    "  JOIN norm2 nq ON nq.doc_id = dots.q_doc\n"
+    "  JOIN norm2 nd ON nd.doc_id = dots.doc_id\n"
+    ")\n"
+    "SELECT q_doc, rk, doc_id, CAST(cos_grid AS DOUBLE) / 1000000 AS cosine FROM (\n"
+    "  SELECT q_doc, doc_id, cos_grid,\n"
+    "         row_number() OVER (PARTITION BY q_doc ORDER BY cos_grid DESC, doc_id) AS rk\n"
+    "  FROM scored\n"
+    ") WHERE rk <= 5"
+)
+
+
 @register(
     "sim_tfidf_cosine",
     # Sparse retrieval with an exact-integer core: idf is grid-floored
@@ -1121,89 +1192,9 @@ def sim_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity.
     """
     docs = load_tables(spark, sf_dir)["documents"]
-    from algebraicdb_spark.operators.dedup import canonical_text
-
-    # no spread here: A/B at sf0.1 measured the 1-task tokenize fused
-    # into the scan at parity with a widened one (the tf groupBy
-    # exchange right below already spreads the heavy side) — the
-    # extra exchange bought nothing (guide §1.2: measure, then leave
-    # alone)
-    toks = docs.select(
-        "doc_id", F.explode(F.split(canonical_text(F.col("text")), " ")).alias("token")
-    )
-    # materialize the (doc, token, tf) postings once: they feed df,
-    # the doc count, and the weight join — without this the tokenize+
-    # count pipeline re-runs per consumer (35 exchanges, lint-flagged)
-    tf = (
-        toks.groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("dfc"))
-    nn = tf.agg(F.countDistinct("doc_id").alias("n"))
-    w = (
-        tf.join(F.broadcast(df), "token")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "doc_id",
-            "token",
-            (
-                F.col("c")
-                * F.floor(
-                    F.log(F.col("n").cast("double") / F.col("dfc")) * 10000
-                ).cast("long")
-            ).alias("w"),
-        )
-        .localCheckpoint(eager=False)  # weights feed norms, queries, dots
-    )
-    norm2 = w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
-    # FIXED query set (not a modulus): retrieval cost is |Q| x postings,
-    # so |Q| must stay constant as the corpus grows for linear scaling
-    q = w.where(
-        F.col("doc_id").isin([0, 50, 100, 150, 200, 250, 300, 350, 400, 450])
-    ).withColumnsRenamed({"doc_id": "q_doc", "w": "wq"})
-    dots = (
-        F.broadcast(q)
-        .join(w, "token")
-        .where(F.col("doc_id") != F.col("q_doc"))
-        .groupBy("q_doc", "doc_id")
-        .agg(F.sum(F.col("wq") * F.col("w")).alias("dot"))
-    )
-    scored = (
-        dots.join(
-            F.broadcast(norm2.withColumnsRenamed({"doc_id": "q_doc", "n2": "qn2"})),
-            "q_doc",
-        )
-        .join(F.broadcast(norm2), "doc_id")
-        .select(
-            "q_doc",
-            "doc_id",
-            F.floor(
-                (
-                    F.col("dot").cast("double")
-                    / (
-                        F.sqrt(F.col("qn2").cast("double"))
-                        * F.sqrt(F.col("n2").cast("double"))
-                    )
-                )
-                * 1_000_000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("cos_grid"),
-        )
-    )
-    wr = Window.partitionBy("q_doc").orderBy(F.col("cos_grid").desc(), "doc_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(wr))
-        .where(F.col("rk") <= 5)
-        .select(
-            "q_doc",
-            "rk",
-            "doc_id",
-            (F.col("cos_grid").cast("double") / 1_000_000).alias("cosine"),
-        )
-    )
+    tf = spark.sql(_TFIDF_TF_SQL, docs=docs).localCheckpoint(eager=False)
+    w = spark.sql(_TFIDF_W_SQL, tf=tf).localCheckpoint(eager=False)
+    return spark.sql(_TFIDF_SQL, w=w)
 
 
 MMR_K = 10
@@ -1252,6 +1243,73 @@ def _mmr_oracle() -> str:
     return "WITH " + ",".join(ctes) + " " + picks
 
 
+def _grid_sims(E, v):
+    """floor(E·v · 1e6) per row of E, each dot folded left to right
+    over the dimensions — the multiply-add order of
+    :func:`bulk_cosine_tau_pairs` (and of :func:`dot`), so every grid
+    value is bit-identical to the oracle's ``list_dot_product``
+    floor."""
+    acc = np.zeros(len(E), dtype=np.float64)
+    for d in range(E.shape[1]):
+        acc = acc + E[:, d] * v[d]
+    return np.floor(acc * _MMR_GRID).astype(np.int64)
+
+
+def _mmr_picks(vec_ids, E, q, k: int, lam: float) -> list[tuple[int, int, float]]:
+    """Greedy MMR over candidates ``vec_ids`` with embeddings ``E``
+    (n × d float64) for query vector ``q``: ``[(rank, vec_id, rel)]``,
+    at most k rows (fewer when n < k, as the oracle's LIMIT 1 CTEs
+    return).
+
+    Round i picks argmax (score DESC, vec_id ASC) of
+    score = λ·double(rel_g) − (1−λ)·double(ms_g), drops the pick by
+    vec_id, and folds its grid similarity into every survivor's
+    running max ms_g — the oracle's s{i}/c{i} CTE pair, step for step.
+    """
+    mu = round(1 - lam, 10)
+    rel_g = _grid_sims(E, q)
+    ms_g = np.full(len(vec_ids), _MMR_MS_INIT, dtype=np.int64)
+    picks = []
+    for rank in range(1, k + 1):
+        if len(vec_ids) == 0:
+            break
+        score = lam * rel_g.astype(np.float64) - mu * ms_g.astype(np.float64)
+        tied = np.flatnonzero(score == score.max())
+        i = tied[np.argmin(vec_ids[tied])]
+        picks.append((rank, int(vec_ids[i]), int(rel_g[i]) / _MMR_GRID))
+        pick = E[i]
+        keep = vec_ids != vec_ids[i]
+        vec_ids, E, rel_g = vec_ids[keep], E[keep], rel_g[keep]
+        ms_g = np.maximum(ms_g[keep], _grid_sims(E, pick))
+    return picks
+
+
+def _mmr_arrow(batches):
+    """mapInArrow body: the whole (vec_id, embedding) table arrives in
+    one task; vec_id 0 is the query, every other row a candidate."""
+    import pyarrow as pa
+
+    batches = list(batches)
+    if not batches:
+        return
+    tbl = pa.Table.from_batches(batches)
+    if tbl.num_rows == 0:
+        return
+    ids = tbl.column("vec_id").to_numpy()
+    E = _list_matrix(tbl.column("embedding").combine_chunks())
+    is_q = ids == 0
+    if not is_q.any():
+        return
+    picks = _mmr_picks(ids[~is_q], E[~is_q], E[is_q][0], MMR_K, MMR_LAMBDA)
+    if picks:
+        rank, vec_id, rel = zip(*picks)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(rank, pa.int64()), pa.array(vec_id, pa.int64()),
+             pa.array(rel, pa.float64())],
+            ["rank", "vec_id", "rel"],
+        )
+
+
 @register("sim_mmr_diversify", oracle=_mmr_oracle())
 def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein '98): greedy
@@ -1267,72 +1325,23 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays all K rounds as unrolled MATERIALIZED CTEs.
 
     Scale shape: greedy MMR is sequential in k BY DEFINITION — the
-    round-i pick depends on rounds 1..i−1. Each round is one map
-    (fold the 1 picked vector into the running max via a broadcast
-    literal) + one TakeOrderedAndProject argmax over candidates;
-    the 1-row pick collect per round is the CC-probe discipline
-    (k = 10 constant, data-size-independent). At 100 TB you first
-    cut candidates to a few hundred with sim_knn_* (ANN), then run
-    MMR on that page — k·|page| work, never k·|corpus|.
+    round-i pick depends on rounds 1..i−1 — and it runs on a candidate
+    PAGE, not a corpus: at 100 TB you first cut candidates to a few
+    hundred with sim_knn_* (ANN), then run MMR on that page, k·|page|
+    work. A page fits one task, so the page is coalesced to one
+    partition and one Arrow map runs all k rounds in numpy
+    (:func:`_mmr_picks`), the per-partition shape REPOSE argues for
+    over driver-coordinated global passes. The build runs no job; the
+    query is one job at execution. The former driver loop (a 1-row
+    argmax collect per round plus a checkpoint every third round)
+    made 15 eager jobs per build: 1.6–2.1 s of build against
+    0.25–0.35 s of execution at sf0.1 on 4 cores.
     """
     e = load_tables(spark, sf_dir)["embeddings"]
-    q_emb = e.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb")
-    )
-    cands = (
-        e.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q_emb))
-        .select(
-            "vec_id",
-            F.col("embedding").alias("emb"),
-            F.floor(dot(F.col("q_emb"), F.col("embedding")) * _MMR_GRID)
-            .cast("bigint")
-            .alias("rel_g"),
-            F.lit(_MMR_MS_INIT).cast("bigint").alias("ms_g"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    score = (
-        F.lit(MMR_LAMBDA) * F.col("rel_g")
-        - F.lit(round(1 - MMR_LAMBDA, 10)) * F.col("ms_g")
-    )
-    picks = []
-    for rank in range(1, MMR_K + 1):
-        top = (
-            cands.orderBy(score.desc(), F.col("vec_id"))
-            .limit(1)
-            .collect()[0]
-        )  # 1-row argmax probe per round; k is a constant
-        picks.append((rank, top["vec_id"], top["rel_g"] / _MMR_GRID))
-        # ONE pre-rendered SQL string per round (round 14, the dot()
-        # note applied): the Column form built the 64-element pick
-        # vector as 65 py4j calls + a lambda fold per round — ~1.4 s
-        # of driver socket latency across k=10 rounds. The expression
-        # tree is unchanged (same zip_with/aggregate fold, same
-        # double literals via exact repr round-trip), so the grid
-        # floor — and the oracle hash — are bit-identical.
-        pick_vec_sql = (
-            "array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in top["emb"]) + ")"
-        )
-        fold_sql = (
-            f"aggregate(zip_with(emb, {pick_vec_sql}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        cands = cands.where(F.col("vec_id") != top["vec_id"]).selectExpr(
-            "vec_id",
-            "emb",
-            "rel_g",
-            f"GREATEST(ms_g, CAST(FLOOR({fold_sql} * {_MMR_GRID}) AS BIGINT)) AS ms_g",
-        )
-        if rank % 3 == 0:
-            cands = cands.localCheckpoint(eager=True)
-    # one explicit slice for the k-row result (see pagerank_exact's
-    # driver-tier note: bare createDataFrame pickles into
-    # defaultParallelism worker spin-ups; coalesce(1) is 10× worse)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(picks, 1),
-        "rank bigint, vec_id bigint, rel double",
+    return (
+        e.select("vec_id", "embedding")
+        .coalesce(1)
+        .mapInArrow(_mmr_arrow, "rank bigint, vec_id bigint, rel double")
     )
 
 

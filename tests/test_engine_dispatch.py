@@ -3,6 +3,7 @@ engine's lock and engine statements refuse bound parameters — plus the
 temp-view hygiene of the code paths that register private views. The
 statement classifier itself is pinned in test_server.py."""
 
+import sys
 import threading
 
 import pytest
@@ -94,3 +95,42 @@ def test_operator_inputs_leave_no_temp_views(spark, sf_dir, tables):
     assert _temp_views(spark) - before == set()
     for df in built:
         df.count()
+
+
+def test_reads_survive_concurrent_create_table(spark):
+    """Reads take no lock, so a read's rewrite must not iterate the
+    live table catalog while a CREATE TABLE on another thread inserts
+    into it ('dictionary changed size during iteration')."""
+    eng = Engine(spark)
+    for i in range(40):
+        eng.sql(f"CREATE TABLE rd_base{i} (x: Integer)")
+    stop = threading.Event()
+    errors: list[BaseException] = []
+
+    def reader() -> None:
+        try:
+            while not stop.is_set():
+                eng.sql("SELECT 1 AS one")
+        except BaseException as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    # switch threads every microsecond, so a reader is regularly
+    # suspended inside its catalog scan while the writer runs
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    readers = [threading.Thread(target=reader) for _ in range(4)]
+    try:
+        for t in readers:
+            t.start()
+        for i in range(40):
+            eng.sql(f"CREATE TABLE rd_new{i} (x: Integer)")
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers)
+    assert not errors, errors[0]
+    for i in range(40):
+        eng.sql(f"DROP TABLE rd_base{i}")
+        eng.sql(f"DROP TABLE rd_new{i}")

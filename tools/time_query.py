@@ -5,8 +5,11 @@ Usage:
 
 Methodology matches bench.py (guide §1.4): one untimed warmup
 (plan/codegen/read warm), then N timed noop-sink materializations;
-prints per-run seconds plus min/median. Jobs are labelled with
-setJobDescription for UI attribution (guide §1.5).
+prints per-run seconds plus min/median. Every run is split into its
+two layers: the driver build (seconds, and the Spark jobs it ran —
+counted through the run's job group and ``statusTracker``) and the
+noop-sink execution (seconds). Jobs are labelled with their group for
+UI attribution (guide §1.5).
 
 ``--scale N`` with N > 1 times the keys on the N×-replicated sf0.1
 fixture (tools/stress_scale.py's key-shifted build) instead of
@@ -17,6 +20,7 @@ see identical bytes.
 
 from __future__ import annotations
 
+import functools
 import os
 import statistics
 import sys
@@ -26,6 +30,27 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def timed_run(spark, build, group: str) -> tuple[float, int, float]:
+    """(build s, build jobs, exec s) of one build + noop-sink write.
+
+    The build runs under job group ``<group>-build``: any job it starts
+    (an eager action, or a checkpoint whose exchanges AQE runs at
+    build time) is counted from ``statusTracker``; the write runs
+    under ``<group>-exec``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(f"{group}-build", f"{group}: build")
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    sc.setJobGroup(f"{group}-exec", f"{group}: noop write")
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setJobDescription(None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(f"{group}-build"))
+    return t1 - t0, jobs, t2 - t1
 
 
 def main() -> None:
@@ -69,15 +94,16 @@ def main() -> None:
 
     print(f"scale={scale} cpus={cpus} load(start)={os.getloadavg()[0]:.2f}")
     for key in args:
-        spark.sparkContext.setJobDescription(f"{key}: warmup")
-        qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        build = functools.partial(qs[key], spark, sf_dir)
+        timed_run(spark, build, f"{key}-warmup")
         samples = []
         for i in range(runs):
-            spark.sparkContext.setJobDescription(f"{key}: run {i}")
-            t0 = time.time()
-            qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        spark.sparkContext.setJobDescription(None)
+            b_s, b_jobs, x_s = timed_run(spark, build, f"{key}-run{i}")
+            samples.append(b_s + x_s)
+            print(
+                f"  {key} run {i}: build={b_s:.3f}s build_jobs={b_jobs} exec={x_s:.3f}s",
+                flush=True,
+            )
         fmt = " ".join(f"{s:.3f}" for s in samples)
         print(
             f"{key:32s} min={min(samples):.3f} med={statistics.median(samples):.3f} runs=[{fmt}]",
