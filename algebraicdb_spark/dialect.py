@@ -880,7 +880,7 @@ def _find_matching_paren(s: str, open_idx: int) -> int:
             depth -= 1
             if depth == 0:
                 return i
-    raise AdtError("unbalanced parentheses in macro call")
+    raise AdtError("unbalanced parentheses")
 
 
 # -- QUALIFY clause -------------------------------------------------------

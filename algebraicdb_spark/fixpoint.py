@@ -54,7 +54,13 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from algebraicdb_spark.dialect import AdtError, _mask_strings, _unmask_strings
+from algebraicdb_spark.dialect import (
+    AdtError,
+    _depth_at,
+    _find_matching_paren,
+    _mask_strings,
+    _unmask_strings,
+)
 
 _HEAD_RE = re.compile(r"(?is)^\s*WITH\s+(?P<kind>RECURSIVE|ITERATE)\b")
 _IDENT_RE = re.compile(r"\s*(?P<name>[A-Za-z_][A-Za-z0-9_]*)")
@@ -73,22 +79,6 @@ _VIEW_SEQ = itertools.count(1)
 
 def is_fixpoint(stmt: str) -> bool:
     return _HEAD_RE.match(stmt) is not None
-
-
-def _matching_paren(s: str, open_idx: int) -> int:
-    depth = 0
-    for i in range(open_idx, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-    raise AdtError("unbalanced parentheses in WITH clause")
-
-
-def _depth_at(s: str, idx: int) -> int:
-    return s.count("(", 0, idx) - s.count(")", 0, idx)
 
 
 def _refs(masked_body: str, name: str) -> int:
@@ -129,7 +119,7 @@ def _parse(stmt: str) -> tuple[str, list[_Cte], str, list[str]]:
         rest = masked[pos:].lstrip()
         if rest.startswith("("):
             open_idx = masked.index("(", pos)
-            close = _matching_paren(masked, open_idx)
+            close = _find_matching_paren(masked, open_idx)
             cols = [c.strip() for c in masked[open_idx + 1 : close].split(",")]
             pos = close + 1
         max_iters = None
@@ -143,7 +133,7 @@ def _parse(stmt: str) -> tuple[str, list[_Cte], str, list[str]]:
         if not am:
             raise AdtError(f"WITH {kind}: expected AS ( after {name!r}")
         open_idx = am.end() - 1
-        close = _matching_paren(masked, open_idx)
+        close = _find_matching_paren(masked, open_idx)
         ctes.append(_Cte(name, cols, masked[open_idx + 1 : close], max_iters))
         pos = close + 1
         tail = masked[pos:].lstrip()

@@ -38,10 +38,11 @@ Iceberg semantics covered (spec: https://iceberg.apache.org/spec/):
 
 v2 merge-on-read deletes are applied at scan time. POSITION deletes:
 delete manifests fan out to parquet delete files of (file_path, pos)
-rows, and ``snapshot`` anti-joins the data scan against them on
-Spark's ``_metadata`` file-path/row-index columns — path-exact
-matching, safe without sequence numbers because data file paths are
-immutable and unique. EQUALITY deletes (``content == 2``): each delete
+rows, and ``snapshot`` anti-joins the data scan against them on the
+row identity (recorded file URI, row ordinal) of the table's one
+merge-on-read scan, ``_identity_scan`` — path-exact matching, safe
+without sequence numbers because data file paths are immutable and
+unique. EQUALITY deletes (``content == 2``): each delete
 file's rows remove matching rows (null-safe equality on the columns
 its ``equality_ids`` name) from data files with STRICTLY LOWER data
 sequence numbers — the spec's ordering rule, honored via the manifest
@@ -49,9 +50,7 @@ sequence-number inheritance chain. Loud refusals (silently wrong >
 unsupported): delete files whose sequence numbers / equality_ids are
 unresolvable, equality_ids naming nested fields, ``live_paths`` on a
 snapshot carrying any deletes (a raw path list would resurrect
-deleted rows — use ``snapshot``), delete manifests committed inside a
-``changes`` window (adds-only feed), unknown codecs and format
-versions.
+deleted rows — use ``snapshot``), unknown codecs and format versions.
 
 Production swaps this class for pyiceberg behind the same surface
 (``live_paths`` / ``snapshot``); the final scan is already just a
@@ -311,46 +310,6 @@ _EXISTING, _ADDED, _DELETED = 0, 1, 2
 # 2147483540 / 2147483539): materialized by lineage-preserving
 # rewrites, NEVER surfaced by user-facing reads
 _RESERVED_ROW_COLS = ("_row_id", "_last_updated_sequence_number")
-
-
-def apply_equality_strata(
-    spark: "SparkSession",
-    df: "DataFrame",
-    eq_deletes: list[tuple[str, int, tuple[int, ...]]],
-    by_id: dict[int, str],
-    path: str,
-) -> "DataFrame":
-    """Apply v2 EQUALITY DELETES to ``df`` (which must carry each
-    row's data sequence number as ``__seq``): per the spec, each
-    (sequence, equality_ids) stratum removes null-safe-matching rows
-    from data with STRICTLY LOWER sequence numbers — one broadcast
-    LEFT ANTI join per stratum. The ONE implementation both the
-    reader's scan and the writer's merge-on-read probe use, so the
-    two can never disagree about what a delete reaches."""
-    from pyspark.sql import functions as F
-
-    groups: dict[tuple[int, tuple[int, ...]], list[str]] = {}
-    for p, seq, ids in eq_deletes:
-        groups.setdefault((seq, ids), []).append(p)
-    for (seq, ids), dpaths in sorted(groups.items()):
-        missing = [i for i in ids if i not in by_id]
-        if missing:
-            raise NotImplementedError(
-                f"{path}: equality_ids {missing} name nested or "
-                "unknown fields (not in the current schema's top "
-                "level) — use a full Iceberg client"
-            )
-        names = [by_id[i] for i in ids]
-        eq = spark.read.parquet(*dpaths).select(
-            *[F.col(c).alias(f"__eq_{c}") for c in names]
-        ).dropDuplicates()
-        conds = [df[c].eqNullSafe(eq[f"__eq_{c}"]) for c in names]
-        conds.append(F.col("__seq") < F.lit(seq))
-        pred = conds[0]
-        for c in conds[1:]:
-            pred = pred & c
-        df = df.join(F.broadcast(eq), pred, "left_anti")
-    return df
 
 
 class IcebergTable:
@@ -1085,118 +1044,6 @@ class IcebergTable:
             p for p, _u, _s in data if kept is None or p in kept
         )
 
-    def changes(
-        self,
-        spark: SparkSession,
-        since_snapshot_id: int | None,
-        to_snapshot_id: int | None = None,
-    ) -> DataFrame | None:
-        """Incremental APPEND scan between snapshots — Iceberg's
-        incremental read, the twin of ``DeltaLogTable.changes``: the
-        data
-        files ADDED by each snapshot in the parent chain
-        (``since``, ``to``], one multi-path parquet read. Per the same
-        adds-only contract: snapshots whose summary operation is
-        ``replace`` (compaction — content unchanged) are SKIPPED;
-        any other non-append operation, or a DELETED manifest entry
-        committed inside the window, refuses — rebuild from
-        ``snapshot()``. Carried-forward entries (``snapshot_id`` ≠
-        the committing snapshot) are ignored: a later snapshot's
-        manifests re-list older files as EXISTING and older deletes
-        as DELETED, and neither is new information for the window.
-        Entries with a null ``snapshot_id`` inherit the manifest's
-        ``added_snapshot_id`` (the spec's inheritance rule) — without
-        that, a reused manifest whose null-sid entries were counted
-        once per walked snapshot would duplicate rows in the feed;
-        when even that is absent (v1 inline form) attribution is
-        impossible and the read REFUSES — a reused manifest would
-        otherwise double-count across successive windows.
-
-        ``since`` must be an ancestor of ``to`` along
-        ``parent-snapshot-id`` — Iceberg history is a chain of
-        snapshots, not versions, so the walk IS the window."""
-        chain = self._window_chain(since_snapshot_id, to_snapshot_id)
-        paths: list[str] = []
-        for snap in chain:
-            sid = snap["snapshot-id"]
-            op = (snap.get("summary") or {}).get("operation", "append")
-            if op == "replace":
-                continue  # compaction traffic, content unchanged
-            if op != "append":
-                raise ValueError(
-                    f"{self.path}: snapshot {sid} operation {op!r} inside "
-                    f"the change window — the feed is adds-only; rebuild "
-                    "from snapshot()"
-                )
-            for mpath, m_sid, m_content, _m_seq in self._manifests(snap):
-                if m_content != 0:
-                    # a delete manifest COMMITTED in the window is a row
-                    # mutation — adds-only breach; one carried forward
-                    # from at-or-before ``since`` predates every file
-                    # the window adds (paths are immutable and unique,
-                    # so its position deletes cannot reference them)
-                    # and is not new information
-                    if m_sid is None or m_sid == sid:
-                        raise ValueError(
-                            f"{self.path}: snapshot {sid} carries a delete "
-                            "manifest inside the change window — the feed "
-                            "is adds-only; rebuild from snapshot()"
-                        )
-                    continue
-                for entry in AvroFileReader(mpath).records:
-                    e_sid = entry.get("snapshot_id")
-                    if e_sid is None:
-                        if m_sid is None:
-                            raise NotImplementedError(
-                                f"{self.path}: manifest entry in {mpath} "
-                                "has no snapshot_id and the v1 inline "
-                                "manifest list carries no "
-                                "added_snapshot_id to inherit — "
-                                "attribution is impossible, and a reused "
-                                "manifest would double-count; rebuild "
-                                "from snapshot()"
-                            )
-                        e_sid = m_sid
-                    if e_sid != sid:
-                        continue  # carried forward from an older commit
-                    status = entry.get("status", _EXISTING)
-                    if status == _DELETED:
-                        raise ValueError(
-                            f"{self.path}: snapshot {sid} deleted "
-                            f"{entry['data_file'].get('file_path')} inside "
-                            "the change window — the feed is adds-only; "
-                            "rebuild from snapshot()"
-                        )
-                    if status != _ADDED:
-                        continue
-                    df = entry["data_file"]
-                    if df.get("content", 0) != 0:
-                        raise NotImplementedError(
-                            f"{self.path}: delete file "
-                            f"{df.get('file_path')} — merge-on-read tables "
-                            "need a full Iceberg client"
-                        )
-                    fmt = str(df.get("file_format", "PARQUET")).upper()
-                    if fmt != "PARQUET":
-                        raise NotImplementedError(
-                            f"{self.path}: {fmt} data file — parquet scans "
-                            "only"
-                        )
-                    paths.append(self._resolve(df["file_path"]))
-        if not paths:
-            return None
-        out = sorted(set(paths))
-        gone = [p for p in out if not os.path.exists(p)]
-        if gone:
-            raise ValueError(
-                f"{self.path}: change window references data files absent "
-                f"from this copy ({gone[:3]}…) — either maintenance "
-                "expired them (consume within retention / rebuild from "
-                "snapshot()) or their absolute URIs resolve outside this "
-                "local table copy"
-            )
-        return spark.read.parquet(*out).drop(*_RESERVED_ROW_COLS)
-
     def _window_chain(
         self, since_snapshot_id: int | None, to_snapshot_id: int | None
     ) -> list[dict]:
@@ -1303,14 +1150,14 @@ class IcebergTable:
         since_snapshot_id: int | None,
         to_snapshot_id: int | None = None,
     ) -> DataFrame | None:
-        """ROW-LEVEL change feed for snapshots (``since``, ``to``] —
-        the iceberg twin of ``DeltaLogTable.changes_cdf``,
+        """The table's ROW-LEVEL change feed for snapshots (``since``,
+        ``to``] — the iceberg twin of ``DeltaLogTable.changes_cdf``,
         Delta CDF's shape: the table columns plus ``_change_type``
         (insert / delete / update_preimage / update_postimage) and
-        ``_commit_version`` (the snapshot id). Where ``changes`` (the
-        adds-only fast path) refuses any mutating snapshot, this feed
-        RESOLVES every write shape this repo's writer (and conformant
-        engines) commit:
+        ``_commit_version`` (the snapshot id). It is the one change
+        feed: an adds-only window is simply a feed of ``insert`` rows,
+        and every write shape this repo's writer (and conformant
+        engines) commit resolves:
 
         - ``append`` → its added files' rows as ``insert`` (no diff);
         - ``replace`` (compaction / purge) → skipped, content
@@ -1321,12 +1168,9 @@ class IcebergTable:
           O(rewritten rows); labeled update_preimage/update_postimage
           when the snapshot summary records updated/upserted records,
           delete/insert otherwise (Delta CDF's own labeling rule);
-        - merge-on-read POSITION deletes → the delete files' (uri,
-          pos) rows name the preimages exactly: one scan of just the
-          referenced data files inner-joined on the spec's row
-          identity (writers only position-delete LIVE rows — the
-          invariant this repo's writer enforces by probing
-          merge-on-read);
+        - merge-on-read POSITION deletes and v3 deletion-vector flips →
+          ``_position_preimages``: the rows they newly name, through
+          the table's one row-identity scan;
         - EQUALITY-delete upserts → preimages are the PARENT
           snapshot's rows matching the delete keys (``snapshot(
           parent)`` applies all earlier strata, so an already-deleted
@@ -1337,10 +1181,12 @@ class IcebergTable:
           deletes carrying no positional info (the same scan the
           engines' changelog procedures run).
 
-        Retention contract: the window needs the referenced bytes —
-        files ``expire_snapshots`` already reclaimed refuse loudly;
-        rebuild the consumer from ``snapshot()``. Returns None when
-        the window changes nothing."""
+        Window contract: ``since`` must be an ancestor of ``to``
+        (``_window_chain``); entries with no snapshot attribution
+        refuse (``_snapshot_delta``); the window needs the referenced
+        bytes — files ``expire_snapshots`` already reclaimed refuse
+        loudly; rebuild the consumer from ``snapshot()``. Returns None
+        when the window changes nothing."""
         from pyspark.sql import functions as F
 
         chain = self._window_chain(since_snapshot_id, to_snapshot_id)
@@ -1403,101 +1249,10 @@ class IcebergTable:
                         "files but no parent — preimages are "
                         "underivable; rebuild from snapshot()"
                     )
-                if dv_added:
-                    # v3 deletion-vector flip: the commit replaced a
-                    # data file's DV with a superset — the preimages
-                    # are exactly the NEWLY deleted positions (new DV
-                    # minus the parent snapshot's DV for the same
-                    # file). Decoding both sides driver-side keeps
-                    # this O(changed positions) in metadata plus ONE
-                    # bounded scan of just the referenced files.
-                    new_map = self._dv_positions_map(dv_added)
-                    old_map = self._dv_positions_map(
-                        self._files(parent)[3]
-                    )
-                    flip_rows: list[tuple[str, int]] = []
-                    for uri, new_pos in new_map.items():
-                        old = set(old_map.get(uri, []))
-                        new = set(new_pos)
-                        if not old <= new:
-                            raise ValueError(
-                                f"{self.path}: snapshot {sid} replaced "
-                                f"the DV for {uri} with a NON-superset "
-                                "— that resurrects deleted rows, which "
-                                "the v3 spec forbids; corrupt history"
-                            )
-                        flip_rows += [(uri, p) for p in sorted(new - old)]
-                    if flip_rows:
-                        uris = sorted({u for u, _p in flip_rows})
-                        resolved = [self._resolve(u) for u in uris]
-                        missing = [p for p in resolved
-                                   if not os.path.exists(p)]
-                        if missing:
-                            raise ValueError(
-                                f"{self.path}: deletion vectors "
-                                f"reference reclaimed files "
-                                f"({missing[:3]}…) — consume within "
-                                "retention"
-                            )
-                        dels = spark.createDataFrame(
-                            flip_rows, "__uri string, __pos long"
-                        )
-                        src = spark.read.parquet(*resolved).select(
-                            "*",
-                            F.col("_metadata.file_path").alias("__fp"),
-                            F.col("_metadata.row_index").alias("__pos"),
-                        )
-                        src = src.withColumn(
-                            "__lp", local_path(F.col("__fp"))
-                        )
-                        lp_map = spark.createDataFrame(
-                            list(zip(resolved, uris)),
-                            "__lp string, __uri string",
-                        )
-                        pre = (
-                            src.join(F.broadcast(lp_map), "__lp", "inner")
-                            .join(F.broadcast(dels), ["__uri", "__pos"],
-                                  "inner")
-                            .drop("__fp", "__lp", "__uri", "__pos",
-                                  *_RESERVED_ROW_COLS)
-                        )
-                        frames.append(tag(pre, pre_l))
-                if pos_d:
-                    dels = spark.read.parquet(*pos_d).select(
-                        F.col("file_path").alias("__uri"),
-                        F.col("pos").cast("long").alias("__pos"),
-                    ).dropDuplicates()
-                    uris = sorted({
-                        r["__uri"]
-                        for r in dels.select("__uri")
-                        .dropDuplicates().collect()
-                    })
-                    resolved = [self._resolve(u) for u in uris]
-                    missing = [p for p in resolved
-                               if not os.path.exists(p)]
-                    if missing:
-                        raise ValueError(
-                            f"{self.path}: position deletes reference "
-                            f"reclaimed files ({missing[:3]}…) — "
-                            "consume within retention"
-                        )
-                    src = spark.read.parquet(*resolved).select(
-                        "*",
-                        F.col("_metadata.file_path").alias("__fp"),
-                        F.col("_metadata.row_index").alias("__pos"),
-                    )
-                    src = src.withColumn("__lp", local_path(F.col("__fp")))
-                    mapping = spark.createDataFrame(
-                        list(zip(resolved, uris)),
-                        "__lp string, __uri string",
-                    )
-                    pre = (
-                        src.join(F.broadcast(mapping), "__lp", "inner")
-                        .join(F.broadcast(dels), ["__uri", "__pos"],
-                              "inner")
-                        .drop("__fp", "__lp", "__uri", "__pos",
-                              *_RESERVED_ROW_COLS)
-                    )
+                pre = self._position_preimages(
+                    spark, sid, parent, pos_d, dv_added
+                )
+                if pre is not None:
                     frames.append(tag(pre, pre_l))
                 if eq_d:
                     groups = {}
@@ -1569,7 +1324,208 @@ class IcebergTable:
             out = out.unionByName(fr)
         return out
 
+    def _position_preimages(
+        self,
+        spark: SparkSession,
+        sid: int,
+        parent: int,
+        pos_d: list[str],
+        dv_added: list[tuple[str, str | None, int | None, int | None]],
+    ) -> DataFrame | None:
+        """The rows snapshot ``sid``'s position-delete files and
+        deletion vectors NEWLY delete (None when they name none): the
+        row-identity scan over just the data files they reference,
+        INNER-joined on (uri, pos) — writers only position-delete LIVE
+        rows, the invariant this repo's writer enforces by probing
+        merge-on-read. A v3 DV replaces a file's vector with a
+        superset, so its preimages are the new vector minus the
+        parent's for the same file, decoded driver-side: O(changed
+        positions) in metadata plus ONE bounded scan."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        flips: dict[str, list[int]] = {}
+        if dv_added:
+            old_map = self._dv_positions_map(self._files(parent)[3])
+            for uri, new_pos in self._dv_positions_map(dv_added).items():
+                old, new = set(old_map.get(uri, [])), set(new_pos)
+                if not old <= new:
+                    raise ValueError(
+                        f"{self.path}: snapshot {sid} replaced the DV "
+                        f"for {uri} with a NON-superset — that "
+                        "resurrects deleted rows, which the v3 spec "
+                        "forbids; corrupt history"
+                    )
+                if new - old:
+                    flips[uri] = sorted(new - old)
+        uris = set(flips)
+        for p in pos_d:
+            uris.update(pc.unique(
+                pq.read_table(p, columns=["file_path"]).column(0)
+            ).to_pylist())
+        if not uris:
+            return None
+        data = [(self._resolve(u), u, None) for u in sorted(uris)]
+        missing = [p for p, _u, _s in data if not os.path.exists(p)]
+        if missing:
+            raise ValueError(
+                f"{self.path}: position deletes or deletion vectors "
+                f"reference reclaimed files ({missing[:3]}…) — consume "
+                "within retention"
+            )
+        return self._identity_scan(
+            spark, data, pos_deletes=pos_d, dv=flips, join="inner"
+        ).drop("__uri", "__pos", *_RESERVED_ROW_COLS)
+
     # -- reads ---------------------------------------------------------
+
+    def _identity_scan(
+        self,
+        spark: SparkSession,
+        data: list[tuple[str, str, int | None]],
+        pos_deletes: list[str] = (),
+        eq_deletes: list[tuple[str, int, tuple[int, ...]]] = (),
+        dv: dict[str, list[int]] | None = None,
+        first_ids: dict[str, int | None] | None = None,
+        join: str = "left_anti",
+    ) -> DataFrame:
+        """The table's ONE merge-on-read scan: ``data`` = [(resolved
+        path, recorded uri, data sequence number)] read as one
+        multi-path parquet scan with the spec's row identity —
+        ``__uri``, the data file exactly as its manifest records it
+        (the address position-delete rows and deletion vectors name;
+        matching on it, not on local resolution, keeps moved/copied
+        tables correct), and ``__pos``, the physical row ordinal
+        (Spark's ``_metadata`` row index) — then joined with the
+        position-delete rows of ``pos_deletes`` and the decoded
+        deletion-vector positions ``dv`` on that identity:
+        ``left_anti`` applies them (the snapshot, the writer's live
+        rows), ``inner`` keeps exactly the rows they name (the change
+        feed's preimages). Equality deletes apply last: each
+        (sequence, equality_ids) stratum removes null-safe-matching
+        rows from data with STRICTLY LOWER sequence numbers (the
+        spec's rule), one broadcast anti-join per stratum.
+
+        Matching needs no sequence bookkeeping for positions: data
+        file paths are immutable and unique, so a position delete can
+        only reference the one file it names, and a compaction that
+        rewrites the file drops both it and its deletes. The file
+        mapping (local path → recorded uri, sequence) is file-count
+        sized and broadcast, as are the decoded deletion-vector
+        positions and a preimage's delete set; the position-delete
+        files are left to the planner.
+
+        ``first_ids`` (v3, {recorded uri: first_row_id}) MATERIALIZES
+        row lineage per the spec's inheritance rule: an existing
+        materialized ``_row_id`` / ``_last_updated_sequence_number``
+        wins; otherwise first_row_id + physical ordinal / the file's
+        data sequence number; files with no lineage (pre-upgrade) stay
+        null, so a rewrite assigns them fresh ids. The read then merges
+        schemas so materialized columns surface across mixed file
+        generations.
+
+        Returns the files' columns (lineage columns included) plus
+        ``__uri`` and ``__pos``."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import functions as F
+
+        if eq_deletes:
+            unseq = [p for p, _u, s in data if s is None]
+            if unseq:
+                raise NotImplementedError(
+                    f"{self.path}: equality deletes are live but data "
+                    f"file(s) {unseq[:3]} have no resolvable sequence "
+                    "number — ordering them is impossible; use a full "
+                    "Iceberg client"
+                )
+        for dp in pos_deletes:  # loud schema check beats an analysis error
+            names = pq.ParquetFile(dp).schema_arrow.names
+            if not {"file_path", "pos"} <= set(names):
+                raise ValueError(
+                    f"{self.path}: position delete file {dp} lacks the "
+                    f"spec columns file_path/pos (has {names})"
+                )
+        reader = spark.read
+        if first_ids is not None:
+            reader = reader.option("mergeSchema", "true")
+        df = reader.parquet(*[p for p, _u, _s in data]).select(
+            "*",
+            F.col("_metadata.file_path").alias("__fp"),
+            F.col("_metadata.row_index").alias("__pos"),
+        )
+        # _metadata is a scan-only hidden column, so the projected
+        # alias is normalized; it must equal the mapping's plain local
+        # path — a mismatch matches nothing in the inner join below:
+        # whole-file loss, not just unapplied deletes
+        df = df.withColumn("__lp", local_path(F.col("__fp")))
+        ids = first_ids or {}
+        mapping = spark.createDataFrame(
+            [(p, u, s, ids.get(u)) for p, u, s in data],
+            "__lp string, __uri string, __seq long, __fid long",
+        )
+        df = df.join(F.broadcast(mapping), "__lp", "inner")
+        if first_ids is not None:
+            rid_src = (
+                F.col("_row_id") if "_row_id" in df.columns
+                else F.lit(None).cast("long")
+            )
+            lus_src = (
+                F.col("_last_updated_sequence_number")
+                if "_last_updated_sequence_number" in df.columns
+                else F.lit(None).cast("long")
+            )
+            df = df.withColumn(
+                "_row_id",
+                F.coalesce(rid_src, F.col("__fid") + F.col("__pos")),
+            ).withColumn(
+                "_last_updated_sequence_number",
+                F.coalesce(
+                    lus_src,
+                    F.when(F.col("__fid").isNotNull(), F.col("__seq")),
+                ),
+            )
+        dels = [
+            spark.read.parquet(*pos_deletes).select(
+                F.col("file_path").alias("__uri"),
+                F.col("pos").cast("long").alias("__pos"),
+            )
+        ] if pos_deletes else []
+        if dv:
+            # driver-decoded, metadata-sized — and a driver-built frame
+            # carries no size statistics, so the hint is what broadcasts it
+            dels.append(F.broadcast(spark.createDataFrame(
+                [(u, int(p)) for u, ps in dv.items() for p in ps],
+                "__uri string, __pos long",
+                verifySchema=False,  # (str, int) tuples by construction
+            )))
+        if join == "inner" and dels:
+            # one preimage per named row; the set is what ONE snapshot
+            # deleted
+            d = dels[0] if len(dels) == 1 else dels[0].unionByName(dels[1])
+            dels = [F.broadcast(d.dropDuplicates())]
+        for d in dels:
+            df = df.join(d, ["__uri", "__pos"], join)
+        strata: dict[tuple[int, tuple[int, ...]], list[str]] = {}
+        for p, seq, eq_ids in eq_deletes:
+            strata.setdefault((seq, eq_ids), []).append(p)
+        by_id = self._field_names_by_id() if strata else {}
+        for (seq, eq_ids), dpaths in sorted(strata.items()):
+            missing = [i for i in eq_ids if i not in by_id]
+            if missing:
+                raise NotImplementedError(
+                    f"{self.path}: equality_ids {missing} name nested or "
+                    "unknown fields (not in the current schema's top "
+                    "level) — use a full Iceberg client"
+                )
+            names = [by_id[i] for i in eq_ids]
+            eq = spark.read.parquet(*dpaths).select(
+                *[F.col(c).alias(f"__eq_{c}") for c in names]
+            ).dropDuplicates()
+            pred = F.col("__seq") < F.lit(seq)
+            for c in names:
+                pred = pred & df[c].eqNullSafe(eq[f"__eq_{c}"])
+            df = df.join(F.broadcast(eq), pred, "left_anti")
+        return df.drop("__fp", "__lp", "__seq", "__fid")
 
     def snapshot(
         self,
@@ -1579,37 +1535,22 @@ class IcebergTable:
     ) -> DataFrame:
         """Scan the (possibly time-traveled) snapshot as one multi-path
         parquet read — distributed, prunable, same as every client.
+        A snapshot with no live delete files is exactly that read.
 
-        v2 POSITION DELETES are applied: a merge-on-read snapshot's
-        delete files are parquet rows of (file_path, pos) naming exact
-        (data file URI, row ordinal) pairs, so the scan reads the data
-        files with Spark's ``_metadata.file_path`` / ``row_index``
-        hidden columns and LEFT ANTI-joins the delete set on both —
-        the same plan every MoR-capable engine executes. Matching is
-        safe without sequence-number bookkeeping because data file
-        paths are immutable and unique: a position delete can only
-        ever reference the one file it names, and a compaction that
-        rewrites the file drops both it and its deletes from the new
-        snapshot's manifests. Scale shape: data stays one distributed
-        pruned read; the delete set is a second (usually tiny) read,
-        and the anti-join broadcasts when small — AQE's call; the
-        file-count-sized URI mapping (local path → recorded URI, which
-        the delete rows reference) is broadcast explicitly.
-
-        v2 EQUALITY DELETES are applied too (round-11; previously a
-        refusal): each equality delete file carries rows of values for
-        the columns its ``equality_ids`` name, and per the spec deletes
-        every matching row in data files with STRICTLY LOWER data
-        sequence numbers (so a re-insert of the same key in a LATER
-        file survives). Lowering: data rows carry their file's sequence
-        number via the same broadcast file mapping, and each
-        (sequence, ids) delete stratum becomes one LEFT ANTI join with
-        null-safe equality on the named columns plus ``data_seq <
-        delete_seq`` — delete sets are usually tiny, so AQE broadcasts
-        them. Refusals narrowed to genuinely unorderable inputs: a
-        delete file with no sequence number / no equality_ids, a data
-        file with no resolvable sequence number under a live equality
-        delete, or equality_ids naming nested/unknown fields.
+        Live deletes of every tier are applied through the one
+        row-identity scan (``_identity_scan``): v2 POSITION DELETES
+        (parquet rows of (file_path, pos) naming exact (data file URI,
+        row ordinal) pairs) and v3 DELETION VECTORS (roaring positions
+        decoded driver-side — KBs of metadata, the Delta DV path's
+        budget) anti-join on the row identity; v2 EQUALITY DELETES
+        delete every null-safe-matching row in data files with
+        STRICTLY LOWER data sequence numbers (so a re-insert of the
+        same key in a LATER file survives), one anti-join per
+        (sequence, ids) stratum. Refusals are narrowed to genuinely
+        unorderable inputs: a delete file with no sequence number / no
+        equality_ids, a data file with no resolvable sequence number
+        under a live equality delete, or equality_ids naming
+        nested/unknown fields.
 
         A raw path list for a snapshot with any deletes refuses
         (``live_paths``) — scanning it would resurrect deleted rows."""
@@ -1630,80 +1571,17 @@ class IcebergTable:
                     *_RESERVED_ROW_COLS
                 )
             data = pruned
-        paths = [p for p, _u, _s in data]
         if not pos_deletes and not eq_deletes and not dvs:
             # lineage-materialized files (a v3 rewrite's _row_id /
             # _last_updated_sequence_number columns) stay METADATA —
             # the user-facing snapshot never surfaces reserved columns
-            return spark.read.parquet(*paths).drop(*_RESERVED_ROW_COLS)
-        from pyspark.sql import functions as F
-
-        if eq_deletes:
-            unseq = [p for p, _u, s in data if s is None]
-            if unseq:
-                raise NotImplementedError(
-                    f"{self.path}: equality deletes are live but data "
-                    f"file(s) {unseq[:3]} have no resolvable sequence "
-                    "number — ordering them is impossible; use a full "
-                    "Iceberg client"
-                )
-        for dp in pos_deletes:  # loud schema check beats an analysis error
-            import pyarrow.parquet as pq
-
-            names = pq.ParquetFile(dp).schema_arrow.names
-            if not {"file_path", "pos"} <= set(names):
-                raise ValueError(
-                    f"{self.path}: position delete file {dp} lacks the "
-                    f"spec columns file_path/pos (has {names})"
-                )
-        df = spark.read.parquet(*paths).select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        # the normalized path must equal the mapping's plain local
-        # path: a mismatch matches nothing in the inner join below —
-        # whole-file loss, not just unapplied deletes
-        df = df.withColumn("__lp", local_path(F.col("__fp")))
-        mapping = spark.createDataFrame(
-            [(p, u, s) for p, u, s in data],
-            "__lp string, __uri string, __seq long",
-        )
-        cols = [
-            c for c in df.columns
-            if c not in ("__fp", "__pos", "__lp")
-            and c not in _RESERVED_ROW_COLS
-        ]
-        df = df.join(F.broadcast(mapping), "__lp", "inner")
-        del_frames = []
-        if pos_deletes:
-            del_frames.append(spark.read.parquet(*pos_deletes).select(
-                F.col("file_path").alias("__uri"),
-                F.col("pos").cast("long").alias("__pos"),
-            ))
-        if dvs:
-            # v3 deletion vectors: driver-decoded roaring positions
-            # (a DV is KBs of metadata, same budget as the Delta DV
-            # path) joined exactly like position-delete rows
-            rows = [
-                (u, int(p))
-                for u, ps in self._dv_positions_map(dvs).items()
-                for p in ps
-            ]
-            del_frames.append(spark.createDataFrame(
-                rows, "__uri string, __pos long"
-            ))
-        if del_frames:
-            dels = del_frames[0]
-            for extra in del_frames[1:]:
-                dels = dels.unionByName(extra)
-            df = df.join(dels, ["__uri", "__pos"], "left_anti")
-        if eq_deletes:
-            df = apply_equality_strata(
-                spark, df, eq_deletes, self._field_names_by_id(),
-                self.path,
-            )
-        return df.select(*cols)
+            return spark.read.parquet(
+                *[p for p, _u, _s in data]
+            ).drop(*_RESERVED_ROW_COLS)
+        return self._identity_scan(
+            spark, data, pos_deletes, eq_deletes,
+            self._dv_positions_map(dvs),
+        ).drop("__uri", "__pos", *_RESERVED_ROW_COLS)
 
 
 class IcebergViewBase:
@@ -1721,14 +1599,14 @@ class IcebergViewBase:
     - ``latest_version()`` — the current snapshot's sequence number
       (-1 on an empty table, matching a ``DeltaLogTable`` base);
     - ``_window_has_dc_removes(lo, hi)`` — True when any snapshot in
-      the window declares a non-append, non-replace operation (the
-      spec REQUIRES ``summary.operation``), routing the refresh to
-      the signed row-level feed; ``replace`` (compaction) stays on
-      the adds-only path, which skips it;
-    - ``changes`` / ``changes_cdf`` / ``snapshot`` — delegate to
-      ``IcebergTable`` with sequence numbers resolved to snapshot
-      ids; a watermark no longer on the ancestor chain (history
-      rewritten under the view) refuses loudly rather than guessing.
+      the window commits a removed data file or a delete file, which
+      is what a min/max view cannot fold; ``replace`` (compaction)
+      snapshots are skipped, as the feed skips them;
+    - ``changes_cdf`` / ``snapshot`` — delegate to ``IcebergTable``
+      with sequence numbers resolved to snapshot ids;
+      ``changes_cdf`` is the one row-level feed every refresh folds.
+      A watermark no longer on the ancestor chain (history rewritten
+      under the view) refuses loudly rather than guessing.
 
     Metadata is re-read per call (one JSON file — the same freshness
     discipline as the Delta base re-reading ``_last_checkpoint``):
@@ -1791,21 +1669,21 @@ class IcebergViewBase:
         )
 
     def _window_has_dc_removes(self, since: int, to: int) -> bool:
+        """True when any snapshot in the window COMMITS a row removal:
+        a removed data file or an added delete file (position,
+        equality or deletion vector), read from the snapshot's own
+        manifest entries (``_snapshot_delta``) — an ``append``-labelled
+        snapshot can still commit a delete manifest. ``replace``
+        (compaction) snapshots are skipped, as the feed skips them."""
         t = self._table()
-        lo = self._sid_at(t, since)
-        hi = self._sid_at(t, to)
-        for snap in t._window_chain(lo, hi):
-            op = (snap.get("summary") or {}).get("operation", "append")
-            if op not in ("append", "replace"):
+        for snap in t._window_chain(self._sid_at(t, since),
+                                    self._sid_at(t, to)):
+            if (snap.get("summary") or {}).get("operation") == "replace":
+                continue
+            _added, removed, pos_d, eq_d, dvs = t._snapshot_delta(snap)
+            if removed or pos_d or eq_d or dvs:
                 return True
         return False
-
-    def changes(self, spark, since: int, to: int | None = None):
-        t = self._table()
-        return t.changes(
-            spark, self._sid_at(t, since),
-            None if to is None else self._sid_at(t, to),
-        )
 
     def changes_cdf(self, spark, since: int, to: int | None = None):
         t = self._table()

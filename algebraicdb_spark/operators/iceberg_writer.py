@@ -1899,13 +1899,13 @@ class IcebergTableWriter:
         Copy-on-write: ``_cow_scope``. The delete-file encoders:
         position-delete files are partition-scoped under a partition
         spec, which this writer does not emit — partitioned tables take
-        the COW path. Live equality deletes are APPLIED by the probe
-        (``_live_identity`` mirrors the reader's stratum joins), so an
+        the COW path. Live deletes of every tier are APPLIED by the
+        probe (``_scan`` is the reader's own row-identity scan), so an
         upsert-then-mutate history composes; data files with no
-        resolvable sequence under a live equality delete refuse. Only
-        the v3 deletion-vector encoder runs under live DVs (it replaces
-        them); the position-delete encoder must not split a file's
-        delete state across tiers."""
+        resolvable sequence under a live equality delete refuse there.
+        Only the v3 deletion-vector encoder runs under live DVs (it
+        replaces them); the position-delete encoder must not split a
+        file's delete state across tiers."""
         if how == "cow":
             data, spec_parts = self._cow_scope(rdr)
             return _Scope(data, spec_parts=spec_parts)
@@ -1933,132 +1933,8 @@ class IcebergTableWriter:
                 "deletes and must not split a file's delete state "
                 "across tiers; use a full Iceberg client"
             )
-        if eq_d:
-            unseq = [p for p, _u, s in data if s is None]
-            if unseq:
-                raise NotImplementedError(
-                    f"{self.path}: equality deletes are live but data "
-                    f"file(s) {unseq[:3]} have no resolvable sequence "
-                    "number — ordering them is impossible; use a full "
-                    "Iceberg client"
-                )
         return _Scope(data, pos_d, eq_d, dvs,
                       old_dv=rdr._dv_positions_map(dvs) if dvs else {})
-
-    def _live_identity(
-        self,
-        spark: SparkSession,
-        rdr: IcebergTable,
-        sc: _Scope,
-        lineage: bool = False,
-    ):
-        """The LIVE rows with the planner's row identity: ``__lp`` = the
-        data file exactly as the manifest records it (the address a
-        position delete or deletion vector names), ``__pos`` = the
-        physical row ordinal. Existing position deletes, equality
-        deletes and deletion vectors are APPLIED first (a deleted row
-        must never rematch, and an UPDATE postimage of a deleted row
-        would RESURRECT it), exactly the reader's MoR plan: positions
-        anti-join on (uri, pos), equality strata anti-join null-safe
-        on their named columns with the spec's
-        strictly-lower-sequence rule.
-
-        ``lineage`` additionally MATERIALIZES the v3 row-lineage
-        columns per the spec's inheritance rule: an existing
-        materialized ``_row_id`` / ``_last_updated_sequence_number``
-        value wins; otherwise first_row_id + physical ordinal / the
-        file's data sequence number; files with no lineage
-        (pre-upgrade) stay null, so a rewrite assigns them FRESH ids
-        via inheritance from the new file — exactly the spec's
-        treatment of lineage-less rows. The read merges schemas so
-        already-materialized columns surface across mixed file
-        generations."""
-        from pyspark.sql import functions as F
-
-        reader = spark.read
-        first_ids = rdr._first_row_ids(None) if lineage else {}
-        if lineage:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[p for p, _u, _s in sc.data]).select(
-            "*",
-            F.col("_metadata.file_path").alias("__fp"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        # _metadata is a scan-only hidden column, so normalize the
-        # projected alias
-        df = df.withColumn("__lp", mutation.local_path(F.col("__fp")))
-        mapping = spark.createDataFrame(
-            [(p, u, s, first_ids.get(u)) for p, u, s in sc.data],
-            "__lp string, __uri string, __seq long, __fid long",
-        )
-        df = df.join(F.broadcast(mapping), "__lp", "inner")
-        if lineage:
-            rid_src = (
-                F.col("_row_id") if "_row_id" in df.columns
-                else F.lit(None).cast("long")
-            )
-            lus_src = (
-                F.col("_last_updated_sequence_number")
-                if "_last_updated_sequence_number" in df.columns
-                else F.lit(None).cast("long")
-            )
-            df = df.withColumn(
-                "_row_id",
-                F.coalesce(rid_src, F.col("__fid") + F.col("__pos")),
-            ).withColumn(
-                "_last_updated_sequence_number",
-                F.coalesce(
-                    lus_src,
-                    F.when(F.col("__fid").isNotNull(), F.col("__seq")),
-                ),
-            )
-        if sc.pos_d:
-            dels = spark.read.parquet(*sc.pos_d).select(
-                F.col("file_path").alias("__uri"),
-                F.col("pos").cast("long").alias("__pos"),
-            )
-            df = df.join(dels, ["__uri", "__pos"], "left_anti")
-        if sc.eq_d:
-            from algebraicdb_spark.operators.iceberg import (
-                apply_equality_strata,
-            )
-
-            # the reader's OWN stratum application — one
-            # implementation, so probe and scan can never disagree
-            df = apply_equality_strata(
-                spark, df, sc.eq_d, rdr._field_names_by_id(), self.path
-            )
-        if sc.old_dv:
-            dv_dels = spark.createDataFrame(
-                [(u, int(p)) for u, ps in sc.old_dv.items() for p in ps],
-                "__uri string, __pos long",
-                verifySchema=False,  # (str, int) tuples by construction
-            )
-            df = df.join(
-                F.broadcast(dv_dels), ["__uri", "__pos"], "left_anti"
-            )
-        return df.drop("__fp", "__lp", "__seq", "__fid").withColumnRenamed(
-            "__uri", mutation.FILE
-        )
-
-    def _lineage_rewrite_src(
-        self, spark: SparkSession, rdr: IcebergTable
-    ):
-        """The v3 rewrite source: every LIVE row (position/equality
-        deletes AND deletion vectors applied) with its row-lineage
-        columns MATERIALIZED — what a lineage-preserving compaction
-        restages. Returns (frame with table columns + _row_id +
-        _last_updated_sequence_number, data entries, live delete
-        counts) so the caller can publish and summarize."""
-        data, pos_d, eq_d, dvs = rdr._files(None)
-        sc = _Scope(data, pos_d, eq_d, dvs,
-                    old_dv=rdr._dv_positions_map(dvs) if dvs else {})
-        df = self._live_identity(spark, rdr, sc, lineage=True)
-        return (
-            df.drop(mutation.FILE, mutation.POS),
-            data,
-            {"pos": len(pos_d), "eq": len(eq_d), "dv": len(dvs)},
-        )
 
     def _publish_mor(
         self,
@@ -2883,7 +2759,13 @@ class IcebergTableWriter:
         carry no delete files (``_cow_scope`` gates that), so their
         ``files`` (default: every live one) read as plain parquet,
         ``lp`` adding the planner's ``__lp`` (resolved path). The
-        delete-file encoders scan through ``_live_identity``."""
+        delete-file encoders scan the LIVE rows through the reader's
+        row-identity scan, every tier of existing deletes applied (a
+        deleted row must never rematch, and an UPDATE postimage of a
+        deleted row would RESURRECT it): ``__lp`` is then the data
+        file exactly as its manifest records it, ``__pos`` the
+        physical row ordinal, and ``lineage`` materializes the v3
+        row-lineage columns."""
         from pyspark.sql import functions as F
 
         if how == "cow":
@@ -2896,7 +2778,10 @@ class IcebergTableWriter:
                 mutation.FILE,
                 mutation.local_path(F.col("_metadata.file_path")),
             )
-        return self._live_identity(spark, rdr, sc, lineage=lineage)
+        return rdr._identity_scan(
+            spark, sc.data, sc.pos_d, sc.eq_d, sc.old_dv,
+            first_ids=rdr._first_row_ids(None) if lineage else None,
+        ).withColumnRenamed("__uri", mutation.FILE)
 
     def _publish_mutation(
         self,
@@ -3135,7 +3020,10 @@ class IcebergTableWriter:
                 # lineage into the rewritten files (spec: rewritten
                 # rows KEEP their _row_id) — stamped with the
                 # reserved field ids; deletes of every tier applied
-                src, _data2, _nd = self._lineage_rewrite_src(spark, rdr)
+                src = rdr._identity_scan(
+                    spark, data, pos_d, eq_d, rdr._dv_positions_map(dvs),
+                    first_ids=rdr._first_row_ids(None),
+                ).drop("__uri", "__pos")
                 ice_fields = ice_fields + _LINEAGE_FIELDS
             elif purge:
                 src = rdr.snapshot(spark)  # MoR-applied content

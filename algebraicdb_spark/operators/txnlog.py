@@ -8,8 +8,8 @@ the standard-format half of that idea:
 - ``DeltaLogTable`` — a read-only reader for standard Delta Lake
   tables (ours via ``DeltaTableWriter``, or another engine's):
   checkpoint-aware log replay, partition/stats skipping, column
-  mapping, deletion vectors, time travel, ``changes`` /
-  ``changes_cdf`` feeds and ``txn`` idempotence marks;
+  mapping, deletion vectors, time travel, the row-level
+  ``changes_cdf`` feed and ``txn`` idempotence marks;
 - the column-mapping, partition and scan-assembly helpers the Delta
   and Iceberg readers and writers share (``_cm_*``,
   ``_assemble_groups``, ``_zorder_clustered``, the pruning tests);
@@ -671,10 +671,14 @@ class IncrementalAggView:
     maintainable aggregates; avg = sum/count downstream). Each
     ``refresh``:
 
-    - folds ONLY the base versions past the last watermark, via the
-      base's adds-only ``changes`` feed — compaction commits (data_change:
-      False) are skipped outright, so OPTIMIZE never triggers view
-      work;
+    - folds ONLY the base versions past the last watermark, through
+      the base's one row-level feed (``changes_cdf``) as signed
+      partials — inserts/postimages accumulate (+1), deletes/
+      preimages retract (-1), still O(delta): count and exact-decimal
+      sums subtract cleanly, and a group retracted to zero rows drops
+      from the state exactly as a rebuild would drop it; compaction
+      commits (data_change: False, iceberg ``replace``) are absent
+      from the feed, so OPTIMIZE never triggers view work;
     - merges delta partials into the state (union + re-aggregate:
       O(delta + groups), never O(base));
     - commits the new state AND the watermark ATOMICALLY via
@@ -685,21 +689,17 @@ class IncrementalAggView:
     - an all-metadata window advances the watermark with a
       marker-only commit (no state rewrite at all).
 
-    A window containing data-changing removes (copy-on-write DELETE /
-    UPDATE / MERGE, or an OVERWRITE) folds through the ROW-LEVEL feed
-    (``changes_cdf``) as signed partials — deletes/preimages retract
-    (-1), inserts/postimages accumulate (+1) — still O(delta):
-    count and exact-decimal sums subtract cleanly, and a group
-    retracted to zero rows drops from the state exactly as a rebuild
-    would drop it. MIN/MAX are NOT retractable (the deleted row may
-    have been the extremum and the replacement is unknowable without
-    a rescan), so a view configured with min/max columns refuses such
-    windows loudly and ``rebuild`` recomputes from the snapshot under
-    the same atomic-watermark contract. Sums are DECIMAL(38,6)
-    — order-free exact arithmetic, so the incremental state is
-    bit-equal to a from-scratch recompute, not approximately equal.
-    Consume within the base's VACUUM retention (a vacuumed window
-    fails loudly on the parquet read), exactly Delta CDF's contract.
+    MIN/MAX are NOT retractable (the deleted row may have been the
+    extremum and the replacement is unknowable without a rescan), so
+    a view configured with min/max columns folds only windows the
+    base's probe (``_window_has_dc_removes``) calls retraction-free,
+    refuses any other window loudly, and ``rebuild`` recomputes from
+    the snapshot under the same atomic-watermark contract. Sums are
+    DECIMAL(38,6) — order-free exact arithmetic, so the incremental
+    state is bit-equal to a from-scratch recompute, not approximately
+    equal. Consume within the base's VACUUM retention (a vacuumed
+    window fails loudly on the parquet read), exactly Delta CDF's
+    contract.
 
     State lives in its own standard Delta table
     (``DeltaTableWriter``), so the view itself is versioned,
@@ -736,10 +736,23 @@ class IncrementalAggView:
         return seen
 
     def _partial(self, df: DataFrame) -> DataFrame:
-        aggs = [F.count(F.lit(1)).cast("bigint").alias("n_rows")]
+        """Per-group partials of ``df``: a snapshot (every row +1) or
+        a row-level feed, where inserts/postimages weigh +1 and
+        deletes/preimages -1 — counts and exact-decimal sums fold
+        retractions with the same order-free arithmetic as appends
+        (bit-equal to a rebuild). Min/max see only retraction-free
+        input (``refresh`` gates that)."""
+        sign = (
+            F.when(
+                F.col("_change_type").isin("insert", "update_postimage"),
+                F.lit(1),
+            ).otherwise(F.lit(-1))
+            if "_change_type" in df.columns else F.lit(1)
+        )
+        aggs = [F.sum(sign).cast("bigint").alias("n_rows")]
         for c in self.sum_cols:
             aggs.append(
-                F.sum(F.col(c).cast("decimal(27,6)"))
+                F.sum(sign * F.col(c).cast("decimal(27,6)"))
                 .cast("decimal(38,6)")
                 .alias(f"sum_{c}")
             )
@@ -747,29 +760,6 @@ class IncrementalAggView:
             aggs.append(F.min(c).alias(f"min_{c}"))
         for c in self.max_cols:
             aggs.append(F.max(c).alias(f"max_{c}"))
-        return df.groupBy(*self.group_cols).agg(*aggs)
-
-    def _signed_partial(self, cdf: DataFrame) -> DataFrame:
-        """Partials from the ROW-LEVEL feed: inserts/postimages weigh
-        +1, deletes/preimages -1 — counts and exact-decimal sums fold
-        retractions with the same order-free arithmetic as appends
-        (bit-equal to a rebuild). Only called on views without min/max
-        columns (refresh gates that)."""
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1),
-        ).otherwise(F.lit(-1))
-        df = cdf.withColumn("__sign", sign)
-        aggs = [F.sum("__sign").cast("bigint").alias("n_rows")]
-        for c in self.sum_cols:
-            aggs.append(
-                F.sum(
-                    F.col("__sign")
-                    * F.col(c).cast("decimal(27,6)")
-                )
-                .cast("decimal(38,6)")
-                .alias(f"sum_{c}")
-            )
         return df.groupBy(*self.group_cols).agg(*aggs)
 
     def _merge(self, old: DataFrame, part: DataFrame) -> DataFrame:
@@ -797,48 +787,30 @@ class IncrementalAggView:
 
     def refresh(self, spark: SparkSession) -> int | None:
         """Fold base commits past the watermark into the state —
-        O(delta) for adds-only windows (the fast path) AND for
-        copy-on-write windows (signed partials over the row-level
-        feed). Returns the new watermark, or None when already
-        current. Windows with deletes refuse on min/max views —
-        those aggregates are not retractable; ``rebuild`` instead."""
+        O(delta) signed partials over the row-level feed. Returns the
+        new watermark, or None when already current. Windows that
+        remove rows refuse on min/max views — those aggregates are
+        not retractable; ``rebuild`` instead."""
         hw = self.watermark()
         target = self.base.latest_version()
         if target <= hw:
             return None
-        # both bases (DeltaLogTable AND IcebergViewBase) expose the
-        # probe + row-level feed; getattr keeps any other duck-typed
-        # base on the adds-only contract (changes() raises on a
-        # data-changing remove and the caller rebuilds)
-        probe = getattr(self.base, "_window_has_dc_removes", None)
-        if probe is not None and probe(hw, target):
-            if self.min_cols or self.max_cols:
-                raise ValueError(
-                    f"base versions ({hw}, {target}] removed data and "
-                    "this view maintains min/max — the deleted row may "
-                    "have been the extremum, which no retraction can "
-                    "recover; rebuild() from the snapshot"
-                )
-            cdf = self.base.changes_cdf(spark, since=hw, to=target)
-            part = (
-                self._signed_partial(
-                    cdf.select(*self._needed_cols(), "_change_type")
-                )
-                if cdf is not None
-                else None
+        if (self.min_cols or self.max_cols) and (
+            self.base._window_has_dc_removes(hw, target)
+        ):
+            raise ValueError(
+                f"base versions ({hw}, {target}] removed data and "
+                "this view maintains min/max — the deleted row may "
+                "have been the extremum, which no retraction can "
+                "recover; rebuild() from the snapshot"
             )
-        else:
-            delta = self.base.changes(spark, since=hw, to=target)
-            part = (
-                self._partial(delta.select(*self._needed_cols()))
-                if delta is not None
-                else None
-            )
-        if part is None:
+        cdf = self.base.changes_cdf(spark, since=hw, to=target)
+        if cdf is None:
             # nothing but metadata/compaction traffic: advance the
             # watermark alone — a marker-only commit, no state rewrite
             self.state.mark_txn(self.WATERMARK_APP, target)
             return target
+        part = self._partial(cdf.select(*self._needed_cols(), "_change_type"))
         if self.state.live_paths():
             merged = self._merge(self.state.snapshot(spark), part)
         else:
@@ -929,6 +901,10 @@ class DeltaLogTable:
     class for delta-rs / Delta Standalone behind the same
     three-method surface (latest_version / live_paths / snapshot);
     the scan itself is already just a pruned parquet read either way.
+
+    Incremental consumers read ONE change feed, ``changes_cdf``: the
+    window's row-level changes, where an adds-only commit is simply
+    its rows labeled ``insert``.
 
     Scale shape: the log is O(commits) of
     KB-sized driver-side metadata plus O(live files) checkpoint rows
@@ -1671,90 +1647,33 @@ class DeltaLogTable:
             )
         return None
 
-    def changes(
-        self, spark: SparkSession, since: int, to: int | None = None
-    ) -> DataFrame | None:
-        """Rows ADDED to someone else's Delta table in versions
-        (``since``, ``to``] — incremental consumption of an external
-        table without a Delta library, with an adds-only contract:
-        actions with ``dataChange: false`` (OPTIMIZE / clustering
-        traffic) are skipped, a data-changing remove raises (rebuild
-        from the snapshot), None when the window adds nothing. The
-        window must lie within the surviving JSON commits — below a
-        cleaned checkpoint there is no change information at all
-        (checkpoints store STATE, not deltas), which is exactly
-        Delta CDF's own retention constraint."""
-        from urllib.parse import unquote
-
-        latest = self.latest_version()
-        hi = latest if to is None else to
-        if hi > latest:
-            raise ValueError(
-                f"change window ({since}, {hi}] extends past the log head "
-                f"{latest} — recording it as a watermark would silently "
-                "skip the commits that land there later"
-            )
-        proto, meta = self._protocol_meta(hi)
-        self._check_readable(proto, meta)
-        adds: list[tuple[str, dict]] = []
-        for v, actions in self._json_commit_actions(since + 1, hi):
-            for a in actions:
-                if "add" in a and a["add"].get("dataChange", True):
-                    if a["add"].get("deletionVector") is not None:
-                        raise NotImplementedError(
-                            f"add action for {a['add']['path']} carries a "
-                            "deletion vector; use a full Delta client"
-                        )
-                    adds.append(
-                        (
-                            os.path.join(
-                                self.path, unquote(a["add"]["path"])
-                            ),
-                            a["add"].get("partitionValues") or {},
-                        )
-                    )
-                elif "remove" in a and a["remove"].get("dataChange", True):
-                    raise ValueError(
-                        f"version {v} removed data inside the change "
-                        f"window ({since}, {hi}] — the feed is adds-only; "
-                        "rebuild the consumer from the snapshot"
-                    )
-        if not adds:
-            return None
-        gone = [p for p, _pv in adds if not os.path.exists(p)]
-        if gone:
-            raise ValueError(
-                f"change window ({since}, {hi}] references data the "
-                f"external writer's retention already cleaned "
-                f"({gone[:3]}…) — consume within its retention, or "
-                "rebuild from the snapshot"
-            )
-        # pin the schema AT the window head, not the latest: an
-        # external non-additive evolution AFTER the window must not
-        # break reading the window's own files
-        return self._assemble(
-            spark, adds, self.table_schema(hi),
-            meta.get("partitionColumns") or [],
-            mapping=self._mapping_for(meta),
-        )
-
     def changes_cdf(
         self, spark: SparkSession, since: int, to: int | None = None
     ) -> DataFrame | None:
-        """ROW-LEVEL change feed over a Delta table: windows containing
+        """The table's ROW-LEVEL change feed for versions (``since``,
+        ``to``] — incremental consumption of a Delta table this engine
+        or another one wrote. Adds-only commits emit their rows as
+        plain ``insert``; ``dataChange: false`` actions (OPTIMIZE /
+        clustering traffic) are skipped; windows containing
         data-changing removes (another engine's COW DELETE / UPDATE /
         MERGE / overwrite) resolve by diffing the removed files'
         content against their rewrites (multiset EXCEPT ALL; both sides
         are immutable parquet until the owner's vacuum), labeled
         ``_change_type`` + ``_commit_version``; commits whose
         commitInfo.operation is UPDATE label update_preimage/
-        update_postimage, everything else delete/insert. Adds-only
-        commits emit plain inserts — the fast path's plan.
+        update_postimage, everything else delete/insert. The schema is
+        pinned AT the window head: an external non-additive evolution
+        after the window must not break reading its files.
 
-        Same retention contract as ``changes``: the window must lie
-        within the surviving JSON commits (below a cleaned checkpoint
-        there is no change information — checkpoints store STATE), and
+        Window contract: the window may not extend past the log head
+        (recording it as a watermark would skip later commits); its
+        own JSON commits must survive — below a cleaned checkpoint
+        there is no change information (checkpoints store STATE) — and
         files the owner's retention already reclaimed refuse loudly.
+        Only the window is walked: the pre-window fold (checkpoint +
+        JSON, ``_live_fold``) is read only when a window remove names
+        a file the window did not add, whose partition values and
+        deletion vector live in that file's original add.
 
         DELETION-VECTOR FLIPS resolve too (round 11, second half —
         previously a refusal): a MoR DELETE commits remove+add on the
@@ -1796,34 +1715,30 @@ class DeltaLogTable:
         self._check_readable(proto, meta)
         part_cols = meta.get("partitionColumns") or []
         st = self.table_schema(hi)
-        # partition values and deletion-vector state of removed files
-        # come from their original add actions — checkpoint live set +
-        # the JSON prefix walked in order (a remove whose tombstone
-        # omits the DV descriptor falls back to the path's pre-commit
-        # fold state: scanning it raw would resurrect rows into the
-        # preimage)
+        # partition values and deletion-vector state per path, as of
+        # each commit: a remove takes its path's pre-commit state (a
+        # tombstone that omits the DV descriptor must not be scanned
+        # raw — that would resurrect rows into the preimage)
         pv_by_path: dict[str, dict] = {}
         dv_by_path: dict[str, dict | None] = {}
-        cp = self._cp
-        lo = 0
-        # Seed from the checkpoint ONLY when the window starts at or
-        # past it — a checkpoint stores folded STATE, not changes, so
-        # starting the walk at cp.version+1 would silently drop every
-        # commit in (since, cp.version] from the feed (and feed an
-        # IncrementalAggView truncated deltas). For a window reaching
-        # below the checkpoint, replay the full JSON history instead;
-        # _json_commit_actions raises loudly if the prefix was cleaned
-        # (then there IS no change information — rebuild from snapshot).
-        if cp is not None and since >= cp["version"]:
-            for p, pv, dv, _st in self._checkpoint_adds_full(cp):
-                pv_by_path[p] = pv
-                dv_by_path[p] = dv
-            lo = cp["version"] + 1
+        commits = list(self._json_commit_actions(since + 1, hi))
+        added: set[str] = set()
+        for _v, actions in commits:
+            if any(
+                "remove" in a and a["remove"].get("dataChange", True)
+                and a["remove"]["path"] not in added
+                for a in actions
+            ):
+                for p, (pv, dv, _st) in self._live_fold(since).items():
+                    pv_by_path[p] = pv
+                    dv_by_path[p] = dv
+                break
+            added.update(a["add"]["path"] for a in actions if "add" in a)
         window: list[
             tuple[int, str | None, list[tuple[str, dict | None]],
                   list[tuple[str, dict | None]], list[tuple[str, dict]]]
         ] = []
-        for v, actions in self._json_commit_actions(lo, hi):
+        for v, actions in commits:
             adds: list[tuple[str, dict | None]] = []
             removes: list[tuple[str, dict | None]] = []
             cdcs: list[tuple[str, dict]] = []
@@ -1854,7 +1769,7 @@ class DeltaLogTable:
                     dv_by_path[ap] = a["add"].get("deletionVector")
                     if a["add"].get("dataChange", True):
                         adds.append((ap, dv_by_path[ap]))
-            if v > since and (adds or removes or cdcs):
+            if adds or removes or cdcs:
                 window.append((v, op, adds, removes, cdcs))
         if not window:
             return None
@@ -1954,8 +1869,8 @@ class DeltaLogTable:
 
     def _window_has_dc_removes(self, since: int, to: int) -> bool:
         """Driver-side probe: does (``since``, ``to``] contain a
-        data-changing remove? Lets IncrementalAggView pick adds-only vs
-        row-level folding over a Delta table without a Spark job.
+        data-changing remove? Lets a min/max IncrementalAggView refuse
+        a window it cannot fold without a Spark job.
         Windows below a cleaned checkpoint raise via the contiguity
         check — there is no change information there either way."""
         for _v, actions in self._json_commit_actions(since + 1, to):
@@ -1994,8 +1909,8 @@ class DeltaLogTable:
         AT ``as_of`` (see ``table_schema``) — Delta reconstructs the
         queried version's own metadata, so time travel across a
         non-additive external evolution returns that version's actual
-        content, not NULLs under the newest shape (``changes`` pins
-        its window head the same way). Partitioned tables get their
+        content, not NULLs under the newest shape (``changes_cdf``
+        pins its window head the same way). Partitioned tables get their
         partition columns synthesized from add.partitionValues (see
         ``_assemble``) — the values live only in the log.
 
@@ -2381,8 +2296,8 @@ def _view_state_out(view, spark: SparkSession) -> DataFrame:
 @register(
     "view_incremental_refresh",
     # Incrementally-maintained matview over a Delta base: two append
-    # windows fold adds-only partials, then a COW DELETE window folds
-    # SIGNED retractions through the row-level feed. The oracle
+    # windows fold insert-only partials, then a COW DELETE window folds
+    # SIGNED retractions through the same row-level feed. The oracle
     # recomputes the final groupBy from the fixture — the incremental
     # state must be bit-equal to that from-scratch answer.
     oracle="""
@@ -2397,9 +2312,9 @@ def _view_state_out(view, spark: SparkSession) -> DataFrame:
 )
 def view_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``IncrementalAggView`` lifecycle: REFRESH after each base
-    commit folds O(delta) — the first two windows ride the adds-only
-    feed, the COW DELETE window rides ``changes_cdf`` as signed
-    partials (inserts +1, preimages -1), and groups retracted to zero
+    commit folds O(delta) through ``changes_cdf`` — the first two
+    windows are plain inserts, the COW DELETE window signed partials
+    (inserts +1, preimages -1), and groups retracted to zero
     vanish exactly as a rebuild would drop them. The watermark commits
     ATOMICALLY with the state (it IS the state commit's txn marker),
     so a crash between them is impossible by construction. Exact
@@ -2450,10 +2365,11 @@ def view_iceberg_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``IcebergViewBase`` (round 14): snapshot ids are random on foreign
     tables, so the watermark is the spec's SEQUENCE NUMBER, resolved
     to snapshot ids along the current ancestor chain at each feed
-    call. Window 1 bootstraps from the root, window 2 folds an append
-    adds-only, window 3 contains a COW DELETE and folds through the
-    iceberg ``changes_cdf`` as signed partials — bit-equal to rebuild,
-    which is exactly what the oracle recomputes."""
+    call. Every window folds the iceberg ``changes_cdf``: window 1
+    bootstraps from the root, window 2 folds an append as inserts,
+    window 3 contains a COW DELETE and folds as signed partials —
+    bit-equal to rebuild, which is exactly what the oracle
+    recomputes."""
     import shutil
 
     from algebraicdb_spark.operators.iceberg import IcebergViewBase

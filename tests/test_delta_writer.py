@@ -395,11 +395,13 @@ class TestDeltaWriterRoundTrip:
         w.append(r.limit(2))
         w.append(r.limit(3))
         t = DeltaLogTable(root)
-        assert t.changes(spark, since=0).count() == 3
+        assert t.changes_cdf(spark, since=0).count() == 3
         w.overwrite(r.limit(1), expected_version=2)
-        # a data-changing remove breaks the adds-only feed, loudly
-        with pytest.raises(ValueError, match="adds-only"):
-            t.changes(spark, since=0)
+        # the overwrite's removed rows surface as deletes; the one row
+        # it writes back cancels against its old copy
+        kinds = [x["_change_type"]
+                 for x in t.changes_cdf(spark, since=1).collect()]
+        assert kinds == ["delete"] * 4
 
     def test_publish_race_has_one_winner(self, spark, tables, tmp_path):
         root = str(tmp_path / "t")
@@ -545,8 +547,8 @@ class TestDeltaWriterRoundTrip:
         post = {tuple(sorted(x.asDict().items()))
                 for x in t.snapshot(spark).collect()}
         assert post == pre
-        # invisible to the adds-only feed (dataChange: false)
-        assert t.changes(spark, since=1) is None
+        # invisible to the change feed (dataChange: false)
+        assert t.changes_cdf(spark, since=1) is None
         # time travel to the pre-compaction layout still works
         assert t.snapshot(spark, as_of=1).count() == 5
         # idempotent below min_inputs
@@ -679,10 +681,8 @@ class TestDeltaWriterRoundTrip:
         assert sorted(
             r["id"] for r in rdr.snapshot(spark).collect()
         ) == [1, 5, 6]
-        # time travel sees the pre-delete content; the feed refuses
+        # time travel sees the pre-delete content
         assert rdr.snapshot(spark, as_of=2).count() == 6
-        with pytest.raises(ValueError, match="adds-only"):
-            rdr.changes(spark, since=2)
         # UPDATE: CASE rewrite cast back to declared types
         res2 = w.update(spark, {"tag": "upper(tag)"}, "id >= 5")
         assert res2["rows_updated"] == 2
@@ -1006,16 +1006,12 @@ class TestDeletionVectorWrites:
         assert DeltaLogTable(w.path).snapshot(spark).count() == 9
 
     def test_change_feeds_over_dv_windows(self, spark, tmp_path):
-        """A MoR delete window: the adds-only feed refuses (it IS a
-        data-changing remove), while the ROW-LEVEL feed resolves the
-        flip (graduated later in round 11 — see
-        TestRowLevelCdfAcrossDvFlips for the full contract)."""
+        """A MoR delete window: the ROW-LEVEL feed resolves the flip
+        (see TestRowLevelCdfAcrossDvFlips for the full contract)."""
         w = self._table(spark, tmp_path)
         base = w.latest_version()
         w.delete(spark, "k = 1", mode="mor")
         t = DeltaLogTable(w.path)
-        with pytest.raises(ValueError, match="adds-only"):
-            t.changes(spark, base)
         rows = [(r["k"], r["_change_type"])
                 for r in t.changes_cdf(spark, base).collect()]
         assert rows == [(1, "delete")]

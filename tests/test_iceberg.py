@@ -514,9 +514,9 @@ class TestIcebergTable:
 
 
 class TestIcebergChanges:
-    """Incremental append scan between snapshots — the adds-only
-    change feed over an EXTERNAL Iceberg table, the twin of the
-    Delta reader's."""
+    """The row-level change feed between snapshots over an EXTERNAL
+    Iceberg table, the twin of the Delta reader's: append windows are
+    plain inserts."""
 
     def _extend_chain(self, spark, sf_dir, root: str, ctx: dict) -> dict:
         """Grow the 2-snapshot `_build` table into a 4-snapshot parent
@@ -584,22 +584,27 @@ class TestIcebergChanges:
         )
         t = IcebergTable(root)
         assert t.current_snapshot_id() == ctx["s4"]
-        # (s2, s3]: exactly s3's appended file — carried-forward
-        # EXISTING/DELETED entries in s3's manifests are not new info
-        got = t.changes(spark, ctx["s2"], ctx["s3"])
+        # (s2, s3]: exactly s3's appended file, as inserts —
+        # carried-forward EXISTING/DELETED entries in s3's manifests
+        # are not new info
+        got = t.changes_cdf(spark, ctx["s2"], ctx["s3"])
         assert got.count() == ctx["nd"]
         assert got.where(F.col("o_orderkey") % 5 != 4).count() == 0
+        assert {r["_change_type"] for r in got.collect()} == {"insert"}
         # (s3, s4]: a replace (compaction) snapshot — content
         # unchanged, the feed skips it entirely
-        assert t.changes(spark, ctx["s3"], ctx["s4"]) is None
+        assert t.changes_cdf(spark, ctx["s3"], ctx["s4"]) is None
         # (s2, current]: append + skipped replace = the append alone
-        assert t.changes(spark, ctx["s2"]).count() == ctx["nd"]
-        # (s1, s2]: s2 deleted C — adds-only breach, rebuild instead
-        with pytest.raises(ValueError, match="adds-only"):
-            t.changes(spark, ctx["s1"], ctx["s2"])
+        assert t.changes_cdf(spark, ctx["s2"]).count() == ctx["nd"]
+        # (s1, s2]: s2 deleted C and added B — C's rows are deletes
+        kinds = {
+            (r["_change_type"], r["o_orderkey"] % 3)
+            for r in t.changes_cdf(spark, ctx["s1"], ctx["s2"]).collect()
+        }
+        assert kinds == {("delete", 2), ("insert", 1)}
         # a snapshot outside the parent chain has no incremental path
         with pytest.raises(ValueError, match="not an ancestor"):
-            t.changes(spark, 999, ctx["s3"])
+            t.changes_cdf(spark, 999, ctx["s3"])
 
 
 class TestIcebergPositionDeletes:
@@ -707,50 +712,6 @@ class TestIcebergPositionDeletes:
             ))
         with pytest.raises(NotImplementedError, match="equality delete"):
             IcebergTable(root).snapshot(spark)
-
-    def test_in_window_delete_manifest_breaks_the_feed(
-        self, spark, sf_dir, tmp_path
-    ):
-        """changes() must refuse a window whose snapshot committed a
-        delete manifest — the feed is adds-only."""
-        root = str(tmp_path / "ice_pd_feed")
-        os.makedirs(root)
-        ctx = self._build(spark, sf_dir, root)
-        meta = ctx["meta"]
-        s1, s2 = ctx["s1"], 3002
-        # s2 appends a delete manifest on top of s1's files
-        ml2 = os.path.join(meta, "snap-3002.avro")
-        m_del2 = os.path.join(meta, "mdel2.avro")
-        with open(m_del2, "wb") as f:
-            f.write(avro_container(
-                MANIFEST_SCHEMA,
-                [manifest_rec(1, s2, ctx["fdel"], 4, content=1)],
-            ))
-        with open(ml2, "wb") as f:
-            f.write(avro_container(
-                MANIFEST_LIST_SCHEMA,
-                [manifest_list_rec(
-                    os.path.join(meta, "mdata.avro"), s1),
-                 manifest_list_rec(m_del2, s2, content=1)],
-            ))
-        md = {
-            "format-version": 2,
-            "table-uuid": "00000000-0000-0000-0000-000000000003",
-            "location": root,
-            "current-snapshot-id": s2,
-            "snapshots": [
-                {"snapshot-id": s1, "timestamp-ms": 1,
-                 "manifest-list": ctx["ml"]},
-                {"snapshot-id": s2, "timestamp-ms": 2,
-                 "parent-snapshot-id": s1,
-                 "summary": {"operation": "append"},
-                 "manifest-list": ml2},
-            ],
-        }
-        with open(os.path.join(meta, "v2.metadata.json"), "w") as f:
-            json.dump(md, f)
-        with pytest.raises(ValueError, match="adds-only"):
-            IcebergTable(root).changes(spark, s1, s2)
 
 
 # ---- v2 sequence-numbered schemas (the equality-delete fixtures) ----
@@ -1140,9 +1101,18 @@ class TestIcebergNullSidInheritance:
         # snapshot read sees both files exactly once
         assert t.snapshot(spark).count() == nf + ng
         # incremental (s1, s2]: only g, each row exactly once
-        got = t.changes(spark, s1, s2)
+        got = t.changes_cdf(spark, s1, s2)
         assert got.count() == ng
         assert got.where(F.col("o_orderkey") % 2 == 0).count() == 0
+        # the v1 inline manifest form carries no added_snapshot_id to
+        # inherit: a reused manifest would double-count, so the feed
+        # refuses instead of guessing
+        md["snapshots"][1].pop("manifest-list")
+        md["snapshots"][1]["manifests"] = [m1, m2]
+        with open(os.path.join(meta, "v2.metadata.json"), "w") as f:
+            json.dump(md, f)
+        with pytest.raises(NotImplementedError, match="attribution"):
+            IcebergTable(root).changes_cdf(spark, s1, s2)
 
 
 class TestIcebergDuplicateManifestListings:
@@ -1243,7 +1213,7 @@ class TestIcebergWriter:
         # agree because the writer never mixes schemas)
         assert t.snapshot(spark).schema == o.limit(1).schema
         # incremental scan over our own output
-        inc = t.changes(spark, s1, s2)
+        inc = t.changes_cdf(spark, s1, s2)
         assert inc.count() == 3
 
     def test_append_onto_uri_recorded_metadata(
@@ -2200,7 +2170,7 @@ class TestIcebergMaintenance:
         snaps = {s["snapshot-id"]: s for s in t.snapshots()}
         assert snaps[sid]["summary"]["operation"] == "replace"
         # the incremental feed SKIPS the compaction traffic
-        assert t.changes(spark, pre, sid) is None
+        assert t.changes_cdf(spark, pre, sid) is None
         # below min_inputs: no-op
         assert w.optimize(spark) is None
         # time travel still reads the pre-compaction snapshot

@@ -473,7 +473,7 @@ class TestSchemaEvolution:
         t.write_checkpoint()
         assert "score" in t.snapshot(spark).columns
         # the change feed reads with the window-head schema
-        delta = t.reader().changes(spark, since=-1)
+        delta = t.reader().changes_cdf(spark, since=-1)
         assert "score" in delta.columns and delta.count() == 2
         # compaction materializes the evolved schema
         t.optimize(spark)
@@ -530,7 +530,6 @@ class TestTransactionalRandomModel:
     def test_random_interleavings_match_model(self, spark, tmp_path):
         import random
 
-        import pytest as _pytest
         from pyspark.sql import functions as F
 
         def mkdf(ids):
@@ -542,7 +541,7 @@ class TestTransactionalRandomModel:
             live: list[int] = []     # model: current table content
             next_id = 0
             # change-feed consumer model
-            wm, folded, pending, dirty = -1, [], [], False
+            wm, folded = -1, []
             for step in range(12):
                 op = rng.choice(
                     ["append", "append", "append", "overwrite",
@@ -553,15 +552,10 @@ class TestTransactionalRandomModel:
                     next_id += len(ids)
                     t.append(mkdf(ids))
                     live = live + ids
-                    pending.append(ids)
                 elif op == "overwrite":
                     ids = list(range(next_id, next_id + rng.randint(1, 4)))
                     next_id += len(ids)
                     t.overwrite(mkdf(ids), t.latest_version() + 1)
-                    if live:
-                        dirty = True  # tombstones break the adds-only feed
-                    else:
-                        pending.append(ids)  # no removes emitted: an append
                     live = ids
                 elif op == "optimize":
                     t.optimize(
@@ -575,31 +569,22 @@ class TestTransactionalRandomModel:
                     # the feed contract: consume WITHIN retention; the
                     # model consumer resyncs from the snapshot rather
                     # than read a window vacuum may have reclaimed
-                    folded, wm, pending, dirty = (
-                        list(live), t.latest_version(), [], False
-                    )
+                    folded, wm = list(live), t.latest_version()
                 elif op == "consume":
-                    if t.latest_version() <= wm:
-                        pass  # nothing new
-                    elif dirty:
-                        with _pytest.raises(ValueError, match="adds-only"):
-                            t.reader().changes(spark, wm)
-                        folded, wm, pending, dirty = (
-                            list(live), t.latest_version(), [], False
-                        )  # the rebuild-from-snapshot path
-                    else:
-                        delta = t.reader().changes(spark, wm)
-                        got = (
-                            sorted(r["id"] for r in delta.collect())
-                            if delta is not None else []
-                        )
-                        want = sorted(i for ids in pending for i in ids)
-                        assert got == want, (seed, step)
-                        folded += got
-                        wm, pending = t.latest_version(), []
-                        # an up-to-date, never-broken consumer holds
-                        # exactly the table content
-                        assert sorted(folded) == sorted(live), (seed, step)
+                    if t.latest_version() > wm:
+                        # the row-level feed: inserts add, deletes
+                        # (an overwrite's tombstoned rows) retract
+                        feed = t.reader().changes_cdf(spark, wm)
+                        for r in feed.collect() if feed is not None else []:
+                            if r["_change_type"] == "insert":
+                                folded.append(r["id"])
+                            else:
+                                assert r["_change_type"] == "delete"
+                                folded.remove(r["id"])
+                        wm = t.latest_version()
+                    # an up-to-date consumer holds exactly the table
+                    # content
+                    assert sorted(folded) == sorted(live), (seed, step)
                 # invariant: the snapshot equals the model after EVERY op
                 if live:
                     got = sorted(
@@ -661,7 +646,7 @@ class TestIncrementalAggView:
         import pytest as _pytest
 
         with _pytest.raises(ValueError, match="past the log head"):
-            t.reader().changes(spark, since=0, to=99)
+            t.reader().changes_cdf(spark, since=0, to=99)
         # new appends fold incrementally and stay bit-equal
         t.append(o.filter("o_orderkey % 3 = 2"))
         assert v.refresh(spark) == 2
@@ -676,7 +661,7 @@ class TestIncrementalAggView:
         t.optimize(spark)
         t.vacuum(retain_versions=1)
         with _pytest.raises(ValueError, match="retention already cleaned"):
-            t.reader().changes(spark, since=-1, to=2)
+            t.reader().changes_cdf(spark, since=-1, to=2)
 
     def test_compaction_is_invisible_to_the_view(
         self, spark, tables, tmp_path
@@ -765,11 +750,12 @@ class TestIncrementalAggView:
 
 
 class TestIncrementalViewOverDelta:
-    """IncrementalAggView is duck-typed over latest_version / changes /
-    snapshot — so the O(delta) rollup maintains itself over an
-    EXTERNAL, hand-written Delta table too:
-    refresh folds the Delta change feed, dataChange:false rewrites are
-    invisible, and a data-changing remove → rebuild from snapshot."""
+    """IncrementalAggView is duck-typed over latest_version /
+    changes_cdf / snapshot — so the O(delta) rollup maintains itself
+    over an EXTERNAL, hand-written Delta table too: refresh folds the
+    Delta change feed, dataChange:false rewrites are invisible, and a
+    data-changing remove folds as retractions (a min/max view
+    refuses it)."""
 
     def test_incremental_rollup_over_external_delta(
         self, spark, tables, tmp_path
@@ -836,10 +822,6 @@ class TestIncrementalViewOverDelta:
         want3 = v._partial(t.snapshot(spark))
         assert v.read(spark).exceptAll(want3).count() == 0
         assert want3.exceptAll(v.read(spark)).count() == 0
-        # the adds-only fast feed still refuses such a window (its
-        # contract is unchanged — consumers opt into the row-level one)
-        with _pytest.raises(ValueError, match="adds-only"):
-            t.changes(spark, since=2, to=3)
         # …and a min/max view over the same base refuses with the
         # not-retractable message instead of silently folding
         v2 = IncrementalAggView(
@@ -1110,14 +1092,15 @@ class TestDeltaLogTable:
         rows = {r["id"]: r for r in snap.collect()}
         assert rows[1]["score"] is None and rows[2]["score"] == 9.5
         # the change feed reads pinned too
-        delta = t.changes(spark, since=-1)
+        delta = t.changes_cdf(spark, since=-1)
         assert "score" in delta.columns and delta.count() == 2
 
     def test_change_feed_over_external_delta(self, spark, tables, tmp_path):
         """Incremental consumption of someone else's Delta table: the
-        change feed returns the window's data-changing adds, skips
-        dataChange:false rewrite traffic, raises on a data-changing
-        remove, and has no change info below a cleaned checkpoint."""
+        change feed returns the window's data-changing adds as inserts,
+        skips dataChange:false rewrite traffic, diffs a data-changing
+        remove of a checkpointed file against its rewrite, and has no
+        change info below a cleaned checkpoint."""
         import json
         import os
 
@@ -1130,20 +1113,24 @@ class TestDeltaLogTable:
         self._checkpoint_at_2(spark, tables, root)
         t = DeltaLogTable(root)
         # (2, 3]: v3's add of f3 (1 row)
-        assert t.changes(spark, since=2, to=3).count() == 1
-        # (2, 4]: v4 removes f2 with dataChange true → adds-only breach
-        with _pytest.raises(ValueError, match="adds-only"):
-            t.changes(spark, since=2)
+        assert t.changes_cdf(spark, since=2, to=3).count() == 1
+        # (2, 4]: v4 overwrites the checkpointed f2 (3 rows) with f4
+        # (the same 3 plus 1): the carried rows cancel, leaving one
+        # insert beside v3's
+        assert sorted(
+            (r["_change_type"], r["_commit_version"])
+            for r in t.changes_cdf(spark, since=2).collect()
+        ) == [("insert", 3), ("insert", 4)]
         # a clustering rewrite (dataChange: false) is invisible
         with open(os.path.join(root, "_delta_log", f"{5:020d}.json"), "w") as f:
             f.write(json.dumps({"add": {
                 "path": "part-f4.parquet", "partitionValues": {}, "size": 1,
                 "modificationTime": 0, "dataChange": False,
             }}) + "\n")
-        assert t.changes(spark, since=4, to=5) is None
+        assert t.changes_cdf(spark, since=4, to=5) is None
         # below the cleaned checkpoint there is no change information
         with _pytest.raises(ValueError, match="non-contiguous"):
-            t.changes(spark, since=0, to=3)
+            t.changes_cdf(spark, since=0, to=3)
 
     def test_v2_uuid_checkpoint_replays(self, spark, tables, tmp_path):
         """Round 13: a V2/UUID-named checkpoint REPLAYS — the main
@@ -1355,7 +1342,7 @@ class TestDeltaProtocolAndPartitions:
         rows = {r["id"]: r["r"] for r in snap.collect()}
         assert rows == {1: 1, 2: 1, 3: 2, 4: 2}
         # the change feed synthesizes them too
-        delta = DeltaLogTable(root).changes(spark, since=0)
+        delta = DeltaLogTable(root).changes_cdf(spark, since=0)
         assert [(r["id"], r["r"]) for r in delta.collect()] == [(4, 2)]
         # time travel keeps partition resolution
         assert DeltaLogTable(root).snapshot(spark, as_of=0).count() == 3
@@ -1666,12 +1653,10 @@ class TestDeltaColumnMappingReads:
         assert {(r["k"], r["v"]) for r in snap.collect()} == {
             (1, "a"), (2, "b"), (3, "c"),
         }
-        # time travel and the adds-only change feed rename too
+        # time travel and the change feed rename too
         assert t.snapshot(spark, as_of=0).count() == 2
-        delta = t.changes(spark, since=0)
-        assert [(r["k"], r["v"]) for r in delta.collect()] == [(3, "c")]
-        # the row-level feed as well (insert-only window here)
         cdf = t.changes_cdf(spark, since=0)
+        assert [(r["k"], r["v"]) for r in cdf.collect()] == [(3, "c")]
         assert {(r["k"], r["_change_type"]) for r in cdf.collect()} == {
             (3, "insert"),
         }
@@ -2088,11 +2073,6 @@ class TestCopyOnWrite:
         ) == [1, 5, 6]
         # time travel across the delete sees the pre-delete content
         assert t.snapshot(spark, as_of=2).count() == 6
-        # the feed refuses the window — data-changing removes inside
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="adds-only"):
-            t.reader().changes(spark, since=1)
 
     def test_delete_null_predicate_keeps_rows(self, spark, tmp_path):
         """SQL DELETE semantics: a NULL predicate does NOT delete."""
@@ -2298,12 +2278,6 @@ class TestTransactionalMerge:
         # time travel still sees the pre-merge content
         assert {r["k"]: r["v"]
                 for r in t.snapshot(spark, as_of=2).collect()}[2] == 20.0
-        # the adds-only change feed refuses across the data-changing
-        # remove, by contract
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError, match="adds-only"):
-            t.reader().changes(spark, since=2)
 
     def test_merge_insert_only_never_rewrites(self, spark, tmp_path):
         t = self._three_file_table(spark, tmp_path)
