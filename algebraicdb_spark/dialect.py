@@ -428,8 +428,9 @@ def _value_expr(raw: str, typ: str | AdtType, types: Mapping[str, AdtType]) -> s
 
 def parse_insert_rows(
     stmt: str, table: TableDef, types: Mapping[str, AdtType]
-) -> tuple[str, list[str]]:
-    """Parse INSERT; return (table_name, one SELECT-expression list per row)."""
+) -> tuple[str, list[list[str]]]:
+    """Parse INSERT; return (table_name, each row's typed cell
+    expressions in declared table order)."""
     m = _INSERT_RE.match(stmt)
     if not m:
         raise AdtError(f"not an INSERT statement: {stmt!r}")
@@ -452,13 +453,11 @@ def parse_insert_rows(
                 f"VALUES tuple has {len(cells)} cells, table {table.name} "
                 f"expects {len(cols)}"
             )
-        exprs = [
-            f"{_value_expr(cell, table.columns[col], types)} AS {col}"
-            for col, cell in zip(cols, cells)
-        ]
-        # emit in declared table order so rows union cleanly
-        ordered = sorted(exprs, key=lambda e: list(table.columns).index(e.rsplit(" AS ", 1)[1]))
-        rows.append(", ".join(ordered))
+        by_col = dict(zip(cols, cells))
+        rows.append([
+            _value_expr(by_col[c], typ, types)
+            for c, typ in table.columns.items()
+        ])
     return m.group("name"), rows
 
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +45,13 @@ from algebraicdb_spark.functions.rounding import pround
 from algebraicdb_spark.operators.scans import _scratch
 from algebraicdb_spark.plans.registry import register
 from algebraicdb_spark.sources.catalog import load_tables
+
+# a checkpoint file: classic `<v>.checkpoint.parquet`, multipart
+# `<v>.checkpoint.<i>.<n>.parquet`, or V2 `<v>.checkpoint.<uuid>.<ext>`
+_CHECKPOINT_NAME_RE = re.compile(
+    r"(?P<v>\d{20})\.checkpoint\.(?:(?P<i>\d{10})\.(?P<n>\d{10})\.parquet"
+    r"|parquet|[^.]+\.(?:parquet|json))"
+)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -878,10 +886,11 @@ class DeltaLogTable:
     exactly its non-null ``add`` rows (``remove`` rows there are
     retention tombstones, already folded out). Snapshot = checkpoint
     adds + the JSON tail fold for versions past it; time travel BELOW
-    the checkpoint works iff the JSON prefix 0..as_of still exists,
-    else raises. Checkpoints are read driver-side via pyarrow with
-    column pruning to ``add`` — the same O(metadata) shape as the
-    JSON fold.
+    the checkpoint starts from the newest older checkpoint still on
+    disk at or below the version, else replays the JSON prefix
+    0..as_of, and raises when neither survives. Checkpoints are read
+    driver-side via pyarrow with column pruning to ``add`` — the same
+    O(metadata) shape as the JSON fold.
 
     Partitioned tables ARE in scope: metaData.partitionColumns names
     them and each add's ``partitionValues`` carries the (string-
@@ -971,6 +980,37 @@ class DeltaLogTable:
         return latest_json
 
     # -- checkpoint replay ----------------------------------------------
+
+    def _checkpoint_for(self, as_of: int | None) -> dict | None:
+        """The checkpoint a fold at ``as_of`` starts from, in the
+        ``_last_checkpoint`` pointer's shape: the pointer itself when
+        ``as_of`` is at or past it, else the newest complete checkpoint
+        on disk at or below ``as_of`` (retention cleans the JSON
+        prefix, not the older checkpoints), else None — replay the
+        JSON from version 0. One pointer read per call: callers fold
+        from the returned dict only, so an external checkpoint advance
+        mid-operation cannot mix two generations."""
+        cp = self._cp
+        if cp is None or as_of is None or as_of >= cp["version"]:
+            return cp
+        layouts: dict[int, list[tuple[int, int] | None]] = {}
+        for f in os.listdir(self.log_dir):
+            m = _CHECKPOINT_NAME_RE.fullmatch(f)
+            if m is not None and int(m.group("v")) <= as_of:
+                layouts.setdefault(int(m.group("v")), []).append(
+                    (int(m.group("i")), int(m.group("n")))
+                    if m.group("n") else None
+                )
+        for v in sorted(layouts, reverse=True):
+            found = layouts[v]
+            if None in found:
+                return {"version": v}
+            for n in sorted({n for _i, n in found}):
+                # a multipart checkpoint missing a part is incomplete
+                # (a crashed writer) and is skipped, per the spec
+                if {i for i, k in found if k == n} == set(range(1, n + 1)):
+                    return {"version": v, "parts": n}
+        return None
 
     def _checkpoint_files(self, cp: dict | None = None) -> list[str]:
         """Resolve the parquet file(s) a checkpoint's state lives in:
@@ -1188,9 +1228,9 @@ class DeltaLogTable:
 
         proto: dict = {}
         meta: dict = {}
-        cp = self._cp
+        cp = self._checkpoint_for(as_of)
         lo = 0
-        if cp is not None and (as_of is None or as_of >= cp["version"]):
+        if cp is not None:
             for fp in self._checkpoint_files(cp):
                 for row in self._cp_rows(fp, "protocol"):
                     proto = row
@@ -1397,16 +1437,13 @@ class DeltaLogTable:
         both derive from this single fold — a skip-pruned read on
         exactly the checkpointed, many-commit tables skipping is meant
         to help must not pay the driver-side log walk twice."""
-        cp = self._cp  # ONE pointer read per operation: an external
-        # checkpoint advance mid-call must not mix two generations
-        cp_v = cp["version"] if cp is not None else None
-        use_cp = cp_v is not None and (as_of is None or as_of >= cp_v)
+        cp = self._checkpoint_for(as_of)
         state: dict[str, tuple[str, dict, dict | None, str | None]] = {}
-        if use_cp:
+        if cp is not None:
             for p, pv, dv, st in self._checkpoint_adds_full(cp):
                 state[p] = ("add", pv, dv, st)
         for _, actions in self._json_commit_actions(
-            cp_v + 1 if use_cp else 0, as_of
+            cp["version"] + 1 if cp is not None else 0, as_of
         ):
             for a in actions:
                 if "add" in a:
@@ -1595,9 +1632,9 @@ class DeltaLogTable:
         Pinning the read matters: an externally-evolved table read
         raw resolves to whichever file's footer Spark samples."""
         doc = None
-        cp = self._cp
+        cp = self._checkpoint_for(as_of)
         lo = 0
-        if cp is not None and (as_of is None or as_of >= cp["version"]):
+        if cp is not None:
             for fp in self._checkpoint_files(cp):
                 for row in self._cp_rows(fp, "metaData"):
                     if row.get("schemaString"):

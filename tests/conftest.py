@@ -12,7 +12,9 @@ SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from algebraicdb_spark.session import get_spark
 
-    spark = get_spark("pytest", cpus="8", shuffle_partitions=8)
+    # one core and one shuffle partition per CPU the run was given
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark("pytest", cpus=str(cpus), shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
 

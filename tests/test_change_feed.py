@@ -9,7 +9,9 @@ Iceberg.
 - A min/max view refuses every window that removes rows, including an
   ``append``-labelled Iceberg snapshot that commits a delete manifest.
 - Delta's feed walks only its window: a window above a cleaned JSON
-  prefix is accepted, through the reader and through ``CHANGES(t, v)``.
+  prefix is accepted, through the reader and through ``CHANGES(t, v)``;
+  the state before such a window folds from the newest checkpoint at or
+  below it.
 - Iceberg's snapshot and the writer's live rows are the same scan: on
   one table carrying position deletes, equality deletes and a deletion
   vector they hold the same rows as a plain-Python model."""
@@ -115,20 +117,27 @@ def test_min_max_view_refuses_an_append_labelled_delete_manifest(
         view.refresh(spark)
 
 
-def test_delta_feed_accepts_a_window_above_a_cleaned_prefix(
-    spark, tmp_path
-):
-    """Checkpoints at v2 and v4, the JSON commits below the first one
-    deleted: the window (3, 5] has every commit it needs."""
-    root = str(tmp_path / "d")
+def _cleaned_prefix_table(spark, root):
+    """Six appends of three rows (v0 … v5), checkpoints at v2 and v4,
+    and the JSON commits below the first checkpoint deleted."""
     w = DeltaTableWriter(root)
-    for lo in range(0, 18, 3):  # v0 … v5
+    for lo in range(0, 18, 3):
         w.append(_batch(spark, lo, lo + 3))
         if lo in (6, 12):
             w.write_checkpoint()
     log = os.path.join(root, "_delta_log")
     for v in (0, 1):
         os.remove(os.path.join(log, f"{v:020d}.json"))
+    return w
+
+
+def test_delta_feed_accepts_a_window_above_a_cleaned_prefix(
+    spark, tmp_path
+):
+    """Checkpoints at v2 and v4, the JSON commits below the first one
+    deleted: the window (3, 5] has every commit it needs."""
+    root = str(tmp_path / "d")
+    _cleaned_prefix_table(spark, root)
     feed = DeltaLogTable(root).changes_cdf(spark, since=3)
     assert sorted((r["k"], r["_change_type"], r["_commit_version"])
                   for r in feed.collect()) == [
@@ -140,6 +149,28 @@ def test_delta_feed_accepts_a_window_above_a_cleaned_prefix(
     # the window's own commits are still required
     with pytest.raises(ValueError, match="missing JSON commits"):
         DeltaLogTable(root).changes_cdf(spark, since=0)
+
+
+def test_delta_pre_window_state_folds_from_an_older_checkpoint(
+    spark, tmp_path
+):
+    """A copy-on-write DELETE of a v0 row, after the cleaned-prefix
+    table above: the window (3, 6] removes a file it did not add, so
+    its pre-window state at v3 is folded. ``_last_checkpoint`` names
+    v4 and the JSON below v2 is gone; the fold starts from the v2
+    checkpoint. Time travel to v3 reads through the same fold."""
+    root = str(tmp_path / "d")
+    w = _cleaned_prefix_table(spark, root)
+    w.delete(spark, "k = 0", mode="cow")  # v6
+    rdr = DeltaLogTable(root)
+    feed = rdr.changes_cdf(spark, since=3)
+    assert sorted((r["k"], r["_change_type"], r["_commit_version"])
+                  for r in feed.collect()) == [(0, "delete", 6)] + [
+        (k, "insert", 4 + k // 15) for k in range(12, 18)
+    ]
+    assert sorted(r["k"] for r in rdr.snapshot(spark, 3).collect()) == (
+        list(range(12))
+    )
 
 
 def test_iceberg_snapshot_equals_the_writers_live_rows(spark, tmp_path):
