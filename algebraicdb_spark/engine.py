@@ -138,6 +138,13 @@ _CHANGES_RE = re.compile(
     re.IGNORECASE,
 )
 
+# an INSERT cell naming the current time: Spark fills it per query
+# (ComputeCurrentTime), so it must be evaluated once, at INSERT time
+_CURRENT_TIME_RE = re.compile(
+    r"\b(?:current_date|current_timestamp|now|localtimestamp|curdate)\b",
+    re.IGNORECASE,
+)
+
 
 def _lakehouse_format(fmt: str, verb: str) -> str:
     """The normalized format name of an ATTACH / CREATE TABLE … FROM
@@ -1066,7 +1073,8 @@ class Engine:
         relation, cells cast to the declared column types (a
         LocalRelation at analysis, no job). A dialect table unions it
         onto its view: one plan leaf per INSERT statement, not per
-        row. Cells must be constant, as in any inline table. On an
+        row. Cells must be constant, as in any inline table; a
+        current-time cell is evaluated once, at INSERT time. On an
         ATTACHed lakehouse table the same batch is a REAL append commit
         through the format's writer (a view union would revert on
         REFRESH), cast to the table's live schema so literal typing
@@ -1113,6 +1121,9 @@ class Engine:
                 raise AdtError(f"INSERT {name}: {exc}") from exc
             self._attach_table_stmt(name, att["fmt"], att["path"], None)
             return
+        if any(_CURRENT_TIME_RE.search(c) for row in rows for c in row):
+            # fix the values now; collecting an inline table runs no job
+            batch = self.spark.createDataFrame(batch.collect(), batch.schema)
         self.table(name).unionByName(batch).createOrReplaceTempView(name)
         self._invalidate_stats(name)
 

@@ -29,14 +29,14 @@ protocol spec
   start from the checkpoint, which is exactly what the round-trip
   tests prove ``DeltaLogTable`` does.
 
-Row-level DELETE / UPDATE / MERGE are planned by
-``operators.mutation``, the format-neutral planner the Iceberg writer
-shares, over this format's scan (``_Target.scan``: the pinned live
-entries with their deletion vectors applied). This module keeps what
-belongs to Delta: the two encoders (``_commit_rows`` — remove+add, or
-deletion vectors with the protocol upgrade), CHECK constraints and
-generated / identity columns, column mapping, change-data-feed files,
-and the commit's conflict check (``_publish_if_live``).
+Row-level DELETE / UPDATE / MERGE run the verb bodies of
+``operators.mutation``, shared with the Iceberg writer, over this
+format's ``_Target``: the pinned live entries scanned with their
+deletion vectors applied. This module keeps what belongs to Delta: the
+two encoders (``_Target.commit`` — remove+add, or deletion vectors
+with the protocol upgrade), CHECK constraints and generated / identity
+columns, column mapping, change-data-feed files, and the commit's
+conflict check (``_publish_if_live``).
 
 Concurrency is Delta's own: the commit publish is a create-exclusive
 write of the next version file (``txnlog.publish_exclusive``, shared
@@ -64,7 +64,6 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Callable
 from dataclasses import dataclass, field
 from urllib.parse import quote
 
@@ -80,6 +79,7 @@ from algebraicdb_spark.operators.txnlog import (
     _cm_phys_type,
     _hive_partition_values,
     _schema_fields,
+    footer_rows,
     parse_schema_string,
     publish_exclusive,
     retry_commit,
@@ -87,95 +87,228 @@ from algebraicdb_spark.operators.txnlog import (
 
 _EMPTY_ST = StructType([])
 
-# the object each mutation's "no commits to …" refusal names
-_VERB_OBJECT = {"DELETE": "delete from", "UPDATE": "update",
-                "MERGE": "merge into"}
-
 
 @dataclass
 class _Target:
-    """One row-level mutation's pinned inputs, from ONE log fold: the
-    live entries (raw path verbatim — the fold key — with each file's
-    deletion-vector descriptor, which the mutation must APPLY when
-    scanning and carry when tombstoning), schema, partition columns,
-    the 'name'-mode column mapping (rewrites restage under PHYSICAL
-    names or every mapped reader resolves them to all-NULL) and the
-    resolved write mode, ``cow`` or ``mor``."""
+    """One row-level mutation on a Delta table: the ``mutation.Target``
+    the shared verb bodies run over, pinned from ONE log fold — the
+    live entries (raw path verbatim, the fold key, with each file's
+    deletion-vector descriptor, which the scan must APPLY and a
+    tombstone must carry), schema, partition columns and column
+    mapping (rewrites restage under PHYSICAL names). It records every
+    file it stages, so ``unstage`` can take them all back."""
 
+    w: DeltaTableWriter
+    spark: SparkSession
+    op: str
     rdr: DeltaLogTable
     entries: list[tuple[str, str, dict, dict | None]]
-    st: StructType | None
-    part_cols: list[str]
-    mapping: dict[str, str] | None
     meta: dict | None
-    mode: str
-    by_raw: dict = field(init=False)
-    raw_of: dict = field(init=False)
-    pv_of: dict = field(init=False)
-    dv_of: dict = field(init=False)
+    positions: bool
+    dv_inline_threshold: int
+    staged: list[tuple[str, dict]] = field(default_factory=list)
+    cdc: list[tuple[str, dict]] = field(default_factory=list)
+    new_pos: dict[str, list[int]] = field(default_factory=dict)
+    written_bin: str | None = None
+    removed: list[str] = field(default_factory=list)
+    dv_files: list[str] = field(default_factory=list)
 
     def __post_init__(self) -> None:
+        meta = self.meta or {}
+        self.st = parse_schema_string(meta.get("schemaString"), self.w.path)
+        self.part_cols = list(meta.get("partitionColumns") or [])
+        self.mapping = self.w._cm_of(self.meta)
         self.by_raw = {e[0]: e for e in self.entries}
         # the scan's ``__lp`` (resolved local path) → fold key
-        self.raw_of = {res: raw for raw, res, _pv, _dv in self.entries}
+        self.live = {res: raw for raw, res, _pv, _dv in self.entries}
         self.pv_of = {raw: pv for raw, _res, pv, _dv in self.entries}
         self.dv_of = {raw: dv for raw, _res, _pv, dv in self.entries}
-
-    def scan(self, spark: SparkSession, raws: list[str] | None = None,
-             pos: bool = False, entries: list | None = None) -> DataFrame:
-        """The live rows of ``raws`` (default: every live file), each
-        file's deletion vector applied; ``pos`` adds the planner's
-        ``__lp``/``__pos`` columns."""
-        if entries is None:
-            entries = (self.entries if raws is None
-                       else [self.by_raw[r] for r in raws])
-        return self.rdr._assemble_mor(
-            spark, entries, self.st, self.part_cols, keep_pos=pos,
-            mapping=self.mapping,
+        self.columns = (
+            [f.name for f in self.st.fields] + self.part_cols
+            if self.st is not None else None
         )
 
-    def counts(self, frame: DataFrame, predicate: str | None = None,
-               merge=None) -> dict[str, int]:
-        """The planner's per-file match counts, keyed by raw path."""
-        return {
-            self.raw_of[lp]: n
-            for lp, n in mutation.match_counts(
-                frame, self.raw_of, predicate, merge).items()
-        }
+    def scan(self, files: list[str] | None = None, probe: bool = False,
+             restage: bool = False, entries: list | None = None
+             ) -> DataFrame:
+        """The live rows of ``files`` (raw paths; default: every live
+        file) or of ``entries``, each file's deletion vector applied;
+        ``probe`` adds the planner's ``__lp``/``__pos`` columns."""
+        if entries is None:
+            entries = (self.entries if files is None
+                       else [self.by_raw[r] for r in files])
+        return self.rdr._assemble_mor(
+            self.spark, entries, self.st, self.part_cols, keep_pos=probe,
+            mapping=self.mapping,
+        )
 
     def live_rows(self, raw: str) -> int:
         """Rows a snapshot reads from this file: physical footer count
         minus the deletion vector's cardinality (the descriptor field —
         validated against the decoded bitmap on every read path)."""
         _raw, res, _pv, dv = self.by_raw[raw]
-        n = _file_rows(res)
+        n = footer_rows(res)
         return n - int(dv["cardinality"]) if dv else n
 
+    def derive(self, frame: DataFrame) -> DataFrame:
+        return self.w._recompute_generated(frame, self.meta)
 
-def _file_rows(path: str) -> int:
-    import pyarrow.parquet as pq
+    def carry(self, prefix: str | None = None) -> dict:
+        return {}
 
-    return pq.ParquetFile(path).metadata.num_rows
+    def insert_fields(self, probe: DataFrame | None) -> list:
+        schema = probe.schema if probe is not None else self.st
+        if schema is None:
+            raise ValueError(
+                "MERGE into an empty schema-less delta table has "
+                "no column shape to insert into — append a first "
+                "batch"
+            )
+        return [f for f in schema.fields
+                if f.name not in (mutation.FILE, mutation.POS)]
 
+    def stage_rows(self, frame: DataFrame, check: bool = True) -> int:
+        """Stage rows under the column mapping; ``check`` probes
+        CHECK constraints and generated-column consistency first."""
+        if check:
+            self.w._enforce_invariants(frame, self.meta, self.op)
+        staged, rows = self.w._stage_counted(
+            frame, self.part_cols, mapping=self.mapping)
+        kept, dropped = mutation.drop_empty(staged, rows, self.positions)
+        self.w._unstage(dropped)
+        self.staged += kept
+        return sum(rows)
 
-def _change_rows(pre: DataFrame, post: DataFrame, op: str) -> DataFrame:
-    """Change-feed rows between two states of the same rows: pre EXCEPT
-    ALL post are removed, post EXCEPT ALL pre introduced, labeled the
-    way the engine's ``changes_cdf`` labels that commit's operation."""
-    from pyspark.sql import functions as F
+    def stage_positions(self, positions: DataFrame) -> int:
+        """Collect the matched positions per file, bitmapped
+        executor-side; ``commit`` unions them into each file's
+        vector."""
+        self.new_pos = mutation.collect_positions(positions, self.live)
+        return sum(len(p) for p in self.new_pos.values())
 
-    pre_l, post_l = (
-        ("update_preimage", "update_postimage")
-        if op.upper() == "UPDATE"
-        else ("delete", "insert")
-    )
-    return (
-        pre.exceptAll(post)
-        .withColumn("_change_type", F.lit(pre_l))
-        .unionByName(
-            post.exceptAll(pre).withColumn("_change_type", F.lit(post_l))
+    def commit(self, change: mutation.Change) -> int:
+        """ONE data-changing commit: every matched file leaves as a
+        remove (copy-on-write) or is re-added with its new vector
+        (``_vector_actions``, the first vectored commit carrying the
+        protocol upgrade), the staged files land as adds, and the
+        change rows as ``_change_data`` files when the feed is on."""
+        affected = sorted(self.new_pos) if self.positions else change.files
+        actions: list[dict] = []
+        if self.positions:
+            actions = (self._vector_actions()
+                       + self.w._dv_protocol_actions(self.rdr))
+        if self.w._cdf_enabled(self.meta):
+            actions += self._change_data(change, affected, actions)
+        return self.w._commit_cow(
+            affected, self.pv_of, self.dv_of, self.staged, self.op,
+            {"predicate": change.predicate}, extra_actions=actions,
         )
-    )
+
+    def _vector_actions(self) -> list[dict]:
+        """The deletion-vector commit pieces of ``new_pos``: re-add
+        actions carrying the UNIONED vectors with ``tightBounds:
+        false`` stats, while fully covered files leave as plain removes
+        (``removed``). New vector = old positions ∪ new matches (the
+        old vector decodes driver-side, bounded by its own size);
+        vectors ≤ ``dv_inline_threshold`` bytes ride inline, larger
+        ones share one ``.bin`` (``written_bin``)."""
+        from algebraicdb_spark.operators.deletion_vectors import (
+            dv_positions, inline_dv_descriptor, write_dv_file,
+        )
+
+        vectors: list[list[int]] = []  # in ``dv_files`` order
+        for raw in sorted(self.new_pos):
+            pos = set(self.new_pos[raw])
+            if self.dv_of[raw] is not None:
+                pos |= set(dv_positions(self.w.path, self.dv_of[raw]))
+            if len(pos) >= footer_rows(self.by_raw[raw][1]):
+                self.removed.append(raw)  # vector covers the file
+            else:
+                self.dv_files.append(raw)
+                vectors.append(sorted(pos))
+        # 8 + 2 bytes per row: a cheap proxy for the serialized size
+        descs = {raw: inline_dv_descriptor(pos)
+                 for raw, pos in zip(self.dv_files, vectors)
+                 if 8 + 2 * len(pos) <= self.dv_inline_threshold}
+        file_backed = [(raw, pos) for raw, pos in zip(self.dv_files, vectors)
+                       if raw not in descs]
+        if file_backed:
+            self.written_bin, fdescs = write_dv_file(
+                self.w.path, [pos for _raw, pos in file_backed])
+            descs.update(zip([raw for raw, _pos in file_backed], fdescs))
+        adds = []
+        for raw in self.dv_files:
+            res = self.by_raw[raw][1]
+            stats = json.loads(_file_stats_json(res))
+            stats["tightBounds"] = False  # min/max may cover DV'd rows
+            adds.append({"add": {
+                "path": raw,  # verbatim committed bytes — the fold key
+                "partitionValues": self.pv_of[raw] or {},
+                "size": os.path.getsize(res),
+                "modificationTime": int(os.path.getmtime(res) * 1000),
+                "dataChange": True,
+                "stats": json.dumps(stats),
+                "deletionVector": descs[raw],
+            }})
+        return adds
+
+    def _change_data(self, change: mutation.Change, affected: list[str],
+                     actions: list[dict]) -> list[dict]:
+        """The commit's row-level changes as ``cdc`` actions over
+        ``_change_data/`` parquet files (table columns +
+        ``_change_type``) — PROTOCOL.md's "Change Data Files". A
+        commit carrying ANY cdc action is read from its change files
+        ALONE, so they cover the WHOLE commit: ``change.feed``'s rows
+        (DELETE, UPDATE — O(matched rows)), or else the generic diff of
+        the ``affected`` files' PRE-commit state against their
+        POST-commit state (re-adds in ``actions`` plus the staged
+        files), labeled as ``changes_cdf`` labels that commit."""
+        if change.feed is not None:
+            changes = change.feed(affected)
+        else:
+            def side(entries, extra_staged):
+                ents = list(entries) + [
+                    (rel, os.path.join(self.w.path, rel), pv, None)
+                    for rel, pv in extra_staged
+                ]
+                return self.scan(entries=ents) if ents else None
+
+            pre = side([self.by_raw[raw] for raw in affected], [])
+            post = side(
+                [(a["add"]["path"], self.by_raw[a["add"]["path"]][1],
+                  self.pv_of[a["add"]["path"]], a["add"]["deletionVector"])
+                 for a in actions if "add" in a],
+                self.staged,
+            )
+            if pre is None and post is None:
+                return []
+            changes = mutation.change_rows(
+                post.limit(0) if pre is None else pre,
+                pre.limit(0) if post is None else post,
+                update=False,
+            )
+        # an all-cancelled partition can stage an empty part file —
+        # dropped rather than committed as a rowless cdc action
+        staged, rows = self.w._stage_counted(
+            changes, self.part_cols, mapping=self.mapping,
+            subdir="_change_data",
+        )
+        self.cdc, dropped = mutation.drop_empty(staged, rows, each=True)
+        self.w._unstage(dropped)
+        return [{"cdc": {
+            "path": quote(rel, safe="/"),
+            "partitionValues": pv,
+            "size": os.path.getsize(os.path.join(self.w.path, rel)),
+            "dataChange": False,
+        }} for rel, pv in self.cdc]
+
+    def encoded(self) -> dict[str, int]:
+        return {"files_removed": len(self.removed),
+                "files_dv": len(self.dv_files)}
+
+    def unstage(self) -> None:
+        self.w._unstage(self.staged + self.cdc)
+        self.w._reclaim_bin(self.written_bin)
 
 
 def _file_stats_json(fpath: str) -> str:
@@ -844,7 +977,7 @@ class DeltaTableWriter:
     # data-changing mutation on a table with
     # delta.enableChangeDataFeed=true lands its row-level diff as
     # `_change_data/` parquet + `cdc` actions in the same commit
-    # (_cdc_actions). generatedColumns / identityColumns are honored
+    # (_Target._change_data). generatedColumns / identityColumns are honored
     # while no such column is DECLARED — the declaration checks below
     # refuse the tables where the capability would actually bind.
     # v2Checkpoint is honored by WRITING the layout it mandates:
@@ -929,7 +1062,7 @@ class DeltaTableWriter:
             # (round 13): check constraints (v3+) are ENFORCED when
             # declared (round 14, _enforce_invariants); change data
             # feed (v4+) is honored by emitting `_change_data` + cdc
-            # actions in every mutation commit (_cdc_actions);
+            # actions in every mutation commit (_Target._change_data);
             # generated columns (v4+) are honored (round 14 —
             # computed/validated/recomputed); identity columns (v6)
             # refuse below when DECLARED; column mapping
@@ -1069,8 +1202,8 @@ class DeltaTableWriter:
         version, or a reader between two commits sees a config lying
         about the protocol. After this, every mutation commit lands
         its row-level diff as ``_change_data`` parquet + ``cdc``
-        actions (``_cdc_actions``). No-op (returns None) when already
-        fully enabled. ``extra_props`` fold into the same commit, as
+        actions (``_Target._change_data``). No-op (returns None) when
+        already fully enabled. ``extra_props`` fold into the same commit, as
         in ``enable_deletion_vectors``."""
         def attempt() -> int | None:
             rdr = self.reader()
@@ -1338,10 +1471,10 @@ class DeltaTableWriter:
 
         try:
             return retry_commit("append", attempt)
-        except (SchemaEvolutionError, ConcurrentWriteError):
-            # the staged files were never referenced by a published
-            # commit — leaving them would leak forever under vacuum's
-            # log-candidates rule
+        except BaseException:
+            # nothing raises once a commit lands, so the staged files
+            # were never referenced by a published commit — leaving
+            # them would leak forever under vacuum's log-candidates rule
             self._unstage(staged)
             raise
 
@@ -1426,9 +1559,6 @@ class DeltaTableWriter:
             return retry_commit(
                 f"append_txn({app_id}, {txn_version})", attempt
             )
-        except SchemaEvolutionError:
-            self._unstage(staged)
-            raise
         except ConcurrentWriteError:
             self._unstage(staged)
             # exhausted: the FINAL slot's winner may have been our
@@ -1438,6 +1568,9 @@ class DeltaTableWriter:
             # streaming query whose batch is durably committed
             if txn_version <= self.reader().last_txn_version(app_id):
                 return None
+            raise
+        except BaseException:
+            self._unstage(staged)
             raise
 
     def overwrite(
@@ -1614,9 +1747,9 @@ class DeltaTableWriter:
                 + self._add_actions(staged)
                 + tail,
             )
-        except ConcurrentWriteError:
-            # the error tells the caller to rebase and retry — the
-            # staged files must not leak while they do (vacuum's
+        except BaseException:
+            # nothing landed (a lost race tells the caller to rebase
+            # and retry) — the staged files must not leak (vacuum's
             # log-candidates rule never reclaims unreferenced files)
             self._unstage(staged)
             raise
@@ -1734,14 +1867,16 @@ class DeltaTableWriter:
 
     # -- row-level mutation ------------------------------------------------
     #
-    # DELETE / UPDATE / MERGE plan through ``operators.mutation`` (the
-    # row-level decisions both lakehouse writers share) and encode
-    # here in one of two modes: copy-on-write (remove + add) or
-    # deletion vectors. ``mode='auto'`` picks vectors iff the protocol
-    # already announces deletionVectors in writerFeatures — the same
-    # config-driven dispatch real Delta writers use.
+    # DELETE / UPDATE / MERGE run the shared verb bodies of
+    # ``operators.mutation`` over a ``_Target`` and encode in one of two
+    # modes: copy-on-write (remove + add) or deletion vectors.
+    # ``mode='auto'`` picks vectors iff the protocol already announces
+    # deletionVectors in writerFeatures — the same config-driven
+    # dispatch real Delta writers use. The plan is made once; the
+    # commit re-checks its inputs at publish (``_publish_if_live``).
 
-    def _target(self, mutation_name: str, mode: str) -> _Target:
+    def _target(self, spark: SparkSession, mutation_name: str, mode: str,
+                dv_inline_threshold: int) -> _Target:
         """Gate the mutation (before any staging) and pin its inputs
         from ONE log fold."""
         if mode not in ("auto", "cow", "mor"):
@@ -1751,7 +1886,7 @@ class DeltaTableWriter:
         if self.latest_version() < 0:
             raise ValueError(
                 f"delta table {self.path} has no commits to "
-                f"{_VERB_OBJECT[mutation_name]}"
+                f"{mutation.VERB_OBJECT[mutation_name.lower()]}"
             )
         rdr = self.reader()
         proto, meta = rdr._protocol_meta()
@@ -1763,16 +1898,11 @@ class DeltaTableWriter:
                 if "deletionVectors" in (proto.get("writerFeatures") or [])
                 else "cow"
             )
-        return _Target(
-            rdr=rdr,
-            entries=rdr._live_entries_full(),
-            st=parse_schema_string((meta or {}).get("schemaString"),
-                                   self.path),
-            part_cols=list((meta or {}).get("partitionColumns") or []),
-            mapping=self._cm_of(meta),
-            meta=meta,
-            mode=mode,
-        )
+        entries = rdr._live_entries_full()
+        # a table with no live rows has no positions to vector: a MERGE
+        # into it only inserts
+        return _Target(self, spark, mutation_name, rdr, entries, meta,
+                       mode == "mor" and bool(entries), dv_inline_threshold)
 
     @staticmethod
     def _dv_key(dv: dict | None) -> tuple | None:
@@ -1794,209 +1924,19 @@ class DeltaTableWriter:
         return str(conf.get("delta.enableChangeDataFeed", "")
                    ).lower() == "true"
 
-    def _matched(
-        self, spark: SparkSession, tgt: _Target, predicate: str
-    ) -> tuple[dict[str, int], dict[str, list[int]] | None]:
-        """The probe DELETE and UPDATE start from: ONE distributed scan
-        with the predicate pushed into the parquet reader and every
-        existing deletion vector applied (a deleted row never
-        rematches). Copy-on-write needs each file's match count;
-        deletion vectors need the matched positions, bitmapped
-        executor-side. Returns ({raw path: matched rows},
-        {raw path: positions} or None)."""
-        probe = tgt.scan(spark, pos=True)
-        if tgt.mode == "mor":
-            new_pos = self._collect_positions(
-                mutation.positions(mutation.matches(probe, predicate)),
-                tgt.raw_of,
-            )
-            return {raw: len(p) for raw, p in new_pos.items()}, new_pos
-        return tgt.counts(probe, predicate), None
-
-    def _collect_positions(
-        self, probe, raw_of: dict[str, str]
-    ) -> dict[str, list[int]]:
-        """{raw path: matched physical ordinals} for a (__lp, __pos)
-        frame. Bitmaps serialize EXECUTOR-side (``mapInPandas`` after a
-        repartition by file), so driver traffic is O(compressed
-        bitmap), never O(matched rows)."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from algebraicdb_spark.operators.deletion_vectors import (
-            roaring64_positions,
-        )
-
-        def to_bitmaps(batches):
-            from algebraicdb_spark.operators.deletion_vectors import (
-                roaring64_serialize,
-            )
-
-            acc: dict[str, list[int]] = {}
-            for b in batches:
-                for lp, pos in zip(b["__lp"], b["__pos"]):
-                    acc.setdefault(lp, []).append(int(pos))
-            if acc:
-                yield pd.DataFrame({
-                    "__lp": list(acc),
-                    "bm": [roaring64_serialize(sorted(v))
-                           for v in acc.values()],
-                })
-
-        parts = (
-            probe.select("__lp", "__pos")
-            .repartition(F.col("__lp"))
-            .mapInPandas(to_bitmaps, "__lp string, bm binary")
-            .collect()
-        )
-        new_pos: dict[str, list[int]] = {}
-        for r in parts:
-            raw = raw_of.get(r["__lp"])
-            if raw is None:
-                raise RuntimeError(
-                    f"probe returned file {r['__lp']} outside the live "
-                    "set — concurrent vacuum mid-probe?"
-                )
-            # one partition per __lp after the repartition, so each
-            # file appears exactly once; decode is O(bitmap)
-            new_pos.setdefault(raw, []).extend(
-                roaring64_positions(bytes(r["bm"]))
-            )
-        return new_pos
-
-    def _cdc_actions(
-        self,
-        spark: SparkSession,
-        tgt: _Target,
-        op: str,
-        changes: DataFrame | None,
-        affected: list[str],
-        adds: list[dict],
-        staged: list[tuple[str, dict]],
-    ) -> tuple[list[dict], list[tuple[str, dict]]]:
-        """Land a mutation commit's row-level changes in Delta's
-        INTEROP change-data format: ``_change_data/`` parquet files
-        (table columns + ``_change_type``) referenced by ``cdc``
-        actions riding the SAME commit — PROTOCOL.md's "Change Data
-        Files". Per the spec, a commit carrying ANY cdc action is
-        consumed by CDF readers from its change files ALONE, so the
-        changes cover the WHOLE commit.
-
-        ``changes`` is the labeled frame DELETE and UPDATE derive from
-        their matched rows (the deletes themselves; for UPDATE the
-        diff of preimages and postimages, which keeps the algebra's
-        cancellation of no-op assignments) — O(matched rows), and
-        multiset-equal to the generic diff because deterministic
-        predicates over immutable files select the same rows twice.
-        ``None`` (MERGE) takes the generic diff: the ``affected``
-        files in their PRE-commit state (old deletion vectors applied)
-        against their POST-commit state — the re-``adds`` with their
-        new vectors plus the ``staged`` files. pre EXCEPT ALL post are
-        the removed rows, post EXCEPT ALL pre the introduced ones — the
-        SAME multiset algebra the engine's own ``changes_cdf`` replays
-        from add/remove actions, labeled as that reader labels them
-        (a MERGE's updated rows surface as a delete+insert pair).
-
-        Cost: one bounded scan of exactly the files the mutation
-        already rewrote or vectored, never O(table). Returns (cdc
-        actions, staged cdc files for abort-path unstaging)."""
-        if changes is None:
-            def side(entries, extra_staged):
-                ents = list(entries) + [
-                    (rel, os.path.join(self.path, rel), pv, None)
-                    for rel, pv in extra_staged
-                ]
-                return tgt.scan(spark, entries=ents) if ents else None
-
-            pre = side([tgt.by_raw[raw] for raw in affected], [])
-            post = side(
-                [(a["add"]["path"], tgt.by_raw[a["add"]["path"]][1],
-                  tgt.pv_of[a["add"]["path"]], a["add"]["deletionVector"])
-                 for a in adds],
-                staged,
-            )
-            if pre is None and post is None:
-                return [], []
-            changes = _change_rows(
-                post.limit(0) if pre is None else pre,
-                pre.limit(0) if post is None else post,
-                op,
-            )
-        cdc_staged = self._stage(
-            changes, tgt.part_cols, mapping=tgt.mapping,
-            subdir="_change_data",
-        )
-        # an all-cancelled partition can stage an empty part file —
-        # drop it rather than commit a rowless cdc action
-        kept: list[tuple[str, dict]] = []
-        for rel, pv in cdc_staged:
-            if _file_rows(os.path.join(self.path, rel)) == 0:
-                self._unstage([(rel, pv)])
-            else:
-                kept.append((rel, pv))
-        actions = []
-        for rel, pv in kept:
-            full = os.path.join(self.path, rel)
-            actions.append({"cdc": {
-                "path": quote(rel, safe="/"),
-                "partitionValues": pv,
-                "size": os.path.getsize(full),
-                "dataChange": False,
-            }})
-        return actions, kept
-
-    def _commit_rows(
-        self,
-        spark: SparkSession,
-        tgt: _Target,
-        op: str,
-        params: dict,
-        affected: list[str],
-        staged: list[tuple[str, dict]],
-        new_pos: dict[str, list[int]] | None,
-        inline_threshold: int,
-        changes: Callable[[], DataFrame] | None = None,
-    ) -> tuple[int, list[str], list[str]]:
-        """The per-mode encoder: ONE data-changing commit of what the
-        planner decided.
-
-        - copy-on-write (``new_pos`` None): every affected file leaves
-          as a remove and the staged rewrites/inserts land as adds.
-        - deletion vectors: each file in ``new_pos`` is re-added with
-          its old vector ∪ the new positions (``_build_dv_actions``; a
-          union covering the whole file leaves as a plain remove), the
-          staged postimages/inserts ride along, and the first vectored
-          commit carries the protocol upgrade atomically.
-
-        With the change data feed on, ``changes()`` (or the generic
-        diff when None) lands as ``_change_data`` in the same commit.
-        Any failure unstages the staged files and reclaims a written
-        ``.bin``. Returns (version, files removed outright, files
-        re-vectored)."""
-        adds: list[dict] = []
-        proto: list[dict] = []
-        removed, dv_files, written_bin = affected, [], None
+    def _stage_counted(
+        self, df: DataFrame, partition_by: list[str] | tuple = (),
+        mapping: dict[str, str] | None = None, subdir: str = "",
+    ) -> tuple[list[tuple[str, dict]], list[int]]:
+        """``_stage`` plus each staged file's footer row count."""
+        staged = self._stage(df, partition_by, mapping=mapping,
+                             subdir=subdir)
         try:
-            if new_pos is not None:
-                adds, removed, dv_files, written_bin = (
-                    self._build_dv_actions(tgt, new_pos, inline_threshold)
-                )
-                proto = self._dv_protocol_actions(tgt.rdr)
-            cdc = None
-            if self._cdf_enabled(tgt.meta):
-                cdc = self._cdc_actions(
-                    spark, tgt, op, changes() if changes else None,
-                    affected, adds, staged,
-                )
-            version = self._commit_cow(
-                affected, tgt.pv_of, tgt.dv_of, staged, op, params,
-                extra_actions=adds + proto, cdc=cdc,
-            )
+            return staged, [footer_rows(os.path.join(self.path, rel))
+                            for rel, _pv in staged]
         except BaseException:
-            self._reclaim_bin(written_bin)
             self._unstage(staged)
             raise
-        return version, removed, dv_files
 
     def _commit_cow(
         self,
@@ -2007,7 +1947,6 @@ class DeltaTableWriter:
         op: str,
         params: dict,
         extra_actions: list[dict] | None = None,
-        cdc: tuple[list[dict], list[tuple[str, dict]]] | None = None,
         data_change: bool = True,
     ) -> int:
         """remove(affected) + add(rewrites) in one commit under the COW
@@ -2016,10 +1955,10 @@ class DeltaTableWriter:
         delete mutates a file in place, and committing a rewrite
         scanned under the old vector would resurrect its deletions).
         Tombstones reuse the committed raw path bytes AND the old DV
-        descriptor verbatim — (path, dv) is the file's identity; every
-        abort path unstages. ``data_change=False`` marks a
-        content-preserving rewrite (OPTIMIZE) that change-feed
-        consumers skip."""
+        descriptor verbatim — (path, dv) is the file's identity.
+        ``data_change=False`` marks a content-preserving rewrite
+        (OPTIMIZE) that change-feed consumers skip. An exception means
+        nothing landed; the caller unstages its files."""
         now_ms = int(time.time() * 1000)
 
         def tomb(raw: str) -> dict:
@@ -2038,19 +1977,11 @@ class DeltaTableWriter:
             + [tomb(raw) for raw in removed_raw]
             + self._add_actions(staged, data_change=data_change)
             + list(extra_actions or [])
-            + list(cdc[0] if cdc else [])
         )
-        # abort paths must reclaim the staged CDF files too — they are
-        # table-root files the log never references until publish
-        unstage_all = staged + (cdc[1] if cdc else [])
         want = {raw: self._dv_key(dv_of.get(raw)) for raw in removed_raw}
-        try:
-            return retry_commit(
-                op, lambda: self._publish_if_live(want, actions, op)
-            )
-        except ConcurrentWriteError:
-            self._unstage(unstage_all)
-            raise
+        return retry_commit(
+            op, lambda: self._publish_if_live(want, actions, op)
+        )
 
     def _publish_if_live(
         self, want: dict[str, tuple | None], actions: list[dict], op: str
@@ -2088,64 +2019,25 @@ class DeltaTableWriter:
         mode: str = "auto",
         dv_inline_threshold: int = 512,
     ) -> dict:
-        """Row-level ``DELETE FROM … WHERE predicate`` (NULL keeps the
-        row — SQL semantics), two physical strategies behind one
-        semantic:
+        """Row-level ``DELETE FROM … WHERE predicate`` (``mutation.delete``;
+        NULL keeps the row).
 
-        - ``cow`` (copy-on-write): untouched files keep their add
-          entries, fully-matching files drop with zero rewrite I/O,
-          partial files rewrite minus the matches. The commit is a
-          data-changing remove+add any Delta engine folds.
-        - ``mor`` (merge-on-read): matched rows get a DELETION VECTOR
-          instead of a rewrite — the commit is O(bitmap bytes), not
-          O(file bytes), which is the strategy that matters at scale.
-          New vectors UNION any existing one, files whose cumulative
-          vector covers every physical row drop as plain removes, and
-          the re-added action keeps the file's verbatim path/size with
-          ``stats`` re-marked ``tightBounds: false`` per the spec.
-          Vectors ≤ ``dv_inline_threshold`` bytes ride the add action
-          inline (storageType 'i'); larger ones share one on-disk
-          ``.bin`` (storageType 'u'). Requires the deletionVectors
-          table feature — committed atomically with the first MoR
-          delete when absent.
+        - ``cow``: one data-changing remove+add commit any Delta engine
+          folds.
+        - ``mor``: matched rows get a DELETION VECTOR — O(bitmap bytes)
+          committed, not O(file bytes). New vectors UNION any existing
+          one, a file whose vector covers every physical row drops as
+          a plain remove, and the re-added action keeps the file's
+          verbatim path/size with ``stats`` re-marked ``tightBounds:
+          false``. Vectors ≤ ``dv_inline_threshold`` bytes ride inline
+          (storageType 'i'), larger ones share one ``.bin`` (storageType
+          'u'); the deletionVectors feature lands with the first one.
         - ``auto``: ``mor`` iff the protocol already announces
-          deletionVectors in writerFeatures, else ``cow``.
-        """
-        from pyspark.sql import functions as F
-
-        tgt = self._target("DELETE", mode)
-        if not tgt.entries:
-            return {"version": None, "rows_deleted": 0,
-                    "files_removed": 0, "files_rewritten": 0}
-        counts, new_pos = self._matched(spark, tgt, predicate)
-        tail = "files_rewritten" if new_pos is None else "files_dv"
-        if not counts:
-            return {"version": None, "rows_deleted": 0,
-                    "files_removed": 0, tail: 0}
-        affected = sorted(counts)
-        staged: list[tuple[str, dict]] = []
-        partial: list[str] = []
-        if new_pos is None:
-            _full, partial = mutation.split_files(counts, tgt.live_rows)
-            if partial:
-                staged = self._stage(
-                    mutation.survivors(tgt.scan(spark, partial), predicate),
-                    tgt.part_cols, mapping=tgt.mapping,
-                )
-        version, removed, dv_files = self._commit_rows(
-            spark, tgt, "DELETE", {"predicate": predicate}, affected,
-            staged, new_pos, dv_inline_threshold,
-            # the deletes ARE the matched rows of the affected files
-            changes=lambda: tgt.scan(spark, affected)
-            .where(mutation.hit(predicate))
-            .withColumn("_change_type", F.lit("delete")),
+          deletionVectors in writerFeatures, else ``cow``."""
+        return mutation.delete(
+            self._target(spark, "DELETE", mode, dv_inline_threshold),
+            predicate,
         )
-        return {
-            "version": version,
-            "rows_deleted": sum(counts.values()),
-            "files_removed": len(removed),
-            tail: len(partial) if new_pos is None else len(dv_files),
-        }
 
     def _refuse_partition_assignment(
         self, assignments: dict | None, part_cols: list[str], op: str
@@ -2166,73 +2058,19 @@ class DeltaTableWriter:
         mode: str = "auto",
         dv_inline_threshold: int = 512,
     ) -> dict:
-        """Row-level ``UPDATE … SET col = expr WHERE predicate``, two
-        physical strategies behind one semantic (dispatch as in
-        ``delete``):
-
-        - ``cow``: affected files rewrite through a CASE per assigned
-          column cast back to the declared type (the pinned schema
-          never drifts); unmatched files keep their add entries.
-        - ``mor``: matched rows get DELETION-VECTORED in place and
-          only their POSTIMAGES stage as new files — an update
-          touching 1% of a file's rows commits O(bitmap + changed
-          rows), not O(file bytes); production Delta's UPDATE under
-          deletionVectors does exactly this. Both halves ride ONE
-          commit, so a reader never sees the delete without the
-          re-insert.
-
-        Generated columns re-derive from the updated sources, and
+        """Row-level ``UPDATE … SET col = expr WHERE predicate``
+        (``mutation.update``; modes as in ``delete``): ``mor`` vectors
+        the preimages and stages only the postimages, both in ONE
+        commit. Generated columns re-derive from the updated sources,
         every row about to land is checked against the table's
-        invariants. Partition-column assignment refuses — row movement
-        is an overwrite-shaped operation. Column-mapped tables scan
-        under LOGICAL names and restage under physical names."""
-        tgt = self._target("UPDATE", mode)
-        if not tgt.entries:
-            return {"version": None, "rows_updated": 0,
-                    "files_rewritten": 0}
-        if tgt.st is not None:
-            mutation.check_assigned(
-                assignments, [f.name for f in tgt.st.fields] + tgt.part_cols
-            )
+        invariants, and partition-column assignment refuses — row
+        movement is an overwrite-shaped operation. Column-mapped tables
+        scan under LOGICAL names and restage under physical names."""
+        tgt = self._target(spark, "UPDATE", mode, dv_inline_threshold)
         self._refuse_partition_assignment(assignments, tgt.part_cols,
                                           "UPDATE")
         self._gate_generated_assignments(assignments, tgt.meta, "UPDATE")
-        pred = predicate if predicate is not None else "TRUE"
-        counts, new_pos = self._matched(spark, tgt, pred)
-        tail = "files_rewritten" if new_pos is None else "files_dv"
-        if not counts:
-            return {"version": None, "rows_updated": 0, tail: 0}
-        affected = sorted(counts)
-        df = tgt.scan(spark, affected)
-
-        def pre_post():
-            pre = df.where(mutation.hit(pred))
-            return pre, self._recompute_generated(
-                mutation.postimages(pre, assignments), tgt.meta
-            )
-
-        if new_pos is None:
-            out = self._recompute_generated(
-                mutation.rewrite(df, assignments, pred), tgt.meta
-            )
-        else:
-            out = pre_post()[1]
-        # the whole rewrite frame probes (pre-existing rows satisfied
-        # their rules at their own write time, so they pass trivially;
-        # filtering by the predicate over POST-update values would
-        # mis-select when an assigned column appears in it)
-        self._enforce_invariants(out, tgt.meta, "UPDATE")
-        staged = self._stage(out, tgt.part_cols, mapping=tgt.mapping)
-        version, _removed, dv_files = self._commit_rows(
-            spark, tgt, "UPDATE", {"predicate": pred}, affected, staged,
-            new_pos, dv_inline_threshold,
-            changes=lambda: _change_rows(*pre_post(), "UPDATE"),
-        )
-        return {
-            "version": version,
-            "rows_updated": sum(counts.values()),
-            tail: len(affected) if new_pos is None else len(dv_files),
-        }
+        return mutation.update(tgt, assignments, predicate)
 
     def merge(
         self,
@@ -2247,25 +2085,13 @@ class DeltaTableWriter:
         mode: str = "auto",
         dv_inline_threshold: int = 512,
     ) -> dict:
-        """``MERGE INTO`` as ONE commit, dispatched as in ``delete``:
-
-        - ``cow``: a semi-join probe counts the matched rows per file;
-          only reached files rewrite (THEN UPDATE through a marked left
-          join; THEN DELETE drops fully-matching files without rewrite
-          I/O and rewrites partial ones via LEFT ANTI). A source that
-          matches a row twice is refused for free: the rewrite
-          preserves row count, so staged footers disagreeing with the
-          input footers IS the multi-match signal.
-        - ``mor``: one inner join of the live rows with the source
-          finds the matched positions, which get deletion vectors; THEN
-          UPDATE stages the postimages from the same join (a duplicated
-          match refuses before anything stages).
-
-        NOT MATCHED inserts anti-join the live set and ride the same
-        commit."""
+        """``MERGE INTO`` as ONE commit (``mutation.merge``; modes as in
+        ``delete``). THEN UPDATE postimages re-derive their generated
+        columns, and every staged row is checked against the table's
+        invariants; MERGE INSERT refuses on identity columns."""
         mutation.check_merge_clauses(assignments, delete_matched,
                                      insert_exprs)
-        tgt = self._target("MERGE", mode)
+        tgt = self._target(spark, "MERGE", mode, dv_inline_threshold)
         self._gate_generated_assignments(assignments, tgt.meta, "MERGE")
         if insert_exprs is not None and self._identity_of(tgt.meta):
             raise NotImplementedError(
@@ -2275,165 +2101,10 @@ class DeltaTableWriter:
             )
         self._refuse_partition_assignment(assignments, tgt.part_cols,
                                           "MERGE")
-        m = mutation.Merge(source, cond, target_alias, source_alias)
-        mor = tgt.mode == "mor" and bool(tgt.entries)
-        counts: dict[str, int] = {}
-        new_pos: dict[str, list[int]] | None = {} if mor else None
-        staged: list[tuple[str, dict]] = []
-        rewritten = 0
-        try:
-            if (assignments or delete_matched) and tgt.entries:
-                probe = tgt.scan(spark, pos=True)
-                post = None
-                if mor:
-                    joined, _n = mutation.merge_matches(
-                        probe, m, refuse_multi=bool(assignments)
-                    )
-                    new_pos = self._collect_positions(
-                        mutation.positions(joined, distinct=True),
-                        tgt.raw_of,
-                    )
-                    counts = {raw: len(p) for raw, p in new_pos.items()}
-                    if assignments and counts:
-                        post = mutation.postimages(
-                            joined, assignments, target=probe, merge=m
-                        )
-                else:
-                    counts = tgt.counts(probe, merge=m)
-                    affected = sorted(counts)
-                    rewritten = len(affected)
-                    if affected and delete_matched:
-                        _full, partial = mutation.split_files(
-                            counts, tgt.live_rows
-                        )
-                        rewritten = len(partial)
-                        if partial:
-                            staged = self._stage(
-                                mutation.survivors(
-                                    tgt.scan(spark, partial), merge=m
-                                ),
-                                tgt.part_cols, mapping=tgt.mapping,
-                            )
-                    elif affected:
-                        post = mutation.rewrite(
-                            tgt.scan(spark, affected), assignments,
-                            merge=m,
-                        )
-                if post is not None:
-                    post = self._recompute_generated(post, tgt.meta)
-                    self._enforce_invariants(post, tgt.meta, "MERGE")
-                    staged = self._stage(post, tgt.part_cols,
-                                         mapping=tgt.mapping)
-                    if not mor:
-                        mutation.check_one_match(
-                            self._staged_rows(staged) - sum(
-                                tgt.live_rows(raw) for raw in counts
-                            )
-                        )
-            rows_inserted = 0
-            if insert_exprs is not None:
-                full_t = tgt.scan(spark) if tgt.entries else None
-                schema = full_t.schema if full_t is not None else tgt.st
-                if schema is None:
-                    raise ValueError(
-                        "MERGE into an empty schema-less delta table has "
-                        "no column shape to insert into — append a first "
-                        "batch"
-                    )
-                ins = mutation.merge_inserts(m, full_t, insert_exprs,
-                                             schema.fields)
-                self._enforce_invariants(ins, tgt.meta, "MERGE")
-                ins_staged = self._stage(ins, tgt.part_cols,
-                                         mapping=tgt.mapping)
-                rows_inserted = self._staged_rows(ins_staged)
-                if rows_inserted == 0:
-                    self._unstage(ins_staged)
-                else:
-                    staged = staged + ins_staged
-        except BaseException:
-            self._unstage(staged)
-            raise
-        tail = "files_dv" if mor else "files_rewritten"
-        if not counts and not staged:
-            return {"version": None, "rows_matched": 0,
-                    "rows_inserted": 0, tail: 0}
-        version, _removed, dv_files = self._commit_rows(
-            spark, tgt, "MERGE", {"predicate": cond}, sorted(counts),
-            staged, new_pos, dv_inline_threshold,
+        return mutation.merge(
+            tgt, mutation.Merge(source, cond, target_alias, source_alias),
+            assignments, insert_exprs, delete_matched,
         )
-        return {
-            "version": version,
-            "rows_matched": sum(counts.values()),
-            "rows_inserted": rows_inserted,
-            tail: len(dv_files) if mor else rewritten,
-        }
-
-    def _staged_rows(self, staged: list[tuple[str, dict]]) -> int:
-        return sum(
-            _file_rows(os.path.join(self.path, rel))
-            for rel, _pv in staged
-        )
-
-    def _build_dv_actions(
-        self, tgt: _Target, new_pos: dict[str, list[int]],
-        inline_threshold: int,
-    ) -> tuple[list[dict], list[str], list[str], str | None]:
-        """Turn per-file matched ordinals into the commit pieces:
-        (re-add actions carrying the UNIONED vectors with
-        ``tightBounds: false`` stats, fully-covered files → plain
-        removes, DV'd files, the written ``.bin``'s uuid-enc for
-        abort-path reclamation). New vector = old positions ∪ new
-        matches (the old vector decodes driver-side, bounded by its
-        own size); vectors ≤ ``inline_threshold`` bytes ride inline."""
-        from algebraicdb_spark.operators.deletion_vectors import (
-            dv_positions, inline_dv_descriptor, write_dv_file,
-        )
-
-        dv_of = tgt.dv_of
-        full_removes: list[str] = []
-        dv_files: list[str] = []       # file order for vector assembly
-        vectors: list[list[int]] = []
-        for raw in sorted(new_pos):
-            pos = sorted(set(new_pos[raw]))
-            if dv_of[raw] is not None:
-                pos = sorted(
-                    set(pos) | set(dv_positions(self.path, dv_of[raw]))
-                )
-            if len(pos) >= _file_rows(tgt.by_raw[raw][1]):
-                full_removes.append(raw)   # vector covers the file
-            else:
-                dv_files.append(raw)
-                vectors.append(pos)
-        descs: dict[str, dict] = {}
-        written_bin: str | None = None
-        file_backed = [
-            (raw, pos) for raw, pos in zip(dv_files, vectors)
-            if 8 + 2 * len(pos) > inline_threshold  # cheap size proxy
-        ]
-        if file_backed:
-            written_bin, fdescs = write_dv_file(
-                self.path, [pos for _raw, pos in file_backed]
-            )
-            for (raw, _pos), d in zip(file_backed, fdescs):
-                descs[raw] = d
-        for raw, pos in zip(dv_files, vectors):
-            if raw not in descs:
-                descs[raw] = inline_dv_descriptor(pos)
-        adds = []
-        for raw in dv_files:
-            res = tgt.by_raw[raw][1]
-            stats = json.loads(_file_stats_json(res))
-            stats["tightBounds"] = False  # min/max may cover DV'd rows
-            adds.append({"add": {
-                "path": raw,  # verbatim committed bytes — the fold key
-                "partitionValues": tgt.pv_of[raw] or {},
-                "size": os.path.getsize(res),
-                "modificationTime": int(os.path.getmtime(res) * 1000),
-                "dataChange": True,
-                "stats": json.dumps(stats),
-                "deletionVector": descs[raw],
-            }})
-        return adds, full_removes, dv_files, written_bin
 
     def _dv_protocol_actions(self, rdr) -> list[dict]:
         """The protocol-upgrade action a first MoR mutation must carry
@@ -2710,14 +2381,18 @@ class DeltaTableWriter:
         staged = self._stage(
             df, part_cols, mapping=self._cm_of(meta)
         )
-        return self._commit_cow(
-            [raw for raw, _res, _pv, _dv in entries],
-            {raw: pv for raw, _res, pv, _dv in entries},
-            {raw: dv for raw, _res, _pv, dv in entries},
-            staged, "OPTIMIZE",
-            {"zOrderBy": zorder_by} if zorder_by else {},
-            data_change=False,
-        )
+        try:
+            return self._commit_cow(
+                [raw for raw, _res, _pv, _dv in entries],
+                {raw: pv for raw, _res, pv, _dv in entries},
+                {raw: dv for raw, _res, _pv, dv in entries},
+                staged, "OPTIMIZE",
+                {"zOrderBy": zorder_by} if zorder_by else {},
+                data_change=False,
+            )
+        except BaseException:
+            self._unstage(staged)
+            raise
 
     def vacuum(self, retain_versions: int = 2) -> list[str]:
         """Physically delete data files the LOG references but no

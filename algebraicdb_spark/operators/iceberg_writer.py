@@ -35,18 +35,19 @@ footer as real field_id metadata. Appends (identity-partitioned or
 transform-partitioned), row mutations, keyed equality-delete upserts,
 compaction, and snapshot maintenance all publish real snapshots;
 schema EVOLUTION stays the owning system's job. Row-level DELETE /
-UPDATE / MERGE are planned by ``operators.mutation``, the
-format-neutral planner the Delta writer shares; this module keeps the
-Iceberg encoders (a manifest rewrite, a position-delete file, or a v3
-deletion vector — ``_how`` picks one from the table's format version
-and ``write.<op>.mode``), the partition spec, v3 row lineage,
-equality deletes, and a retry loop that re-plans every attempt on the
-new head. Scale shape: like every Iceberg client — data files land via
-one distributed Spark write, metadata is O(files in the commit)
-KB-sized driver-side Avro/JSON.
+UPDATE / MERGE run the verb bodies of ``operators.mutation``, shared
+with the Delta writer, over this format's ``_Target``; this module
+keeps the Iceberg encoders (a manifest rewrite, a position-delete
+file, or a v3 deletion vector — ``_how`` picks one from the table's
+format version and ``write.<op>.mode``), the partition spec, v3 row
+lineage, equality deletes, and a retry loop that re-plans every
+attempt on the new head. Scale shape: like every Iceberg client —
+data files land via one distributed Spark write, metadata is O(files
+in the commit) KB-sized driver-side Avro/JSON.
 """
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -62,6 +63,7 @@ from algebraicdb_spark.operators import mutation
 from algebraicdb_spark.operators.iceberg import AvroFileReader, IcebergTable
 from algebraicdb_spark.operators.txnlog import (
     ConcurrentWriteError,
+    footer_rows,
     publish_exclusive,
     retry_commit,
 )
@@ -959,14 +961,29 @@ class _Draft:
     written: list[str] = field(default_factory=list)
 
 
-@dataclass
-class _Scope:
-    """The gated live sets one row-level mutation attempt plans over:
-    data entries (resolved path, recorded uri, data sequence number),
-    live position / equality delete files and deletion vectors, the
-    default partition spec (copy-on-write restaging) and the live
-    vectors' decoded positions by data-file uri (v3)."""
+# the retry-loop label per encoder
+_RETRY_NAME = {"cow": "iceberg", "mor": "iceberg mor", "dv": "iceberg v3 dv"}
+_RECORDS = {"delete": "deleted-records", "update": "updated-records",
+            "merge": "merged-records"}
 
+
+@dataclass
+class _Target:
+    """One row-level mutation attempt on an Iceberg table: the
+    ``mutation.Target`` the shared verb bodies run over, pinned at
+    metadata version ``base_v`` with its encoder ``how`` (``cow``,
+    ``mor`` or ``dv``) and the live sets ``_target`` gated: data
+    entries (resolved path, recorded uri, data sequence number), live
+    delete files and vectors, the default partition spec and the live
+    vectors' positions by data-file uri. It records what the attempt
+    stages (``staged``, ``deletes``) and will publish (``new_dvs``)."""
+
+    w: IcebergTableWriter
+    spark: SparkSession
+    how: str
+    base_v: int
+    cur: dict
+    rdr: IcebergTable
     data: list[tuple[str, str, int | None]]
     pos_d: list[str] = field(default_factory=list)
     eq_d: list[tuple[str, int, tuple[int, ...]]] = field(
@@ -975,45 +992,161 @@ class _Scope:
         default_factory=list)
     spec_parts: list[dict] = field(default_factory=list)
     old_dv: dict[str, list[int]] = field(default_factory=dict)
-
-    @property
-    def live(self) -> set[str]:
-        return {p for p, _u, _s in self.data}
-
-
-@dataclass
-class _Staged:
-    """What one mutation attempt staged — unstaged on any failure."""
-
-    data: list = field(default_factory=list)
+    staged: list = field(default_factory=list)
     deletes: list = field(default_factory=list)
     new_dvs: dict[str, list[int]] = field(default_factory=dict)
 
-    @property
-    def delete_files(self) -> int:
+    def __post_init__(self) -> None:
+        self.positions = self.how != "cow"
+        # the probe's ``__lp``: the resolved path of a plain parquet
+        # scan, or the recorded uri of the row-identity scan
+        key = 1 if self.positions else 0
+        self.live = {d[key]: d[key] for d in self.data}
+        self.columns = [f["name"] for f in self.w._cur_fields(self.cur)]
+
+    def scan(self, files: list[str] | None = None, probe: bool = False,
+             restage: bool = False) -> DataFrame:
+        """Copy-on-write tables carry no delete files (``_cow_scope``
+        gates that), so their files read as plain parquet. The
+        delete-file encoders read the reader's row-identity scan,
+        every tier of existing deletes applied (a deleted row must
+        never rematch): ``__lp`` is the data file as its manifest
+        records it, and ``restage`` on v3 materializes row lineage."""
+        from pyspark.sql import functions as F
+
+        if not self.positions:
+            df = self.spark.read.parquet(
+                *(files if files is not None
+                  else [p for p, _u, _s in self.data]))
+            if not probe:
+                return df
+            return df.withColumn(
+                mutation.FILE,
+                mutation.local_path(F.col("_metadata.file_path")),
+            )
+        data = self.data if files is None else [
+            d for d in self.data if d[1] in set(files)]
+        lineage = restage and self.how == "dv"
+        return self.rdr._identity_scan(
+            self.spark, data, self.pos_d, self.eq_d, self.old_dv,
+            first_ids=self.rdr._first_row_ids(None) if lineage else None,
+        ).withColumnRenamed("__uri", mutation.FILE)
+
+    def live_rows(self, path: str) -> int:
+        return footer_rows(path)
+
+    def derive(self, frame: DataFrame) -> DataFrame:
+        return frame
+
+    def carry(self, prefix: str | None = None) -> dict:
+        """A v3 postimage keeps its ``_row_id`` and a NULL
+        ``_last_updated_sequence_number``, which inherits the new
+        file's data sequence number — race-proof by construction.
+        Rows of lineage-less pre-upgrade files inherit fresh ids."""
+        from pyspark.sql import functions as F
+
+        if self.how != "dv":
+            return {}
+        return {
+            "_row_id": F.col(f"{prefix}._row_id" if prefix else "_row_id"),
+            "_last_updated_sequence_number": F.lit(None).cast("long"),
+        }
+
+    def insert_fields(self, probe: DataFrame | None) -> list:
+        schema = _spark_schema(self.w._cur_fields(self.cur))
+        if schema is None:
+            raise ValueError(
+                "MERGE: the table schema cannot be mapped to "
+                "Spark types, so the INSERT VALUES expressions "
+                "have no column shape to project into — use a "
+                "full Iceberg client"
+            )
+        return schema.fields
+
+    def stage_rows(self, frame: DataFrame, check: bool = True) -> int:
+        """Stage new data rows: copy-on-write restages under the
+        default partition spec; v3 postimages carry their lineage
+        columns under the reserved field ids."""
+        fields = self.w._cur_fields(self.cur)
+        if not self.positions:
+            staged = self.w._stage(frame, ice_fields=fields,
+                                   spec_parts=self.spec_parts or None)
+        else:
+            lineage = self.how == "dv" and "_row_id" in frame.columns
+            staged = self.w._stage(
+                frame,
+                ice_fields=fields + (_LINEAGE_FIELDS if lineage else []))
+        rows = [r for _p, r, _b, _pv in staged]
+        kept, dropped = mutation.drop_empty(staged, rows, self.positions)
+        self.w._unstage(dropped)
+        self.staged += kept
+        return sum(rows)
+
+    def stage_positions(self, positions: DataFrame) -> int:
+        """``mor`` stages one sorted standard POSITION-DELETE parquet
+        file (the spec's file_path/pos columns and reserved field
+        ids); ``dv`` collects the positions and unions each touched
+        file's live vector with them (the spec's one-DV-per-file
+        rule)."""
+        from pyspark.sql import functions as F
+
+        if self.how == "mor":
+            self.deletes = self.w._stage_nonempty(
+                positions.select(
+                    F.col(mutation.FILE).alias("file_path"),
+                    F.col(mutation.POS).cast("long").alias("pos"),
+                ).sort("file_path", "pos").coalesce(1),
+                ice_fields=_POS_DELETE_FIELDS,
+            )
+            return sum(r for _p, r, _b, _pv in self.deletes)
+        touched = mutation.collect_positions(positions, self.live)
+        self.new_dvs = {
+            u: sorted(set(self.old_dv.get(u, [])) | set(ps))
+            for u, ps in touched.items()
+        }
+        return sum(len(ps) for ps in touched.values())
+
+    def commit(self, change: mutation.Change) -> int:
+        """One snapshot: manifest surgery (``_publish_mutation``),
+        position deletes + data (``_publish_mor``) or deletion vectors
+        + data (``_publish_mor_dv``)."""
+        operation = "delete" if change.verb == "delete" else "overwrite"
+        if self.how == "dv" and change.verb == "merge":
+            # the change feed labels a snapshot with updated records an
+            # update: a deleting MERGE records none
+            summary = {
+                "updated-records": str(0 if change.deletes else change.rows),
+                "deleted-records": str(change.rows if change.deletes else 0),
+                "added-records": str(change.inserted),
+            }
+        else:
+            summary = {_RECORDS[change.verb]: str(change.rows)}
+            if self.positions:
+                summary["added-delete-files"] = str(
+                    self.encoded()["delete_files"])
+        if self.how == "cow":
+            return self.w._publish_mutation(
+                self.base_v, self.cur, self.rdr, set(change.files),
+                self.staged, operation, summary, spec_parts=self.spec_parts,
+            )
+        if self.how == "mor":
+            return self.w._publish_mor(
+                self.base_v, self.cur, self.rdr, self.deletes, self.staged,
+                operation, summary,
+            )
+        return self.w._publish_mor_dv(
+            self.base_v, self.cur, self.rdr, self.dvs, self.new_dvs,
+            self.old_dv, summary, staged=self.staged, operation=operation,
+        )
+
+    def encoded(self) -> dict[str, int]:
         if self.deletes:
-            return len(self.deletes)
-        return 1 if self.new_dvs else 0
+            return {"delete_files": len(self.deletes)}
+        return {"delete_files": 1 if self.new_dvs else 0}
 
-
-# the object each mutation's "no commits to …" refusal names, and the
-# retry-loop label per encoder
-_VERB_OBJECT = {"delete": "delete from", "update": "update",
-                "merge": "merge into"}
-_RETRY_NAME = {"cow": "iceberg", "mor": "iceberg mor", "dv": "iceberg v3 dv"}
-
-
-def _footer_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def _table_columns(frame) -> list[str]:
-    """A scan frame's table columns: the planner's and the v3 lineage
-    columns dropped."""
-    skip = {f["name"] for f in _LINEAGE_FIELDS}
-    return [c for c in mutation.data_columns(frame) if c not in skip]
+    def unstage(self) -> None:
+        self.w._unstage(self.staged)
+        self.w._unstage(self.deletes)
 
 
 def _ml_row(
@@ -1440,7 +1573,7 @@ class IcebergTableWriter:
 
         try:
             return retry_commit("iceberg append", attempt)
-        except (ValueError, NotImplementedError, ConcurrentWriteError):
+        except BaseException:
             self._unstage(staged)
             raise
 
@@ -1519,15 +1652,15 @@ class IcebergTableWriter:
             return retry_commit(
                 f"iceberg append_txn({app_id}, {txn_version})", attempt
             )
-        except (ValueError, NotImplementedError):
-            self._unstage(staged)
-            raise
         except ConcurrentWriteError:
             self._unstage(staged)
             # exhausted: the final slot's winner may have been our own
             # redelivered twin — a committed no-op, not a failure
             if txn_version <= self.last_txn_version(app_id):
                 return None
+            raise
+        except BaseException:
+            self._unstage(staged)
             raise
 
     def _check_fv_writable(
@@ -1757,9 +1890,11 @@ class IcebergTableWriter:
         lets ``write_manifests(draft)`` write its manifests and return
         the manifest-list rows, writes the manifest list, records the
         snapshot in ``md`` (the caller's new metadata) and publishes
-        it. Returns the new snapshot id. Loses the race → unlinks every
-        file the attempt wrote and raises ``ConcurrentWriteError`` (the
-        caller unstages and re-derives from the new head)."""
+        it. Returns the new snapshot id. Any failure before the
+        metadata lands (a lost race raises ``ConcurrentWriteError``)
+        unlinks every file the attempt wrote and re-raises; the caller
+        unstages and, after a lost race, re-derives from the new
+        head."""
         fv = self._fv_of(md)
         snaps = list(cur.get("snapshots") or [])
         parent = cur.get("current-snapshot-id")
@@ -1802,7 +1937,7 @@ class IcebergTableWriter:
                 {"timestamp-ms": now_ms, "snapshot-id": draft.id}
             ]
             self._publish_metadata(md, base_v)
-        except ConcurrentWriteError:
+        except BaseException:
             for p in draft.written:
                 if os.path.exists(p):
                     os.unlink(p)
@@ -1811,9 +1946,9 @@ class IcebergTableWriter:
 
     # -- row-level mutation -------------------------------------------------
     #
-    # DELETE / UPDATE / MERGE plan through ``operators.mutation`` (the
-    # row-level decisions both lakehouse writers share) and encode
-    # here in one of three shapes, chosen per table by ``_how``:
+    # DELETE / UPDATE / MERGE run the verb bodies of
+    # ``operators.mutation`` over a ``_Target`` and encode in one of
+    # three shapes, chosen per table by ``_how``:
     #
     # - ``cow``: copy-on-write. Every snapshot's manifest tree is a
     #   COMPLETE description, so removing a file means REWRITING the
@@ -1894,13 +2029,14 @@ class IcebergTableWriter:
             )
         return data, spec_parts
 
-    def _scope(self, rdr: IcebergTable, how: str) -> _Scope:
-        """Gate + the live sets one mutation attempt plans over.
-        Copy-on-write: ``_cow_scope``. The delete-file encoders:
+    def _target(self, spark: SparkSession, how: str, base_v: int,
+                cur: dict, rdr: IcebergTable) -> _Target:
+        """Gate one mutation attempt and pin the live sets it plans
+        over. Copy-on-write: ``_cow_scope``. The delete-file encoders:
         position-delete files are partition-scoped under a partition
         spec, which this writer does not emit — partitioned tables take
         the COW path. Live deletes of every tier are APPLIED by the
-        probe (``_scan`` is the reader's own row-identity scan), so an
+        probe (``_Target.scan`` is the reader's row-identity scan), so an
         upsert-then-mutate history composes; data files with no
         resolvable sequence under a live equality delete refuse there.
         Only the v3 deletion-vector encoder runs under live DVs (it
@@ -1908,16 +2044,17 @@ class IcebergTableWriter:
         file's delete state across tiers."""
         if how == "cow":
             data, spec_parts = self._cow_scope(rdr)
-            return _Scope(data, spec_parts=spec_parts)
-        cur = rdr.meta
-        self._check_fv_writable(cur)  # pre-staging, like _cow_scope
-        if self._cur_spec(cur):
+            return _Target(self, spark, how, base_v, cur, rdr, data,
+                           spec_parts=spec_parts)
+        meta = rdr.meta
+        self._check_fv_writable(meta)  # pre-staging, like _cow_scope
+        if self._cur_spec(meta):
             raise NotImplementedError(
                 f"{self.path}: merge-on-read mutation on a PARTITIONED "
                 "table — position-delete files are partition-scoped "
                 "under a spec this writer does not emit; use mode='cow'"
             )
-        if self._fv_of(cur) >= 3 and how != "dv":
+        if self._fv_of(meta) >= 3 and how != "dv":
             raise NotImplementedError(
                 f"{self.path}: format-version 3 merge-on-read "
                 "UPDATE/MERGE — v3 forbids new position-delete files "
@@ -1933,8 +2070,9 @@ class IcebergTableWriter:
                 "deletes and must not split a file's delete state "
                 "across tiers; use a full Iceberg client"
             )
-        return _Scope(data, pos_d, eq_d, dvs,
-                      old_dv=rdr._dv_positions_map(dvs) if dvs else {})
+        return _Target(self, spark, how, base_v, cur, rdr, data, pos_d,
+                       eq_d, dvs,
+                       old_dv=rdr._dv_positions_map(dvs) if dvs else {})
 
     def _publish_mor(
         self,
@@ -2360,14 +2498,14 @@ class IcebergTableWriter:
             mode = "mor" if str(prop) == "merge-on-read" else "cow"
         return "mor" if mode == "mor" else "cow"
 
-    def _mutate(self, op: str, how: str, primed: tuple[int, dict | None],
-                body: Callable[..., dict]) -> dict:
+    def _mutate(self, spark: SparkSession, op: str, mode: str,
+                body: Callable[[_Target], dict]) -> dict:
         """Run one row-level mutation under ``retry_commit``: each
-        attempt pins a head (the first one the head ``how`` was chosen
-        on), gates it for its encoder and re-plans from scratch on a
-        lost race. ``body(base_v, cur, rdr, scope, staged)`` records
-        every file it stages in ``staged``; ANY exception unstages
-        them — nothing reclaims a data/ file no manifest references."""
+        attempt pins a head (the first one the head the encoder was
+        chosen on), gates it for its encoder and reruns the verb
+        ``body`` on a fresh ``_Target`` after a lost race."""
+        primed = self._current()
+        how = self._how(primed[1], mode, op)
         heads = [primed]
 
         def attempt() -> dict:
@@ -2375,92 +2513,12 @@ class IcebergTableWriter:
             if cur is None:
                 raise ValueError(
                     f"iceberg table {self.path} has no commits to "
-                    f"{_VERB_OBJECT[op]}"
+                    f"{mutation.VERB_OBJECT[op]}"
                 )
-            rdr = self.reader()
-            staged = _Staged()
-            try:
-                return body(base_v, cur, rdr, self._scope(rdr, how), staged)
-            except BaseException:
-                self._unstage(staged.data)
-                self._unstage(staged.deletes)
-                raise
+            return body(
+                self._target(spark, how, base_v, cur, self.reader()))
 
         return retry_commit(f"{_RETRY_NAME[how]} {op}", attempt)
-
-    def _stage_rows(self, how: str, sc: _Scope, cur: dict, df,
-                    lineage: bool = False):
-        """Stage new data rows for ``how``: copy-on-write restages
-        under the default partition spec; the delete-file encoders
-        stage non-empty files only (v3 postimages carry their
-        lineage columns under the reserved field ids)."""
-        fields = self._cur_fields(cur)
-        if how == "cow":
-            return self._stage(df, spec_parts=sc.spec_parts or None,
-                               ice_fields=fields)
-        return self._stage_nonempty(
-            df, ice_fields=fields + (_LINEAGE_FIELDS if lineage else [])
-        )
-
-    def _stage_deletes(self, how: str, sc: _Scope, positions,
-                       staged: _Staged) -> int:
-        """Encode matched rows' (``__lp``, ``__pos``) addresses:
-        ``mor`` stages one sorted standard POSITION-DELETE parquet
-        file (the spec's file_path/pos columns and reserved field
-        ids); ``dv`` collects the positions and unions each touched
-        file's live vector with them (the spec's one-DV-per-file
-        rule). Returns the rows deleted."""
-        from pyspark.sql import functions as F
-
-        if how == "mor":
-            staged.deletes = self._stage_nonempty(
-                positions.select(
-                    F.col(mutation.FILE).alias("file_path"),
-                    F.col(mutation.POS).cast("long").alias("pos"),
-                ).sort("file_path", "pos").coalesce(1),
-                ice_fields=_POS_DELETE_FIELDS,
-            )
-            return sum(r for _p, r, _b, _pv in staged.deletes)
-        touched: dict[str, set[int]] = {}
-        for r in positions.collect():
-            touched.setdefault(r[mutation.FILE], set()).add(
-                int(r[mutation.POS]))
-        staged.new_dvs = {
-            u: sorted(set(sc.old_dv.get(u, [])) | ps)
-            for u, ps in touched.items()
-        }
-        return sum(len(ps) for ps in touched.values())
-
-    def _publish_rows(self, how: str, base_v: int, cur: dict,
-                      rdr: IcebergTable, sc: _Scope, staged: _Staged,
-                      operation: str, summary: dict[str, str]) -> int:
-        """Publish a delete-file snapshot: position deletes + data
-        (``_publish_mor``) or deletion vectors + data
-        (``_publish_mor_dv``)."""
-        if how == "mor":
-            return self._publish_mor(base_v, cur, rdr, staged.deletes,
-                                     staged.data, operation, summary)
-        return self._publish_mor_dv(
-            base_v, cur, rdr, sc.dvs, staged.new_dvs, sc.old_dv, summary,
-            staged=staged.data, operation=operation,
-        )
-
-    @staticmethod
-    def _lineage_carry(prefix: str | None = None) -> list:
-        """The columns a v3 postimage carries: its row's ``_row_id``
-        (the spec: updated rows keep their identity) and a NULL
-        ``_last_updated_sequence_number``, which inherits the new
-        file's data sequence number — "this row last changed in this
-        commit" — without knowing the publish-time sequence in advance
-        (race-proof by construction). Rows from lineage-less
-        pre-upgrade files stage with null ids and inherit fresh ones."""
-        from pyspark.sql import functions as F
-
-        rid = f"{prefix}._row_id" if prefix else "_row_id"
-        return [
-            F.col(rid),
-            F.lit(None).cast("long").alias("_last_updated_sequence_number"),
-        ]
 
     def delete(
         self,
@@ -2468,71 +2526,14 @@ class IcebergTableWriter:
         predicate: str,
         mode: str = "auto",
     ) -> dict:
-        """Row-level ``DELETE FROM … WHERE predicate`` (NULL keeps the
-        row — SQL semantics):
-
-        - ``cow``: a probe counts matches per file; fully-matching
-          files become DELETED entries with zero rewrite I/O, partial
-          files rewrite minus the matches → manifest surgery →
-          create-exclusive metadata publish.
-        - ``mor`` (``mode='mor'``, or ``auto`` under the table property
-          ``write.delete.mode=merge-on-read``): matched row ordinals
-          land in a standard v2 POSITION-DELETE file — O(deleted rows)
-          committed, zero rewrite, readable by any v2 client.
-        - format version 3: matched ordinals land in a Puffin DELETION
-          VECTOR (v3 forbids new position-delete files); the commit
-          replaces each touched file's vector with the superset union
-          and re-records untouched vectors — zero data rewrite, zero
-          row-id churn.
-
-        Time travel to prior snapshots still reads the pre-delete
-        content (their manifest trees are untouched)."""
-        primed = self._current()
-        how = self._how(primed[1], mode, "delete")
-        none = {"version": None, "rows_deleted": 0, **(
-            {"files_removed": 0, "files_rewritten": 0}
-            if how == "cow" else {"delete_files": 0}
-        )}
-
-        def body(base_v, cur, rdr, sc, staged):
-            if not sc.data:
-                return none
-            if how == "cow":
-                counts = mutation.match_counts(
-                    self._scan(spark, rdr, sc, how, lp=True), sc.live,
-                    predicate,
-                )
-                if not counts:
-                    return none
-                _full, partial = mutation.split_files(counts, _footer_rows)
-                if partial:
-                    staged.data = self._stage_rows(
-                        how, sc, cur, mutation.survivors(
-                            self._scan(spark, rdr, sc, how, partial),
-                            predicate,
-                        ))
-                n = sum(counts.values())
-                snap_id = self._publish_mutation(
-                    base_v, cur, rdr, set(counts), staged.data, "delete",
-                    {"deleted-records": str(n)}, spec_parts=sc.spec_parts,
-                )
-                return {"version": snap_id, "rows_deleted": n,
-                        "files_removed": len(counts),
-                        "files_rewritten": len(partial)}
-            n = self._stage_deletes(how, sc, mutation.positions(
-                mutation.matches(self._scan(spark, rdr, sc, how), predicate)
-            ), staged)
-            if not n:
-                return none
-            snap_id = self._publish_rows(
-                how, base_v, cur, rdr, sc, staged, "delete",
-                {"deleted-records": str(n),
-                 "added-delete-files": str(staged.delete_files)},
-            )
-            return {"version": snap_id, "rows_deleted": n,
-                    "delete_files": staged.delete_files}
-
-        return self._mutate("delete", how, primed, body)
+        """Row-level ``DELETE FROM … WHERE predicate`` (``mutation.delete``;
+        NULL keeps the row) as one snapshot of the encoder ``_how``
+        picks: ``mor`` under ``mode='mor'`` or the table property
+        ``write.delete.mode=merge-on-read``, deletion vectors on format
+        version 3 (which forbids new position-delete files). Time
+        travel to prior snapshots still reads the pre-delete content."""
+        return self._mutate(spark, "delete", mode,
+                            lambda t: mutation.delete(t, predicate))
 
     def update(
         self,
@@ -2541,76 +2542,15 @@ class IcebergTableWriter:
         predicate: str | None = None,
         mode: str = "auto",
     ) -> dict:
-        """Row-level ``UPDATE … SET col = expr [WHERE predicate]``;
-        assigned values cast back to the declared type:
-
-        - ``cow``: affected files rewrite through a CASE per assigned
-          column; untouched files' manifest entries survive verbatim.
-        - ``mor`` (``mode='mor'``, or ``auto`` under
-          ``write.update.mode=merge-on-read``): preimage positions land
-          in a POSITION-DELETE file and ONLY the postimages stage as
-          new data files — O(changed rows), both halves atomic in one
-          snapshot.
-        - format version 3: preimages get DELETION-VECTORED and the
-          postimages stage with their row lineage PRESERVED
-          (``_lineage_carry``).
-
-        Assigned columns must exist in the pinned table schema."""
-        pred = predicate if predicate is not None else "TRUE"
-        primed = self._current()
-        how = self._how(primed[1], mode, "update")
-        none = {"version": None, "rows_updated": 0,
-                ("files_rewritten" if how == "cow" else "delete_files"): 0}
-
-        def body(base_v, cur, rdr, sc, staged):
-            if not sc.data:
-                return none
-            mutation.check_assigned(
-                assignments, [f["name"] for f in self._cur_fields(cur)]
-            )
-            if how == "cow":
-                counts = mutation.match_counts(
-                    self._scan(spark, rdr, sc, how, lp=True), sc.live, pred
-                )
-                if not counts:
-                    return none
-                affected = sorted(counts)
-                staged.data = self._stage_rows(how, sc, cur, mutation.rewrite(
-                    self._scan(spark, rdr, sc, how, affected),
-                    assignments, pred,
-                ))
-                n = sum(counts.values())
-                snap_id = self._publish_mutation(
-                    base_v, cur, rdr, set(affected), staged.data,
-                    "overwrite", {"updated-records": str(n)},
-                    spec_parts=sc.spec_parts,
-                )
-                return {"version": snap_id, "rows_updated": n,
-                        "files_rewritten": len(affected)}
-            lineage = how == "dv"
-            # probe once, use twice; lazy — the position staging or
-            # collect below is the materializing action
-            matched = mutation.matches(
-                self._scan(spark, rdr, sc, how, lineage=lineage), pred
-            ).localCheckpoint(eager=False)
-            n = self._stage_deletes(how, sc, mutation.positions(matched),
-                                    staged)
-            if not n:
-                return none
-            staged.data = self._stage_rows(how, sc, cur, mutation.postimages(
-                matched, assignments,
-                columns=_table_columns(matched),
-                carry=self._lineage_carry() if lineage else (),
-            ), lineage=lineage)
-            snap_id = self._publish_rows(
-                how, base_v, cur, rdr, sc, staged, "overwrite",
-                {"updated-records": str(n),
-                 "added-delete-files": str(staged.delete_files)},
-            )
-            return {"version": snap_id, "rows_updated": n,
-                    "delete_files": staged.delete_files}
-
-        return self._mutate("update", how, primed, body)
+        """Row-level ``UPDATE … SET col = expr [WHERE predicate]``
+        (``mutation.update``; encoders as in ``delete``, ``mor`` under
+        ``write.update.mode``): the delete-file encoders stage only the
+        postimages, which keep their v3 row lineage
+        (``_Target.carry``). Assigned columns must exist in the pinned
+        table schema."""
+        return self._mutate(
+            spark, "update", mode,
+            lambda t: mutation.update(t, assignments, predicate))
 
     def merge(
         self,
@@ -2624,164 +2564,15 @@ class IcebergTableWriter:
         delete_matched: bool = False,
         mode: str = "auto",
     ) -> dict:
-        """``MERGE INTO`` as ONE snapshot:
-
-        - ``cow``: a semi-join probe counts matched rows per file; only
-          reached files rewrite (THEN UPDATE through a marked left
-          join, with the free multi-match refusal: a matched rewrite
-          preserves row count, so staged footers disagreeing with the
-          input footers IS the signal; THEN DELETE drops fully-matching
-          files without rewrite I/O and rewrites partial ones via LEFT
-          ANTI).
-        - ``mor`` (``mode='mor'``, or ``auto`` under
-          ``write.merge.mode=merge-on-read``) and format version 3: one
-          inner join of the live rows with the source finds the
-          matched positions, which land in a position-delete file or a
-          deletion vector; THEN UPDATE postimages (v3: lineage kept)
-          stage from the same join. A source reaching a row twice
-          refuses for THEN UPDATE (counted in the same aggregate that
-          counts matches) and is harmless for THEN DELETE.
-
-        NOT MATCHED inserts anti-join the live rows and stage in the
-        same snapshot."""
+        """``MERGE INTO`` as ONE snapshot (``mutation.merge``; encoders as
+        in ``delete``, ``mor`` under ``write.merge.mode``)."""
         mutation.check_merge_clauses(assignments, delete_matched,
                                      insert_exprs)
-        primed = self._current()
-        how = self._how(primed[1], mode, "merge")
         m = mutation.Merge(source, cond, target_alias, source_alias)
-        lineage = how == "dv"
-
-        def body(base_v, cur, rdr, sc, staged):
-            matched = rows_inserted = rewritten = 0
-            counts: dict[str, int] = {}
-            tgt = None
-            if sc.data:
-                tgt = self._scan(spark, rdr, sc, how, lp=True,
-                                 lineage=lineage)
-            if (assignments or delete_matched) and tgt is not None:
-                if how == "cow":
-                    counts = mutation.match_counts(tgt, sc.live, merge=m)
-                    matched = sum(counts.values())
-                    affected = sorted(counts)
-                    rewritten = len(affected)
-                    if affected and delete_matched:
-                        _full, partial = mutation.split_files(
-                            counts, _footer_rows)
-                        rewritten = len(partial)
-                        if partial:
-                            staged.data = self._stage_rows(
-                                how, sc, cur, mutation.survivors(
-                                    self._scan(spark, rdr, sc, how, partial),
-                                    merge=m,
-                                ))
-                    elif affected:
-                        staged.data = self._stage_rows(
-                            how, sc, cur, mutation.rewrite(
-                                self._scan(spark, rdr, sc, how, affected),
-                                assignments, merge=m,
-                            ))
-                        mutation.check_one_match(
-                            sum(r for _p, r, _b, _pv in staged.data)
-                            - sum(_footer_rows(p) for p in affected)
-                        )
-                else:
-                    # lazy: the match count below materializes it
-                    tgt = tgt.localCheckpoint(eager=False)
-                    joined, matched = mutation.merge_matches(
-                        tgt, m, refuse_multi=bool(assignments)
-                    )
-                    if matched:
-                        self._stage_deletes(
-                            how, sc, mutation.positions(joined, distinct=True),
-                            staged,
-                        )
-                        if assignments:
-                            staged.data = self._stage_rows(
-                                how, sc, cur, mutation.postimages(
-                                    joined, assignments, target=tgt,
-                                    columns=_table_columns(tgt), merge=m,
-                                    carry=self._lineage_carry(target_alias)
-                                    if lineage else (),
-                                ), lineage=lineage)
-            if insert_exprs is not None:
-                schema = _spark_schema(self._cur_fields(cur))
-                if schema is None:
-                    raise ValueError(
-                        "MERGE: the table schema cannot be mapped to "
-                        "Spark types, so the INSERT VALUES expressions "
-                        "have no column shape to project into — use a "
-                        "full Iceberg client"
-                    )
-                ins = self._stage_rows(how, sc, cur, mutation.merge_inserts(
-                    m, tgt, insert_exprs, schema.fields
-                ))
-                rows_inserted = sum(r for _p, r, _b, _pv in ins)
-                if rows_inserted == 0:
-                    self._unstage(ins)
-                else:
-                    staged.data = staged.data + ins
-            if how == "cow":
-                if not counts and not staged.data:
-                    return {"version": None, "rows_matched": 0,
-                            "rows_inserted": 0, "files_rewritten": 0}
-                snap_id = self._publish_mutation(
-                    base_v, cur, rdr, set(counts), staged.data,
-                    "overwrite", {"merged-records": str(matched)},
-                    spec_parts=sc.spec_parts,
-                )
-                return {"version": snap_id, "rows_matched": matched,
-                        "rows_inserted": rows_inserted,
-                        "files_rewritten": rewritten}
-            if not staged.deletes and not staged.new_dvs \
-                    and not staged.data:
-                return {"version": None, "rows_matched": 0,
-                        "rows_inserted": 0, "delete_files": 0}
-            summary = (
-                {"updated-records": str(matched if assignments else 0),
-                 "deleted-records": str(matched if delete_matched else 0),
-                 "added-records": str(rows_inserted)}
-                if lineage else
-                {"merged-records": str(matched),
-                 "added-delete-files": str(staged.delete_files)}
-            )
-            snap_id = self._publish_rows(how, base_v, cur, rdr, sc, staged,
-                                         "overwrite", summary)
-            return {"version": snap_id, "rows_matched": matched,
-                    "rows_inserted": rows_inserted,
-                    "delete_files": staged.delete_files}
-
-        return self._mutate("merge", how, primed, body)
-
-    def _scan(self, spark: SparkSession, rdr: IcebergTable, sc: _Scope,
-              how: str, files: list[str] | None = None, lp: bool = False,
-              lineage: bool = False):
-        """The live rows a mutation plans over. Copy-on-write tables
-        carry no delete files (``_cow_scope`` gates that), so their
-        ``files`` (default: every live one) read as plain parquet,
-        ``lp`` adding the planner's ``__lp`` (resolved path). The
-        delete-file encoders scan the LIVE rows through the reader's
-        row-identity scan, every tier of existing deletes applied (a
-        deleted row must never rematch, and an UPDATE postimage of a
-        deleted row would RESURRECT it): ``__lp`` is then the data
-        file exactly as its manifest records it, ``__pos`` the
-        physical row ordinal, and ``lineage`` materializes the v3
-        row-lineage columns."""
-        from pyspark.sql import functions as F
-
-        if how == "cow":
-            if files is None:
-                files = [p for p, _u, _s in sc.data]
-            df = spark.read.parquet(*files)
-            if not lp:
-                return df
-            return df.withColumn(
-                mutation.FILE,
-                mutation.local_path(F.col("_metadata.file_path")),
-            )
-        return rdr._identity_scan(
-            spark, sc.data, sc.pos_d, sc.eq_d, sc.old_dv,
-            first_ids=rdr._first_row_ids(None) if lineage else None,
-        ).withColumnRenamed("__uri", mutation.FILE)
+        return self._mutate(
+            spark, "merge", mode,
+            lambda t: mutation.merge(t, m, assignments, insert_exprs,
+                                     delete_matched))
 
     def _publish_mutation(
         self,
@@ -3057,7 +2848,7 @@ class IcebergTableWriter:
                     "replace", extra, drop_deletes=purge,
                     spec_parts=spec_parts, lineage_done=lineage,
                 )
-            except ConcurrentWriteError:
+            except BaseException:
                 self._unstage(staged)
                 raise
 
@@ -3133,7 +2924,10 @@ class IcebergTableWriter:
         ``publish_exclusive`` — a racer that took the slot makes it
         raise ``ConcurrentWriteError`` and the caller re-derives — and
         swing ``version-hint.text`` forward atomically. The ONE publish
-        tail every Iceberg commit shares."""
+        tail every Iceberg commit shares. Once the metadata file has
+        landed nothing raises, so a caller may unlink its files on any
+        exception: a failed hint swing drops the now-stale hint
+        instead, and readers find the newest version by listing."""
         self._check_fv_writable(md)
         publish_exclusive(
             os.path.join(self.meta_dir, f"v{base_v + 1}.metadata.json"),
@@ -3141,9 +2935,14 @@ class IcebergTableWriter:
         )
         hint = os.path.join(self.meta_dir, "version-hint.text")
         tmp = hint + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(base_v + 1))
-        os.replace(tmp, hint)  # atomic pointer swing
+        try:
+            with open(tmp, "w") as f:
+                f.write(str(base_v + 1))
+            os.replace(tmp, hint)  # atomic pointer swing
+        except OSError:
+            for p in (tmp, hint):
+                with contextlib.suppress(OSError):
+                    os.unlink(p)
 
     def set_properties(self, props: dict[str, str]) -> int:
         """Merge ``props`` into the table's freeform properties map in

@@ -1,22 +1,30 @@
-"""Row-level mutation planning shared by the lakehouse writers.
+"""Row-level mutation shared by the lakehouse writers.
 
 DELETE, UPDATE and MERGE decide the same things whatever format holds
 the table: which live rows match, which files are untouched, fully
 matched or partly matched, and what the new rows are. This module
-makes those decisions once. It reads and writes no storage; each
-writer (``DeltaTableWriter``, ``IcebergTableWriter``) hands the frames
-it returns to its own encoder — remove+add actions or a deletion
-vector for Delta; a manifest rewrite, a position-delete file or a v3
-deletion vector for Iceberg.
+makes those decisions once, and runs each verb once: ``delete``,
+``update`` and ``merge`` are the only verb bodies. They read and write
+no storage themselves. Each runs over a ``Target``: one mutation
+attempt's view of one pinned table state, which a writer
+(``DeltaTableWriter``, ``IcebergTableWriter``) implements with its
+own scan, row staging, position encoding, row checks and commit. A
+target either rewrites the matched files (copy-on-write) or records
+the matched rows by position (``Target.positions``: a Delta deletion
+vector; an Iceberg position-delete file or v3 deletion vector) and
+stages only the changed rows. The body never asks which writer it
+serves, never retries (each writer keeps its own retry rule around
+it) and owns the one failure path: any exception unstages every file
+the attempt wrote.
 
 Everything here works on a *scan frame*: the table's live rows as the
 writer reads them (its own deletes already applied), with the table
 columns plus
 
-- ``__lp``: the row's file, as a key the writer can map back to its
-  live set;
-- ``__pos``: the row's physical ordinal in that file (merge-on-read
-  scans only — the address a delete file or a deletion vector
+- ``__lp``: the row's file, as a key the target maps back to its live
+  set (``Target.live``);
+- ``__pos``: the row's physical ordinal in that file (position
+  targets only — the address a delete file or a deletion vector
   records).
 
 Frames without ``__lp``/``__pos`` work wherever no per-file or
@@ -28,15 +36,21 @@ declared type, so the pinned schema never drifts.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+import functools
+from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass, field
+from typing import Protocol
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 FILE = "__lp"
 POS = "__pos"
+CHANGE_TYPE = "_change_type"
 _MARK = "__merge_matched"
+# the object each verb's "no commits to …" refusal names
+VERB_OBJECT = {"delete": "delete from", "update": "update",
+               "merge": "merge into"}
 
 
 def local_path(file_uri: Column) -> Column:
@@ -137,29 +151,74 @@ def matches(frame: DataFrame, predicate: str | None = None,
 
 def match_counts(
     frame: DataFrame,
-    live: Iterable[str],
+    live: Mapping[str, str],
     predicate: str | None = None,
     merge: Merge | None = None,
 ) -> dict[str, int]:
     """{file: matched live rows} over a frame carrying ``__lp`` — one
-    distributed scan, one row per touched file back to the driver.
-    A file outside ``live`` means the live set moved under the probe
-    (a concurrent vacuum), so it refuses rather than mis-attribute."""
-    live = set(live)
-    counts: dict[str, int] = {}
+    distributed scan, one row per touched file back to the driver,
+    keyed by the file key ``live`` maps each ``__lp`` to. A file
+    outside ``live`` means the live set moved under the probe (a
+    concurrent vacuum), so it refuses rather than mis-attribute."""
+    return {
+        _live_key(live, r[FILE]): int(r["__n"])
+        for r in (
+            matches(frame, predicate, merge)
+            .groupBy(FILE)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .collect()
+        )
+    }
+
+
+def _live_key(live: Mapping[str, str], lp: str) -> str:
+    if lp not in live:
+        raise RuntimeError(
+            f"probe returned file {lp} outside the live set — "
+            "concurrent vacuum mid-probe?"
+        )
+    return live[lp]
+
+
+def collect_positions(
+    frame: DataFrame, live: Mapping[str, str]
+) -> dict[str, list[int]]:
+    """{file: matched physical ordinals} for a (``__lp``, ``__pos``)
+    frame, keyed like ``match_counts``. Bitmaps serialize
+    EXECUTOR-side (``mapInPandas`` after a repartition by file), so
+    driver traffic is O(compressed bitmap), never O(matched rows)."""
+    import pandas as pd
+
+    from algebraicdb_spark.operators.deletion_vectors import (
+        roaring64_positions,
+    )
+
+    def to_bitmaps(batches):
+        from algebraicdb_spark.operators.deletion_vectors import (
+            roaring64_serialize,
+        )
+
+        acc: dict[str, list[int]] = {}
+        for b in batches:
+            for lp, pos in zip(b[FILE], b[POS]):
+                acc.setdefault(lp, []).append(int(pos))
+        if acc:
+            yield pd.DataFrame({
+                FILE: list(acc),
+                "bm": [roaring64_serialize(sorted(v)) for v in acc.values()],
+            })
+
+    out: dict[str, list[int]] = {}
     for r in (
-        matches(frame, predicate, merge)
-        .groupBy(FILE)
-        .agg(F.count(F.lit(1)).alias("__n"))
+        frame.select(FILE, POS)
+        .repartition(F.col(FILE))
+        .mapInPandas(to_bitmaps, f"{FILE} string, bm binary")
         .collect()
     ):
-        if r[FILE] not in live:
-            raise RuntimeError(
-                f"probe returned file {r[FILE]} outside the live "
-                "set — concurrent vacuum mid-probe?"
-            )
-        counts[r[FILE]] = int(r["__n"])
-    return counts
+        # one partition per file after the repartition, so each file
+        # appears exactly once; decode is O(bitmap)
+        out[_live_key(live, r[FILE])] = roaring64_positions(bytes(r["bm"]))
+    return out
 
 
 def split_files(
@@ -240,22 +299,23 @@ def postimages(
     matched: DataFrame,
     assignments: dict[str, str],
     target: DataFrame | None = None,
-    columns: list[str] | None = None,
     merge: Merge | None = None,
-    carry: Iterable[Column] = (),
+    carry: Mapping[str, Column] | None = None,
 ) -> DataFrame:
-    """Merge-on-read UPDATE / MERGE … THEN UPDATE: the matched rows
+    """Position-target UPDATE / MERGE … THEN UPDATE: the matched rows
     with the assignments applied, for staging as new rows next to
     their preimages' deletes. ``matched`` is the frame of matched rows
     (for a MERGE, the inner join ``merge_matches`` returns); column
-    types come from ``target`` (default ``matched``); ``carry`` adds
-    columns the writer keeps per row."""
+    names and types come from ``target`` (default ``matched``);
+    ``carry`` replaces the named columns with what the writer keeps
+    per row."""
     target = matched if target is None else target
-    cols = columns if columns is not None else data_columns(target)
+    carry = carry or {}
+    cols = [c for c in data_columns(target) if c not in carry]
     return matched.select(
         *_assigned(target, assignments, cols,
                    prefix=merge.target_alias if merge else None),
-        *carry,
+        *[c.alias(name) for name, c in carry.items()],
     )
 
 
@@ -311,3 +371,250 @@ def merge_inserts(
         F.expr(e).cast(f.dataType).alias(f.name)
         for e, f in zip(insert_exprs, fields)
     ])
+
+
+def drop_empty(staged: list, rows: list[int], each: bool
+               ) -> tuple[list, list]:
+    """(kept, dropped) staged files, given each one's rows. ``each``
+    drops every zero-row file (a sparse frame — a position target's
+    postimages — writes one per empty partition); otherwise the files
+    drop only when none has a row (an all-empty frame still writes
+    one)."""
+    if each:
+        return ([f for f, n in zip(staged, rows) if n],
+                [f for f, n in zip(staged, rows) if not n])
+    return (staged, []) if sum(rows) else ([], staged)
+
+
+def change_rows(pre: DataFrame, post: DataFrame, update: bool) -> DataFrame:
+    """Change-feed rows between two states of the same rows: pre EXCEPT
+    ALL post are removed, post EXCEPT ALL pre introduced — labeled as
+    an update's pre/postimages, or as deletes and inserts."""
+    pre_l, post_l = (
+        ("update_preimage", "update_postimage") if update
+        else ("delete", "insert")
+    )
+    removed = pre.exceptAll(post).withColumn(CHANGE_TYPE, F.lit(pre_l))
+    added = post.exceptAll(pre).withColumn(CHANGE_TYPE, F.lit(post_l))
+    return removed.unionByName(added)
+
+
+# -- the verb bodies ------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Change:
+    """What one verb decided, for the target's encoder to commit.
+
+    ``files`` are the copy-on-write matched files (each leaves the
+    table; its survivors or rewrite are staged); a position target
+    knows its own. ``deletes``: the matched rows leave without a
+    postimage. ``feed(files)`` gives the labeled change rows of those
+    files for an encoder that writes a change feed; None means "diff
+    the files' before and after states"."""
+
+    verb: str
+    predicate: str
+    rows: int
+    files: list[str]
+    inserted: int = 0
+    deletes: bool = False
+    feed: Callable[[list[str]], DataFrame] | None = None
+
+
+class Target(Protocol):
+    """One mutation attempt over one pinned table state."""
+
+    positions: bool  # encode matched rows by position, never rewrite
+    live: Mapping[str, str]  # scan ``__lp`` → file key; empty: no rows
+    columns: list[str] | None  # UPDATE's assignable columns, if known
+
+    def scan(self, files: list[str] | None = None, probe: bool = False,
+             restage: bool = False) -> DataFrame:
+        """The live rows of ``files`` (default: all). ``probe`` adds
+        ``__lp`` (and ``__pos`` on a position target); ``restage``:
+        the rows become postimages, so the scan carries what
+        ``carry`` keeps."""
+
+    def live_rows(self, file: str) -> int: ...
+
+    def derive(self, frame: DataFrame) -> DataFrame:
+        """Changed rows, the table's derived columns recomputed."""
+
+    def carry(self, prefix: str | None = None) -> dict[str, Column]:
+        """The per-row columns a postimage keeps from its preimage."""
+
+    def insert_fields(self, probe: DataFrame | None) -> list: ...
+
+    def stage_rows(self, frame: DataFrame, check: bool = True) -> int:
+        """Stage new rows (``check``: against the table's rules
+        first), dropping empty files as ``drop_empty`` says; returns
+        the rows staged."""
+
+    def stage_positions(self, positions: DataFrame) -> int:
+        """Encode matched addresses; returns the rows they delete."""
+
+    def commit(self, change: Change) -> int:
+        """Publish one commit; raising means nothing landed."""
+
+    def encoded(self) -> dict[str, int]: ...
+
+    def unstage(self) -> None: ...
+
+
+def _attempt(verb: Callable[..., dict]) -> Callable[..., dict]:
+    """The one failure path: nothing an aborted attempt staged stays."""
+    @functools.wraps(verb)
+    def run(t: Target, *args, **kwargs) -> dict:
+        try:
+            return verb(t, *args, **kwargs)
+        except BaseException:
+            t.unstage()
+            raise
+
+    return run
+
+
+def _result(t: Target, version: int | None, rows: dict[str, int],
+            files: dict[str, int], removed: bool = False) -> dict:
+    """The verb's result: its row counts, then the copy-on-write file
+    counts or the position encoder's own (``removed``: report fully
+    removed files)."""
+    if t.positions:
+        files = {k: v for k, v in t.encoded().items()
+                 if removed or k != "files_removed"}
+    return {"version": version, **rows, **files}
+
+
+def _drop_rows(t: Target, counts: dict[str, int],
+               predicate: str | None = None,
+               merge: Merge | None = None) -> int:
+    """Copy-on-write removal of the matched rows: fully matched files
+    leave with zero rewrite I/O, partly matched ones restage their
+    survivors. Returns the files rewritten."""
+    _full, partial = split_files(counts, t.live_rows)
+    if partial:
+        t.stage_rows(survivors(t.scan(partial), predicate, merge),
+                     check=False)
+    return len(partial)
+
+
+@_attempt
+def delete(t: Target, predicate: str) -> dict:
+    """``DELETE FROM … WHERE predicate``: copy-on-write drops the
+    matched rows (``_drop_rows``); position targets encode them."""
+    counts: dict[str, int] = {}
+    n = rewritten = 0
+    if t.live and t.positions:
+        n = t.stage_positions(
+            positions(matches(t.scan(probe=True), predicate)))
+    elif t.live:
+        counts = match_counts(t.scan(probe=True), t.live, predicate)
+        n = sum(counts.values())
+        rewritten = _drop_rows(t, counts, predicate)
+    version = None
+    if n:
+        version = t.commit(Change(
+            "delete", predicate, n, sorted(counts), deletes=True,
+            # the deletes ARE the matched rows of the affected files
+            feed=lambda files: t.scan(files).where(hit(predicate))
+            .withColumn(CHANGE_TYPE, F.lit("delete")),
+        ))
+    return _result(t, version, {"rows_deleted": n},
+                   {"files_removed": len(counts),
+                    "files_rewritten": rewritten}, removed=True)
+
+
+@_attempt
+def update(t: Target, assignments: dict[str, str],
+           predicate: str | None = None) -> dict:
+    """``UPDATE … SET col = expr [WHERE predicate]``. Copy-on-write:
+    each matched file rewrites through a CASE per assigned column.
+    Position targets encode the matched rows and stage only their
+    postimages, from the same (checkpointed) probe."""
+    pred = predicate if predicate is not None else "TRUE"
+    counts: dict[str, int] = {}
+    n = 0
+    if t.live:
+        if t.columns is not None:
+            check_assigned(assignments, t.columns)
+        if t.positions:
+            # probe once, use twice; lazy — the position encoding
+            # is the materializing action
+            matched = matches(t.scan(probe=True, restage=True),
+                              pred).localCheckpoint(eager=False)
+            n = t.stage_positions(positions(matched))
+            if n:
+                t.stage_rows(t.derive(postimages(
+                    matched, assignments, carry=t.carry())))
+        else:
+            counts = match_counts(t.scan(probe=True), t.live, pred)
+            n = sum(counts.values())
+            if n:
+                t.stage_rows(t.derive(rewrite(
+                    t.scan(sorted(counts)), assignments, pred)))
+
+    def feed(files: list[str]) -> DataFrame:
+        pre = t.scan(files).where(hit(pred))
+        return change_rows(
+            pre, t.derive(postimages(pre, assignments)), update=True)
+
+    version = None
+    if n:
+        version = t.commit(
+            Change("update", pred, n, sorted(counts), feed=feed))
+    return _result(t, version, {"rows_updated": n},
+                   {"files_rewritten": len(counts)})
+
+
+@_attempt
+def merge(t: Target, m: Merge, assignments: dict[str, str] | None,
+          insert_exprs: list[str] | None,
+          delete_matched: bool = False) -> dict:
+    """``MERGE INTO`` as one commit. Copy-on-write: a semi-join probe
+    counts matched rows per file; THEN DELETE drops them as
+    ``delete`` does, THEN UPDATE rewrites the reached files through a
+    marked left join, refused when the staged rows outnumber the
+    files' rows (a source reaching a row twice). Position targets: one
+    inner join finds the matched positions and their postimages, the
+    multi-match refusal in the same aggregate. NOT MATCHED inserts
+    anti-join the live rows and ride the same commit."""
+    counts: dict[str, int] = {}
+    matched = inserted = rewritten = 0
+    probe = t.scan(probe=True, restage=True) if t.live else None
+    if (assignments or delete_matched) and probe is not None:
+        if t.positions:
+            # lazy: the match count below materializes it
+            probe = probe.localCheckpoint(eager=False)
+            joined, matched = merge_matches(
+                probe, m, refuse_multi=bool(assignments))
+            if matched:
+                t.stage_positions(positions(joined, distinct=True))
+                if assignments:
+                    t.stage_rows(t.derive(postimages(
+                        joined, assignments, target=probe, merge=m,
+                        carry=t.carry(m.target_alias))))
+        else:
+            counts = match_counts(probe, t.live, merge=m)
+            matched = sum(counts.values())
+            affected = sorted(counts)
+            rewritten = len(affected)
+            if affected and delete_matched:
+                rewritten = _drop_rows(t, counts, merge=m)
+            elif affected:
+                staged = t.stage_rows(t.derive(rewrite(
+                    t.scan(affected), assignments, merge=m)))
+                check_one_match(
+                    staged - sum(t.live_rows(f) for f in affected))
+    if insert_exprs is not None:
+        inserted = t.stage_rows(merge_inserts(
+            m, probe, insert_exprs, t.insert_fields(probe)))
+    version = None
+    if matched or inserted:
+        version = t.commit(Change(
+            "merge", m.cond, matched, sorted(counts), inserted,
+            deletes=delete_matched,
+        ))
+    return _result(t, version,
+                   {"rows_matched": matched, "rows_inserted": inserted},
+                   {"files_rewritten": rewritten})

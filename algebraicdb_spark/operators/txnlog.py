@@ -21,9 +21,10 @@ the standard-format half of that idea:
   committing through a standard format.
 
 Every transactional write goes through one commit protocol, kept
-here next to ``ConcurrentWriteError``: ``publish_exclusive`` writes
-the next version file create-exclusively (Delta's next ``_delta_log``
-commit, Iceberg's next ``metadata.json``), so a racing writer loses
+here next to ``ConcurrentWriteError``: ``publish_exclusive`` links
+the next version file into place create-exclusively and whole
+(Delta's next ``_delta_log`` commit, Iceberg's next
+``metadata.json``), so a racing writer loses
 with ``ConcurrentWriteError``, and ``retry_commit`` reruns a lost
 attempt on the new head, at most ``COMMIT_RETRIES`` times. The log is
 METADATA — O(commits) KB-sized documents read driver-side; data files
@@ -33,9 +34,11 @@ scans over the live path list.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
+import uuid
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,17 +75,29 @@ _T = TypeVar("_T")
 def publish_exclusive(target: str, text: str) -> None:
     """Create-exclusive publish of one commit file: two racers
     targeting the same file get exactly one winner, and the loser
-    raises ``ConcurrentWriteError``. The one atomicity primitive under
-    both writers (on S3-class stores real deployments route it through
-    a commit service or a conditional put)."""
+    raises ``ConcurrentWriteError``. The text is written to a private
+    temporary file first and hard-linked into place, so the target
+    appears whole or not at all — a write that fails leaves no torn
+    commit in the version slot. Once the link lands nothing raises.
+    The one atomicity primitive under both writers (on S3-class
+    stores real deployments route it through a commit service or a
+    conditional put)."""
+    tmp = os.path.join(
+        os.path.dirname(target),
+        f".{os.path.basename(target)}.{uuid.uuid4().hex}.tmp",
+    )
     try:
-        with open(target, "x") as f:
+        with open(tmp, "x") as f:
             f.write(text)
+        os.link(tmp, target)  # create-exclusive, like open(…, "x")
     except FileExistsError as exc:
         raise _LostPublishRace(
             f"{os.path.basename(target)} already committed by another "
             "writer — rebase on the new head and retry"
         ) from exc
+    finally:
+        with contextlib.suppress(OSError):
+            os.unlink(tmp)
 
 
 def retry_commit(op: str, attempt: Callable[[], _T]) -> _T:
@@ -99,6 +114,13 @@ def retry_commit(op: str, attempt: Callable[[], _T]) -> _T:
         f"{op} lost {COMMIT_RETRIES} publish races — table is under "
         "pathological write contention"
     )
+
+
+def footer_rows(path: str) -> int:
+    """A parquet file's row count, from its footer."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
 
 
 class SchemaEvolutionError(RuntimeError):

@@ -195,7 +195,7 @@ def test_iceberg_snapshot_equals_the_writers_live_rows(spark, tmp_path):
     _data, pos_d, eq_d, dvs = rdr._files(None)
     assert pos_d and eq_d and dvs
     snap = sorted(tuple(r) for r in rdr.snapshot(spark).collect())
-    sc = w._scope(rdr, "dv")
-    live = w._scan(spark, rdr, sc, "dv").select("g", "k", "v")
+    live = w._target(spark, "dv", *w._current(), rdr).scan(probe=True) \
+        .select("g", "k", "v")
     assert snap == want
     assert sorted(tuple(r) for r in live.collect()) == want

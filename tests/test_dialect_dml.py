@@ -9,7 +9,10 @@
 - An INSERT batch is one inline relation: the table's analyzed plan
   has one leaf per INSERT statement plus the empty base, and a read
   scans no ``OneRowRelation``.
-- A VALUES cell must be constant."""
+- A VALUES cell must be constant, and a current-time cell is
+  evaluated once, at INSERT time."""
+
+import time
 
 import duckdb
 import pytest
@@ -115,3 +118,14 @@ def test_non_constant_values_cell_is_refused(spark, cell):
         eng.sql(f"INSERT INTO nc_t VALUES (1, 'a'), (2, {cell})")
     assert eng.table("nc_t").count() == 0
     eng.sql("DROP TABLE nc_t")
+
+
+def test_current_time_cell_is_fixed_at_insert(spark):
+    eng = Engine(spark)
+    eng.sql("CREATE TABLE now_t (id: Integer, ts: Timestamp)")
+    eng.sql("INSERT INTO now_t VALUES (1, current_timestamp())")
+    first = eng.sql("SELECT ts FROM now_t").collect()
+    time.sleep(1.2)
+    assert eng.sql("SELECT ts FROM now_t").collect() == first
+    assert first[0].ts is not None
+    eng.sql("DROP TABLE now_t")

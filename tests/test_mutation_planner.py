@@ -2,17 +2,23 @@
 through both lakehouse writers in every write mode: the same DELETE,
 UPDATE, MERGE (update + insert) and MERGE … THEN DELETE on one small
 table must leave the same rows as a plain-Python model, with the
-result counts each encoder reports. Also the Iceberg TIMESTAMP round
-trip: files restaged with field ids must keep a timestamp type Spark
-reads back."""
+result counts each encoder reports. A publish that fails leaves the
+rows and the table directory as they were, in every mode, and a
+failed commit-file write leaves no torn file in the version slot. Also
+the Iceberg TIMESTAMP round trip: files restaged with field ids must
+keep a timestamp type Spark reads back."""
 
 import datetime as dt
+import os
 
 import pytest
 
 from algebraicdb_spark.engine import Engine
+from algebraicdb_spark.operators import delta_writer, iceberg_writer
 from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
+from algebraicdb_spark.operators.iceberg import IcebergTable
 from algebraicdb_spark.operators.iceberg_writer import IcebergTableWriter
+from algebraicdb_spark.operators.txnlog import publish_exclusive
 
 ROWS = [(k, k * 10, "x" if k % 2 else None) for k in range(1, 13)]
 MODES = ["delta-cow", "delta-mor", "iceberg-cow", "iceberg-mor",
@@ -51,6 +57,13 @@ def _rows(spark, w):
 
 def _counts(res, keys):
     return {k: res[k] for k in keys if k in res}
+
+
+def _files(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, fs in os.walk(root) for f in fs
+    )
 
 
 @pytest.mark.parametrize("mode", MODES)
@@ -166,3 +179,91 @@ def test_iceberg_merge_delete_reads_back_as_delete(spark, tmp_path, mode):
             None, None, delete_matched=True)
     feed = IcebergTable(w.path).changes_cdf(spark, since)
     assert [(r["k"], r["_change_type"]) for r in feed.collect()] == [(2, "delete")]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_a_failed_publish_leaves_the_table_as_it_was(
+    spark, tmp_path, monkeypatch, mode
+):
+    """An append, DELETE, UPDATE and MERGE whose publish fails raise and
+    leave the rows and every file of the table directory as they were
+    — staged rows, change-data files, deletion vectors, manifests.
+    Rerun without the fault, each verb applies. Delta runs with its change data
+    feed on and file-backed deletion vectors."""
+    w = _writer(spark, str(tmp_path / "t"), mode)
+    kw = {}
+    if mode.startswith("delta"):
+        w.set_properties({"delta.enableChangeDataFeed": "true"})
+        kw = {"dv_inline_threshold": 0}
+    module = delta_writer if mode.startswith("delta") else iceberg_writer
+    model = {k: (v, tag) for k, v, tag in ROWS}
+    src = _values(spark, "(9, 900, 'm'), (20, 200, 'n')")
+
+    def deleted(model):
+        for k in range(1, 8):
+            del model[k]
+
+    def updated(model):
+        model[12] = (model[12][0], "u")
+
+    def merged(model):
+        model[9] = (900, "m")
+        model[20] = (200, "n")
+
+    verbs = [
+        (lambda: w.delete(spark, "k <= 7", **kw), deleted),
+        (lambda: w.update(spark, {"tag": "'u'"}, "k = 12", **kw), updated),
+        (lambda: w.merge(spark, src, "t.k = s.k",
+                         {"v": "s.v", "tag": "s.tag"},
+                         ["s.k", "s.v", "s.tag"], **kw), merged),
+    ]
+
+    def fail(target, text):
+        raise OSError("no space left on device")
+
+    before = _files(w.path)
+    with monkeypatch.context() as mp:
+        mp.setattr(module, "publish_exclusive", fail)
+        with pytest.raises(OSError, match="no space left"):
+            w.append(_values(spark, "(30, 300, 'a')"))
+        assert _files(w.path) == before
+        for verb, _apply in verbs:
+            with pytest.raises(OSError, match="no space left"):
+                verb()
+            assert _files(w.path) == before
+    assert _rows(spark, w) == sorted(
+        (k, v, tag) for k, (v, tag) in model.items())
+    for verb, apply in verbs:
+        verb()
+        apply(model)
+    assert _rows(spark, w) == sorted(
+        (k, v, tag) for k, (v, tag) in model.items())
+
+
+def test_a_failed_commit_write_leaves_no_torn_file(tmp_path):
+    target = tmp_path / "00000000000000000001.json"
+    with pytest.raises(UnicodeEncodeError):
+        publish_exclusive(str(target), "\udc80")  # unencodable text
+    assert os.listdir(tmp_path) == []
+
+
+def test_a_failed_hint_swing_keeps_the_landed_commit(
+    spark, tmp_path, monkeypatch
+):
+    """The metadata file has landed when ``version-hint.text`` is
+    swung: a swing that fails must not fail the commit or unlink its
+    files, and readers find the new version without the hint."""
+    w = _writer(spark, str(tmp_path / "t"), "iceberg-cow")
+    replace = os.replace
+
+    def no_hint(src, dst):
+        if str(dst).endswith("version-hint.text"):
+            raise OSError("no space left on device")
+        replace(src, dst)
+
+    monkeypatch.setattr(iceberg_writer.os, "replace", no_hint)
+    res = w.delete(spark, "k <= 6")
+    monkeypatch.undo()
+    assert res["rows_deleted"] == 6
+    assert sorted(r["k"] for r in IcebergTable(w.path).snapshot(spark)
+                  .collect()) == list(range(7, 13))
