@@ -1303,30 +1303,11 @@ class Engine:
         return _writer(att["fmt"], att["path"])
 
     def _reattach_after_mutation(self, name: str, t) -> None:
-        """Re-register the view on the post-mutation snapshot. A table
-        whose every row was deleted has NO live files — legal state:
-        register an empty frame under the pinned table schema (or,
-        when the log records none, under the shape the view had
-        before the mutation — the best remaining authority)."""
+        """Re-register the view on the post-mutation snapshot (a table
+        whose every row was deleted reads as an empty frame under its
+        schema)."""
         att = self._attached[name]
-        schema = t.table_schema()
-        try:
-            non_empty = bool(t.live_paths())
-        except (NotImplementedError, ValueError):
-            # live_paths refuses when the live set carries
-            # merge-on-read state — a Delta deletion vector
-            # (NotImplementedError) or an iceberg position-delete file
-            # (ValueError): a raw path list would resurrect deleted
-            # rows, which itself proves the table is non-empty;
-            # snapshot() applies the deletes (and if the refusal was
-            # anything else, snapshot() surfaces it loudly right here)
-            non_empty = True
-        if non_empty:
-            df = t.snapshot(self.spark)
-        elif schema is not None:
-            df = self._empty_table(schema)
-        else:
-            df = self.table(name).limit(0)
+        df = t.snapshot(self.spark)
         self.create_table(name, df)
         self._attached[name] = {**att, "version": None}
         self._invalidate_stats(name)

@@ -61,7 +61,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -75,14 +74,16 @@ from algebraicdb_spark.operators.txnlog import (
     ConcurrentWriteError,
     DeltaLogTable,
     SchemaEvolutionError,
+    Staged,
     _cm_id_write_type,
     _cm_phys_type,
-    _hive_partition_values,
     _schema_fields,
     footer_rows,
+    footer_stats,
     parse_schema_string,
     publish_exclusive,
     retry_commit,
+    stage,
 )
 
 _EMPTY_ST = StructType([])
@@ -106,8 +107,8 @@ class _Target:
     meta: dict | None
     positions: bool
     dv_inline_threshold: int
-    staged: list[tuple[str, dict]] = field(default_factory=list)
-    cdc: list[tuple[str, dict]] = field(default_factory=list)
+    staged: list[Staged] = field(default_factory=list)
+    cdc: list[Staged] = field(default_factory=list)
     new_pos: dict[str, list[int]] = field(default_factory=dict)
     written_bin: str | None = None
     removed: list[str] = field(default_factory=list)
@@ -172,12 +173,9 @@ class _Target:
         CHECK constraints and generated-column consistency first."""
         if check:
             self.w._enforce_invariants(frame, self.meta, self.op)
-        staged, rows = self.w._stage_counted(
-            frame, self.part_cols, mapping=self.mapping)
-        kept, dropped = mutation.drop_empty(staged, rows, self.positions)
-        self.w._unstage(dropped)
-        self.staged += kept
-        return sum(rows)
+        staged = self.w._stage(frame, self.part_cols, mapping=self.mapping)
+        self.staged += staged
+        return sum(s.rows for s in staged)
 
     def stage_positions(self, positions: DataFrame) -> int:
         """Collect the matched positions per file, bitmapped
@@ -189,14 +187,14 @@ class _Target:
     def commit(self, change: mutation.Change) -> int:
         """ONE data-changing commit: every matched file leaves as a
         remove (copy-on-write) or is re-added with its new vector
-        (``_vector_actions``, the first vectored commit carrying the
-        protocol upgrade), the staged files land as adds, and the
-        change rows as ``_change_data`` files when the feed is on."""
+        (``_vector_actions``; the first commit that writes a vector
+        carries the protocol upgrade), the staged files land as adds,
+        and the change rows as ``_change_data`` files when the feed is
+        on."""
         affected = sorted(self.new_pos) if self.positions else change.files
-        actions: list[dict] = []
-        if self.positions:
-            actions = (self._vector_actions()
-                       + self.w._dv_protocol_actions(self.rdr))
+        actions = self._vector_actions() if self.positions else []
+        if self.dv_files:
+            actions += self.w._dv_protocol_actions(self.rdr)
         if self.w._cdf_enabled(self.meta):
             actions += self._change_data(change, affected, actions)
         return self.w._commit_cow(
@@ -217,11 +215,13 @@ class _Target:
         )
 
         vectors: list[list[int]] = []  # in ``dv_files`` order
+        footers: dict[str, tuple] = {}  # one footer read per file
         for raw in sorted(self.new_pos):
             pos = set(self.new_pos[raw])
             if self.dv_of[raw] is not None:
                 pos |= set(dv_positions(self.w.path, self.dv_of[raw]))
-            if len(pos) >= footer_rows(self.by_raw[raw][1]):
+            footers[raw] = footer_stats(self.by_raw[raw][1])
+            if len(pos) >= footers[raw][0]:
                 self.removed.append(raw)  # vector covers the file
             else:
                 self.dv_files.append(raw)
@@ -239,7 +239,7 @@ class _Target:
         adds = []
         for raw in self.dv_files:
             res = self.by_raw[raw][1]
-            stats = json.loads(_file_stats_json(res))
+            stats = json.loads(_stats_json(*footers[raw]))
             stats["tightBounds"] = False  # min/max may cover DV'd rows
             adds.append({"add": {
                 "path": raw,  # verbatim committed bytes — the fold key
@@ -268,8 +268,7 @@ class _Target:
         else:
             def side(entries, extra_staged):
                 ents = list(entries) + [
-                    (rel, os.path.join(self.w.path, rel), pv, None)
-                    for rel, pv in extra_staged
+                    (s.path, s.path, s.pv, None) for s in extra_staged
                 ]
                 return self.scan(entries=ents) if ents else None
 
@@ -287,20 +286,14 @@ class _Target:
                 pre.limit(0) if post is None else post,
                 update=False,
             )
-        # an all-cancelled partition can stage an empty part file —
-        # dropped rather than committed as a rowless cdc action
-        staged, rows = self.w._stage_counted(
-            changes, self.part_cols, mapping=self.mapping,
-            subdir="_change_data",
-        )
-        self.cdc, dropped = mutation.drop_empty(staged, rows, each=True)
-        self.w._unstage(dropped)
+        self.cdc = self.w._stage(changes, self.part_cols,
+                                 mapping=self.mapping, subdir="_change_data")
         return [{"cdc": {
-            "path": quote(rel, safe="/"),
-            "partitionValues": pv,
-            "size": os.path.getsize(os.path.join(self.w.path, rel)),
+            "path": self.w._rel(s),
+            "partitionValues": s.pv,
+            "size": s.size,
             "dataChange": False,
-        }} for rel, pv in self.cdc]
+        }} for s in self.cdc]
 
     def encoded(self) -> dict[str, int]:
         return {"files_removed": len(self.removed),
@@ -311,51 +304,24 @@ class _Target:
         self.w._reclaim_bin(self.written_bin)
 
 
-def _file_stats_json(fpath: str) -> str:
-    """Delta's per-file ``stats`` string, from the parquet footer:
-    numRecords always; min/max/nullCount per leaf column whose stats
-    are present and JSON-native (int/float/str — bool and binary
-    don't order usefully for skipping and bloat the log). A column
-    with any statless row group is dropped from min/max (absent stats
-    mean "cannot prune", never "prune wrongly") but keeps nullCount
-    when complete."""
-    import pyarrow.parquet as pq
+def _stats_json(rows: int, stats: dict[str, tuple]) -> str:
+    """Delta's per-file ``stats`` string from a footer fold
+    (``footer_stats``): numRecords always; min/max per leaf column
+    whose bounds are present and JSON-native (int/float/str — bool and
+    binary don't order usefully for skipping and bloat the log);
+    nullCount where every row group counted it."""
+    def native(v) -> bool:
+        return isinstance(v, (int, float, str)) and not isinstance(v, bool)
 
-    md = pq.ParquetFile(fpath).metadata
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    dead: set[str] = set()
-    null_dead: set[str] = set()
-    for rg in range(md.num_row_groups):
-        for i in range(md.num_columns):
-            c = md.row_group(rg).column(i)
-            name = c.path_in_schema
-            st = c.statistics
-            if st is None:
-                dead.add(name)
-                null_dead.add(name)
-                continue
-            if st.null_count is None:
-                null_dead.add(name)
-            else:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-            if (
-                not st.has_min_max
-                or not isinstance(st.min, (int, float, str))
-                or isinstance(st.min, bool)
-            ):
-                dead.add(name)
-                continue
-            if name not in mins or st.min < mins[name]:
-                mins[name] = st.min
-            if name not in maxs or st.max > maxs[name]:
-                maxs[name] = st.max
-    doc: dict = {"numRecords": md.num_rows}
-    doc["minValues"] = {k: v for k, v in mins.items() if k not in dead}
-    doc["maxValues"] = {k: v for k, v in maxs.items() if k not in dead}
-    doc["nullCount"] = {k: v for k, v in nulls.items() if k not in null_dead}
-    return json.dumps(doc)
+    bounded = {k: (lo, hi) for k, (lo, hi, _n) in stats.items()
+               if native(lo) and native(hi)}
+    return json.dumps({
+        "numRecords": rows,
+        "minValues": {k: lo for k, (lo, _hi) in bounded.items()},
+        "maxValues": {k: hi for k, (_lo, hi) in bounded.items()},
+        "nullCount": {k: n for k, (_lo, _hi, n) in stats.items()
+                      if n is not None},
+    })
 
 
 class DeltaTableWriter:
@@ -698,20 +664,16 @@ class DeltaTableWriter:
         partition_by: list[str] | tuple = (),
         mapping: dict[str, str] | None = None,
         subdir: str = "",
-    ) -> list[tuple[str, dict]]:
-        """Write the batch's parquet into the table directory (under
-        hive-style partition dirs when partitioned) and return
-        (root-relative path, partitionValues) per file. Staged files
-        are invisible until the commit publishes — the log, not the
-        directory listing, defines the table. ``mapping`` renames the
-        batch's LOGICAL columns to their PHYSICAL parquet names before
-        the write (column-mapped tables, 'name' mode) — the footer
-        stats then key on physical names too, which is what the
-        protocol's stats contract expects under column mapping.
-        ``subdir`` stages under a table-root subdirectory and is
-        REFLECTED in the returned relative paths — the ``_change_data``
-        staging for CDF commits (whose ``cdc`` actions record
-        root-relative paths, same as adds)."""
+    ) -> list[Staged]:
+        """Stage the batch through ``txnlog.stage``, keeping its hive
+        layout under the table root (``subdir``: under that table-root
+        subdirectory instead — the ``_change_data`` staging for CDF
+        commits, whose ``cdc`` actions record root-relative paths, same
+        as adds). ``mapping`` renames the batch's LOGICAL columns to
+        their PHYSICAL parquet names before the write (column-mapped
+        tables) — the footer stats then key on physical names too,
+        which is what the protocol's stats contract expects under
+        column mapping."""
         restore_field_id = None
         if mapping:
             # 'id'-mode tables ALSO stamp each column's field id into
@@ -789,54 +751,22 @@ class DeltaTableWriter:
             # partitionValues by physical name via the hive decode —
             # Delta's convention for mapped tables)
             partition_by = [mapping.get(c, c) for c in partition_by]
-        tmp = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         try:
-            w = df.write.mode("errorifexists")
-            if partition_by:
-                w = w.partitionBy(*list(partition_by))
-            w.parquet(tmp)
-        except BaseException:
-            # a write that dies mid-flight leaves the half-written
-            # staging dir behind — the log never references it and
-            # vacuum's log-candidates rule would never reclaim it
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+            return stage(df, list(partition_by), self.path,
+                         lambda rel: os.path.join(self.path, subdir, rel))
         finally:
             if restore_field_id is not None:
                 restore_field_id()
-        staged: list[tuple[str, dict]] = []
-        for dirpath, _dirs, files in os.walk(tmp):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                rel_dir = os.path.relpath(dirpath, tmp)
-                pv: dict = {}
-                if rel_dir == ".":
-                    rel = fn
-                else:
-                    # hive layout decoded by the SAME helper as the
-                    # iceberg staging path (txnlog._hive_partition_values)
-                    pv = _hive_partition_values(rel_dir)
-                    rel = os.path.join(rel_dir, fn)
-                if subdir:
-                    rel = os.path.join(subdir, rel)
-                dest = os.path.join(self.path, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.replace(os.path.join(dirpath, fn), dest)
-                staged.append((rel, pv))
-        shutil.rmtree(tmp)
-        return staged
 
-    def _unstage(self, staged: list[tuple[str, dict]]) -> None:
+    def _unstage(self, staged: list[Staged]) -> None:
         """Remove staged-but-never-published files (gate refusal after
         staging, or an idempotent no-op discovered late): the log never
         references them, and vacuum's log-candidates-only rule means
         nothing else would ever reclaim them."""
-        for rel, _pv in staged:
-            p = os.path.join(self.path, rel)
-            if os.path.exists(p):
-                os.unlink(p)
-            parent = os.path.dirname(p)
+        for s in staged:
+            if os.path.exists(s.path):
+                os.unlink(s.path)
+            parent = os.path.dirname(s.path)
             # tidy a hive partition dir this staging created and
             # emptied (never the table root; non-empty dirs survive)
             if parent != self.path:
@@ -846,20 +776,20 @@ class DeltaTableWriter:
                     pass
 
     def _add_actions(
-        self, staged: list[tuple[str, dict]], data_change: bool = True
+        self, staged: list[Staged], data_change: bool = True
     ) -> list[dict]:
-        out = []
-        for rel, pv in staged:
-            full = os.path.join(self.path, rel)
-            out.append({"add": {
-                "path": quote(rel, safe="/"),
-                "partitionValues": pv,
-                "size": os.path.getsize(full),
-                "modificationTime": int(os.path.getmtime(full) * 1000),
-                "dataChange": data_change,
-                "stats": _file_stats_json(full),
-            }})
-        return out
+        return [{"add": {
+            "path": self._rel(s),
+            "partitionValues": s.pv,
+            "size": s.size,
+            "modificationTime": int(os.path.getmtime(s.path) * 1000),
+            "dataChange": data_change,
+            "stats": _stats_json(s.rows, s.stats),
+        }} for s in staged]
+
+    def _rel(self, s: Staged) -> str:
+        """A staged file's root-relative, URL-encoded log path."""
+        return quote(os.path.relpath(s.path, self.path), safe="/")
 
     @staticmethod
     def _cur_parts(cur_meta: dict | None) -> list[str]:
@@ -967,7 +897,8 @@ class DeltaTableWriter:
     # writer features this minimal client actually honors when a
     # table's protocol announces them (minWriterVersion 7): deletion
     # vectors are read, applied, unioned, and purged by every mutation
-    # path; appendOnly is honored by REFUSING the mutations it forbids;
+    # path; appendOnly is honored by REFUSING data-changing removes
+    # while delta.appendOnly=true;
     # timestampNtz is just a type; vacuumProtocolCheck requires exactly
     # this check to run before vacuum; invariants/checkConstraints are
     # honored below only when no invariant/constraint is DECLARED —
@@ -1095,9 +1026,11 @@ class DeltaTableWriter:
             # mark riding the same commit); UPDATE/MERGE carry values
             # and refuse only the unmaintainable shapes (assignment to
             # the column, MERGE INSERT) at their own entry points
+        # the appendOnly FEATURE only obliges writers to honor the
+        # property (PROTOCOL.md "Append-only Tables"); the property
+        # makes the table append-only
         if data_change and mutation != "APPEND" and (
-            "appendOnly" in feats
-            or str(conf.get("delta.appendOnly", "")).lower() == "true"
+            str(conf.get("delta.appendOnly", "")).lower() == "true"
         ):
             raise ValueError(
                 f"{mutation} on {self.path}: the table is append-only "
@@ -1112,188 +1045,66 @@ class DeltaTableWriter:
     def enable_deletion_vectors(
         self, extra_props: dict[str, str] | None = None
     ) -> int | None:
-        """Commit the protocol upgrade that lets DELETEs write
-        merge-on-read deletion vectors instead of rewriting files:
-        minReader 3 / minWriter 7 with the deletionVectors feature in
-        BOTH lists plus the table config flag, per PROTOCOL.md. Every
-        capability the table already announced carries forward —
-        readers of the v<N skip the feature until a DV actually lands.
-        No-op (returns None) when already enabled.
-
-        ``extra_props`` fold into the SAME metaData commit (already
-        validated by the caller): a SET TBLPROPERTIES statement that
-        enables DVs plus other keys must land in ONE version — two
-        commits would leave the statement half-applied (with the
-        irreversible protocol upgrade already committed) if a crash
-        or retry exhaustion hit between them."""
-        def attempt() -> int | None:
-            rdr = self.reader()
-            # pin the head FIRST and derive protocol/metaData AT it —
-            # reading them at an unpinned head and then re-reading
-            # latest_version() for the slot opens a lost-update window
-            # (a racer's commit between the reads is overwritten by
-            # the stale metaData we re-commit, with no slot collision
-            # to force the retry)
-            head = rdr.latest_version()
-            proto, meta = rdr._protocol_meta(head if head >= 0 else None)
-            feats_w = set(proto.get("writerFeatures") or [])
-            if "deletionVectors" in feats_w:
-                return None
-            upgraded = self._dv_upgraded_protocol(proto)
-            self._check_writable(
-                {**proto, "minWriterVersion": 7,
-                 "writerFeatures": upgraded["protocol"]["writerFeatures"]},
-                meta, "ALTER",
-                data_change=False,
-            )
-            if extra_props and not meta:
-                raise ValueError(
-                    f"SET PROPERTIES on {self.path}: table has no "
-                    "metaData to carry the configuration — append a "
-                    "first batch"
-                )
-            actions = [
-                self._commit_info(
-                    "SET TBLPROPERTIES",
-                    properties={"delta.enableDeletionVectors": "true",
-                                **(extra_props or {})},
-                ),
-                upgraded,
-            ]
-            if meta:
-                conf = meta.get("configuration") or {}
-                if isinstance(conf, list):
-                    conf = dict(conf)  # pyarrow MAP columns → [(k, v)]
-                conf = dict(conf)
-                conf["delta.enableDeletionVectors"] = "true"
-                for k, v in (extra_props or {}).items():
-                    if v in (None, ""):
-                        conf.pop(k, None)
-                    else:
-                        conf[k] = str(v)
-                # checkpoint-sourced metaData rows surface parquet
-                # nulls for absent fields — strip them, they are not
-                # part of the committed action shape
-                m = {k: v for k, v in meta.items() if v is not None}
-                m["configuration"] = conf
-                actions.append({"metaData": m})
-            self._publish(head + 1, actions)
-            return head + 1
-
-        return retry_commit("enable_deletion_vectors", attempt)
-
-    @staticmethod
-    def _cdf_protocol_ok(proto: dict) -> bool:
-        """Does the protocol already license CDF writes? Legacy writer
-        v4..v6 implies the capability; v7+ must announce the
-        changeDataFeed feature explicitly."""
-        mwv = int((proto or {}).get("minWriterVersion", 1) or 1)
-        if mwv >= 7:
-            return "changeDataFeed" in (proto.get("writerFeatures") or [])
-        return mwv >= 4
+        """Let DELETEs write merge-on-read deletion vectors instead of
+        rewriting files: ``set_properties`` with
+        ``delta.enableDeletionVectors=true`` (plus ``extra_props``) —
+        the flag and the protocol upgrade it needs in one commit.
+        No-op (returns None) when already enabled."""
+        return self.set_properties(
+            {"delta.enableDeletionVectors": "true", **(extra_props or {})})
 
     def enable_change_data_feed(
         self, extra_props: dict[str, str] | None = None
     ) -> int | None:
-        """Commit ``delta.enableChangeDataFeed=true`` together with a
-        protocol that actually licenses it (PROTOCOL.md: CDF needs
-        legacy writer v4+ or the ``changeDataFeed`` writer feature) —
-        the capability flag and the announcement must land in ONE
-        version, or a reader between two commits sees a config lying
-        about the protocol. After this, every mutation commit lands
-        its row-level diff as ``_change_data`` parquet + ``cdc``
-        actions (``_Target._change_data``). No-op (returns None) when
-        already fully enabled. ``extra_props`` fold into the same commit, as
-        in ``enable_deletion_vectors``."""
-        def attempt() -> int | None:
-            rdr = self.reader()
-            # pin the head FIRST — see enable_deletion_vectors for the
-            # lost-update window two separate reads would open
-            head = rdr.latest_version()
-            proto, meta = rdr._protocol_meta(head if head >= 0 else None)
-            if (
-                self._cdf_protocol_ok(proto)
-                and self._cdf_enabled(meta)
-                and not extra_props
-            ):
-                return None
-            actions = [self._commit_info(
-                "SET TBLPROPERTIES",
-                properties={"delta.enableChangeDataFeed": "true",
-                            **(extra_props or {})},
-            )]
-            if not self._cdf_protocol_ok(proto):
-                upgraded = self._feature_upgraded_protocol(
-                    proto, {"changeDataFeed"}
-                )
-                self._check_writable(
-                    upgraded["protocol"], meta, "ALTER",
-                    data_change=False,
-                )
-                actions.append(upgraded)
-            else:
-                self._check_writable(proto, meta, "ALTER",
-                                     data_change=False)
-            if not meta:
-                raise ValueError(
-                    f"SET PROPERTIES on {self.path}: table has no "
-                    "metaData to carry the configuration — append a "
-                    "first batch"
-                )
-            conf = meta.get("configuration") or {}
-            if isinstance(conf, list):
-                conf = dict(conf)  # pyarrow MAP columns → [(k, v)]
-            conf = dict(conf)
-            conf["delta.enableChangeDataFeed"] = "true"
-            for k, v in (extra_props or {}).items():
-                if v in (None, ""):
-                    conf.pop(k, None)
-                else:
-                    conf[k] = str(v)
-            m = {k: v for k, v in meta.items() if v is not None}
-            m["configuration"] = conf
-            actions.append({"metaData": m})
-            self._publish(head + 1, actions)
-            return head + 1
-
-        return retry_commit("enable_change_data_feed", attempt)
+        """Emit the row-level change feed: ``set_properties`` with
+        ``delta.enableChangeDataFeed=true`` (plus ``extra_props``).
+        After this, every mutation commit lands its row-level diff as
+        ``_change_data`` parquet + ``cdc`` actions
+        (``_Target._change_data``). No-op (returns None) when already
+        enabled."""
+        return self.set_properties(
+            {"delta.enableChangeDataFeed": "true", **(extra_props or {})})
 
     # delta.* configuration keys this minimal writer can honestly
     # commit: ones it HONORS itself (appendOnly gates mutations,
     # retention keys are advisory durations) — anything else under the
-    # delta.* prefix may imply protocol features (CDF, generated
-    # columns, column mapping…) this writer would then silently not
-    # uphold. Non-delta keys are freeform user properties.
+    # delta.* prefix may imply protocol features (generated columns,
+    # column mapping…) this writer would then silently not uphold.
+    # Non-delta keys are freeform user properties.
     _SETTABLE_DELTA_KEYS = {
         "delta.appendOnly",
         "delta.logRetentionDuration",
         "delta.deletedFileRetentionDuration",
         "delta.dataSkippingNumIndexedCols",
     }
+    # capability keys: the (writer, reader) features the protocol must
+    # announce once one is set to true (PROTOCOL.md)
+    _CAPABILITY_KEYS = {
+        "delta.enableDeletionVectors": ({"deletionVectors"},
+                                        {"deletionVectors"}),
+        "delta.enableChangeDataFeed": ({"changeDataFeed"}, set()),
+    }
 
     def set_properties(
         self, props: dict[str, str], spark: SparkSession | None = None
     ) -> int | None:
-        """``SET TBLPROPERTIES`` as one metaData commit: merge
-        ``props`` into the table configuration (None/'' deletes a
-        key). ``delta.enableDeletionVectors=true`` ROUTES to
-        ``enable_deletion_vectors`` — it needs the protocol upgrade
-        committed atomically with the flag, not a bare config write;
-        other delta.*-prefixed keys outside the honored set refuse
-        (committing a capability flag this writer would not uphold is
-        the silent-corruption shape the writer gate exists for)."""
+        """``SET TBLPROPERTIES`` as ONE commit: merge ``props`` into the
+        table configuration (None/'' deletes a key) and, when a
+        capability key (``_CAPABILITY_KEYS``) turns on a feature the
+        protocol does not announce yet, the upgraded protocol
+        (``_feature_upgraded_protocol``) in the same version — a config
+        claiming a capability the protocol does not announce lies to
+        every reader, and two commits would leave the statement
+        half-applied. Other delta.*-prefixed keys outside the honored
+        set refuse. Returns None when nothing would change."""
         props = {str(k): v for k, v in props.items()}
-        # validate EVERY key before committing ANYTHING: the DV route
-        # below is an irreversible protocol upgrade, and a statement
-        # that half-applies before refusing leaves a committed side
-        # effect behind a failed SQL statement
+        # validate EVERY key before committing ANYTHING
         bad = sorted(
             k for k in props
             if k.startswith("delta.")
             and k not in self._SETTABLE_DELTA_KEYS
+            and k not in self._CAPABILITY_KEYS
             and not k.startswith("delta.constraints.")
-            and k not in ("delta.enableDeletionVectors",
-                          "delta.enableChangeDataFeed")
         )
         if bad:
             raise NotImplementedError(
@@ -1317,69 +1128,60 @@ class DeltaTableWriter:
                     "table's existing rows — pass spark="
                 )
             if self.latest_version() >= 0:
-                try:
-                    snap = self.reader().snapshot(spark)
-                except ValueError:
-                    snap = None  # no live files: nothing to validate
-                if snap is not None:
-                    self._enforce_invariants(
-                        snap,
-                        {"configuration": dict(adding),
-                         "schemaString": None},
-                        "ADD CONSTRAINT",
-                    )
-        if str(props.get("delta.enableDeletionVectors", "")
-               ).lower() == "true":
-            rest = {k: v for k, v in props.items()
-                    if k != "delta.enableDeletionVectors"}
-            # the remaining keys ride the SAME commit as the protocol
-            # upgrade — the whole statement lands in one version (a
-            # crash between two commits would leave it half-applied
-            # with the irreversible upgrade already in)
-            v = self.enable_deletion_vectors(extra_props=rest or None)
-            if v is not None or not rest:
-                return v
-            # already DV-enabled (the route no-opped): the remaining
-            # keys still need their own metaData commit below
-            props = rest
-        if str(props.get("delta.enableChangeDataFeed", "")
-               ).lower() == "true":
-            # capability key with a protocol obligation — route through
-            # the upgrade so the flag and the changeDataFeed feature
-            # announcement land atomically (same shape as the DV route)
-            rest = {k: v for k, v in props.items()
-                    if k != "delta.enableChangeDataFeed"}
-            v = self.enable_change_data_feed(extra_props=rest or None)
-            if v is not None or not rest:
-                return v
-            props = rest
+                self._enforce_invariants(
+                    self.reader().snapshot(spark),
+                    {"configuration": dict(adding), "schemaString": None},
+                    "ADD CONSTRAINT",
+                )
+        need_w: set[str] = set()
+        need_r: set[str] = set()
+        for k, (w_feats, r_feats) in self._CAPABILITY_KEYS.items():
+            if str(props.get(k, "")).lower() == "true":
+                need_w |= w_feats
+                need_r |= r_feats
 
-        def attempt() -> int:
+        def attempt() -> int | None:
             rdr = self.reader()
-            # pinned head — see enable_deletion_vectors for the
-            # lost-update window two separate reads would open
+            # pin the head FIRST and derive protocol/metaData AT it —
+            # reading them at an unpinned head and then re-reading
+            # latest_version() for the slot opens a lost-update window
+            # (a racer's commit between the reads is overwritten by
+            # the stale metaData we re-commit, with no slot collision
+            # to force the retry)
             head = rdr.latest_version()
             proto, meta = rdr._protocol_meta(head if head >= 0 else None)
-            self._check_writable(proto, meta, "ALTER", data_change=False)
+            upgrade = []
+            if need_w - self._announced(proto):
+                upgrade = [self._feature_upgraded_protocol(
+                    proto, need_w, need_r)]
+            self._check_writable(
+                upgrade[0]["protocol"] if upgrade else proto, meta,
+                "ALTER", data_change=False,
+            )
             if not meta:
                 raise ValueError(
                     f"SET PROPERTIES on {self.path}: table has no "
                     "metaData to carry the configuration — append a "
                     "first batch"
                 )
-            conf = meta.get("configuration") or {}
-            if isinstance(conf, list):
-                conf = dict(conf)
-            conf = dict(conf)
+            # dict() folds pyarrow MAP columns ([(k, v)]) too
+            cur = dict(meta.get("configuration") or {})
+            conf = dict(cur)
             for k, v in props.items():
                 if v in (None, ""):
                     conf.pop(k, None)
                 else:
                     conf[k] = str(v)
+            if not upgrade and conf == cur:
+                return None
+            # checkpoint-sourced metaData rows surface parquet nulls for
+            # absent fields — strip them, they are not part of the
+            # committed action shape
             m = {k: v for k, v in meta.items() if v is not None}
             m["configuration"] = conf
             self._publish(head + 1, [
                 self._commit_info("SET TBLPROPERTIES", properties=props),
+                *upgrade,
                 {"metaData": m},
             ])
             return head + 1
@@ -1816,7 +1618,7 @@ class DeltaTableWriter:
         def attempt() -> int:
             rdr = self.reader()
             # pin the head, read the schema AT it, publish at head+1 —
-            # see enable_deletion_vectors for the lost-update window
+            # see set_properties for the lost-update window
             # the two-separate-reads shape opens
             head = rdr.latest_version()
             _proto, cur_meta = rdr._protocol_meta(
@@ -1924,26 +1726,12 @@ class DeltaTableWriter:
         return str(conf.get("delta.enableChangeDataFeed", "")
                    ).lower() == "true"
 
-    def _stage_counted(
-        self, df: DataFrame, partition_by: list[str] | tuple = (),
-        mapping: dict[str, str] | None = None, subdir: str = "",
-    ) -> tuple[list[tuple[str, dict]], list[int]]:
-        """``_stage`` plus each staged file's footer row count."""
-        staged = self._stage(df, partition_by, mapping=mapping,
-                             subdir=subdir)
-        try:
-            return staged, [footer_rows(os.path.join(self.path, rel))
-                            for rel, _pv in staged]
-        except BaseException:
-            self._unstage(staged)
-            raise
-
     def _commit_cow(
         self,
         removed_raw: list[str],
         removed_pv: dict[str, dict],
         dv_of: dict[str, dict | None],
-        staged: list[tuple[str, dict]],
+        staged: list[Staged],
         op: str,
         params: dict,
         extra_actions: list[dict] | None = None,
@@ -2107,21 +1895,28 @@ class DeltaTableWriter:
         )
 
     def _dv_protocol_actions(self, rdr) -> list[dict]:
-        """The protocol-upgrade action a first MoR mutation must carry
-        ATOMICALLY with its vectors when the table has not announced
-        deletionVectors yet (a separate enable commit is also
-        supported — ``enable_deletion_vectors``; both shapes derive
-        from the SAME upgrade fold so they can never diverge)."""
+        """The protocol-upgrade action the first mutation that writes a
+        deletion vector must carry ATOMICALLY with it when the table has
+        not announced deletionVectors yet — the same upgrade
+        ``enable_deletion_vectors`` commits."""
         proto, _m = rdr._protocol_meta()
-        if "deletionVectors" in (proto.get("writerFeatures") or []):
+        if "deletionVectors" in self._announced(proto):
             return []
-        return [self._dv_upgraded_protocol(proto)]
+        return [self._feature_upgraded_protocol(
+            proto, *self._CAPABILITY_KEYS["delta.enableDeletionVectors"])]
+
+    @classmethod
+    def _announced(cls, proto: dict) -> set[str]:
+        """The writer features a protocol announces: its feature list,
+        or what its legacy version number implies."""
+        _r, legacy_w = cls._legacy_implied_features(proto)
+        return set(proto.get("writerFeatures") or []) | legacy_w
 
     @staticmethod
     def _legacy_implied_features(proto: dict) -> tuple[set[str], set[str]]:
         """The (reader, writer) features a table's LEGACY version
         numbers imply — CUMULATIVELY, per the protocol's version
-        table (writer v5 must support everything v3 and v4 required,
+        table (writer v5 must support everything v2 to v4 required,
         not just column mapping): moving to feature lists must name
         them all or the upgrade silently drops capabilities for
         feature-aware clients."""
@@ -2129,13 +1924,14 @@ class DeltaTableWriter:
         mwv = int(proto.get("minWriterVersion", 1) or 1)
         legacy_r = {"columnMapping"} if mrv == 2 else set()
         w_map = {
+            2: ["appendOnly", "invariants"],
             3: ["checkConstraints"],
             4: ["changeDataFeed", "generatedColumns"],
             5: ["columnMapping"],
             6: ["identityColumns"],
         }
         legacy_w = {
-            f for v, fs in w_map.items() if 3 <= mwv <= 6 and mwv >= v
+            f for v, fs in w_map.items() if 2 <= mwv <= 6 and mwv >= v
             for f in fs
         }
         return legacy_r, legacy_w
@@ -2166,15 +1962,6 @@ class DeltaTableWriter:
                 cur_r | legacy_r | set(reader_features)
             )
         return {"protocol": out}
-
-    @classmethod
-    def _dv_upgraded_protocol(cls, proto: dict) -> dict:
-        """minReader 3 / minWriter 7 with deletionVectors in BOTH
-        feature lists (DV is a reader+writer feature), legacy
-        capabilities carried forward."""
-        return cls._feature_upgraded_protocol(
-            proto, {"deletionVectors"}, {"deletionVectors"}
-        )
 
     def _reclaim_bin(self, written_bin: str | None) -> None:
         """Unlink a never-published DV ``.bin`` (nothing else ever
@@ -2559,7 +2346,7 @@ class DeltaTableWriter:
                 "size": os.path.getsize(p),
                 "modificationTime": int(os.path.getmtime(p) * 1000),
                 "dataChange": False,
-                "stats": _file_stats_json(p),
+                "stats": _stats_json(*footer_stats(p)),
             }
             if dv is not None:
                 # a live deletion vector is part of the file's identity

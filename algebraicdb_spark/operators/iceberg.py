@@ -68,6 +68,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import struct
 import zlib
 from typing import Any, BinaryIO
@@ -310,6 +311,55 @@ _EXISTING, _ADDED, _DELETED = 0, 1, 2
 # 2147483540 / 2147483539): materialized by lineage-preserving
 # rewrites, NEVER surfaced by user-facing reads
 _RESERVED_ROW_COLS = ("_row_id", "_last_updated_sequence_number")
+
+
+_REV_TYPE_MAP = {
+    "boolean": "BooleanType", "int": "IntegerType", "long": "LongType",
+    "float": "FloatType", "double": "DoubleType", "string": "StringType",
+    "date": "DateType", "timestamptz": "TimestampType",
+    "timestamp": "TimestampNTZType", "binary": "BinaryType",
+}
+_DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
+
+
+def _spark_type(t):
+    """Iceberg JSON type → Spark DataType, recursing through
+    struct/list/map (every level nullable, as Spark's DDL parser would
+    build it); None for primitives Spark has no twin for
+    (uuid/fixed/time) — cannot map ≠ map wrongly."""
+    from pyspark.sql import types as T
+
+    if isinstance(t, str):
+        m = _DECIMAL_RE.match(t.replace(" ", ""))
+        if m:
+            return T.DecimalType(int(m.group(1)), int(m.group(2)))
+        name = _REV_TYPE_MAP.get(t)
+        return getattr(T, name)() if name else None
+    k = t.get("type")
+    if k == "struct":
+        return _spark_schema(t.get("fields", []))
+    if k == "list":
+        el = _spark_type(t.get("element"))
+        return None if el is None else T.ArrayType(el, True)
+    if k == "map":
+        kt = _spark_type(t.get("key"))
+        vt = _spark_type(t.get("value"))
+        return None if kt is None or vt is None else T.MapType(kt, vt, True)
+    return None
+
+
+def _spark_schema(fields: list[dict]):
+    """An Iceberg field list as a Spark StructType (None when any
+    field's type has no Spark twin)."""
+    from pyspark.sql import types as T
+
+    out = []
+    for f in fields:
+        dt = _spark_type(f["type"])
+        if dt is None:
+            return None
+        out.append(T.StructField(f["name"], dt, True))
+    return T.StructType(out)
 
 
 class IcebergTable:
@@ -998,29 +1048,37 @@ class IcebergTable:
                 continue
         return False
 
+    def _schema_doc(self, schema_id: int | None = None) -> dict:
+        """The schema with ``schema_id`` (default: ``current-schema-id``)
+        from the v2 ``schemas`` list, else its last entry, falling back
+        to the legacy single ``schema``; {} when none is recorded."""
+        schemas = self.meta.get("schemas") or (
+            [self.meta["schema"]] if self.meta.get("schema") else []
+        )
+        if schema_id is None:
+            schema_id = self.meta.get("current-schema-id")
+        return next(
+            (s for s in schemas if s.get("schema-id") == schema_id),
+            schemas[-1] if schemas else {},
+        )
+
     def _field_names_by_id(self) -> dict[int, str]:
         """Top-level column name per field id from the CURRENT schema
-        (equality_ids reference field ids, never names) — the v2
-        ``schemas`` list keyed by ``current-schema-id``, falling back
-        to the legacy single ``schema``. Nested field ids are absent
-        from this map and refuse downstream."""
-        schema = None
-        schemas = self.meta.get("schemas")
-        if schemas:
-            cur = self.meta.get("current-schema-id")
-            schema = next(
-                (s for s in schemas if s.get("schema-id") == cur),
-                schemas[-1],
-            )
-        else:
-            schema = self.meta.get("schema")
-        if not schema:
-            return {}
+        (equality_ids reference field ids, never names). Nested field
+        ids are absent from this map and refuse downstream."""
         return {
             int(f["id"]): f["name"]
-            for f in schema.get("fields", [])
+            for f in self._schema_doc().get("fields", [])
             if f.get("id") is not None and f.get("name")
         }
+
+    def table_schema(self, snapshot_id: int | None = None):
+        """The Spark schema the snapshot records (its ``schema-id``,
+        else the table's current schema) — None when there is none or
+        a type has no Spark twin (``_spark_type``)."""
+        fields = self._schema_doc(
+            self._snapshot(snapshot_id).get("schema-id")).get("fields")
+        return _spark_schema(fields) if fields else None
 
     def live_paths(
         self,
@@ -1276,27 +1334,13 @@ class IcebergTable:
                     keys = spark.read.parquet(*dpaths).select(
                         *[F.col(c).alias(f"__eq_{c}") for c in names]
                     ).dropDuplicates()
-                    try:
-                        par = self.snapshot(spark, parent)
-                    except ValueError as exc:
-                        # a parent with ZERO data files (everything
-                        # previously deleted) has no preimages at all
-                        # — postimage-only changes, not an error.
-                        # Anything else (parent EXPIRED out of the
-                        # metadata, corrupt tree) must stay loud:
-                        # swallowing it would silently drop preimages
-                        if "no data files" not in str(exc):
-                            raise
-                        par = None
-                    if par is not None:
-                        cond = None
-                        for c in names:
-                            e = par[c].eqNullSafe(keys[f"__eq_{c}"])
-                            cond = e if cond is None else (cond & e)
-                        pre = par.join(
-                            F.broadcast(keys), cond, "left_semi"
-                        )
-                        frames.append(tag(pre, pre_l))
+                    par = self.snapshot(spark, parent)
+                    cond = None
+                    for c in names:
+                        e = par[c].eqNullSafe(keys[f"__eq_{c}"])
+                        cond = e if cond is None else (cond & e)
+                    pre = par.join(F.broadcast(keys), cond, "left_semi")
+                    frames.append(tag(pre, pre_l))
             # the COW algebra runs for EVERY snapshot with removed
             # files — including MIXED merge-on-read commits (a
             # conformant engine's MoR DELETE marks fully-matched
@@ -1552,25 +1596,28 @@ class IcebergTable:
         under a live equality delete, or equality_ids naming
         nested/unknown fields.
 
+        A snapshot with no live data file — every row deleted, an
+        empty append, or a skip that pruned every file — is an empty
+        frame under its recorded schema (``table_schema``).
+
         A raw path list for a snapshot with any deletes refuses
         (``live_paths``) — scanning it would resurrect deleted rows."""
         data, pos_deletes, eq_deletes, dvs = self._files(snapshot_id)
-        if not data:
-            raise ValueError(
-                f"iceberg table {self.path} has no data files at snapshot "
-                f"{snapshot_id if snapshot_id is not None else 'current'}"
-            )
         kept = self._pruned_paths(snapshot_id, skip)
         if kept is not None:
-            pruned = [e for e in data if e[0] in kept]
-            if not pruned:
-                # everything pruned: an empty frame under the table
-                # shape, read from one surviving file's footer (no
-                # data scanned)
-                return spark.read.parquet(data[0][0]).limit(0).drop(
-                    *_RESERVED_ROW_COLS
+            data = [e for e in data if e[0] in kept]
+        if not data:
+            # no live data file (every row deleted, an empty append, or
+            # a skip that pruned them all): the table is its schema
+            st = self.table_schema(snapshot_id)
+            if st is None:
+                raise ValueError(
+                    f"iceberg table {self.path} has no data files at "
+                    f"snapshot {snapshot_id if snapshot_id is not None else 'current'}"
+                    " and no schema this reader can map to shape an "
+                    "empty result"
                 )
-            data = pruned
+            return spark.createDataFrame([], st)
         if not pos_deletes and not eq_deletes and not dvs:
             # lineage-materialized files (a v3 rewrite's _row_id /
             # _last_updated_sequence_number columns) stay METADATA —

@@ -60,12 +60,18 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from algebraicdb_spark.operators import mutation
-from algebraicdb_spark.operators.iceberg import AvroFileReader, IcebergTable
+from algebraicdb_spark.operators.iceberg import (
+    AvroFileReader,
+    IcebergTable,
+    _spark_schema,
+)
 from algebraicdb_spark.operators.txnlog import (
     ConcurrentWriteError,
+    Staged,
     footer_rows,
     publish_exclusive,
     retry_commit,
+    stage,
 )
 
 _MAGIC = b"Obj\x01"
@@ -285,55 +291,6 @@ def _max_field_id(fields: list[dict]) -> int:
     walk({"type": "struct",
           "fields": [{"id": f["id"], "type": f["type"]} for f in fields]})
     return best
-
-
-_REV_TYPE_MAP = {
-    "boolean": "BooleanType", "int": "IntegerType", "long": "LongType",
-    "float": "FloatType", "double": "DoubleType", "string": "StringType",
-    "date": "DateType", "timestamptz": "TimestampType",
-    "timestamp": "TimestampNTZType", "binary": "BinaryType",
-}
-_DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
-
-
-def _spark_type(t):
-    """Iceberg JSON type → Spark DataType, recursing through
-    struct/list/map (every level nullable, as Spark's DDL parser would
-    build it); None for primitives Spark has no twin for
-    (uuid/fixed/time) — cannot map ≠ map wrongly."""
-    from pyspark.sql import types as T
-
-    if isinstance(t, str):
-        m = _DECIMAL_RE.match(t.replace(" ", ""))
-        if m:
-            return T.DecimalType(int(m.group(1)), int(m.group(2)))
-        name = _REV_TYPE_MAP.get(t)
-        return getattr(T, name)() if name else None
-    k = t.get("type")
-    if k == "struct":
-        return _spark_schema(t.get("fields", []))
-    if k == "list":
-        el = _spark_type(t.get("element"))
-        return None if el is None else T.ArrayType(el, True)
-    if k == "map":
-        kt = _spark_type(t.get("key"))
-        vt = _spark_type(t.get("value"))
-        return None if kt is None or vt is None else T.MapType(kt, vt, True)
-    return None
-
-
-def _spark_schema(fields: list[dict]):
-    """An Iceberg field list as a Spark StructType (None when any
-    field's type has no Spark twin)."""
-    from pyspark.sql import types as T
-
-    out = []
-    for f in fields:
-        dt = _spark_type(f["type"])
-        if dt is None:
-            return None
-        out.append(T.StructField(f["name"], dt, True))
-    return T.StructType(out)
 
 
 def _type_key(t):
@@ -888,44 +845,29 @@ def _encode_bound(t: str, v) -> bytes | None:
     return None  # decimals/timestamps/uuid/binary: skip, never guess
 
 
-def _footer_bounds(
-    path: str, fields: list[dict]
+def _bound_rows(
+    stats: dict[str, tuple], fields: list[dict]
 ) -> tuple[list[dict] | None, list[dict] | None]:
-    """(lower_bounds, upper_bounds) for one staged parquet file, as
-    the manifest's [{key: field-id, value: encoded}] rows — folded
-    across row groups from the FOOTER statistics (O(KB); parquet
-    semantics guarantee min ≤ all values ≤ max even when a writer
-    truncates, so carrying them as Iceberg bounds is always safe).
-    Columns with no stats, null-only columns, and types
+    """(lower_bounds, upper_bounds) for one staged file, as the
+    manifest's [{key: field-id, value: encoded}] rows, from its footer
+    fold (``footer_stats`` — parquet semantics guarantee min ≤ all
+    values ≤ max even when a writer truncates, so carrying them as
+    Iceberg bounds is always safe). Columns without bounds and types
     ``_encode_bound`` skips are omitted."""
-    import pyarrow.parquet as pq
-
     by_name = {f["name"]: f for f in fields}
-    md = pq.ParquetFile(path).metadata
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for g in range(md.num_row_groups):
-        rg = md.row_group(g)
-        for ci in range(rg.num_columns):
-            col = rg.column(ci)
-            name = col.path_in_schema
-            st = col.statistics
-            if name not in by_name or st is None or not st.has_min_max:
-                continue
-            lo, hi = st.min, st.max
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
     lower: list[dict] = []
     upper: list[dict] = []
-    for name in sorted(mins):
+    for name in sorted(n for n in stats if n in by_name):
         f = by_name[name]
-        lo_b = _encode_bound(f["type"], mins[name])
-        hi_b = _encode_bound(f["type"], maxs[name])
+        lo, hi, _nulls = stats[name]
+        lo_b = None if lo is None else _encode_bound(f["type"], lo)
+        hi_b = None if hi is None else _encode_bound(f["type"], hi)
         if lo_b is None or hi_b is None:
             continue
         lower.append({"key": int(f["id"]), "value": lo_b})
         upper.append({"key": int(f["id"]), "value": hi_b})
     return (lower or None), (upper or None)
+
 
 _MANIFEST_LIST_SCHEMA = {
     "type": "record",
@@ -1076,11 +1018,8 @@ class _Target:
             staged = self.w._stage(
                 frame,
                 ice_fields=fields + (_LINEAGE_FIELDS if lineage else []))
-        rows = [r for _p, r, _b, _pv in staged]
-        kept, dropped = mutation.drop_empty(staged, rows, self.positions)
-        self.w._unstage(dropped)
-        self.staged += kept
-        return sum(rows)
+        self.staged += staged
+        return sum(s.rows for s in staged)
 
     def stage_positions(self, positions: DataFrame) -> int:
         """``mor`` stages one sorted standard POSITION-DELETE parquet
@@ -1091,14 +1030,14 @@ class _Target:
         from pyspark.sql import functions as F
 
         if self.how == "mor":
-            self.deletes = self.w._stage_nonempty(
+            self.deletes = self.w._stage(
                 positions.select(
                     F.col(mutation.FILE).alias("file_path"),
                     F.col(mutation.POS).cast("long").alias("pos"),
                 ).sort("file_path", "pos").coalesce(1),
                 ice_fields=_POS_DELETE_FIELDS,
             )
-            return sum(r for _p, r, _b, _pv in self.deletes)
+            return sum(s.rows for s in self.deletes)
         touched = mutation.collect_positions(positions, self.live)
         self.new_dvs = {
             u: sorted(set(self.old_dv.get(u, [])) | set(ps))
@@ -1219,62 +1158,41 @@ class IcebergTableWriter:
     def snapshot(self, spark: SparkSession, snapshot_id: int | None = None):
         return self.reader().snapshot(spark, snapshot_id)
 
+    def live_paths(self):
+        return self.reader().live_paths()
+
+    def table_schema(self):
+        return self.reader().table_schema()
+
     # -- the append commit ---------------------------------------------------
 
     def _stage(
         self,
         df: DataFrame,
-        parts: list[str] | None = None,
-        part_types: dict[str, str] | None = None,
         ice_fields: list[dict] | None = None,
         spec_parts: list[dict] | None = None,
-    ) -> list[tuple[str, int, int, dict]]:
-        """Write the batch's parquet under data/ — (path, rows, bytes,
-        partition values) per file, counts from the parquet FOOTERS
-        (O(KB), nothing re-scanned). Partitioned: iceberg keeps the
-        SOURCE columns in the data files (unlike hive/delta), so the
-        split writes through computed ``__p_*`` columns — identity
+    ) -> list[Staged]:
+        """Stage the batch through ``txnlog.stage`` as flat
+        ``data/<uuid>.parquet`` files, each record's partition values
+        typed per the spec. Partitioned: iceberg keeps the SOURCE
+        columns in the data files (unlike hive/delta), so the split
+        writes through computed ``__p_*`` columns — identity
         duplicates the source, transforms evaluate it
         (``_transform_col``: JVM expressions, bucket via an
         Arrow-batched UDF) — each output file holds exactly one
         partition tuple, the dirs carry the values for attribution,
         and the originals stay in the bytes. ``ice_fields`` stamps
         each file's parquet schema with those iceberg field ids
-        (nested included) before sizing — see ``_stamp_field_ids``."""
-        import shutil
-
-        import pyarrow.parquet as pq
-
-        from algebraicdb_spark.operators.txnlog import (
-            _hive_partition_values,
+        (nested included) — see ``_stamp_field_ids`` — and the
+        recorded size is the stamped file's."""
+        spec_parts = spec_parts or []
+        for sf in spec_parts:
+            df = df.withColumn(f"__p_{sf['name']}", _transform_col(sf))
+        staged = stage(
+            df, [f"__p_{sf['name']}" for sf in spec_parts], self.data_dir,
+            lambda _rel: os.path.join(
+                self.data_dir, f"{uuid.uuid4().hex}.parquet"),
         )
-
-        if spec_parts is None and parts:
-            spec_parts = [
-                {"name": c, "transform": "identity", "source": c,
-                 "source_type": (part_types or {}).get(c, "string"),
-                 "vtype": (part_types or {}).get(c, "string")}
-                for c in parts
-            ]
-        tmp = os.path.join(self.data_dir, "_stage_" + uuid.uuid4().hex)
-        try:
-            w = df
-            if spec_parts:
-                for sf in spec_parts:
-                    w = w.withColumn(
-                        f"__p_{sf['name']}", _transform_col(sf)
-                    )
-                w.write.mode("errorifexists").partitionBy(
-                    *[f"__p_{sf['name']}" for sf in spec_parts]
-                ).parquet(tmp)
-            else:
-                w.write.mode("errorifexists").parquet(tmp)
-        except BaseException:
-            # a write that dies mid-flight (runtime error in an
-            # expression) leaves the half-written tmp dir behind —
-            # same leak class as an unreferenced staged file
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
 
         def typed(sf: dict, v: str | None):
             if v is None:
@@ -1286,66 +1204,24 @@ class IcebergTableWriter:
                 return str(v).lower() == "true"
             return v
 
-        moved: list[tuple[str, dict]] = []
-        for dirpath, _dirs, files in os.walk(tmp):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                pv: dict = {}
-                rel_dir = os.path.relpath(dirpath, tmp)
-                if spec_parts and rel_dir != ".":
-                    raw = _hive_partition_values(rel_dir)
-                    pv = {
-                        sf["name"]: typed(
-                            sf, raw.get(f"__p_{sf['name']}")
-                        )
-                        for sf in spec_parts
-                    }
-                dest = os.path.join(
-                    self.data_dir, f"{uuid.uuid4().hex}.parquet"
-                )
-                os.replace(os.path.join(dirpath, fn), dest)
-                moved.append((dest, pv))
-        shutil.rmtree(tmp)
-        if ice_fields and moved:
+        staged = [s._replace(pv={
+            sf["name"]: typed(sf, s.pv.get(f"__p_{sf['name']}"))
+            for sf in spec_parts
+        }) for s in staged]
+        if ice_fields and staged:
             try:
-                _stamp_field_ids([p for p, _pv in moved], ice_fields)
+                _stamp_field_ids([s.path for s in staged], ice_fields)
             except BaseException:
-                self._unstage([(p,) for p, _pv in moved])
+                self._unstage(staged)
                 raise
-        return [
-            (
-                dest,
-                pq.ParquetFile(dest).metadata.num_rows,
-                os.path.getsize(dest),
-                pv,
-            )
-            for dest, pv in moved
-        ]
+            staged = [s._replace(size=os.path.getsize(s.path))
+                      for s in staged]
+        return staged
 
-    def _unstage(self, staged: list) -> None:
-        for p, *_rest in staged:
-            if os.path.exists(p):
-                os.unlink(p)
-
-    def _stage_nonempty(
-        self,
-        df,
-        ice_fields: list[dict] | None = None,
-        spec_parts: list[dict] | None = None,
-    ) -> list[tuple[str, int, int, dict]]:
-        """``_stage`` with zero-row part files UNLINKED, not just
-        filtered: a filtered-out file has already been moved into
-        data/, is reachable from no manifest, and nothing else ever
-        reclaims it (expire_snapshots walks manifest trees, never the
-        directory) — the same leak class the unstage-on-refusal rule
-        exists for."""
-        staged = self._stage(
-            df, ice_fields=ice_fields, spec_parts=spec_parts
-        )
-        keep = [t for t in staged if t[1] > 0]
-        self._unstage([t for t in staged if t[1] == 0])
-        return keep
+    def _unstage(self, staged: list[Staged]) -> None:
+        for s in staged:
+            if os.path.exists(s.path):
+                os.unlink(s.path)
 
     @staticmethod
     def _as_bound_rows(v) -> list[dict] | None:
@@ -1706,7 +1582,7 @@ class IcebergTableWriter:
         base_v: int,
         cur: dict | None,
         fields: list[dict],
-        staged: list[tuple[str, int, int, dict]],
+        staged: list[Staged],
         extra_summary: dict[str, str] | None = None,
         spec_parts: list[dict] | None = None,
     ) -> int:
@@ -1785,6 +1661,8 @@ class IcebergTableWriter:
                         self.reader()._resolve(prev["manifest-list"])
                     ).records
                 ]
+            if not staged:
+                return carried  # an empty batch adds no manifest
             return carried + [self._write_manifest(
                 draft, staged, _manifest_schema(part_fields, fv=fv),
                 md["default-spec-id"], bound_fields,
@@ -1794,7 +1672,7 @@ class IcebergTableWriter:
             base_v, cur, md,
             {"operation": "append",
              "added-data-files": str(len(staged)),
-             "added-records": str(sum(r for _p, r, _b, _pv in staged)),
+             "added-records": str(sum(s.rows for s in staged)),
              **(extra_summary or {})},
             manifests,
         )
@@ -1802,7 +1680,7 @@ class IcebergTableWriter:
     def _write_manifest(
         self,
         draft: _Draft,
-        staged: list[tuple[str, int, int, dict]],
+        staged: list[Staged],
         mschema: dict,
         spec_id: int,
         bound_fields: list[dict],
@@ -1824,25 +1702,25 @@ class IcebergTableWriter:
         )
         first_row = draft.next_row if content == 0 else None
         entries = []
-        for p, rows, size, pv in staged:
+        for s in staged:
             lo_b, hi_b = (
-                _footer_bounds(p, bound_fields)
+                _bound_rows(s.stats, bound_fields)
                 if content == 0 else (None, None)
             )
             dfile = {
                 "content": content,
-                "file_path": p,
+                "file_path": s.path,
                 "file_format": "PARQUET",
-                "partition": pv,
-                "record_count": rows,
-                "file_size_in_bytes": size,
+                "partition": s.pv,
+                "record_count": s.rows,
+                "file_size_in_bytes": s.size,
                 "lower_bounds": lo_b,
                 "upper_bounds": hi_b,
                 "equality_ids": eq_ids,
             }
             if first_row is not None:
                 dfile["first_row_id"] = draft.next_row
-                draft.next_row += rows
+                draft.next_row += s.rows
             entries.append({
                 "status": 1,
                 "snapshot_id": draft.id,
@@ -1854,7 +1732,7 @@ class IcebergTableWriter:
         draft.written.append(mpath)
         return _ml_row(
             mpath, draft, spec_id, content=min(content, 1),
-            added=(len(staged), sum(r for _p, r, _b, _pv in staged)),
+            added=(len(staged), sum(s.rows for s in staged)),
             first_row_id=first_row,
         )
 
@@ -2079,8 +1957,8 @@ class IcebergTableWriter:
         base_v: int,
         cur: dict,
         rdr: IcebergTable,
-        del_staged: list[tuple[str, int, int, dict]],
-        data_staged: list[tuple[str, int, int, dict]],
+        del_staged: list[Staged],
+        data_staged: list[Staged],
         operation: str,
         extra_summary: dict[str, str],
         del_content: int = 1,
@@ -2097,7 +1975,7 @@ class IcebergTableWriter:
         applies to strictly-lower sequences, so the batch it rides
         with survives. O(changed rows) committed; zero data rewrite.
         ``part_fields`` (name/value-type dicts) declare the table's
-        partition record shape — each staged tuple's pv then lands in
+        partition record shape — each staged file's pv then lands in
         its manifest entry, making the delete/data files
         PARTITION-SCOPED the way every conformant planner expects
         (round 12: what partitioned keyed upserts ride on). On v3 the
@@ -2143,7 +2021,7 @@ class IcebergTableWriter:
         new_dvs: dict[str, list[int]],
         old_map: dict[str, list[int]],
         extra_summary: dict[str, str],
-        staged: list[tuple[str, int, int, dict]] | None = None,
+        staged: list[Staged] | None = None,
         operation: str = "delete",
     ) -> int:
         """Publish one v3 DV-delete snapshot: a fresh Puffin file for
@@ -2404,11 +2282,11 @@ class IcebergTableWriter:
             # staged bytes: evaluating a non-deterministic source
             # twice could stage rows whose keys the delete file never
             # covered — silent duplicate keys
-            data_staged = self._stage_nonempty(
+            data_staged = self._stage(
                 source, ice_fields=self._cur_fields(cur),
                 spec_parts=spec_parts or None,
             )
-            n_rows = sum(r for _p, r, _b, _pv in data_staged)
+            n_rows = sum(s.rows for s in data_staged)
             if n_rows == 0:
                 return {"version": None, "rows_upserted": 0,
                         "keys_deleted": 0}
@@ -2425,7 +2303,7 @@ class IcebergTableWriter:
                 # a second full read per commit was the round-11
                 # advisory nit
                 key_counts = spark.read.parquet(
-                    *[p for p, _r, _b, _pv in data_staged]
+                    *[s.path for s in data_staged]
                 ).groupBy(
                     *[F.col(c) for c in key_cols]
                 ).agg(F.count(F.lit(1)).alias("__n")).localCheckpoint(
@@ -2454,11 +2332,11 @@ class IcebergTableWriter:
                 # spec (sources ⊆ key, so the transforms evaluate) —
                 # one partition-scoped delete file per touched
                 # partition, entry partition record filled below
-                del_staged = self._stage_nonempty(
+                del_staged = self._stage(
                     keys, ice_fields=[by_name[c] for c in key_cols],
                     spec_parts=spec_parts or None,
                 )
-                n_keys = sum(r for _p, r, _b, _pv in del_staged)
+                n_keys = sum(s.rows for s in del_staged)
                 summary = {"upserted-records": str(n_rows),
                            "added-delete-files": str(len(del_staged))}
                 if app_id is not None and txn_version is not None:
@@ -2580,7 +2458,7 @@ class IcebergTableWriter:
         cur: dict,
         rdr: IcebergTable,
         affected: set[str],
-        staged: list[tuple[str, int, int, dict]],
+        staged: list[Staged],
         operation: str,
         extra_summary: dict[str, str],
         spec_parts: list[dict] | None = None,
@@ -2593,7 +2471,7 @@ class IcebergTableWriter:
         rows for untouched manifests, one ADDED manifest for the
         rewrites. ``spec_parts`` declares the partition record shape
         (spec-field name + value type — transforms included since
-        round 12); staged tuples' pv values land in their entries.
+        round 12); staged files' pv values land in their entries.
         ``drop_deletes`` omits content=1 (delete) manifests from the
         new snapshot — the OPTIMIZE purge pass, where every delete
         target is rewritten. Loses the race → unlinks every avro it
@@ -3048,18 +2926,3 @@ class IcebergTableWriter:
             return base_v + 1
 
         return retry_commit("iceberg rollback", attempt)
-
-    # -- engine integration delegates ---------------------------------------
-
-    def live_paths(self):
-        return self.reader().live_paths()
-
-    def table_schema(self):
-        """The current iceberg schema as a Spark StructType (None when
-        unmappable) — what the engine's post-mutation re-registration
-        needs for the all-rows-deleted edge. Nested struct/list/map
-        map recursively (round 12, with the nested-write support);
-        only genuinely unmappable primitives (uuid/fixed/time) fall
-        back to None."""
-        fields = self._cur_fields(self.reader().meta)
-        return _spark_schema(fields) if fields else None

@@ -373,19 +373,6 @@ def merge_inserts(
     ])
 
 
-def drop_empty(staged: list, rows: list[int], each: bool
-               ) -> tuple[list, list]:
-    """(kept, dropped) staged files, given each one's rows. ``each``
-    drops every zero-row file (a sparse frame — a position target's
-    postimages — writes one per empty partition); otherwise the files
-    drop only when none has a row (an all-empty frame still writes
-    one)."""
-    if each:
-        return ([f for f, n in zip(staged, rows) if n],
-                [f for f, n in zip(staged, rows) if not n])
-    return (staged, []) if sum(rows) else ([], staged)
-
-
 def change_rows(pre: DataFrame, post: DataFrame, update: bool) -> DataFrame:
     """Change-feed rows between two states of the same rows: pre EXCEPT
     ALL post are removed, post EXCEPT ALL pre introduced — labeled as
@@ -448,8 +435,8 @@ class Target(Protocol):
 
     def stage_rows(self, frame: DataFrame, check: bool = True) -> int:
         """Stage new rows (``check``: against the table's rules
-        first), dropping empty files as ``drop_empty`` says; returns
-        the rows staged."""
+        first) through ``txnlog.stage``, which lands no zero-row file;
+        returns the rows staged."""
 
     def stage_positions(self, positions: DataFrame) -> int:
         """Encode matched addresses; returns the rows they delete."""

@@ -30,6 +30,13 @@ attempt on the new head, at most ``COMMIT_RETRIES`` times. The log is
 METADATA — O(commits) KB-sized documents read driver-side; data files
 never move on commit, and snapshot reads are ordinary pruned parquet
 scans over the live path list.
+
+Both writers also stage their data files through one step, ``stage``:
+a private Spark write, one footer read per part file (rows and the
+column stats both formats record), and a move into place for every
+file that holds a row — no commit lands a zero-row file. On the read
+side a snapshot with no live file is an empty frame under the table's
+recorded schema, in both formats.
 """
 
 from __future__ import annotations
@@ -38,8 +45,9 @@ import contextlib
 import json
 import os
 import re
+import shutil
 import uuid
-from typing import Callable, TypeVar
+from typing import Callable, NamedTuple, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,6 +131,91 @@ def footer_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
+def footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
+    """(rows, {leaf column: (min, max, null count)}) from one parquet
+    footer, folded across row groups — O(KB), no data read. A column
+    with any row group lacking min/max gets None for both (an absent
+    bound means "cannot prune", never "prune wrongly"); the null count
+    is None unless every row group records one."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    per: dict[str, list] = {}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for i in range(rg.num_columns):
+            col = rg.column(i)
+            per.setdefault(col.path_in_schema, []).append(col.statistics)
+    stats = {}
+    for name, sts in per.items():
+        bounded = all(s is not None and s.has_min_max for s in sts)
+        counted = all(s is not None and s.null_count is not None
+                      for s in sts)
+        stats[name] = (
+            min(s.min for s in sts) if bounded else None,
+            max(s.max for s in sts) if bounded else None,
+            sum(s.null_count for s in sts) if counted else None,
+        )
+    return md.num_rows, stats
+
+
+class Staged(NamedTuple):
+    """One data file ``stage`` placed: its path, hive partition values
+    ({column: string-or-None}, empty when unpartitioned) and what its
+    footer says (``footer_stats``)."""
+
+    path: str
+    pv: dict
+    rows: int
+    size: int
+    stats: dict[str, tuple]
+
+
+def stage(df: DataFrame, partition_by: list[str], root: str,
+          place: Callable[[str], str]) -> list[Staged]:
+    """The one staging step under both lakehouse writers: write ``df``
+    as parquet (hive directories per ``partition_by`` column) into a
+    private directory under ``root``, read each part file's footer
+    once, and move every part file that holds a row to ``place(its
+    hive-relative path)``. A zero-row part file goes away with the
+    private directory, so no commit ever lands one — a batch with no
+    rows stages nothing. Staged files stay invisible until a commit
+    references them; on any failure nothing is left behind."""
+    tmp = os.path.join(root, f"_staging_{uuid.uuid4().hex}")
+    out: list[Staged] = []
+    try:
+        w = df.write.mode("errorifexists")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(tmp)
+        for dirpath, _dirs, files in os.walk(tmp):
+            for fn in sorted(files):
+                if not fn.endswith(".parquet"):
+                    continue
+                src = os.path.join(dirpath, fn)
+                rows, stats = footer_stats(src)
+                if not rows:
+                    continue
+                rel = os.path.relpath(src, tmp)
+                rel_dir = os.path.dirname(rel)
+                dest = place(rel)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.replace(src, dest)
+                out.append(Staged(
+                    dest,
+                    _hive_partition_values(rel_dir) if rel_dir else {},
+                    rows, os.path.getsize(dest), stats,
+                ))
+    except BaseException:
+        for s in out:
+            with contextlib.suppress(OSError):
+                os.unlink(s.path)
+        raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
 class SchemaEvolutionError(RuntimeError):
     """The batch's schema drifted from the table's and the write did
     not opt into (or the drift is not an) additive evolution."""
@@ -182,9 +275,7 @@ def parse_schema_string(doc: str | None, path: str):
 def _hive_partition_values(rel_dir: str) -> dict:
     """Decode a hive-layout relative directory (``col=val[/col2=val2]``,
     values percent-escaped by the Spark writer, nulls as the hive
-    default marker) into a {column: string-or-None} dict — shared by
-    the Delta and Iceberg staging paths so the two decoders can never
-    drift."""
+    default marker) into a {column: string-or-None} dict."""
     from urllib.parse import unquote
 
     pv: dict = {}
@@ -1960,9 +2051,10 @@ class DeltaLogTable:
         travel over a Delta table someone else wrote. ``skip`` =
         [(col, lo, hi), …] prunes files LOG-side before the scan plan
         exists (partition values first, then add.stats min/max — the
-        two-tier skipping a foreign writer's stats enable; a skip that
-        prunes everything returns an empty frame under the pinned
-        schema). The protocol /
+        two-tier skipping a foreign writer's stats enable). A snapshot
+        with no live file — at any version, or once the skip prunes
+        every file — is an empty frame under the pinned schema; only a
+        table with no recorded schema raises. The protocol /
         metaData gate runs first (column mapping, unknown reader
         features refuse loudly); reads pin the metaData schemaString
         AT ``as_of`` (see ``table_schema``) — Delta reconstructs the
@@ -1987,24 +2079,21 @@ class DeltaLogTable:
         self._check_readable(proto, meta)
         fold = self._live_fold(as_of)  # ONE walk serves scan + skip
         entries = self._entries_sorted(fold)
-        if not entries:
-            raise ValueError(
-                f"delta table {self.path} has no live files at version "
-                f"{as_of if as_of is not None else 'latest'}"
-            )
         st = self.table_schema(as_of)
         part_cols = meta.get("partitionColumns") or []
         kept = self._prune_fold(fold, skip)
         if kept is not None:
             entries = [e for e in entries if e[0] in kept]
-            if not entries:
-                if st is None:
-                    raise ValueError(
-                        f"{self.path}: skip pruned every file and the "
-                        "table has no recorded schema to shape an "
-                        "empty result"
-                    )
-                return spark.createDataFrame([], st)
+        if not entries:
+            # no live file (every row deleted, an empty append, or a
+            # skip that pruned them all): the table is its schema
+            if st is None:
+                raise ValueError(
+                    f"delta table {self.path} has no live files at "
+                    f"version {as_of if as_of is not None else 'latest'}"
+                    " and no recorded schema to shape an empty result"
+                )
+            return spark.createDataFrame([], _cm_clean_type(st))
         return self._assemble_mor(
             spark, entries, st, part_cols,
             mapping=self._mapping_for(meta),

@@ -517,7 +517,7 @@ class TestDeltaWriterRoundTrip:
         w.overwrite(r.limit(3), 1)  # v0's file is now unreachable
         # simulate a concurrent writer mid-commit: staged, unpublished
         staged = w._stage(r.limit(4))
-        staged_files = [os.path.join(root, rel) for rel, _pv in staged]
+        staged_files = [s.path for s in staged]
         assert all(os.path.exists(p) for p in staged_files)
         doomed = w.vacuum(retain_versions=1)
         assert len(doomed) == 1  # exactly the unreachable v0 file
@@ -1017,12 +1017,15 @@ class TestDeletionVectorWrites:
         assert rows == [(1, "delete")]
 
     def test_writer_feature_gates(self, spark, tmp_path):
-        """Unknown writerFeatures refuse every write; appendOnly
+        """Unknown writerFeatures refuse every write; an append-only
+        table (the appendOnly feature with delta.appendOnly=true)
         permits appends and refuses mutations — silently wrong >
-        unsupported, on the WRITE side."""
+        unsupported, on the WRITE side. The feature alone only says
+        writers honor the property (PROTOCOL.md "Append-only
+        Tables")."""
         import uuid as _uuid
 
-        def mk(feats, name):
+        def mk(feats, name, conf=None):
             root = str(tmp_path / name)
             os.makedirs(os.path.join(root, "_delta_log"))
             df = spark.createDataFrame([(1,)], "k long")
@@ -1045,7 +1048,7 @@ class TestDeletionVectorWrites:
                         "format": {"provider": "parquet", "options": {}},
                         "schemaString": df.schema.json(),
                         "partitionColumns": [],
-                        "configuration": {},
+                        "configuration": conf or {},
                     }},
                     {"add": {"path": "f0.parquet", "partitionValues": {},
                              "size": 1, "modificationTime": 0,
@@ -1060,12 +1063,14 @@ class TestDeletionVectorWrites:
             w.append(df)
         with pytest.raises(NotImplementedError, match="rowTracking"):
             w.delete(spark, "k = 1")
-        w2 = mk(["appendOnly"], "ao")
+        w2 = mk(["appendOnly"], "ao", {"delta.appendOnly": "true"})
         assert w2.append(df) == 1  # appends are exactly what's allowed
         with pytest.raises(ValueError, match="append-only"):
             w2.delete(spark, "k = 1")
         with pytest.raises(ValueError, match="append-only"):
             w2.overwrite(df, expected_version=2)
+        w3 = mk(["appendOnly"], "feature-only")
+        assert w3.delete(spark, "k = 1")["rows_deleted"] == 1
 
     def test_sql_enable_and_mor_delete_on_attachment(
         self, spark, tmp_path

@@ -6,7 +6,8 @@ result counts each encoder reports. A publish that fails leaves the
 rows and the table directory as they were, in every mode, and a
 failed commit-file write leaves no torn file in the version slot. Also
 the Iceberg TIMESTAMP round trip: files restaged with field ids must
-keep a timestamp type Spark reads back."""
+keep a timestamp type Spark reads back. After every step no live data
+file has zero rows."""
 
 import datetime as dt
 import os
@@ -18,7 +19,11 @@ from algebraicdb_spark.operators import delta_writer, iceberg_writer
 from algebraicdb_spark.operators.delta_writer import DeltaTableWriter
 from algebraicdb_spark.operators.iceberg import IcebergTable
 from algebraicdb_spark.operators.iceberg_writer import IcebergTableWriter
-from algebraicdb_spark.operators.txnlog import publish_exclusive
+from algebraicdb_spark.operators.txnlog import (
+    DeltaLogTable,
+    footer_rows,
+    publish_exclusive,
+)
 
 ROWS = [(k, k * 10, "x" if k % 2 else None) for k in range(1, 13)]
 MODES = ["delta-cow", "delta-mor", "iceberg-cow", "iceberg-mor",
@@ -55,6 +60,13 @@ def _rows(spark, w):
     return sorted(tuple(r) for r in w.snapshot(spark).collect())
 
 
+def _live_data_files(w):
+    if isinstance(w, DeltaTableWriter):
+        return [res for _r, res, _pv, _dv
+                in DeltaLogTable(w.path)._live_entries_full()]
+    return [p for p, _u, _s in IcebergTable(w.path)._files()[0]]
+
+
 def _counts(res, keys):
     return {k: res[k] for k in keys if k in res}
 
@@ -76,6 +88,10 @@ def test_every_mode_applies_the_same_row_level_plan(spark, tmp_path, mode):
         assert _rows(spark, w) == sorted(
             (k, v, tag) for k, (v, tag) in model.items()
         )
+        # no commit lands a zero-row data file
+        assert all(footer_rows(p) for p in _live_data_files(w))
+
+    check()
 
     # DELETE: k 1-6 fill the first file (fully matched), k 7-8 part of
     # the second; a NULL predicate value keeps the row

@@ -1021,10 +1021,11 @@ class TestReviewFixes:
             w.upsert_by_key(spark, src, ["k"])
         res = w.delete(spark, "k = 1")
         assert res["rows_deleted"] == 1
-        # the one row is gone; the reader's empty-table refusal is the
-        # established semantics for a zero-file snapshot
-        with pytest.raises(ValueError, match="no data files"):
-            w.reader().snapshot(spark)
+        # the one row is gone: a zero-file snapshot reads as an empty
+        # frame under the table schema
+        snap = w.reader().snapshot(spark)
+        assert snap.count() == 0
+        assert snap.columns == ["k", "region", "v"]
 
     def test_manifest_list_rows_carry_foreign_default_spec_id(
         self, spark, tmp_path
