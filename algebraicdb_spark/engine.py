@@ -29,7 +29,6 @@ for programmatic use; the dialect is the statement-level twin.
 from __future__ import annotations
 
 import json
-import os
 import re
 import threading
 from collections.abc import Callable
@@ -273,19 +272,9 @@ class Engine:
             for c in _split_top_level(m.group("parts") or "", ",")
             if c.strip()
         ]
-        if fmt != "iceberg" and any("(" in c for c in parts):
-            raise AdtError(
-                f"CREATE TABLE {name}: partition transforms are an "
-                f"iceberg spec feature — {fmt} partitions by plain "
-                "column values"
-            )
         df = self.spark.sql(self._rewrite(m.group("query")))
         w = _writer(fmt, path)
-        exists = (
-            w._current()[1] is not None if fmt == "iceberg"
-            else w.latest_version() >= 0
-        )
-        if exists:
+        if w.exists():
             raise AdtError(
                 f"CREATE TABLE {name}: {path!r} already holds a {fmt} "
                 "table — ATTACH it and append instead"
@@ -296,65 +285,70 @@ class Engine:
             raise AdtError(f"CREATE TABLE {name}: {exc}") from exc
         return self._attach_table_stmt(name, fmt, path, None)
 
-    def _maintain_attached(self, name: str, op: str, **kw) -> DataFrame | None:
-        """OPTIMIZE TABLE / VACUUM / REFRESH TABLE over an ATTACHed
-        table, through the format's writer: standard Delta
-        (`DeltaTableWriter` — compaction AND `ZORDER BY` re-clustering
-        commit `dataChange: false` removes+adds other Delta engines
-        understand and skip-scan) and standard Iceberg
-        (`IcebergTableWriter` — OPTIMIZE compacts via a `replace`
-        snapshot, `ZORDER BY` re-clusters with manifest bounds, VACUUM
-        expires snapshots). After a mutating op the view re-registers
-        on the fresh snapshot (the file list changed even though
-        content didn't). REFRESH just re-resolves the snapshot to pick
-        up new commits."""
-        if name not in self._attached:
+    def _commit(self, verb: str, name: str, op: str, *args, **kw) -> DataFrame:
+        """The one commit step of every write statement on an ATTACHed
+        lakehouse table: resolve the attachment, refuse a VERSION pin (a
+        historical snapshot is immutable), run the format writer's
+        ``op`` (refused when that writer has none), turn the writer's
+        refusals into the statement's ``AdtError``, and re-register the
+        name at the latest snapshot (a table whose every row was
+        deleted reads as an empty frame under its schema)."""
+        from algebraicdb_spark.operators.txnlog import SchemaEvolutionError
+
+        att = self._attached.get(name)
+        if att is None:
+            raise AdtError(f"{verb}: {name!r} is not an ATTACHed table")
+        if att["version"] is not None:
             raise AdtError(
-                f"{op.upper()}: {name!r} is not an ATTACHed table"
+                f"{verb}: {name!r} is pinned at VERSION {att['version']} "
+                "— re-ATTACH at latest first"
             )
-        att = self._attached[name]
-        fmt, path = att["fmt"], att["path"]
-        if op == "refresh":
-            # a refresh IS a re-ATTACH at latest (pin cleared)
-            return self._attach_table_stmt(name, fmt, path, None)
-        t = _writer(fmt, path)
-        if fmt == "iceberg":
-            # OPTIMIZE = rewrite_data_files (a `replace` snapshot the
-            # change feed skips); VACUUM = expire_snapshots (metadata
-            # drop + physical reclaim of files reachable only from
-            # expired snapshots)
-            if op == "optimize":
-                t.optimize(self.spark, zorder_by=kw.get("zorder_by"))
-            else:
-                t.expire_snapshots(retain_last=kw.get("retain_versions", 2))
-        elif op == "optimize":
-            t.optimize(self.spark, **kw)
-        else:
-            t.vacuum(**kw)
-        df = t.snapshot(self.spark)
-        self.create_table(name, df)
-        # create_table detached the name; re-register at latest
-        self._attached[name] = {"fmt": fmt, "path": path, "version": None}
-        return df
+        write = getattr(_writer(att["fmt"], att["path"]), op, None)
+        if write is None:
+            raise AdtError(
+                f"{verb} {name}: not available on {att['fmt']} tables "
+                f"(the {att['fmt']} writer has no {op})"
+            )
+        try:
+            write(*args, **kw)
+        except (ValueError, NotImplementedError, SchemaEvolutionError) as exc:
+            raise AdtError(f"{verb} {name}: {exc}") from exc
+        return self._attach_table_stmt(name, att["fmt"], att["path"], None)
 
     def _optimize_stmt(self, m: re.Match) -> DataFrame:
-        cols = m.group("cols")
-        return self._maintain_attached(
-            m.group("name"), "optimize",
-            zorder_by=[c.strip() for c in cols.split(",")] if cols else None,
+        """OPTIMIZE TABLE t [ZORDER BY (c, …)] — compaction (or Z-order
+        re-clustering) of an ATTACHed table as one content-preserving
+        commit through the format's writer. The clustering columns are
+        checked against the table's schema before any job runs."""
+        name, cols = m.group("name", "cols")
+        zorder_by = [c.strip() for c in cols.split(",")] if cols else None
+        td = self._tables.get(name)
+        unknown = [c for c in zorder_by or () if c not in td.columns] if td else []
+        if unknown:
+            raise AdtError(
+                f"OPTIMIZE {name}: unknown ZORDER BY column(s) {unknown}"
+            )
+        return self._commit(
+            "OPTIMIZE", name, "optimize", self.spark, zorder_by=zorder_by
         )
 
     def _vacuum_stmt(self, m: re.Match) -> DataFrame:
+        """VACUUM t [RETAIN n] — drop all but the newest ``n`` versions
+        of an ATTACHed table and reclaim the files only they reach."""
         r = m.group("retain")
-        return self._maintain_attached(
-            m.group("name"), "vacuum", retain_versions=int(r) if r else 2
+        return self._commit(
+            "VACUUM", m.group("name"), "vacuum",
+            retain_versions=int(r) if r else 2,
         )
 
     def _refresh_table_stmt(self, m: re.Match) -> DataFrame:
+        """REFRESH TABLE t — an ATTACHed name re-ATTACHes at latest (a
+        VERSION pin is cleared); any other name is Spark's own REFRESH
+        TABLE (metadata cache)."""
         name = m.group("name")
-        if name in self._attached:
-            return self._maintain_attached(name, "refresh")
-        # not ours: Spark's own REFRESH TABLE (metadata cache)
+        att = self._attached.get(name)
+        if att is not None:
+            return self._attach_table_stmt(name, att["fmt"], att["path"], None)
         return self.spark.sql(m.string)
 
     # -- statements ----------------------------------------------------
@@ -665,41 +659,16 @@ class Engine:
         version's live set (zero bytes copied — see
         `DeltaTableWriter.restore`), iceberg
         rolls the current-snapshot pointer back (metadata-only,
-        `IcebergTableWriter.rollback`). Past-retention targets refuse
-        through the writers' own loud errors; a VERSION-pinned
-        attachment refuses (mutating a historical pin); the view
-        re-registers on the restored snapshot."""
+        `IcebergTableWriter.restore`). Past-retention targets refuse
+        through the writers' own loud errors."""
         name, ver, ts = m.group("name", "ver", "ts")
         self._refuse_view_mutation("RESTORE", name)
-        if name not in self._attached:
-            raise AdtError(
-                f"RESTORE TABLE: {name!r} is not an ATTACHed table "
-                "(dialect tables are views — they have no commit log)"
-            )
-        att = self._attached[name]
-        if att.get("version") is not None:
-            raise AdtError(
-                f"RESTORE TABLE {name!r}: the attachment is pinned to "
-                f"version {att['version']} — a historical snapshot is "
-                "immutable; re-ATTACH at latest first"
-            )
-        v = int(ver) if ver is not None else self._version_at_timestamp(
-            att, ts
+        if ver is None and name in self._attached:
+            ver = self._version_at_timestamp(self._attached[name], ts)
+        self._commit(
+            "RESTORE TABLE", name, "restore",
+            int(ver) if ver is not None else None,
         )
-        fmt = att["fmt"]
-        t = _writer(fmt, att["path"])
-        try:
-            if fmt == "iceberg":
-                t.rollback(v)
-            else:
-                t.restore(v)
-        except (ValueError, NotImplementedError) as exc:
-            raise AdtError(f"RESTORE TABLE {name!r}: {exc}") from exc
-        # re-register on the restored snapshot — via the mutation
-        # reattach, which handles the all-rows-deleted edge (a restore
-        # TO an empty version is legal state, not an attach error)
-        self._reattach_after_mutation(name, t)
-        return None
 
     def _show_tblprops_stmt(self, m: re.Match) -> DataFrame:
         """SHOW TBLPROPERTIES n — the properties/configuration map of
@@ -881,15 +850,16 @@ class Engine:
         self._invalidate_stats(name)
 
     def _alter_attached(self, name: str, action: str) -> None:
-        """ALTER TABLE on an ATTACHed lakehouse table: ADD COLUMN
-        commits a METADATA-ONLY additive evolution through the table's
-        own log (no data rewrite — reads pin the schema and surface
-        NULL in old files; the transactional twin of the view-swap
-        ALTER). DROP/RENAME refuse: on the standard format they
-        require column mapping, and a faithful rewrite is an
-        overwrite-shaped operation; DEFAULT backfill refuses too (it
-        rewrites every row — ADD without DEFAULT, then UPDATE)."""
-        att = self._attached[name]
+        """ALTER TABLE on an ATTACHed lakehouse table: SET PROPERTIES
+        commits the format's own knob surface; ADD COLUMN commits a
+        METADATA-ONLY additive evolution through the table's own log
+        (no data rewrite — reads pin the schema and surface NULL in old
+        files; the transactional twin of the view-swap ALTER); ENABLE
+        DELETION VECTORS turns on merge-on-read deletes. DROP/RENAME
+        refuse: on the standard format they require column mapping,
+        and a faithful rewrite is an overwrite-shaped operation; DEFAULT
+        backfill refuses too (it rewrites every row — ADD without
+        DEFAULT, then UPDATE)."""
         sp = re.fullmatch(
             r"SET\s+PROPERTIES\s*\((?P<kvs>.+)\)",
             action, re.IGNORECASE | re.DOTALL,
@@ -899,11 +869,6 @@ class Engine:
             # (iceberg `write.<op>.mode=merge-on-read`, delta
             # configuration) — committed through the REAL writers, so
             # every engine sees them; '' as the value DELETES the key
-            if att["version"] is not None:
-                raise AdtError(
-                    f"ALTER TABLE: {name!r} is pinned at VERSION "
-                    f"{att['version']} — re-ATTACH at latest first"
-                )
             pair_re = r"'([^']*)'\s*=\s*'([^']*)'"
             kvs = sp.group("kvs")
             pairs = re.findall(pair_re, kvs)
@@ -918,35 +883,20 @@ class Engine:
                     + (f" — could not parse: {residue!r}" if residue
                        else "")
                 )
-            props = dict(pairs)
-            w = _writer(att["fmt"], att["path"])
-            try:
-                if att["fmt"] == "iceberg":
-                    w.set_properties(props)
-                else:
-                    # spark rides along so ALTER ADD CONSTRAINT can
-                    # validate the table's existing rows
-                    w.set_properties(props, spark=self.spark)
-            except (ValueError, NotImplementedError) as exc:
-                raise AdtError(f"ALTER TABLE {name}: {exc}") from exc
+            # spark rides along so ALTER ADD CONSTRAINT can validate
+            # the table's existing rows
+            self._commit(
+                "ALTER TABLE", name, "set_properties", dict(pairs),
+                spark=self.spark,
+            )
             return None
-        if att["fmt"] == "iceberg":
-            raise AdtError(
-                f"ALTER TABLE: schema evolution on iceberg attachment "
-                f"{name!r} needs field-id assignment this writer does "
-                "not do — evolve it with its owning system (SET "
-                "PROPERTIES works; mutation/maintenance work)"
-            )
-        if att["version"] is not None:
-            raise AdtError(
-                f"ALTER TABLE: {name!r} is pinned at VERSION "
-                f"{att['version']} — re-ATTACH at latest before evolving"
-            )
-        t = _writer(att["fmt"], att["path"])
         if re.fullmatch(
             r"ENABLE\s+DELETION\s+VECTORS", action, re.IGNORECASE
         ):
-            t.enable_deletion_vectors()
+            self._commit(
+                "ENABLE DELETION VECTORS", name,
+                "enable_deletion_vectors",
+            )
             return None
         am = _ALTER_ADD_RE.match(action)
         if am is None:
@@ -969,11 +919,10 @@ class Engine:
                 f"the {tname} declaration; add a struct column via the "
                 "owning writer instead"
             )
-        try:
-            t.evolve_add_column(col, spark_type(tname))
-        except ValueError as exc:
-            raise AdtError(f"ALTER TABLE {name}: {exc}") from exc
-        self._attach_table_stmt(name, att["fmt"], att["path"], None)
+        self._commit(
+            "ADD COLUMN", name, "evolve_add_column",
+            col, spark_type(tname),
+        )
         return None
 
     @staticmethod
@@ -1052,18 +1001,7 @@ class Engine:
             reader = reader.option("header", True)
         batch = reader.format(fmt).load(path)
         if name in self._attached:
-            att = self._attached[name]
-            if att["version"] is not None:
-                raise AdtError(
-                    f"COPY: {name!r} is pinned at VERSION {att['version']} "
-                    "— re-ATTACH at latest before appending"
-                )
-            try:
-                _writer(att["fmt"], att["path"]).append(batch)
-            except (ValueError, NotImplementedError) as exc:
-                raise AdtError(f"COPY {name}: {exc}") from exc
-            # re-resolve the view on the post-append snapshot
-            self._attach_table_stmt(name, att["fmt"], att["path"], None)
+            self._commit("COPY", name, "append", batch)
             return
         existing.unionByName(batch).createOrReplaceTempView(name)
         self._invalidate_stats(name)
@@ -1101,13 +1039,6 @@ class Engine:
                 f"{exc.getMessageParameters().get('expr')} is not a constant"
             ) from exc
         if name in self._attached:
-            att = self._attached[name]
-            if att["version"] is not None:
-                raise AdtError(
-                    f"INSERT: {name!r} is pinned at VERSION "
-                    f"{att['version']} — re-ATTACH at latest before "
-                    "appending"
-                )
             live = self.spark.table(name).schema
             typed = batch.select(
                 *[
@@ -1115,11 +1046,7 @@ class Engine:
                     for bc, f in zip(batch.columns, live.fields)
                 ]
             )
-            try:
-                _writer(att["fmt"], att["path"]).append(typed)
-            except (ValueError, NotImplementedError) as exc:
-                raise AdtError(f"INSERT {name}: {exc}") from exc
-            self._attach_table_stmt(name, att["fmt"], att["path"], None)
+            self._commit("INSERT", name, "append", typed)
             return
         if any(_CURRENT_TIME_RE.search(c) for row in rows for c in row):
             # fix the values now; collecting an inline table runs no job
@@ -1193,16 +1120,12 @@ class Engine:
         assigned = dict(zip(assigned, exprs))
         inserts = exprs[len(assigned):] if m.group("ins") is not None else None
         if target in self._attached:
-            t = self._mutable_attachment("MERGE INTO", target)
-            try:
-                t.merge(
-                    self.spark, src, cond, assigned or None, inserts,
-                    target_alias=target, source_alias=source,
-                    delete_matched=mdel,
-                )
-            except ValueError as exc:
-                raise AdtError(f"MERGE {target}: {exc}") from exc
-            self._reattach_after_mutation(target, t)
+            self._commit(
+                "MERGE", target, "merge",
+                self.spark, src, cond, assigned or None, inserts,
+                target_alias=target, source_alias=source,
+                delete_matched=mdel,
+            )
             return None
         merge = mutation.Merge(src, cond, target, source)
         try:
@@ -1242,19 +1165,6 @@ class Engine:
         keys = [k.strip() for k in m.group("keys").split(",") if k.strip()]
         if not keys:
             raise AdtError("UPSERT: BY KEY needs at least one column")
-        if target not in self._attached:
-            raise AdtError(
-                f"UPSERT INTO: {target!r} is not an ATTACHed iceberg "
-                "table — keyed upsert rides v2 equality-delete files; "
-                "use MERGE INTO for dialect tables"
-            )
-        if self._attached[target]["fmt"] != "iceberg":
-            raise AdtError(
-                f"UPSERT INTO: {target!r} is "
-                f"{self._attached[target]['fmt']} — equality-delete "
-                "upserts are an iceberg v2 shape; use MERGE INTO "
-                "(probe + rewrite) on this format"
-            )
         src = m.group("src").strip()
         if re.fullmatch(r"\w+", src):
             try:
@@ -1265,52 +1175,13 @@ class Engine:
                 ) from exc
         else:
             source = self.spark.sql(self._rewrite(src))
-        t = self._mutable_attachment("UPSERT INTO", target)
-        app = m.group("app")
         txnv = m.group("txnv")
-        try:
-            t.upsert_by_key(
-                self.spark, source, keys,
-                app_id=app,
-                txn_version=int(txnv) if txnv is not None else None,
-            )
-        except (ValueError, NotImplementedError) as exc:
-            raise AdtError(f"UPSERT {target}: {exc}") from exc
-        self._reattach_after_mutation(target, t)
+        self._commit(
+            "UPSERT", target, "upsert_by_key", self.spark, source, keys,
+            app_id=m.group("app"),
+            txn_version=int(txnv) if txnv is not None else None,
+        )
         return None
-
-    def _mutable_attachment(self, verb: str, name: str):
-        """The writable table object behind an ATTACHed name, for
-        row-level mutation: standard Delta → ``DeltaTableWriter``,
-        standard Iceberg → ``IcebergTableWriter``. A VERSION-pinned
-        attachment refuses (mutating a historical snapshot is a
-        contradiction: rebase on latest)."""
-        att = self._attached[name]
-        if att["fmt"] == "iceberg" and verb not in (
-            "DELETE", "UPDATE", "MERGE INTO", "UPSERT INTO"
-        ):
-            raise AdtError(
-                f"{verb}: {name!r} is iceberg interop — this writer "
-                "supports DELETE/UPDATE/MERGE (copy-on-write) and "
-                "COPY/INSERT appends; run other mutations with its "
-                "owning system"
-            )
-        if att["version"] is not None:
-            raise AdtError(
-                f"{verb}: {name!r} is pinned at VERSION {att['version']} "
-                "— re-ATTACH at latest before mutating"
-            )
-        return _writer(att["fmt"], att["path"])
-
-    def _reattach_after_mutation(self, name: str, t) -> None:
-        """Re-register the view on the post-mutation snapshot (a table
-        whose every row was deleted reads as an empty frame under its
-        schema)."""
-        att = self._attached[name]
-        df = t.snapshot(self.spark)
-        self.create_table(name, df)
-        self._attached[name] = {**att, "version": None}
-        self._invalidate_stats(name)
 
     def _empty_table(self, shape: TableDef | StructType) -> DataFrame:
         """``SELECT CAST(NULL AS …) … WHERE false``: a typed empty
@@ -1342,12 +1213,10 @@ class Engine:
         self._refuse_view_mutation("DELETE", name)
         pred = self._rewrite(pred) if pred is not None else None
         if name in self._attached:
-            t = self._mutable_attachment("DELETE", name)
-            try:
-                t.delete(self.spark, pred if pred is not None else "TRUE")
-            except (ValueError, NotImplementedError) as exc:
-                raise AdtError(f"DELETE {name}: {exc}") from exc
-            self._reattach_after_mutation(name, t)
+            self._commit(
+                m.string.split(None, 1)[0].upper(), name, "delete",
+                self.spark, pred if pred is not None else "TRUE",
+            )
             return
         if name not in self._tables:
             raise AdtError(f"DELETE from unknown table {name!r}")
@@ -1373,12 +1242,7 @@ class Engine:
         )
         assigned = dict(zip(assigned, exprs))
         if name in self._attached:
-            t = self._mutable_attachment("UPDATE", name)
-            try:
-                t.update(self.spark, assigned, pred)
-            except (ValueError, NotImplementedError) as exc:
-                raise AdtError(f"UPDATE {name}: {exc}") from exc
-            self._reattach_after_mutation(name, t)
+            self._commit("UPDATE", name, "update", self.spark, assigned, pred)
             return
         td = self._tables.get(name)
         if td is None:
@@ -1487,14 +1351,12 @@ class Engine:
 
     def _version_at_timestamp(self, att: dict, ts: str) -> int:
         """Resolve `FOR TIMESTAMP AS OF '<ts>'` to a version/snapshot
-        id: the LATEST commit at or before the instant, per format —
-        delta uses the commitInfo timestamp
-        (file mtime when a foreign commit omits it), iceberg the
-        snapshot's timestamp-ms. Naive literals are read as UTC (commit
-        clocks are epoch-based). Below the surviving log (cleaned
-        prefix / expired snapshots) or before the first commit, refuse
-        — resolving to 'nearest available' would silently answer a
-        different question."""
+        id: the LATEST commit at or before the instant, as the format's
+        reader orders its commits (``version_at``). Naive literals are
+        read as UTC (commit clocks are epoch-based). Below the surviving
+        log (cleaned prefix / expired snapshots) or before the first
+        commit, refuse — resolving to 'nearest available' would
+        silently answer a different question."""
         from datetime import datetime, timezone
 
         try:
@@ -1506,62 +1368,16 @@ class Engine:
             ) from exc
         if dt.tzinfo is None:
             dt = dt.replace(tzinfo=timezone.utc)
-        ts_ms = int(dt.timestamp() * 1000)
-        fmt = att["fmt"]
-        rdr = _reader(fmt, att["path"])
-        cands: list[tuple[int, int]] = []  # (commit ts ms, version)
-        if fmt == "delta":
-            for v, actions in rdr._json_commit_actions(
-                (rdr._json_versions() or [0])[0], None
-            ):
-                info = next(
-                    (a["commitInfo"] for a in actions if "commitInfo" in a),
-                    {},
-                )
-                when = info.get("timestamp") or int(
-                    os.path.getmtime(
-                        os.path.join(rdr.log_dir, f"{v:020d}.json")
-                    ) * 1000
-                )
-                cands.append((int(when), v))
-        elif fmt == "iceberg":
-            # snapshot ids are NOT ordered for foreign tables (real
-            # catalogs assign them randomly), so a timestamp-ms tie
-            # cannot break on max(snapshot-id); the metadata's
-            # snapshot-log records current-pointer history IN ORDER
-            # and is the spec's authoritative tie-break. Entries whose
-            # snapshot expired out of the metadata are skipped; tables
-            # with no snapshot-log at all (minimal foreign metadata)
-            # fall back to the snapshots list's own order.
-            known = {s["snapshot-id"] for s in rdr.snapshots()}
-            log = [
-                e for e in (rdr.meta.get("snapshot-log") or [])
-                if e.get("snapshot-id") in known
-            ] or [
-                {"timestamp-ms": s.get("timestamp-ms"),
-                 "snapshot-id": s["snapshot-id"]}
-                for s in rdr.snapshots()
-            ]
-            ordered = [
-                (int(e.get("timestamp-ms") or 0), i, e["snapshot-id"])
-                for i, e in enumerate(log)
-            ]
-            hits = [(w, i, v) for w, i, v in ordered if w <= ts_ms]
-            if not hits:
-                raise AdtError(
-                    f"TIMESTAMP AS OF {ts!r}: no surviving iceberg "
-                    "snapshot at or before that instant (before the "
-                    "first commit, or expired by retention)"
-                )
-            return max(hits)[2]
-        at_or_before = [(w, v) for w, v in cands if w <= ts_ms]
-        if not at_or_before:
+        v = _reader(att["fmt"], att["path"]).version_at(
+            int(dt.timestamp() * 1000)
+        )
+        if v is None:
             raise AdtError(
-                f"TIMESTAMP AS OF {ts!r}: no surviving {fmt} commit at "
-                "or before that instant (before the first commit, or "
-                "cleaned/expired by retention)"
+                f"TIMESTAMP AS OF {ts!r}: no surviving {att['fmt']} "
+                "commit at or before that instant (before the first "
+                "commit, or cleaned/expired by retention)"
             )
-        return max(at_or_before)[1]
+        return v
 
     def _rewrite_time_travel(self, stmt: str) -> str:
         """Lower `t VERSION AS OF v` / `t FOR TIMESTAMP AS OF '…'` on

@@ -342,6 +342,10 @@ class DeltaTableWriter:
     def latest_version(self) -> int:
         return self.reader().latest_version()
 
+    def exists(self) -> bool:
+        """Whether the location already holds a committed table."""
+        return self.latest_version() >= 0
+
     def snapshot(self, spark: SparkSession, as_of: int | None = None):
         return self.reader().snapshot(spark, as_of)
 
@@ -820,6 +824,11 @@ class DeltaTableWriter:
             _proto, cur_meta = self.reader()._protocol_meta()
         new_schema = df.schema.json()
         new_parts = list(partition_by)
+        if any("(" in c for c in new_parts):
+            raise ValueError(
+                f"partition transforms {new_parts} are an iceberg spec "
+                "feature — delta partitions by plain column values"
+            )
         if not cur_meta:
             return [self._fresh_meta(new_schema, new_parts)]
         cur_parts = self._cur_parts(cur_meta)

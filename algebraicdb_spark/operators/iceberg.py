@@ -411,6 +411,33 @@ class IcebergTable:
     def snapshots(self) -> list[dict]:
         return self.meta.get("snapshots", [])
 
+    def version_at(self, ts_ms: int) -> int | None:
+        """The snapshot id current at epoch-ms ``ts_ms``: the latest
+        surviving snapshot at or before it (None when there is none).
+        Snapshot ids are NOT ordered for foreign tables (real catalogs
+        assign them randomly), so a timestamp-ms tie cannot break on
+        max(snapshot-id); the metadata's snapshot-log records
+        current-pointer history IN ORDER and is the spec's
+        authoritative tie-break. Entries whose snapshot expired out of
+        the metadata are skipped; tables with no snapshot-log at all
+        (minimal foreign metadata) fall back to the snapshots list's
+        own order."""
+        known = {s["snapshot-id"] for s in self.snapshots()}
+        log = [
+            e for e in (self.meta.get("snapshot-log") or [])
+            if e.get("snapshot-id") in known
+        ] or [
+            {"timestamp-ms": s.get("timestamp-ms"),
+             "snapshot-id": s["snapshot-id"]}
+            for s in self.snapshots()
+        ]
+        ordered = [
+            (int(e.get("timestamp-ms") or 0), i, e["snapshot-id"])
+            for i, e in enumerate(log)
+        ]
+        hits = [h for h in ordered if h[0] <= ts_ms]
+        return max(hits)[2] if hits else None
+
     def current_snapshot_id(self) -> int:
         sid = self.meta.get("current-snapshot-id")
         if sid in (None, -1):

@@ -1152,6 +1152,10 @@ class IcebergTableWriter:
         ) as f:
             return vs[-1], json.load(f)
 
+    def exists(self) -> bool:
+        """Whether the location already holds a committed table."""
+        return self._current()[1] is not None
+
     def reader(self) -> IcebergTable:
         return IcebergTable(self.path)
 
@@ -2659,7 +2663,7 @@ class IcebergTableWriter:
             # targets no longer exist — carrying them would leave the
             # table permanently 'has deletes' and waste every reader a
             # delete-file read); the old delete files become
-            # expire_snapshots candidates. Iceberg's rewrite_data_files
+            # vacuum candidates. Iceberg's rewrite_data_files
             # repaying the read-side debt, exactly like Delta OPTIMIZE
             # purging DVs; on v3 THE lever that keeps accumulated
             # deletion vectors from living forever. Runs on
@@ -2732,9 +2736,9 @@ class IcebergTableWriter:
 
         return retry_commit("iceberg optimize", attempt)
 
-    def expire_snapshots(self, retain_last: int = 2) -> list[str]:
-        """Iceberg's expire_snapshots (Delta's VACUUM): drop all but
-        the newest ``retain_last`` snapshots from the metadata and
+    def vacuum(self, retain_versions: int = 2) -> list[str]:
+        """VACUUM — Iceberg's expire_snapshots: drop all but
+        the newest ``retain_versions`` snapshots from the metadata and
         physically delete every manifest / manifest list / data file
         reachable ONLY from the expired ones. The current snapshot
         always survives. Candidates come from the expired snapshots'
@@ -2748,13 +2752,13 @@ class IcebergTableWriter:
                 return []
             rdr = self.reader()
             snaps = list(cur.get("snapshots") or [])
-            if len(snaps) <= max(retain_last, 1):
+            if len(snaps) <= max(retain_versions, 1):
                 return []
             by_ts = sorted(
                 snaps, key=lambda s: (s.get("timestamp-ms", 0),
                                       s["snapshot-id"])
             )
-            keep_n = max(retain_last, 1)
+            keep_n = max(retain_versions, 1)
             kept = by_ts[-keep_n:]
             kept_ids = {s["snapshot-id"] for s in kept}
             kept_ids.add(cur.get("current-snapshot-id"))
@@ -2795,7 +2799,7 @@ class IcebergTableWriter:
                     os.unlink(p)
             return gone
 
-        return retry_commit("iceberg expire_snapshots", attempt)
+        return retry_commit("iceberg vacuum", attempt)
 
     def _publish_metadata(self, md: dict, base_v: int) -> None:
         """Publish ``md`` as ``v<base_v+1>.metadata.json`` through
@@ -2822,13 +2826,17 @@ class IcebergTableWriter:
                 with contextlib.suppress(OSError):
                     os.unlink(p)
 
-    def set_properties(self, props: dict[str, str]) -> int:
+    def set_properties(
+        self, props: dict[str, str], spark: SparkSession | None = None
+    ) -> int:
         """Merge ``props`` into the table's freeform properties map in
         a new metadata version (the same CAS publish as every metadata
         change) — Iceberg's own knob surface: `write.delete.mode =
         merge-on-read` here is what flips this writer's (and every
         engine's) mutations to MoR. A value of None/'' DELETES the
-        key. Returns the new metadata version."""
+        key. Returns the new metadata version. ``spark`` is unused:
+        the signature is the Delta writer's, whose constraint keys
+        validate existing rows."""
         def attempt() -> int:
             base_v, cur = self._current()
             if cur is None:
@@ -2891,26 +2899,26 @@ class IcebergTableWriter:
 
         return retry_commit("iceberg upgrade_format_version", attempt)
 
-    def rollback(self, snapshot_id: int) -> int:
-        """Iceberg's rollback_to_snapshot — a metadata-only RESTORE:
+    def restore(self, snapshot_id: int) -> int:
+        """RESTORE — Iceberg's rollback_to_snapshot, metadata-only:
         point ``current-snapshot-id`` back at an
         EXISTING snapshot in a new metadata version (the CAS
         create-exclusive publish every metadata change here uses).
         The snapshot chain is untouched — time travel above the
         rollback still reads the undone snapshots, and a later
-        ``expire_snapshots`` reclaims them. A snapshot already expired
+        ``vacuum`` reclaims them. A snapshot already expired
         out of the metadata refuses loudly. Returns the new metadata
         version (or the current one when already there — no-op)."""
         def attempt() -> int:
             base_v, cur = self._current()
             if cur is None:
                 raise ValueError(
-                    f"rollback on {self.path}: table has no commits"
+                    f"restore on {self.path}: table has no commits"
                 )
             ids = {s["snapshot-id"] for s in cur.get("snapshots") or []}
             if snapshot_id not in ids:
                 raise ValueError(
-                    f"rollback to snapshot {snapshot_id}: not in the "
+                    f"restore to snapshot {snapshot_id}: not in the "
                     "table metadata (expired by maintenance?)"
                 )
             if cur.get("current-snapshot-id") == snapshot_id:
@@ -2925,4 +2933,4 @@ class IcebergTableWriter:
             self._publish_metadata(md, base_v)
             return base_v + 1
 
-        return retry_commit("iceberg rollback", attempt)
+        return retry_commit("iceberg restore", attempt)

@@ -2030,16 +2030,32 @@ class DeltaLogTable:
         return False
 
     def history(self) -> list[dict]:
-        """(version, operation) per SURVIVING JSON commit — DESCRIBE
-        HISTORY's core. Commits compacted into a checkpoint and
-        cleaned are gone from history too, exactly as in Delta."""
+        """(version, operation, timestamp) per SURVIVING JSON commit —
+        DESCRIBE HISTORY's core and time travel's clock. The timestamp
+        is the commitInfo's epoch-ms, or the commit file's mtime when a
+        foreign commit omits it. Commits compacted into a checkpoint
+        and cleaned are gone from history too, exactly as in Delta."""
         out = []
         for v in self.versions():
-            with open(os.path.join(self.log_dir, f"{v:020d}.json")) as f:
+            path = os.path.join(self.log_dir, f"{v:020d}.json")
+            with open(path) as f:
                 actions = [json.loads(line) for line in f if line.strip()]
             info = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
-            out.append({"version": v, "operation": info.get("operation")})
+            out.append({
+                "version": v,
+                "operation": info.get("operation"),
+                "timestamp": int(
+                    info.get("timestamp") or os.path.getmtime(path) * 1000
+                ),
+            })
         return out
+
+    def version_at(self, ts_ms: int) -> int | None:
+        """The latest surviving commit at or before epoch-ms ``ts_ms``
+        (None when there is none)."""
+        hits = [(h["timestamp"], h["version"]) for h in self.history()
+                if h["timestamp"] <= ts_ms]
+        return max(hits)[1] if hits else None
 
     def snapshot(
         self,

@@ -19,8 +19,10 @@ Scale notes (100 TB design intent, local[32] test reality):
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -84,10 +86,17 @@ def get_spark(app_name: str = "algebraicdb-spark", cpus: str | None = None,
     if not os.environ.get("SPARK_GRAFT_NO_MASTER"):
         builder = builder.master(f"local[{cpus or DEFAULT_CPUS}]")
     try:
-        return configure(builder, shuffle_partitions).getOrCreate()
+        spark = configure(builder, shuffle_partitions).getOrCreate()
     finally:
         if shim:
             if prior is None:
                 os.environ.pop("PYTHONPATH", None)
             else:
                 os.environ["PYTHONPATH"] = prior
+    # PySpark logs every analysis error carrying a query context, JVM
+    # stack trace included, to these two loggers before raising it; they
+    # do not propagate, so setLogLevel never reaches them. The exception
+    # itself still reaches the caller unchanged.
+    for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+        PySparkLogger.getLogger(name).setLevel(logging.CRITICAL)
+    return spark

@@ -1762,18 +1762,18 @@ class TestIcebergRollback:
             [(2, "b")], "k long, v string"))
         t = IcebergTable(root)
         assert t.snapshot(spark).count() == 2
-        w.rollback(s1)
+        w.restore(s1)
         t = IcebergTable(root)  # fresh metadata read
         assert t.current_snapshot_id() == s1
         assert t.snapshot(spark).count() == 1
         # the undone snapshot is still readable by id
         assert t.snapshot(spark, snapshot_id=s2).count() == 2
         # rollback to the current snapshot is a no-op (same metadata v)
-        v = w.rollback(s1)
-        assert w.rollback(s1) == v
+        v = w.restore(s1)
+        assert w.restore(s1) == v
         # an unknown / expired snapshot refuses
         with _pytest.raises(ValueError, match="not in the"):
-            w.rollback(999999)
+            w.restore(999999)
         # appends continue from the rolled-back state
         w.append(spark.createDataFrame([(3, "c")], "k long, v string"))
         assert IcebergTable(root).snapshot(spark).count() == 2
@@ -2183,7 +2183,7 @@ class TestIcebergMaintenance:
         t = IcebergTable(w.path)
         n_snaps = len(t.snapshots())
         assert n_snaps == 5
-        gone = w.expire_snapshots(retain_last=1)
+        gone = w.vacuum(retain_versions=1)
         assert gone, "pre-compaction files were reclaimed"
         t = IcebergTable(w.path)
         assert len(t.snapshots()) == 1
@@ -2192,7 +2192,7 @@ class TestIcebergMaintenance:
         # the current snapshot's files were NOT touched
         assert all(os.path.exists(p) for p in t.live_paths())
         # retention keeps everything when nothing is expirable
-        assert w.expire_snapshots(retain_last=5) == []
+        assert w.vacuum(retain_versions=5) == []
 
     def test_sql_maintenance_on_iceberg_attachment(self, spark, tmp_path):
         from algebraicdb_spark.engine import Engine

@@ -802,7 +802,7 @@ class TestUpsertStatement:
                 "UPSERT INTO nosuch BY KEY (k) "
                 "SELECT CAST(1 AS LONG) AS k, 'x' AS v"
             )
-        # non-iceberg formats route users to MERGE INTO
+        # a writer without keyed upserts refuses the statement by name
         from algebraicdb_spark.operators.delta_writer import (
             DeltaTableWriter,
         )
@@ -812,7 +812,7 @@ class TestUpsertStatement:
             [(1, "a")], "k long, v string").coalesce(1))
         e2 = Engine(spark)
         e2.sql(f"ATTACH TABLE dl FROM delta LOCATION '{d.path}'")
-        with pytest.raises(AdtError, match="MERGE INTO"):
+        with pytest.raises(AdtError, match="UPSERT dl: not available on delta"):
             e2.sql(
                 "UPSERT INTO dl BY KEY (k) "
                 "SELECT CAST(1 AS LONG) AS k, 'x' AS v"
@@ -938,7 +938,7 @@ class TestIcebergChangesCdf:
         w.delete(spark, "k = 1")
         w.append(spark.createDataFrame(
             [(2, "b")], "k long, v string").coalesce(1))
-        w.expire_snapshots(retain_last=1)
+        w.vacuum(retain_versions=1)
         t = IcebergTable(w.path)
         with pytest.raises(ValueError, match="ancestor|reclaimed|not in"):
             t.changes_cdf(spark, s0)

@@ -223,7 +223,7 @@ class TestEvolvedMutation:
         assert live_by_spec[1] >= 1
         # retention then reclaims the pre-compaction bytes and the
         # table stays readable
-        w.expire_snapshots(retain_last=1)
+        w.vacuum(retain_versions=1)
         assert w.reader().snapshot(spark).count() == 10
 
     def test_upsert_gate_on_evolved_partitioned_table_stays(
